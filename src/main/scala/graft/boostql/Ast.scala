@@ -288,8 +288,147 @@ object Ast {
   final case class OrderItem(item: SelectItem, asc: Boolean,
       nullsFirst: Option[Boolean] = None)
 
-  /** A statement: a single SELECT or a set-operation compound. */
-  sealed trait QueryStmt
+  /** Any statement [[Parser.parseStatement]] accepts: a query, or one of
+    * the write, DDL and utility statements below. Each `BoostQL.sql*`
+    * entrypoint parses once and runs the kinds it names.
+    */
+  sealed trait Statement
+
+  /** The statements that change a warehouse. `BoostQL.sql` refuses them
+    * and names the entrypoint that runs each.
+    */
+  sealed trait WriteStatement extends Statement
+
+  /** A `domain.family` name in a statement. */
+  final case class FamilyRef(domain: String, family: String)
+
+  /** `INSERT INTO domain.family <query>` — batch ingest (`sqlInsert`)
+    * and continuous ingest (`sqlStreamInsert`) share this one form. */
+  final case class Insert(target: FamilyRef, query: QueryStmt)
+      extends WriteStatement
+  /** `UPSERT INTO domain.family <query>`. */
+  final case class Upsert(target: FamilyRef, query: QueryStmt)
+      extends WriteStatement
+  /** `CREATE [OR REPLACE] FAMILY domain.family AS <query>`. */
+  final case class CreateFamily(target: FamilyRef, orReplace: Boolean,
+      query: QueryStmt) extends WriteStatement
+  /** `DROP FAMILY [IF EXISTS] domain.family`. */
+  final case class DropFamily(target: FamilyRef, ifExists: Boolean)
+      extends WriteStatement
+  /** `DELETE FROM domain.family WHERE <predicate>` — the retention form
+    * (`WHERE ts < DATE 'YYYY-MM-DD'`) and the row form share it. */
+  final case class Delete(target: FamilyRef, where: BExpr)
+      extends WriteStatement
+  /** `UPDATE domain.family SET <assign>[, …] WHERE <predicate>`. */
+  final case class Update(target: FamilyRef, set: Seq[Assign],
+      where: BExpr) extends WriteStatement
+  /** `REFRESH ROLLUP domain.family BUCKET '<interval>' AS <label>
+    * [INTO domain.family2]`. */
+  final case class RefreshRollup(source: FamilyRef, width: String,
+      label: String, into: Option[FamilyRef]) extends WriteStatement
+
+  /** `MERGE INTO domain.family USING (<query>) [AS src] <clause>…`. */
+  final case class Merge(target: FamilyRef, using: QueryStmt,
+      clauses: Seq[MergeClause]) extends WriteStatement
+  sealed trait MergeClause
+  /** `WHEN MATCHED [AND <cond>] THEN UPDATE|DELETE`; `action` is
+    * "update" or "delete". */
+  final case class WhenMatched(cond: Option[BExpr], action: String)
+      extends MergeClause
+  /** `WHEN NOT MATCHED THEN INSERT`. */
+  case object WhenNotMatched extends MergeClause
+  /** `WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE | UPDATE SET
+    * <assign>[, …]` — `set` is empty for DELETE. */
+  final case class WhenNotMatchedBySource(cond: Option[BExpr],
+      set: Seq[Assign]) extends MergeClause
+  /** One SET assignment, shared by UPDATE and MERGE's by-source UPDATE:
+    * `series = rhs` sets that series' value, `series.attr = rhs` a
+    * per-point attribute. */
+  final case class Assign(series: String, attr: Option[String], rhs: Operand)
+
+  /** `DESCRIBE domain.family` — series-catalog discovery over a family:
+    * one row per series with point count, time extent (epoch micros —
+    * the repo's engine-portable timestamp convention), and the sorted
+    * attribute/tag key inventories (comma-joined — scalar output keeps
+    * the row hash-comparable across engines). The reference holds this
+    * in the m3 namespace/symtable metadata; here it is one scan-shaped
+    * aggregation: count/extent in one pass, key inventories via
+    * explode + collect_set (distinct KEYS only — never a collect of
+    * values), joined on the series name. Row count = series
+    * cardinality, so every aggregate output is metadata-sized at any
+    * corpus scale.
+    */
+  final case class Describe(target: FamilyRef) extends Statement
+
+  /** `SHOW FAMILIES [IN domain]` — the catalog-listing half of the
+    * discovery face (DESCRIBE is the per-family half): one
+    * (domain, family) row per registered family, sorted. Enumerable
+    * only when the resolver IS an enumerable registry (the Map
+    * overload of `BoostQL.sql`); the function-resolver overloads refuse
+    * with a pointer rather than listing nothing.
+    */
+  final case class ShowFamilies(domain: Option[String]) extends Statement
+
+  /** `SHOW PARTITIONS domain.family` — the partition-inventory third of
+    * the discovery face (SHOW FAMILIES lists the catalog, DESCRIBE one
+    * family's series, this one family's PHYSICAL layout): one row per
+    * dt= date partition with file count, bytes and footer row total.
+    * Operates on the WAREHOUSE like the mutate verbs (takes the root,
+    * not a query frame) and is metadata-only — the "what would
+    * retention or a takedown touch" question, answerable on a petabyte
+    * family without a scan.
+    */
+  final case class ShowPartitions(target: FamilyRef) extends Statement
+
+  /** `EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST|SIMPLE] <query>` — the
+    * dialect face of Spark's explain modes (`mode`, default formatted):
+    * the query is compiled but not executed, and the result is a
+    * one-row, one-column (`plan`) frame holding the plan text. Makes
+    * plan regressions (lost pushdown, surprise shuffles) visible to any
+    * harness that can run a query, not only to PlanShapeSpec.
+    */
+  final case class Explain(mode: String, query: QueryStmt) extends Statement
+
+  /** `FUNNEL s1 -> s2 [-> …] BY <attr> [WITHIN '<interval>'] FROM
+    * dom.family` — the ordered-conversion funnel as a first-class
+    * statement (the most user-reached product-analytics shape): each
+    * step is a SERIES of the family, users are identified by the named
+    * per-point attribute (tag fallback, like `s.k` field access), and a
+    * user advances to step i only via a step-i point strictly later
+    * than their step-(i−1) first-reach; WITHIN bounds the whole journey
+    * from the step-0 time. Compiles to
+    * [[graft.operators.TimeSeriesOps.funnel]] (ONE hash exchange on the
+    * user key); returns (step_index, step, users) ordered, users
+    * non-increasing. Rows with no user attribute are skipped (no
+    * journey without an identity).
+    */
+  final case class Funnel(steps: Seq[String], by: String,
+      within: Option[String], source: FamilyRef) extends Statement
+
+  /** `RETENTION BY <attr> [MAX <n> DAYS] FROM dom.family` — the day-N
+    * retention triangle: users cohorted by first-seen day (any series
+    * of the family counts as activity), counted on each later day they
+    * returned, offsets 0..MAX (default 30). Compiles to
+    * [[graft.operators.TimeSeriesOps.retentionCohorts]] (two shuffles —
+    * user, then cohort×offset — the minimum for the semantics).
+    * Returns (cohort_date, day_offset, users) ordered.
+    */
+  final case class Retention(by: String, maxDays: Option[Int],
+      source: FamilyRef) extends Statement
+
+  /** `OUTLIERS <series> [K <k>] FROM dom.family` — robust MAD anomaly
+    * detection over one series: points with |v − median| > k·MAD
+    * (default k = 3), the dispersion measure outliers cannot drag.
+    * Compiles to [[graft.operators.TimeSeriesOps.madOutliersAgg]] — the
+    * hot-key-safe aggregate/broadcast form (medians partial-aggregate;
+    * data rows never shuffle). Returns (ts_us, value, dev, mad),
+    * unordered (order at the consumer).
+    */
+  final case class Outliers(series: String, k: Option[Double],
+      source: FamilyRef) extends Statement
+
+  /** A query statement: a single SELECT or a set-operation compound. */
+  sealed trait QueryStmt extends Statement
 
   final case class QuerySpec(
       select: Seq[SelectItem],

@@ -3,6 +3,8 @@ package graft.boostql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, make_ym_interval, when}
 
+import scala.reflect.ClassTag
+
 import graft.sources.TimeSeriesTable
 import graft.tables.Tables
 
@@ -16,59 +18,19 @@ import graft.tables.Tables
   */
 object BoostQL {
 
-  /** `EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST|SIMPLE] <stmt>` — the
-    * dialect face of Spark's explain modes (default FORMATTED): the
-    * statement is compiled but not executed, and the result is a
-    * one-row, one-column (`plan`) frame holding the plan text. Makes
-    * plan regressions (lost pushdown, surprise shuffles) visible to any
-    * harness that can run a query, not only to PlanShapeSpec.
-    */
-  private val explainRe =
-    """(?is)^\s*explain(?:\s+(formatted|extended|codegen|cost|simple))?\s+((?:select|with)\b.*)$""".r
-
-  /** `DESCRIBE domain.family` — series-catalog discovery over a family:
-    * one row per series with point count, time extent (epoch micros —
-    * the repo's engine-portable timestamp convention), and the sorted
-    * attribute/tag key inventories (comma-joined — scalar output keeps
-    * the row hash-comparable across engines). The reference holds this
-    * in the m3 namespace/symtable metadata; here it is one scan-shaped
-    * aggregation: count/extent in one pass, key inventories via
-    * explode + collect_set (distinct KEYS only — never a collect of
-    * values), joined on the series name. Row count = series
-    * cardinality, so every aggregate output is metadata-sized at any
-    * corpus scale.
-    */
-  private val describeRe = """(?is)^\s*describe\s+(\w+)\s*\.\s*(\w+)\s*$""".r
-
-  /** `SHOW FAMILIES [IN domain]` — the catalog-listing half of the
-    * discovery face (DESCRIBE is the per-family half): one
-    * (domain, family) row per registered family, sorted. Enumerable
-    * only when the resolver IS an enumerable registry (the Map
-    * overload); the function-resolver overloads refuse with a pointer
-    * rather than listing nothing.
-    */
-  private val showRe =
-    """(?is)^\s*show\s+families(?:\s+in\s+(\w+))?\s*$""".r
-
-  /** `SHOW PARTITIONS domain.family` — the partition-inventory third of
-    * the discovery face (SHOW FAMILIES lists the catalog, DESCRIBE one
-    * family's series, this one family's PHYSICAL layout): one row per
-    * dt= date partition with file count, bytes and footer row total.
-    * Operates on the WAREHOUSE like the mutate verbs (takes the root,
-    * not a query frame) and is metadata-only — the "what would
-    * retention or a takedown touch" question, answerable on a petabyte
-    * family without a scan. Compiles to [[TimeSeriesTable.partitions]].
-    */
-  private val showPartsRe =
-    """(?is)^\s*show\s+partitions\s+(\w+)\s*\.\s*(\w+)\s*$""".r
-  private val showPartsShapeRe = """(?is)^\s*show\s+partitions\b.*$""".r
+  /** Parse `stmt` as the statement kind its entrypoint runs; any other
+    * kind refuses with the form of the statement `verb` leads. */
+  private def parseAs[S <: Ast.Statement: ClassTag](stmt: String,
+      verb: String, checkMerge: Seq[Ast.MergeClause] => Unit = _ => ()): S =
+    Parser.parseStatement(stmt, checkMerge) match {
+      case s: S => s
+      case _ => throw Compiler.CompileException(Parser.usage(verb))
+    }
 
   def sqlShowPartitions(stmt: String, spark: SparkSession,
-      root: String): DataFrame = stmt match {
-    case showPartsRe(dom, fam) =>
-      TimeSeriesTable.partitions(spark, root, dom, fam)
-    case _ => throw Compiler.CompileException(
-      "SHOW PARTITIONS takes exactly 'SHOW PARTITIONS domain.family'")
+      root: String): DataFrame = {
+    val t = parseAs[Ast.ShowPartitions](stmt, "show").target
+    TimeSeriesTable.partitions(spark, root, t.domain, t.family)
   }
 
   /** Warehouse-aware `DESCRIBE domain.family` — the same six-column
@@ -82,50 +44,10 @@ object BoostQL {
     * counts sum, extents min/max, key sets union).
     */
   def sqlDescribe(stmt: String, spark: SparkSession,
-      root: String): DataFrame = stmt match {
-    case describeRe(dom, fam) =>
-      TimeSeriesTable.describeCached(spark, root, dom, fam)
-    case _ => throw Compiler.CompileException(
-      "DESCRIBE takes exactly 'DESCRIBE domain.family'")
+      root: String): DataFrame = {
+    val t = parseAs[Ast.Describe](stmt, "describe").target
+    TimeSeriesTable.describeCached(spark, root, t.domain, t.family)
   }
-
-  /** `FUNNEL s1 -> s2 [-> …] BY <attr> [WITHIN '<interval>'] FROM
-    * dom.family` — the ordered-conversion funnel as a first-class
-    * statement (the most user-reached product-analytics shape): each
-    * step is a SERIES of the family, users are identified by the named
-    * per-point attribute (tag fallback, like `s.k` field access), and a
-    * user advances to step i only via a step-i point strictly later
-    * than their step-(i−1) first-reach; WITHIN bounds the whole journey
-    * from the step-0 time. Compiles to
-    * [[graft.operators.TimeSeriesOps.funnel]] (ONE hash exchange on the
-    * user key); returns (step_index, step, users) ordered, users
-    * non-increasing. Rows with no user attribute are skipped (no
-    * journey without an identity).
-    */
-  private val funnelRe =
-    """(?is)^\s*funnel\s+(.+?)\s+by\s+(\w+)(?:\s+within\s+'([^']+)')?\s+from\s+(\w+)\s*\.\s*(\w+)\s*$""".r
-
-  /** `RETENTION BY <attr> [MAX <n> DAYS] FROM dom.family` — the day-N
-    * retention triangle: users cohorted by first-seen day (any series
-    * of the family counts as activity), counted on each later day they
-    * returned, offsets 0..MAX (default 30). Compiles to
-    * [[graft.operators.TimeSeriesOps.retentionCohorts]] (two shuffles —
-    * user, then cohort×offset — the minimum for the semantics).
-    * Returns (cohort_date, day_offset, users) ordered.
-    */
-  private val retentionRe =
-    """(?is)^\s*retention\s+by\s+(\w+)(?:\s+max\s+(\d+)\s+days)?\s+from\s+(\w+)\s*\.\s*(\w+)\s*$""".r
-
-  /** `OUTLIERS <series> [K <k>] FROM dom.family` — robust MAD anomaly
-    * detection over one series: points with |v − median| > k·MAD
-    * (default k = 3), the dispersion measure outliers cannot drag.
-    * Compiles to [[graft.operators.TimeSeriesOps.madOutliersAgg]] — the
-    * hot-key-safe aggregate/broadcast form (medians partial-aggregate;
-    * data rows never shuffle). Returns (ts_us, value, dev, mad),
-    * unordered (order at the consumer).
-    */
-  private val outliersRe =
-    """(?is)^\s*outliers\s+(\w+)(?:\s+k\s+([0-9.]+))?\s+from\s+(\w+)\s*\.\s*(\w+)\s*$""".r
 
   /** User identity for FUNNEL/RETENTION: the named per-point attribute,
     * tag fallback — the same resolution as `series.k` field access. */
@@ -135,64 +57,35 @@ object BoostQL {
       element_at(col("tags"), attr))
   }
 
-  private def funnelStmt(stepsTxt: String, attr: String, within: String,
-      fam: DataFrame): DataFrame = {
+  private def funnelStmt(f: Ast.Funnel, fam: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val steps = stepsTxt.split("->").map(_.trim).toSeq
-    if (steps.isEmpty || steps.exists(!_.matches("\\w+")))
-      throw Compiler.CompileException(
-        "FUNNEL steps must be series names separated by '->'")
-    if (steps.distinct.size != steps.size)
+    if (f.steps.distinct.size != f.steps.size)
       throw Compiler.CompileException("FUNNEL steps must be distinct")
-    val withinUs = Option(within).map(iv =>
+    val withinUs = f.within.map(iv =>
       Compiler.parseIntervalMicros(iv).getOrElse(
         throw Compiler.CompileException(
           s"malformed FUNNEL WITHIN interval '$iv' — expected '<n> " +
             "<microsecond|millisecond|second|minute|hour|day>[s]'")))
-    val df = fam.select(col("series"), userKey(attr).as("__u"), col("ts"))
+    val df = fam.select(col("series"), userKey(f.by).as("__u"), col("ts"))
       .filter(col("__u").isNotNull)
     graft.operators.TimeSeriesOps.funnel(
-      df, "__u", "series", "ts", steps, withinUs)
+      df, "__u", "series", "ts", f.steps, withinUs)
   }
 
-  private def retentionStmt(attr: String, maxDays: String,
-      fam: DataFrame): DataFrame = {
+  private def retentionStmt(r: Ast.Retention, fam: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val df = fam.select(userKey(attr).as("__u"), col("ts"))
+    val df = fam.select(userKey(r.by).as("__u"), col("ts"))
       .filter(col("__u").isNotNull)
     graft.operators.TimeSeriesOps.retentionCohorts(
-      df, "__u", "ts", Option(maxDays).map(parseNum(_, "RETENTION MAX",
-        _.toInt)).getOrElse(30))
+      df, "__u", "ts", r.maxDays.getOrElse(30))
   }
 
-  /** Numeric statement captures ('OUTLIERS … K 3', 'RETENTION … MAX
-    * 30') parse through here so a malformed literal ('3..5', a
-    * >19-digit MAX) raises the dialect's CompileException naming the
-    * literal — like every other malformed-statement path — instead of
-    * leaking a raw NumberFormatException. */
-  private def parseNum[T](raw: String, what: String, f: String => T): T = {
-    val v = try f(raw) catch {
-      case _: NumberFormatException => throw Compiler.CompileException(
-        s"malformed $what literal '$raw'")
-    }
-    // String.toDouble accepts 'NaN'/'Infinity', which would slide past
-    // downstream positivity checks (NaN comparisons are all false) and
-    // silently return empty results — refuse them as malformed too
-    v match {
-      case d: Double if !java.lang.Double.isFinite(d) =>
-        throw Compiler.CompileException(s"malformed $what literal '$raw'")
-      case _ => v
-    }
-  }
-
-  private def outliersStmt(series: String, k: String,
-      fam: DataFrame): DataFrame = {
+  private def outliersStmt(o: Ast.Outliers, fam: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val kk = Option(k).map(parseNum(_, "OUTLIERS K", _.toDouble))
-      .getOrElse(3.0)
+    val kk = o.k.getOrElse(3.0)
     if (kk <= 0.0) throw Compiler.CompileException(
       "OUTLIERS K must be positive")
-    val rows = fam.filter(col("series") === series)
+    val rows = fam.filter(col("series") === o.series)
       .select(col("series"), unix_micros(col("ts")).as("ts_us"), col("value"))
     graft.operators.TimeSeriesOps
       .madOutliersAgg(rows, Seq("series"), "value", kk)
@@ -204,16 +97,16 @@ object BoostQL {
     * keys. */
   def sql(query: String,
       families: Map[(String, String), DataFrame]): DataFrame =
-    query match {
-      case showRe(dom) =>
+    parseRead(query) match {
+      case Ast.ShowFamilies(dom) =>
         val spark = families.headOption.map(_._2.sparkSession).getOrElse(
           throw Compiler.CompileException(
             "SHOW FAMILIES: the registry is empty"))
         import spark.implicits._
         families.keys.toSeq
-          .filter(k => Option(dom).forall(_.equalsIgnoreCase(k._1)))
+          .filter(k => dom.forall(_.equalsIgnoreCase(k._1)))
           .sorted.toDF("domain", "family")
-      case _ => sql(query, families.apply _)
+      case st => run(st, families.apply _)
     }
 
   private def describe(fam: DataFrame): DataFrame = {
@@ -260,16 +153,11 @@ object BoostQL {
     * columns, duplicate names, a series-less select and a ts-less
     * select all refuse at compile time.
     */
-  private val insertRe =
-    """(?is)^\s*insert\s+into\s+(\w+)\s*\.\s*(\w+)\s+((?:select|with)\b.*)$""".r
-
   def sqlInsert(stmt: String, families: ((String, String)) => DataFrame,
-      root: String): Unit = stmt match {
-    case insertRe(dom, fam, rest) =>
-      val df = Compiler.compile(Parser.parseStmt(rest), families)
-      TimeSeriesTable.append(insertLong(df), root, dom, fam)
-    case _ => throw Compiler.CompileException(
-      "INSERT must be 'INSERT INTO domain.family SELECT …'")
+      root: String): Unit = {
+    val Ast.Insert(t, q) = parseAs[Ast.Insert](stmt, "insert")
+    TimeSeriesTable.append(insertLong(Compiler.compile(q, families)), root,
+      t.domain, t.family)
   }
 
   /** `UPSERT INTO domain.family <select>` — idempotent SQL ingest, the
@@ -283,18 +171,13 @@ object BoostQL {
     * `UPSERT` run twice is the same day. Returns (existing rows
     * replaced, incoming rows written).
     */
-  private val upsertRe =
-    """(?is)^\s*upsert\s+into\s+(\w+)\s*\.\s*(\w+)\s+((?:select|with)\b.*)$""".r
-
   def sqlUpsert(stmt: String, families: ((String, String)) => DataFrame,
-      root: String): (Long, Long) = stmt match {
-    case upsertRe(dom, fam, rest) =>
-      val df = Compiler.compile(Parser.parseStmt(rest), families)
-      val (replaced, written, _) = TimeSeriesTable.upsertRows(
-        df.sparkSession, root, dom, fam, insertLong(df))
-      (replaced, written)
-    case _ => throw Compiler.CompileException(
-      "UPSERT must be 'UPSERT INTO domain.family SELECT …'")
+      root: String): (Long, Long) = {
+    val Ast.Upsert(t, q) = parseAs[Ast.Upsert](stmt, "upsert")
+    val df = Compiler.compile(q, families)
+    val (replaced, written, _) = TimeSeriesTable.upsertRows(
+      df.sparkSession, root, t.domain, t.family, insertLong(df))
+    (replaced, written)
   }
 
   /** `CREATE [OR REPLACE] FAMILY domain.family AS <select>` — CTAS, the
@@ -310,50 +193,44 @@ object BoostQL {
     */
   def sqlCreateFamily(stmt: String,
       families: ((String, String)) => DataFrame, root: String): Long = {
-    val createRe =
-      """(?is)^\s*create\s+(or\s+replace\s+)?family\s+(\w+)\s*\.\s*(\w+)\s+as\s+((?:select|with)\b.*)$""".r
-    stmt match {
-      case createRe(orReplace, dom, fam, rest) =>
-        val df = Compiler.compile(Parser.parseStmt(rest), families)
-        val spark = df.sparkSession
-        val dir = new org.apache.hadoop.fs.Path(s"$root/$dom/$fam")
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val exists = fs.exists(dir)
-        if (exists && orReplace == null) throw Compiler.CompileException(
-          s"family $dom.$fam already exists — CREATE OR REPLACE FAMILY " +
-            "swaps it atomically, INSERT INTO appends to it")
-        val rows = insertLong(df)
-        if (!exists) {
-          TimeSeriesTable.append(rows, root, dom, fam)
-          TimeSeriesTable.open(spark, root, dom, fam).count()
-        } else {
-          // replace: stage the full new family, then two-rename swap
-          // (the compact() shape) — the select runs BEFORE anything
-          // moves, so a failure leaves the old family untouched
-          val tmp = new org.apache.hadoop.fs.Path(
-            s"$root/$dom/.${fam}__ctas")
-          if (fs.exists(tmp)) fs.delete(tmp, true)
-          TimeSeriesTable.append(rows, root, dom, s".${fam}__ctas")
-          val aside = new org.apache.hadoop.fs.Path(
-            s"$root/$dom/.${fam}__ctas_old")
-          if (fs.exists(aside)) fs.delete(aside, true)
-          if (!fs.rename(dir, aside)) throw new java.io.IOException(
-            s"CREATE OR REPLACE FAMILY: could not move $dir aside — " +
-              "family left untouched")
-          if (!fs.rename(tmp, dir)) {
-            fs.rename(aside, dir)
-            throw new java.io.IOException(
-              s"CREATE OR REPLACE FAMILY: swap rename failed — " +
-                "family restored")
-          }
-          fs.delete(aside, true)
-          // count from the LIVE path post-swap: the dot-prefixed
-          // staging dir is invisible to Spark's hidden-path filter
-          TimeSeriesTable.open(spark, root, dom, fam).count()
-        }
-      case _ => throw Compiler.CompileException(
-        "CREATE FAMILY takes 'CREATE [OR REPLACE] FAMILY domain.family " +
-          "AS SELECT …'")
+    val Ast.CreateFamily(Ast.FamilyRef(dom, fam), orReplace, q) =
+      parseAs[Ast.CreateFamily](stmt, "create")
+    val df = Compiler.compile(q, families)
+    val spark = df.sparkSession
+    val dir = new org.apache.hadoop.fs.Path(s"$root/$dom/$fam")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val exists = fs.exists(dir)
+    if (exists && !orReplace) throw Compiler.CompileException(
+      s"family $dom.$fam already exists — CREATE OR REPLACE FAMILY " +
+        "swaps it atomically, INSERT INTO appends to it")
+    val rows = insertLong(df)
+    if (!exists) {
+      TimeSeriesTable.append(rows, root, dom, fam)
+      TimeSeriesTable.open(spark, root, dom, fam).count()
+    } else {
+      // replace: stage the full new family, then two-rename swap
+      // (the compact() shape) — the select runs BEFORE anything
+      // moves, so a failure leaves the old family untouched
+      val tmp = new org.apache.hadoop.fs.Path(
+        s"$root/$dom/.${fam}__ctas")
+      if (fs.exists(tmp)) fs.delete(tmp, true)
+      TimeSeriesTable.append(rows, root, dom, s".${fam}__ctas")
+      val aside = new org.apache.hadoop.fs.Path(
+        s"$root/$dom/.${fam}__ctas_old")
+      if (fs.exists(aside)) fs.delete(aside, true)
+      if (!fs.rename(dir, aside)) throw new java.io.IOException(
+        s"CREATE OR REPLACE FAMILY: could not move $dir aside — " +
+          "family left untouched")
+      if (!fs.rename(tmp, dir)) {
+        fs.rename(aside, dir)
+        throw new java.io.IOException(
+          s"CREATE OR REPLACE FAMILY: swap rename failed — " +
+            "family restored")
+      }
+      fs.delete(aside, true)
+      // count from the LIVE path post-swap: the dot-prefixed
+      // staging dir is invisible to Spark's hidden-path filter
+      TimeSeriesTable.open(spark, root, dom, fam).count()
     }
   }
 
@@ -366,24 +243,19 @@ object BoostQL {
     */
   def sqlDropFamily(stmt: String, spark: SparkSession,
       root: String): Boolean = {
-    val dropRe =
-      """(?is)^\s*drop\s+family\s+(if\s+exists\s+)?(\w+)\s*\.\s*(\w+)\s*$""".r
-    stmt match {
-      case dropRe(ifExists, dom, fam) =>
-        val dir = new org.apache.hadoop.fs.Path(s"$root/$dom/$fam")
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(dir)) {
-          if (ifExists == null) throw Compiler.CompileException(
-            s"family $dom.$fam does not exist — DROP FAMILY IF EXISTS " +
-              "is the idempotent form")
-          false
-        } else {
-          if (!fs.delete(dir, true)) throw new java.io.IOException(
-            s"DROP FAMILY: could not delete $dir")
-          true
-        }
-      case _ => throw Compiler.CompileException(
-        "DROP FAMILY takes 'DROP FAMILY [IF EXISTS] domain.family'")
+    val Ast.DropFamily(Ast.FamilyRef(dom, fam), ifExists) =
+      parseAs[Ast.DropFamily](stmt, "drop")
+    val dir = new org.apache.hadoop.fs.Path(s"$root/$dom/$fam")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) {
+      if (!ifExists) throw Compiler.CompileException(
+        s"family $dom.$fam does not exist — DROP FAMILY IF EXISTS " +
+          "is the idempotent form")
+      false
+    } else {
+      if (!fs.delete(dir, true)) throw new java.io.IOException(
+        s"DROP FAMILY: could not delete $dir")
+      true
     }
   }
 
@@ -431,199 +303,66 @@ object BoostQL {
     */
   def sqlMerge(stmt: String, families: ((String, String)) => DataFrame,
       root: String): (Long, Long, Long) = {
-    val headRe =
-      """(?is)^\s*merge\s+into\s+(\w+)\s*\.\s*(\w+)\s+using\s*\(""".r
-    val m = headRe.findPrefixMatchOf(stmt).getOrElse(
-      throw Compiler.CompileException(
-        "MERGE takes 'MERGE INTO domain.family USING (<select>) " +
-          "WHEN MATCHED [AND <cond>] THEN UPDATE|DELETE … " +
-          "[WHEN NOT MATCHED THEN INSERT]'"))
-    val (dom, fam) = (m.group(1), m.group(2))
-    // scan to the USING paren's top-level close (quotes respected)
-    val openIdx = m.end - 1
-    var depth = 0; var inStr = false; var closeIdx = -1
-    var i = openIdx
-    while (i < stmt.length && closeIdx < 0) {
-      val c = stmt.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) closeIdx = i }
-      i += 1
-    }
-    if (closeIdx < 0) throw Compiler.CompileException(
-      "MERGE USING (<select>) is missing its closing parenthesis")
-    val select = stmt.substring(openIdx + 1, closeIdx)
-    val rest = stmt.substring(closeIdx + 1)
-      .replaceFirst("(?is)^\\s*(?:as\\s+src\\b)?\\s*", "")
-    // split the tail at top-level WHEN keywords introducing a clause
-    // (CASE WHEN inside a condition sits behind MATCHED/NOT, and
-    // quoted/parenthesized text is skipped by the scan)
-    val whenAt = scala.collection.mutable.ArrayBuffer.empty[Int]
-    depth = 0; inStr = false; i = 0
-    val lower = rest.toLowerCase
-    while (i < rest.length) {
-      val c = rest.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && lower.startsWith("when", i) &&
-          (i == 0 || !Character.isLetterOrDigit(rest.charAt(i - 1))) &&
-          lower.substring(i + 4).dropWhile(_.isWhitespace)
-            .matches("(?s)^(matched|not\\s+matched)\\b.*"))
-        whenAt += i
-      i += 1
-    }
-    if (whenAt.isEmpty || rest.substring(0, whenAt.head).trim.nonEmpty)
-      throw Compiler.CompileException(
-        "MERGE needs at least one WHEN clause after USING (<select>)")
-    val clauseTexts = whenAt.toSeq.zipAll(
-      whenAt.toSeq.drop(1), -1, rest.length)
-      .map { case (a, b) => rest.substring(a, b) }
-    val matchedRe =
-      """(?is)^when\s+matched\s+(?:and\s+(.*)\s+)?then\s+(update|delete)\s*$""".r
-    val insertRe2 = """(?is)^when\s+not\s+matched\s+then\s+insert\s*$""".r
-    // WHEN NOT MATCHED BY SOURCE — the MIRROR-SYNC clauses: target
-    // rows whose key is absent from the batch. DELETE drops them;
-    // UPDATE SET applies target-side assignments (the dialect's
-    // matched-UPDATE replaces the row with the SOURCE row, which does
-    // not exist here — so the by-source form carries explicit SET
-    // text instead). Conditions AND set expressions see TARGET columns
-    // only — `src.` refuses with the reason instead of silently
-    // resolving as a series named src.
-    val bySrcUpdRe =
-      """(?is)^when\s+not\s+matched\s+by\s+source\s+(?:and\s+(.*)\s+)?then\s+update\s+set\s+(.*\S)\s*$""".r
-    val bySrcRe =
-      """(?is)^when\s+not\s+matched\s+by\s+source\s+(?:and\s+(.*)\s+)?then\s+(update|delete|insert)\s*$""".r
-    def parseCond(condText: String, what: String, allowSrc: Boolean,
-        forbidSrc: Boolean): Column = {
-      val parsed = Parser.parseStmt(
-        s"SELECT 1 AS one FROM $dom.$fam WHERE $condText") match {
-        case q: Ast.QuerySpec => q
-        case _ => throw Compiler.CompileException(
-          s"a MERGE $what condition must be a plain predicate")
-      }
-      val pred = parsed.where.getOrElse(
-        throw Compiler.CompileException(
-          s"a MERGE $what condition must be a plain predicate"))
-      longPredicate(pred, "MERGE", allowSrc = allowSrc,
-        forbidSrc = forbidSrc)
-    }
     var insertClauses = 0
     var sawUnconditional = false
     var sawUnconditionalBs = false
     val matchedB = Seq.newBuilder[(Option[Column], String)]
     val bySourceB = Seq.newBuilder[TimeSeriesTable.BySourceClause]
-    def bsCond(condText: String): Option[Column] = {
-      if (sawUnconditionalBs) throw Compiler.CompileException(
-        "a WHEN NOT MATCHED BY SOURCE clause after an unconditional " +
-          "one is unreachable — first true clause wins; reorder or " +
-          "add AND")
-      val cond = Option(condText).map(parseCond(_, "by-source",
-        allowSrc = false, forbidSrc = true))
-      if (cond.isEmpty) sawUnconditionalBs = true
-      cond
-    }
-    clauseTexts.foreach {
-      case bySrcUpdRe(condText, setText) =>
-        bySourceB += TimeSeriesTable.BySourceClause(bsCond(condText),
-          "update", parseBySourceAssigns(dom, fam, setText))
-      case bySrcRe(condText, action) =>
-        action.toLowerCase match {
-          case "delete" => ()
-          case "update" => throw Compiler.CompileException(
-            "WHEN NOT MATCHED BY SOURCE THEN UPDATE needs SET " +
-              "assignments — there is no source row to replace with " +
-              "for an absent key; spell the target-side rewrite as " +
-              "UPDATE SET <target> = <expr>[, …]")
-          case _ => throw Compiler.CompileException(
-            "WHEN NOT MATCHED BY SOURCE THEN INSERT is contradictory — " +
-              "the clause addresses rows already present in the target")
-        }
-        bySourceB += TimeSeriesTable.BySourceClause(bsCond(condText),
-          "delete")
-      case insertRe2() =>
-        insertClauses += 1
-        if (insertClauses > 1) throw Compiler.CompileException(
-          "MERGE allows one WHEN NOT MATCHED THEN INSERT clause")
-      case matchedRe(condText, action) =>
+    // the clauses are checked before the USING query is parsed
+    val Ast.Merge(t, using, _) = parseAs[Ast.Merge](stmt, "merge", _.foreach {
+      case Ast.WhenMatched(cond, action) =>
         if (sawUnconditional) throw Compiler.CompileException(
           "a WHEN MATCHED clause after an unconditional one is " +
             "unreachable — first true clause wins; reorder or add AND")
-        val cond = Option(condText).map(parseCond(_, "matched",
-          allowSrc = true, forbidSrc = false))
         if (cond.isEmpty) sawUnconditional = true
-        matchedB += ((cond, action.toLowerCase))
-      case other => throw Compiler.CompileException(
-        s"malformed MERGE clause '${other.trim.take(60)}' — expected " +
-          "WHEN MATCHED [AND <cond>] THEN UPDATE|DELETE, " +
-          "WHEN NOT MATCHED THEN INSERT or " +
-          "WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE | " +
-          "UPDATE SET <target> = <expr>[, …]")
-    }
-    val df = Compiler.compile(Parser.parseStmt(select), families)
+        matchedB += ((cond.map(longPredicate(_, "MERGE", allowSrc = true)),
+          action))
+      case Ast.WhenNotMatched =>
+        insertClauses += 1
+        if (insertClauses > 1) throw Compiler.CompileException(
+          "MERGE allows one WHEN NOT MATCHED THEN INSERT clause")
+      case Ast.WhenNotMatchedBySource(cond, set) =>
+        if (sawUnconditionalBs) throw Compiler.CompileException(
+          "a WHEN NOT MATCHED BY SOURCE clause after an unconditional " +
+            "one is unreachable — first true clause wins; reorder or " +
+            "add AND")
+        if (cond.isEmpty) sawUnconditionalBs = true
+        bySourceB += TimeSeriesTable.BySourceClause(
+          cond.map(longPredicate(_, "MERGE", forbidSrc = true)),
+          if (set.isEmpty) "delete" else "update",
+          assignments(set, "MERGE by-source SET", forbidSrc = true))
+    })
+    val df = Compiler.compile(using, families)
     val (upd, del, ins, _) = TimeSeriesTable.mergeRows(
-      df.sparkSession, root, dom, fam, insertLong(df),
+      df.sparkSession, root, t.domain, t.family, insertLong(df),
       matchedB.result(), insertClauses > 0, bySourceB.result())
     (upd, del, ins)
   }
 
-  /** SET-assignment parse for the MERGE by-source UPDATE clause —
-    * [[sqlUpdate]]'s target grammar (a 1-part name sets that series'
-    * value, `series.attr` a per-point attribute, NULL rhs removes the
-    * key; `ts`/`series` refuse) with the by-source restriction: RHS
-    * expressions see TARGET columns only (`src.` refuses — there is no
-    * source row for an absent key by definition).
-    */
-  private def parseBySourceAssigns(dom: String, fam: String,
-      setText: String): Seq[(String, Option[String], Column)] = {
-    val rawAssigns = splitTopLevel(setText, ',').map { piece =>
-      val eq = topLevelIndexOf(piece, '=')
-      if (eq < 0) throw Compiler.CompileException(
-        s"malformed SET assignment '${piece.trim}' — expected " +
-          "<target> = <expression>")
-      (piece.substring(0, eq), piece.substring(eq + 1))
-    }
-    val targetRe = """(?s)^\s*(\w+)(?:\s*\.\s*(\w+))?\s*$""".r
-    val targets: Seq[(String, Option[String])] = rawAssigns.map(_._1).map {
-      case targetRe(a, b) => (a, Option(b))
-      case other => throw Compiler.CompileException(
-        s"MERGE by-source SET target '${other.trim}' must be a series " +
-          "name (sets its value) or series.attribute")
-    }
+  /** Compile SET assignments onto the LONG layout — the target grammar
+    * UPDATE and MERGE's by-source UPDATE share (`what` names the clause
+    * in refusals): a 1-part name sets that series' value, `series.attr`
+    * a per-point attribute, a NULL rhs removes the key; `ts`/`series`
+    * are not assignable, a target appears once, and an RHS references
+    * only its own series' row. */
+  private def assignments(set: Seq[Ast.Assign], what: String,
+      forbidSrc: Boolean = false): Seq[(String, Option[String], Column)] = {
+    val targets = set.map(a => (a.series, a.attr))
     targets.foreach { case (s, a) =>
       if (a.isEmpty && (s.equalsIgnoreCase("ts") ||
           s.equalsIgnoreCase("series")))
         throw Compiler.CompileException(
-          s"MERGE by-source SET cannot assign '$s' — moving rows along " +
-            "the time axis or renaming a series is a DELETE plus an " +
+          s"$what cannot assign '$s' — moving rows along the time " +
+            "axis or renaming a series changes which partition and " +
+            "row group a row lives in; spell it as a DELETE plus an " +
             "INSERT")
     }
     val dup = targets.diff(targets.distinct)
     if (dup.nonEmpty) throw Compiler.CompileException(
-      s"duplicate MERGE by-source SET target ${dup.map { case (s, a) =>
+      s"duplicate $what target ${dup.map { case (s, a) =>
         a.fold(s)(s + "." + _) }.distinct.mkString(", ")}")
-    val synthetic = rawAssigns.map(_._2).zipWithIndex
-      .map { case (rhs, i) => s"($rhs) AS __set$i" }.mkString(", ")
-    val parsed = Parser.parseStmt(
-      s"SELECT $synthetic FROM $dom.$fam") match {
-      case q: Ast.QuerySpec => q
-      case _ => throw Compiler.CompileException(
-        "MERGE by-source SET expressions must be plain row-level " +
-          "expressions")
-    }
-    targets.zip(parsed.select).map { case ((s, a), item) =>
-      val op = item match {
-        case Ast.ExprItem(o, _) => o
-        case Ast.FieldItem(n) => Ast.ORef(n)
-        case _: Ast.AggItem => throw Compiler.CompileException(
-          "MERGE by-source SET expressions are row-level — aggregates " +
-            "have no meaning over one row; compute the aggregate first " +
-            "and spell it as a literal")
-      }
-      val (rhsCol, refs) = longOperand(op, "MERGE by-source SET",
-        allowSrc = false, forbidSrc = true)
+    set.map { case Ast.Assign(s, a, rhs) =>
+      val (rhsCol, refs) = longOperand(rhs, what, forbidSrc = forbidSrc)
       val foreign = refs - s
       if (foreign.nonEmpty) throw Compiler.CompileException(
         s"the SET expression for '${a.fold(s)(s + "." + _)}' " +
@@ -647,53 +386,31 @@ object BoostQL {
     * by writing the rewrite themselves. Returns the dropped partition
     * names (empty when nothing is old enough).
     */
-  private val deleteRe =
-    """(?is)^\s*delete\s+from\s+(\w+)\s*\.\s*(\w+)\s+where\s+ts\s*<\s*date\s*'(\d{4}-\d{2}-\d{2})'\s*$""".r
-  private val deleteWhereRe =
-    """(?is)^\s*delete\s+from\s+(\w+)\s*\.\s*(\w+)\s+where\s+(.*\S)\s*$""".r
-  private val deleteShapeRe = """(?is)^\s*delete\b.*$""".r
-
   def sqlDelete(stmt: String, spark: SparkSession, root: String): Seq[String] =
-    stmt match {
-      case deleteRe(dom, fam, cutoff) =>
-        TimeSeriesTable.expire(spark, root, dom, fam,
-          java.sql.Date.valueOf(cutoff))
-      case deleteWhereRe(dom, fam, predText) =>
-        // ROW-LEVEL DELETE (the takedown path): any other WHERE compiles
-        // to [[TimeSeriesTable.deleteRows]]'s copy-on-write rewrite of
-        // only the affected date partitions. The predicate parses
-        // through the ordinary grammar (wrapped in a synthetic SELECT so
-        // the full expression surface — IN, BETWEEN, LIKE, IS NULL,
-        // arithmetic, intervals — comes for free) and compiles against
-        // the family's LONG rows via [[deletePredicate]].
-        val parsed = Parser.parseStmt(
-          s"SELECT ts FROM $dom.$fam WHERE $predText") match {
-          case q: Ast.QuerySpec => q
-          case _ => throw Compiler.CompileException(
-            "DELETE WHERE must be a plain predicate")
-        }
-        // the synthetic SELECT would happily absorb trailing clauses
-        // (GROUP BY / ORDER BY / LIMIT …) into the spec — refuse them
-        if (parsed.joins.nonEmpty || parsed.groupBy.nonEmpty ||
-            parsed.having.isDefined || parsed.orderBy.nonEmpty ||
-            parsed.limit.isDefined || parsed.offset.isDefined ||
-            parsed.qualify.isDefined || parsed.fill.isDefined)
-          throw Compiler.CompileException(
-            "DELETE takes exactly 'DELETE FROM domain.family WHERE " +
-              "<predicate>' — no joins, grouping, ordering or paging")
-        val pred = parsed.where.getOrElse(throw Compiler.CompileException(
-          "DELETE needs a WHERE predicate"))
-        TimeSeriesTable.deleteRows(spark, root, dom, fam,
+    parseAs[Ast.Delete](stmt, "delete") match {
+      case Ast.Delete(t, RetentionCutoff(cutoff)) =>
+        TimeSeriesTable.expire(spark, root, t.domain, t.family, cutoff)
+      // ROW-LEVEL DELETE (the takedown path): any other WHERE compiles
+      // to [[TimeSeriesTable.deleteRows]]'s copy-on-write rewrite of
+      // only the affected date partitions, the predicate (the full
+      // expression surface — IN, BETWEEN, LIKE, IS NULL, arithmetic,
+      // intervals) against the family's LONG rows via [[deletePredicate]]
+      case Ast.Delete(t, pred) =>
+        TimeSeriesTable.deleteRows(spark, root, t.domain, t.family,
           deletePredicate(pred))._2
-      case deleteShapeRe() => throw Compiler.CompileException(
-        "DELETE FROM domain.family needs a WHERE predicate — deleting a " +
-          "whole family is an operational drop, not a query; use " +
-          "retention (\"WHERE ts < DATE 'YYYY-MM-DD'\", metadata-only " +
-          "partition drops) or a row predicate (copy-on-write rewrite " +
-          "of the affected date partitions)")
-      case _ => throw Compiler.CompileException(
-        "sqlDelete expects a DELETE statement")
     }
+
+  /** Matches the retention predicate `ts < DATE 'YYYY-MM-DD'`, which
+    * [[sqlDelete]] runs as a metadata-only expire, giving its cutoff. */
+  private[boostql] object RetentionCutoff {
+    def unapply(e: Ast.BExpr): Option[java.sql.Date] = e match {
+      case Ast.Cmp("<", Ast.ORef(Ast.RawName(Seq(ts))),
+          Ast.OFn("to_date", Seq(Ast.OLit(Ast.BStr(cutoff)))))
+          if ts.equalsIgnoreCase("ts") && cutoff.length == 10 =>
+        Some(java.sql.Date.valueOf(cutoff))
+      case _ => None
+    }
+  }
 
   /** `UPDATE domain.family SET <target> = <expr> [, …] WHERE <predicate>`
     * — row-level UPDATE, the redaction verb pairing [[sqlDelete]]'s
@@ -716,130 +433,11 @@ object BoostQL {
     * same as DELETE) and its series has an assignment. Returns the
     * affected partition names.
     */
-  private val updateRe =
-    """(?is)^\s*update\s+(\w+)\s*\.\s*(\w+)\s+set\s+(.*\S)\s+where\s+(.*\S)\s*$""".r
-  private val updateShapeRe = """(?is)^\s*update\b.*$""".r
-
-  def sqlUpdate(stmt: String, spark: SparkSession, root: String): Seq[String] =
-    stmt match {
-      case updateRe(dom, fam, setText, predText) =>
-        val rawAssigns = splitTopLevel(setText, ',').map { piece =>
-          val eq = topLevelIndexOf(piece, '=')
-          if (eq < 0) throw Compiler.CompileException(
-            s"malformed SET assignment '${piece.trim}' — expected " +
-              "<target> = <expression>")
-          (piece.substring(0, eq), piece.substring(eq + 1))
-        }
-        val targetRe = """(?s)^\s*(\w+)(?:\s*\.\s*(\w+))?\s*$""".r
-        val targets: Seq[(String, Option[String])] = rawAssigns.map(_._1).map {
-          case targetRe(a, b) => (a, Option(b))
-          case other => throw Compiler.CompileException(
-            s"UPDATE target '${other.trim}' must be a series name " +
-              "(sets its value) or series.attribute")
-        }
-        targets.foreach { case (s, a) =>
-          if (a.isEmpty && (s.equalsIgnoreCase("ts") ||
-              s.equalsIgnoreCase("series")))
-            throw Compiler.CompileException(
-              s"UPDATE cannot assign '$s' — moving rows along the time " +
-                "axis or renaming a series changes which partition and " +
-                "row group a row lives in; spell it as a DELETE plus an " +
-                "INSERT")
-        }
-        val dup = targets.diff(targets.distinct)
-        if (dup.nonEmpty) throw Compiler.CompileException(
-          s"duplicate UPDATE target ${dup.map { case (s, a) =>
-            a.fold(s)(s + "." + _) }.distinct.mkString(", ")}")
-        // the RHS expressions and the WHERE ride the ordinary grammar
-        // via one synthetic SELECT (the parens keep item boundaries)
-        val synthetic = rawAssigns.map(_._2).zipWithIndex
-          .map { case (rhs, i) => s"($rhs) AS __set$i" }.mkString(", ")
-        val parsed = Parser.parseStmt(
-          s"SELECT $synthetic FROM $dom.$fam WHERE $predText") match {
-          case q: Ast.QuerySpec => q
-          case _ => throw Compiler.CompileException(
-            "UPDATE WHERE must be a plain predicate")
-        }
-        if (parsed.joins.nonEmpty || parsed.groupBy.nonEmpty ||
-            parsed.having.isDefined || parsed.orderBy.nonEmpty ||
-            parsed.limit.isDefined || parsed.offset.isDefined ||
-            parsed.qualify.isDefined || parsed.fill.isDefined)
-          throw Compiler.CompileException(
-            "UPDATE takes exactly 'UPDATE domain.family SET <target> = " +
-              "<expr>[, …] WHERE <predicate>' — no joins, grouping, " +
-              "ordering or paging")
-        val pred = parsed.where.getOrElse(throw Compiler.CompileException(
-          "UPDATE needs a WHERE predicate — rewriting a whole family " +
-            "unconditionally is a backfill job, not a query"))
-        val assigns = targets.zip(parsed.select).map {
-          case ((s, a), item) =>
-            val op = item match {
-              case Ast.ExprItem(o, _) => o
-              case Ast.FieldItem(n) => Ast.ORef(n)
-              case _: Ast.AggItem => throw Compiler.CompileException(
-                "UPDATE SET expressions are row-level — aggregates have " +
-                  "no meaning over one row; compute the aggregate first " +
-                  "and spell it as a literal")
-            }
-            val (rhsCol, refs) = longOperand(op, "UPDATE")
-            val foreign = refs - s
-            if (foreign.nonEmpty) throw Compiler.CompileException(
-              s"the SET expression for '${a.fold(s)(s + "." + _)}' " +
-                s"references series ${foreign.toSeq.sorted.mkString(", ")} " +
-                s"— the assignment applies to rows of series '$s', and " +
-                "one long row holds one series")
-            (s, a, rhsCol)
-        }
-        TimeSeriesTable.updateRows(spark, root, dom, fam,
-          longPredicate(pred, "UPDATE"), assigns)._2
-      case updateShapeRe() => throw Compiler.CompileException(
-        "UPDATE takes exactly 'UPDATE domain.family SET <target> = " +
-          "<expr>[, …] WHERE <predicate>'")
-      case _ => throw Compiler.CompileException(
-        "sqlUpdate expects an UPDATE statement")
-    }
-
-  /** Split at top-level occurrences of `sep` — outside parens and
-    * single-quoted literals (doubled-quote escapes round-trip: the
-    * closing quote ends the literal, the next reopens it).
-    */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inStr = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { cur += c; if (c == '\'') inStr = false }
-      else if (c == '\'') { inStr = true; cur += c }
-      else if (c == '(') { depth += 1; cur += c }
-      else if (c == ')') { depth -= 1; cur += c }
-      else if (c == sep && depth == 0) { out += cur.toString; cur.clear() }
-      else cur += c
-      i += 1
-    }
-    out += cur.toString
-    out.result()
-  }
-
-  /** First top-level index of `ch` (outside parens and quoted
-    * literals), or -1.
-    */
-  private def topLevelIndexOf(s: String, ch: Char): Int = {
-    var depth = 0
-    var inStr = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == ch && depth == 0) return i
-      i += 1
-    }
-    -1
+  def sqlUpdate(stmt: String, spark: SparkSession, root: String): Seq[String] = {
+    val Ast.Update(t, set, where) = parseAs[Ast.Update](stmt, "update")
+    val assigns = assignments(set, "UPDATE")
+    TimeSeriesTable.updateRows(spark, root, t.domain, t.family,
+      longPredicate(where, "UPDATE"), assigns)._2
   }
 
   /** Compile a DELETE WHERE tree to a Column over the family's LONG
@@ -1069,24 +667,23 @@ object BoostQL {
     * swap the trigger for a production run-forever deployment.
     */
   def sqlStreamInsert(stmt: String, families: ((String, String)) => DataFrame,
-      root: String, watermark: Option[String] = None): Unit = stmt match {
-    case insertRe(dom, fam, rest) =>
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      val df = watermark.fold(sqlStream(rest, families))(d =>
-        sqlStream(rest, families, d))
-      val long = insertLong(df).withColumn("dt", to_date(col("ts")))
-      val q = long.writeStream
-        .format("parquet")
-        .option("path", s"$root/$dom/$fam")
-        .option("checkpointLocation", s"$root/.checkpoints/$dom.$fam")
-        .partitionBy("dt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    case _ => throw Compiler.CompileException(
-      "INSERT must be 'INSERT INTO domain.family SELECT …'")
+      root: String, watermark: Option[String] = None): Unit = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.streaming.Trigger
+    val Ast.Insert(t, q) = parseAs[Ast.Insert](stmt, "insert")
+    val df = watermark.fold(streamQuery(q, families))(d =>
+      streamAggregate(q, families, d))
+    val long = insertLong(df).withColumn("dt", to_date(col("ts")))
+    long.writeStream
+      .format("parquet")
+      .option("path", s"$root/${t.domain}/${t.family}")
+      .option("checkpointLocation",
+        s"$root/.checkpoints/${t.domain}.${t.family}")
+      .partitionBy("dt")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
   }
 
   /** Shared INSERT shape contract + UNPIVOT onto the family long
@@ -1148,50 +745,60 @@ object BoostQL {
     }
   }
 
+  /** SQL over a family resolver: a query or a read statement —
+    * DESCRIBE, EXPLAIN, FUNNEL, RETENTION, OUTLIERS. The warehouse
+    * statements refuse with a pointer at the entrypoint that runs them.
+    */
   def sql(query: String, families: ((String, String)) => DataFrame): DataFrame =
-    query match {
-      case showRe(_) => throw Compiler.CompileException(
-        "SHOW FAMILIES needs an enumerable registry — pass the families " +
-          "as a Map (the sql(query, Map) overload); a resolver function " +
-          "cannot be listed")
-      case showPartsShapeRe() => throw Compiler.CompileException(
-        "SHOW PARTITIONS is a warehouse statement — it inventories a " +
-          "family's physical date partitions, which a query frame cannot " +
-          "see; use BoostQL.sqlShowPartitions(stmt, spark, root)")
-      case describeRe(dom, f) => describe(families((dom, f)))
-      case funnelRe(steps, attr, within, dom, f) =>
-        funnelStmt(steps, attr, within, families((dom, f)))
-      case retentionRe(attr, maxDays, dom, f) =>
-        retentionStmt(attr, maxDays, families((dom, f)))
-      case outliersRe(series, k, dom, f) =>
-        outliersStmt(series, k, families((dom, f)))
-      case explainRe(mode, rest) =>
-        val df = Compiler.compile(Parser.parseStmt(rest), families)
-        val m = Option(mode).map(_.toLowerCase).getOrElse("formatted")
+    run(parseRead(query), families)
+
+  /** Parses a statement for [[sql]]. A MERGE gets the pointer at
+    * [[sqlMerge]] as soon as its clauses parse, before its USING query. */
+  private def parseRead(query: String): Ast.Statement =
+    Parser.parseStatement(query, _ => throw writeOnly("sqlMerge"))
+
+  private def writeOnly(entry: String) = Compiler.CompileException(
+    "sql() compiles read queries — this write statement runs through " +
+      s"BoostQL.$entry(stmt, …) " +
+      "(INSERT/UPSERT/MERGE/CREATE take the families resolver, " +
+      "DELETE/UPDATE/DROP/REFRESH take the warehouse root)")
+
+  private def run(st: Ast.Statement,
+      families: ((String, String)) => DataFrame): DataFrame = {
+    def frame(f: Ast.FamilyRef) = families((f.domain, f.family))
+    st match {
+      case q: Ast.QueryStmt => Compiler.compile(q, families)
+      case Ast.Describe(t) => describe(frame(t))
+      case f: Ast.Funnel => funnelStmt(f, frame(f.source))
+      case r: Ast.Retention => retentionStmt(r, frame(r.source))
+      case o: Ast.Outliers => outliersStmt(o, frame(o.source))
+      case Ast.Explain(mode, q) =>
+        val df = Compiler.compile(q, families)
         val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString(m))
+          org.apache.spark.sql.execution.ExplainMode.fromString(mode))
         val spark = df.sparkSession
         import spark.implicits._
         Seq(plan).toDF("plan")
-      case dmlRe(verb) =>
-        val v = verb.toLowerCase
-        val entry = v match {
-          case "merge"   => "sqlMerge"
-          case "create"  => "sqlCreateFamily"
-          case "drop"    => "sqlDropFamily"
-          case "refresh" => "sqlRefreshRollup"
-          case other     => s"sql${other.capitalize}"
-        }
-        throw Compiler.CompileException(
-          s"${v.toUpperCase} is a write statement — sql() compiles read " +
-            s"queries; use BoostQL.$entry(stmt, …) " +
-            "(INSERT/UPSERT/MERGE/CREATE take the families resolver, " +
-            "DELETE/UPDATE/DROP/REFRESH take the warehouse root)")
-      case _ => Compiler.compile(Parser.parseStmt(query), families)
+      case _: Ast.ShowFamilies => throw Compiler.CompileException(
+        "SHOW FAMILIES needs an enumerable registry — pass the families " +
+          "as a Map (the sql(query, Map) overload); a resolver function " +
+          "cannot be listed")
+      case _: Ast.ShowPartitions => throw Compiler.CompileException(
+        "SHOW PARTITIONS is a warehouse statement — it inventories a " +
+          "family's physical date partitions, which a query frame cannot " +
+          "see; use BoostQL.sqlShowPartitions(stmt, spark, root)")
+      case w: Ast.WriteStatement => throw writeOnly(w match {
+        case _: Ast.Insert => "sqlInsert"
+        case _: Ast.Upsert => "sqlUpsert"
+        case _: Ast.Merge => "sqlMerge"
+        case _: Ast.Delete => "sqlDelete"
+        case _: Ast.Update => "sqlUpdate"
+        case _: Ast.CreateFamily => "sqlCreateFamily"
+        case _: Ast.DropFamily => "sqlDropFamily"
+        case _: Ast.RefreshRollup => "sqlRefreshRollup"
+      })
     }
-
-  private val dmlRe =
-    """(?is)^\s*(insert|upsert|delete|update|merge|create|drop|refresh)\b.*$""".r
+  }
 
   /** `REFRESH ROLLUP domain.family BUCKET '<interval>' AS <label>
     * [INTO domain.family2]` — the SQL face of
@@ -1204,31 +811,24 @@ object BoostQL {
     */
   def sqlRefreshRollup(stmt: String, spark: SparkSession,
       root: String): (Seq[String], Seq[String]) = {
-    val refreshRe =
-      ("""(?is)^\s*refresh\s+rollup\s+(\w+)\s*\.\s*(\w+)\s+bucket\s+""" +
-        """'([^']+)'\s+as\s+(\w+)(?:\s+into\s+(\w+)\s*\.\s*(\w+))?\s*$""").r
-    stmt match {
-      case refreshRe(dom, fam, width, label, intoDom, intoFam) =>
-        val us = Compiler.parseIntervalMicros(width).getOrElse(
-          throw Compiler.CompileException(
-            s"REFRESH ROLLUP bucket '$width' must be a fixed width " +
-              "(microsecond…day) — calendar widths cannot stay on one " +
-              "source date"))
-        if (us <= 0 || 86400000000L % us != 0)
-          throw Compiler.CompileException(
-            "REFRESH ROLLUP bucket must be positive and divide one day " +
-              "— a wider bucket straddles date partitions; use " +
-              "downsample() for a one-shot wider rollup")
-        if (intoDom != null && intoDom != dom)
-          throw Compiler.CompileException(
-            "REFRESH ROLLUP INTO must target the same domain — the " +
-              "refresh manifest lives beside the derived family")
-        TimeSeriesTable.refreshDownsample(spark, root, dom, fam, us,
-          label, Option(intoFam))
-      case _ => throw Compiler.CompileException(
-        "REFRESH ROLLUP takes 'REFRESH ROLLUP domain.family BUCKET " +
-          "'<interval>' AS <label> [INTO domain.family2]'")
-    }
+    val Ast.RefreshRollup(src, width, label, into) =
+      parseAs[Ast.RefreshRollup](stmt, "refresh")
+    val us = Compiler.parseIntervalMicros(width).getOrElse(
+      throw Compiler.CompileException(
+        s"REFRESH ROLLUP bucket '$width' must be a fixed width " +
+          "(microsecond…day) — calendar widths cannot stay on one " +
+          "source date"))
+    if (us <= 0 || 86400000000L % us != 0)
+      throw Compiler.CompileException(
+        "REFRESH ROLLUP bucket must be positive and divide one day " +
+          "— a wider bucket straddles date partitions; use " +
+          "downsample() for a one-shot wider rollup")
+    if (into.exists(_.domain != src.domain))
+      throw Compiler.CompileException(
+        "REFRESH ROLLUP INTO must target the same domain — the " +
+          "refresh manifest lives beside the derived family")
+    TimeSeriesTable.refreshDownsample(spark, root, src.domain, src.family,
+      us, label, into.map(_.family))
   }
 
   /** The SQL front over a STREAM: compile a dialect query against
@@ -1246,9 +846,13 @@ object BoostQL {
     * broadcasts.
     */
   def sqlStream(query: String,
+      families: ((String, String)) => DataFrame): DataFrame =
+    streamQuery(Parser.parseStmt(query), families)
+
+  private def streamQuery(stmt: Ast.QueryStmt,
       families: ((String, String)) => DataFrame): DataFrame = {
-    val spec = Parser.parseStmt(query) match {
-      case q: graft.boostql.Ast.QuerySpec => q
+    val spec = stmt match {
+      case q: Ast.QuerySpec => q
       case _ => throw Compiler.CompileException(
         "streaming queries do not support set operations")
     }
@@ -1332,10 +936,15 @@ object BoostQL {
     * unbounded stream they are sink-side concerns.
     */
   def sqlStream(query: String, families: ((String, String)) => DataFrame,
+      watermarkDelay: String): DataFrame =
+    streamAggregate(Parser.parseStmt(query), families, watermarkDelay)
+
+  private def streamAggregate(stmt: Ast.QueryStmt,
+      families: ((String, String)) => DataFrame,
       watermarkDelay: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.boostql.Ast._
-    val spec = Parser.parseStmt(query) match {
+    val spec = stmt match {
       case q: QuerySpec => q
       case _ => throw Compiler.CompileException(
         "streaming queries do not support set operations")

@@ -9,6 +9,27 @@ import Ast._
   * the dialect is tiny):
   *
   * {{{
+  * statement := top
+  *           | INSERT INTO fam top | UPSERT INTO fam top
+  *           | MERGE INTO fam USING '(' top ')' (AS src)? when+
+  *           | DELETE FROM fam WHERE or
+  *           | UPDATE fam SET assigns WHERE or
+  *           | CREATE (OR REPLACE)? FAMILY fam AS top
+  *           | DROP FAMILY (IF EXISTS)? fam
+  *           | REFRESH ROLLUP fam BUCKET string AS ident (INTO fam)?
+  *           | DESCRIBE fam | SHOW FAMILIES (IN ident)? | SHOW PARTITIONS fam
+  *           | EXPLAIN (FORMATTED|EXTENDED|CODEGEN|COST|SIMPLE)? top
+  *           | FUNNEL ident ('->' ident)* BY ident (WITHIN string)? FROM fam
+  *           | RETENTION BY ident (MAX int DAYS)? FROM fam
+  *           | OUTLIERS ident (K num)? FROM fam
+  *             -- a statement keyword is one only in the leading position
+  * top      := (WITH ident AS '(' stmt ')' (',' …)*)? stmt
+  * stmt     := query ((UNION | INTERSECT | EXCEPT) ALL? query)*
+  * fam      := ident '.' ident
+  * when     := WHEN MATCHED (AND or)? THEN (UPDATE | DELETE)
+  *           | WHEN NOT MATCHED THEN INSERT
+  *           | WHEN NOT MATCHED BY SOURCE (AND or)? THEN (DELETE | UPDATE SET assigns)
+  * assigns  := name '=' add (',' name '=' add)*   -- name: series or series.attr
   * query    := SELECT hints? (DISTINCT (ON '(' names ')')?)? items
   *             FROM src (WHERE or)?
   *             (GROUP BY (ALL | grp) (FILL '(' (NULL|PREVIOUS|LINEAR|num) ')')?)?
@@ -289,11 +310,53 @@ object Parser {
       "set-operation compound; parse with parseStmt")
   }
 
-  /** Parse a statement: a single SELECT or a UNION/INTERSECT/EXCEPT
+  /** Parse a query: a single SELECT or a UNION/INTERSECT/EXCEPT
     * compound. */
   def parseStmt(sql: String): QueryStmt = new P(tokenize(sql)).stmtTop()
 
-  private final class P(toks: Vector[Tok]) {
+  /** Parse any [[Ast.Statement]]: a query, or the statement its leading
+    * keyword names. A statement whose frame — the keywords and names
+    * around its embedded queries and expressions — does not fit refuses
+    * with a [[Compiler.CompileException]] naming the accepted form
+    * ([[usage]]); a malformed embedded query or expression is a
+    * [[ParseException]]. `checkMerge` runs on a MERGE's WHEN clauses
+    * before its USING query is parsed, so what it throws comes first
+    * even when the source query is malformed too.
+    */
+  def parseStatement(sql: String,
+      checkMerge: Seq[MergeClause] => Unit = _ => ()): Statement =
+    new P(tokenize(sql), checkMerge).statementTop()
+
+  /** The accepted form of each non-query statement, by leading keyword. */
+  private[boostql] val usage: Map[String, String] = Map(
+    "insert" -> "INSERT must be 'INSERT INTO domain.family SELECT …'",
+    "upsert" -> "UPSERT must be 'UPSERT INTO domain.family SELECT …'",
+    "merge" -> ("MERGE takes 'MERGE INTO domain.family USING (<select>) " +
+      "WHEN MATCHED [AND <cond>] THEN UPDATE|DELETE … " +
+      "[WHEN NOT MATCHED THEN INSERT]'"),
+    "delete" -> ("DELETE takes exactly 'DELETE FROM domain.family WHERE " +
+      "<predicate>' — no joins, grouping, ordering or paging"),
+    "update" -> ("UPDATE takes exactly 'UPDATE domain.family SET " +
+      "<target> = <expr>[, …] WHERE <predicate>' — no joins, grouping, " +
+      "ordering or paging"),
+    "create" -> ("CREATE FAMILY takes 'CREATE [OR REPLACE] FAMILY " +
+      "domain.family AS SELECT …'"),
+    "drop" -> "DROP FAMILY takes 'DROP FAMILY [IF EXISTS] domain.family'",
+    "refresh" -> ("REFRESH ROLLUP takes 'REFRESH ROLLUP domain.family " +
+      "BUCKET '<interval>' AS <label> [INTO domain.family2]'"),
+    "describe" -> "DESCRIBE takes exactly 'DESCRIBE domain.family'",
+    "show" -> ("SHOW takes exactly 'SHOW FAMILIES [IN domain]' or " +
+      "'SHOW PARTITIONS domain.family'"),
+    "explain" -> ("EXPLAIN takes 'EXPLAIN [FORMATTED|EXTENDED|CODEGEN|" +
+      "COST|SIMPLE] SELECT …'"),
+    "funnel" -> ("FUNNEL takes 'FUNNEL s1 -> s2 [-> …] BY <attr> " +
+      "[WITHIN '<interval>'] FROM domain.family'"),
+    "retention" -> ("RETENTION takes 'RETENTION BY <attr> [MAX <n> DAYS] " +
+      "FROM domain.family'"),
+    "outliers" -> "OUTLIERS takes 'OUTLIERS <series> [K <k>] FROM domain.family'")
+
+  private final class P(toks: Vector[Tok],
+      checkMerge: Seq[MergeClause] => Unit = _ => ()) {
     private var pos = 0
     // recursion guard: the recursive-descent productions self-nest
     // through parens / NOT / unary minus, so adversarially deep input
@@ -357,6 +420,240 @@ object Parser {
     private var cteEnv: Map[String, QueryStmt] = Map.empty
 
     def stmtTop(): QueryStmt = {
+      val st = top()
+      if (peek != TEnd) throw ParseException(s"trailing input: $peek")
+      st
+    }
+
+    /** The accepted form of the statement being parsed; its frame errors
+      * refuse with it. */
+    private var form = ""
+    private def refuse(msg: String = form): Nothing =
+      throw Compiler.CompileException(msg)
+    private def frameKw(s: String): Unit = if (!kw(s)) refuse()
+    private def frameIdent(msg: String = form): String = peek match {
+      case TIdent(s) => pos += 1; s
+      case TQuoted(s) => pos += 1; s
+      case _ => refuse(msg)
+    }
+    private def frameStr(): String = peek match {
+      case TStr(s) => pos += 1; s
+      case _ => refuse()
+    }
+    private def fam(): FamilyRef = {
+      val dom = dirName()
+      if (!sym(".")) refuse()
+      FamilyRef(dom, dirName())
+    }
+    /** A domain, family or rollup name. Each names a directory under the
+      * warehouse root, so quoted or not it must be `\w+`: `..`, `a/b`
+      * or `.x` would reach outside the family's own directory. */
+    private def dirName(): String = frameIdent() match {
+      case s if s.matches("\\w+") => s
+      case s => refuse(s"'$s' is not a valid name — domain, family and " +
+        "rollup names hold only letters, digits and '_'")
+    }
+    /** A numeric statement literal ('OUTLIERS … K 3', 'RETENTION … MAX
+      * 30'); a malformed or non-finite one names the literal. */
+    private def frameNum[T](what: String, f: String => T): T = peek match {
+      case TNum(s) =>
+        pos += 1
+        scala.util.Try(f(s)).toOption.filter {
+          case d: Double => java.lang.Double.isFinite(d)
+          case _ => true
+        }.getOrElse(refuse(s"malformed $what literal '$s'"))
+      case _ => refuse()
+    }
+
+    def statementTop(): Statement = {
+      val verb = peek match {
+        case TIdent(id) => id.toLowerCase
+        case _ => ""
+      }
+      if (!usage.contains(verb)) return stmtTop()
+      form = usage(verb)
+      pos += 1
+      val st: Statement = verb match {
+        case "insert" => frameKw("into"); Insert(fam(), top())
+        case "upsert" => frameKw("into"); Upsert(fam(), top())
+        case "merge" => merge()
+        case "delete" =>
+          frameKw("from")
+          val t = fam()
+          if (peek == TEnd) refuse(
+            "DELETE FROM domain.family needs a WHERE predicate — deleting " +
+              "a whole family is an operational drop, not a query; use " +
+              "retention (\"WHERE ts < DATE 'YYYY-MM-DD'\", metadata-only " +
+              "partition drops) or a row predicate (copy-on-write rewrite " +
+              "of the affected date partitions)")
+          frameKw("where")
+          Delete(t, orExpr())
+        case "update" =>
+          val t = fam()
+          frameKw("set")
+          val set = assigns("UPDATE")
+          frameKw("where")
+          Update(t, set, orExpr())
+        case "create" =>
+          val orReplace = kw("or")
+          if (orReplace) frameKw("replace")
+          frameKw("family")
+          val t = fam()
+          frameKw("as")
+          CreateFamily(t, orReplace, top())
+        case "drop" =>
+          frameKw("family")
+          val ifExists = kwAt(pos, "if") && kwAt(pos + 1, "exists")
+          if (ifExists) pos += 2
+          DropFamily(fam(), ifExists)
+        case "refresh" =>
+          frameKw("rollup")
+          val src = fam()
+          frameKw("bucket")
+          val width = frameStr()
+          frameKw("as")
+          val label = dirName()
+          RefreshRollup(src, width, label, if (kw("into")) Some(fam()) else None)
+        case "describe" => Describe(fam())
+        case "show" =>
+          if (kw("families"))
+            ShowFamilies(if (kw("in")) Some(dirName()) else None)
+          else { frameKw("partitions"); ShowPartitions(fam()) }
+        case "explain" =>
+          val modes = Set("formatted", "extended", "codegen", "cost", "simple")
+          val mode = peek match {
+            case TIdent(m) if modes(m.toLowerCase) => pos += 1; m.toLowerCase
+            case _ => "formatted"
+          }
+          Explain(mode, top())
+        case "funnel" =>
+          val stepForm = "FUNNEL steps must be series names separated by '->'"
+          val steps = Seq.newBuilder[String] += frameIdent(stepForm)
+          while (sym("-")) {
+            if (!sym(">")) refuse(stepForm)
+            steps += frameIdent(stepForm)
+          }
+          frameKw("by")
+          val by = frameIdent()
+          val within = if (kw("within")) Some(frameStr()) else None
+          frameKw("from")
+          Funnel(steps.result(), by, within, fam())
+        case "retention" =>
+          frameKw("by")
+          val by = frameIdent()
+          val maxDays =
+            if (!kw("max")) None
+            else { val n = frameNum("RETENTION MAX", _.toInt); frameKw("days"); Some(n) }
+          frameKw("from")
+          Retention(by, maxDays, fam())
+        case "outliers" =>
+          val series = frameIdent()
+          val k = if (kw("k")) Some(frameNum("OUTLIERS K", _.toDouble)) else None
+          frameKw("from")
+          Outliers(series, k, fam())
+      }
+      if (peek != TEnd) refuse()
+      st
+    }
+
+    /** `MERGE INTO fam USING ( top ) [AS src] when+`. The WHEN clauses
+      * are parsed and checked first (see [[Parser.parseStatement]]),
+      * then the USING query. */
+    private def merge(): Merge = {
+      frameKw("into")
+      val t = fam()
+      frameKw("using")
+      if (peek != TSym("(")) refuse()
+      val open = pos
+      // the USING query ends at the matching ')'
+      var depth = 0
+      val close = toks.indexWhere({
+        case TSym("(") => depth += 1; false
+        case TSym(")") => depth -= 1; depth == 0
+        case _ => false
+      }, pos)
+      if (close < 0) refuse(
+        "MERGE USING (<select>) is missing its closing parenthesis")
+      pos = close + 1
+      if (kw("as")) frameKw("src")
+      if (!peekIsKw("when")) refuse(
+        "MERGE needs at least one WHEN clause after USING (<select>)")
+      val clauses = Seq.newBuilder[MergeClause]
+      while (kw("when")) clauses += mergeClause()
+      checkMerge(clauses.result())
+      val end = pos
+      pos = open + 1
+      val using = top()
+      if (pos != close) throw ParseException(s"expected ')', got $peek")
+      pos = end
+      Merge(t, using, clauses.result())
+    }
+
+    /** One WHEN clause of MERGE, after its WHEN. */
+    private def mergeClause(): MergeClause = {
+      def malformed(): Nothing = refuse(
+        s"malformed MERGE clause at $peek — expected " +
+          "WHEN MATCHED [AND <cond>] THEN UPDATE|DELETE, " +
+          "WHEN NOT MATCHED THEN INSERT or " +
+          "WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE | " +
+          "UPDATE SET <target> = <expr>[, …]")
+      def cond(): Option[BExpr] = if (kw("and")) Some(orExpr()) else None
+      def thenKw(): Unit = if (!kw("then")) malformed()
+      val clause =
+        if (kw("matched")) {
+          val c = cond()
+          thenKw()
+          if (kw("update")) WhenMatched(c, "update")
+          else if (kw("delete")) WhenMatched(c, "delete")
+          else malformed()
+        } else if (!(kw("not") && kw("matched"))) malformed()
+        else if (!kw("by")) {
+          thenKw()
+          if (!kw("insert")) malformed()
+          WhenNotMatched
+        } else {
+          // WHEN NOT MATCHED BY SOURCE — the MIRROR-SYNC clauses over
+          // target rows whose key is absent from the batch: no source
+          // row exists, so UPDATE spells its SET and INSERT is void
+          if (!kw("source")) malformed()
+          val c = cond()
+          thenKw()
+          if (kw("delete")) WhenNotMatchedBySource(c, Nil)
+          else if (kw("update")) {
+            if (!kw("set")) refuse(
+              "WHEN NOT MATCHED BY SOURCE THEN UPDATE needs SET " +
+                "assignments — there is no source row to replace with " +
+                "for an absent key; spell the target-side rewrite as " +
+                "UPDATE SET <target> = <expr>[, …]")
+            WhenNotMatchedBySource(c, assigns("MERGE by-source SET"))
+          } else if (kw("insert")) refuse(
+            "WHEN NOT MATCHED BY SOURCE THEN INSERT is contradictory — " +
+              "the clause addresses rows already present in the target")
+          else malformed()
+        }
+      if (peek != TEnd && !peekIsKw("when")) malformed()
+      clause
+    }
+
+    /** `assigns` — the SET list shared by UPDATE and MERGE's by-source
+      * UPDATE (`what` names the clause in refusals). */
+    private def assigns(what: String): Seq[Assign] = {
+      val targetForm = s"$what target must be a series name (sets its " +
+        "value) or series.attribute"
+      val b = Seq.newBuilder[Assign]
+      do {
+        val series = frameIdent(targetForm)
+        val attr = if (sym(".")) Some(frameIdent(targetForm)) else None
+        if (!sym("=")) refuse("malformed SET assignment " +
+          s"'${(series +: attr.toSeq).mkString(".")}' — expected " +
+          "<target> = <expression>")
+        b += Assign(series, attr, addOperand())
+      } while (sym(","))
+      b.result()
+    }
+
+    /** `top` — a query with its optional WITH bindings. */
+    private def top(): QueryStmt = {
       if (kw("with")) {
         var more = true
         while (more) {
@@ -371,11 +668,7 @@ object Parser {
           more = sym(",")
         }
       }
-      val st = stmt()
-      peek match {
-        case TEnd => st
-        case t => throw ParseException(s"trailing input: $t")
-      }
+      stmt()
     }
 
     /** `stmt := term ((UNION ALL? | EXCEPT) term)*`,
@@ -503,11 +796,8 @@ object Parser {
           }
           // `GROUP BY GROUPING SETS (` — contextual like ROLLUP/CUBE: a
           // series named `grouping` still groups as a plain key
-          else if (peekIsKw("grouping") && (pos + 1) < toks.length &&
-              (toks(pos + 1) match {
-                case TIdent(id) => id.equalsIgnoreCase("sets")
-                case _ => false
-              }) && toks(pos + 2) == TSym("(")) {
+          else if (peekIsKw("grouping") && kwAt(pos + 1, "sets") &&
+              toks(pos + 2) == TSym("(")) {
             pos += 2; expectSym("(")
             val sets = groupingSetList(items)
             expectSym(")")
@@ -564,15 +854,11 @@ object Parser {
       // named `window` is unaffected.
       val wins: Map[String, (Seq[RawName],
           Seq[(RawName, Boolean, Option[Boolean])], Option[WFrame])] =
-        if (peekIsKw("window") && (pos + 1) < toks.length &&
-            (toks(pos + 1) match {
+        if (peekIsKw("window") && (toks(pos + 1) match {
               case TIdent(id) => !keywords(id.toLowerCase)
               case _: TQuoted => true
               case _ => false
-            }) && (pos + 2) < toks.length && (toks(pos + 2) match {
-              case TIdent(id) => id.equalsIgnoreCase("as")
-              case _ => false
-            })) {
+            }) && kwAt(pos + 2, "as")) {
           pos += 1
           val b = scala.collection.mutable.LinkedHashMap.empty[String,
             (Seq[RawName], Seq[(RawName, Boolean, Option[Boolean])],
@@ -731,10 +1017,12 @@ object Parser {
       b.result()
     }
 
-    private def peekIsKw(s: String): Boolean = peek match {
-      case TIdent(id) => id.equalsIgnoreCase(s)
-      case _ => false
-    }
+    private def peekIsKw(s: String): Boolean = kwAt(pos, s)
+    private def kwAt(i: Int, s: String): Boolean = i < toks.length &&
+      (toks(i) match {
+        case TIdent(id) => id.equalsIgnoreCase(s)
+        case _ => false
+      })
 
     /** True when an expression can serve as a GROUP BY ALL key: it
       * contains no aggregate, window, or scalar-subquery call anywhere.
@@ -870,12 +1158,8 @@ object Parser {
       * sorts as a key).
       */
     private def nullsOrder(): Option[Boolean] =
-      if (peekIsKw("nulls") && (pos + 1) < toks.length &&
-          (toks(pos + 1) match {
-            case TIdent(id) =>
-              id.equalsIgnoreCase("first") || id.equalsIgnoreCase("last")
-            case _ => false
-          })) {
+      if (peekIsKw("nulls") &&
+          (kwAt(pos + 1, "first") || kwAt(pos + 1, "last"))) {
         pos += 1
         Some(ident().equalsIgnoreCase("first"))
       } else None
@@ -949,11 +1233,8 @@ object Parser {
       // `FROM dom.f WINDOW w AS (…)` would eat WINDOW as the alias
       case TIdent(id) if id.equalsIgnoreCase("window") &&
           (toks(pos + 1) match {
-            case TIdent(n) => !keywords.contains(n.toLowerCase) &&
-              (toks(pos + 2) match {
-                case TIdent(a) => a.equalsIgnoreCase("as")
-                case _ => false
-              })
+            case TIdent(n) =>
+              !keywords.contains(n.toLowerCase) && kwAt(pos + 2, "as")
             case _ => false
           }) => None
       case TIdent(id) if !keywords.contains(id.toLowerCase) => pos += 1; Some(id)

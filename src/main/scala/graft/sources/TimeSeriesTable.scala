@@ -1646,45 +1646,6 @@ object TimeSeriesTable {
     actions.toSeq
   }
 
-  /** Bucketed layout variant (SURVEY §7.4.4's open layout question):
-    * date partitions × series-hash buckets, rows sorted by (series, ts)
-    * within each bucket file. Spark's bucketing metadata lives in the
-    * catalog, so this registers an external table (the path still holds
-    * plain parquet). What it buys at 100 TB over the sorted layout:
-    *  - `series = 'x'` prunes to 1/nBuckets of the files per date
-    *    partition (bucket pruning) BEFORE row-group stats apply;
-    *  - series-keyed aggregations and self-joins read pre-partitioned
-    *    data — no exchange, the shuffle the sorted layout always pays.
-    * Cost: writes shuffle into nBuckets files per date partition, and
-    * readers must go through the catalog table, not the path.
-    * Measured against the sorted layout by [[graft.LayoutBench]]
-    * (BENCH_layout.json): at 10x sf0.1 the exchange IS eliminated
-    * (plan-verified) but wall-time LOSES ~2-3x, because this corpus
-    * has only 5 distinct series — scan parallelism collapses to the
-    * non-empty bucket count. Bucketing pays when series cardinality
-    * >> nBuckets and the downstream exchange dominates the scan, i.e.
-    * at the 100 TB / thousands-of-series end; the sorted layout stays
-    * the default.
-    */
-  def appendBucketed(df: DataFrame, root: String, domain: String,
-      family: String, nBuckets: Int = 32): String = {
-    val table = s"graft_${domain}_${family}_bucketed"
-    df.withColumn("dt", to_date(col("ts")))
-      .write.mode("append")
-      .option("path", s"$root/$domain/${family}_bucketed")
-      .partitionBy("dt")
-      .bucketBy(nBuckets, "series")
-      .sortBy("series", "ts")
-      .format("parquet")
-      .saveAsTable(table)
-    table
-  }
-
-  /** Open a bucketed family by its catalog name (as returned by
-    * [[appendBucketed]]). */
-  def openBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
-
   /** Time-range scan `[start, end)` — the FetchSeries analogue
     * (executor.go:426-478). The `ts` predicate pushes into parquet
     * row-group stats; Spark cannot infer `dt` bounds from a `ts`

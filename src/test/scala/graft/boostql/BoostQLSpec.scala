@@ -436,6 +436,109 @@ class BoostQLSpec extends SparkSpec {
       .getMessage.contains("sqlDelete"))
   }
 
+  test("UPDATE: ' where ' inside a WHERE string literal stays in the " +
+      "literal") {
+    import org.apache.spark.sql.functions.{col => c, element_at => ea}
+    val root = java.nio.file.Files.createTempDirectory("graft-updlit").toString
+    TimeSeriesTable.append(fam, root, "dom", "events")
+    def users(u: String) = TimeSeriesTable.open(spark, root, "dom", "events")
+      .filter(c("series") === "click" && ea(c("attributes"), "user") === u)
+      .count()
+    val threes = users("3")
+    assert(threes > 0)
+    BoostQL.sqlUpdate("UPDATE dom.events SET click.user = 'a where b' " +
+      "WHERE click.user = '3'", spark, root)
+    assert(users("a where b") == threes)
+    val affected = BoostQL.sqlUpdate("UPDATE dom.events SET click.user = " +
+      "'x' WHERE click.user = 'a where b'", spark, root)
+    assert(affected.nonEmpty)
+    assert(users("x") == threes && users("a where b") == 0L)
+  }
+
+  test("backtick-quoted names in statement heads and SET targets act " +
+      "like their unquoted twins") {
+    def contents(root: String) =
+      TimeSeriesTable.open(spark, root, "dom", "events")
+        .selectExpr("series", "ts", "value", "attributes['user'] AS u")
+        .collect().map(_.toString).sorted.toSeq
+    // each twin runs on its own fresh copy of the family
+    def run(stmt: String, verb: (String, String) => Seq[String]) = {
+      val root = java.nio.file.Files.createTempDirectory("graft-quoted").toString
+      TimeSeriesTable.append(fam, root, "dom", "events")
+      val affected = verb(stmt, root)
+      (affected, contents(root))
+    }
+    def twins(quoted: String, plain: String,
+        verb: (String, String) => Seq[String]): Unit = {
+      val (qa, qc) = run(quoted, verb)
+      val (pa, pc) = run(plain, verb)
+      assert(qa.nonEmpty && qa == pa, s"$quoted: $qa vs $pa")
+      assert(qc == pc, quoted)
+    }
+    val update = (s: String, r: String) => BoostQL.sqlUpdate(s, spark, r)
+    val delete = (s: String, r: String) => BoostQL.sqlDelete(s, spark, r)
+    twins("UPDATE dom.events SET click.`user` = 'x' WHERE click.user = '3'",
+      "UPDATE dom.events SET click.user = 'x' WHERE click.user = '3'", update)
+    twins("UPDATE `dom`.`events` SET `click` = 0.0 WHERE click > 100.0",
+      "UPDATE dom.events SET click = 0.0 WHERE click > 100.0", update)
+    twins("DELETE FROM `dom`.events WHERE click > 100.0",
+      "DELETE FROM dom.events WHERE click > 100.0", delete)
+    twins("DELETE FROM dom.`events` WHERE `ts` < DATE '2024-01-10'",
+      "DELETE FROM dom.events WHERE ts < DATE '2024-01-10'", delete)
+    // the read statements resolve the same family and series
+    def rows(q: String) = BoostQL.sql(q, (_: (String, String)) => fam)
+      .collect().map(_.toString).sorted.toSeq
+    assert(rows("DESCRIBE `dom`.`events`") == rows("DESCRIBE dom.events"))
+    assert(rows("OUTLIERS `purchase` K 3.0 FROM `dom`.events") ==
+      rows("OUTLIERS purchase K 3.0 FROM dom.events"))
+  }
+
+  test("domain and family names that are not plain directory names " +
+      "refuse and touch nothing") {
+    val base = java.nio.file.Files.createTempDirectory("graft-names")
+    val root = base.resolve("wh").toString
+    TimeSeriesTable.append(fam, root, "dom", "events")
+    // a directory beside the warehouse that `..` would reach
+    val victim = java.nio.file.Files.createDirectories(
+      base.resolve("victim").resolve("events"))
+    java.nio.file.Files.write(victim.resolve("keep.txt"), Array[Byte](1))
+    def snapshot() = {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(base)
+      try walk.iterator().asScala.map(p => (base.relativize(p).toString,
+        java.nio.file.Files.getLastModifiedTime(p).toMillis)).toSeq.sorted
+      finally walk.close()
+    }
+    val before = snapshot()
+    val families = (_: (String, String)) => fam
+    val q = "SELECT ts, max(click) AS m FROM dom.events GROUP BY ts"
+    // every path these would name stays inside `base`
+    for (name <- Seq("`..`.`victim`", "dom.`..`", "dom.`a/b`", "dom.`.x`",
+        "`.x`.events")) {
+      intercept[Compiler.CompileException](BoostQL.sqlDropFamily(
+        s"DROP FAMILY IF EXISTS $name", spark, root))
+      intercept[Compiler.CompileException](BoostQL.sqlCreateFamily(
+        s"CREATE OR REPLACE FAMILY $name AS $q", families, root))
+      intercept[Compiler.CompileException](BoostQL.sqlInsert(
+        s"INSERT INTO $name $q", families, root))
+    }
+    assert(snapshot() == before)
+  }
+
+  test("DELETE: only the retention form takes the metadata-only expire " +
+      "route") {
+    def cutoff(stmt: String) = BoostQL.RetentionCutoff.unapply(
+      Parser.parseStatement(stmt).asInstanceOf[Delete].where)
+    assert(cutoff("DELETE FROM dom.events WHERE ts < DATE '2024-01-10'") ==
+      Some(java.sql.Date.valueOf("2024-01-10")))
+    assert(cutoff("delete from `dom`.events where `TS` < date '2024-01-10'")
+      .isDefined)
+    for (row <- Seq("ts <= DATE '2024-01-10'",
+        "ts < TIMESTAMP '2024-01-10 12:00:00'",
+        "ts < DATE '2024-01-10' AND click > 1.0", "click < 2.0"))
+      assert(cutoff(s"DELETE FROM dom.events WHERE $row").isEmpty, row)
+  }
+
   test("INSERT INTO: SQL ingest round-trips; shape mismatches refuse") {
     import org.apache.spark.sql.functions._
     val root = java.nio.file.Files.createTempDirectory("graft-insert-spec").toString

@@ -2,7 +2,7 @@ package graft.boostql
 
 import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 
 import graft.SparkSpec
 
@@ -115,5 +115,113 @@ object CompileFuzzProps extends Properties("boostql.compilefuzz") {
             String.valueOf(e.getMessage).takeWhile(_ != '\n').take(200))
           false
       }
+    }
+
+  // ---- parse-only fuzz of the write, DDL and utility statements ----
+
+  /** String literals that hold the words and separators the statement
+    * grammar splits on. */
+  private val literal: Gen[String] =
+    Gen.oneOf("'h1'", "'a where b'", "'x when y'", "'p, q'", "'WHEN MATCHED'")
+  private val predicate: Gen[String] = literal.flatMap(l => Gen.oneOf(
+    s"cpu.host = $l", s"cpu > 5.0 AND mem.host != $l",
+    s"cpu.host IN ($l, 'h2')", s"NOT (cpu.host LIKE $l)",
+    "ts < DATE '2024-01-02'"))
+  private val query: Gen[String] = literal.flatMap(l => Gen.oneOf(
+    s"SELECT ts, cpu AS c FROM dom.g WHERE cpu.host = $l",
+    "SELECT ts, max(cpu) AS c, cpu.host AS h FROM dom.g GROUP BY ts, cpu.host",
+    "WITH t AS (SELECT ts, cpu AS c FROM dom.g) SELECT ts, c FROM t"))
+  private val assigns: Gen[String] = literal.flatMap(l => Gen.oneOf(
+    s"cpu.host = $l", "cpu = cpu * 2.0", "`cpu`.`host` = NULL",
+    s"mem.host = $l, mem = CASE WHEN mem > 1.0 THEN 1.0 ELSE mem END"))
+  private val mergeClause: Gen[String] = for {
+    l <- literal; p <- predicate; a <- assigns
+    c <- Gen.oneOf("WHEN MATCHED THEN UPDATE",
+      s"WHEN MATCHED AND src.host = $l THEN DELETE",
+      "WHEN NOT MATCHED THEN INSERT",
+      s"WHEN NOT MATCHED BY SOURCE AND $p THEN DELETE",
+      s"WHEN NOT MATCHED BY SOURCE THEN UPDATE SET $a")
+  } yield c
+
+  private val statement: Gen[String] = for {
+    q <- query; p <- predicate; a <- assigns
+    cs <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, mergeClause))
+    s <- Gen.oneOf(s"INSERT INTO dom.f $q", s"UPSERT INTO dom.f $q",
+      s"MERGE INTO dom.f USING ($q) AS src ${cs.mkString(" ")}",
+      s"DELETE FROM dom.f WHERE $p", s"UPDATE dom.f SET $a WHERE $p",
+      s"CREATE OR REPLACE FAMILY dom.f AS $q", "DROP FAMILY IF EXISTS dom.f",
+      "REFRESH ROLLUP dom.f BUCKET '1 hour' AS h INTO dom.g",
+      "DESCRIBE dom.f", "SHOW FAMILIES IN dom", "SHOW PARTITIONS dom.f",
+      s"EXPLAIN EXTENDED $q",
+      "FUNNEL a -> b -> c BY user WITHIN '1 hour' FROM dom.f",
+      "RETENTION BY user MAX 5 DAYS FROM dom.f", "OUTLIERS cpu K 2.5 FROM dom.f")
+  } yield s
+
+  /** A statement and how it was mutated: "none", "trailing" (paging or
+    * grouping after a DELETE/UPDATE predicate), "badname" (a target
+    * family name that is not a plain directory name), "dropped" (one
+    * keyword removed) or "truncated". */
+  private val mutated: Gen[(String, String)] = statement.flatMap { s =>
+    val words = s.split(" ").toVector
+    val keywords = words.indices.filter(i => words(i).matches("[A-Z]+"))
+    val trailing =
+      if (!s.startsWith("DELETE") && !s.startsWith("UPDATE")) Gen.const((s, "none"))
+      else Gen.oneOf(" GROUP BY cpu.host", " ORDER BY cpu", " LIMIT 5",
+        " ORDER BY cpu LIMIT 5 OFFSET 2").map(t => (s + t, "trailing"))
+    val badName =
+      if (!s.contains(" dom.f")) Gen.const((s, "none"))
+      else Gen.oneOf("`..`", "`a/b`", "`.x`", "`f x`").map(n =>
+        (s.replaceFirst(" dom\\.f", s" dom.$n"), "badname"))
+    Gen.frequency(
+      2 -> Gen.const((s, "none")),
+      2 -> trailing,
+      1 -> badName,
+      2 -> Gen.oneOf(keywords).map(i =>
+        (words.patch(i, Nil, 1).mkString(" "), "dropped")),
+      2 -> Gen.choose(1, words.length - 1).map(i =>
+        (words.take(i).mkString(" "), "truncated")))
+  }
+
+  /** The statement kind each leading keyword names. */
+  private def kindOf(lead: String): Option[Ast.Statement => Boolean] =
+    lead match {
+      case "select" | "with" => Some(_.isInstanceOf[Ast.QueryStmt])
+      case "insert" => Some(_.isInstanceOf[Ast.Insert])
+      case "upsert" => Some(_.isInstanceOf[Ast.Upsert])
+      case "merge" => Some(_.isInstanceOf[Ast.Merge])
+      case "delete" => Some(_.isInstanceOf[Ast.Delete])
+      case "update" => Some(_.isInstanceOf[Ast.Update])
+      case "create" => Some(_.isInstanceOf[Ast.CreateFamily])
+      case "drop" => Some(_.isInstanceOf[Ast.DropFamily])
+      case "refresh" => Some(_.isInstanceOf[Ast.RefreshRollup])
+      case "describe" => Some(_.isInstanceOf[Ast.Describe])
+      case "show" => Some(st => st.isInstanceOf[Ast.ShowFamilies] ||
+        st.isInstanceOf[Ast.ShowPartitions])
+      case "explain" => Some(_.isInstanceOf[Ast.Explain])
+      case "funnel" => Some(_.isInstanceOf[Ast.Funnel])
+      case "retention" => Some(_.isInstanceOf[Ast.Retention])
+      case "outliers" => Some(_.isInstanceOf[Ast.Outliers])
+      case _ => None
+    }
+
+  private val mustRefuse = Set("trailing", "badname")
+
+  property("statements parse to their leading keyword's kind or refuse " +
+      "with a dialect exception") =
+    // no shrinking: a shrunk string no longer matches its mutation label
+    forAllNoShrink(mutated) { case (stmt, how) =>
+      val lead = stmt.takeWhile(_ != ' ').toLowerCase
+      val ok = try {
+        val st = Parser.parseStatement(stmt)
+        !mustRefuse(how) && kindOf(lead).exists(_(st))
+      } catch {
+        case _: Parser.ParseException | _: Compiler.CompileException =>
+          how != "none"
+        case e: Throwable =>
+          println(s"FUZZLEAK ${e.getClass.getSimpleName} on: $stmt")
+          false
+      }
+      if (!ok) println(s"STATEMENT FUZZ ($how): $stmt")
+      ok
     }
 }

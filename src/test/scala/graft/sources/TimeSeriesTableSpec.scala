@@ -66,28 +66,6 @@ class TimeSeriesTableSpec extends SparkSpec {
     assert(scanned.count() == expected)
   }
 
-  test("bucketed layout round-trips and drops the series-agg exchange") {
-    val root = Files.createTempDirectory("graft-tst-bucket").toString
-    val fam = TimeSeriesTable.fromEvents(Tables.events(spark, sfDir))
-    val table = TimeSeriesTable.appendBucketed(fam, root, "dom", "events", nBuckets = 8)
-    val back = TimeSeriesTable.openBucketed(spark, table)
-    assert(back.count() == fam.count())
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy("series").agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).as("s"))
-        .orderBy("series").collect().toSeq
-    assert(sig(back) == sig(fam))
-    // the layout's point: a series-keyed aggregation reads bucketed
-    // (pre-partitioned) data and plans NO exchange, where the sorted
-    // layout always shuffles
-    val agg = back.groupBy("series").agg(count(lit(1)).as("n"))
-    agg.collect()
-    val plan = agg.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning(series"),
-      s"bucketed series agg should not shuffle:\n$plan")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-  }
-
   test("compact merges small files; expire drops whole date partitions") {
     import graft.tables.Tables
     val root = java.nio.file.Files.createTempDirectory("graft-maint").toString

@@ -188,8 +188,10 @@ object BoostQL {
     * Plain CREATE refuses when the family already exists (ANSI; an
     * accidental re-run must not double a corpus — that is INSERT's
     * contract, chosen explicitly); OR REPLACE stages the new rows
-    * FIRST, then swaps — a failed select never destroys the previous
-    * family. Returns the number of datapoints written.
+    * FIRST, then swaps through the whole-directory commit protocol
+    * ([[TimeSeriesTable.replaceFamily]]) — a failed select never
+    * destroys the previous family. Returns the number of datapoints
+    * written.
     */
   def sqlCreateFamily(stmt: String,
       families: ((String, String)) => DataFrame, root: String): Long = {
@@ -204,34 +206,11 @@ object BoostQL {
       s"family $dom.$fam already exists — CREATE OR REPLACE FAMILY " +
         "swaps it atomically, INSERT INTO appends to it")
     val rows = insertLong(df)
-    if (!exists) {
-      TimeSeriesTable.append(rows, root, dom, fam)
-      TimeSeriesTable.open(spark, root, dom, fam).count()
-    } else {
-      // replace: stage the full new family, then two-rename swap
-      // (the compact() shape) — the select runs BEFORE anything
-      // moves, so a failure leaves the old family untouched
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$root/$dom/.${fam}__ctas")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      TimeSeriesTable.append(rows, root, dom, s".${fam}__ctas")
-      val aside = new org.apache.hadoop.fs.Path(
-        s"$root/$dom/.${fam}__ctas_old")
-      if (fs.exists(aside)) fs.delete(aside, true)
-      if (!fs.rename(dir, aside)) throw new java.io.IOException(
-        s"CREATE OR REPLACE FAMILY: could not move $dir aside — " +
-          "family left untouched")
-      if (!fs.rename(tmp, dir)) {
-        fs.rename(aside, dir)
-        throw new java.io.IOException(
-          s"CREATE OR REPLACE FAMILY: swap rename failed — " +
-            "family restored")
-      }
-      fs.delete(aside, true)
-      // count from the LIVE path post-swap: the dot-prefixed
-      // staging dir is invisible to Spark's hidden-path filter
-      TimeSeriesTable.open(spark, root, dom, fam).count()
-    }
+    if (exists) TimeSeriesTable.replaceFamily(rows, root, dom, fam)
+    else TimeSeriesTable.append(rows, root, dom, fam)
+    // count from the LIVE path: the dot-prefixed staging dir is
+    // invisible to Spark's hidden-path filter
+    TimeSeriesTable.open(spark, root, dom, fam).count()
   }
 
   /** `DROP FAMILY [IF EXISTS] domain.family` — the operational drop the

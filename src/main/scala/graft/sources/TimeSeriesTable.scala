@@ -1,8 +1,10 @@
 package graft.sources
 
+import java.io.IOException
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,6 +38,10 @@ object TimeSeriesTable {
     StructField("tags", MapType(StringType, StringType), nullable = true),
     StructField("attributes", MapType(StringType, StringType), nullable = true)
   ))
+
+  /** [[schema]] plus the path-derived `dt` partition column. */
+  private val withDt: StructType =
+    schema.add(StructField("dt", DateType, nullable = true))
 
   /** Adapt the driver's `events` table to the series-family row shape
     * (FIXTURES.md §3): series=event_type, attributes=parsed props JSON,
@@ -105,7 +111,7 @@ object TimeSeriesTable {
   def openStream(spark: SparkSession, root: String, domain: String,
       family: String, maxFilesPerTrigger: Int = 64): DataFrame =
     spark.readStream
-      .schema(schema.add(StructField("dt", DateType, nullable = true)))
+      .schema(withDt)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(s"$root/$domain/$family")
 
@@ -133,7 +139,7 @@ object TimeSeriesTable {
     */
   def expire(spark: SparkSession, root: String, domain: String,
       family: String, olderThan: java.sql.Date): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/$domain/$family")
+    val p = new Path(s"$root/$domain/$family")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Seq.empty
     fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
@@ -238,14 +244,15 @@ object TimeSeriesTable {
     * to parquet readers). A date whose signature moved — new files
     * appended, a compaction's rewrite, a mutate verb's swap — is
     * re-aggregated from its files alone and SWAPPED into the derived
-    * family partition-atomically (two renames per date, aside
-    * recoverable via [[recover]]); a date that vanished from the
+    * family by the shared commit protocol ([[swapPartitions]], aside
+    * `.{target}__refresh_old`); a date that vanished from the
     * source (expire/retention) drops from the rollup; untouched dates'
     * derived files are never read, written, or moved. First refresh of
     * a missing derived family is simply "every date changed" — the
     * initial materialization and the maintenance path are one code
-    * path. The manifest writes LAST, so a crash anywhere re-runs as a
-    * larger-but-idempotent refresh.
+    * path. The manifest writes LAST (temp + rename), so a crash
+    * anywhere re-runs as a larger-but-idempotent refresh, and a
+    * manifest line that does not parse only rebuilds its date.
     *
     * Requires `bucketMicros` to divide a day: derived rows then land
     * on the same `dt` as their source rows, which is what makes the
@@ -267,99 +274,402 @@ object TimeSeriesTable {
       "label must be alphanumeric")
     val target = toFamily.getOrElse(s"${family}_$label")
     val srcDir = s"$root/$domain/$family"
-    val srcPath = new org.apache.hadoop.fs.Path(srcDir)
+    val srcPath = new Path(srcDir)
     val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tgtPath = new org.apache.hadoop.fs.Path(s"$root/$domain/$target")
-    def dtOf(p: String): Option[String] = p.split('/').collectFirst {
-      case seg if seg.startsWith("dt=") => seg.stripPrefix("dt=")
-    }
-    val statuses =
-      if (fs.exists(srcPath)) listDataStatus(fs, srcPath) else Seq.empty
+    val tgtPath = new Path(s"$root/$domain/$target")
+    val statuses = listDataStatus(fs, srcPath)
     val byDt = statuses.groupBy(st => dtOf(st.getPath.toString))
-    if (byDt.contains(None) && byDt(None).nonEmpty)
-      throw new java.io.IOException(
+    if (byDt.contains(None))
+      throw new IOException(
         s"refreshDownsample on $srcDir: data files exist OUTSIDE the " +
           "dt= partition layout — compact() the family first")
-    val sig: Map[String, String] = byDt.collect {
-      case (Some(d), sts) =>
-        // name + length + mtime: mtime catches a non-Spark writer that
-        // rewrites a file IN PLACE with the same name and byte length
-        // (Spark's own writers always mint fresh UUID names, but the
-        // signature shouldn't depend on that discipline)
-        val rendered = sts.map(st =>
-            st.getPath.getName + ":" + st.getLen + ":" +
-              st.getModificationTime).sorted.mkString("\n")
-        val md = java.security.MessageDigest.getInstance("MD5")
-        (d, md.digest(rendered.getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString)
-    }
-    val manifestPath = new org.apache.hadoop.fs.Path(tgtPath,
-      ".graft_refresh_manifest")
-    val old: Map[String, String] =
-      if (!fs.exists(manifestPath)) Map.empty
-      else {
-        val in = fs.open(manifestPath)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        text.linesIterator.filter(_.nonEmpty).map { line =>
-          val Array(d, s) = line.split('\t'); (d, s)
-        }.toMap
-      }
+    val sig: Map[String, String] =
+      byDt.collect { case (Some(d), sts) => d -> signature(sts) }
+    val manifestPath = new Path(tgtPath, ".graft_refresh_manifest")
+    // an unparsable line (a torn write) is skipped: its date rebuilds
+    val old: Map[String, String] = readManifest(fs, manifestPath) {
+      case Array(d, s) => Some(d -> s)
+      case _ => None
+    }.toMap
     val changed = sig.keySet.filter(d => !old.get(d).contains(sig(d)))
     val removed = old.keySet -- sig.keySet
     if (changed.isEmpty && removed.isEmpty) return (Seq.empty, Seq.empty)
+    val tmp = scratch(root, domain, target, Verb.Refresh.temp)
+    if (fs.exists(tmp)) fs.delete(tmp, true)
     if (changed.nonEmpty) {
-      val rebuildFiles = statuses.map(_.getPath.toString)
-        .filter(f => dtOf(f).exists(changed.contains))
+      val rebuildFiles = filesOn(statuses.map(_.getPath.toString), changed)
       val rows = rollupRows(
         spark.read.schema(schema).parquet(rebuildFiles: _*),
         bucketMicros, label)
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$root/$domain/.${target}__refreshing")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
       rows.withColumn("dt", to_date(col("ts")))
         .repartition(col("dt"))
         .sortWithinPartitions("series", "ts")
         .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
-      val asideRoot = new org.apache.hadoop.fs.Path(
-        s"$root/$domain/.${target}__refresh_old")
-      if (fs.exists(asideRoot)) fs.delete(asideRoot, true)
-      fs.mkdirs(asideRoot)
-      if (!fs.exists(tgtPath)) fs.mkdirs(tgtPath)
-      changed.toSeq.sorted.foreach { d =>
-        val live = new org.apache.hadoop.fs.Path(tgtPath, s"dt=$d")
-        val aside = new org.apache.hadoop.fs.Path(asideRoot, s"dt=$d")
-        val movedAside = fs.exists(live)
-        if (movedAside && !fs.rename(live, aside))
-          throw new java.io.IOException(
-            s"refresh swap failed for $target: could not move dt=$d " +
-              "aside — partition left untouched")
-        val rewritten = new org.apache.hadoop.fs.Path(tmp, s"dt=$d")
-        // a source date whose every row has a NULL value can roll up
-        // to nothing; absence of rewrite output then means an empty
-        // derived partition — the aside move above already cleared it
-        if (fs.exists(rewritten) && !fs.rename(rewritten, live)) {
-          // restore the aside inline (matching the mergeRows swap) so
-          // the derived partition isn't missing until recover() runs
-          if (movedAside) fs.rename(aside, live)
-          throw new java.io.IOException(
-            s"refresh swap failed for $target: rewrite rename of " +
-              s"dt=$d failed — derived partition restored")
-        }
-      }
-      fs.delete(asideRoot, true)
-      fs.delete(tmp, true)
     }
-    removed.toSeq.sorted.foreach { d =>
-      fs.delete(new org.apache.hadoop.fs.Path(tgtPath, s"dt=$d"), true)
-    }
+    // a removed date has no rewrite output, and neither has a source
+    // date whose every value is NULL: the swap leaves both empty
+    swapPartitions(fs, Verb.Refresh, root, domain, target, changed ++ removed)
     // manifest LAST: a crash above re-runs as a larger refresh
-    val outStream = fs.create(manifestPath, true)
-    try outStream.write(sig.toSeq.sorted
-      .map { case (d, s) => s"$d\t$s" }.mkString("\n").getBytes("UTF-8"))
-    finally outStream.close()
+    writeManifest(fs, manifestPath,
+      sig.toSeq.sorted.map { case (d, s) => s"$d\t$s" })
     (changed.toSeq.sorted.map(d => s"dt=$d"),
       removed.toSeq.sorted.map(d => s"dt=$d"))
+  }
+
+  /** Sum of the files' parquet-footer record counts — the authoritative
+    * per-file row count (what the writer committed), read from metadata
+    * only. Footers are fetched on a bounded thread pool: compaction
+    * targets are exactly the many-small-files directories, and a
+    * thousand sequential ~ms footer reads would add driver seconds for
+    * no reason (object stores amplify per-request latency further).
+    */
+  private def footerRowCount(spark: SparkSession, files: Seq[String]): Long = {
+    if (files.isEmpty) return 0L
+    val conf = spark.sparkContext.hadoopConfiguration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(16, files.length))
+    try {
+      import scala.jdk.CollectionConverters._
+      val tasks: java.util.List[java.util.concurrent.Callable[Long]] =
+        files.map[java.util.concurrent.Callable[Long]] { f => () =>
+          val in = org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromPath(new Path(f), conf)
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          try r.getRecordCount finally r.close()
+        }.asJava
+      pool.invokeAll(tasks).asScala.map(_.get()).sum
+    } finally pool.shutdown()
+  }
+
+  /** Recursive data-file listing, parallelized PER DIRECTORY: one
+    * listStatus per directory on a bounded pool, level by level. The
+    * sequential `fs.listFiles(path, true)` walk this replaces paid one
+    * round-trip per directory in series — ~30 s at 3,000 date
+    * partitions (CompactProbe), and worse against an object store
+    * where each LIST is a network call. Parallel per-prefix listing is
+    * the standard S3 idiom; on a local fs it just collapses the walk
+    * to near-zero. Skips the streaming-sink log (`_spark_metadata`)
+    * and counts only data files; a missing root lists as empty.
+    */
+  private def listDataFiles(fs: FileSystem, root: Path): Seq[String] =
+    listDataStatus(fs, root).map(_.getPath.toString)
+
+  private def listDataStatus(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    if (!fs.exists(root)) return Seq.empty
+    import scala.jdk.CollectionConverters._
+    val out = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    var dirs = Seq(root)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
+    try {
+      while (dirs.nonEmpty) {
+        val tasks: java.util.List[java.util.concurrent.Callable[
+            Array[FileStatus]]] =
+          dirs.map[java.util.concurrent.Callable[Array[FileStatus]]] {
+            d => () => fs.listStatus(d)
+          }.asJava
+        val level = pool.invokeAll(tasks).asScala.flatMap(_.get())
+        dirs = level.collect {
+          case st if st.isDirectory &&
+            st.getPath.getName != "_spark_metadata" => st.getPath
+        }.toSeq
+        out ++= level.collect {
+          case st if !st.isDirectory &&
+            st.getPath.getName.endsWith(".parquet") => st
+        }
+      }
+      out.toSeq
+    } finally pool.shutdown()
+  }
+
+  /** Read data files by EXPLICIT list ([[compact]]'s rationale) with
+    * the path-derived `dt` (`basePath` keeps it derivable). */
+  private def readFiles(spark: SparkSession, dir: String,
+      files: Seq[String]): DataFrame =
+    spark.read.schema(withDt).option("basePath", dir).parquet(files: _*)
+
+  /** The date of a `…/dt=YYYY-MM-DD/…` path; None outside the layout. */
+  private def dtOf(path: String): Option[String] =
+    path.split('/').collectFirst {
+      case seg if seg.startsWith("dt=") => seg.stripPrefix("dt=")
+    }
+
+  /** The files that sit in one of the `dates` partitions. */
+  private def filesOn(files: Seq[String], dates: Set[String]): Seq[String] =
+    files.filter(f => dtOf(f).exists(dates.contains))
+
+  /** A file set's signature, the sidecar manifests' invalidation key:
+    * MD5 of the sorted name:length:mtime list. mtime catches a
+    * non-Spark writer that rewrites a file IN PLACE with the same name
+    * and byte length. */
+  private def signature(sts: Seq[FileStatus]): String = {
+    val rendered = sts.map(st => s"${st.getPath.getName}:${st.getLen}:" +
+      st.getModificationTime).sorted.mkString("\n")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(rendered.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  /** Data files by partition name (`dt=…`); files outside the layout
+    * group under `(unpartitioned)` so an inventory never under-reports. */
+  private def byPartition(sts: Seq[FileStatus])
+      : Map[String, Seq[FileStatus]] =
+    sts.groupBy(st =>
+      dtOf(st.getPath.toString).fold("(unpartitioned)")("dt=" + _))
+
+  /** Read a sidecar manifest (a `.graft_*_manifest` dot-file inside the
+    * family): one tab-separated record per line, handed to `parse` with
+    * empty trailing fields kept. A line `parse` rejects (wrong arity, a
+    * bad number or encoding, a torn write) is skipped and a missing or
+    * unreadable manifest reads as empty — the cost is only a recompute. */
+  private def readManifest[T](fs: FileSystem, path: Path)(
+      parse: Array[String] => Option[T]): Seq[T] =
+    try {
+      if (!fs.exists(path)) Seq.empty
+      else {
+        val in = fs.open(path)
+        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+        text.linesIterator.flatMap { line =>
+          try parse(line.split("\t", -1))
+          catch { case _: RuntimeException => None }
+        }.toSeq
+      }
+    } catch { case _: IOException => Seq.empty }
+
+  /** Write a sidecar manifest through a temp sibling + rename: an
+    * in-place overwrite lets a concurrent reader see a torn final line
+    * whose truncated number still parses. Throws IOException on
+    * failure. */
+  private def writeManifest(fs: FileSystem, path: Path,
+      lines: Seq[String]): Unit = {
+    val tmp = new Path(path.getParent,
+      s"${path.getName}.tmp.${java.util.UUID.randomUUID}")
+    val out = fs.create(tmp, true)
+    try out.write(lines.mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    fs.delete(path, false)
+    if (!fs.rename(tmp, path)) {
+      fs.delete(tmp, false)
+      throw new IOException(s"could not write the manifest $path")
+    }
+  }
+
+  /** One verb in the commit protocol's name table ([[swapPartitions]]).
+    * Scratch directories sit beside the family as `.{family}__<suffix>`:
+    * `aside` receives what a swap moves out, `temp` the rewrite, `staged`
+    * any staged inputs. `name` words [[recover]]'s actions, `label`
+    * opens refusals; `wholeDir` marks a [[swapDir]] verb. */
+  private final case class Verb(name: String, label: String, aside: String,
+      temp: String, staged: Seq[String] = Nil, wholeDir: Boolean = false) {
+    def temps: Seq[String] = temp +: staged
+  }
+
+  private object Verb {
+    val Compact = Verb("compact", "compaction", "old", "compacting",
+      wholeDir = true)
+    val Ctas = Verb("ctas", "CREATE OR REPLACE FAMILY", "ctas_old", "ctas",
+      wholeDir = true)
+    val Delete = Verb("delete", "row-level DELETE", "delete_old", "deleting")
+    val Update = Verb("update", "row-level UPDATE", "update_old", "updating")
+    val Upsert = Verb("upsert", "UPSERT", "upsert_old", "upserting",
+      Seq("upsert_in"))
+    val Merge = Verb("merge", "MERGE", "merge_old", "merging",
+      Seq("merge_in", "merge_ins"))
+    val Refresh = Verb("refresh", "refresh", "refresh_old", "refreshing")
+    val all: Seq[Verb] = Seq(Compact, Ctas, Delete, Update, Upsert, Merge,
+      Refresh)
+  }
+
+  /** `.{family}__<suffix>` beside the family. */
+  private def scratch(root: String, domain: String, family: String,
+      suffix: String): Path =
+    new Path(s"$root/$domain/.${family}__$suffix")
+
+  /** Stage an incoming batch for [[upsertRows]] / [[mergeRows]]: an
+    * arbitrary plan is not re-read-stable, so the batch is written once
+    * to the verb's staging temp and read back by explicit file list (no
+    * hidden-path filter on the dot-prefixed temp). ONE pass then gives
+    * per-date counts and key stats; Σ per-date distinct == global
+    * distinct because duplicate keys share to_date(ts). Refuses NULL
+    * keys (a NULL ts lands in the null dt group) and duplicate keys
+    * (`dupReason`). Returns the staged frame and per-date counts, empty
+    * for an empty batch; the caller drops the staging temp. */
+  private def stage(spark: SparkSession, fs: FileSystem, verb: Verb,
+      root: String, domain: String, family: String, incoming: DataFrame,
+      dupReason: String): (DataFrame, Map[String, Long]) = {
+    val dir = s"$root/$domain/$family"
+    val staging = scratch(root, domain, family, verb.staged.head)
+    if (fs.exists(staging)) fs.delete(staging, true)
+    incoming.select(col("series").cast(StringType),
+        col("ts").cast(TimestampType), col("value").cast(DoubleType),
+        col("tags").cast(MapType(StringType, StringType)),
+        col("attributes").cast(MapType(StringType, StringType)))
+      .write.parquet(staging.toString)
+    val inc = spark.read.schema(schema)
+      .parquet(listDataFiles(fs, staging): _*)
+    val dtStats = inc.groupBy(to_date(col("ts")).as("dt"))
+      .agg(count(lit(1)).as("n"),
+        count(when(col("series").isNull, 1)).as("nulls"),
+        countDistinct(col("series"), col("ts")).as("dist"))
+      .collect()
+    if (dtStats.exists(r => r.isNullAt(0) || r.getLong(2) > 0L))
+      throw new IOException(
+        s"${verb.label} into $dir: incoming rows carry NULL (series, ts) " +
+          "keys — the merge key must be present on every row")
+    if (dtStats.map(_.getLong(3)).sum != dtStats.map(_.getLong(1)).sum)
+      throw new IOException(
+        s"${verb.label} into $dir: the incoming batch holds duplicate " +
+          s"(series, ts) keys — $dupReason")
+    (inc, dtStats.map(r => (r.getDate(0).toString, r.getLong(1))).toMap)
+  }
+
+  /** Per-date row counts of `rows` (path-derived `dt`); rows outside
+    * the dt= layout refuse, since the swap cannot place them. */
+  private def countByDate(rows: DataFrame, what: String): Map[String, Long] = {
+    val counts = rows.groupBy(col("dt")).count().collect()
+    if (counts.exists(_.isNullAt(0))) throw new IOException(
+      s"$what exist OUTSIDE the dt= partition layout — the per-partition " +
+        "copy-on-write swap needs the partitioned layout; compact() the " +
+        "family first")
+    counts.map(r => (r.getDate(0).toString, r.getLong(1))).toMap
+  }
+
+  /** Rewrite parallelism for the mutate verbs ([[deleteRows]] /
+    * [[updateRows]]): hash each date's rows into
+    * `shufflePartitions / |affected partitions|` series slices, so a
+    * takedown touching three dates of a TB-per-day family does NOT
+    * serialize each date into one task (a bare `repartition(dt)`
+    * would). Series-hash slicing keeps every series' rows CLUSTERED
+    * within one file per date — row-group series pruning survives the
+    * rewrite — and unlike `repartitionByRange` it needs no sampling
+    * pass over the input. With many affected dates the quotient hits 1
+    * and the shape degrades gracefully to the one-file-per-date
+    * [[append]] layout.
+    */
+  private def rewriteSlices(spark: SparkSession, affectedParts: Int): Int =
+    math.max(1, spark.sessionState.conf.numShufflePartitions /
+      math.max(1, affectedParts))
+
+  /** Write `rows` (family columns + `dt`) to the verb's rewrite temp in
+    * the [[append]] layout sliced per [[rewriteSlices]], VERIFY its
+    * footer row total against `expected` (the caller's `identity`; a
+    * mismatch drops the temp, source untouched), then [[swapPartitions]]. */
+  private def rewrite(spark: SparkSession, fs: FileSystem, verb: Verb,
+      root: String, domain: String, family: String, rows: DataFrame,
+      dates: Set[String], expected: Long, identity: String): Unit = {
+    val tmp = scratch(root, domain, family, verb.temp)
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    rows.repartition(col("dt"),
+        pmod(hash(col("series")), lit(rewriteSlices(spark, dates.size))))
+      .sortWithinPartitions("series", "ts")
+      .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
+    val n = footerRowCount(spark, listDataFiles(fs, tmp))
+    if (n != expected) {
+      fs.delete(tmp, true)
+      throw new IOException(
+        s"${verb.label} aborted for $root/$domain/$family: rewrite holds " +
+          s"$n rows, expected $expected ($identity) — a concurrent write " +
+          "or a rewrite fault; source left untouched")
+    }
+    swapPartitions(fs, verb, root, domain, family, dates)
+  }
+
+  /** THE COMMIT PROTOCOL of the copy-on-write verbs — [[deleteRows]],
+    * [[updateRows]], [[upsertRows]], [[mergeRows]] and
+    * [[refreshDownsample]] commit through this swap; [[compact]] and
+    * CREATE OR REPLACE FAMILY through its whole-directory form
+    * [[swapDir]].
+    *
+    * A verb first stages ([[stage]], for a batch that must be read
+    * twice), writes its rewrite of the affected dates to its temp
+    * `.{family}__<temp>` and verifies it against parquet footers
+    * ([[rewrite]]) — nothing live has moved yet, so an abort just drops
+    * the temp. This swap then commits date by date, in date order: the
+    * live `dt=D`, if it exists, moves under the verb's aside root
+    * `.{family}__<aside>/dt=D`; the rewrite's `dt=D`, if it exists,
+    * renames in (a date with no rewrite output ends up empty: every row
+    * deleted, or a rollup of nothing). A failed rename-in moves that
+    * date's original back and throws. Last, the aside root and the temp
+    * drop.
+    *
+    * Invariant: at every instant each affected date is untouched
+    * (live), mid-swap (its only copy under the aside root) or swapped
+    * (the rewrite live, the original under the aside root) — a date is
+    * never lost, though a reader can see some dates swapped and others
+    * not (multi-partition atomicity is not provided). [[recover]] reads
+    * the name table [[Verb]] — per verb its `name`, `aside` and
+    * `temps` — and applies the invariant: an aside date whose live
+    * date is missing renames back, an aside date whose live date exists
+    * was swapped and drops, every temp drops; a whole-directory aside
+    * restores when the live directory is missing and drops otherwise.
+    *
+    * Because a leftover aside root may hold the only copy of a date,
+    * the swap refuses to start over one: before moving anything it
+    * drops its own temp and throws, asking for [[recover]].
+    */
+  private def swapPartitions(fs: FileSystem, verb: Verb, root: String,
+      domain: String, family: String, dates: Set[String]): Unit = {
+    val live = new Path(s"$root/$domain/$family")
+    val tmp = scratch(root, domain, family, verb.temp)
+    val asideRoot = scratch(root, domain, family, verb.aside)
+    if (fs.exists(asideRoot)) {
+      fs.delete(tmp, true)
+      throw new IOException(
+        s"${verb.label} on $live refused: $asideRoot is left from an " +
+          "interrupted swap and may hold the only copy of a partition — " +
+          "run TimeSeriesTable.recover first; nothing was moved")
+    }
+    fs.mkdirs(asideRoot)
+    fs.mkdirs(live)
+    dates.toSeq.sorted.foreach { d =>
+      val livePart = new Path(live, s"dt=$d")
+      val aside = new Path(asideRoot, s"dt=$d")
+      val movedAside = fs.exists(livePart)
+      if (movedAside && !fs.rename(livePart, aside)) throw new IOException(
+        s"${verb.label} swap failed for $live: could not move dt=$d " +
+          "aside — partition left untouched")
+      val rewritten = new Path(tmp, s"dt=$d")
+      if (fs.exists(rewritten) && !fs.rename(rewritten, livePart)) {
+        if (movedAside) fs.rename(aside, livePart) // roll back
+        throw new IOException(
+          s"${verb.label} swap failed for $live: rewrite rename of " +
+            s"dt=$d failed — partition restored")
+      }
+    }
+    fs.delete(asideRoot, true)
+    fs.delete(tmp, true)
+  }
+
+  /** The whole-directory form of [[swapPartitions]]: the live family
+    * moves to its aside, the verified temp renames in (a failure moves
+    * it back), the aside drops. A leftover aside beside a live family is
+    * a completed swap's stale copy ([[recover]]'s rule) and drops first. */
+  private def swapDir(fs: FileSystem, verb: Verb, root: String,
+      domain: String, family: String): Unit = {
+    val live = new Path(s"$root/$domain/$family")
+    val tmp = scratch(root, domain, family, verb.temp)
+    val aside = scratch(root, domain, family, verb.aside)
+    if (fs.exists(aside)) fs.delete(aside, true)
+    if (!fs.rename(live, aside)) throw new IOException(
+      s"${verb.label} swap failed for $live: could not move the old " +
+        "directory aside — source left untouched")
+    if (!fs.rename(tmp, live)) {
+      fs.rename(aside, live) // roll back; source restored
+      throw new IOException(
+        s"${verb.label} swap failed for $live: rewrite rename failed — " +
+          "source restored")
+    }
+    fs.delete(aside, true)
+  }
+
+  /** CREATE OR REPLACE FAMILY: stage `rows` as a new family in the CTAS
+    * temp (a failing select moves nothing), then [[swapDir]] it in. */
+  private[graft] def replaceFamily(rows: DataFrame, root: String,
+      domain: String, family: String): Unit = {
+    val tmp = scratch(root, domain, family, Verb.Ctas.temp)
+    val fs = tmp.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    append(rows, root, domain, tmp.getName)
+    swapDir(fs, Verb.Ctas, root, domain, family)
   }
 
   /** COMPACTION: rewrite the family into few large (series, ts)-sorted
@@ -384,105 +694,27 @@ object TimeSeriesTable {
     *    carry over.
     *  - The rewrite is VERIFIED (row counts must match) before the
     *    source is touched; a mismatch aborts with the source intact.
-    *  - The swap is two renames: the old directory moves aside to
-    *    `.{family}__old`, the rewrite renames in, then the old copy is
-    *    dropped. The live path is missing only for the instant between
-    *    the renames, and any failure leaves the data recoverable (the
-    *    source either still in place or intact under `.{family}__old`).
+    *  - The swap is the whole-directory commit protocol ([[swapDir]],
+    *    aside `.{family}__old`): any failure leaves the data
+    *    recoverable, the source either still in place or intact under
+    *    the aside.
     * Returns (data files before, data files after).
     */
-  /** Sum of the files' parquet-footer record counts — the authoritative
-    * per-file row count (what the writer committed), read from metadata
-    * only. Footers are fetched on a bounded thread pool: compaction
-    * targets are exactly the many-small-files directories, and a
-    * thousand sequential ~ms footer reads would add driver seconds for
-    * no reason (object stores amplify per-request latency further).
-    */
-  private def footerRowCount(files: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    if (files.isEmpty) return 0L
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, files.length))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks: java.util.List[java.util.concurrent.Callable[Long]] =
-        files.map[java.util.concurrent.Callable[Long]] { f => () =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.asJava
-      pool.invokeAll(tasks).asScala.map(_.get()).sum
-    } finally pool.shutdown()
-  }
-
-  /** Recursive data-file listing, parallelized PER DIRECTORY: one
-    * listStatus per directory on a bounded pool, level by level. The
-    * sequential `fs.listFiles(path, true)` walk this replaces paid one
-    * round-trip per directory in series — ~30 s at 3,000 date
-    * partitions (CompactProbe), and worse against an object store
-    * where each LIST is a network call. Parallel per-prefix listing is
-    * the standard S3 idiom; on a local fs it just collapses the walk
-    * to near-zero. Skips the streaming-sink log (`_spark_metadata`)
-    * and counts only data files.
-    */
-  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[String] =
-    listDataStatus(fs, root).map(_.getPath.toString)
-
-  private def listDataStatus(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    import scala.jdk.CollectionConverters._
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.FileStatus]
-    var dirs = Seq(root)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-    try {
-      while (dirs.nonEmpty) {
-        val tasks: java.util.List[java.util.concurrent.Callable[
-            Array[org.apache.hadoop.fs.FileStatus]]] =
-          dirs.map[java.util.concurrent.Callable[
-            Array[org.apache.hadoop.fs.FileStatus]]] { d => () =>
-            fs.listStatus(d)
-          }.asJava
-        val level = pool.invokeAll(tasks).asScala.flatMap(_.get())
-        dirs = level.collect {
-          case st if st.isDirectory &&
-            st.getPath.getName != "_spark_metadata" => st.getPath
-        }.toSeq
-        out ++= level.collect {
-          case st if !st.isDirectory &&
-            st.getPath.getName.endsWith(".parquet") => st
-        }
-      }
-      out.toSeq
-    } finally pool.shutdown()
-  }
-
   def compact(spark: SparkSession, root: String, domain: String,
       family: String): (Int, Int) = {
     val dir = s"$root/$domain/$family"
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0, 0)
     val files = listDataFiles(fs, p)
     if (files.isEmpty) return (0, 0)
-    val withDt = schema.add(StructField("dt", DateType, nullable = true))
-    // explicit file list + basePath: bypasses any _spark_metadata sink
-    // log (mixed batch+stream files all participate) while keeping the
-    // dt partition column derivable from the file paths
-    val src = spark.read.schema(withDt).option("basePath", dir)
-      .parquet(files: _*)
     // row counts on both sides come from the parquet FOOTERS (summed
     // row-group record counts — authoritative commit metadata, no data
     // scan), so the rewrite write is the compaction's ONLY
     // data-proportional pass; the r13 form burned two extra full scans
     // (source count + rewrite count) for the same verification
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val expected = footerRowCount(files, hconf)
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/$domain/.${family}__compacting")
-    src.repartition(col("dt"))
+    val expected = footerRowCount(spark, files)
+    val tmp = scratch(root, domain, family, Verb.Compact.temp)
+    readFiles(spark, dir, files).repartition(col("dt"))
       .sortWithinPartitions("series", "ts")
       .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
     // verify via the explicit file list as well: the temp dir is
@@ -490,26 +722,14 @@ object TimeSeriesTable {
     // directory listing of a hidden root would be filtered — the
     // recursive file list is immune
     val tmpFiles = listDataFiles(fs, tmp)
-    val rewritten = footerRowCount(tmpFiles, hconf)
+    val rewritten = footerRowCount(spark, tmpFiles)
     if (rewritten != expected) {
       fs.delete(tmp, true)
-      throw new java.io.IOException(
+      throw new IOException(
         s"compaction aborted for $dir: rewrite holds $rewritten rows, " +
           s"source holds $expected — source left untouched")
     }
-    val aside = new org.apache.hadoop.fs.Path(s"$root/$domain/.${family}__old")
-    if (fs.exists(aside)) fs.delete(aside, true)
-    if (!fs.rename(p, aside))
-      throw new java.io.IOException(
-        s"compaction swap failed for $dir: could not move the old " +
-          "directory aside — source left untouched")
-    if (!fs.rename(tmp, p)) {
-      fs.rename(aside, p) // roll back; source restored
-      throw new java.io.IOException(
-        s"compaction swap failed for $dir: rewrite rename failed — " +
-          "source restored")
-    }
-    fs.delete(aside, true)
+    swapDir(fs, Verb.Compact, root, domain, family)
     // the compacted file set IS tmpFiles (the tmp dir became the live
     // path by rename) — a third recursive listing here measured 33 s
     // on a 3000-partition family for a number already in hand
@@ -541,71 +761,37 @@ object TimeSeriesTable {
   def partitions(spark: SparkSession, root: String, domain: String,
       family: String): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$root/$domain/$family")
+    val p = new Path(s"$root/$domain/$family")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val empty = Seq.empty[(String, Long, Long, Long)]
-      .toDF("part", "n_files", "n_bytes", "n_rows")
-    if (!fs.exists(p)) return empty
     val statuses = listDataStatus(fs, p)
-    if (statuses.isEmpty) return empty
-    def dtOf(f: String): Option[String] = f.split('/').collectFirst {
-      case seg if seg.startsWith("dt=") => seg
-    }
-    val byPart = statuses.groupBy(st =>
-      dtOf(st.getPath.toString).getOrElse("(unpartitioned)"))
-    def sigOf(sts: Seq[org.apache.hadoop.fs.FileStatus]): String = {
-      val rendered = sts.map(st =>
-        st.getPath.getName + ":" + st.getLen + ":" +
-          st.getModificationTime).sorted.mkString("\n")
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(rendered.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    val manifestPath = new org.apache.hadoop.fs.Path(p,
-      ".graft_partitions_manifest")
-    // part → (sig, n_files, n_bytes, n_rows); unparsable lines ignored
+    if (statuses.isEmpty) return Seq.empty[(String, Long, Long, Long)]
+      .toDF("part", "n_files", "n_bytes", "n_rows")
+    val byPart = byPartition(statuses)
+    val manifestPath = new Path(p, ".graft_partitions_manifest")
+    // part → (sig, n_files, n_bytes, n_rows)
     val cached: Map[String, (String, Long, Long, Long)] =
-      if (!fs.exists(manifestPath)) Map.empty
-      else try {
-        val in = fs.open(manifestPath)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        text.linesIterator.flatMap { line =>
-          line.split('\t') match {
-            case Array(part, sig, nf, nb, nr) =>
-              try Some(part -> (sig, nf.toLong, nb.toLong, nr.toLong))
-              catch { case _: NumberFormatException => None }
-            case _ => None
-          }
-        }.toMap
-      } catch { case _: java.io.IOException => Map.empty }
+      readManifest(fs, manifestPath) {
+        case Array(part, sig, nf, nb, nr) =>
+          Some(part -> (sig, nf.toLong, nb.toLong, nr.toLong))
+        case _ => None
+      }.toMap
     var footerReads = false
     val rows = byPart.toSeq.map { case (part, sts) =>
-      val sig = sigOf(sts)
+      val sig = signature(sts)
       cached.get(part) match {
         case Some((s, nf, nb, nr)) if s == sig => (part, sig, nf, nb, nr)
         case _ =>
           footerReads = true
           (part, sig, sts.size.toLong, sts.map(_.getLen).sum,
-            footerRowCount(sts.map(_.getPath.toString), hconf))
+            footerRowCount(spark, sts.map(_.getPath.toString)))
       }
     }.sortBy(_._1)
     // rewrite the manifest only when something changed (incl. dropped
-    // partitions); best-effort — SHOW must work on a read-only store.
-    // Written to a temp sibling then renamed over the live path (the
-    // mutate verbs' swap discipline): an in-place overwrite lets a
-    // concurrent reader see a torn final line whose truncated n_rows
-    // still parses as a smaller valid number under a complete signature
+    // partitions); best-effort — SHOW must work on a read-only store
     if (footerReads || cached.keySet != byPart.keySet) try {
-      val tmpManifest = new org.apache.hadoop.fs.Path(p,
-        s".graft_partitions_manifest.tmp.${java.util.UUID.randomUUID}")
-      val out = fs.create(tmpManifest, true)
-      try out.write(rows.map { case (part, sig, nf, nb, nr) =>
-        s"$part\t$sig\t$nf\t$nb\t$nr" }.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      fs.delete(manifestPath, false)
-      if (!fs.rename(tmpManifest, manifestPath)) fs.delete(tmpManifest, false)
-    } catch { case _: java.io.IOException => () }
+      writeManifest(fs, manifestPath, rows.map {
+        case (part, sig, nf, nb, nr) => s"$part\t$sig\t$nf\t$nb\t$nr" })
+    } catch { case _: IOException => () }
     rows.map { case (part, _, nf, nb, nr) => (part, nf, nb, nr) }
       .toDF("part", "n_files", "n_bytes", "n_rows")
   }
@@ -637,26 +823,13 @@ object TimeSeriesTable {
   def describeCached(spark: SparkSession, root: String, domain: String,
       family: String): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$root/$domain/$family")
+    val p = new Path(s"$root/$domain/$family")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val empty = Seq.empty[(String, Long, Option[Long], Option[Long],
-      String, String)].toDF("series", "n_points", "first_us", "last_us",
-      "attr_keys", "tag_keys")
-    if (!fs.exists(p)) return empty
     val statuses = listDataStatus(fs, p)
-    if (statuses.isEmpty) return empty
-    def dtOf(f: String): Option[String] = f.split('/').collectFirst {
-      case seg if seg.startsWith("dt=") => seg
-    }
-    val byPart = statuses.groupBy(st =>
-      dtOf(st.getPath.toString).getOrElse("(unpartitioned)"))
-    def sigOf(sts: Seq[org.apache.hadoop.fs.FileStatus]): String = {
-      val rendered = sts.map(st =>
-        st.getPath.getName + ":" + st.getLen + ":" +
-          st.getModificationTime).sorted.mkString("\n")
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(rendered.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
+    if (statuses.isEmpty) return Seq.empty[(String, Long, Option[Long],
+      Option[Long], String, String)].toDF("series", "n_points", "first_us",
+      "last_us", "attr_keys", "tag_keys")
+    val byPart = byPartition(statuses)
     // one cached stat row: (series, n, firstUs, lastUs, attrKeys, tagKeys)
     type Stat = (Option[String], Long, Option[Long], Option[Long],
       Seq[String], Seq[String])
@@ -670,38 +843,26 @@ object TimeSeriesTable {
     def encL(l: Option[Long]): String = l.fold("-")(_.toString)
     def decL(s: String): Option[Long] =
       if (s == "-") None else Some(s.toLong)
-    val manifestPath = new org.apache.hadoop.fs.Path(p,
-      ".graft_describe_manifest")
+    def decKeys(s: String): Seq[String] =
+      if (s.isEmpty) Seq.empty else s.split(',').toSeq.map(dec)
+    val manifestPath = new Path(p, ".graft_describe_manifest")
+    // an empty key-inventory tail field is a legitimate value, which is
+    // why readManifest keeps trailing empty fields: dropping them would
+    // un-match the 8-field pattern and serve that partition's remaining
+    // rows as the full set
     val cached: Map[String, (String, Seq[Stat])] =
-      if (!fs.exists(manifestPath)) Map.empty
-      else try {
-        val in = fs.open(manifestPath)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        text.linesIterator.flatMap { line =>
-          // split with limit -1: an empty key-inventory tail field is a
-          // legitimate value, and the default split would DROP trailing
-          // empties — silently un-matching the 8-field pattern and
-          // serving that partition's remaining rows as the full set
-          line.split("\t", -1) match {
-            case Array(part, sig, ser, n, fu, lu, ak, tk) =>
-              try Some((part, sig, (decOpt(ser), n.toLong, decL(fu),
-                decL(lu),
-                if (ak.isEmpty) Seq.empty[String]
-                else ak.split(',').toSeq.map(dec),
-                if (tk.isEmpty) Seq.empty[String]
-                else tk.split(',').toSeq.map(dec)): Stat))
-              catch { case _: RuntimeException => None }
-            case _ => None
-          }
-        }.toSeq.groupBy(_._1).map { case (part, rows) =>
-          // a partition's lines all carry one signature by construction;
-          // discard the partition if a torn write ever mixed two
-          val sigs = rows.map(_._2).distinct
-          part -> (sigs.head, if (sigs.length == 1) rows.map(_._3)
-            else Seq.empty)
-        }.filter(_._2._2.nonEmpty)
-      } catch { case _: java.io.IOException => Map.empty }
+      readManifest(fs, manifestPath) {
+        case Array(part, sig, ser, n, fu, lu, ak, tk) =>
+          Some((part, sig, (decOpt(ser), n.toLong, decL(fu), decL(lu),
+            decKeys(ak), decKeys(tk)): Stat))
+        case _ => None
+      }.groupBy(_._1).map { case (part, rows) =>
+        // a partition's lines all carry one signature by construction;
+        // discard the partition if a torn write ever mixed two
+        val sigs = rows.map(_._2).distinct
+        part -> (sigs.head, if (sigs.length == 1) rows.map(_._3)
+          else Seq.empty)
+      }.filter(_._2._2.nonEmpty)
     // One Spark job for ALL signature-moved partitions, not one per
     // partition (guide §1.2 step 1 / §5 driver): the previous
     // per-partition scan+collect launched a sequential job per moved
@@ -713,9 +874,9 @@ object TimeSeriesTable {
     // bounded at (moved partitions × series) rows — the sidecar's own
     // size assumption.
     val sigs: Map[String, String] = byPart.map { case (part, sts) =>
-      part -> sigOf(sts)
+      part -> signature(sts)
     }
-    val moved: Seq[(String, Seq[org.apache.hadoop.fs.FileStatus])] =
+    val moved: Seq[(String, Seq[FileStatus])] =
       byPart.toSeq.sortBy(_._1).filter { case (part, _) =>
         !cached.get(part).exists(_._1 == sigs(part)) }
     val rescans = moved.nonEmpty
@@ -753,25 +914,16 @@ object TimeSeriesTable {
           case _ => (part, sig, movedStats.getOrElse(part, Seq.empty))
         }
       }
-    // best-effort sidecar rewrite, temp+rename (the partitions()
-    // manifest discipline)
+    // best-effort sidecar rewrite (the partitions() manifest discipline)
     if (rescans || cached.keySet != byPart.keySet) try {
-      val lines = perPart.flatMap { case (part, sig, rows) =>
-        rows.map { case (ser, n, fu, lu, ak, tk) =>
+      writeManifest(fs, manifestPath, perPart.flatMap {
+        case (part, sig, rows) => rows.map { case (ser, n, fu, lu, ak, tk) =>
           Seq(part, sig, encOpt(ser), n.toString, encL(fu), encL(lu),
             ak.map(enc).mkString(","), tk.map(enc).mkString(","))
             .mkString("\t")
         }
-      }
-      val tmpManifest = new org.apache.hadoop.fs.Path(p,
-        s".graft_describe_manifest.tmp.${java.util.UUID.randomUUID}")
-      val out = fs.create(tmpManifest, true)
-      try out.write(lines.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      fs.delete(manifestPath, false)
-      if (!fs.rename(tmpManifest, manifestPath))
-        fs.delete(tmpManifest, false)
-    } catch { case _: java.io.IOException => () }
+      })
+    } catch { case _: IOException => () }
     // exact merge across partitions: counts sum, extents min/max,
     // key inventories union — identical to the one-pass aggregation
     val out = perPart.flatMap(_._3).groupBy(_._1).toSeq.map {
@@ -786,22 +938,6 @@ object TimeSeriesTable {
     out.toDF("series", "n_points", "first_us", "last_us",
       "attr_keys", "tag_keys").orderBy("series")
   }
-
-  /** Rewrite parallelism for the mutate verbs ([[deleteRows]] /
-    * [[updateRows]]): hash each date's rows into
-    * `shufflePartitions / |affected partitions|` series slices, so a
-    * takedown touching three dates of a TB-per-day family does NOT
-    * serialize each date into one task (a bare `repartition(dt)`
-    * would). Series-hash slicing keeps every series' rows CLUSTERED
-    * within one file per date — row-group series pruning survives the
-    * rewrite — and unlike `repartitionByRange` it needs no sampling
-    * pass over the input. With many affected dates the quotient hits 1
-    * and the shape degrades gracefully to the one-file-per-date
-    * [[append]] layout.
-    */
-  private def rewriteSlices(spark: SparkSession, affectedParts: Int): Int =
-    math.max(1, spark.sessionState.conf.numShufflePartitions /
-      math.max(1, affectedParts))
 
   /** ROW-LEVEL DELETE — the takedown path (PII purge, copyright
     * removal: the one mutate verb an LLM corpus store is guaranteed to
@@ -825,84 +961,34 @@ object TimeSeriesTable {
     *     list, same [[compact]] rationale) are re-read, the kept rows
     *     rewritten in the [[append]] layout ((series, ts)-sorted), the
     *     result VERIFIED against parquet footers (kept = source −
-    *     matched, per the count pass) before anything moves, then each
-    *     affected partition swaps in via two renames. Partitions with
-    *     no matches are never read, moved, or rewritten — their files
-    *     stay BYTE-IDENTICAL (pinned in TimeSeriesTableSpec).
+    *     matched, per the count pass) before anything moves, then
+    *     committed by the shared protocol ([[swapPartitions]], aside
+    *     `.{family}__delete_old`); a partition whose every row matched
+    *     disappears. Partitions with no matches are never read, moved,
+    *     or rewritten — their files stay BYTE-IDENTICAL (pinned in
+    *     TimeSeriesTableSpec).
     *
-    * A crash mid-swap leaves every partition either untouched or fully
-    * swapped, with the originals recoverable under
-    * `.{family}__delete_old`. Returns (rows deleted, affected
-    * partition names); (0, empty) when nothing matches — no writes at
-    * all in that case.
+    * Returns (rows deleted, affected partition names); (0, empty) when
+    * nothing matches — no writes at all in that case.
     */
   def deleteRows(spark: SparkSession, root: String, domain: String,
-      family: String, predicate: org.apache.spark.sql.Column): (Long, Seq[String]) = {
+      family: String, predicate: Column): (Long, Seq[String]) = {
     val dir = s"$root/$domain/$family"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, Seq.empty)
-    val files = listDataFiles(fs, p)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = listDataFiles(fs, new Path(dir))
     if (files.isEmpty) return (0L, Seq.empty)
-    val withDt = schema.add(StructField("dt", DateType, nullable = true))
-    val src = spark.read.schema(withDt).option("basePath", dir)
-      .parquet(files: _*)
     val hit = coalesce(predicate, lit(false))
-    val matchedRows = src.filter(hit).groupBy(col("dt")).count().collect()
-    if (matchedRows.isEmpty) return (0L, Seq.empty)
-    if (matchedRows.exists(_.isNullAt(0)))
-      throw new java.io.IOException(
-        s"row-level DELETE on $dir: matching rows exist OUTSIDE the " +
-          "dt= partition layout — the per-partition copy-on-write swap " +
-          "needs the partitioned layout; compact() the family first")
-    val matched = matchedRows.map(r => (r.getDate(0).toString, r.getLong(1))).toMap
-    def dtOf(f: String): Option[String] = f.split('/').collectFirst {
-      case seg if seg.startsWith("dt=") => seg.stripPrefix("dt=")
-    }
+    val matched = countByDate(readFiles(spark, dir, files).filter(hit),
+      s"row-level DELETE on $dir: matching rows")
+    if (matched.isEmpty) return (0L, Seq.empty)
     val affected = matched.keySet
-    val affectedFiles = files.filter(f => dtOf(f).exists(affected.contains))
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val affectedFiles = filesOn(files, affected)
     // the verification identity: kept-after-rewrite must equal the
     // affected partitions' footer total minus the count pass's matches
-    val expectedKept = footerRowCount(affectedFiles, hconf) - matched.values.sum
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/$domain/.${family}__deleting")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    spark.read.schema(withDt).option("basePath", dir)
-      .parquet(affectedFiles: _*)
-      .filter(!hit)
-      .repartition(col("dt"), pmod(hash(col("series")), lit(rewriteSlices(spark, affected.size))))
-      .sortWithinPartitions("series", "ts")
-      .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
-    val kept = footerRowCount(listDataFiles(fs, tmp), hconf)
-    if (kept != expectedKept) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"row-level DELETE aborted for $dir: rewrite holds $kept rows, " +
-          s"expected $expectedKept (source minus matches) — a concurrent " +
-          "write or a rewrite fault; source left untouched")
-    }
-    val asideRoot = new org.apache.hadoop.fs.Path(
-      s"$root/$domain/.${family}__delete_old")
-    if (fs.exists(asideRoot)) fs.delete(asideRoot, true)
-    fs.mkdirs(asideRoot)
-    affected.toSeq.sorted.foreach { d =>
-      val live = new org.apache.hadoop.fs.Path(p, s"dt=$d")
-      val aside = new org.apache.hadoop.fs.Path(asideRoot, s"dt=$d")
-      if (!fs.rename(live, aside)) throw new java.io.IOException(
-        s"row-level DELETE swap failed for $dir: could not move " +
-          s"dt=$d aside — partition left untouched")
-      val rewritten = new org.apache.hadoop.fs.Path(tmp, s"dt=$d")
-      // a partition whose every row matched has no rewrite output: the
-      // rename-aside IS the delete (the partition disappears)
-      if (fs.exists(rewritten) && !fs.rename(rewritten, live)) {
-        fs.rename(aside, live) // roll back; partition restored
-        throw new java.io.IOException(
-          s"row-level DELETE swap failed for $dir: rewrite rename of " +
-            s"dt=$d failed — partition restored")
-      }
-    }
-    fs.delete(asideRoot, true)
-    fs.delete(tmp, true)
+    val expectedKept = footerRowCount(spark, affectedFiles) - matched.values.sum
+    rewrite(spark, fs, Verb.Delete, root, domain, family,
+      readFiles(spark, dir, affectedFiles).filter(!hit), affected,
+      expectedKept, "source minus matches")
     (matched.values.sum, affected.toSeq.sorted.map(d => s"dt=$d"))
   }
 
@@ -914,8 +1000,9 @@ object TimeSeriesTable {
     * the affected date partitions (column-pruned, predicate-pushed,
     * collect bounded by one row per affected partition), then ONLY
     * those partitions' files are re-read with the assignments applied,
-    * footer-verified, and swapped in via two renames per partition.
-    * Untouched partitions stay byte-identical.
+    * footer-verified, and committed by the shared protocol
+    * ([[swapPartitions]], aside `.{family}__update_old`). Untouched
+    * partitions stay byte-identical.
     *
     * Assignments are `(series, attr, rhs)` triples over the long
     * layout: `attr = None` sets the series' VALUE column (rhs cast to
@@ -930,102 +1017,63 @@ object TimeSeriesTable {
     * The verify identity is row-count PRESERVATION: the rewrite must
     * hold exactly the affected partitions' footer total (UPDATE moves
     * no rows — `ts` and `series` are not assignable, so no row changes
-    * partition). A crash mid-swap leaves each partition untouched or
-    * fully swapped, originals recoverable under
-    * `.{family}__update_old`. Returns (rows updated, affected
-    * partition names); (0, empty) when nothing matches — no writes.
+    * partition). Returns (rows updated, affected partition names);
+    * (0, empty) when nothing matches — no writes.
     */
   def updateRows(spark: SparkSession, root: String, domain: String,
-      family: String, predicate: org.apache.spark.sql.Column,
-      assigns: Seq[(String, Option[String], org.apache.spark.sql.Column)])
+      family: String, predicate: Column,
+      assigns: Seq[(String, Option[String], Column)])
       : (Long, Seq[String]) = {
     require(assigns.nonEmpty, "updateRows needs at least one assignment")
     val dir = s"$root/$domain/$family"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, Seq.empty)
-    val files = listDataFiles(fs, p)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = listDataFiles(fs, new Path(dir))
     if (files.isEmpty) return (0L, Seq.empty)
-    val withDt = schema.add(StructField("dt", DateType, nullable = true))
-    val src = spark.read.schema(withDt).option("basePath", dir)
-      .parquet(files: _*)
     val hit = coalesce(predicate, lit(false))
     val targetSeries = assigns.map(_._1).distinct
     val touched = hit && col("series").isin(targetSeries: _*)
-    val matchedRows = src.filter(touched).groupBy(col("dt")).count().collect()
-    if (matchedRows.isEmpty) return (0L, Seq.empty)
-    if (matchedRows.exists(_.isNullAt(0)))
-      throw new java.io.IOException(
-        s"row-level UPDATE on $dir: matching rows exist OUTSIDE the " +
-          "dt= partition layout — the per-partition copy-on-write swap " +
-          "needs the partitioned layout; compact() the family first")
-    val matched = matchedRows.map(r => (r.getDate(0).toString, r.getLong(1))).toMap
-    def dtOf(f: String): Option[String] = f.split('/').collectFirst {
-      case seg if seg.startsWith("dt=") => seg.stripPrefix("dt=")
-    }
+    val matched = countByDate(readFiles(spark, dir, files).filter(touched),
+      s"row-level UPDATE on $dir: matching rows")
+    if (matched.isEmpty) return (0L, Seq.empty)
     val affected = matched.keySet
-    val affectedFiles = files.filter(f => dtOf(f).exists(affected.contains))
-    val hconf = spark.sparkContext.hadoopConfiguration
+    val affectedFiles = filesOn(files, affected)
     // the verification identity: UPDATE preserves row counts — the
     // rewrite must hold exactly the affected partitions' footer total
-    val expectedRows = footerRowCount(affectedFiles, hconf)
-    // all assignments in ONE select over the OLD row: value-sets fold
-    // into nested CASEs on the value column, attribute-sets into map
-    // rebuilds on the attributes column — both reference only source
-    // columns, so ANSI pre-update-state semantics hold by construction
+    val expectedRows = footerRowCount(spark, affectedFiles)
+    // all assignments in ONE select over the OLD row
+    val (newValue, newAttrs) =
+      applyAssigns(assigns, hit, col("value"), col("attributes"))
+    rewrite(spark, fs, Verb.Update, root, domain, family,
+      readFiles(spark, dir, affectedFiles)
+        .select(col("series"), col("ts"), newValue.as("value"),
+          col("tags"), newAttrs.as("attributes"), col("dt")),
+      affected, expectedRows, "updates preserve row counts")
+    (matched.values.sum, affected.toSeq.sorted.map(d => s"dt=$d"))
+  }
+
+  /** UPDATE's and MERGE by-source's SET machinery, on rows where
+    * `guard` holds: value-sets nest CASEs over `value`, attribute sets
+    * rebuild the map FROM THE ACCUMULATED `attrs` (so assignments to one
+    * series compose). Every RHS reads only source columns, so ANSI
+    * pre-update-state semantics hold by construction. */
+  private def applyAssigns(assigns: Seq[(String, Option[String], Column)],
+      guard: Column, value: Column, attrs: Column): (Column, Column) = {
     val newValue = assigns.collect { case (s, None, rhs) => (s, rhs) }
-      .foldLeft(col("value")) { case (prev, (s, rhs)) =>
-        when(hit && col("series") === lit(s), rhs.cast(DoubleType))
+      .foldLeft(value) { case (prev, (s, rhs)) =>
+        when(guard && col("series") === lit(s), rhs.cast(DoubleType))
           .otherwise(prev)
       }
     val newAttrs = assigns.collect { case (s, Some(a), rhs) => (s, a, rhs) }
-      .foldLeft(col("attributes")) { case (prev, (s, a, rhs)) =>
+      .foldLeft(attrs) { case (prev, (s, a, rhs)) =>
         val r = rhs.cast(StringType)
         val cleaned = map_filter(
           coalesce(prev, map().cast(MapType(StringType, StringType))),
           (k, _) => k =!= lit(a))
         val set = when(r.isNull, cleaned)
           .otherwise(map_concat(cleaned, map(lit(a), r)))
-        when(hit && col("series") === lit(s), set).otherwise(prev)
+        when(guard && col("series") === lit(s), set).otherwise(prev)
       }
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/$domain/.${family}__updating")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    spark.read.schema(withDt).option("basePath", dir)
-      .parquet(affectedFiles: _*)
-      .select(col("series"), col("ts"), newValue.as("value"),
-        col("tags"), newAttrs.as("attributes"), col("dt"))
-      .repartition(col("dt"), pmod(hash(col("series")), lit(rewriteSlices(spark, affected.size))))
-      .sortWithinPartitions("series", "ts")
-      .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
-    val rewritten = footerRowCount(listDataFiles(fs, tmp), hconf)
-    if (rewritten != expectedRows) {
-      fs.delete(tmp, true)
-      throw new java.io.IOException(
-        s"row-level UPDATE aborted for $dir: rewrite holds $rewritten " +
-          s"rows, expected $expectedRows (updates preserve row counts) " +
-          "— a concurrent write or a rewrite fault; source left untouched")
-    }
-    val asideRoot = new org.apache.hadoop.fs.Path(
-      s"$root/$domain/.${family}__update_old")
-    if (fs.exists(asideRoot)) fs.delete(asideRoot, true)
-    fs.mkdirs(asideRoot)
-    affected.toSeq.sorted.foreach { d =>
-      val live = new org.apache.hadoop.fs.Path(p, s"dt=$d")
-      val aside = new org.apache.hadoop.fs.Path(asideRoot, s"dt=$d")
-      if (!fs.rename(live, aside)) throw new java.io.IOException(
-        s"row-level UPDATE swap failed for $dir: could not move " +
-          s"dt=$d aside — partition left untouched")
-      val rewrittenPart = new org.apache.hadoop.fs.Path(tmp, s"dt=$d")
-      if (!fs.rename(rewrittenPart, live)) {
-        fs.rename(aside, live) // roll back; partition restored
-        throw new java.io.IOException(
-          s"row-level UPDATE swap failed for $dir: rewrite rename of " +
-            s"dt=$d failed — partition restored")
-      }
-    }
-    fs.delete(asideRoot, true)
-    fs.delete(tmp, true)
-    (matched.values.sum, affected.toSeq.sorted.map(d => s"dt=$d"))
+    (newValue, newAttrs)
   }
 
   /** ROW-LEVEL UPSERT (MERGE) — the idempotent-ingest verb completing
@@ -1037,12 +1085,11 @@ object TimeSeriesTable {
     * reference's write path is append-only (boostsession.go:94-184);
     * re-delivery there duplicates.
     *
-    * The incoming frame is STAGED to parquet first (one write,
-    * batch-proportional): the key-overlap count and the rewrite must
-    * see the SAME rows, and an arbitrary incoming plan (a shuffled
-    * SELECT, a sampled source) is not re-read-stable. Incoming frames
-    * with NULL or internally-duplicate (series, ts) keys refuse —
-    * which duplicate wins is undefined in a DataFrame.
+    * The incoming frame is STAGED to parquet first ([[stage]]: one
+    * write, batch-proportional, so the key-overlap count and the
+    * rewrite see the SAME rows). Incoming frames with NULL or
+    * internally-duplicate (series, ts) keys refuse — which duplicate
+    * wins is undefined in a DataFrame.
     *
     * Incoming dates then split two ways (bounded collects — one row
     * per date):
@@ -1051,16 +1098,16 @@ object TimeSeriesTable {
     *    of only those partitions (existing rows anti-joined against the
     *    incoming keys, unioned with the incoming rows), footer-VERIFIED
     *    (kept = existing − replaced + incoming) before anything moves,
-    *    then the [[deleteRows]]-style two-rename swap per partition;
+    *    then committed by the shared protocol ([[swapPartitions]],
+    *    aside `.{family}__upsert_old`);
     *  - dates with no key overlap (whether the partition exists or is
     *    brand new) → plain additive [[append]] of just those incoming
     *    rows. The daily-ingest case stays append-cheap even when
     *    spelled as UPSERT — no rewrite unless a key actually collides.
     *
     * Existing duplicate keys all fall to the one incoming row (MERGE's
-    * delete-then-insert semantics). A crash mid-swap leaves each
-    * partition untouched or fully swapped ([[recover]] knows the
-    * upsert aside); a crash between the swap and the append phase
+    * delete-then-insert semantics). A crash between the swap and the
+    * append phase
     * leaves the replaced dates applied and the append dates absent —
     * re-running the same upsert finishes it (replacement is
     * idempotent). Returns (existing rows replaced, incoming rows
@@ -1072,44 +1119,13 @@ object TimeSeriesTable {
     require(missing.isEmpty,
       s"upsertRows needs the family columns; missing ${missing.mkString(", ")}")
     val dir = s"$root/$domain/$family"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$root/$domain/.${family}__upsert_in")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    incoming.select(col("series").cast(StringType),
-        col("ts").cast(TimestampType), col("value").cast(DoubleType),
-        col("tags").cast(MapType(StringType, StringType)),
-        col("attributes").cast(MapType(StringType, StringType)))
-      .write.parquet(staging.toString)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
-      val inc = spark.read.schema(schema).parquet(staging.toString)
-      // ONE pass for key-sanity stats + per-date counts (mergeRows'
-      // fusion, same per-date distinct == global distinct identity)
-      val dtStats = inc.groupBy(to_date(col("ts")).as("dt"))
-        .agg(count(lit(1)).as("n"),
-          count(when(col("series").isNull, 1)).as("nulls"),
-          countDistinct(col("series"), col("ts")).as("dist"))
-        .collect()
-      val incomingTotal = dtStats.map(_.getLong(1)).sum
-      if (incomingTotal == 0L) return (0L, 0L, Seq.empty)
-      if (dtStats.exists(r => r.isNullAt(0) || r.getLong(2) > 0L))
-        throw new java.io.IOException(
-          s"UPSERT into $dir: incoming rows carry NULL (series, ts) keys " +
-            "— the merge key must be present on every row")
-      if (dtStats.map(_.getLong(3)).sum != incomingTotal)
-        throw new java.io.IOException(
-          s"UPSERT into $dir: the incoming batch holds duplicate " +
-            "(series, ts) keys — which duplicate wins is undefined in a " +
-            "DataFrame; aggregate the batch to one row per key first")
-      val incDates = dtStats
-        .map(r => (r.getDate(0).toString, r.getLong(1))).toMap
-      val files = if (fs.exists(p)) listDataFiles(fs, p) else Seq.empty
-      def dtOf(f: String): Option[String] = f.split('/').collectFirst {
-        case seg if seg.startsWith("dt=") => seg.stripPrefix("dt=")
-      }
-      val withDt = schema.add(StructField("dt", DateType, nullable = true))
+      val (inc, incDates) = stage(spark, fs, Verb.Upsert, root, domain,
+        family, incoming, "which duplicate wins is undefined in a " +
+          "DataFrame; aggregate the batch to one row per key first")
+      if (incDates.isEmpty) return (0L, 0L, Seq.empty)
+      val files = listDataFiles(fs, new Path(dir))
       // only files on incoming dates can hold colliding keys; files
       // OUTSIDE the dt= layout could too, invisibly to the swap — read
       // them in the count pass and refuse if they collide (same
@@ -1118,76 +1134,35 @@ object TimeSeriesTable {
         dtOf(f).fold(true)(incDates.contains))
       val overlapByDt: Map[String, Long] =
         if (candidates.isEmpty) Map.empty
-        else {
-          val rows = spark.read.schema(withDt).option("basePath", dir)
-            .parquet(candidates: _*)
-            .join(inc.select("series", "ts"), Seq("series", "ts"), "leftsemi")
-            .groupBy(col("dt")).count().collect()
-          if (rows.exists(_.isNullAt(0))) throw new java.io.IOException(
-            s"UPSERT into $dir: colliding keys exist OUTSIDE the dt= " +
-              "partition layout — the per-partition copy-on-write swap " +
-              "needs the partitioned layout; compact() the family first")
-          rows.map(r => (r.getDate(0).toString, r.getLong(1))).toMap
-        }
+        else countByDate(readFiles(spark, dir, candidates)
+          .join(inc.select("series", "ts"), Seq("series", "ts"), "leftsemi"),
+          s"UPSERT into $dir: colliding keys")
       val overlapDates = overlapByDt.keySet
       val replaced = overlapByDt.values.sum
       def onDates(ds: Set[String]) = inc.filter(
         to_date(col("ts")).isin(ds.toSeq.map(java.sql.Date.valueOf): _*))
       if (overlapDates.nonEmpty) {
-        val rewriteFiles = files.filter(f =>
-          dtOf(f).exists(overlapDates.contains))
-        val expectedKept = footerRowCount(rewriteFiles, hconf) - replaced +
+        val rewriteFiles = filesOn(files, overlapDates)
+        val expectedKept = footerRowCount(spark, rewriteFiles) - replaced +
           overlapDates.toSeq.map(incDates).sum
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"$root/$domain/.${family}__upserting")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
         // existing rows KEEP their path-derived dt (like the sibling
         // verbs — a row never migrates partitions in a rewrite);
         // incoming rows land on their ts-date, which is within the
         // overlap set by construction
-        spark.read.schema(withDt).option("basePath", dir)
-          .parquet(rewriteFiles: _*)
-          .join(inc.select("series", "ts"), Seq("series", "ts"), "left_anti")
-          .unionByName(onDates(overlapDates)
-            .withColumn("dt", to_date(col("ts"))))
-          .repartition(col("dt"),
-            pmod(hash(col("series")), lit(rewriteSlices(spark, overlapDates.size))))
-          .sortWithinPartitions("series", "ts")
-          .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
-        val kept = footerRowCount(listDataFiles(fs, tmp), hconf)
-        if (kept != expectedKept) {
-          fs.delete(tmp, true)
-          throw new java.io.IOException(
-            s"UPSERT aborted for $dir: rewrite holds $kept rows, expected " +
-              s"$expectedKept (existing − replaced + incoming) — a " +
-              "concurrent write or a rewrite fault; source left untouched")
-        }
-        val asideRoot = new org.apache.hadoop.fs.Path(
-          s"$root/$domain/.${family}__upsert_old")
-        if (fs.exists(asideRoot)) fs.delete(asideRoot, true)
-        fs.mkdirs(asideRoot)
-        overlapDates.toSeq.sorted.foreach { d =>
-          val live = new org.apache.hadoop.fs.Path(p, s"dt=$d")
-          val aside = new org.apache.hadoop.fs.Path(asideRoot, s"dt=$d")
-          if (!fs.rename(live, aside)) throw new java.io.IOException(
-            s"UPSERT swap failed for $dir: could not move dt=$d aside — " +
-              "partition left untouched")
-          val rewritten = new org.apache.hadoop.fs.Path(tmp, s"dt=$d")
-          if (!fs.rename(rewritten, live)) {
-            fs.rename(aside, live) // roll back; partition restored
-            throw new java.io.IOException(
-              s"UPSERT swap failed for $dir: rewrite rename of dt=$d " +
-                "failed — partition restored")
-          }
-        }
-        fs.delete(asideRoot, true)
-        fs.delete(tmp, true)
+        rewrite(spark, fs, Verb.Upsert, root, domain, family,
+          readFiles(spark, dir, rewriteFiles)
+            .join(inc.select("series", "ts"), Seq("series", "ts"), "left_anti")
+            .unionByName(onDates(overlapDates)
+              .withColumn("dt", to_date(col("ts")))),
+          overlapDates, expectedKept, "existing − replaced + incoming")
       }
       val appendDates = incDates.keySet -- overlapDates
       if (appendDates.nonEmpty)
         append(onDates(appendDates), root, domain, family)
-      (replaced, incomingTotal, overlapDates.toSeq.sorted.map(d => s"dt=$d"))
-    } finally fs.delete(staging, true)
+      (replaced, incDates.values.sum,
+        overlapDates.toSeq.sorted.map(d => s"dt=$d"))
+    } finally
+      fs.delete(scratch(root, domain, family, Verb.Upsert.staged.head), true)
   }
 
   /** One `WHEN NOT MATCHED BY SOURCE` clause for [[mergeRows]]:
@@ -1198,9 +1173,9 @@ object TimeSeriesTable {
     * attribute (NULL rhs removes the key) — with RHS over target
     * columns only (there is no source row by definition).
     */
-  case class BySourceClause(cond: Option[org.apache.spark.sql.Column],
+  case class BySourceClause(cond: Option[Column],
       action: String,
-      assigns: Seq[(String, Option[String], org.apache.spark.sql.Column)] =
+      assigns: Seq[(String, Option[String], Column)] =
         Seq.empty)
 
   /** ANSI MERGE over a family — the general mutate verb subsuming
@@ -1217,15 +1192,16 @@ object TimeSeriesTable {
     * condition is false (ANSI).
     *
     * Same copy-on-write machinery and 100 TB stance as the sibling
-    * verbs: the incoming batch STAGES to parquet once (the
+    * verbs: the incoming batch STAGES to parquet once ([[stage]]; the
     * classification pass and the rewrite must see identical rows —
     * recomputing a nondeterministic source between passes would merge
     * two different batches), a classification pass touches only files
     * on incoming dates (column access is the clause conditions' and
     * the collect is bounded at one row per date × clause), ONLY dates
     * holding a non-keep outcome rewrite — footer-verified at
-    * existing − deleted + inserted-on-those-dates — and swap in via
-    * two renames per partition. Matched-keep-only dates and untouched
+    * existing − deleted + inserted-on-those-dates — and commit by the
+    * shared protocol ([[swapPartitions]], aside `.{family}__merge_old`).
+    * Matched-keep-only dates and untouched
     * dates stay byte-identical; unmatched inserts on non-rewrite dates
     * take the additive [[append]] path (a daily-ingest MERGE stays
     * append-cheap). Existing duplicate (series, ts) keys each take the
@@ -1251,7 +1227,7 @@ object TimeSeriesTable {
     */
   def mergeRows(spark: SparkSession, root: String, domain: String,
       family: String, incoming: DataFrame,
-      matched: Seq[(Option[org.apache.spark.sql.Column], String)],
+      matched: Seq[(Option[Column], String)],
       insertUnmatched: Boolean,
       bySource: Seq[BySourceClause] = Seq.empty)
       : (Long, Long, Long, Seq[String]) = {
@@ -1272,49 +1248,14 @@ object TimeSeriesTable {
     require(missing.isEmpty,
       s"mergeRows needs the family columns; missing ${missing.mkString(", ")}")
     val dir = s"$root/$domain/$family"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$root/$domain/.${family}__merge_in")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    incoming.select(col("series").cast(StringType),
-        col("ts").cast(TimestampType), col("value").cast(DoubleType),
-        col("tags").cast(MapType(StringType, StringType)),
-        col("attributes").cast(MapType(StringType, StringType)))
-      .write.parquet(staging.toString)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val insStaging = scratch(root, domain, family, Verb.Merge.staged(1))
     try {
-      val inc = spark.read.schema(schema).parquet(staging.toString)
-      // ONE pass over the staged batch for the key-sanity stats AND the
-      // per-date counts (guide §1.2: don't re-read what one aggregation
-      // can answer) — previously two sequential jobs. The global
-      // distinct-key count decomposes per date exactly because the key
-      // embeds the date: duplicate (series, ts) pairs always share
-      // to_date(ts), so Σ per-date distinct == global distinct.
-      val dtStats = inc.groupBy(to_date(col("ts")).as("dt"))
-        .agg(count(lit(1)).as("n"),
-          count(when(col("series").isNull, 1)).as("nulls"),
-          countDistinct(col("series"), col("ts")).as("dist"))
-        .collect()
-      val incomingTotal = dtStats.map(_.getLong(1)).sum
-      if (incomingTotal == 0L) return (0L, 0L, 0L, Seq.empty)
-      // a NULL ts lands in the null dt group; a NULL series counts there
-      if (dtStats.exists(r => r.isNullAt(0) || r.getLong(2) > 0L))
-        throw new java.io.IOException(
-          s"MERGE into $dir: incoming rows carry NULL (series, ts) keys " +
-            "— the merge key must be present on every row")
-      if (dtStats.map(_.getLong(3)).sum != incomingTotal)
-        throw new java.io.IOException(
-          s"MERGE into $dir: the incoming batch holds duplicate " +
-            "(series, ts) keys — ANSI MERGE refuses a source that matches " +
-            "one target row twice; aggregate the batch to one row per key")
-      val incDates = dtStats
-        .map(r => (r.getDate(0).toString, r.getLong(1))).toMap
-      val files = if (fs.exists(p)) listDataFiles(fs, p) else Seq.empty
-      def dtOf(f: String): Option[String] = f.split('/').collectFirst {
-        case seg if seg.startsWith("dt=") => seg.stripPrefix("dt=")
-      }
-      val withDt = schema.add(StructField("dt", DateType, nullable = true))
+      val (inc, incDates) = stage(spark, fs, Verb.Merge, root, domain,
+        family, incoming, "ANSI MERGE refuses a source that matches one " +
+          "target row twice; aggregate the batch to one row per key")
+      if (incDates.isEmpty) return (0L, 0L, 0L, Seq.empty)
+      val files = listDataFiles(fs, new Path(dir))
       // only files on incoming dates can hold matching keys; files
       // OUTSIDE the dt= layout could too, invisibly to the swap —
       // refuse on collision (compact-first, same as the sibling verbs).
@@ -1330,25 +1271,21 @@ object TimeSeriesTable {
         col("value").as("src_value"), col("tags").as("src_tags"),
         col("attributes").as("src_attributes"),
         lit(true).as("__src_matched"))
-      // first-true-clause-wins outcome over the joined row; NULL
-      // conditions are false, no clause true → keep (-1)
-      val outcome: org.apache.spark.sql.Column = matched.zipWithIndex
-        .foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-          case (acc, ((cond, _), i)) =>
-            val c = coalesce(cond.getOrElse(lit(true)), lit(false))
-            Some(acc.fold(when(c, lit(i)))(_.when(c, lit(i))))
+      // first-true-clause-wins index over (condition, index) clauses;
+      // NULL conditions are false, no clause true → keep (-1)
+      def firstTrue(clauses: Seq[(Option[Column], Int)]): Column =
+        clauses.foldLeft(Option.empty[Column]) { case (acc, (cond, i)) =>
+          val c = coalesce(cond.getOrElse(lit(true)), lit(false))
+          Some(acc.fold(when(c, lit(i)))(_.when(c, lit(i))))
         }.fold(lit(-1))(_.otherwise(lit(-1)))
+      val outcome = firstTrue(
+        matched.zipWithIndex.map { case ((cond, _), i) => (cond, i) })
       // NOT MATCHED BY SOURCE clauses take the index space after the
       // matched ones (first-true-wins among themselves); conditions see
       // TARGET columns only. With no by-source clauses this folds to
       // the keep outcome (-1) — the pre-existing unmatched behavior.
-      val bsOutcome: org.apache.spark.sql.Column = bySource.zipWithIndex
-        .foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-          case (acc, (cl, i)) =>
-            val c = coalesce(cl.cond.getOrElse(lit(true)), lit(false))
-            val idx = lit(matched.length + i)
-            Some(acc.fold(when(c, idx))(_.when(c, idx)))
-        }.fold(lit(-1))(_.otherwise(lit(-1)))
+      val bsOutcome = firstTrue(bySource.zipWithIndex.map {
+        case (cl, i) => (cl.cond, matched.length + i) })
       val deleteIdx = matched.zipWithIndex.collect {
         case ((_, "delete"), i) => i } ++
         bySource.zipWithIndex.collect {
@@ -1362,8 +1299,7 @@ object TimeSeriesTable {
       // consumed the clause (bsOutcome picked it, so no fall-through),
       // and downgrading it to keep (-1) afterwards is byte-identical
       // while sparing its date a pointless rewrite
-      def effOutcome(raw: org.apache.spark.sql.Column)
-          : org.apache.spark.sql.Column =
+      def effOutcome(raw: Column): Column =
         bySource.zipWithIndex.foldLeft(raw) {
           case (acc, (cl, i)) if cl.action == "update" =>
             val targets = cl.assigns.map(_._1).distinct
@@ -1377,8 +1313,7 @@ object TimeSeriesTable {
         if (candidates.isEmpty || (matched.isEmpty && bySource.isEmpty))
           Seq.empty
         else {
-          val existing = spark.read.schema(withDt).option("basePath", dir)
-            .parquet(candidates: _*)
+          val existing = readFiles(spark, dir, candidates)
           val classified =
             if (bySource.isEmpty)
               existing.join(incSrc, Seq("series", "ts"), "inner")
@@ -1389,7 +1324,7 @@ object TimeSeriesTable {
                   .otherwise(effOutcome(bsOutcome)).as("__oc"))
           val rows = classified
             .groupBy(col("dt"), col("__oc")).count().collect()
-          if (rows.exists(_.isNullAt(0))) throw new java.io.IOException(
+          if (rows.exists(_.isNullAt(0))) throw new IOException(
             s"MERGE into $dir: matching keys exist OUTSIDE the dt= " +
               "partition layout — the per-partition copy-on-write swap " +
               "needs the partitioned layout; compact() the family first")
@@ -1415,8 +1350,7 @@ object TimeSeriesTable {
         if (!insertUnmatched) None
         else if (candidates.isEmpty) Some(inc)
         else Some(inc.join(
-          spark.read.schema(withDt).option("basePath", dir)
-            .parquet(candidates: _*).select("series", "ts"),
+          readFiles(spark, dir, candidates).select("series", "ts"),
           Seq("series", "ts"), "left_anti"))
       val insertedByDt: Map[String, Long] = unmatched.fold(
         Map.empty[String, Long])(u => u.groupBy(to_date(col("ts")).as("d"))
@@ -1428,22 +1362,16 @@ object TimeSeriesTable {
       // the append subset must MATERIALIZE before the swap replaces
       // them (a lazy read after the swap would hit deleted paths); the
       // appended bytes are proportional to the batch's insert half
-      val insStaging = new org.apache.hadoop.fs.Path(
-        s"$root/$domain/.${family}__merge_ins")
       if (fs.exists(insStaging)) fs.delete(insStaging, true)
       if (appendDates.nonEmpty)
         unmatched.get.filter(to_date(col("ts")).isin(
           appendDates.toSeq.map(java.sql.Date.valueOf): _*))
           .write.parquet(insStaging.toString)
       if (rewriteDates.nonEmpty) {
-        val rewriteFiles = files.filter(f =>
-          dtOf(f).exists(rewriteDates.contains))
-        val expectedKept = footerRowCount(rewriteFiles, hconf) -
+        val rewriteFiles = filesOn(files, rewriteDates)
+        val expectedKept = footerRowCount(spark, rewriteFiles) -
           deletedByDt.filter(kv => rewriteDates.contains(kv._1)).values.sum +
           insertedByDt.filter(kv => rewriteDates.contains(kv._1)).values.sum
-        val tmp = new org.apache.hadoop.fs.Path(
-          s"$root/$domain/.${family}__merging")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
         val isUpdate = updateIdx.foldLeft(lit(false))(
           (acc, i) => acc || col("__oc") === lit(i))
         val isDelete = deleteIdx.foldLeft(lit(false))(
@@ -1452,41 +1380,17 @@ object TimeSeriesTable {
         // migrates a row); unmatched inserts on rewrite dates ride the
         // same swap so the partition flips once, atomically.
         // By-source UPDATE assignments fold over the matched-update
-        // base exactly like updateRows' SET machinery: value sets
-        // nested-CASE on the value column, attribute sets rebuild the
-        // map FROM THE ACCUMULATED column (so several assignments to
-        // one series compose), both reading pre-update state only.
-        val bsValue = bySource.zipWithIndex.foldLeft(
-          when(isUpdate, col("src_value")).otherwise(col("value"))) {
-          case (prev, (cl, i)) if cl.action == "update" =>
-            cl.assigns.collect { case (s, None, rhs) => (s, rhs) }
-              .foldLeft(prev) { case (pv, (s, rhs)) =>
-                when(col("__oc") === lit(matched.length + i) &&
-                  col("series") === lit(s), rhs.cast(DoubleType))
-                  .otherwise(pv)
-              }
-          case (prev, _) => prev
+        // base through updateRows' SET machinery, clause by clause.
+        val (bsValue, bsAttrs) = bySource.zipWithIndex.foldLeft(
+          (when(isUpdate, col("src_value")).otherwise(col("value")),
+            when(isUpdate, col("src_attributes"))
+              .otherwise(col("attributes")))) {
+          case ((v, a), (cl, i)) if cl.action == "update" =>
+            applyAssigns(cl.assigns, col("__oc") === lit(matched.length + i),
+              v, a)
+          case (acc, _) => acc
         }
-        val bsAttrs = bySource.zipWithIndex.foldLeft(
-          when(isUpdate, col("src_attributes"))
-            .otherwise(col("attributes"))) {
-          case (prev, (cl, i)) if cl.action == "update" =>
-            cl.assigns.collect { case (s, Some(a), rhs) => (s, a, rhs) }
-              .foldLeft(prev) { case (pv, (s, a, rhs)) =>
-                val r = rhs.cast(StringType)
-                val cleaned = map_filter(
-                  coalesce(pv,
-                    map().cast(MapType(StringType, StringType))),
-                  (k, _) => k =!= lit(a))
-                val set = when(r.isNull, cleaned)
-                  .otherwise(map_concat(cleaned, map(lit(a), r)))
-                when(col("__oc") === lit(matched.length + i) &&
-                  col("series") === lit(s), set).otherwise(pv)
-              }
-          case (prev, _) => prev
-        }
-        val existingMerged = spark.read.schema(withDt)
-          .option("basePath", dir).parquet(rewriteFiles: _*)
+        val existingMerged = readFiles(spark, dir, rewriteFiles)
           .join(incSrc, Seq("series", "ts"), "left")
           .withColumn("__oc",
             when(coalesce(col("__src_matched"), lit(false)), outcome)
@@ -1502,77 +1406,42 @@ object TimeSeriesTable {
           .withColumn("dt", to_date(col("ts")))
           .filter(col("dt").isin(
             rewriteDates.toSeq.map(java.sql.Date.valueOf): _*)))
-        val rewrite = insertsOnRewrite
-          .fold(existingMerged)(existingMerged.unionByName(_))
-        rewrite
-          .repartition(col("dt"), pmod(hash(col("series")),
-            lit(rewriteSlices(spark, rewriteDates.size))))
-          .sortWithinPartitions("series", "ts")
-          .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
-        val kept = footerRowCount(listDataFiles(fs, tmp), hconf)
-        if (kept != expectedKept) {
-          fs.delete(tmp, true)
-          throw new java.io.IOException(
-            s"MERGE aborted for $dir: rewrite holds $kept rows, expected " +
-              s"$expectedKept (existing − deleted + inserted) — a " +
-              "concurrent write or a rewrite fault; source left untouched")
-        }
-        val asideRoot = new org.apache.hadoop.fs.Path(
-          s"$root/$domain/.${family}__merge_old")
-        if (fs.exists(asideRoot)) fs.delete(asideRoot, true)
-        fs.mkdirs(asideRoot)
-        rewriteDates.toSeq.sorted.foreach { d =>
-          val live = new org.apache.hadoop.fs.Path(p, s"dt=$d")
-          val aside = new org.apache.hadoop.fs.Path(asideRoot, s"dt=$d")
-          if (!fs.rename(live, aside)) throw new java.io.IOException(
-            s"MERGE swap failed for $dir: could not move dt=$d aside — " +
-              "partition left untouched")
-          val rewritten = new org.apache.hadoop.fs.Path(tmp, s"dt=$d")
-          // a partition whose every row was deleted (and received no
-          // insert) has no rewrite output: the rename-aside IS the merge
-          if (fs.exists(rewritten) && !fs.rename(rewritten, live)) {
-            fs.rename(aside, live) // roll back; partition restored
-            throw new java.io.IOException(
-              s"MERGE swap failed for $dir: rewrite rename of dt=$d " +
-                "failed — partition restored")
-          }
-        }
-        fs.delete(asideRoot, true)
-        fs.delete(tmp, true)
+        // a partition whose every row was deleted (and received no
+        // insert) has no rewrite output and ends up empty
+        rewrite(spark, fs, Verb.Merge, root, domain, family,
+          insertsOnRewrite.fold(existingMerged)(existingMerged.unionByName(_)),
+          rewriteDates, expectedKept, "existing − deleted + inserted")
       }
       if (appendDates.nonEmpty) {
-        append(spark.read.schema(schema).parquet(insStaging.toString),
-          root, domain, family)
+        append(spark.read.schema(schema)
+          .parquet(listDataFiles(fs, insStaging): _*), root, domain, family)
         fs.delete(insStaging, true)
       }
       (updated, deleted, inserted,
         rewriteDates.toSeq.sorted.map(d => s"dt=$d"))
     } finally {
-      fs.delete(staging, true)
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$root/$domain/.${family}__merge_ins"), true)
+      fs.delete(scratch(root, domain, family, Verb.Merge.staged.head), true)
+      fs.delete(insStaging, true)
     }
   }
 
   /** Crash recovery for the copy-on-write verbs ([[compact]],
-    * [[deleteRows]], [[updateRows]], [[upsertRows]], [[mergeRows]]) —
-    * makes a family READABLE again
-    * after a crash mid-swap, applying each verb's documented
-    * either-untouched-or-fully-swapped invariant:
+    * [[deleteRows]], [[updateRows]], [[upsertRows]], [[mergeRows]],
+    * [[refreshDownsample]] and CREATE OR REPLACE FAMILY) — makes a
+    * family READABLE again after a crash mid-swap by applying the
+    * commit protocol's invariant ([[swapPartitions]]) to every entry of
+    * its name table:
     *
-    *  - compact's whole-dir aside (`.{family}__old`): live dir missing
-    *    means the crash hit between the two renames — the aside IS the
-    *    source, restore it; live dir present means the swap finished —
-    *    the aside is a stale copy, drop it.
-    *  - the mutate verbs' per-partition asides
-    *    (`.{family}__delete_old` / `__update_old` / `__upsert_old` /
-    *    `__merge_old`): a
-    *    partition still present under the aside was either swapped
-    *    (live dt exists — drop the aside copy) or mid-swap (live dt
-    *    missing — rename it back).
-    *  - in-flight rewrite temps (`__compacting` / `__deleting` /
-    *    `__updating` / `__upserting` / `__merging`) and the staged
-    *    incoming batches (`__upsert_in` / `__merge_in`) are dropped —
+    *  - a whole-directory aside (compact's `.{family}__old`, CTAS's
+    *    `.{family}__ctas_old`): live dir missing means the crash hit
+    *    between the two renames — the aside IS the source, restore it;
+    *    live dir present means the swap finished — the aside is a stale
+    *    copy, drop it.
+    *  - a per-partition aside root (`.{family}__<verb>_old`): a
+    *    partition still present under it was either swapped (live dt
+    *    exists — drop the aside copy) or mid-swap (live dt missing —
+    *    rename it back).
+    *  - every rewrite temp and staged incoming batch is dropped —
     *    unswapped rewrite output is rolled back, never half-applied.
     *
     * After recovery the family is consistent but a crashed DELETE /
@@ -1587,60 +1456,53 @@ object TimeSeriesTable {
     */
   def recover(spark: SparkSession, root: String, domain: String,
       family: String): Seq[String] = {
-    val live = new org.apache.hadoop.fs.Path(s"$root/$domain/$family")
+    val live = new Path(s"$root/$domain/$family")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    // whole-dir asides first (the live dir itself may be gone):
-    // compact's and CREATE OR REPLACE FAMILY's swap share the shape
-    Seq("old" -> "compact", "ctas_old" -> "ctas").foreach {
-      case (sfx, verb) =>
-        val wholeAside = new org.apache.hadoop.fs.Path(
-          s"$root/$domain/.${family}__$sfx")
-        if (fs.exists(wholeAside)) {
-          if (!fs.exists(live)) {
-            if (!fs.rename(wholeAside, live)) throw new java.io.IOException(
-              s"recovery failed: could not restore $live from $wholeAside")
-            actions += s"restored $family from the $verb aside"
-          } else {
-            fs.delete(wholeAside, true)
-            actions += s"dropped stale $verb aside (swap had completed)"
-          }
+    // whole-dir asides first: the live dir itself may be gone
+    val (wholeDir, perPartition) = Verb.all.partition(_.wholeDir)
+    wholeDir.foreach { v =>
+      val aside = scratch(root, domain, family, v.aside)
+      if (fs.exists(aside)) {
+        if (!fs.exists(live)) {
+          if (!fs.rename(aside, live)) throw new IOException(
+            s"recovery failed: could not restore $live from $aside")
+          actions += s"restored $family from the ${v.name} aside"
+        } else {
+          fs.delete(aside, true)
+          actions += s"dropped stale ${v.name} aside (swap had completed)"
         }
+      }
     }
-    // mutate verbs: per-partition asides
-    Seq("delete", "update", "upsert", "merge", "refresh").foreach { verb =>
-      val asideRoot = new org.apache.hadoop.fs.Path(
-        s"$root/$domain/.${family}__${verb}_old")
+    perPartition.foreach { v =>
+      val asideRoot = scratch(root, domain, family, v.aside)
       if (fs.exists(asideRoot)) {
         fs.listStatus(asideRoot).toSeq
           .filter(st => st.isDirectory && st.getPath.getName.startsWith("dt="))
           .sortBy(_.getPath.getName)
           .foreach { st =>
             val d = st.getPath.getName
-            val liveDt = new org.apache.hadoop.fs.Path(live, d)
+            val liveDt = new Path(live, d)
             if (fs.exists(liveDt)) {
               fs.delete(st.getPath, true)
-              actions += s"dropped swapped $verb aside $d"
+              actions += s"dropped swapped ${v.name} aside $d"
             } else {
-              if (!fs.rename(st.getPath, liveDt))
-                throw new java.io.IOException(
-                  s"recovery failed: could not restore $d from the " +
-                    s"$verb aside")
-              actions += s"restored $d from the $verb aside (mid-swap)"
+              if (!fs.rename(st.getPath, liveDt)) throw new IOException(
+                s"recovery failed: could not restore $d from the " +
+                  s"${v.name} aside")
+              actions += s"restored $d from the ${v.name} aside (mid-swap)"
             }
           }
         fs.delete(asideRoot, true)
       }
     }
-    // in-flight rewrite temps: unswapped output rolls back
-    Seq("compacting", "deleting", "updating", "upserting", "upsert_in",
-        "merging", "merge_in", "merge_ins", "ctas", "refreshing")
-      .foreach { phase =>
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$root/$domain/.${family}__$phase")
+    // in-flight rewrite temps and staged batches: unswapped output
+    // rolls back
+    Verb.all.flatMap(_.temps).foreach { t =>
+      val tmp = scratch(root, domain, family, t)
       if (fs.exists(tmp)) {
         fs.delete(tmp, true)
-        actions += s"dropped in-flight $phase temp"
+        actions += s"dropped in-flight $t temp"
       }
     }
     actions.toSeq

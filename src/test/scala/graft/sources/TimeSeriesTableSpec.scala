@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths => JPaths}
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -81,6 +81,7 @@ class TimeSeriesTableSpec extends SparkSpec {
     val after = TimeSeriesTable.open(spark, root, "dom", "m")
       .orderBy("series", "ts").collect().toSeq
     assert(after == before && after.nonEmpty)
+    assertNoScratch(root, "m")
     // retention: drop partitions before the cutoff, keep the rest
     val cutoff = java.sql.Date.valueOf("2024-01-10")
     val dropped = TimeSeriesTable.expire(spark, root, "dom", "m", cutoff)
@@ -219,6 +220,14 @@ class TimeSeriesTableSpec extends SparkSpec {
     }.toMap
   }
 
+  /** No `.{family}__*` scratch name — an aside, a rewrite temp or a
+    * staged batch — is left beside the family under the domain. */
+  private def assertNoScratch(root: String, family: String): Unit = {
+    val left = Option(new java.io.File(s"$root/dom").list()).toSeq.flatten
+      .filter(_.startsWith(s".${family}__"))
+    assert(left.isEmpty, s"scratch left behind: $left")
+  }
+
   test("partitions inventory: manifest cache serves repeat calls, " +
       "any writer invalidates via the file-set signature") {
     val root = Files.createTempDirectory("graft-parts").toString
@@ -349,6 +358,7 @@ class TimeSeriesTableSpec extends SparkSpec {
     // survivors intact: per-series signature of the reread family
     // equals the source minus the matches
     assert(sig(after) == expectSig)
+    assertNoScratch(root, "events")
   }
 
   test("deleteRows drops a partition whose every row matches, and " +
@@ -452,6 +462,7 @@ class TimeSeriesTableSpec extends SparkSpec {
         col("series") =!= "purchase")) ==
       sig(fam.filter(to_date(col("ts")) === lit(target) &&
         col("series") =!= "purchase")))
+    assertNoScratch(root, "events")
     // zero matches: nothing moves, nothing is written
     val (zero, none) = TimeSeriesTable.updateRows(spark, root, "dom",
       "events", col("series") === "no_such_series",
@@ -497,6 +508,20 @@ class TimeSeriesTableSpec extends SparkSpec {
     assert(a3.exists(_.contains(s"dropped swapped update aside $victim")), a3)
     assert(!new java.io.File(s"$root/dom/.events__update_old").exists())
     assert(partitionDigests(s"$root/dom/events/$victim") == digestBefore)
+    // upsert mid-swap, plus a refresh aside whose swap had completed
+    val other = dts(1)
+    JF.createDirectories(JP.get(s"$root/dom/.events__upsert_old"))
+    JF.move(JP.get(s"$root/dom/events/$victim"),
+      JP.get(s"$root/dom/.events__upsert_old/$victim"))
+    JF.createDirectories(JP.get(s"$root/dom/.events__refresh_old/$other"))
+    JF.write(JP.get(s"$root/dom/.events__refresh_old/$other/stale.parquet"),
+      Array[Byte](1, 2, 3))
+    val a4 = TimeSeriesTable.recover(spark, root, "dom", "events")
+    assert(a4.exists(_.contains(s"restored $victim from the upsert aside")), a4)
+    assert(a4.exists(_.contains(s"dropped swapped refresh aside $other")), a4)
+    assert(TimeSeriesTable.open(spark, root, "dom", "events").count() == total)
+    assert(partitionDigests(s"$root/dom/events/$victim") == digestBefore)
+    assertNoScratch(root, "events")
     // idempotent: a second recover finds nothing
     assert(TimeSeriesTable.recover(spark, root, "dom", "events").isEmpty)
   }
@@ -575,6 +600,7 @@ class TimeSeriesTableSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/dom/.m__upsert_in").exists())
     assert(!new java.io.File(s"$root/dom/.m__upserting").exists())
     assert(!new java.io.File(s"$root/dom/.m__upsert_old").exists())
+    assertNoScratch(root, "m")
   }
 
   test("mergeRows: first-true-clause-wins, keep-only dates stay " +
@@ -624,6 +650,7 @@ class TimeSeriesTableSpec extends SparkSpec {
     // temps gone
     for (sfx <- Seq("merge_in", "merging", "merge_old", "merge_ins"))
       assert(!new java.io.File(s"$root/dom/.m__$sfx").exists(), sfx)
+    assertNoScratch(root, "m")
     // delete-only MERGE with no insert clause: unmatched incoming rows
     // are NOT written
     val (u2, d2, i2, _) = TimeSeriesTable.mergeRows(
@@ -751,6 +778,7 @@ class TimeSeriesTableSpec extends SparkSpec {
       spark, root, "dom", "m", day, "1d")
     assert(r1 == Seq("dt=2024-01-01", "dt=2024-01-02", "dt=2024-01-03"))
     assert(rm1.isEmpty)
+    assertNoScratch(root, "m_1d")
     val d2Before = partitionDigests(s"$root/dom/m_1d/dt=2024-01-02")
     // append onto an existing date + a brand-new date
     TimeSeriesTable.append(mkRows(Seq(
@@ -773,6 +801,7 @@ class TimeSeriesTableSpec extends SparkSpec {
       spark, root, "dom", "m", day, "1d")
     assert(r3.isEmpty && rm3 == Seq("dt=2024-01-01"))
     assert(!new java.io.File(s"$root/dom/m_1d/dt=2024-01-01").exists())
+    assertNoScratch(root, "m_1d")
     // no-op on a second run; week-wide buckets refuse
     assert(TimeSeriesTable.refreshDownsample(
       spark, root, "dom", "m", day, "1d") == ((Seq.empty, Seq.empty)))
@@ -813,6 +842,7 @@ class TimeSeriesTableSpec extends SparkSpec {
       TimeSeriesTable.upsertRows(spark, root, "dom", "m", dup)
     }
     assert(e1.getMessage.contains("duplicate"))
+    assertNoScratch(root, "m")
     val withNull = Seq(("cpu", None: Option[Timestamp], 1.0))
       .toDF("series", "ts", "value")
       .withColumn("tags", map().cast("map<string,string>"))
@@ -839,5 +869,77 @@ class TimeSeriesTableSpec extends SparkSpec {
     val (r2, w2, _) = TimeSeriesTable.upsertRows(spark, root, "dom", "m", batch)
     assert(r2 == 2L && w2 == 2L, "second delivery replaces its own rows")
     assert(snapshot() == firstRun, "re-delivery must not change content")
+  }
+
+  test("a leftover mutate aside makes the next swap refuse instead of " +
+      "discarding it; recover then restores the partition") {
+    import java.nio.file.{Files => JF, Paths => JP}
+    val root = Files.createTempDirectory("graft-leftover").toString
+    val fam = TimeSeriesTable.fromEvents(Tables.events(spark, sfDir))
+    TimeSeriesTable.append(fam, root, "dom", "events")
+    val total = TimeSeriesTable.open(spark, root, "dom", "events").count()
+    val dts = new java.io.File(s"$root/dom/events").listFiles()
+      .map(_.getName).filter(_.startsWith("dt=")).sorted
+    // a DELETE crashed mid-swap: dt=A's only copy sits under the aside
+    val victim = dts.head
+    JF.createDirectories(JP.get(s"$root/dom/.events__delete_old"))
+    JF.move(JP.get(s"$root/dom/events/$victim"),
+      JP.get(s"$root/dom/.events__delete_old/$victim"))
+    // the next DELETE matches rows on another date only
+    val other = dts(1).stripPrefix("dt=")
+    val e = intercept[java.io.IOException] {
+      TimeSeriesTable.deleteRows(spark, root, "dom", "events",
+        to_date(col("ts")) === lit(other))
+    }
+    assert(e.getMessage.contains("TimeSeriesTable.recover"), e.getMessage)
+    // nothing moved: the aside still holds dt=A, the other date is
+    // live, and the refused run dropped its own temp
+    assert(new java.io.File(s"$root/dom/.events__delete_old/$victim")
+      .isDirectory)
+    assert(new java.io.File(s"$root/dom/events/dt=$other").isDirectory)
+    assert(!new java.io.File(s"$root/dom/.events__deleting").exists())
+    val acts = TimeSeriesTable.recover(spark, root, "dom", "events")
+    assert(acts.exists(_.contains(s"restored $victim from the delete aside")),
+      acts)
+    assert(TimeSeriesTable.open(spark, root, "dom", "events").count() == total)
+    assertNoScratch(root, "events")
+  }
+
+  test("refreshDownsample skips a torn manifest line: that date " +
+      "rebuilds and the rollup equals a from-scratch one") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-refresh-torn").toString
+    val day = 86400L * 1000000L
+    TimeSeriesTable.append(mkRows(Seq(
+      ("cpu", "2024-01-01 01:00:00", 1.0),
+      ("cpu", "2024-01-02 01:00:00", 5.0),
+      ("mem", "2024-01-03 01:00:00", 7.0))), root, "dom", "m")
+    TimeSeriesTable.refreshDownsample(spark, root, "dom", "m", day, "1d")
+    // a torn write: the last line lost its tab and signature. Planted
+    // through the Hadoop filesystem so its checksum sidecar matches.
+    val manifest = JPaths.get(s"$root/dom/m_1d/.graft_refresh_manifest")
+    val lines = Files.readAllLines(manifest).asScala.toSeq
+    assert(lines.length == 3)
+    val hPath = new org.apache.hadoop.fs.Path(manifest.toUri)
+    val out = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(hPath, true)
+    try out.write((lines.init :+ lines.last.take(7)).mkString("\n")
+      .getBytes("UTF-8"))
+    finally out.close()
+    val (rebuilt, dropped) = TimeSeriesTable.refreshDownsample(
+      spark, root, "dom", "m", day, "1d")
+    assert(rebuilt == Seq("dt=2024-01-03") && dropped.isEmpty,
+      s"got ($rebuilt, $dropped)")
+    TimeSeriesTable.downsample(spark, root, "dom", "m", day, "1d",
+      Some("fresh"))
+    def rollup(f: String) = TimeSeriesTable.open(spark, root, "dom", f)
+      .select("series", "ts", "value").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2)))
+      .toSeq.sortBy(_.toString)
+    assert(rollup("m_1d") == rollup("fresh"))
+    // the manifest was rewritten whole: every line parses again
+    assert(Files.readAllLines(manifest).asScala.map(_.split('\t').length)
+      == Seq(2, 2, 2))
+    assertNoScratch(root, "m_1d")
   }
 }

@@ -99,23 +99,27 @@ object Bench {
     runs(runs.length / 2)
   }
 
+  /** JSON string literal: backslash, quote and every control char
+    * (< 0x20) escaped — a tab, CR or newline in a query text or an
+    * error message would otherwise make the artifact's reader fail. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A name → failure-text map as one JSON object. */
+  private[graft] def jfail(m: Seq[(String, String)]): String =
+    m.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC is part of the testdata contract: events.ts may arrive as
-      // TIMESTAMP_NTZ, whose reinterpretation as an instant
-      // (Tables.normalizeEventsTs) is only lossless under a UTC session
-      .config("spark.sql.session.timeZone", "UTC")
-      // TIMESTAMP(NANOS) parquet loads as raw longs instead of throwing
-      // (session-level config, set beside the UTC pin; Tables loaders are
-      // conf-write free — see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session before timing: parquet footers, filesystem
     // caches, and first-job executor spin-up otherwise land entirely on
@@ -134,21 +138,14 @@ object Bench {
     val calibration = calibrate(spark, iters)
     val ioCalibration = calibrateIo(spark, iters)
     val (results, failed) = run(spark, sfDir, selected, iters)
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
     val qs = results.map { case (k, v) => jstr(k) + ":" + v }
-      .mkString("{", ",", "}")
-    val fs = failed.map { case (k, m) => jstr(k) + ":" + jstr(m) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""calibration_sec":$calibration,""" +
       s""""io_calibration_sec":$ioCalibration,""" +
-      s""""queries":$qs,"failed":$fs,"sf":"$sfDir"}"""
+      s""""queries":$qs,"failed":${jfail(failed)},"sf":"$sfDir"}"""
     println(line)
     // also persist to files: the round-7 BENCH artifact lost its
     // "total" line to driver-side log truncation, and the harness's

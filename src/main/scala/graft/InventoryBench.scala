@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** SHOW PARTITIONS + DESCRIBE manifest-cache micro-benchmark — the
   * measurement the scale artifacts cannot carry: the registered
   * `boost_show_partitions` / `boost_describe` rows ingest a FRESH
@@ -29,15 +27,8 @@ object InventoryBench {
     val outJson = args.lift(1).getOrElse("BENCH_inventory.json")
     val root = sys.env.getOrElse("SPARK_GRAFT_INV_ROOT",
       "/tmp/graft_inventory_store")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
     val fam = graft.sources.TimeSeriesTable.fromEvents(

@@ -20,14 +20,7 @@ object PlanDump {
     val outDir = Paths.get(args(1))
     Files.createDirectories(outDir)
     val only = args.lift(2).map(_.split(",").toSet)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val selected = only.fold(SparkEntry.queries)(f =>
       SparkEntry.queries.view.filterKeys(f).toMap)

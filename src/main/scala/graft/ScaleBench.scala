@@ -179,19 +179,7 @@ object ScaleBench {
       else "/tmp/graft_scale10")
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "10").toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same UTC contract as Bench/Verify — NTZ→instant reinterpretation
-      // in Tables.normalizeEventsTs depends on the session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      // TIMESTAMP(NANOS) parquet loads as raw longs instead of throwing
-      // (session-level config, set beside the UTC pin; Tables loaders are
-      // conf-write free — see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val marker =
@@ -365,8 +353,6 @@ object ScaleBench {
           floors.map { case (n, f) => n -> f })},""" +
         s""""base":${jmap(rb)},"scaled":${jmap(rs)}},"""
       }
-    def jfail(m: Seq[(String, String)]): String =
-      m.map { case (k, v) => s""""$k":"${v.replace("\"", "'")}"""" }.mkString("{", ",", "}")
     val totalBase = baseT.map(_._2).sum
     val totalScale = scaleT.map(_._2).sum
     // Streaming replays pay a per-query micro-batch startup floor that
@@ -395,7 +381,7 @@ object ScaleBench {
       f""""total_base_sec":$totalBase%.3f,"total_scaled_sec":$totalScale%.3f,""" +
       f""""total_ratio":${totalScale / totalBase}%.2f,""" + decomp + annRecall +
       s""""base":${jmap(baseT)},"scaled":${jmap(scaleT)},"ratio":${jmap(ratios)},""" +
-      s""""failed_base":${jfail(baseF)},"failed_scaled":${jfail(scaleF)}}"""
+      s""""failed_base":${Bench.jfail(baseF)},"failed_scaled":${Bench.jfail(scaleF)}}"""
     Files.writeString(Paths.get(outJson), json + "\n")
     println(json)
     spark.stop()

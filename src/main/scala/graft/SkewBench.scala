@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Hot-series skew artifact: the per-series window tier (`boost_ts_*`,
@@ -32,14 +31,7 @@ object SkewBench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "30").toInt
     val hotReps = sys.env.getOrElse("SPARK_GRAFT_HOT_REPS", (reps * 2 / 5).toString).toInt
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     Seq((uniDir, 0), (skewDir, hotReps)).foreach { case (d, hr) =>
@@ -152,9 +144,6 @@ object SkewBench {
         den.get(n).map(b => n -> (if (b > 0) t / b else Double.NaN)) }
     def jmap(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => f""""$k":$v%.4f""" }.mkString("{", ",", "}")
-    def jfail(m: Seq[(String, String)]): String =
-      m.map { case (k, v) => s""""$k":"${v.replace("\"", "'")}"""" }
-        .mkString("{", ",", "}")
     val svu = ratios(skewT, uniM)
     val json =
       s"""{"tier":"skew","base_sf":"$baseDir","scale_factor":$reps,""" +
@@ -174,8 +163,8 @@ object SkewBench {
       s""""skew_vs_uniform":${jmap(ratios(sSkewT, sUniT.toMap))},""" +
       s""""rows_uniform":${jmap(sUniRows)},""" +
       s""""rows_user_skew":${jmap(sSkewRows)},""" +
-      s""""failed":${jfail((sUniF ++ sSkewF).distinct)}},""" +
-      s""""failed":${jfail((baseF ++ uniF ++ skewF).distinct)}}"""
+      s""""failed":${Bench.jfail((sUniF ++ sSkewF).distinct)}},""" +
+      s""""failed":${Bench.jfail((baseF ++ uniF ++ skewF).distinct)}}"""
     Files.writeString(Paths.get(outJson), json + "\n")
     println(json)
     spark.stop()

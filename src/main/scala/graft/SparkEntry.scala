@@ -21,28 +21,13 @@ import graft.queries.{BoostQueries, PipelineQueries, RelationalQueries,
   */
 object SparkEntry {
 
-  /** Session-level config the engine contracts on, applied set-if-needed
-    * to the CALLER's session: this is the one entrypoint that runs under
-    * a session graft did not build (the driver's), and session config is
-    * an entrypoint responsibility — the Tables loaders are conf-write
-    * free. UTC makes TIMESTAMP_NTZ reinterpretation lossless
-    * ([[graft.tables.Tables.normalizeEventsTs]]); nanosAsLong lets a
-    * TIMESTAMP(NANOS) testdata generation load at all.
-    */
-  private def pinSessionConf(spark: SparkSession): Unit = {
-    Seq("spark.sql.session.timeZone" -> "UTC",
-        "spark.sql.legacy.parquet.nanosAsLong" -> "true").foreach {
-      case (k, v) => if (spark.conf.getOption(k) != Some(v)) spark.conf.set(k, v)
-    }
-  }
-
   /** Flagship: the reference's own flagship query
     * (query/executor/executor_test.go:188 —
     * `SELECT cpu_utilization.host, cpu_utilization FROM d.f WHERE cpu_utilization < 100.0`)
     * through the BoostQL parser/compiler on the events family.
     */
   def entry(spark: SparkSession): DataFrame = {
-    pinSessionConf(spark)
+    GraftSession.pin(spark)
     BoostQL.onTestdata(spark, "/root/testdata/sf0.001")(
       "SELECT click.user, click FROM dom.events WHERE click < 100.0")
   }
@@ -51,7 +36,7 @@ object SparkEntry {
     (BoostQueries.queries ++ TimeSeriesQueries.queries ++
       RelationalQueries.queries ++ PipelineQueries.queries ++
       StreamingQueries.queries).view.mapValues { q =>
-      (s: SparkSession, d: String) => { pinSessionConf(s); q(s, d) }
+      (s: SparkSession, d: String) => { GraftSession.pin(s); q(s, d) }
     }.toMap
 
   def oracleSql: Map[String, String] =

@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.boostql.BoostQL
 
 /** End-to-end BoostQL demo — the analogue of the reference's
@@ -12,17 +11,7 @@ import graft.boostql.BoostQL
 object BasicQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-basic-query")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // TIMESTAMP(NANOS) parquet loads as raw longs instead of throwing
-      // (session-level config, set beside the UTC pin; Tables loaders are
-      // conf-write free — see Tables.events)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(4).appName("graft-basic-query").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val run = BoostQL.onTestdata(spark, sfDir) _
 

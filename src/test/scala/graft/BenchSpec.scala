@@ -27,4 +27,18 @@ class BenchSpec extends SparkSpec {
     assert(timed.map(_._1) == Seq("a", "b"))
     assert(timed.forall(_._2 > 0))
   }
+
+  test("jstr and jfail write JSON that parses back to the same strings") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val nasty = Seq("say \"hi\"", "C:\\tmp", "line1\nline2", "cr\r", "a\tb",
+      "ctl\u0001", "[ANALYSIS] \"x\"\n\tat \\q")
+    val mapper = new ObjectMapper
+    nasty.foreach { s =>
+      assert(mapper.readValue(Bench.jstr(s), classOf[String]) == s)
+    }
+    val failed = nasty.zipWithIndex.map { case (s, i) => s"q$i\n" -> s }
+    val back = mapper.readTree(Bench.jfail(failed))
+    assert(back.size == failed.size)
+    failed.foreach { case (k, v) => assert(back.get(k).asText == v) }
+  }
 }

@@ -8,13 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * shuffle-partition count keeps tiny-data tests fast.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // plan-shape specs read PushedFilters out of plan strings; the
     // 100-char default truncates them mid-token (set ONCE here — a
     // per-test conf.set would leak into suites sharing this session)

@@ -1015,7 +1015,6 @@ class BoostQLSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft-tsq").toString
     TimeSeriesTable.append(fam, root, "dom", "events")
     val stored = TimeSeriesTable.open(spark, "" + root, "dom", "events")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     val df = Compiler.compile(Parser.parse(
       "SELECT click, ts FROM dom.events " +
         "WHERE ts >= '2024-01-10 00:00:00' AND ts < '2024-01-12 00:00:00'"), stored)

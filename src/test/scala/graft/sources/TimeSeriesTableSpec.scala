@@ -51,7 +51,6 @@ class TimeSeriesTableSpec extends SparkSpec {
     val fam = TimeSeriesTable.fromEvents(Tables.events(spark, sfDir))
     TimeSeriesTable.append(fam, root, "dom", "events")
     val back = TimeSeriesTable.open(spark, root, "dom", "events")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     val scanned = TimeSeriesTable.fetchSeries(back, "click",
       Timestamp.valueOf("2024-01-10 00:00:00"),
       Timestamp.valueOf("2024-01-12 00:00:00"))

@@ -2,6 +2,8 @@ package graft.tables
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -115,5 +117,34 @@ class TablesContractSpec extends SparkSpec {
     assert(graft.util.ParquetStats.eventsMaxTsMicros(spark, asInt96).isEmpty)
     assert(graft.util.ParquetStats
       .eventsMaxTsMicros(spark, tmp("statsempty")).isEmpty)
+  }
+
+  test("the session contract lives in GraftSession: pin restores it, and no other file builds a session") {
+    import org.apache.spark.sql.internal.SQLConf
+    val tz = SQLConf.SESSION_LOCAL_TIMEZONE.key
+    val nanos = SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key
+    val other = SQLConf.SHUFFLE_PARTITIONS.key
+    val otherBefore = spark.conf.get(other)
+    try {
+      spark.conf.set(tz, "America/New_York")
+      spark.conf.set(nanos, "false")
+      graft.GraftSession.pin(spark)
+      assert(spark.conf.get(tz) == "UTC")
+      assert(spark.conf.get(nanos) == "true")
+      assert(spark.conf.get(other) == otherBefore)
+    } finally {
+      spark.conf.set(tz, "UTC")
+      spark.conf.set(nanos, "true")
+    }
+
+    // split so this file does not match its own scan
+    val builderCall = "SparkSession" + ".builder"
+    val stream = Files.walk(java.nio.file.Paths.get("src"))
+    val builders =
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(f => Files.readString(f).contains(builderCall))
+        .map(_.toString).toList
+      finally stream.close()
+    assert(builders == List("src/main/scala/graft/GraftSession.scala"))
   }
 }

@@ -265,7 +265,11 @@ object BoostQL {
     *     on ANY date, so the classification reads the WHOLE family
     *     (inherent to mirror-sync); keep-only dates still stay
     *     byte-identical, and a by-source UPDATE touching only series S
-    *     rewrites only dates holding an absent-key S row.
+    *     rewrites only dates holding an absent-key S row. A USING
+    *     select with NO rows leaves every target row not matched by
+    *     source (ANSI), so these clauses then apply to the whole family
+    *     as a DELETE or UPDATE with the same condition would; without
+    *     them an empty source writes nothing.
     *
     * Matched clauses apply FIRST-TRUE-WINS in statement order (ANSI);
     * a row matching no clause is kept unchanged. Conditions ride the

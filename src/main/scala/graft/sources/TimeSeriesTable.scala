@@ -278,11 +278,9 @@ object TimeSeriesTable {
     val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tgtPath = new Path(s"$root/$domain/$target")
     val statuses = listDataStatus(fs, srcPath)
+    requireLayout(statuses.map(_.getPath.toString), "refreshDownsample",
+      srcDir)
     val byDt = statuses.groupBy(st => dtOf(st.getPath.toString))
-    if (byDt.contains(None))
-      throw new IOException(
-        s"refreshDownsample on $srcDir: data files exist OUTSIDE the " +
-          "dt= partition layout — compact() the family first")
     val sig: Map[String, String] =
       byDt.collect { case (Some(d), sts) => d -> signature(sts) }
     val manifestPath = new Path(tgtPath, ".graft_refresh_manifest")
@@ -382,7 +380,9 @@ object TimeSeriesTable {
   }
 
   /** Read data files by EXPLICIT list ([[compact]]'s rationale) with
-    * the path-derived `dt` (`basePath` keeps it derivable). */
+    * the path-derived `dt` (`basePath` keeps it derivable). Spark then
+    * reads only files inside a `dt=` directory and skips the rest
+    * without an error — [[requireLayout]] refuses such a family first. */
   private def readFiles(spark: SparkSession, dir: String,
       files: Seq[String]): DataFrame =
     spark.read.schema(withDt).option("basePath", dir).parquet(files: _*)
@@ -396,6 +396,15 @@ object TimeSeriesTable {
   /** The files that sit in one of the `dates` partitions. */
   private def filesOn(files: Seq[String], dates: Set[String]): Seq[String] =
     files.filter(f => dtOf(f).exists(dates.contains))
+
+  /** Refuse `what` on a family holding data files OUTSIDE the dt=
+    * layout: a [[readFiles]] read skips them and a per-partition swap
+    * cannot place them. A check on the listing; it runs no Spark job. */
+  private def requireLayout(files: Seq[String], what: String,
+      dir: String): Unit =
+    if (files.exists(dtOf(_).isEmpty)) throw new IOException(
+      s"$what on $dir: data files exist OUTSIDE the dt= partition " +
+        "layout — compact() the family first")
 
   /** A file set's signature, the sidecar manifests' invalidation key:
     * MD5 of the sorted name:length:mtime list. mtime catches a
@@ -484,7 +493,7 @@ object TimeSeriesTable {
       suffix: String): Path =
     new Path(s"$root/$domain/.${family}__$suffix")
 
-  /** Stage an incoming batch for [[upsertRows]] / [[mergeRows]]: an
+  /** Stage the [[mutate]] kernel's incoming batch: an
     * arbitrary plan is not re-read-stable, so the batch is written once
     * to the verb's staging temp and read back by explicit file list (no
     * hidden-path filter on the dot-prefixed temp). ONE pass then gives
@@ -522,19 +531,9 @@ object TimeSeriesTable {
     (inc, dtStats.map(r => (r.getDate(0).toString, r.getLong(1))).toMap)
   }
 
-  /** Per-date row counts of `rows` (path-derived `dt`); rows outside
-    * the dt= layout refuse, since the swap cannot place them. */
-  private def countByDate(rows: DataFrame, what: String): Map[String, Long] = {
-    val counts = rows.groupBy(col("dt")).count().collect()
-    if (counts.exists(_.isNullAt(0))) throw new IOException(
-      s"$what exist OUTSIDE the dt= partition layout — the per-partition " +
-        "copy-on-write swap needs the partitioned layout; compact() the " +
-        "family first")
-    counts.map(r => (r.getDate(0).toString, r.getLong(1))).toMap
-  }
-
-  /** Rewrite parallelism for the mutate verbs ([[deleteRows]] /
-    * [[updateRows]]): hash each date's rows into
+  /** Rewrite parallelism of the [[mutate]] kernel, which every
+    * copy-on-write mutate verb (DELETE, UPDATE, UPSERT, MERGE) runs
+    * through: hash each date's rows into
     * `shufflePartitions / |affected partitions|` series slices, so a
     * takedown touching three dates of a TB-per-day family does NOT
     * serialize each date into one task (a bare `repartition(dt)`
@@ -692,6 +691,9 @@ object TimeSeriesTable {
     *    compacted directory is batch-owned), so roll any live ingest
     *    stream to a new root first — its checkpoint's file log does not
     *    carry over.
+    *  - Data files OUTSIDE the dt= layout (the mutate verbs and
+    *    [[refreshDownsample]] refuse a family holding them) fold into
+    *    the date partitions of their rows.
     *  - The rewrite is VERIFIED (row counts must match) before the
     *    source is touched; a mismatch aborts with the source intact.
     *  - The swap is the whole-directory commit protocol ([[swapDir]],
@@ -714,7 +716,13 @@ object TimeSeriesTable {
     // (source count + rewrite count) for the same verification
     val expected = footerRowCount(spark, files)
     val tmp = scratch(root, domain, family, Verb.Compact.temp)
-    readFiles(spark, dir, files).repartition(col("dt"))
+    // files outside the dt= layout, which a basePath read skips, are
+    // read on their own and fold into the partitions of their rows' dates
+    val (inLayout, outside) = files.partition(dtOf(_).isDefined)
+    (Option.when(inLayout.nonEmpty)(readFiles(spark, dir, inLayout)) ++
+      Option.when(outside.nonEmpty)(spark.read.schema(schema)
+        .parquet(outside: _*).withColumn("dt", to_date(col("ts")))))
+      .reduce(_ unionByName _).repartition(col("dt"))
       .sortWithinPartitions("series", "ts")
       .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
     // verify via the explicit file list as well: the temp dir is
@@ -740,8 +748,7 @@ object TimeSeriesTable {
     * or a takedown touch" question: one row per `dt=` date partition
     * with its file count, byte size and parquet-footer row total,
     * sorted by partition. METADATA-ONLY: one parallel listing plus
-    * footer reads, no data scan — the same cost class as the mutate
-    * verbs' count passes, safe to point at a petabyte family. Files
+    * footer reads, no data scan — safe to point at a petabyte family. Files
     * outside the dt= layout (pre-partition-era writes) group under
     * `(unpartitioned)` so the inventory never under-reports.
     *
@@ -949,59 +956,29 @@ object TimeSeriesTable {
     * matching rows.
     *
     * Semantics: rows where `predicate` is TRUE are deleted; FALSE and
-    * NULL rows are kept (ANSI DELETE). Two passes:
+    * NULL rows are kept (ANSI DELETE). A partition whose every row
+    * matched disappears; partitions with no matches are never read
+    * past the classification, moved or rewritten — their files stay
+    * BYTE-IDENTICAL (pinned in TimeSeriesTableSpec).
     *
-    *  1. COUNT scan: per-partition matched counts. Column-pruned to
-    *     the predicate's columns + `dt`, and series/ts conjuncts push
-    *     into parquet row-group stats — at 100 TB a takedown touching
-    *     three dates reads a few predicate columns everywhere and
-    *     actual data almost nowhere. The collect is bounded: one row
-    *     per AFFECTED date partition.
-    *  2. REWRITE: only the affected partitions' files (explicit file
-    *     list, same [[compact]] rationale) are re-read, the kept rows
-    *     rewritten in the [[append]] layout ((series, ts)-sorted), the
-    *     result VERIFIED against parquet footers (kept = source −
-    *     matched, per the count pass) before anything moves, then
-    *     committed by the shared protocol ([[swapPartitions]], aside
-    *     `.{family}__delete_old`); a partition whose every row matched
-    *     disappears. Partitions with no matches are never read, moved,
-    *     or rewritten — their files stay BYTE-IDENTICAL (pinned in
-    *     TimeSeriesTableSpec).
-    *
-    * Returns (rows deleted, affected partition names); (0, empty) when
-    * nothing matches — no writes at all in that case.
+    * Machinery: the [[mutate]] kernel with no batch and the one clause
+    * `WHEN NOT MATCHED BY SOURCE AND predicate THEN DELETE` (aside
+    * `.{family}__delete_old`). Returns (rows deleted, affected partition
+    * names); (0, empty) when nothing matches — no writes at all in that
+    * case.
     */
   def deleteRows(spark: SparkSession, root: String, domain: String,
       family: String, predicate: Column): (Long, Seq[String]) = {
-    val dir = s"$root/$domain/$family"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = listDataFiles(fs, new Path(dir))
-    if (files.isEmpty) return (0L, Seq.empty)
-    val hit = coalesce(predicate, lit(false))
-    val matched = countByDate(readFiles(spark, dir, files).filter(hit),
-      s"row-level DELETE on $dir: matching rows")
-    if (matched.isEmpty) return (0L, Seq.empty)
-    val affected = matched.keySet
-    val affectedFiles = filesOn(files, affected)
-    // the verification identity: kept-after-rewrite must equal the
-    // affected partitions' footer total minus the count pass's matches
-    val expectedKept = footerRowCount(spark, affectedFiles) - matched.values.sum
-    rewrite(spark, fs, Verb.Delete, root, domain, family,
-      readFiles(spark, dir, affectedFiles).filter(!hit), affected,
-      expectedKept, "source minus matches")
-    (matched.values.sum, affected.toSeq.sorted.map(d => s"dt=$d"))
+    val (_, deleted, _, parts) = mutate(spark, Verb.Delete, root, domain,
+      family, None, Nil, NoInserts,
+      Seq(BySourceClause(Some(predicate), "delete")))
+    (deleted, parts)
   }
 
   /** ROW-LEVEL UPDATE — the redaction path, [[deleteRows]]'s sibling
     * mutate verb: where DELETE removes a takedown's rows, UPDATE
     * rewrites them in place (PII masking — `SET click.user =
-    * 'REDACTED'` — value corrections, attribute backfills). Same
-    * copy-on-write machinery, same 100 TB stance: a count pass finds
-    * the affected date partitions (column-pruned, predicate-pushed,
-    * collect bounded by one row per affected partition), then ONLY
-    * those partitions' files are re-read with the assignments applied,
-    * footer-verified, and committed by the shared protocol
-    * ([[swapPartitions]], aside `.{family}__update_old`). Untouched
+    * 'REDACTED'` — value corrections, attribute backfills). Untouched
     * partitions stay byte-identical.
     *
     * Assignments are `(series, attr, rhs)` triples over the long
@@ -1012,43 +989,25 @@ object TimeSeriesTable {
     * expressions see pre-update state, so `SET a = b, b = a` swaps).
     * A row is touched when `predicate` is TRUE on it AND its series
     * has an assignment; FALSE/NULL rows and other series pass through
-    * bit-unchanged inside rewritten partitions.
+    * bit-unchanged inside rewritten partitions. UPDATE moves no rows —
+    * `ts` and `series` are not assignable, so no row changes partition.
     *
-    * The verify identity is row-count PRESERVATION: the rewrite must
-    * hold exactly the affected partitions' footer total (UPDATE moves
-    * no rows — `ts` and `series` are not assignable, so no row changes
-    * partition). Returns (rows updated, affected partition names);
-    * (0, empty) when nothing matches — no writes.
+    * Machinery: the [[mutate]] kernel with no batch and the one clause
+    * `WHEN NOT MATCHED BY SOURCE AND predicate THEN UPDATE SET …`
+    * (aside `.{family}__update_old`); a row of a series without an
+    * assignment is the kernel's by-source UPDATE no-op. Returns (rows
+    * updated, affected partition names); (0, empty) when nothing
+    * matches — no writes.
     */
   def updateRows(spark: SparkSession, root: String, domain: String,
       family: String, predicate: Column,
       assigns: Seq[(String, Option[String], Column)])
       : (Long, Seq[String]) = {
     require(assigns.nonEmpty, "updateRows needs at least one assignment")
-    val dir = s"$root/$domain/$family"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = listDataFiles(fs, new Path(dir))
-    if (files.isEmpty) return (0L, Seq.empty)
-    val hit = coalesce(predicate, lit(false))
-    val targetSeries = assigns.map(_._1).distinct
-    val touched = hit && col("series").isin(targetSeries: _*)
-    val matched = countByDate(readFiles(spark, dir, files).filter(touched),
-      s"row-level UPDATE on $dir: matching rows")
-    if (matched.isEmpty) return (0L, Seq.empty)
-    val affected = matched.keySet
-    val affectedFiles = filesOn(files, affected)
-    // the verification identity: UPDATE preserves row counts — the
-    // rewrite must hold exactly the affected partitions' footer total
-    val expectedRows = footerRowCount(spark, affectedFiles)
-    // all assignments in ONE select over the OLD row
-    val (newValue, newAttrs) =
-      applyAssigns(assigns, hit, col("value"), col("attributes"))
-    rewrite(spark, fs, Verb.Update, root, domain, family,
-      readFiles(spark, dir, affectedFiles)
-        .select(col("series"), col("ts"), newValue.as("value"),
-          col("tags"), newAttrs.as("attributes"), col("dt")),
-      affected, expectedRows, "updates preserve row counts")
-    (matched.values.sum, affected.toSeq.sorted.map(d => s"dt=$d"))
+    val (updated, _, _, parts) = mutate(spark, Verb.Update, root, domain,
+      family, None, Nil, NoInserts,
+      Seq(BySourceClause(Some(predicate), "update", assigns)))
+    (updated, parts)
   }
 
   /** UPDATE's and MERGE by-source's SET machinery, on rows where
@@ -1076,93 +1035,39 @@ object TimeSeriesTable {
     (newValue, newAttrs)
   }
 
-  /** ROW-LEVEL UPSERT (MERGE) — the idempotent-ingest verb completing
-    * the mutate tier ([[deleteRows]] is the takedown, [[updateRows]]
-    * the redaction, this the re-delivery): every incoming row REPLACES
-    * all existing rows with the same (series, ts) key and INSERTS
+  /** ROW-LEVEL UPSERT — the idempotent-ingest verb completing the
+    * mutate tier ([[deleteRows]] is the takedown, [[updateRows]] the
+    * redaction, this the re-delivery): every incoming row REPLACES all
+    * existing rows with the same (series, ts) key and INSERTS
     * otherwise, so re-running a batch (at-least-once upstreams,
     * backfill re-runs, late corrections) never duplicates points. The
     * reference's write path is append-only (boostsession.go:94-184);
     * re-delivery there duplicates.
     *
-    * The incoming frame is STAGED to parquet first ([[stage]]: one
-    * write, batch-proportional, so the key-overlap count and the
-    * rewrite see the SAME rows). Incoming frames with NULL or
-    * internally-duplicate (series, ts) keys refuse — which duplicate
-    * wins is undefined in a DataFrame.
+    * Incoming frames with NULL or internally-duplicate (series, ts)
+    * keys refuse — which duplicate wins is undefined in a DataFrame.
+    * Existing duplicate keys all fall to the one incoming row. Only
+    * dates where a key collides rewrite; every other incoming date
+    * (existing or brand new) takes the plain additive [[append]], so
+    * the daily-ingest case stays append-cheap even when spelled as
+    * UPSERT.
     *
-    * Incoming dates then split two ways (bounded collects — one row
-    * per date):
-    *
-    *  - dates whose keys OVERLAP existing rows → copy-on-write rewrite
-    *    of only those partitions (existing rows anti-joined against the
-    *    incoming keys, unioned with the incoming rows), footer-VERIFIED
-    *    (kept = existing − replaced + incoming) before anything moves,
-    *    then committed by the shared protocol ([[swapPartitions]],
-    *    aside `.{family}__upsert_old`);
-    *  - dates with no key overlap (whether the partition exists or is
-    *    brand new) → plain additive [[append]] of just those incoming
-    *    rows. The daily-ingest case stays append-cheap even when
-    *    spelled as UPSERT — no rewrite unless a key actually collides.
-    *
-    * Existing duplicate keys all fall to the one incoming row (MERGE's
-    * delete-then-insert semantics). A crash between the swap and the
-    * append phase
-    * leaves the replaced dates applied and the append dates absent —
-    * re-running the same upsert finishes it (replacement is
-    * idempotent). Returns (existing rows replaced, incoming rows
-    * written, rewritten partition names).
+    * Machinery: the [[mutate]] kernel with the batch, the one clause
+    * `WHEN MATCHED THEN DELETE` and every batch row inserted (aside
+    * `.{family}__upsert_old`). This delete-then-insert form is what
+    * collapses existing duplicates; MERGE's matched UPDATE keeps them.
+    * A crash between the swap and the append phase leaves the replaced
+    * dates applied and the append dates absent — re-running the same
+    * upsert finishes it (replacement is idempotent). Returns (existing
+    * rows replaced, incoming rows written, rewritten partition names).
     */
   def upsertRows(spark: SparkSession, root: String, domain: String,
       family: String, incoming: DataFrame): (Long, Long, Seq[String]) = {
-    val missing = SchemaColumns.filterNot(incoming.columns.contains)
-    require(missing.isEmpty,
-      s"upsertRows needs the family columns; missing ${missing.mkString(", ")}")
-    val dir = s"$root/$domain/$family"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val (inc, incDates) = stage(spark, fs, Verb.Upsert, root, domain,
-        family, incoming, "which duplicate wins is undefined in a " +
-          "DataFrame; aggregate the batch to one row per key first")
-      if (incDates.isEmpty) return (0L, 0L, Seq.empty)
-      val files = listDataFiles(fs, new Path(dir))
-      // only files on incoming dates can hold colliding keys; files
-      // OUTSIDE the dt= layout could too, invisibly to the swap — read
-      // them in the count pass and refuse if they collide (same
-      // compact-first contract as the other mutate verbs)
-      val candidates = files.filter(f =>
-        dtOf(f).fold(true)(incDates.contains))
-      val overlapByDt: Map[String, Long] =
-        if (candidates.isEmpty) Map.empty
-        else countByDate(readFiles(spark, dir, candidates)
-          .join(inc.select("series", "ts"), Seq("series", "ts"), "leftsemi"),
-          s"UPSERT into $dir: colliding keys")
-      val overlapDates = overlapByDt.keySet
-      val replaced = overlapByDt.values.sum
-      def onDates(ds: Set[String]) = inc.filter(
-        to_date(col("ts")).isin(ds.toSeq.map(java.sql.Date.valueOf): _*))
-      if (overlapDates.nonEmpty) {
-        val rewriteFiles = filesOn(files, overlapDates)
-        val expectedKept = footerRowCount(spark, rewriteFiles) - replaced +
-          overlapDates.toSeq.map(incDates).sum
-        // existing rows KEEP their path-derived dt (like the sibling
-        // verbs — a row never migrates partitions in a rewrite);
-        // incoming rows land on their ts-date, which is within the
-        // overlap set by construction
-        rewrite(spark, fs, Verb.Upsert, root, domain, family,
-          readFiles(spark, dir, rewriteFiles)
-            .join(inc.select("series", "ts"), Seq("series", "ts"), "left_anti")
-            .unionByName(onDates(overlapDates)
-              .withColumn("dt", to_date(col("ts")))),
-          overlapDates, expectedKept, "existing − replaced + incoming")
-      }
-      val appendDates = incDates.keySet -- overlapDates
-      if (appendDates.nonEmpty)
-        append(onDates(appendDates), root, domain, family)
-      (replaced, incDates.values.sum,
-        overlapDates.toSeq.sorted.map(d => s"dt=$d"))
-    } finally
-      fs.delete(scratch(root, domain, family, Verb.Upsert.staged.head), true)
+    val (_, replaced, written, parts) = mutate(spark, Verb.Upsert, root,
+      domain, family, Some((incoming, "which duplicate wins is undefined " +
+        "in a DataFrame; aggregate the batch to one row per key first")),
+      Seq((None, "delete")), AllInserts, Nil)
+    (replaced, written, parts)
   }
 
   /** One `WHEN NOT MATCHED BY SOURCE` clause for [[mergeRows]]:
@@ -1178,9 +1083,9 @@ object TimeSeriesTable {
       assigns: Seq[(String, Option[String], Column)] =
         Seq.empty)
 
-  /** ANSI MERGE over a family — the general mutate verb subsuming
-    * [[upsertRows]] (which is matched-UPDATE + not-matched-INSERT with
-    * no conditions): incoming rows match existing rows on the family
+  /** ANSI MERGE over a family — the general mutate verb: [[deleteRows]],
+    * [[updateRows]] and [[upsertRows]] are clause sets over the same
+    * [[mutate]] kernel. Incoming rows match existing rows on the family
     * key (series, ts); each MATCHED existing row takes the FIRST
     * `matched` clause whose condition holds — `"update"` replaces the
     * row with the source row (value, tags, attributes), `"delete"`
@@ -1189,24 +1094,12 @@ object TimeSeriesTable {
     * conditions are Columns over the JOINED row: the existing row's
     * columns (series, ts, value, tags, attributes) plus the source
     * row's as `src_value` / `src_tags` / `src_attributes`; a NULL
-    * condition is false (ANSI).
-    *
-    * Same copy-on-write machinery and 100 TB stance as the sibling
-    * verbs: the incoming batch STAGES to parquet once ([[stage]]; the
-    * classification pass and the rewrite must see identical rows —
-    * recomputing a nondeterministic source between passes would merge
-    * two different batches), a classification pass touches only files
-    * on incoming dates (column access is the clause conditions' and
-    * the collect is bounded at one row per date × clause), ONLY dates
-    * holding a non-keep outcome rewrite — footer-verified at
-    * existing − deleted + inserted-on-those-dates — and commit by the
-    * shared protocol ([[swapPartitions]], aside `.{family}__merge_old`).
-    * Matched-keep-only dates and untouched
-    * dates stay byte-identical; unmatched inserts on non-rewrite dates
-    * take the additive [[append]] path (a daily-ingest MERGE stays
-    * append-cheap). Existing duplicate (series, ts) keys each take the
-    * merge outcome independently — the verb preserves multiplicity;
-    * UPSERT is the collapsing variant.
+    * condition is false (ANSI). Existing duplicate (series, ts) keys
+    * each take the merge outcome independently — the verb preserves
+    * multiplicity; UPSERT is the collapsing variant. Matched-keep-only
+    * dates and untouched dates stay byte-identical; unmatched inserts
+    * on non-rewrite dates take the additive [[append]] path (a
+    * daily-ingest MERGE stays append-cheap).
     *
     * `bySource` carries the mirror-sync clauses (`WHEN NOT MATCHED BY
     * SOURCE [AND <cond>] THEN DELETE | UPDATE SET …`): existing rows
@@ -1222,8 +1115,12 @@ object TimeSeriesTable {
     * date to rewrite. Locality inverts: absent-key rows can sit on ANY
     * date, so the classification covers the WHOLE family, not just
     * incoming dates — keep-only dates still stay byte-identical.
-    * Returns (rows updated, rows deleted, rows inserted, rewritten
-    * partitions).
+    *
+    * An EMPTY batch leaves every existing row not matched by source
+    * (ANSI): its by-source clauses apply to the whole family, exactly
+    * as a DELETE or UPDATE with the clause's condition would. An empty
+    * batch without by-source clauses writes nothing. Returns (rows
+    * updated, rows deleted, rows inserted, rewritten partitions).
     */
   def mergeRows(spark: SparkSession, root: String, domain: String,
       family: String, incoming: DataFrame,
@@ -1244,33 +1141,82 @@ object TimeSeriesTable {
       "a NOT MATCHED BY SOURCE DELETE clause takes no SET assignments")
     require(matched.nonEmpty || insertUnmatched || bySource.nonEmpty,
       "MERGE needs at least one WHEN clause")
-    val missing = SchemaColumns.filterNot(incoming.columns.contains)
-    require(missing.isEmpty,
-      s"mergeRows needs the family columns; missing ${missing.mkString(", ")}")
+    mutate(spark, Verb.Merge, root, domain, family,
+      Some((incoming, "ANSI MERGE refuses a source that matches one " +
+        "target row twice; aggregate the batch to one row per key")),
+      matched, if (insertUnmatched) UnmatchedInserts else NoInserts,
+      bySource)
+  }
+
+  /** Which batch rows the [[mutate]] kernel writes: none, the ones
+    * whose key no existing row holds (MERGE's `WHEN NOT MATCHED THEN
+    * INSERT`), or every one (UPSERT, whose matched rows are deleted). */
+  private sealed trait Inserts
+  private case object NoInserts extends Inserts
+  private case object UnmatchedInserts extends Inserts
+  private case object AllInserts extends Inserts
+
+  /** THE MUTATE KERNEL of the copy-on-write verbs. Each verb is a MERGE
+    * clause set over it, run under the verb's own [[Verb]] names:
+    *
+    *  - DELETE `WHERE p`: no batch, `WHEN NOT MATCHED BY SOURCE AND p
+    *    THEN DELETE`;
+    *  - UPDATE `SET … WHERE p`: no batch, `WHEN NOT MATCHED BY SOURCE
+    *    AND p THEN UPDATE SET …`;
+    *  - UPSERT: `WHEN MATCHED THEN DELETE`, then insert every batch row;
+    *  - MERGE: its own clauses, inserting the unmatched batch rows when
+    *    it has a `WHEN NOT MATCHED THEN INSERT`.
+    *
+    * Steps, at the 100 TB stance of the tier:
+    *
+    *  1. REFUSE a family with data files outside the dt= layout
+    *     ([[requireLayout]], a listing check).
+    *  2. STAGE the batch, if any ([[stage]]): the classification and
+    *     the rewrite must see identical rows. An empty batch with
+    *     by-source clauses runs as no batch — ANSI leaves every target
+    *     row NOT MATCHED BY SOURCE; without them it writes nothing.
+    *  3. CLASSIFY: each existing row takes the first true clause
+    *     (matched clauses for rows whose key the batch holds, by-source
+    *     ones for the rest; -1 keeps the row), counted per (date,
+    *     clause) — a collect bounded at touched dates × (clauses + 1)
+    *     rows. It reads the batch's dates only, or the whole family
+    *     when by-source clauses exist. With no batch it filters on the
+    *     clause conditions themselves: a Filter keeps only TRUE rows,
+    *     the rows it drops would be kept anyway, and the conditions'
+    *     series/ts conjuncts push into parquet row-group stats.
+    *  4. REWRITE only the dates holding a non-keep outcome, with the
+    *     batch rows inserted on them, footer-verified at existing −
+    *     deleted + inserted ([[rewrite]]) before [[swapPartitions]].
+    *     Keep-only and untouched dates stay byte-identical.
+    *  5. APPEND the inserted rows of every other date ([[append]]).
+    *
+    * Returns (rows updated, rows deleted, rows inserted, rewritten
+    * partition names).
+    */
+  private def mutate(spark: SparkSession, verb: Verb, root: String,
+      domain: String, family: String, batch: Option[(DataFrame, String)],
+      matchedClauses: Seq[(Option[Column], String)], inserts: Inserts,
+      bySource: Seq[BySourceClause]): (Long, Long, Long, Seq[String]) = {
+    batch.foreach { case (incoming, _) =>
+      val missing = SchemaColumns.filterNot(incoming.columns.contains)
+      require(missing.isEmpty, s"${verb.name}Rows needs the family " +
+        s"columns; missing ${missing.mkString(", ")}")
+    }
     val dir = s"$root/$domain/$family"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val insStaging = scratch(root, domain, family, Verb.Merge.staged(1))
+    val files = listDataFiles(fs, new Path(dir))
+    requireLayout(files, verb.label, dir)
     try {
-      val (inc, incDates) = stage(spark, fs, Verb.Merge, root, domain,
-        family, incoming, "ANSI MERGE refuses a source that matches one " +
-          "target row twice; aggregate the batch to one row per key")
-      if (incDates.isEmpty) return (0L, 0L, 0L, Seq.empty)
-      val files = listDataFiles(fs, new Path(dir))
-      // only files on incoming dates can hold matching keys; files
-      // OUTSIDE the dt= layout could too, invisibly to the swap —
-      // refuse on collision (compact-first, same as the sibling verbs).
-      // A NOT MATCHED BY SOURCE clause inverts the locality: rows
-      // ABSENT from the batch can sit on ANY date, so the
-      // classification (and potentially the rewrite) covers the whole
-      // family — inherent to mirror-sync, and stated in the sqlMerge
-      // doc rather than silently narrowed.
-      val candidates =
-        if (bySource.nonEmpty) files
-        else files.filter(f => dtOf(f).fold(true)(incDates.contains))
-      val incSrc = inc.select(col("series"), col("ts"),
-        col("value").as("src_value"), col("tags").as("src_tags"),
-        col("attributes").as("src_attributes"),
-        lit(true).as("__src_matched"))
+      val staged = batch.map { case (incoming, dupReason) =>
+        stage(spark, fs, verb, root, domain, family, incoming, dupReason) }
+      if (staged.exists(_._2.isEmpty) && bySource.isEmpty)
+        return (0L, 0L, 0L, Seq.empty)
+      val inc = staged.filter(_._2.nonEmpty)
+      val matched = if (inc.isEmpty) Nil else matchedClauses
+      val candidates = inc match {
+        case Some((_, byDt)) if bySource.isEmpty => filesOn(files, byDt.keySet)
+        case _ => files
+      }
       // first-true-clause-wins index over (condition, index) clauses;
       // NULL conditions are false, no clause true → keep (-1)
       def firstTrue(clauses: Seq[(Option[Column], Int)]): Column =
@@ -1278,151 +1224,122 @@ object TimeSeriesTable {
           val c = coalesce(cond.getOrElse(lit(true)), lit(false))
           Some(acc.fold(when(c, lit(i)))(_.when(c, lit(i))))
         }.fold(lit(-1))(_.otherwise(lit(-1)))
-      val outcome = firstTrue(
-        matched.zipWithIndex.map { case ((cond, _), i) => (cond, i) })
-      // NOT MATCHED BY SOURCE clauses take the index space after the
-      // matched ones (first-true-wins among themselves); conditions see
-      // TARGET columns only. With no by-source clauses this folds to
-      // the keep outcome (-1) — the pre-existing unmatched behavior.
-      val bsOutcome = firstTrue(bySource.zipWithIndex.map {
-        case (cl, i) => (cl.cond, matched.length + i) })
+      // by-source clauses take the index space after the matched ones
+      val bs = bySource.zipWithIndex.map { case (cl, i) =>
+        (cl, matched.length + i) }
+      def targets(cl: BySourceClause) = cl.assigns.map(_._1).distinct
+      val bsRaw = firstTrue(bs.map { case (cl, i) => (cl.cond, i) })
+      // a row captured by a by-source UPDATE whose series has no
+      // assignment is a no-op: ANSI consumed the clause (no
+      // fall-through), and keep (-1) is byte-identical while sparing
+      // its date a rewrite
+      val bsOutcome = bs.foldLeft(bsRaw) {
+        case (acc, (cl, i)) if cl.action == "update" =>
+          when(bsRaw === lit(i) && !col("series").isin(targets(cl): _*),
+            lit(-1)).otherwise(acc)
+        case (acc, _) => acc
+      }
       val deleteIdx = matched.zipWithIndex.collect {
         case ((_, "delete"), i) => i } ++
-        bySource.zipWithIndex.collect {
-          case (cl, i) if cl.action == "delete" => matched.length + i }
+        bs.collect { case (cl, i) if cl.action == "delete" => i }
       val updateIdx = matched.zipWithIndex.collect {
         case ((_, "update"), i) => i }
-      val bsUpdateIdx = bySource.zipWithIndex.collect {
-        case (cl, i) if cl.action == "update" => matched.length + i }
-      // EFFECTIVE outcome: a row captured by a by-source UPDATE clause
-      // whose series has no assignment is a no-op — ANSI already
-      // consumed the clause (bsOutcome picked it, so no fall-through),
-      // and downgrading it to keep (-1) afterwards is byte-identical
-      // while sparing its date a pointless rewrite
-      def effOutcome(raw: Column): Column =
-        bySource.zipWithIndex.foldLeft(raw) {
-          case (acc, (cl, i)) if cl.action == "update" =>
-            val targets = cl.assigns.map(_._1).distinct
-            when(raw === lit(matched.length + i) &&
-              !col("series").isin(targets: _*), lit(-1)).otherwise(acc)
-          case (acc, _) => acc
-        }
-      // classification pass: per (date, outcome) row counts — bounded
-      // at touched dates × (clauses + 1) rows on the driver
+      val bsUpdateIdx = bs.collect { case (cl, i) if cl.action == "update" => i }
+      val incSrc = inc.map(_._1.select(col("series"), col("ts"),
+        col("value").as("src_value"), col("tags").as("src_tags"),
+        col("attributes").as("src_attributes"),
+        lit(true).as("__src_matched")))
+      // each existing row's outcome `__oc`, joined `how` to the batch
+      def classify(existing: DataFrame, how: String): DataFrame =
+        incSrc.fold(existing.withColumn("__oc", bsOutcome))(src =>
+          existing.join(src, Seq("series", "ts"), how).withColumn("__oc",
+            when(coalesce(col("__src_matched"), lit(false)),
+              firstTrue(matched.zipWithIndex.map { case ((c, _), i) =>
+                (c, i) })).otherwise(bsOutcome)))
       val byDtOutcome: Seq[(String, Int, Long)] =
         if (candidates.isEmpty || (matched.isEmpty && bySource.isEmpty))
           Seq.empty
         else {
           val existing = readFiles(spark, dir, candidates)
-          val classified =
-            if (bySource.isEmpty)
-              existing.join(incSrc, Seq("series", "ts"), "inner")
-                .select(col("dt"), outcome.as("__oc"))
-            else existing.join(incSrc, Seq("series", "ts"), "left")
-              .select(col("dt"),
-                when(coalesce(col("__src_matched"), lit(false)), outcome)
-                  .otherwise(effOutcome(bsOutcome)).as("__oc"))
-          val rows = classified
-            .groupBy(col("dt"), col("__oc")).count().collect()
-          if (rows.exists(_.isNullAt(0))) throw new IOException(
-            s"MERGE into $dir: matching keys exist OUTSIDE the dt= " +
-              "partition layout — the per-partition copy-on-write swap " +
-              "needs the partitioned layout; compact() the family first")
-          rows.toSeq.map(r =>
-            (r.getDate(0).toString, r.getInt(1), r.getLong(2)))
+          val reach = bs.map { case (cl, _) =>
+            val c = cl.cond.getOrElse(lit(true))
+            if (cl.action == "update") c && col("series").isin(targets(cl): _*)
+            else c
+          }
+          classify(if (inc.isEmpty) existing.filter(reach.reduce(_ || _))
+              else existing, if (bySource.isEmpty) "inner" else "left")
+            .groupBy(col("dt"), col("__oc")).count().collect().toSeq
+            .map(r => (r.getDate(0).toString, r.getInt(1), r.getLong(2)))
         }
-      val updated = byDtOutcome.collect {
-        case (_, oc, n) if updateIdx.contains(oc) ||
-          bsUpdateIdx.contains(oc) => n }.sum
-      val deleted = byDtOutcome.collect {
-        case (_, oc, n) if deleteIdx.contains(oc) => n }.sum
-      val deletedByDt: Map[String, Long] = byDtOutcome
-        .filter(r => deleteIdx.contains(r._2))
-        .groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-      // a date rewrites only when some row there takes a non-keep
-      // outcome; matched-keep-only dates stay byte-identical
-      val rewriteDates: Set[String] = byDtOutcome
-        .collect { case (d, oc, _) if oc >= 0 => d }.toSet
-      // unmatched incoming rows (the INSERT half) — computed only when
-      // a NOT MATCHED clause exists; existing keys come from the same
-      // candidate files the classification read
-      val unmatched: Option[DataFrame] =
-        if (!insertUnmatched) None
-        else if (candidates.isEmpty) Some(inc)
-        else Some(inc.join(
-          readFiles(spark, dir, candidates).select("series", "ts"),
-          Seq("series", "ts"), "left_anti"))
-      val insertedByDt: Map[String, Long] = unmatched.fold(
-        Map.empty[String, Long])(u => u.groupBy(to_date(col("ts")).as("d"))
-        .count().collect()
-        .map(r => (r.getDate(0).toString, r.getLong(1))).toMap)
-      val inserted = insertedByDt.values.sum
+      def rowsWith(idx: Seq[Int]): Long =
+        byDtOutcome.collect { case (_, oc, n) if idx.contains(oc) => n }.sum
+      val deleted = rowsWith(deleteIdx)
+      val rewriteDates = byDtOutcome.collect { case (d, oc, _) if oc >= 0 => d }
+        .toSet
+      // the inserted rows and their per-date counts: the staged batch
+      // itself (UPSERT; counted by the staging), or its rows whose key
+      // no candidate file holds
+      val (insRows, insertedByDt): (Option[DataFrame], Map[String, Long]) =
+        (inserts, inc) match {
+          case (AllInserts, Some((rows, byDt))) => (Some(rows), byDt)
+          case (UnmatchedInserts, Some((rows, _))) =>
+            val u = if (candidates.isEmpty) rows else rows.join(
+              readFiles(spark, dir, candidates).select("series", "ts"),
+              Seq("series", "ts"), "left_anti")
+            (Some(u), u.groupBy(to_date(col("ts"))).count().collect()
+              .map(r => (r.getDate(0).toString, r.getLong(1))).toMap)
+          case _ => (None, Map.empty)
+        }
+      def onDates(rows: DataFrame, ds: Set[String]): DataFrame = rows.filter(
+        to_date(col("ts")).isin(ds.toSeq.map(java.sql.Date.valueOf): _*))
       val appendDates = insertedByDt.keySet -- rewriteDates
-      // the unmatched anti-join reads the PRE-swap candidate files, so
-      // the append subset must MATERIALIZE before the swap replaces
-      // them (a lazy read after the swap would hit deleted paths); the
-      // appended bytes are proportional to the batch's insert half
-      if (fs.exists(insStaging)) fs.delete(insStaging, true)
-      if (appendDates.nonEmpty)
-        unmatched.get.filter(to_date(col("ts")).isin(
-          appendDates.toSeq.map(java.sql.Date.valueOf): _*))
-          .write.parquet(insStaging.toString)
+      // unmatched rows come from an anti-join over the PRE-swap files, so
+      // they materialize before the swap replaces them (a lazy read after
+      // it would hit deleted paths); the staged batch is never swapped
+      val appendRows = if (appendDates.isEmpty) None else insRows.map { rows =>
+        if (inserts == AllInserts) onDates(rows, appendDates)
+        else {
+          val ins = scratch(root, domain, family, verb.staged(1))
+          onDates(rows, appendDates).write.mode("overwrite")
+            .parquet(ins.toString)
+          spark.read.schema(schema).parquet(listDataFiles(fs, ins): _*)
+        }
+      }
       if (rewriteDates.nonEmpty) {
         val rewriteFiles = filesOn(files, rewriteDates)
-        val expectedKept = footerRowCount(spark, rewriteFiles) -
-          deletedByDt.filter(kv => rewriteDates.contains(kv._1)).values.sum +
-          insertedByDt.filter(kv => rewriteDates.contains(kv._1)).values.sum
-        val isUpdate = updateIdx.foldLeft(lit(false))(
-          (acc, i) => acc || col("__oc") === lit(i))
-        val isDelete = deleteIdx.foldLeft(lit(false))(
-          (acc, i) => acc || col("__oc") === lit(i))
-        // existing rows keep their path-derived dt (a mutate verb never
-        // migrates a row); unmatched inserts on rewrite dates ride the
-        // same swap so the partition flips once, atomically.
-        // By-source UPDATE assignments fold over the matched-update
-        // base through updateRows' SET machinery, clause by clause.
-        val (bsValue, bsAttrs) = bySource.zipWithIndex.foldLeft(
-          (when(isUpdate, col("src_value")).otherwise(col("value")),
-            when(isUpdate, col("src_attributes"))
-              .otherwise(col("attributes")))) {
+        val expected = footerRowCount(spark, rewriteFiles) - deleted +
+          insertedByDt.filter(kv => rewriteDates(kv._1)).values.sum
+        def isIn(idx: Seq[Int]): Column =
+          idx.foldLeft(lit(false))((acc, i) => acc || col("__oc") === lit(i))
+        def fromSrc(c: String): Column =
+          if (updateIdx.isEmpty) col(c)
+          else when(isIn(updateIdx), col(s"src_$c")).otherwise(col(c))
+        // by-source UPDATE assignments fold over the matched-update base
+        // through updateRows' SET machinery, clause by clause
+        val (value, attrs) = bs.foldLeft(
+            (fromSrc("value"), fromSrc("attributes"))) {
           case ((v, a), (cl, i)) if cl.action == "update" =>
-            applyAssigns(cl.assigns, col("__oc") === lit(matched.length + i),
-              v, a)
+            applyAssigns(cl.assigns, col("__oc") === lit(i), v, a)
           case (acc, _) => acc
         }
-        val existingMerged = readFiles(spark, dir, rewriteFiles)
-          .join(incSrc, Seq("series", "ts"), "left")
-          .withColumn("__oc",
-            when(coalesce(col("__src_matched"), lit(false)), outcome)
-              .otherwise(effOutcome(bsOutcome)))
-          .filter(!isDelete)
-          .select(col("series"), col("ts"),
-            bsValue.as("value"),
-            when(isUpdate, col("src_tags")).otherwise(col("tags"))
-              .as("tags"),
-            bsAttrs.as("attributes"),
-            col("dt"))
-        val insertsOnRewrite = unmatched.map(_
-          .withColumn("dt", to_date(col("ts")))
-          .filter(col("dt").isin(
-            rewriteDates.toSeq.map(java.sql.Date.valueOf): _*)))
-        // a partition whose every row was deleted (and received no
-        // insert) has no rewrite output and ends up empty
-        rewrite(spark, fs, Verb.Merge, root, domain, family,
-          insertsOnRewrite.fold(existingMerged)(existingMerged.unionByName(_)),
-          rewriteDates, expectedKept, "existing − deleted + inserted")
+        // existing rows keep their path-derived dt (a mutate verb never
+        // migrates a row); inserts on rewrite dates ride the same swap,
+        // so the partition flips once. A date whose every row was
+        // deleted (and received no insert) has no output and ends empty.
+        val kept = classify(readFiles(spark, dir, rewriteFiles), "left")
+          .filter(!isIn(deleteIdx))
+          .select(col("series"), col("ts"), value.as("value"),
+            fromSrc("tags").as("tags"), attrs.as("attributes"), col("dt"))
+        rewrite(spark, fs, verb, root, domain, family,
+          insRows.fold(kept)(r => kept.unionByName(
+            onDates(r, rewriteDates).withColumn("dt", to_date(col("ts"))))),
+          rewriteDates, expected, "existing − deleted + inserted")
       }
-      if (appendDates.nonEmpty) {
-        append(spark.read.schema(schema)
-          .parquet(listDataFiles(fs, insStaging): _*), root, domain, family)
-        fs.delete(insStaging, true)
-      }
-      (updated, deleted, inserted,
-        rewriteDates.toSeq.sorted.map(d => s"dt=$d"))
-    } finally {
-      fs.delete(scratch(root, domain, family, Verb.Merge.staged.head), true)
-      fs.delete(insStaging, true)
-    }
+      appendRows.foreach(append(_, root, domain, family))
+      (rowsWith(updateIdx ++ bsUpdateIdx), deleted,
+        insertedByDt.values.sum, rewriteDates.toSeq.sorted.map(d => s"dt=$d"))
+    } finally verb.staged.foreach(s =>
+      fs.delete(scratch(root, domain, family, s), true))
   }
 
   /** Crash recovery for the copy-on-write verbs ([[compact]],

@@ -941,4 +941,130 @@ class TimeSeriesTableSpec extends SparkSpec {
       == Seq(2, 2, 2))
     assertNoScratch(root, "m_1d")
   }
+
+  private val smallFamily = Seq(
+    ("cpu", "2024-01-01 01:00:00", 1.0),
+    ("cpu", "2024-01-01 02:00:00", 5.0),
+    ("mem", "2024-01-01 03:00:00", 2.0),
+    ("cpu", "2024-01-02 01:00:00", 8.0),
+    ("mem", "2024-01-03 01:00:00", 9.0))
+
+  /** Every row of a family, sorted: (series, ts, value, attributes). */
+  private def familyRows(root: String, family: String) =
+    TimeSeriesTable.open(spark, root, "dom", family)
+      .select("series", "ts", "value", "attributes").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2),
+        r.getMap[String, String](3).toMap))
+      .toSeq.sortBy(_.toString)
+
+  test("mergeRows with an empty batch: BY SOURCE clauses reach every " +
+      "row, as deleteRows and updateRows do; without them nothing moves") {
+    val root = Files.createTempDirectory("graft-merge-empty").toString
+    for (f <- Seq("a", "b")) TimeSeriesTable.append(mkRows(smallFamily),
+      root, "dom", f)
+    val empty = mkRows(Seq.empty)
+    val p = col("value") < 6.0 && col("series") === "cpu"
+    val (del, delParts) = TimeSeriesTable.deleteRows(spark, root, "dom", "a", p)
+    val (u0, d0, i0, mParts) = TimeSeriesTable.mergeRows(spark, root, "dom",
+      "b", empty, Seq((None, "delete")), insertUnmatched = true,
+      bySource = Seq(TimeSeriesTable.BySourceClause(Some(p), "delete")))
+    assert(del == 2L && delParts == Seq("dt=2024-01-01"))
+    assert((u0, d0, i0, mParts) == ((0L, del, 0L, delParts)))
+    assert(familyRows(root, "a") == familyRows(root, "b"))
+    val assigns = Seq(("mem", None, col("value") * 10.0),
+      ("mem", Some("stale"), lit("y")))
+    val q = col("value") > 1.0
+    val (upd, updParts) = TimeSeriesTable.updateRows(spark, root, "dom", "a",
+      q, assigns)
+    val (u1, d1, i1, m1Parts) = TimeSeriesTable.mergeRows(spark, root, "dom",
+      "b", empty, Nil, insertUnmatched = false,
+      bySource = Seq(TimeSeriesTable.BySourceClause(Some(q), "update", assigns)))
+    assert(upd == 2L && updParts == Seq("dt=2024-01-01", "dt=2024-01-03"))
+    assert((u1, d1, i1, m1Parts) == ((upd, 0L, 0L, updParts)))
+    assert(familyRows(root, "a") == familyRows(root, "b"))
+    // no BY SOURCE clause: an empty batch writes nothing at all
+    val dirs = new java.io.File(s"$root/dom/b").listFiles()
+      .filter(_.getName.startsWith("dt=")).map(_.getPath).toSeq
+    val digests = dirs.map(d => d -> partitionDigests(d)).toMap
+    assert(TimeSeriesTable.mergeRows(spark, root, "dom", "b", empty,
+      Seq((None, "delete")), insertUnmatched = true) == ((0L, 0L, 0L, Nil)))
+    assert(dirs.map(d => d -> partitionDigests(d)).toMap == digests)
+    for (f <- Seq("a", "b")) assertNoScratch(root, f)
+  }
+
+  test("every mutate verb refuses a family with files outside the dt= " +
+      "layout, untouched; compact folds them into their dates") {
+    val root = Files.createTempDirectory("graft-layout").toString
+    val dir = s"$root/dom/m"
+    TimeSeriesTable.append(mkRows(smallFamily), root, "dom", "m")
+    // one parquet file at the family root, outside every dt= directory
+    val loose = s"$root/loose"
+    mkRows(Seq(("cpu", "2024-01-02 05:00:00", 3.0),
+      ("io", "2024-01-04 01:00:00", 4.0))).coalesce(1).write.parquet(loose)
+    val part = new java.io.File(loose).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, JPaths.get(dir, "loose.parquet"))
+    val dirs = dir +: new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("dt=")).map(_.getPath).toSeq
+    val digests = dirs.map(d => d -> partitionDigests(d)).toMap
+    val batch = mkRows(Seq(("disk", "2024-01-09 01:00:00", 1.0)))
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "row-level DELETE" -> (() => TimeSeriesTable.deleteRows(spark, root,
+        "dom", "m", col("series") === "cpu")),
+      "row-level UPDATE" -> (() => TimeSeriesTable.updateRows(spark, root,
+        "dom", "m", lit(true), Seq(("cpu", None, lit(0.0))))),
+      "UPSERT" -> (() => TimeSeriesTable.upsertRows(spark, root, "dom", "m",
+        batch)),
+      "MERGE" -> (() => TimeSeriesTable.mergeRows(spark, root, "dom", "m",
+        batch, Nil, insertUnmatched = true)))
+    verbs.foreach { case (label, run) =>
+      val e = intercept[java.io.IOException](run())
+      assert(e.getMessage.startsWith(s"$label on $dir") &&
+        e.getMessage.contains("OUTSIDE the dt= partition layout") &&
+        e.getMessage.contains("compact() the family first"), e.getMessage)
+      assert(dirs.map(d => d -> partitionDigests(d)).toMap == digests, label)
+      assertNoScratch(root, "m")
+    }
+    TimeSeriesTable.compact(spark, root, "dom", "m")
+    assert(new java.io.File(dir).listFiles()
+      .forall(f => !f.getName.endsWith(".parquet")))
+    assert(TimeSeriesTable.open(spark, root, "dom", "m").count() == 7)
+    val (deleted, parts) = TimeSeriesTable.deleteRows(spark, root, "dom",
+      "m", col("series") === "io")
+    assert(deleted == 1L && parts == Seq("dt=2024-01-04"))
+    assert(TimeSeriesTable.open(spark, root, "dom", "m").count() == 6)
+    assertNoScratch(root, "m")
+  }
+
+  test("deleteRows and updateRows push a series predicate into the " +
+      "parquet scan") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("graft-mutate-push").toString
+    TimeSeriesTable.append(mkRows(smallFamily), root, "dom", "m")
+    // the PushedFilters list of every scan in the queries `call` ran
+    def pushed(call: => Any): Seq[String] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan.toString)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        call
+        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      plans.asScala.toSeq.flatMap(
+        "PushedFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(_).map(_.group(1)))
+    }
+    val del = pushed(TimeSeriesTable.deleteRows(spark, root, "dom", "m",
+      col("series") === "cpu" && col("value") > 4.0))
+    assert(del.exists(_.contains("EqualTo(series,cpu)")), del)
+    val upd = pushed(TimeSeriesTable.updateRows(spark, root, "dom", "m",
+      col("series") === "mem" && col("value") > 4.0,
+      Seq(("mem", None, lit(0.0)))))
+    assert(upd.exists(_.contains("EqualTo(series,mem)")), upd)
+  }
 }

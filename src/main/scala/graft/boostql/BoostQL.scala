@@ -922,6 +922,21 @@ object BoostQL {
       watermarkDelay: String): DataFrame =
     streamAggregate(Parser.parseStmt(query), families, watermarkDelay)
 
+  /** The aggregate column of a plain count/sum/avg/min/max item over
+    * `arg` (None = count(*)) — shared by the single-family and the
+    * joined-stream aggregate forms.
+    */
+  private def plainStreamAgg(fn: String, arg: Option[Column]): Column = {
+    import org.apache.spark.sql.functions._
+    fn match {
+      case "count" => arg.map(count).getOrElse(count(lit(1)))
+      case "sum"   => sum(arg.get)
+      case "avg"   => avg(arg.get)
+      case "min"   => min(arg.get)
+      case "max"   => max(arg.get)
+    }
+  }
+
   private def streamAggregate(stmt: Ast.QueryStmt,
       families: ((String, String)) => DataFrame,
       watermarkDelay: String): DataFrame = {
@@ -1322,11 +1337,6 @@ object BoostQL {
     val aggCols = allAggs.map { a =>
       val c = a.argCol.map(col)
       (a.fn match {
-        case "count" => c.map(count).getOrElse(count(lit(1)))
-        case "sum"   => sum(c.get)
-        case "avg"   => avg(c.get)
-        case "min"   => min(c.get)
-        case "max"   => max(c.get)
         case "approx_top_k" =>
           // the MG summary as streaming-aggregation state (capacity-
           // bounded per (window, dims) entry), rendered to the same
@@ -1339,6 +1349,7 @@ object BoostQL {
           // the same expression (and the same count string) as batch
           val Seq(lo, hi, nb) = a.hist.get
           Compiler.histogramString(c.get, lo, hi, nb)
+        case fn => plainStreamAgg(fn, c)
       }).as(a.nm)
     }
     val agged = flat.withWatermark("ts", watermarkDelay)
@@ -1694,14 +1705,7 @@ object BoostQL {
     val keyCols = window(col(tsName), s"$widthUs microseconds") +:
       dimSet.toSeq.sorted.map(col)
     val aggCols = outs.collect { case AggOut(fn, arg, nm) =>
-      val c = arg.map(col)
-      (fn match {
-        case "count" => c.map(count).getOrElse(count(lit(1)))
-        case "sum"   => sum(c.get)
-        case "avg"   => avg(c.get)
-        case "min"   => min(c.get)
-        case "max"   => max(c.get)
-      }).as(nm)
+      plainStreamAgg(fn, arg.map(col)).as(nm)
     }
     val agged = flat.groupBy(keyCols: _*)
       .agg(aggCols.head, aggCols.tail: _*)

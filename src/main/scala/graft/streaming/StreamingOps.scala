@@ -3,9 +3,12 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
+
+import graft.boostql.BoostQL
+import graft.sources.TimeSeriesTable
 
 /** Structured-Streaming slice: the declarative upgrade of the
   * reference's pull-based micro-batch loop (executor.go:184-274 —
@@ -14,6 +17,22 @@ import org.apache.spark.sql.streaming.Trigger
   * (pendingCompletionNodes, Position/Seek checkpoints) all collapse
   * into the engine: `readStream` + event-time window + watermark.
   *
+  * Every replay runs one harness, seed → tail → drain:
+  *  - seed: the corpus as a stream, either the staged events files
+  *    ([[eventsStream]]) or a temp family batch-seeded from them and
+  *    tailed with `TimeSeriesTable.openStream` ([[seededTail]]);
+  *  - tail: the replay's own topology over that stream;
+  *  - drain: one AvailableNow run into a memory sink ([[drain]]) under
+  *    the pinned state conf ([[withStatePartitions]]: 4 shuffle
+  *    partitions, the RocksDB state store, changelog checkpointing),
+  *    returning the sink's rows.
+  * The sink's session temp view is dropped as soon as the returned
+  * frame has resolved it: the frame holds the sink itself, and a view
+  * left registered would keep every replay's rows in driver memory for
+  * the session's life. Temp roots (seeded families, checkpoints, the
+  * staged link dirs) live until JVM exit instead, because several
+  * replays return frames that read those files lazily.
+  *
   * Scale stance: file-source streams list and batch input files
   * incrementally (maxFilesPerTrigger), state lives in the state store
   * keyed by (window, event_type) — both bounded; watermark caps state
@@ -21,14 +40,14 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamingOps {
 
-  /** Temp roots for the replay topologies (family stores + checkpoints
-    * the replays write). `deleteOnExit` cannot remove non-empty trees,
-    * so every bench/verify invocation would otherwise leak a family
-    * copy per stateful replay (measured: gigabytes per full sweep on a
-    * long-lived host). Deletion happens at JVM exit, not per replay —
-    * several replays RETURN lazily-evaluated frames over the files
-    * they wrote (e.g. the INSERT read-back), so an eager cleanup would
-    * pull the data out from under the caller's DataFrame.
+  /** Temp roots for the replay topologies (family stores, checkpoints
+    * and the staged link dirs). The JVM's delete-on-exit cannot remove
+    * non-empty trees, so every bench/verify invocation would otherwise leak a
+    * family copy per stateful replay (measured: gigabytes per full
+    * sweep on a long-lived host). Deletion happens at JVM exit, not per
+    * replay — several replays RETURN lazily-evaluated frames over the
+    * files they wrote (e.g. the INSERT read-back), so an eager cleanup
+    * would pull the data out from under the caller's DataFrame.
     */
   private val tempRoots = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[java.nio.file.Path, java.lang.Boolean]())
@@ -43,6 +62,10 @@ object StreamingOps {
       }
     }, "graft-stream-temp-cleanup"))
   }
+  /** A fresh temp dir, deleted at JVM exit. The exit walk does not
+    * follow links (no `FOLLOW_LINKS`), so for a staged dir it removes
+    * the symlinks and never the corpus files they point to.
+    */
   private def tempRoot(prefix: String): String = {
     val dir = Files.createTempDirectory(prefix)
     tempRoots.add(dir)
@@ -57,14 +80,13 @@ object StreamingOps {
     * not recurse into subdirectories, so a symlink to a directory
     * would silently stream ZERO files (measured: the 10x streaming
     * scale run completed in 0.3 s on an empty stream).
-    * One staged dir per sfDir for the JVM's lifetime (cleaned on exit);
+    * One staged dir per sfDir for the JVM's lifetime (a temp root);
     * repeated calls must not leak a dir + symlink each.
     */
   private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def stageDir(sfDir: String, table: String = "events"): String =
     staged.computeIfAbsent(s"$sfDir#$table", { _ =>
-      val dir = Files.createTempDirectory("graft-stream")
-      dir.toFile.deleteOnExit()
+      val dir = tempRoot("graft-stream")
       val src = Paths.get(s"$sfDir/$table.parquet")
       val parts: Seq[(String, java.nio.file.Path)] =
         if (Files.isDirectory(src)) {
@@ -76,22 +98,32 @@ object StreamingOps {
             .map { case (p, i) => (f"part-$i%05d.parquet", p) }
         } else Seq((s"$table.parquet", src))
       parts.foreach { case (name, target) =>
-        val link = dir.resolve(name)
-        Files.createSymbolicLink(link, target)
-        link.toFile.deleteOnExit()
+        Files.createSymbolicLink(Paths.get(dir, name), target)
       }
-      dir.toString
+      dir
     })
 
-  /** Run `body` (which must start AND await a streaming query) with
-    * `spark.sql.shuffle.partitions` = n, restoring the old value after.
-    * A stateful streaming query creates one state-store instance per
-    * shuffle partition PER micro-batch, so the partition count should
-    * track state size, not core count — and it is pinned into the
-    * checkpoint at first start, which is why it's an explicit knob here
-    * rather than whatever the session happened to be configured with.
-    * At 100 TB state you'd raise it; for these replays 4 is plenty
-    * (measured: 32 → 4 cuts the dedup replay ~1.5x at sf0.1).
+  /** The staged events corpus as a file stream (file streams need an
+    * explicit schema; it comes from the batch reader), with the event
+    * timestamp normalized exactly as the batch [[graft.tables.Tables]]
+    * reader does.
+    */
+  private def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(s"$sfDir/events.parquet").schema)
+      .parquet(stageDir(sfDir))
+      .transform(graft.tables.Tables.normalizeEventsTs)
+
+  /** Run `body` (which must start AND await a streaming query) under the
+    * pinned state conf, restoring the old values after.
+    *
+    * `spark.sql.shuffle.partitions` = 4: a stateful streaming query
+    * creates one state-store instance per shuffle partition PER
+    * micro-batch, so the partition count should track state size, not
+    * core count — and it is pinned into the checkpoint at first start,
+    * which is why it is set here rather than taken from whatever the
+    * session happened to be configured with. At 100 TB state you'd
+    * raise it; for these replays 4 is plenty (measured: 32 → 4 cuts the
+    * dedup replay ~1.5x at sf0.1).
     *
     * The state store is pinned to ROCKSDB for the same stateful starts:
     * the default HDFS-backed provider holds every live state row as JVM
@@ -113,9 +145,9 @@ object StreamingOps {
     */
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
+  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val keys = Seq(
-      "spark.sql.shuffle.partitions" -> n.toString,
+      "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
       // changelog checkpointing uploads per-batch DELTAS instead of
       // re-snapshotting the whole store every commit — the snapshot
@@ -129,6 +161,130 @@ object StreamingOps {
     }
   }
 
+  /** Drain a streaming frame: one AvailableNow run into a uniquely named
+    * memory sink in `mode`, under the pinned state conf. Returns the
+    * sink's rows and the terminated query (its progress trail). The
+    * sink's temp view is dropped once the returned frame has resolved
+    * it, or when the query fails — the frame keeps the sink's rows, the
+    * session keeps no name.
+    */
+  private def drainQuery(df: DataFrame, mode: String): (DataFrame, StreamingQuery) = {
+    val spark = df.sparkSession
+    val sink = "graft_stream_" + UUID.randomUUID.toString.replace("-", "")
+    try {
+      val query = withStatePartitions(spark) {
+        val q = df.writeStream.format("memory").queryName(sink)
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        q
+      }
+      (spark.table(sink), query)
+    } finally spark.catalog.dropTempView(sink)
+  }
+
+  private def drain(df: DataFrame, mode: String): DataFrame = drainQuery(df, mode)._1
+
+  /** A seeded temp family and its tail. `shared` resolves every family
+    * reference to one source instance; `fresh` opens a source per
+    * reference (the self-join replays).
+    */
+  private final class Tail(spark: SparkSession, val root: String) {
+    def open(): DataFrame = TimeSeriesTable.openStream(spark, root, "dom", "events")
+    def shared: ((String, String)) => DataFrame = { val s = open(); _ => s }
+    def fresh: ((String, String)) => DataFrame = _ => open()
+  }
+
+  /** Batch-append the events corpus into a fresh temp family `dom.events`
+    * and hand back its tail — the FIXTURE seed for replays whose pinned
+    * property is the READ half (an openStream tail + stateful dialect
+    * transform). The write-half streaming topology is pinned by
+    * stream_family_roundtrip and stream_sql_insert, which keep
+    * [[streamIntoFamily]]; every other replay was paying a second
+    * streaming query (checkpoint WAL, file-source listing, query
+    * start/stop — ~1.5-2 s of fixed floor per replay at sf0.1,
+    * StreamProbe-measured) purely to stage the same rows
+    * [[graft.sources.TimeSeriesTable.append]] lands in one batch write
+    * with the identical layout (date-partitioned, (series, ts)-sorted).
+    * Guide §1.2 step 1: remove passes that compute nothing the measured
+    * property needs.
+    *
+    * A non-empty `flush` adds one far-future FLUSH row per named series
+    * ([[batchSeedFamilyWithFlush]]). The seed must be a batch append
+    * for those: a streaming-sink directory carries a _spark_metadata
+    * log, and the file-stream tail then honors ONLY the files that log
+    * committed — flush rows appended after a streaming ingest would be
+    * invisible and the watermark would never pass the real data
+    * (measured: the tail's unmatched rows simply missing).
+    */
+  private def seededTail(spark: SparkSession, sfDir: String, prefix: String,
+      flush: Seq[String] = Nil): Tail = {
+    val root = tempRoot(prefix)
+    if (flush.isEmpty)
+      TimeSeriesTable.append(TimeSeriesTable.fromEventsFanned(
+        graft.tables.Tables.events(spark, sfDir)), root, "dom", "events")
+    else batchSeedFamilyWithFlush(spark, sfDir, root, flush)
+    new Tail(spark, root)
+  }
+
+  /** The events corpus plus far-future FLUSH rows — one per series so
+    * each survives that side's series filter (predicates push below
+    * the watermark node, so a row filtered out never advances the
+    * watermark). An AvailableNow replay of a watermark-gated topology
+    * (outer join's null-extension, window finalize over a join)
+    * otherwise WITHHOLDS the final `delay + bound` of results: the
+    * watermark only trails data. Production streams don't need this —
+    * new data keeps arriving — it is the replay-determinism analogue of
+    * "close the books at end of day". The flush rows use distinct marker
+    * users and a week between them so they can never join each other.
+    *
+    * Seed and flush land in ONE append (guide §1.2 step 1): the flush
+    * rows ride the same dt-partitioned write as the corpus instead of
+    * paying a second append job + file commit per replay — per-date
+    * rows, sort order and the tail's visible file set are identical,
+    * only the commit count changes (StreamProbe-measured: the separate
+    * flush append cost ~0.25-0.4 s of pure fixture floor on each of
+    * the six flush-row replays at sf0.1).
+    */
+  private def batchSeedFamilyWithFlush(spark: SparkSession, sfDir: String,
+      root: String, series: Seq[String]): Unit = {
+    import spark.implicits._
+    val events = graft.tables.Tables.events(spark, sfDir)
+    // the flush markers need max(ts): served from parquet footer stats
+    // (exact column max, same unit dispatch as normalizeEventsTs —
+    // a driver-side metadata read instead of a scan+aggregate job per
+    // replay; guide §6). Stats-less corpora fall back to the scan.
+    val maxTs = graft.util.ParquetStats.eventsMaxTsMicros(spark, sfDir)
+      .map { us =>
+        val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+        t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
+        t
+      }
+      .getOrElse(events.agg(max(col("ts"))).head.getTimestamp(0))
+    val flush = series.zipWithIndex.map { case (s, i) =>
+      (s, new java.sql.Timestamp(maxTs.getTime + (4L + 7L * i) * 86400000L),
+        0.0, Map.empty[String, String],
+        Map("user" -> s"__flush_$i", "event_id" -> "0"))
+    }.toDF("series", "ts", "value", "tags", "attributes")
+    TimeSeriesTable.append(
+      TimeSeriesTable.fromEventsFanned(events).unionByName(flush),
+      root, "dom", "events")
+  }
+
+  /** Watermarked per-(window `win`, event_type) count + exact sum over
+    * the events stream, as (w_start_us, event_type, n, sum_value).
+    */
+  private def eventWindowAgg(spark: SparkSession, sfDir: String,
+      win: Column): DataFrame =
+    drain(eventsStream(spark, sfDir)
+      .withWatermark("ts", "1 day")
+      .groupBy(win, col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete")
+      .select(unix_micros(col("window.start")).as("w_start_us"),
+        col("event_type"), col("n"), col("sum_value"))
+      .orderBy("w_start_us", "event_type")
+
   /** SLIDING event-time windows as a stream: a 1-day window every 12
     * hours, so each event lands in window_duration / slide = 2
     * overlapping windows. The engine's `window(ts, w, slide)` expands
@@ -140,78 +296,17 @@ object StreamingOps {
     * why the slide is an explicit parameter of the topology and not a
     * sink-side concern.
     */
-  def slidingWindowReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val agg = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-      .transform(graft.tables.Tables.normalizeEventsTs)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day", "12 hours"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    val sink = "graft_stream_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink)
-      .select(unix_micros(col("window.start")).as("w_start_us"),
-        col("event_type"), col("n"), col("sum_value"))
-      .orderBy("w_start_us", "event_type")
-  }
+  def slidingWindowReplay(spark: SparkSession, sfDir: String): DataFrame =
+    eventWindowAgg(spark, sfDir, window(col("ts"), "1 day", "12 hours"))
 
-  /** Batch-append the events corpus into a family store — the FIXTURE
-    * seed for replays whose pinned property is the READ half (an
-    * openStream tail + stateful dialect transform). The write-half
-    * streaming topology is pinned by stream_family_roundtrip and
-    * stream_sql_insert, which keep [[streamIntoFamily]]; every other
-    * replay was paying a second streaming query (checkpoint WAL,
-    * file-source listing, query start/stop — ~1.5-2 s of fixed floor
-    * per replay at sf0.1, StreamProbe-measured) purely to stage the
-    * same rows [[graft.sources.TimeSeriesTable.append]] lands in one
-    * batch write with the identical layout (date-partitioned,
-    * (series, ts)-sorted). Guide §1.2 step 1: remove passes that
-    * compute nothing the measured property needs. The outer-join/
-    * flush-row replays already seeded this way (the sink log would
-    * hide flush rows from the tail); this makes the batch seed the
-    * uniform fixture path.
+  /** A daily tumbling-window aggregate over the events table *as a
+    * stream* — semantically identical to the batch GROUP BY, which is
+    * exactly what the DuckDB oracle checks.
     */
-  private def batchSeedFamily(spark: SparkSession, sfDir: String,
-      root: String): Unit =
-    graft.sources.TimeSeriesTable.append(
-      graft.sources.TimeSeriesTable.fromEventsFanned(
-        graft.tables.Tables.events(spark, sfDir)), root, "dom", "events")
+  def windowedAggReplay(spark: SparkSession, sfDir: String): DataFrame =
+    eventWindowAgg(spark, sfDir, window(col("ts"), "1 day"))
 
-  /** Run a daily tumbling-window aggregate over the events table *as a
-    * stream* (AvailableNow trigger: process all existing data in
-    * micro-batches, then stop), materializing into an in-memory sink.
-    * Returns the final batch DataFrame — semantically identical to the
-    * batch GROUP BY, which is exactly what the DuckDB oracle checks.
-    */
-  def windowedAggReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    // file streams need an explicit schema; take it from the batch reader
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val agg = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-      .transform(graft.tables.Tables.normalizeEventsTs)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    val sink = "graft_stream_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink)
-      .select(unix_micros(col("window.start")).as("w_start_us"),
-        col("event_type"), col("n"), col("sum_value"))
-      .orderBy("w_start_us", "event_type")
-  }
-
-  /** Streaming heavy hitters: per daily event-time window, the top-k
+  /** Streaming heavy hitters: per daily event-time window, the top-16
     * property values by count via the mergeable Misra-Gries summary
     * ([[graft.functions.FreqSketchAgg]]) as a watermarked streaming
     * aggregate. The summary IS the aggregation state, so each
@@ -224,24 +319,16 @@ object StreamingOps {
     * checks; the rendered output is the same portable "item:n,…"
     * string as the dialect's approx_top_k.
     */
-  def streamingTopK(spark: SparkSession, sfDir: String, k: Int = 16,
-      statePartitions: Int = 4): DataFrame = {
+  def streamingTopK(spark: SparkSession, sfDir: String): DataFrame = {
+    val k = 16
     val cap = math.max(64, 8 * k)
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val agg = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-      .transform(graft.tables.Tables.normalizeEventsTs)
+    drain(eventsStream(spark, sfDir)
       .withColumn("item", get_json_object(col("props"), "$.k"))
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(graft.functions.GraftFunctions
-        .freqSketch(col("item"), cap).as("sk"))
-    val sink = "graft_stream_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink)
+        .freqSketch(col("item"), cap).as("sk")),
+      "complete")
       .select(unix_micros(col("window.start")).as("w_start_us"),
         col("event_type"),
         array_join(transform(slice(col("sk"), 1, k),
@@ -259,7 +346,6 @@ object StreamingOps {
     */
   def streamIntoFamily(spark: SparkSession, sfDir: String, root: String,
       domain: String, family: String): Unit = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
     // Repartition by event date + sort by (series, ts) BEFORE the sink —
     // the exact [[graft.sources.TimeSeriesTable.append]] layout
     // discipline, which the streaming ingest previously skipped. Two
@@ -282,11 +368,10 @@ object StreamingOps {
     // fromEvents applies AFTER the exchange so the per-row
     // from_json(props) parse fans out with the dates instead of
     // running inside the source split.
-    val fam = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-      .transform(graft.tables.Tables.normalizeEventsTs)
+    val fam = eventsStream(spark, sfDir)
       .withColumn("dt", to_date(col("ts")))
       .repartition(col("dt"))
-      .transform(df => graft.sources.TimeSeriesTable.fromEvents(
+      .transform(df => TimeSeriesTable.fromEvents(
         df.drop("dt")).withColumn("dt", to_date(col("ts"))))
     val query = fam.writeStream
       .format("parquet")
@@ -302,103 +387,70 @@ object StreamingOps {
     * ingests the events table into a date-partitioned family (the write
     * half), [[graft.sources.TimeSeriesTable.openStream]] TAILS that same
     * warehouse path as a file-stream source (the read half), and a
-    * watermarked daily tumbling aggregate materializes into a memory
-    * sink — ingest job and downstream consumer, exactly the production
-    * topology, collapsed into one AvailableNow replay. The result is
-    * semantically the batch GROUP BY over the same rows, which is what
-    * the DuckDB oracle checks (the `boost_roundtrip` pattern, one layer
-    * up the stack).
+    * watermarked daily tumbling aggregate drains it — ingest job and
+    * downstream consumer, exactly the production topology, collapsed
+    * into one replay. The result is semantically the batch GROUP BY
+    * over the same rows, which is what the DuckDB oracle checks (the
+    * `boost_roundtrip` pattern, one layer up the stack).
     *
     * Returns (result, per-micro-batch progress of the TAIL query) — the
     * progress trail lets specs pin that `maxFilesPerTrigger` actually
     * bounds per-batch work instead of one batch swallowing the backlog.
     */
   def familyRoundtripWithProgress(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4, maxFilesPerTrigger: Int = 8)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
+      maxFilesPerTrigger: Int = 8): (DataFrame, Seq[StreamingQueryProgress]) = {
     val root = tempRoot("graft-famstream")
     streamIntoFamily(spark, sfDir, root, "dom", "events")
-    val agg = graft.sources.TimeSeriesTable
+    val (out, query) = drainQuery(TimeSeriesTable
       .openStream(spark, root, "dom", "events", maxFilesPerTrigger)
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"), col("series"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    val sink = "graft_stream_" + UUID.randomUUID.toString.replace("-", "")
-    val progress = withStatePartitions(spark, statePartitions) {
-      val query = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-      query.recentProgress.toSeq
-    }
-    val out = spark.table(sink)
-      .select(unix_micros(col("window.start")).as("w_start_us"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete")
+    (out.select(unix_micros(col("window.start")).as("w_start_us"),
         col("series"), col("n"), col("sum_value"))
-      .orderBy("w_start_us", "series")
-    (out, progress)
+      .orderBy("w_start_us", "series"), query.recentProgress.toSeq)
   }
 
   /** Driver-contract face of [[familyRoundtripWithProgress]]. */
   def streamFamilyRoundtrip(spark: SparkSession, sfDir: String): DataFrame =
     familyRoundtripWithProgress(spark, sfDir)._1
 
-  /** The SQL front driving a STREAM end to end: ingest the events into
-    * a family store, tail it with [[graft.sources.TimeSeriesTable
-    * .openStream]], and run a DIALECT query over the stream via
-    * [[graft.boostql.BoostQL.sqlStream]] — stateless
-    * projection+filter, so the replay appends with no state store and
-    * the result must equal the same dialect query run in batch
-    * (the oracle's batch SQL). The reference's north star reaching a
-    * continuous query.
+  /** The SQL front driving a STREAM end to end: tail a family store and
+    * run a DIALECT query over the stream via
+    * [[graft.boostql.BoostQL.sqlStream]] — stateless projection+filter,
+    * so the replay appends with no state store and the result must
+    * equal the same dialect query run in batch (the oracle's batch
+    * SQL). The reference's north star reaching a continuous query.
     */
-  def streamSqlFilterReplay(spark: SparkSession, sfDir: String): DataFrame = {
-    val root = tempRoot("graft-sqlstream")
-    batchSeedFamily(spark, sfDir, root)
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlFilterReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT purchase.event_id, purchase.user, purchase " +
         "FROM dom.events WHERE purchase > 250.0",
-      _ => stream)
-    val sink = "graft_sqlstream_" + UUID.randomUUID.toString.replace("-", "")
-    val query = out.writeStream.format("memory").queryName(sink)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    spark.table(sink).orderBy("purchase_event_id")
-  }
+      seededTail(spark, sfDir, "graft-sqlstream").shared), "append")
+      .orderBy("purchase_event_id")
 
   /** The SQL front driving a STATEFUL stream: the watermarked
     * bucket()-keyed continuous aggregate through
     * [[graft.boostql.BoostQL.sqlStream(query:String,families:((String,String))=>org\.apache\.spark\.sql\.DataFrame,watermarkDelay:String)*
-    * the 3-arg sqlStream]] — ingest the events into a family store,
-    * tail it, and run `GROUP BY bucket(ts, '1 day'), user` over the
-    * stream. The dialect compiles the projection/filter half exactly
-    * as batch and assembles the aggregation as a watermarked
+    * the 3-arg sqlStream]] — `GROUP BY bucket(ts, '1 day'), user` over
+    * a family tail. The dialect compiles the projection/filter half
+    * exactly as batch and assembles the aggregation as a watermarked
     * event-time window, so the replay's complete-mode materialization
     * must equal the same dialect query run batch (the oracle's SQL) —
     * the reference's north star (ts functions on the SQL front,
     * README.md:8) reaching live data with REAL state semantics.
     */
-  def streamSqlWindowReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlwstream")
-    batchSeedFamily(spark, sfDir, root)
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlWindowReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT CAST(bucket(ts, '1 day') AS int) AS d, purchase.user AS u, " +
         "count(*) AS n, sum(CAST(purchase * 100.0 AS int)) AS cents, " +
         "min(purchase) AS lo, max(purchase) AS hi " +
         "FROM dom.events WHERE purchase > 50.0 GROUP BY d, u",
-      _ => stream, watermarkDelay = "1 day")
-    val sink = "graft_sqlwin_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("d", "u")
-  }
+      seededTail(spark, sfDir, "graft-sqlwstream").shared,
+      watermarkDelay = "1 day"), "complete")
+      .orderBy("d", "u")
 
   /** Continuous per-window distributions: histogram(x, lo, hi, nbins)
     * inside sqlStream's watermarked bucket()-keyed aggregate. The
@@ -407,29 +459,18 @@ object StreamingOps {
     * of the batch histogram, emitting the same portable count string
     * (histogram_quantile reads percentiles off the emitted windows
     * downstream, and histogram_merge rolls daily windows up to months
-    * without touching raw points). AvailableNow replay equals the
-    * batch bins exactly.
+    * without touching raw points). The replay equals the batch bins
+    * exactly.
     */
-  def streamSqlHistReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlhist")
-    batchSeedFamily(spark, sfDir, root)
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlHistReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT CAST(bucket(ts, '1 day') AS int) AS d, " +
         "histogram(CAST(purchase * 100.0 AS int), 0, 25000, 8) AS h, " +
         "count(*) AS n " +
         "FROM dom.events WHERE purchase IS NOT NULL GROUP BY d",
-      _ => stream, watermarkDelay = "1 day")
-    val sink = "graft_sqlhist_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("d")
-  }
+      seededTail(spark, sfDir, "graft-sqlhist").shared,
+      watermarkDelay = "1 day"), "complete")
+      .orderBy("d")
 
   /** Continuous drift detection: an OLS slope and a correlation —
     * aggregate EXPRESSIONS, the corr/regr parse-time desugar trees —
@@ -438,16 +479,11 @@ object StreamingOps {
     * surrounding fixed IEEE arithmetic applies statelessly to each
     * FINALIZED window row, so "is this metric drifting, per user, per
     * day, on live data" runs through the SQL front with no new state
-    * kinds. AvailableNow replay equals the batch oracle exactly (the
-    * sums are exact integers; the tail is the same fixed sequence).
+    * kinds. The replay equals the batch oracle exactly (the sums are
+    * exact integers; the tail is the same fixed sequence).
     */
-  def streamSqlRegrReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlregr")
-    batchSeedFamily(spark, sfDir, root)
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlRegrReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT CAST(bucket(ts, '1 day') AS int) AS d, purchase.user AS u, " +
         "regr_slope(CAST(purchase * 100.0 AS int), " +
         "           CAST(purchase.event_id AS int)) AS sl, " +
@@ -455,98 +491,58 @@ object StreamingOps {
         "     CAST(purchase * 100.0 AS int)) AS r, " +
         "count(*) AS n " +
         "FROM dom.events WHERE purchase > 50.0 GROUP BY d, u",
-      _ => stream, watermarkDelay = "1 day")
-    val sink = "graft_sqlregr_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("d", "u")
-  }
+      seededTail(spark, sfDir, "graft-sqlregr").shared,
+      watermarkDelay = "1 day"), "complete")
+      .orderBy("d", "u")
 
   /** The watermarked streaming-SQL aggregate WITH a HAVING tail: the
     * dialect compiles HAVING to a stateless filter on the finalized
     * window rows (extra aggregates named only in the condition are
     * computed hidden and dropped — here max(purchase)). Complete-mode
-    * AvailableNow replay, so the result equals the batch oracle with
-    * the same HAVING.
+    * replay, so the result equals the batch oracle with the same
+    * HAVING.
     */
-  def streamSqlHavingReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlhav")
-    batchSeedFamily(spark, sfDir, root)
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlHavingReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT CAST(bucket(ts, '1 day') AS int) AS d, purchase.user AS u, " +
         "count(*) AS n, sum(CAST(purchase * 100.0 AS int)) AS cents " +
         "FROM dom.events WHERE purchase > 50.0 GROUP BY d, u " +
         "HAVING count(*) >= 2 AND max(purchase) < 370.0",
-      _ => stream, watermarkDelay = "1 day")
-    val sink = "graft_sqlhav_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("d", "u")
-  }
+      seededTail(spark, sfDir, "graft-sqlhav").shared,
+      watermarkDelay = "1 day"), "complete")
+      .orderBy("d", "u")
 
   /** Continuous heavy hitters THROUGH THE SQL FRONT: the dialect's
     * `approx_top_k(x, k)` inside the watermarked `bucket()`-keyed
     * streaming aggregate — `BoostQL.sqlStream` compiles it to the
     * Misra-Gries summary as event-time window state (capacity-bounded
     * per (window, dims) entry however many events arrive). Exact below
-    * capacity, so the AvailableNow replay hash-matches the batch
-    * count+rank oracle.
+    * capacity, so the replay hash-matches the batch count+rank oracle.
     */
-  def streamSqlTopKReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqltopk")
-    batchSeedFamily(spark, sfDir, root)
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlTopKReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT CAST(bucket(ts, '1 day') AS int) AS d, " +
         "approx_top_k(click.k, 16) AS top, count(*) AS n " +
         "FROM dom.events GROUP BY d",
-      _ => stream, watermarkDelay = "1 day")
-    val sink = "graft_sqltopk_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("d")
-  }
+      seededTail(spark, sfDir, "graft-sqltopk").shared,
+      watermarkDelay = "1 day"), "complete")
+      .orderBy("d")
 
   /** The SLIDING form of the dialect-over-stream aggregate:
     * `bucket(ts, '1 day', '12 hours')` through `BoostQL.sqlStream`
     * compiles to the engine's `window(ts, w, slide)` — map-side Expand
     * into width/slide windows, watermark-evicted state keyed on
-    * (window, dims). Complete-mode AvailableNow replay; the batch
-    * oracle replays the expansion with an explicit 2-row cross join.
+    * (window, dims). Complete-mode replay; the batch oracle replays the
+    * expansion with an explicit 2-row cross join.
     */
-  def streamSqlSlidingReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlslstream")
-    batchSeedFamily(spark, sfDir, root)
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlSlidingReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT CAST(bucket(ts, '1 day', '12 hours') AS int) AS d, " +
         "count(*) AS n, sum(CAST(view * 100.0 AS int)) AS cents " +
         "FROM dom.events WHERE view > 50.0 GROUP BY d",
-      _ => stream, watermarkDelay = "1 day")
-    val sink = "graft_sqlslide_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("d")
-  }
+      seededTail(spark, sfDir, "graft-sqlslstream").shared,
+      watermarkDelay = "1 day"), "complete")
+      .orderBy("d")
 
   /** Continuous SQL ingest end to end: ingest the events into a family
     * store, tail it, and run [[graft.boostql.BoostQL.sqlStreamInsert]]
@@ -558,14 +554,13 @@ object StreamingOps {
   def streamSqlInsertReplay(spark: SparkSession, sfDir: String): DataFrame = {
     val root = tempRoot("graft-sqlinsert")
     streamIntoFamily(spark, sfDir, root, "dom", "events")
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    graft.boostql.BoostQL.sqlStreamInsert(
+    val stream = TimeSeriesTable.openStream(spark, root, "dom", "events")
+    BoostQL.sqlStreamInsert(
       "INSERT INTO dom.derived SELECT ts, purchase AS p, " +
         "purchase * 2.0 AS p2 FROM dom.events",
       _ => stream, root)
-    val reread = graft.sources.TimeSeriesTable.open(spark, root, "dom", "derived")
-    graft.boostql.BoostQL.sql("SELECT p, p2, ts FROM dom.derived WHERE p > 250.0",
+    val reread = TimeSeriesTable.open(spark, root, "dom", "derived")
+    BoostQL.sql("SELECT p, p2, ts FROM dom.derived WHERE p > 250.0",
         _ => reread)
       .orderBy("ts")
   }
@@ -578,29 +573,17 @@ object StreamingOps {
     * window function computes per-key session IDS over a static frame;
     * this is the same sessionization running CONTINUOUSLY, the shape a
     * static gaps-and-islands window cannot express incrementally.
-    * Complete-mode AvailableNow replay equals the batch
-    * gaps-and-islands oracle (session start = first event ts on both
-    * sides).
+    * Complete-mode replay equals the batch gaps-and-islands oracle
+    * (session start = first event ts on both sides).
     */
-  def streamSqlSessionReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlsess")
-    batchSeedFamily(spark, sfDir, root)
-    val stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlSessionReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT session(ts, '6 hours') AS w, click.user AS u, " +
         "count(*) AS n, sum(CAST(click * 100.0 AS int)) AS cents " +
         "FROM dom.events GROUP BY w, u",
-      _ => stream, watermarkDelay = "1 day")
-    val sink = "graft_sqlsess_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("u", "w")
-  }
+      seededTail(spark, sfDir, "graft-sqlsess").shared,
+      watermarkDelay = "1 day"), "complete")
+      .orderBy("u", "w")
 
   /** Stream-stream JOIN through the SQL FRONT: the dialect's
     * two-family interval-bounded equi-join — `BoostQL.sqlStream`
@@ -609,125 +592,47 @@ object StreamingOps {
     * inner join (per-side `withWatermark` at the sources; the interval
     * arithmetic is native ts ± day-time-interval, the shape the
     * engine's state-eviction analysis recognizes, so join state is
-    * bounded by watermark + bound). Append-mode AvailableNow replay
-    * must equal the same join run batch (the DuckDB oracle). The
-    * watermark delay covers the within-day disorder of the family
-    * files (rows sort series-major inside a partition), the honest
-    * "max expected lateness" dial of a production deployment.
+    * bounded by watermark + bound). The append-mode replay must equal
+    * the same join run batch (the DuckDB oracle). The watermark delay
+    * covers the within-day disorder of the family files (rows sort
+    * series-major inside a partition), the honest "max expected
+    * lateness" dial of a production deployment.
     */
-  def streamSqlJoinReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqljoin")
-    batchSeedFamily(spark, sfDir, root)
-    def stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlJoinReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT a.click.event_id AS click_id, a.click.user AS u, " +
         "b.purchase.event_id AS purchase_id " +
         "FROM dom.events AS a JOIN dom.events AS b " +
         "ON a.click.user = b.purchase.user " +
         "AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL '1 hour'",
-      _ => stream, watermarkDelay = "2 days")
-    val sink = "graft_sqljoin_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("click_id", "purchase_id")
-  }
-
-  /** [[batchSeedFamily]] plus far-future FLUSH rows — one per series so
-    * each survives that side's series filter (predicates push below
-    * the watermark node, so a row filtered out never advances the
-    * watermark). An AvailableNow replay of a watermark-gated topology
-    * (outer join's null-extension, window finalize over a join)
-    * otherwise WITHHOLDS the final `delay + bound` of results: the
-    * watermark only trails data. Production streams don't need this —
-    * new data keeps arriving — it is the replay-determinism analogue of
-    * "close the books at end of day". The flush rows use distinct marker
-    * users and a week between them so they can never join each other.
-    *
-    * Seed and flush land in ONE append (guide §1.2 step 1): the flush
-    * rows ride the same dt-partitioned write as the corpus instead of
-    * paying a second append job + file commit per replay — per-date
-    * rows, sort order and the tail's visible file set are identical,
-    * only the commit count changes (StreamProbe-measured: the separate
-    * flush append cost ~0.25-0.4 s of pure fixture floor on each of
-    * the six flush-row replays at sf0.1).
-    */
-  private def batchSeedFamilyWithFlush(spark: SparkSession, sfDir: String,
-      root: String, domain: String, family: String,
-      series: Seq[String]): Unit = {
-    import spark.implicits._
-    val events = graft.tables.Tables.events(spark, sfDir)
-    // the flush markers need max(ts): served from parquet footer stats
-    // (exact column max, same unit dispatch as normalizeEventsTs —
-    // a driver-side metadata read instead of a scan+aggregate job per
-    // replay; guide §6). Stats-less corpora fall back to the scan.
-    val maxTs = graft.util.ParquetStats.eventsMaxTsMicros(spark, sfDir)
-      .map { us =>
-        val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-        t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-        t
-      }
-      .getOrElse(events.agg(max(col("ts"))).head.getTimestamp(0))
-    val flush = series.zipWithIndex.map { case (s, i) =>
-      (s, new java.sql.Timestamp(maxTs.getTime + (4L + 7L * i) * 86400000L),
-        0.0, Map.empty[String, String],
-        Map("user" -> s"__flush_$i", "event_id" -> "0"))
-    }.toDF("series", "ts", "value", "tags", "attributes")
-    graft.sources.TimeSeriesTable.append(
-      graft.sources.TimeSeriesTable.fromEventsFanned(events)
-        .unionByName(flush),
-      root, domain, family)
-  }
+      seededTail(spark, sfDir, "graft-sqljoin").fresh,
+      watermarkDelay = "2 days"), "append")
+      .orderBy("click_id", "purchase_id")
 
   /** Streaming LEFT OUTER join through the SQL FRONT: the dialect's
     * interval-bounded two-family equi-join with LEFT JOIN — unmatched
     * clicks emit null-extended once the purchase side's watermark has
     * passed their match window (the engine's outer stream-stream join;
-    * state bounded exactly as the inner form). The AvailableNow replay
-    * seeds flush rows ([[batchSeedFamilyWithFlush]]) so the watermark
-    * passes all real data and the tail's unmatched rows actually emit;
-    * the flush markers are dropped from the returned frame. Must equal
-    * the same LEFT JOIN run batch (the DuckDB oracle).
+    * state bounded exactly as the inner form). The replay seeds flush
+    * rows so the watermark passes all real data and the tail's
+    * unmatched rows actually emit; the flush markers are dropped from
+    * the returned frame. Must equal the same LEFT JOIN run batch (the
+    * DuckDB oracle).
     */
-  def streamSqlLeftJoinReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlljoin")
-    // BATCH-append the family (not streamIntoFamily): a streaming-sink
-    // directory carries a _spark_metadata log, and the file-stream tail
-    // then honors ONLY the files that log committed — the flush rows
-    // appended after ingest would be invisible and the watermark would
-    // never pass the real data (measured: the tail's unmatched rows
-    // simply missing). The write-half streaming topology is pinned by
-    // stream_family_roundtrip / stream_sql_insert; this replay pins the
-    // outer-join semantics.
-    batchSeedFamilyWithFlush(spark, sfDir, root, "dom", "events",
-      Seq("click", "purchase"))
-    def stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlLeftJoinReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT a.click.event_id AS click_id, a.click.user AS u, " +
         "b.purchase.event_id AS purchase_id " +
         "FROM dom.events AS a LEFT JOIN dom.events AS b " +
         "ON a.click.user = b.purchase.user " +
         "AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL '1 hour'",
-      _ => stream, watermarkDelay = "2 days")
-    val sink = "graft_sqlljoin_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    // coalesce(…, true): a null-keyed click survives the flush filter
-    // (startsWith on NULL is NULL, which a bare filter would drop) —
-    // the batch LEFT JOIN oracle preserves null-key clicks null-extended
-    spark.table(sink)
+      seededTail(spark, sfDir, "graft-sqlljoin", Seq("click", "purchase")).fresh,
+      watermarkDelay = "2 days"), "append")
+      // coalesce(…, true): a null-keyed click survives the flush filter
+      // (startsWith on NULL is NULL, which a bare filter would drop) —
+      // the batch LEFT JOIN oracle preserves null-key clicks null-extended
       .filter(coalesce(!col("u").startsWith("__flush_"), lit(true)))
       .orderBy("click_id", "purchase_id")
-  }
 
   /** FULL OUTER stream-stream join through the SQL FRONT — both sides
     * null-extend: unmatched clicks AND unmatched purchases emit once
@@ -738,31 +643,18 @@ object StreamingOps {
     * side, which a naive one-sided `u != flush` filter would
     * null-drop. Must equal the batch FULL JOIN (the DuckDB oracle).
     */
-  def streamSqlFullJoinReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlfjoin")
-    batchSeedFamilyWithFlush(spark, sfDir, root, "dom", "events",
-      Seq("click", "purchase"))
-    def stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlFullJoinReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT a.click.event_id AS click_id, a.click.user AS u, " +
         "b.purchase.event_id AS purchase_id, b.purchase.user AS pu " +
         "FROM dom.events AS a FULL JOIN dom.events AS b " +
         "ON a.click.user = b.purchase.user " +
         "AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL '1 hour'",
-      _ => stream, watermarkDelay = "2 days")
-    val sink = "graft_sqlfjoin_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink)
+      seededTail(spark, sfDir, "graft-sqlfjoin", Seq("click", "purchase")).fresh,
+      watermarkDelay = "2 days"), "append")
       .filter(coalesce(!col("u").startsWith("__flush_"), lit(true)) &&
         coalesce(!col("pu").startsWith("__flush_"), lit(true)))
       .orderBy("click_id", "purchase_id")
-  }
 
   /** Windowed aggregation OVER the joined stream through the SQL FRONT
     * — the enrich-then-rollup pipeline: the interval-bounded
@@ -776,16 +668,8 @@ object StreamingOps {
     * user, so no joined row (and no window) contains them. Must equal
     * the same join+GROUP BY run batch (the DuckDB oracle).
     */
-  def streamSqlJoinAggReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqljagg")
-    // batch append, same reason as streamSqlLeftJoinReplay: the flush
-    // rows must be visible to the file-stream tail
-    batchSeedFamilyWithFlush(spark, sfDir, root, "dom", "events",
-      Seq("click", "purchase"))
-    def stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val out = graft.boostql.BoostQL.sqlStream(
+  def streamSqlJoinAggReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(BoostQL.sqlStream(
       "SELECT CAST(bucket(a.ts, '1 day') AS int) AS d, " +
         "a.click.user AS u, count(*) AS n, " +
         "sum(CAST(b.purchase * 100.0 AS int)) AS cents " +
@@ -793,15 +677,9 @@ object StreamingOps {
         "ON a.click.user = b.purchase.user " +
         "AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL '1 hour' " +
         "GROUP BY d, u",
-      _ => stream, watermarkDelay = "2 days")
-    val sink = "graft_sqljagg_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("d", "u")
-  }
+      seededTail(spark, sfDir, "graft-sqljagg", Seq("click", "purchase")).fresh,
+      watermarkDelay = "2 days"), "append")
+      .orderBy("d", "u")
 
   /** HOT-KEY-PROOF stream-stream interval equi-join — the bucketed
     * decomposition of `l JOIN r ON keys AND r.ts − l.ts ∈ [lo, hi]`.
@@ -877,36 +755,25 @@ object StreamingOps {
     * user runs. The skew artifact benches this against the raw SQL
     * form on the hot-user corpus.
     */
-  def streamJoinAggBucketedReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-bjagg")
-    batchSeedFamilyWithFlush(spark, sfDir, root, "dom", "events",
-      Seq("click", "purchase"))
-    def stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    val clicks = stream.filter(col("series") === "click")
+  def streamJoinAggBucketedReplay(spark: SparkSession, sfDir: String): DataFrame = {
+    val tail = seededTail(spark, sfDir, "graft-bjagg", Seq("click", "purchase"))
+    val clicks = tail.open().filter(col("series") === "click")
       .select(element_at(col("attributes"), "user").as("u"),
         col("ts").as("cts"))
       .withWatermark("cts", "2 days")
-    val purchases = stream.filter(col("series") === "purchase")
+    val purchases = tail.open().filter(col("series") === "purchase")
       .select(element_at(col("attributes"), "user").as("pu"),
         col("ts").as("pts"), col("value").as("pv"))
       .withWatermark("pts", "2 days")
     val joined = bucketedIntervalJoin(clicks, purchases,
       Seq("u" -> "pu"), 0L, 3600L * 1000000L, "cts", "pts")
-    val agged = joined
+    drain(joined
       .groupBy(window(col("cts"), "86400000000 microseconds"), col("u"))
       .agg(count(lit(1)).as("n"),
         sum((col("pv") * 100.0).cast("long")).as("cents"))
       .select(col("window.start").cast("long").as("d"), col("u"),
-        col("n"), col("cents"))
-    val sink = "graft_bjagg_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = agged.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).orderBy("d", "u")
+        col("n"), col("cents")), "append")
+      .orderBy("d", "u")
   }
 
   /** Continuous materialization OVER the joined stream: the
@@ -922,15 +789,10 @@ object StreamingOps {
     * nothing. Flush rows close the books (their users never join each
     * other, so they contaminate no rollup rows).
     */
-  def streamSqlJoinInsertReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqljins")
-    batchSeedFamilyWithFlush(spark, sfDir, root, "dom", "events",
-      Seq("click", "purchase"))
-    def stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    withStatePartitions(spark, statePartitions) {
-      graft.boostql.BoostQL.sqlStreamInsert(
+  def streamSqlJoinInsertReplay(spark: SparkSession, sfDir: String): DataFrame = {
+    val tail = seededTail(spark, sfDir, "graft-sqljins", Seq("click", "purchase"))
+    withStatePartitions(spark) {
+      BoostQL.sqlStreamInsert(
         "INSERT INTO dom.jagg SELECT bucket(a.ts, '1 day') AS ts, " +
           "a.click.user AS u, count(*) AS n, " +
           "sum(CAST(b.purchase * 100.0 AS int)) AS cents " +
@@ -938,10 +800,10 @@ object StreamingOps {
           "ON a.click.user = b.purchase.user " +
           "AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL '1 hour' " +
           "GROUP BY ts, u",
-        _ => stream, root, watermark = Some("2 days"))
+        tail.fresh, tail.root, watermark = Some("2 days"))
     }
-    val reread = graft.sources.TimeSeriesTable.open(spark, root, "dom", "jagg")
-    graft.boostql.BoostQL.sql(
+    val reread = TimeSeriesTable.open(spark, tail.root, "dom", "jagg")
+    BoostQL.sql(
       "SELECT ts, n.u AS u, n AS v FROM dom.jagg " +
         "UNION ALL SELECT ts, cents.u AS u, cents AS v FROM dom.jagg " +
         "ORDER BY ts, u, v", _ => reread)
@@ -958,23 +820,18 @@ object StreamingOps {
     * the flush user's own one-row session is filtered from the
     * read-back.
     */
-  def streamSqlSessionInsertReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val root = tempRoot("graft-sqlsessins")
-    batchSeedFamilyWithFlush(spark, sfDir, root, "dom", "events",
-      Seq("click"))
-    def stream = graft.sources.TimeSeriesTable
-      .openStream(spark, root, "dom", "events")
-    withStatePartitions(spark, statePartitions) {
-      graft.boostql.BoostQL.sqlStreamInsert(
+  def streamSqlSessionInsertReplay(spark: SparkSession, sfDir: String): DataFrame = {
+    val tail = seededTail(spark, sfDir, "graft-sqlsessins", Seq("click"))
+    withStatePartitions(spark) {
+      BoostQL.sqlStreamInsert(
         "INSERT INTO dom.sess SELECT session(ts, '6 hours') AS ts, " +
           "click.user AS u, count(*) AS n, " +
           "sum(CAST(click * 100.0 AS int)) AS cents " +
           "FROM dom.events GROUP BY ts, u",
-        _ => stream, root, watermark = Some("1 day"))
+        tail.fresh, tail.root, watermark = Some("1 day"))
     }
-    val reread = graft.sources.TimeSeriesTable.open(spark, root, "dom", "sess")
-    graft.boostql.BoostQL.sql(
+    val reread = TimeSeriesTable.open(spark, tail.root, "dom", "sess")
+    BoostQL.sql(
       "SELECT ts, n.u AS u, n AS v FROM dom.sess " +
         "WHERE NOT n.u LIKE '__flush%' " +
         "UNION ALL SELECT ts, cents.u AS u, cents AS v FROM dom.sess " +
@@ -983,7 +840,7 @@ object StreamingOps {
   }
 
   /** Streaming sessionization: merge each user's events into activity
-    * sessions separated by more than `gap` of event-time silence —
+    * sessions separated by more than 6 hours of event-time silence —
     * `session_window` keeps per-key open sessions in the state store and
     * merges/extends them as events arrive, the genuinely-stateful
     * streaming operator the batch gaps-and-islands window
@@ -997,28 +854,18 @@ object StreamingOps {
     * complete mode (memory sink at test scale); a production job would
     * run append mode and emit sessions as the watermark finalizes them.
     */
-  def sessionWindowReplay(spark: SparkSession, sfDir: String,
-      gap: String = "6 hours", statePartitions: Int = 4): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val agg = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-      .transform(graft.tables.Tables.normalizeEventsTs)
+  def sessionWindowReplay(spark: SparkSession, sfDir: String): DataFrame =
+    drain(eventsStream(spark, sfDir)
       .withWatermark("ts", "1 day")
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
+      .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    val sink = "graft_session_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink)
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete")
       .select(col("user_id"),
         unix_micros(col("session_window.start")).as("w_start_us"),
         unix_micros(col("session_window.end")).as("w_end_us"),
         col("n_events"), col("sum_value"))
       .orderBy("user_id", "w_start_us")
-  }
 
   /** Stream-stream interval join: for every click, the purchases by the
     * same user within the following hour — the canonical funnel/
@@ -1029,30 +876,19 @@ object StreamingOps {
     * emit as soon as both rows arrive (append mode — no
     * watermark-withholding at end of replay).
     */
-  def streamIntervalJoinReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def src = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-      .transform(graft.tables.Tables.normalizeEventsTs)
-    val clicks = src.filter(col("event_type") === "click")
+  def streamIntervalJoinReplay(spark: SparkSession, sfDir: String): DataFrame = {
+    val clicks = eventsStream(spark, sfDir).filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))
       .withWatermark("click_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
+    val purchases = eventsStream(spark, sfDir).filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
         col("ts").as("purchase_ts"))
       .withWatermark("purchase_ts", "1 hour")
-    val joined = clicks.join(purchases,
+    drain(clicks.join(purchases,
       col("user_id") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
-    val sink = "graft_sjoin_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink)
+        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR")), "append")
       .select(col("user_id"), col("click_id"), col("purchase_id"),
         (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
           .as("delay_us"))
@@ -1072,25 +908,15 @@ object StreamingOps {
     * `broadcast()` pins the no-shuffle plan: the stream side never
     * repartitions for the join, only for the downstream aggregation.
     */
-  def streamStaticJoinReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val events = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-      .transform(graft.tables.Tables.normalizeEventsTs)
+  def streamStaticJoinReplay(spark: SparkSession, sfDir: String): DataFrame = {
     val dim = graft.tables.Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = events
+    drain(eventsStream(spark, sfDir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-    val sink = "graft_ssj_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink)
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value")),
+      "complete")
       .select("c_mktsegment", "event_type", "n", "sum_value")
       .orderBy("c_mktsegment", "event_type")
   }
@@ -1114,32 +940,28 @@ object StreamingOps {
     * loudly rather than resolve arbitrarily (upsertRows' contract), so
     * the parity claim cannot silently depend on arrival order.
     */
-  def streamUpsertReplay(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+  def streamUpsertReplay(spark: SparkSession, sfDir: String): DataFrame = {
     val root = tempRoot("graft-supsert")
-    def deliver(tag: String): Unit = {
-      val fam = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-        .transform(graft.tables.Tables.normalizeEventsTs)
-        .select(col("event_type").as("series"), col("ts"), col("value"),
-          map().cast("map<string,string>").as("tags"),
-          map(lit("user"), col("user_id").cast("string")).as("attributes"))
-      withStatePartitions(spark, statePartitions) {
+    // each start() below opens its own source over this one plan
+    val fam = eventsStream(spark, sfDir)
+      .select(col("event_type").as("series"), col("ts"), col("value"),
+        map().cast("map<string,string>").as("tags"),
+        map(lit("user"), col("user_id").cast("string")).as("attributes"))
+    def deliver(tag: String): Unit =
+      withStatePartitions(spark) {
         val q = fam.writeStream
           .option("checkpointLocation", s"$root/ckpt_$tag")
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            graft.sources.TimeSeriesTable.upsertRows(
-              spark, root.toString, "dom", "events", batch)
+            TimeSeriesTable.upsertRows(spark, root, "dom", "events", batch)
             ()
           }
           .start()
         q.awaitTermination()
       }
-    }
     deliver("first")
     deliver("redelivery")
-    graft.sources.TimeSeriesTable.open(spark, root.toString, "dom", "events")
+    TimeSeriesTable.open(spark, root, "dom", "events")
       .select(col("series"), col("ts"), col("value"),
         element_at(col("attributes"), "user").as("user"))
       .orderBy("series", "ts")
@@ -1156,22 +978,16 @@ object StreamingOps {
     * (lang, keep): O(languages), watermark-free.
     */
   def streamingCurationReplay(spark: SparkSession, sfDir: String,
-      weights: Array[Double], bias: Double,
-      statePartitions: Int = 4): DataFrame = {
+      weights: Array[Double], bias: Double): DataFrame = {
     val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
     val docs = spark.readStream.schema(schema)
       .parquet(stageDir(sfDir, "documents"))
     val scored = graft.operators.TextAnalysisOps
       .classifierScore(docs, "doc_id", "text", weights, bias)
-    val ledger = scored.groupBy(col("lang"), col("keep"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-    val sink = "graft_curate_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = ledger.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).select("lang", "keep", "n_docs", "sum_tokens")
+    drain(scored.groupBy(col("lang"), col("keep"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens")),
+      "complete")
+      .select("lang", "keep", "n_docs", "sum_tokens")
       .orderBy("lang", "keep")
   }
 
@@ -1179,23 +995,13 @@ object StreamingOps {
     * watermark horizon — the streaming face of the dedup tier. Returns
     * the deduplicated count per event_type after full replay.
     */
-  def streamingDedupCounts(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val deduped = spark.readStream.schema(schema).parquet(stageDir(sfDir))
-      .transform(graft.tables.Tables.normalizeEventsTs)
+  def streamingDedupCounts(spark: SparkSession, sfDir: String): DataFrame =
+    drain(eventsStream(spark, sfDir)
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val sink = "graft_dedup_" + UUID.randomUUID.toString.replace("-", "")
-    withStatePartitions(spark, statePartitions) {
-      val query = deduped.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      query.awaitTermination()
-    }
-    spark.table(sink).select(col("event_type"), col("n"))
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n")), "complete")
+      .select(col("event_type"), col("n"))
       .orderBy("event_type")
-  }
 
   /** Near-dup candidate detection over a DOCUMENT STREAM, fully
     * CONTINUOUS: word-3-gram shingles per document (distinct within a
@@ -1221,11 +1027,9 @@ object StreamingOps {
     * and the level-2 rollup stays a narrow aggregate of the bounded
     * state table.
     */
-  def streamingShingleCandidates(spark: SparkSession, sfDir: String,
-      statePartitions: Int = 4): DataFrame = {
+  def streamingShingleCandidates(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val rollups = streamingShingleRollups(spark,
-      stageDir(sfDir, "documents"), statePartitions)
+    val rollups = streamingShingleRollups(spark, stageDir(sfDir, "documents"))
     require(rollups.nonEmpty, "the replay produced no micro-batches")
     Seq(rollups.maxBy(_._1)).map { case (_, ns, cs, cp) => (ns, cs, cp) }
       .toDF("n_shingles", "cand_shingles", "cand_pairs")
@@ -1239,8 +1043,7 @@ object StreamingOps {
     * observable in tests.
     */
   def streamingShingleRollups(spark: SparkSession, docsDir: String,
-      statePartitions: Int = 4, maxFilesPerTrigger: Int = 0)
-      : Seq[(Long, Long, Long, Long)] = {
+      maxFilesPerTrigger: Int = 0): Seq[(Long, Long, Long, Long)] = {
     val schema = spark.read.parquet(docsDir).schema
     val reader = spark.readStream.schema(schema)
     if (maxFilesPerTrigger > 0)
@@ -1254,7 +1057,7 @@ object StreamingOps {
       .groupBy("g").agg(count(lit(1)).as("n"))
     val rollups =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    withStatePartitions(spark, statePartitions) {
+    withStatePartitions(spark) {
       val query = perShingle.writeStream
         .outputMode("complete")
         .trigger(Trigger.AvailableNow())

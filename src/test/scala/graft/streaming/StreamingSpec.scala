@@ -740,7 +740,7 @@ class StreamingSpec extends SparkSpec {
       .createTempDirectory("graft-neardup-multi").toString
     docs.repartition(4).write.mode("overwrite").parquet(staged)
     val rollups = StreamingOps.streamingShingleRollups(spark, staged,
-      statePartitions = 4, maxFilesPerTrigger = 1)
+      maxFilesPerTrigger = 1)
     assert(rollups.size >= 2,
       s"expected a multi-batch trajectory, got ${rollups.size} batch(es)")
     // the candidate counts are LIVE after every micro-batch and only
@@ -810,6 +810,35 @@ class StreamingSpec extends SparkSpec {
       left, right, Seq.empty, 0L, 1L, "lts", "rts"))
     intercept[IllegalArgumentException](StreamingOps.bucketedIntervalJoin(
       left, right, Seq("lk" -> "rk"), 5L, 1L, "lts", "rts"))
+  }
+
+  test("replays leave no memory-sink temp view behind; returned frames still collect") {
+    def tempViews: Set[String] = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    // stateful (complete-mode aggregate) and stateless (append-mode
+    // dialect filter) replays, each against its batch answer
+    val before = tempViews
+    val agg = StreamingOps.windowedAggReplay(spark, sfDir)
+    assert(tempViews == before, "windowedAggReplay left a temp view")
+    val wantAgg = Tables.events(spark, sfDir)
+      .groupBy(window(col("ts"), "1 day"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+      .select(unix_micros(col("window.start")).as("w_start_us"),
+        col("event_type"), col("n"), col("sum_value"))
+      .orderBy("w_start_us", "event_type").collect().toSeq
+    assert(wantAgg.nonEmpty && agg.collect().toSeq == wantAgg)
+    val filtered = StreamingOps.streamSqlFilterReplay(spark, sfDir)
+    assert(tempViews == before, "streamSqlFilterReplay left a temp view")
+    val wantFiltered = Tables.events(spark, sfDir)
+      .filter(col("event_type") === "purchase" && col("value") > 250.0)
+      .select(col("event_id").cast("string"), col("user_id").cast("string"),
+        col("value"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+      .sortBy(_._1).toSeq
+    val gotFiltered = filtered.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).toSeq
+    assert(wantFiltered.nonEmpty && gotFiltered == wantFiltered)
   }
 
   test("repeated streaming calls stage exactly one temp dir per sfDir") {

@@ -9,6 +9,15 @@ package graft.boostql
   * (query/base/logicalexpression.go:10-36), and — beyond the reference,
   * which only declared them as enum values (query/base/expression.go:17-33)
   * — GROUP BY / HAVING / ORDER BY / LIMIT.
+  *
+  * Expressions are trees of [[Operand]]s and [[BExpr]]s, both [[Node]]s,
+  * and every analysis walks them through one traversal: [[children]] and
+  * [[mapChildren]], plus the [[exists]], [[collect]] and [[rewrite]]
+  * helpers written over them. The scope rule is stated once, here:
+  * children never enter a subquery body ([[QuerySpec]]) — a subquery
+  * is its own scope and compiles separately, so `x IN (SELECT …)` and
+  * `x op ANY (SELECT …)` contribute only their left operand, and EXISTS
+  * and a scalar subquery contribute nothing.
   */
 object Ast {
 
@@ -46,7 +55,10 @@ object Ast {
     def colName: String = attr.fold(series)(a => s"${series}_$a")
   }
 
-  sealed trait Operand
+  /** An expression node: an [[Operand]] or a [[BExpr]]. */
+  sealed trait Node
+
+  sealed trait Operand extends Node
   final case class OLit(lit: BLit) extends Operand
   /** `INTERVAL '<n> <unit>'` — a duration literal, valid only as the
     * right operand of `+`/`-` with a timestamp. Fixed-width units
@@ -156,7 +168,7 @@ object Ast {
     * NOT — absent from the reference's connective set (AND/OR only,
     * whereparser.go:146-169) but required by any real predicate surface.
     */
-  sealed trait BExpr
+  sealed trait BExpr extends Node
   final case class Cmp(op: String, left: Operand, right: Operand) extends BExpr
   final case class AndE(left: BExpr, right: BExpr) extends BExpr
   final case class OrE(left: BExpr, right: BExpr) extends BExpr
@@ -203,6 +215,85 @@ object Ast {
     * to the semantics (only row existence matters).
     */
   final case class ExistsE(sub: QuerySpec, negated: Boolean) extends BExpr
+
+  /** The direct [[Operand]]/[[BExpr]] children of a node, left to right
+    * in source order. A window's partition and order keys are
+    * [[RawName]]s, not nodes; a subquery body is not entered.
+    */
+  def children(n: Node): Seq[Node] = n match {
+    case _: OLit | _: OInterval | _: ORef | _: OAgg | _: OScalarSub |
+         _: OGroupKey | _: ExistsE => Nil
+    case OAggX(_, a, _, a2)     => a +: a2.toSeq
+    case OArith(_, l, r)        => Seq(l, r)
+    case ONeg(x)                => Seq(x)
+    case OFn(_, as)             => as
+    case OCast(x, _)            => Seq(x)
+    case OCase(bs, el)          => bs.flatMap(b => Seq(b._1, b._2)) ++ el
+    case w: OWin                => w.args
+    case Cmp(_, l, r)           => Seq(l, r)
+    case AndE(l, r)             => Seq(l, r)
+    case OrE(l, r)              => Seq(l, r)
+    case NotE(x)                => Seq(x)
+    case IsNullE(o, _)          => Seq(o)
+    case InE(o, xs, _)          => o +: xs
+    case BetweenE(o, lo, hi, _) => Seq(o, lo, hi)
+    case LikeE(o, _, _)         => Seq(o)
+    case InSubE(o, _, _)        => Seq(o)
+    case QuantE(_, o, _, _)     => Seq(o)
+  }
+
+  /** `n` rebuilt with `f` applied to each of its [[children]]; every
+    * other field is kept. `f` must map an operand to an operand and a
+    * predicate to a predicate.
+    */
+  def mapChildren[N <: Node](n: N)(f: Node => Node): N = {
+    def op(x: Operand): Operand = f(x).asInstanceOf[Operand]
+    def bx(x: BExpr): BExpr = f(x).asInstanceOf[BExpr]
+    val out: Node = n match {
+      case _: OLit | _: OInterval | _: ORef | _: OAgg | _: OScalarSub |
+           _: OGroupKey | _: ExistsE => n
+      case OAggX(fn, a, ps, a2)   => OAggX(fn, op(a), ps, a2.map(op))
+      case OArith(o, l, r)        => OArith(o, op(l), op(r))
+      case ONeg(x)                => ONeg(op(x))
+      case OFn(fn, as)            => OFn(fn, as.map(op))
+      case OCast(x, t)            => OCast(op(x), t)
+      case OCase(bs, el)          =>
+        OCase(bs.map { case (c, v) => (bx(c), op(v)) }, el.map(op))
+      case w: OWin                => w.copy(args = w.args.map(op))
+      case Cmp(o, l, r)           => Cmp(o, op(l), op(r))
+      case AndE(l, r)             => AndE(bx(l), bx(r))
+      case OrE(l, r)              => OrE(bx(l), bx(r))
+      case NotE(x)                => NotE(bx(x))
+      case IsNullE(o, ng)         => IsNullE(op(o), ng)
+      case InE(o, xs, ng)         => InE(op(o), xs.map(op), ng)
+      case BetweenE(o, lo, hi, ng) => BetweenE(op(o), op(lo), op(hi), ng)
+      case LikeE(o, p, ng)        => LikeE(op(o), p, ng)
+      case InSubE(o, s, ng)       => InSubE(op(o), s, ng)
+      case QuantE(c, o, s, ng)    => QuantE(c, op(o), s, ng)
+    }
+    out.asInstanceOf[N] // each arm rebuilds the node's own class
+  }
+
+  /** Whether any node of the tree satisfies `pf`. Where `pf` is defined
+    * its answer is final and the walk does not go below that node, so a
+    * walk's stop set is spelled as `pf` cases answering false.
+    */
+  def exists(n: Node)(pf: PartialFunction[Node, Boolean]): Boolean =
+    pf.applyOrElse(n, (m: Node) => children(m).exists(exists(_)(pf)))
+
+  /** The results of `pf` over the tree in pre-order. Where `pf` is
+    * defined its result stands for the whole subtree below that node.
+    */
+  def collect[T](n: Node)(pf: PartialFunction[Node, Seq[T]]): Seq[T] =
+    pf.applyOrElse(n, (m: Node) => children(m).flatMap(collect(_)(pf)))
+
+  /** Top-down rewrite: where `pf` is defined its result replaces the
+    * node (and is not walked again); elsewhere the node is rebuilt from
+    * its rewritten children.
+    */
+  def rewrite[N <: Node](n: N)(pf: PartialFunction[Node, Node]): N =
+    pf.applyOrElse(n, (m: Node) => mapChildren(m)(rewrite(_)(pf)))
+      .asInstanceOf[N]
 
   sealed trait SelectItem
   final case class FieldItem(name: RawName) extends SelectItem

@@ -463,15 +463,7 @@ object BoostQL {
       case NotE(x)    => !walk(x)
       case Cmp(op, l, r) =>
         val (a, as) = operand(l); val (b, bs) = operand(r)
-        val c = op match {
-          case "="  => a === b
-          case "!=" => a =!= b
-          case "<"  => a < b
-          case ">"  => a > b
-          case "<=" => a <= b
-          case ">=" => a >= b
-        }
-        scoped(as ++ bs, c)
+        scoped(as ++ bs, Compiler.cmpColumn(op, a, b))
       case IsNullE(o, neg) =>
         val (c, s) = operand(o)
         scoped(s, if (neg) c.isNotNull else c.isNull)
@@ -540,45 +532,16 @@ object BoostQL {
             element_at(col("tags"), a)), Set(s))
       }
       case OArith(op, l, r: OInterval) =>
-        if (op != "+" && op != "-") throw Compiler.CompileException(
-          s"INTERVAL supports only + and -, not $op")
         val (base, ss) = operand(l)
-        val shifted = Compiler.parseIntervalMicros(r.text) match {
-          case Some(us) =>
-            val iv = lit(java.time.Duration.ofNanos(
-              math.multiplyExact(us, 1000L)))
-            if (op == "+") base.cast("timestamp") + iv
-            else base.cast("timestamp") - iv
-          case None =>
-            val m = Compiler.parseIntervalMonths(r.text)
-              .getOrElse(throw Compiler.CompileException(
-                s"malformed INTERVAL '${r.text}'"))
-            base.cast("timestamp") +
-              make_ym_interval(lit(0), lit(if (op == "+") m else -m))
-        }
-        (shifted, ss)
+        (Compiler.intervalShift(base, op, r.text), ss)
       case OArith("+", l: OInterval, r) => operand(OArith("+", r, l))
       case OArith(op, l, r) =>
         val (a, as) = operand(l); val (b, bs) = operand(r)
-        val c = op match {
-          case "+" => a + b
-          case "-" => a - b
-          case "*" => a * b
-          case "/" => a / b
-        }
-        (c, as ++ bs)
+        (Compiler.arithColumn(op, a, b), as ++ bs)
       case ONeg(x) => val (c, s) = operand(x); (-c, s)
       case OCast(x, ty) =>
         val (c, s) = operand(x)
-        val t = ty match {
-          case "int" => "long"
-          case "float" => "double"
-          case "string" => "string"
-          case "bool" => "boolean"
-          case other => throw Compiler.CompileException(
-            s"CAST to unknown type '$other'")
-        }
-        (c.cast(t), s)
+        (c.cast(Compiler.castType(ty)), s)
       // the scalar builtins (all row-level, codegen'd) — carries the
       // DATE/TIMESTAMP literal desugar (to_date/to_timestamp) plus the
       // everyday normalizations (upper/lower/trim/epoch_us) a takedown
@@ -1136,28 +1099,6 @@ object BoostQL {
     // continuous correlation / OLS drift detection through the SQL
     // front, no new state kinds
     case class ExprOut(nm: String, e: Operand) extends Out
-    def bexprHasAgg(e: BExpr): Boolean = e match {
-      case Cmp(_, l, r)  => hasAggIn(l) || hasAggIn(r)
-      case AndE(l, r)    => bexprHasAgg(l) || bexprHasAgg(r)
-      case OrE(l, r)     => bexprHasAgg(l) || bexprHasAgg(r)
-      case NotE(x)       => bexprHasAgg(x)
-      case IsNullE(o, _) => hasAggIn(o)
-      case BetweenE(o, lo, hi, _) =>
-        hasAggIn(o) || hasAggIn(lo) || hasAggIn(hi)
-      case InE(o, xs, _) => hasAggIn(o) || xs.exists(hasAggIn)
-      case _             => false
-    }
-    def hasAggIn(o: Operand): Boolean = o match {
-      case _: OAgg | _: OAggX => true
-      case OArith(_, l, r)    => hasAggIn(l) || hasAggIn(r)
-      case ONeg(x)            => hasAggIn(x)
-      case OCast(x, _)        => hasAggIn(x)
-      case OFn(_, as)         => as.exists(hasAggIn)
-      case OCase(bs, el)      =>
-        bs.exists { case (c, v) => bexprHasAgg(c) || hasAggIn(v) } ||
-          el.exists(hasAggIn)
-      case _                  => false
-    }
     val outs: Seq[Out] = spec.select.map {
       case ExprItem(e, nm) if nm == bAlias &&
           (bucketShape(e).isDefined || sessionShape(e).isDefined) =>
@@ -1179,7 +1120,7 @@ object BoostQL {
           s"$fn() is not streaming-safe — supported streaming " +
             "aggregates: count, sum, avg, min, max, approx_top_k")
         val o = aggOut(fn, Some(e), nm); aggByShape(it.expr) = nm; o
-      case ExprItem(e, nm) if hasAggIn(e) => ExprOut(nm, e)
+      case ExprItem(e, nm) if Compiler.containsAgg(e) => ExprOut(nm, e)
       case _: AggItem => throw Compiler.CompileException(
         "streaming aggregates must be aliased (agg(x) AS name)")
       case other => throw Compiler.CompileException(
@@ -1249,22 +1190,9 @@ object BoostQL {
         col(n.parts.head)
       case ORef(n) => hRefuse(
         s"'${n.parts.mkString(".")}' (name a select output)")
-      case OArith(op, l, r) =>
-        val (a, b) = (hOp(l), hOp(r))
-        op match {
-          case "+" => a + b
-          case "-" => a - b
-          case "*" => a * b
-          case "/" => a / b
-        }
+      case OArith(op, l, r) => Compiler.arithColumn(op, hOp(l), hOp(r))
       case ONeg(x) => -hOp(x)
-      case OCast(x, t) => hOp(x).cast(t match {
-        case "int" => "long"
-        case "float" => "double"
-        case "string" => "string"
-        case "bool" => "boolean"
-        case other => hRefuse(s"CAST to $other")
-      })
+      case OCast(x, t) => hOp(x).cast(Compiler.castType(t))
       // the allowlisted scalar builtins and CASE — enough to carry the
       // corr/covar/regr desugar trees (sqrt/coalesce + guards) and
       // ordinary rounding/formatting of finalized aggregates
@@ -1284,16 +1212,7 @@ object BoostQL {
       case _ => hRefuse("this expression form")
     }
     def hB(e: BExpr): Column = e match {
-      case Cmp(op, l, r) =>
-        val (a, b) = (hOp(l), hOp(r))
-        op match {
-          case "=" | "==" => a === b
-          case "!=" | "<>" => a =!= b
-          case "<" => a < b
-          case "<=" => a <= b
-          case ">" => a > b
-          case ">=" => a >= b
-        }
+      case Cmp(op, l, r) => Compiler.cmpColumn(op, hOp(l), hOp(r))
       case AndE(l, r)    => hB(l) && hB(r)
       case OrE(l, r)     => hB(l) || hB(r)
       case NotE(x)       => !hB(x)
@@ -1760,46 +1679,16 @@ object BoostQL {
     // which sides does an expression reference? None = undecidable
     // (a 1/2-part name without an alias head is side-ambiguous here —
     // the two-source resolution belongs to the batch compiler)
-    def sidesOfOp(o: Operand): Option[Set[String]] = o match {
+    def sidesOf(n: Node): Option[Set[String]] = n match {
       case ORef(RawName(parts)) =>
         if (parts.length >= 2 && aliases.contains(parts.head))
           Some(Set(parts.head))
         else None
-      case OLit(_) | OInterval(_) => Some(Set.empty)
-      case OArith(_, l, r) =>
-        for { a <- sidesOfOp(l); b <- sidesOfOp(r) } yield a ++ b
-      case ONeg(x)     => sidesOfOp(x)
-      case OCast(x, _) => sidesOfOp(x)
-      case OFn(_, args) => args.foldLeft(Option(Set.empty[String])) {
-        (acc, e) => for { a <- acc; b <- sidesOfOp(e) } yield a ++ b
+      case _: OAgg | _: OAggX | _: OWin | _: OScalarSub | _: OGroupKey |
+           _: InSubE | _: QuantE | _: ExistsE => None
+      case _ => children(n).foldLeft(Option(Set.empty[String])) {
+        (acc, c) => for { a <- acc; b <- sidesOf(c) } yield a ++ b
       }
-      case OCase(bs, el) =>
-        val parts = bs.map(br =>
-          for { c <- sidesOfB(br._1); v <- sidesOfOp(br._2) } yield c ++ v) ++
-          el.map(sidesOfOp)
-        parts.foldLeft(Option(Set.empty[String])) {
-          (acc, e) => for { a <- acc; b <- e } yield a ++ b
-        }
-      case _ => None
-    }
-    def sidesOfB(e: BExpr): Option[Set[String]] = e match {
-      case Cmp(_, l, r) =>
-        for { a <- sidesOfOp(l); b <- sidesOfOp(r) } yield a ++ b
-      case AndE(l, r) =>
-        for { a <- sidesOfB(l); b <- sidesOfB(r) } yield a ++ b
-      case OrE(l, r) =>
-        for { a <- sidesOfB(l); b <- sidesOfB(r) } yield a ++ b
-      case NotE(x)       => sidesOfB(x)
-      case IsNullE(o, _) => sidesOfOp(o)
-      case LikeE(o, _, _) => sidesOfOp(o)
-      case InE(o, xs, _) => (o +: xs).foldLeft(Option(Set.empty[String])) {
-        (acc, e) => for { a <- acc; b <- sidesOfOp(e) } yield a ++ b
-      }
-      case BetweenE(o, lo, hi, _) =>
-        Seq(o, lo, hi).foldLeft(Option(Set.empty[String])) {
-          (acc, e) => for { a <- acc; b <- sidesOfOp(e) } yield a ++ b
-        }
-      case _ => None
     }
     // ts-axis operand with a constant micros offset: a.ts [± INTERVAL]
     def tsOff(o: Operand): Option[(String, Long)] = o match {
@@ -1830,7 +1719,7 @@ object BoostQL {
     val bWhere = Vector.newBuilder[BExpr]
     // a single-side conjunct pushes into that side's WHERE (inner join:
     // filtering before or after the join is the same multiset)
-    def pushSide(c: BExpr): Boolean = sidesOfB(c) match {
+    def pushSide(c: BExpr): Boolean = sidesOf(c) match {
       case Some(s) if s.subsetOf(Set(aAl)) => aWhere += c; true
       case Some(s) if s == Set(bAl)        => bWhere += c; true
       case _ => false
@@ -1855,7 +1744,7 @@ object BoostQL {
           case _          => return None
         }
       case c @ Cmp("=" | "==", l, r) =>
-        (sidesOfOp(l), sidesOfOp(r)) match {
+        (sidesOf(l), sidesOf(r)) match {
           case (Some(sl), Some(sr))
             if sl.size == 1 && sr.size == 1 && sl != sr =>
             keys += (if (sl.head == aAl) (l, r) else (r, l))
@@ -1873,7 +1762,7 @@ object BoostQL {
     val aItems = Vector.newBuilder[SelectItem]
     val bItems = Vector.newBuilder[SelectItem]
     items.foreach {
-      case it @ ExprItem(e, _) => sidesOfOp(e) match {
+      case it @ ExprItem(e, _) => sidesOf(e) match {
         case Some(s) if s.subsetOf(Set(aAl)) => aItems += it
         case Some(s) if s == Set(bAl)        => bItems += it
         case _                               => return None

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import Ast._
+// the AST walk, not Spark's array higher-order function of the same name
+import Ast.exists
 
 /** BoostQL → DataFrame compiler.
   *
@@ -532,6 +534,94 @@ object Compiler {
       case _ => None
     }
 
+  /** `base ± INTERVAL '<text>'`: fixed-width units (micro…day) compile
+    * to a micros shift; calendar units (month/year) to ANSI year-month
+    * interval addition (day-of-month clamping — Jan 31 + 1 month =
+    * Feb 29/28, the DuckDB contract; a fixed-width fold would be wrong
+    * by up to 3 days). Either way, on a literal bound (`ts >= '2024-01-12
+    * …' - INTERVAL '2 days'`) Catalyst constant-folds the whole right
+    * side, so the comparison still pushes into the parquet scan as a
+    * plain ts filter.
+    */
+  private[boostql] def intervalShift(base: Column, op: String,
+      text: String): Column = {
+    if (op != "+" && op != "-") throw CompileException(
+      s"INTERVAL supports only + and -, not $op")
+    val ts = base.cast("timestamp")
+    parseIntervalMicros(text) match {
+      case Some(us) =>
+        // NATIVE day-time-interval arithmetic (not a unix_micros
+        // round-trip): bit-identical micros shift under the UTC
+        // session, but the shape matters twice — it still constant-
+        // folds into a pushable plain-ts bound on literal operands,
+        // AND Spark's stream-stream join state-eviction analysis
+        // (StreamingJoinHelper) recognizes ts ± interval terms,
+        // where an opaque timestamp_micros(unix_micros(ts) ± n)
+        // would silence state cleanup in the streaming join tier
+        val iv = lit(java.time.Duration.ofNanos(math.multiplyExact(us, 1000L)))
+        if (op == "+") ts + iv else ts - iv
+      case None =>
+        val m = parseIntervalMonths(text).getOrElse(throw CompileException(
+          s"malformed INTERVAL '$text' — expected '<n> " +
+            "<microsecond|millisecond|second|minute|hour|day|month|year>[s]'"))
+        ts + make_ym_interval(lit(0), lit(if (op == "+") m else -m))
+    }
+  }
+
+  /** A comparison operator over two columns (the parser has already
+    * normalized `==` and `<>` to `=` and `!=`). */
+  private[boostql] def cmpColumn(op: String, a: Column, b: Column): Column =
+    op match {
+      case "="  => a === b
+      case "!=" => a =!= b
+      case "<"  => a < b
+      case ">"  => a > b
+      case "<=" => a <= b
+      case ">=" => a >= b
+    }
+
+  /** An arithmetic operator over two columns. */
+  private[boostql] def arithColumn(op: String, a: Column, b: Column): Column =
+    op match {
+      case "+" => a + b
+      case "-" => a - b
+      case "*" => a * b
+      case "/" => a / b
+    }
+
+  /** A CAST target → its Spark type: the dialect's int is 64-bit
+    * (common.go:8), float is double. */
+  private[boostql] def castType(ty: String): String = ty match {
+    case "int"    => "long"
+    case "float"  => "double"
+    case "string" => "string"
+    case "bool"   => "boolean"
+    case other => throw CompileException(
+      s"CAST target must be int, float, string or bool (got $other)")
+  }
+
+  /** Whether an expression contains an aggregate call, CASE conditions
+    * included. Window arguments and subquery predicates are not this
+    * query's aggregation.
+    */
+  private[boostql] def containsAgg(n: Node): Boolean = exists(n) {
+    case _: OAgg | _: OAggX              => true
+    case _: OWin | _: InSubE | _: QuantE => false
+  }
+
+  /** Every raw name an expression references, in source order:
+    * aggregate arguments and window keys included. A nested subquery
+    * predicate's names belong to ITS scope — the recursive compile
+    * resolves them (two-level correlation is out).
+    */
+  private def rawRefs(n: Node): Seq[RawName] = collect(n) {
+    case ORef(nm)              => Seq(nm)
+    case OAgg(_, a)            => a.toSeq
+    case w: OWin               =>
+      w.args.flatMap(rawRefs) ++ w.partitionBy ++ w.orderBy.map(_._1)
+    case _: InSubE | _: QuantE => Nil
+  }
+
   /** Time-series functions with an implicit window over the source's
     * time axis — the dialect face of the reference's stated north star
     * ("a rich set of time-series functions on a SQL-like language
@@ -753,44 +843,22 @@ object Compiler {
     // --- collect every field the query touches -------------------------
     // (recursing through arithmetic AND through aggregate arguments —
     // `HAVING sum(mem) > 5` must fetch mem even when nothing else
-    // references it)
-    def operandRefs(o: Operand): Seq[SField] = o match {
-      case ORef(n)         => Seq(ref(n))
-      case OAgg(_, arg)    => arg.map(ref).toSeq
-      case OAggX(_, e, _, a2) => operandRefs(e) ++ a2.toSeq.flatMap(operandRefs)
-      case OArith(_, l, r) => operandRefs(l) ++ operandRefs(r)
-      case ONeg(x)         => operandRefs(x)
-      case OFn(_, args)    => args.flatMap(operandRefs)
-      case OCast(x, _)     => operandRefs(x)
-      case OWin(_, args, part, ord, _) =>
-        args.flatMap(operandRefs) ++ part.map(ref) ++ ord.map(o2 => ref(o2._1))
-      case OCase(bs, o2)   =>
-        bs.flatMap { case (c, v) => exprRefs(c) ++ operandRefs(v) } ++
-          o2.toSeq.flatMap(operandRefs)
-      // a correlated scalar sub touches the outer plan through the outer
-      // half of each correlation pair (the join keys); everything else
-      // lives in its own compile
-      case OScalarSub(s2)  => analyzeSub(s2).pairs.map(_._1)
-      case OGroupKey(_)    => Seq.empty // reads a grouping output column
-      case OLit(_) | OInterval(_) => Seq.empty
+    // references it; an OGroupKey reads a grouping output column, so
+    // it fetches nothing)
+    def refs(n: Node): Seq[SField] = collect(n) {
+      case ORef(nm)      => Seq(ref(nm))
+      case OAgg(_, arg)  => arg.map(ref).toSeq
+      case w: OWin       => w.args.flatMap(refs) ++ w.partitionBy.map(ref) ++
+        w.orderBy.map(o => ref(o._1))
+      // a subquery touches the outer plan through its left operand and
+      // the outer half of each correlation pair (the join keys) — those
+      // must be fetched; everything else lives in its own compile
+      case OScalarSub(s2)      => outerKeys(s2)
+      case ExistsE(s2, _)      => outerKeys(s2)
+      case InSubE(o, s2, _)    => refs(o) ++ outerKeys(s2)
+      case QuantE(_, o, s2, _) => refs(o) ++ outerKeys(s2)
     }
-    def exprRefs(e: BExpr): Seq[SField] = e match {
-      case Cmp(_, l, r)  => operandRefs(l) ++ operandRefs(r)
-      case IsNullE(o, _) => operandRefs(o)
-      case InE(o, xs, _) => operandRefs(o) ++ xs.flatMap(operandRefs)
-      case BetweenE(o, lo, hi, _) =>
-        operandRefs(o) ++ operandRefs(lo) ++ operandRefs(hi)
-      case LikeE(o, _, _) => operandRefs(o)
-      case AndE(l, r)    => exprRefs(l) ++ exprRefs(r)
-      case OrE(l, r)     => exprRefs(l) ++ exprRefs(r)
-      case NotE(x)       => exprRefs(x)
-      // a subquery predicate touches the outer plan through its left
-      // operand and the outer half of each correlation pair — those must
-      // be fetched; everything else lives in the subquery's own compile
-      case InSubE(o, sub, _) => operandRefs(o) ++ analyzeSub(sub).pairs.map(_._1)
-      case QuantE(_, o, sub, _) => operandRefs(o) ++ analyzeSub(sub).pairs.map(_._1)
-      case ExistsE(sub, _)   => analyzeSub(sub).pairs.map(_._1)
-    }
+    def outerKeys(sub: QuerySpec): Seq[SField] = analyzeSub(sub).pairs.map(_._1)
 
     // --- subquery predicates ---------------------------------------------
     // `x [NOT] IN (SELECT …)` / `[NOT] EXISTS (SELECT …)` compile to LEFT
@@ -811,41 +879,12 @@ object Compiler {
           !subAl.contains(al) && aliasIdx.contains(al)
         case _ => false
       }
-      def rawRefs(o: Operand): Seq[RawName] = o match {
-        case ORef(n)         => Seq(n)
-        case OAgg(_, a)      => a.toSeq
-        case OAggX(_, e, _, a2) => rawRefs(e) ++ a2.toSeq.flatMap(rawRefs)
-        case OArith(_, l, r) => rawRefs(l) ++ rawRefs(r)
-        case ONeg(x)         => rawRefs(x)
-        case OFn(_, as)      => as.flatMap(rawRefs)
-        case OCast(x, _)     => rawRefs(x)
-        case OWin(_, as, p, o2, _) => as.flatMap(rawRefs) ++ p ++ o2.map(_._1)
-        case OCase(bs, o2)   =>
-          bs.flatMap { case (c, v) => exprRawRefs(c) ++ rawRefs(v) } ++
-            o2.toSeq.flatMap(rawRefs)
-        case OScalarSub(_)   => Seq.empty
-        case OGroupKey(_)    => Seq.empty
-        case OLit(_) | OInterval(_) => Seq.empty
-      }
-      def exprRawRefs(e: BExpr): Seq[RawName] = e match {
-        case Cmp(_, l, r)  => rawRefs(l) ++ rawRefs(r)
-        case IsNullE(o, _) => rawRefs(o)
-        case InE(o, xs, _) => rawRefs(o) ++ xs.flatMap(rawRefs)
-        case BetweenE(o, lo, hi, _) => rawRefs(o) ++ rawRefs(lo) ++ rawRefs(hi)
-        case LikeE(o, _, _) => rawRefs(o)
-        case AndE(l, r)    => exprRawRefs(l) ++ exprRawRefs(r)
-        case OrE(l, r)     => exprRawRefs(l) ++ exprRawRefs(r)
-        case NotE(x)       => exprRawRefs(x)
-        // nested subquery: its references belong to ITS scope — the
-        // recursive compile resolves them (two-level correlation is out)
-        case _: InSubE | _: ExistsE | _: QuantE => Seq.empty
-      }
       // outer references are legal only in the sub's WHERE (as correlation)
       val elsewhere = sub.select.flatMap {
         case FieldItem(n)        => Seq(n)
         case AggItem(_, a)       => a.toSeq
         case ExprItem(e, _)      => rawRefs(e)
-      } ++ sub.groupBy ++ sub.having.toSeq.flatMap(exprRawRefs) ++
+      } ++ sub.groupBy ++ sub.having.toSeq.flatMap(rawRefs) ++
         sub.orderBy.flatMap(o => o.item match {
           case FieldItem(n)   => Seq(n)
           case AggItem(_, a)  => a.toSeq
@@ -859,7 +898,7 @@ object Compiler {
         case x          => Seq(x)
       }
       val (corr, local) = sub.where.toSeq.flatMap(conj)
-        .partition(c => exprRawRefs(c).exists(isOuter))
+        .partition(c => rawRefs(c).exists(isOuter))
       val pairs = corr.map {
         case Cmp("=", ORef(a), ORef(b)) => (isOuter(a), isOuter(b)) match {
           case (true, false) => (ref(a), b)
@@ -890,58 +929,17 @@ object Compiler {
      * operandColumn, which is defined after the reference-collection
      * phase this block belongs to. */
 
-    // helpers for the fieldless-EXISTS check in applySubPred (an
-    // ExprItem select list "references a field" when any operand does)
-    def analyzeSubFieldless(o: Operand): Boolean = o match {
-      case ORef(_)         => true
-      case OAgg(_, a)      => a.isDefined
-      case OAggX(_, e, _, a2) =>
-        analyzeSubFieldless(e) || a2.exists(analyzeSubFieldless)
-      case OArith(_, l, r) => analyzeSubFieldless(l) || analyzeSubFieldless(r)
-      case ONeg(x)         => analyzeSubFieldless(x)
-      case OFn(_, as)      => as.exists(analyzeSubFieldless)
-      case OCast(x, _)     => analyzeSubFieldless(x)
-      case _: OWin         => true
-      case OCase(bs, o2)   =>
-        bs.exists { case (c, v) =>
-          exprRawRefsPublic(c).nonEmpty || analyzeSubFieldless(v) } ||
-          o2.exists(analyzeSubFieldless)
-      case OScalarSub(_)   => true
-      case OGroupKey(_)    => true
-      case OLit(_) | OInterval(_) => false
-    }
-    def exprRawRefsPublic(e: BExpr): Seq[RawName] = e match {
-      case Cmp(_, l, r)  => opRaw(l) ++ opRaw(r)
-      case IsNullE(o, _) => opRaw(o)
-      case InE(o, xs, _) => opRaw(o) ++ xs.flatMap(opRaw)
-      case BetweenE(o, lo, hi, _) => opRaw(o) ++ opRaw(lo) ++ opRaw(hi)
-      case LikeE(o, _, _) => opRaw(o)
-      case AndE(l, r)    => exprRawRefsPublic(l) ++ exprRawRefsPublic(r)
-      case OrE(l, r)     => exprRawRefsPublic(l) ++ exprRawRefsPublic(r)
-      case NotE(x)       => exprRawRefsPublic(x)
-      case _: InSubE | _: ExistsE | _: QuantE => Seq.empty
-    }
-    def opRaw(o: Operand): Seq[RawName] = o match {
-      case ORef(n)         => Seq(n)
-      case OAgg(_, a)      => a.toSeq
-      case OAggX(_, e, _, a2) => opRaw(e) ++ a2.toSeq.flatMap(opRaw)
-      case OArith(_, l, r) => opRaw(l) ++ opRaw(r)
-      case ONeg(x)         => opRaw(x)
-      case OFn(_, as)      => as.flatMap(opRaw)
-      case OCast(x, _)     => opRaw(x)
-      case OWin(_, as, p, o2, _) => as.flatMap(opRaw) ++ p ++ o2.map(_._1)
-      case OCase(bs, o2)   =>
-        bs.flatMap { case (c, v) => exprRawRefsPublic(c) ++ opRaw(v) } ++
-          o2.toSeq.flatMap(opRaw)
-      case OScalarSub(_)   => Seq.empty
-      case OGroupKey(_)    => Seq.empty
-      case OLit(_) | OInterval(_) => Seq.empty
+    // for the fieldless-EXISTS check in applySubPred: an ExprItem
+    // select list "references a field" when any of its nodes does
+    def referencesField(n: Node): Boolean = exists(n) {
+      case _: ORef | _: OWin | _: OScalarSub | _: OGroupKey => true
+      case OAgg(_, a) => a.isDefined
     }
     def itemRefs(i: SelectItem): Seq[SField] = i match {
       case FieldItem(n)        => Seq(ref(n))
       case AggItem(_, Some(n)) => Seq(ref(n))
       case AggItem(_, None)    => Seq.empty
-      case ExprItem(e, _)      => operandRefs(e)
+      case ExprItem(e, _)      => refs(e)
     }
 
     // A bare ORDER BY name resolves against select-item output names
@@ -996,7 +994,7 @@ object Compiler {
       case ExprItem(e2, nm) => nm -> e2
       case AggItem(f, a)    => aggColName(f, a.map(ref)) -> OAgg(f, a)
     }.toMap
-    def rwHavOp(o: Operand): Operand = o match {
+    val having2: Option[BExpr] = spec.having.map(rewrite(_) {
       // an alias that IS a GROUP BY expression entry reads back its
       // grouping output column (its base columns are gone after
       // groupBy().agg()) — mirrors the groupedExprNames special case in
@@ -1005,29 +1003,11 @@ object Compiler {
         OGroupKey(n)
       case ORef(RawName(Seq(n))) if havingAliasMap.contains(n) =>
         havingAliasMap(n)
-      case OArith(op, l, r) => OArith(op, rwHavOp(l), rwHavOp(r))
-      case ONeg(x)          => ONeg(rwHavOp(x))
-      case OFn(f, as)       => OFn(f, as.map(rwHavOp))
-      case OCast(x, t)      => OCast(rwHavOp(x), t)
-      case OCase(bs, el)    => OCase(bs.map { case (c, v) =>
-        (rwHavExpr(c), rwHavOp(v)) }, el.map(rwHavOp))
       // aggregate arguments are pre-aggregation scope — aliases of the
-      // OUTPUT don't reach inside them
-      case other            => other
-    }
-    def rwHavExpr(e: BExpr): BExpr = e match {
-      case Cmp(op, l, r) => Cmp(op, rwHavOp(l), rwHavOp(r))
-      case IsNullE(x, n) => IsNullE(rwHavOp(x), n)
-      case InE(x, xs, n) => InE(rwHavOp(x), xs.map(rwHavOp), n)
-      case BetweenE(x, lo, hi, n) =>
-        BetweenE(rwHavOp(x), rwHavOp(lo), rwHavOp(hi), n)
-      case LikeE(x, p, n) => LikeE(rwHavOp(x), p, n)
-      case AndE(l, r)    => AndE(rwHavExpr(l), rwHavExpr(r))
-      case OrE(l, r)     => OrE(rwHavExpr(l), rwHavExpr(r))
-      case NotE(x)       => NotE(rwHavExpr(x))
-      case other         => other // subquery predicates: rejected later
-    }
-    val having2: Option[BExpr] = spec.having.map(rwHavExpr)
+      // OUTPUT don't reach inside them; windows and subquery predicates
+      // are rejected later
+      case kept @ (_: OAggX | _: OWin | _: InSubE | _: QuantE) => kept
+    })
 
     // QUALIFY alias substitution: a single-part name matching a select
     // alias means that aliased EXPRESSION (typically the window call —
@@ -1036,40 +1016,21 @@ object Compiler {
     val qualAliasMap: Map[String, Operand] = spec.select.collect {
       case ExprItem(e, nm) => nm -> e
     }.toMap
-    def rwQualOp(o: Operand): Operand = o match {
+    val qualify2: Option[BExpr] = spec.qualify.map(rewrite(_) {
       case ORef(RawName(Seq(n))) if qualAliasMap.contains(n) => qualAliasMap(n)
-      case OArith(op, l, r) => OArith(op, rwQualOp(l), rwQualOp(r))
-      case ONeg(x)          => ONeg(rwQualOp(x))
-      case OFn(f, as)       => OFn(f, as.map(rwQualOp))
-      case OCast(x, t)      => OCast(rwQualOp(x), t)
-      case OCase(bs, el)    => OCase(bs.map { case (c, v) =>
-        (rwQualExpr(c), rwQualOp(v)) }, el.map(rwQualOp))
-      case other            => other
-    }
-    def rwQualExpr(e: BExpr): BExpr = e match {
-      case Cmp(op, l, r) => Cmp(op, rwQualOp(l), rwQualOp(r))
-      case IsNullE(x, n) => IsNullE(rwQualOp(x), n)
-      case InE(x, xs, n) => InE(rwQualOp(x), xs.map(rwQualOp), n)
-      case BetweenE(x, lo, hi, n) =>
-        BetweenE(rwQualOp(x), rwQualOp(lo), rwQualOp(hi), n)
-      case LikeE(x, p, n) => LikeE(rwQualOp(x), p, n)
-      case AndE(l, r)    => AndE(rwQualExpr(l), rwQualExpr(r))
-      case OrE(l, r)     => OrE(rwQualExpr(l), rwQualExpr(r))
-      case NotE(x)       => NotE(rwQualExpr(x))
-      case other         => other
-    }
-    val qualify2: Option[BExpr] = spec.qualify.map(rwQualExpr)
+      case kept @ (_: OAggX | _: OWin | _: InSubE | _: QuantE) => kept
+    })
 
     val allRefs: Seq[SField] =
       (spec.select.flatMap(itemRefs) ++
-        spec.where.toSeq.flatMap(exprRefs) ++
-        spec.joins.flatMap(_.on.toSeq.flatMap(exprRefs)) ++
+        spec.where.toSeq.flatMap(refs) ++
+        spec.joins.flatMap(_.on.toSeq.flatMap(refs)) ++
         groupEntries.flatMap {
           case Left(sf) => Seq(sf)
-          case Right(ExprItem(e, _)) => operandRefs(e)
+          case Right(ExprItem(e, _)) => refs(e)
         } ++
-        having2.toSeq.flatMap(exprRefs) ++
-        qualify2.toSeq.flatMap(exprRefs) ++
+        having2.toSeq.flatMap(refs) ++
+        qualify2.toSeq.flatMap(refs) ++
         orderItems.flatMap(o => itemRefs(o.item))).distinct
     if (allRefs.isEmpty) throw CompileException("query references no fields")
 
@@ -1158,51 +1119,14 @@ object Compiler {
         col(aggXColName(fn, e, ps, a2))
       case OScalarSub(s2) => col(scalarColName(s2))
       case OGroupKey(nm)  => col(nm)
-      // timestamp ± INTERVAL: fixed-width units (micro…day) compile to
-      // a micros shift; calendar units (month/year) to ANSI year-month
-      // interval addition (day-of-month clamping — Jan 31 + 1 month =
-      // Feb 29/28, the DuckDB contract; a fixed-width fold would be
-      // wrong by up to 3 days). Either way, on a literal bound
-      // (`ts >= '2024-01-12 …' - INTERVAL '2 days'`) Catalyst
-      // constant-folds the whole right side, so the comparison still
-      // pushes into the parquet scan as a plain ts filter.
       case OArith(op, l, r: OInterval) =>
-        if (op != "+" && op != "-") throw CompileException(
-          s"INTERVAL supports only + and -, not $op")
-        parseIntervalMicros(r.text) match {
-          case Some(us) =>
-            // NATIVE day-time-interval arithmetic (not a unix_micros
-            // round-trip): bit-identical micros shift under the UTC
-            // session, but the shape matters twice — it still constant-
-            // folds into a pushable plain-ts bound on literal operands,
-            // AND Spark's stream-stream join state-eviction analysis
-            // (StreamingJoinHelper) recognizes ts ± interval terms,
-            // where an opaque timestamp_micros(unix_micros(ts) ± n)
-            // would silence state cleanup in the streaming join tier
-            val base = operandColumn(l, aggOk, winOk).cast("timestamp")
-            val iv = lit(java.time.Duration.ofNanos(
-              math.multiplyExact(us, 1000L)))
-            if (op == "+") base + iv else base - iv
-          case None =>
-            val m = parseIntervalMonths(r.text).getOrElse(throw CompileException(
-              s"malformed INTERVAL '${r.text}' — expected '<n> " +
-                "<microsecond|millisecond|second|minute|hour|day|month|year>[s]'"))
-            val base = operandColumn(l, aggOk, winOk).cast("timestamp")
-            val shift = make_ym_interval(lit(0), lit(if (op == "+") m else -m))
-            base + shift
-        }
+        intervalShift(operandColumn(l, aggOk, winOk), op, r.text)
       case OArith("+", l: OInterval, r) =>
         operandColumn(OArith("+", r, l), aggOk, winOk)
       case OArith("-", _: OInterval, _) => throw CompileException(
         "INTERVAL - timestamp is not valid; write ts - INTERVAL '…'")
       case OArith(op, l, r) =>
-        val (a, b) = (operandColumn(l, aggOk, winOk), operandColumn(r, aggOk, winOk))
-        op match {
-          case "+" => a + b
-          case "-" => a - b
-          case "*" => a * b
-          case "/" => a / b
-        }
+        arithColumn(op, operandColumn(l, aggOk, winOk), operandColumn(r, aggOk, winOk))
       case ONeg(x) => -operandColumn(x, aggOk, winOk)
       case OInterval(t) => throw CompileException(
         s"INTERVAL '$t' is only valid in + / - with a timestamp")
@@ -1216,16 +1140,7 @@ object Compiler {
             "items, QUALIFY and ORDER BY only")
         tsWinColumn(fn, args, aggOk)
       case OFn(fn, args) => fnColumn(fn, args, args.map(operandColumn(_, aggOk, winOk)))
-      case OCast(x, ty) =>
-        val sparkType = ty match {
-          case "int"    => "long"    // the dialect's int is 64-bit (common.go:8)
-          case "float"  => "double"
-          case "string" => "string"
-          case "bool"   => "boolean"
-          case other => throw CompileException(
-            s"CAST target must be int, float, string or bool (got $other)")
-        }
-        operandColumn(x, aggOk, winOk).cast(sparkType)
+      case OCast(x, ty) => operandColumn(x, aggOk, winOk).cast(castType(ty))
       case w: OWin =>
         if (!winOk) throw CompileException(
           "window functions are only allowed in SELECT items, QUALIFY " +
@@ -1476,7 +1391,7 @@ object Compiler {
       }
       val axis =
         if (!multi) tsAxis(0)
-        else operandRefs(args.head).map(_.src).distinct match {
+        else refs(args.head).map(_.src).distinct match {
           case Seq(s) => tsAxis(s)
           case _ => throw CompileException(
             s"$fn() argument must reference exactly one source in a " +
@@ -1676,15 +1591,7 @@ object Compiler {
         val c = operandColumn(o, aggOk, winOk).like(p)
         if (neg) !c else c
       case Cmp(op, l, r) =>
-        val (a, b) = (operandColumn(l, aggOk, winOk), operandColumn(r, aggOk, winOk))
-        op match {
-          case "="  => a === b
-          case "!=" => a =!= b
-          case "<"  => a < b
-          case ">"  => a > b
-          case "<=" => a <= b
-          case ">=" => a >= b
-        }
+        cmpColumn(op, operandColumn(l, aggOk, winOk), operandColumn(r, aggOk, winOk))
       // semi/anti joins are plan surgery, not a Column — reachable only
       // as top-level WHERE conjuncts, which compile() strips out before
       // calling here
@@ -1790,64 +1697,40 @@ object Compiler {
     // as IN/EXISTS) decorrelates to a groupBy on the key pairs + LEFT
     // join: one aggregate row per key group, NULL where the group is
     // empty (COUNT coalesces to 0 — the ANSI empty-group count).
-    def opScalarSubs(o: Operand): Seq[QuerySpec] = o match {
-      case OScalarSub(s2)  => Seq(s2)
-      case OArith(_, l, r) => opScalarSubs(l) ++ opScalarSubs(r)
-      case ONeg(x)         => opScalarSubs(x)
-      case OFn(_, as)      => as.flatMap(opScalarSubs)
-      case OCast(x, _)     => opScalarSubs(x)
-      case OAggX(_, e, _, a2) => opScalarSubs(e) ++ a2.toSeq.flatMap(opScalarSubs)
-      case OCase(bs, o2)   =>
-        bs.flatMap { case (c, v) => exprScalarSubs(c) ++ opScalarSubs(v) } ++
-          o2.toSeq.flatMap(opScalarSubs)
-      case _               => Seq.empty
-    }
-    def exprScalarSubs(e: BExpr): Seq[QuerySpec] = e match {
-      case Cmp(_, l, r)  => opScalarSubs(l) ++ opScalarSubs(r)
-      case IsNullE(o, _) => opScalarSubs(o)
-      case InE(o, xs, _) => opScalarSubs(o) ++ xs.flatMap(opScalarSubs)
-      case BetweenE(o, lo, hi, _) =>
-        opScalarSubs(o) ++ opScalarSubs(lo) ++ opScalarSubs(hi)
-      case LikeE(o, _, _) => opScalarSubs(o)
-      case AndE(l, r)    => exprScalarSubs(l) ++ exprScalarSubs(r)
-      case OrE(l, r)     => exprScalarSubs(l) ++ exprScalarSubs(r)
-      case NotE(x)       => exprScalarSubs(x)
-      case InSubE(o, _, _) => opScalarSubs(o) // left operand is THIS scope
-      case QuantE(_, o, _, _) => opScalarSubs(o)
-      case _: ExistsE    => Seq.empty
-    }
+    // scalarSubs flags each sub that sits inside an aggregate argument
+    // (a subquery predicate's left operand is THIS scope)
+    def scalarSubs(n: Node, inAgg: Boolean = false): Seq[(QuerySpec, Boolean)] =
+      collect(n) {
+        case OScalarSub(s2) => Seq((s2, inAgg))
+        case a: OAggX       => children(a).flatMap(scalarSubs(_, inAgg = true))
+        case _: OWin        => Nil
+      }
     val whereScalarSubs: Seq[QuerySpec] =
-      spec.where.toSeq.flatMap(exprScalarSubs).distinct
-    val selectScalarSubs: Seq[QuerySpec] =
-      spec.select.flatMap {
-        case ExprItem(e, _) => opScalarSubs(e); case _ => Seq.empty }.distinct
+      spec.where.toSeq.flatMap(scalarSubs(_)).map(_._1)
+    val (aggArgScalarSubs, selectScalarSubs) = spec.select.flatMap {
+      case ExprItem(e, _) => scalarSubs(e); case _ => Seq.empty
+    }.partition(_._2) match {
+      case (in, out) => (in.map(_._1).distinct, out.map(_._1).distinct)
+    }
     locally {
       val elsewhere =
-        spec.having.toSeq.flatMap(exprScalarSubs) ++
-        spec.joins.flatMap(_.on.toSeq.flatMap(exprScalarSubs)) ++
+        spec.having.toSeq.flatMap(scalarSubs(_)) ++
+        spec.joins.flatMap(_.on.toSeq.flatMap(scalarSubs(_))) ++
         spec.orderBy.flatMap(_.item match {
-          case ExprItem(e, _) => opScalarSubs(e); case _ => Seq.empty })
+          case ExprItem(e, _) => scalarSubs(e); case _ => Seq.empty })
       if (elsewhere.nonEmpty) throw CompileException(
         "scalar subqueries are only supported in WHERE and SELECT items")
-    }
-    def hasAggAst(o: Operand): Boolean = o match {
-      case _: OAgg | _: OAggX => true
-      case OArith(_, l, r) => hasAggAst(l) || hasAggAst(r)
-      case ONeg(x)         => hasAggAst(x)
-      case OFn(_, as)      => as.exists(hasAggAst)
-      case OCast(x, _)     => hasAggAst(x)
-      case OCase(bs, o2)   =>
-        bs.exists { case (_, v) => hasAggAst(v) } || o2.exists(hasAggAst)
-      case _               => false
     }
     // outer aggregation shape, needed before the aggregation section:
     // SELECT-item subs attach post-agg there (their column must survive
     // the groupBy), and correlated ones cannot (their join keys are
-    // pre-aggregation columns)
+    // pre-aggregation columns). A sub inside an aggregate argument is
+    // pre-aggregation scope: it attaches before the groupBy, as WHERE's
+    // do, and a correlated one joins on pre-aggregation keys.
     val outerHasAgg = spec.groupBy.nonEmpty || spec.having.nonEmpty ||
       spec.select.exists {
         case _: AggItem     => true
-        case ExprItem(e, _) => hasAggAst(e)
+        case ExprItem(e, _) => containsAgg(e)
         case _              => false
       }
     // A correlated SELECT sub in a GROUPED outer query is legal when it
@@ -1859,15 +1742,14 @@ object Compiler {
     if (outerHasAgg) {
       val groupKeyInNames: Set[String] =
         groupEntries.collect { case Left(sf) => sf.inName }.toSet
-      for (s <- selectScalarSubs; of <- analyzeSub(s).pairs.map(_._1))
+      for (s <- selectScalarSubs; of <- outerKeys(s))
         if (!groupKeyInNames.contains(of.inName))
           throw CompileException(
             "correlated scalar subquery in the SELECT of a grouped query " +
               s"must correlate on grouping keys (${of.outName} is not one)")
     }
-    val preScalarSubs =
-      (whereScalarSubs ++ (if (outerHasAgg) Seq.empty else selectScalarSubs))
-        .distinct
+    val preScalarSubs = (whereScalarSubs ++ aggArgScalarSubs ++
+      (if (outerHasAgg) Seq.empty else selectScalarSubs)).distinct
     val postScalarSubs =
       if (outerHasAgg) selectScalarSubs else Seq.empty
     def attachScalarSubs(df: DataFrame, subs: Seq[QuerySpec]): DataFrame =
@@ -1878,7 +1760,7 @@ object Compiler {
         if (a.pairs.isEmpty) {
           val aggShaped = s2.select.head match {
             case AggItem(_, _)  => true
-            case ExprItem(e, _) => hasAggAst(e)
+            case ExprItem(e, _) => containsAgg(e)
             case _              => false
           }
           if (!((aggShaped && s2.groupBy.isEmpty) || s2.limit.contains(1)))
@@ -1936,9 +1818,9 @@ object Compiler {
           val spec2 =
             if (a.local.select.exists {
               case FieldItem(_) | AggItem(_, _) => true
-              case ExprItem(e, _) => analyzeSubFieldless(e)
+              case ExprItem(e, _) => referencesField(e)
             }) a.local
-            else a.local.where.toSeq.flatMap(exprRawRefsPublic).headOption match {
+            else a.local.where.toSeq.flatMap(rawRefs).headOption match {
               case Some(n) => a.local.copy(select = Seq(FieldItem(n)))
               case None => throw CompileException(
                 "EXISTS subquery must reference at least one field")
@@ -2061,39 +1943,21 @@ object Compiler {
     }
 
     // --- aggregation / projection ---------------------------------------
-    def opAggs(o: Operand): Seq[AggSpec] = o match {
-      case OAgg(f, a)      => Seq(Left((f, a.map(ref))))
-      case OAggX(f, e, ps, a2) =>
-        if (opAggs(e).nonEmpty || a2.exists(opAggs(_).nonEmpty))
+    // the aggregate calls of an operand or a boolean tree (HAVING
+    // conditions, CASE WHEN conditions)
+    def aggs(n: Node): Seq[AggSpec] = collect(n) {
+      case OAgg(f, a)          => Seq(Left((f, a.map(ref))))
+      case a @ OAggX(f, e, ps, a2) =>
+        if (children(a).exists(containsAgg))
           throw CompileException(s"nested aggregate inside $f(…)")
         Seq(Right((f, e, ps, a2)))
-      case OArith(_, l, r) => opAggs(l) ++ opAggs(r)
-      case ONeg(x)         => opAggs(x)
-      case OFn(_, args)    => args.flatMap(opAggs)
-      case OCast(x, _)     => opAggs(x)
-      case OCase(bs, o2)   =>
-        bs.flatMap { case (c, v) => exprAggs(c) ++ opAggs(v) } ++
-          o2.toSeq.flatMap(opAggs)
-      case _               => Seq.empty
-    }
-    // aggregate calls inside a boolean tree (HAVING conditions, CASE
-    // WHEN conditions) — the BExpr twin of opAggs
-    def exprAggs(e: BExpr): Seq[AggSpec] = e match {
-      case Cmp(_, l, r)  => opAggs(l) ++ opAggs(r)
-      case IsNullE(o, _) => opAggs(o)
-      case InE(o, xs, _) => opAggs(o) ++ xs.flatMap(opAggs)
-      case BetweenE(o, lo, hi, _) => opAggs(o) ++ opAggs(lo) ++ opAggs(hi)
-      case LikeE(o, _, _) => opAggs(o)
-      case AndE(l, r)    => exprAggs(l) ++ exprAggs(r)
-      case OrE(l, r)     => exprAggs(l) ++ exprAggs(r)
-      case NotE(x)       => exprAggs(x)
       // subquery predicates never nest aggregates into THIS query's agg
       // list (exprColumn rejects them outside top-level WHERE anyway)
-      case _: InSubE | _: ExistsE | _: QuantE => Seq.empty
+      case _: OWin | _: InSubE | _: QuantE => Nil
     }
     def itemAggs(i: SelectItem): Seq[AggSpec] = i match {
       case AggItem(f, a)  => Seq(Left((f, a.map(ref))))
-      case ExprItem(e, _) => opAggs(e)
+      case ExprItem(e, _) => aggs(e)
       case _              => Seq.empty
     }
     val hasAgg = spec.select.exists(itemAggs(_).nonEmpty) ||
@@ -2101,31 +1965,13 @@ object Compiler {
 
     // windows + grouping in one query is DataFrame-tier territory —
     // refuse rather than guess which happens first
-    def hasWinOp(o: Operand): Boolean = o match {
+    def hasWinOp(n: Node): Boolean = exists(n) {
       case _: OWin         => true
       // tsPartFns (zscore) are windows too: under QUALIFY they must
       // materialize pre-filter like every other window, or the final
       // projection would recompute them over the FILTERED partitions
       case OFn(f, _) if tsWinFns.contains(f) || tsPartFns.contains(f) => true
-      case OArith(_, l, r) => hasWinOp(l) || hasWinOp(r)
-      case ONeg(x)         => hasWinOp(x)
-      case OFn(_, args)    => args.exists(hasWinOp)
-      case OCast(x, _)     => hasWinOp(x)
-      case OCase(bs, o2)   =>
-        bs.exists { case (c, v) => exprHasWin(c) || hasWinOp(v) } ||
-          o2.exists(hasWinOp)
-      case _               => false
-    }
-    def exprHasWin(e: BExpr): Boolean = e match {
-      case Cmp(_, l, r)  => hasWinOp(l) || hasWinOp(r)
-      case IsNullE(o, _) => hasWinOp(o)
-      case InE(o, xs, _) => hasWinOp(o) || xs.exists(hasWinOp)
-      case BetweenE(o, lo, hi, _) => hasWinOp(o) || hasWinOp(lo) || hasWinOp(hi)
-      case LikeE(o, _, _) => hasWinOp(o)
-      case AndE(l, r)    => exprHasWin(l) || exprHasWin(r)
-      case OrE(l, r)     => exprHasWin(l) || exprHasWin(r)
-      case NotE(x)       => exprHasWin(x)
-      case _: InSubE | _: ExistsE | _: QuantE => false
+      case _: OAggX | _: InSubE | _: QuantE => false
     }
     val hasWin = (spec.select ++ orderItems.map(_.item)).exists {
       case ExprItem(e, _) => hasWinOp(e)
@@ -2312,27 +2158,9 @@ object Compiler {
       // inside ExprItems too (OAgg args are not bare: they aggregate);
       // an ExprItem that IS a grouping entry is exempt (it's the key)
       val groupNames = groupEntries.collect { case Left(sf) => sf.inName }.toSet
-      def bareRefs(o: Operand): Seq[SField] = o match {
-        case ORef(n)         => Seq(ref(n))
-        case OArith(_, l, r) => bareRefs(l) ++ bareRefs(r)
-        case ONeg(x)         => bareRefs(x)
-        case OFn(_, args)    => args.flatMap(bareRefs)
-        case OCast(x, _)     => bareRefs(x)
-        case OCase(bs, o2)   =>
-          bs.flatMap { case (c, v) => exprBareRefs(c) ++ bareRefs(v) } ++
-            o2.toSeq.flatMap(bareRefs)
-        case _               => Seq.empty
-      }
-      def exprBareRefs(e: BExpr): Seq[SField] = e match {
-        case Cmp(_, l, r)  => bareRefs(l) ++ bareRefs(r)
-        case IsNullE(o, _) => bareRefs(o)
-        case InE(o, xs, _) => bareRefs(o) ++ xs.flatMap(bareRefs)
-        case BetweenE(o, lo, hi, _) => bareRefs(o) ++ bareRefs(lo) ++ bareRefs(hi)
-        case LikeE(o, _, _) => bareRefs(o)
-        case AndE(l, r)    => exprBareRefs(l) ++ exprBareRefs(r)
-        case OrE(l, r)     => exprBareRefs(l) ++ exprBareRefs(r)
-        case NotE(x)       => exprBareRefs(x)
-        case _: InSubE | _: ExistsE | _: QuantE => Seq.empty
+      def bareRefs(n: Node): Seq[SField] = collect(n) {
+        case ORef(nm) => Seq(ref(nm))
+        case _: OAggX | _: OWin | _: InSubE | _: QuantE => Nil
       }
       spec.select.foreach {
         case FieldItem(n) if !groupNames.contains(ref(n).inName) =>
@@ -2362,10 +2190,10 @@ object Compiler {
         case _ => ()
       }
       // aggs needed by SELECT, HAVING and ORDER BY (hidden ones dropped
-      // later); exprAggs is the BExpr walker shared with CASE conditions
+      // later)
       val selectAggs = spec.select.flatMap(itemAggs)
       val orderAggs = orderItems.map(_.item).flatMap(itemAggs)
-      val aggSpecs = (selectAggs ++ having2.toSeq.flatMap(exprAggs) ++ orderAggs).distinct
+      val aggSpecs = (selectAggs ++ having2.toSeq.flatMap(aggs) ++ orderAggs).distinct
       if (aggSpecs.isEmpty)
         throw CompileException("GROUP BY/HAVING query needs at least one aggregate")
       // grouping() is only meaningful over grouping sets, and only over

@@ -905,41 +905,18 @@ object Parser {
     private def substWindows(q: QuerySpec, wins: Map[String, (Seq[RawName],
         Seq[(RawName, Boolean, Option[Boolean])], Option[WFrame])])
         : QuerySpec = {
-      def rewOp(o: Operand): Operand = o match {
-        case OWin(fn, args, Seq(RawName(Seq(Parser.WinRefMark, nm))), _, _) =>
+      def rew[N <: Node](n: N): N = rewrite(n) {
+        case w @ OWin(_, _, Seq(RawName(Seq(Parser.WinRefMark, nm))), _, _) =>
           wins.get(nm) match {
-            case Some((p, o2, f)) => OWin(fn, args.map(rewOp), p, o2, f)
+            case Some((p, o2, f)) => mapChildren(
+              w.copy(partitionBy = p, orderBy = o2, frame = f))(rew(_))
             case None => throw ParseException(
               s"OVER $nm references no named window — define it in a " +
                 s"WINDOW clause: WINDOW $nm AS (PARTITION BY ... ORDER BY ...)")
           }
-        case OWin(fn, args, p, o2, f) => OWin(fn, args.map(rewOp), p, o2, f)
-        case OArith(op, l, r)    => OArith(op, rewOp(l), rewOp(r))
-        case ONeg(x)             => ONeg(rewOp(x))
-        case OFn(f, as)          => OFn(f, as.map(rewOp))
-        case OCast(x, t)         => OCast(rewOp(x), t)
-        case OAggX(f, e, ps, a2) => OAggX(f, rewOp(e), ps, a2.map(rewOp))
-        case OCase(bs, el) =>
-          OCase(bs.map { case (c, v) => (rewB(c), rewOp(v)) }, el.map(rewOp))
-        // leaves (and OScalarSub: its body is its own window scope)
-        case other => other
-      }
-      def rewB(e: BExpr): BExpr = e match {
-        case Cmp(op, l, r)      => Cmp(op, rewOp(l), rewOp(r))
-        case AndE(l, r)         => AndE(rewB(l), rewB(r))
-        case OrE(l, r)          => OrE(rewB(l), rewB(r))
-        case NotE(x)            => NotE(rewB(x))
-        case IsNullE(o, n)      => IsNullE(rewOp(o), n)
-        case InE(o, xs, n)      => InE(rewOp(o), xs.map(rewOp), n)
-        case BetweenE(o, lo, hi, n) =>
-          BetweenE(rewOp(o), rewOp(lo), rewOp(hi), n)
-        case LikeE(o, p2, n)    => LikeE(rewOp(o), p2, n)
-        case InSubE(o, s2, n)   => InSubE(rewOp(o), s2, n)
-        case QuantE(op, o, s2, n) => QuantE(op, rewOp(o), s2, n)
-        case other              => other // ExistsE: own scope
       }
       def rewItem(it: SelectItem): SelectItem = it match {
-        case ExprItem(e, nm) => ExprItem(rewOp(e), nm)
+        case ExprItem(e, nm) => ExprItem(rew(e), nm)
         case other           => other
       }
       q.copy(
@@ -948,10 +925,10 @@ object Parser {
         // downstream, but an unresolved `OVER w` marker must not leak
         // past the parser — resolve it here so the later rejection
         // carries the intended diagnostics, not a NUL-marker confusion
-        joins = q.joins.map(j => j.copy(on = j.on.map(rewB))),
-        where = q.where.map(rewB),
-        having = q.having.map(rewB),
-        qualify = q.qualify.map(rewB),
+        joins = q.joins.map(j => j.copy(on = j.on.map(rew(_)))),
+        where = q.where.map(rew(_)),
+        having = q.having.map(rew(_)),
+        qualify = q.qualify.map(rew(_)),
         orderBy = q.orderBy.map(oi => oi.copy(item = rewItem(oi.item))))
     }
 
@@ -1025,30 +1002,11 @@ object Parser {
       })
 
     /** True when an expression can serve as a GROUP BY ALL key: it
-      * contains no aggregate, window, or scalar-subquery call anywhere.
+      * contains no aggregate, window, or subquery anywhere.
       */
-    private def groupableExpr(o: Operand): Boolean = o match {
-      case _: OAgg | _: OAggX | _: OWin | _: OScalarSub => false
-      case OArith(_, l, r) => groupableExpr(l) && groupableExpr(r)
-      case ONeg(x)         => groupableExpr(x)
-      case OFn(_, as)      => as.forall(groupableExpr)
-      case OCast(x, _)     => groupableExpr(x)
-      case OCase(bs, o2)   =>
-        bs.forall { case (c, v) => groupableCond(c) && groupableExpr(v) } &&
-          o2.forall(groupableExpr)
-      case _ => true
-    }
-    private def groupableCond(e: BExpr): Boolean = e match {
-      case Cmp(_, l, r)           => groupableExpr(l) && groupableExpr(r)
-      case IsNullE(x, _)          => groupableExpr(x)
-      case InE(x, xs, _)          => groupableExpr(x) && xs.forall(groupableExpr)
-      case BetweenE(x, lo, hi, _) =>
-        groupableExpr(x) && groupableExpr(lo) && groupableExpr(hi)
-      case LikeE(x, _, _)         => groupableExpr(x)
-      case AndE(l, r)             => groupableCond(l) && groupableCond(r)
-      case OrE(l, r)              => groupableCond(l) && groupableCond(r)
-      case NotE(x)                => groupableCond(x)
-      case _: InSubE | _: ExistsE | _: QuantE => false
+    private def groupableExpr(o: Operand): Boolean = !exists(o) {
+      case _: OAgg | _: OAggX | _: OWin | _: OScalarSub |
+           _: InSubE | _: QuantE | _: ExistsE => true
     }
 
     /** Optional `FILTER (WHERE cond)` after an aggregate call. FILTER is

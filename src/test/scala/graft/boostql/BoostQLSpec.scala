@@ -2157,6 +2157,54 @@ class BoostQLSpec extends SparkSpec {
     }
   }
 
+  test("an aggregate only in a CASE WHEN condition makes the query " +
+      "aggregated, so a SELECT scalar subquery attaches after it") {
+    def rows(q: String) = Compiler.compile(Parser.parse(q), fam)
+      .collect().map(_.toSeq).toSeq
+    val f = rows("SELECT CASE WHEN sum(click) > 0.0 THEN 1 ELSE 0 END AS f " +
+      "FROM dom.events")
+    val m = rows("SELECT max(purchase) AS m FROM dom.events")
+    val both = rows("SELECT CASE WHEN sum(click) > 0.0 THEN 1 ELSE 0 END AS f, " +
+      "(SELECT max(purchase) FROM dom.events) AS m FROM dom.events")
+    assert(f.length == 1 && m.length == 1)
+    assert(both == Seq(f.head ++ m.head))
+  }
+
+  test("a scalar subquery inside an aggregate argument attaches before " +
+      "the aggregation") {
+    import org.apache.spark.sql.functions._
+    def rows(q: String) = Compiler.compile(Parser.parse(q), fam)
+      .collect().map(_.toSeq).toSeq
+    val avgPurchase = fam.filter(col("series") === "purchase")
+      .agg(avg("value")).collect()(0).getDouble(0)
+    val asLiteral = new java.math.BigDecimal(avgPurchase).toPlainString
+    val viaSub = rows("SELECT max(CASE WHEN click > " +
+      "(SELECT avg(purchase) FROM dom.events) THEN 1 ELSE 0 END) AS x, " +
+      "sum(CASE WHEN click > (SELECT avg(purchase) FROM dom.events) " +
+      "THEN 1 ELSE 0 END) AS n FROM dom.events")
+    val viaLit = rows(s"SELECT max(CASE WHEN click > $asLiteral THEN 1 ELSE 0 END) " +
+      s"AS x, sum(CASE WHEN click > $asLiteral THEN 1 ELSE 0 END) AS n " +
+      "FROM dom.events")
+    assert(viaSub == viaLit && viaLit.head(1) != 0L)
+    // correlated, in a grouped query: the sub joins on the
+    // pre-aggregation key, so each user's clicks compare against that
+    // user's own average purchase
+    val perUser = rows("SELECT a.click.user, sum(CASE WHEN a.click > " +
+      "(SELECT avg(b.purchase) FROM dom.events AS b " +
+      "WHERE b.purchase.user = a.click.user) THEN 1 ELSE 0 END) AS n " +
+      "FROM dom.events AS a GROUP BY a.click.user ORDER BY a.click.user")
+    val userAvg = fam.filter(col("series") === "purchase")
+      .select(element_at(col("attributes"), "user").as("u"), col("value"))
+      .groupBy("u").agg(avg("value").as("m"))
+    val expected = fam.filter(col("series") === "click")
+      .select(element_at(col("attributes"), "user").as("u"), col("value"))
+      .join(userAvg, Seq("u"), "left")
+      .groupBy("u")
+      .agg(sum(when(col("value") > col("m"), 1).otherwise(0)).as("n"))
+      .orderBy("u").collect().map(_.toSeq).toSeq
+    assert(perUser == expected && expected.exists(_(1) != 0L))
+  }
+
   test("subqueries: validation errors") {
     // not a top-level conjunct (under OR)
     intercept[Compiler.CompileException] {

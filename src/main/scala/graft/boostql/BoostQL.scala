@@ -1,7 +1,7 @@
 package graft.boostql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, make_ym_interval, when}
+import org.apache.spark.sql.functions.{coalesce, col, element_at, lit}
 
 import scala.reflect.ClassTag
 
@@ -298,7 +298,7 @@ object BoostQL {
           "a WHEN MATCHED clause after an unconditional one is " +
             "unreachable — first true clause wins; reorder or add AND")
         if (cond.isEmpty) sawUnconditional = true
-        matchedB += ((cond.map(longPredicate(_, "MERGE", allowSrc = true)),
+        matchedB += ((cond.map(new LongRow("MERGE", SrcAllowed).predicate),
           action))
       case Ast.WhenNotMatched =>
         insertClauses += 1
@@ -311,9 +311,9 @@ object BoostQL {
             "add AND")
         if (cond.isEmpty) sawUnconditionalBs = true
         bySourceB += TimeSeriesTable.BySourceClause(
-          cond.map(longPredicate(_, "MERGE", forbidSrc = true)),
+          cond.map(new LongRow("MERGE", SrcForbidden).predicate),
           if (set.isEmpty) "delete" else "update",
-          assignments(set, "MERGE by-source SET", forbidSrc = true))
+          assignments(set, "MERGE by-source SET", SrcForbidden))
     })
     val df = Compiler.compile(using, families)
     val (upd, del, ins, _) = TimeSeriesTable.mergeRows(
@@ -329,7 +329,7 @@ object BoostQL {
     * are not assignable, a target appears once, and an RHS references
     * only its own series' row. */
   private def assignments(set: Seq[Ast.Assign], what: String,
-      forbidSrc: Boolean = false): Seq[(String, Option[String], Column)] = {
+      src: SrcMode = SrcPlain): Seq[(String, Option[String], Column)] = {
     val targets = set.map(a => (a.series, a.attr))
     targets.foreach { case (s, a) =>
       if (a.isEmpty && (s.equalsIgnoreCase("ts") ||
@@ -344,9 +344,10 @@ object BoostQL {
     if (dup.nonEmpty) throw Compiler.CompileException(
       s"duplicate $what target ${dup.map { case (s, a) =>
         a.fold(s)(s + "." + _) }.distinct.mkString(", ")}")
+    val scope = new LongRow(what, src)
     set.map { case Ast.Assign(s, a, rhs) =>
-      val (rhsCol, refs) = longOperand(rhs, what, forbidSrc = forbidSrc)
-      val foreign = refs - s
+      val rhsCol = scope.operand(rhs)
+      val foreign = scope.seriesOf(rhs) - s
       if (foreign.nonEmpty) throw Compiler.CompileException(
         s"the SET expression for '${a.fold(s)(s + "." + _)}' " +
           s"references series ${foreign.toSeq.sorted.mkString(", ")} — " +
@@ -377,10 +378,10 @@ object BoostQL {
       // to [[TimeSeriesTable.deleteRows]]'s copy-on-write rewrite of
       // only the affected date partitions, the predicate (the full
       // expression surface — IN, BETWEEN, LIKE, IS NULL, arithmetic,
-      // intervals) against the family's LONG rows via [[deletePredicate]]
+      // intervals) against the family's LONG rows via [[LongRow]]
       case Ast.Delete(t, pred) =>
         TimeSeriesTable.deleteRows(spark, root, t.domain, t.family,
-          deletePredicate(pred))._2
+          new LongRow("DELETE").predicate(pred))._2
     }
 
   /** Matches the retention predicate `ts < DATE 'YYYY-MM-DD'`, which
@@ -420,166 +421,96 @@ object BoostQL {
     val Ast.Update(t, set, where) = parseAs[Ast.Update](stmt, "update")
     val assigns = assignments(set, "UPDATE")
     TimeSeriesTable.updateRows(spark, root, t.domain, t.family,
-      longPredicate(where, "UPDATE"), assigns)._2
+      new LongRow("UPDATE").predicate(where), assigns)._2
   }
 
-  /** Compile a DELETE WHERE tree to a Column over the family's LONG
-    * rows (series, ts, value, tags, attributes). DELETE is row-level
-    * over the PHYSICAL layout, unlike SELECT's pivoted per-series view:
-    * a series-qualified term (`purchase.user = '42'`, `error > 900.0`)
-    * is true only on that series' rows — on every other row it is
-    * FALSE, so `NOT (error > 900.0)` matches all non-error rows too
-    * (row-level reading: "delete every row that is not an
-    * error-above-900 row"). Reserved 1-part names: `ts` (the time
-    * axis) and `series` (the series name) address the physical
-    * columns; any other 1-part name is a series' value and a 2-part
-    * name a series' attribute (per-point attributes shadow series
-    * tags, same as SELECT's decode). One term cannot reference two
-    * series — a single long row holds exactly one.
-    */
-  private[boostql] def deletePredicate(e: Ast.BExpr): Column =
-    longPredicate(e, "DELETE")
+  /** Whether a mutate clause may read the incoming row through the
+    * reserved `src` prefix. */
+  private[boostql] sealed trait SrcMode
+  /** MERGE matched clauses: `src.value` is the incoming datapoint,
+    * `src.<k>` an incoming attribute. */
+  private[boostql] case object SrcAllowed extends SrcMode
+  /** WHEN NOT MATCHED BY SOURCE clauses: there is no source row, and
+    * `src.` refuses rather than resolving as a series named src. */
+  private[boostql] case object SrcForbidden extends SrcMode
+  /** DELETE and UPDATE: `src` is an ordinary series name. */
+  private[boostql] case object SrcPlain extends SrcMode
 
-  /** Shared row-level compile over the LONG layout for the mutate verbs
-    * (DELETE predicates, UPDATE predicates and SET expressions). `ctx`
-    * names the verb in error messages.
+  /** The mutate verbs' [[Compiler.Scope]] over the family's LONG rows
+    * (series, ts, value, tags, attributes): DELETE and UPDATE
+    * predicates, SET expressions and MERGE clause conditions. `ctx`
+    * names the verb in refusals. Row-level over the PHYSICAL layout,
+    * unlike SELECT's pivoted per-series view: a series-qualified leaf
+    * (`purchase.user = '42'`, `error > 900.0`) is true only on that
+    * series' rows — on every other row it is FALSE, so
+    * `NOT (error > 900.0)` matches all non-error rows too. Reserved
+    * 1-part names: `ts` (the time axis) and `series` (the series name)
+    * address the physical columns; any other 1-part name is a series'
+    * value and a 2-part name a series' attribute (per-point attributes
+    * shadow series tags, same as SELECT's decode). One leaf cannot
+    * reference two series — a single long row holds exactly one. Only
+    * the scalar builtins compile: aggregates, windows and time-series
+    * functions have no row-level meaning.
     */
-  private[boostql] def longPredicate(e: Ast.BExpr, ctx: String,
-      allowSrc: Boolean = false, forbidSrc: Boolean = false): Column = {
+  private[boostql] final class LongRow(ctx: String, src: SrcMode = SrcPlain)
+      extends Compiler.Scope {
     import Ast._
-    def scoped(series: Set[String], c: Column): Column = series.toSeq match {
-      case Seq() => c
-      case Seq(s) => col("series") === lit(s) && c
-      case many => throw Compiler.CompileException(
-        s"a $ctx term references series ${many.sorted.mkString(", ")} — " +
-          "one long row holds one series, so a single comparison cannot " +
-          "span two; split it with AND/OR")
-    }
-    def operand(o: Operand): (Column, Set[String]) =
-      longOperand(o, ctx, allowSrc, forbidSrc)
-    def walk(e: BExpr): Column = e match {
-      case AndE(l, r) => walk(l) && walk(r)
-      case OrE(l, r)  => walk(l) || walk(r)
-      case NotE(x)    => !walk(x)
-      case Cmp(op, l, r) =>
-        val (a, as) = operand(l); val (b, bs) = operand(r)
-        scoped(as ++ bs, Compiler.cmpColumn(op, a, b))
-      case IsNullE(o, neg) =>
-        val (c, s) = operand(o)
-        scoped(s, if (neg) c.isNotNull else c.isNull)
-      case InE(o, xs, neg) =>
-        val (c, s) = operand(o)
-        val items = xs.map(operand)
-        val folded = items.map(x => c === x._1).reduce(_ || _)
-        scoped(s ++ items.flatMap(_._2).toSet,
-          if (neg) !folded else folded)
-      case BetweenE(o, lo, hi, neg) =>
-        val (c, s) = operand(o)
-        val (l, ls) = operand(lo); val (h, hs) = operand(hi)
-        val b = c >= l && c <= h
-        scoped(s ++ ls ++ hs, if (neg) !b else b)
-      case LikeE(o, p, neg) =>
-        val (c, s) = operand(o)
-        val m = c.like(p)
-        scoped(s, if (neg) !m else m)
-      case _: InSubE | _: ExistsE | _: QuantE => throw Compiler.CompileException(
-        s"$ctx predicates cannot contain subqueries — compute the key " +
-          "set first and spell it as IN (…)")
-    }
-    walk(e)
-  }
-
-  /** Operand compile for the mutate verbs: series/attribute/ts
-    * references, literals, arithmetic, intervals, CAST and the scalar
-    * builtins over ONE long row. Returns the column plus the set of
-    * series the expression references (a single row holds one series,
-    * so callers scope or validate on it).
-    */
-  private[boostql] def longOperand(o: Ast.Operand, ctx: String,
-      allowSrc: Boolean = false,
-      forbidSrc: Boolean = false): (Column, Set[String]) = {
-    import Ast._
-    def operand(o2: Operand): (Column, Set[String]) =
-      longOperand(o2, ctx, allowSrc, forbidSrc)
-    o match {
-      case OLit(l) => (Compiler.litColumn(l), Set.empty)
-      // a by-source condition sees the TARGET row only: `src.` would
-      // otherwise silently resolve as a series named src
-      case ORef(RawName(s +: _)) if forbidSrc && s.equalsIgnoreCase("src") =>
+    /** A name's column and the series whose rows it reads (None for
+      * `ts`, `series` and the source row). */
+    private def resolved(n: RawName): (Column, Option[String]) = n.parts match {
+      case s +: _ if src == SrcForbidden && s.equalsIgnoreCase("src") =>
         throw Compiler.CompileException(
           "a WHEN NOT MATCHED BY SOURCE condition sees only the TARGET " +
             "row — there is no source row for an absent key by " +
             "definition; drop the src. prefix")
-      // MERGE matched-clause conditions see the SOURCE row through the
-      // reserved `src` prefix: src.value is the incoming datapoint,
-      // any other src.<k> an incoming attribute (shadowing tags, same
-      // decode as the target side); src.ts / src.series equal the
-      // target key on a matched row by definition
-      case ORef(RawName(Seq(s, f))) if allowSrc && s.equalsIgnoreCase("src") =>
-        if (f.equalsIgnoreCase("value")) (col("src_value"), Set.empty)
-        else if (f.equalsIgnoreCase("ts")) (col("ts"), Set.empty)
-        else if (f.equalsIgnoreCase("series")) (col("series"), Set.empty)
-        else (coalesce(element_at(col("src_attributes"), f),
-          element_at(col("src_tags"), f)), Set.empty)
-      case ORef(RawName(Seq(t))) if t.equalsIgnoreCase("ts") =>
-        (col("ts"), Set.empty)
-      case ORef(RawName(Seq(t))) if t.equalsIgnoreCase("series") =>
-        (col("series"), Set.empty)
-      case ORef(name) => Compiler.resolve(name, None) match {
-        case FieldRef(s, None) => (col("value"), Set(s))
+      // src.ts / src.series equal the target key on a matched row by
+      // definition
+      case Seq(s, f) if src == SrcAllowed && s.equalsIgnoreCase("src") =>
+        (if (f.equalsIgnoreCase("value")) col("src_value")
+          else if (f.equalsIgnoreCase("ts")) col("ts")
+          else if (f.equalsIgnoreCase("series")) col("series")
+          else coalesce(element_at(col("src_attributes"), f),
+            element_at(col("src_tags"), f)), None)
+      case Seq(t) if t.equalsIgnoreCase("ts") => (col("ts"), None)
+      case Seq(t) if t.equalsIgnoreCase("series") => (col("series"), None)
+      case _ => Compiler.resolve(n, None) match {
+        case FieldRef(s, None) => (col("value"), Some(s))
         case FieldRef(s, Some(a)) =>
           (coalesce(element_at(col("attributes"), a),
-            element_at(col("tags"), a)), Set(s))
+            element_at(col("tags"), a)), Some(s))
       }
-      case OArith(op, l, r: OInterval) =>
-        val (base, ss) = operand(l)
-        (Compiler.intervalShift(base, op, r.text), ss)
-      case OArith("+", l: OInterval, r) => operand(OArith("+", r, l))
-      case OArith(op, l, r) =>
-        val (a, as) = operand(l); val (b, bs) = operand(r)
-        (Compiler.arithColumn(op, a, b), as ++ bs)
-      case ONeg(x) => val (c, s) = operand(x); (-c, s)
-      case OCast(x, ty) =>
-        val (c, s) = operand(x)
-        (c.cast(Compiler.castType(ty)), s)
-      // the scalar builtins (all row-level, codegen'd) — carries the
-      // DATE/TIMESTAMP literal desugar (to_date/to_timestamp) plus the
-      // everyday normalizations (upper/lower/trim/epoch_us) a takedown
-      // predicate reaches for
-      case OFn(fn, args) =>
-        Compiler.scalarFns.get(fn) match {
-          case Some((lo, hi, build)) =>
-            if (args.length < lo || args.length > hi)
-              throw Compiler.CompileException(
-                s"$fn() takes $lo..$hi arguments, got ${args.length}")
-            val compiled = args.map(operand)
-            (build(compiled.map(_._1)), compiled.flatMap(_._2).toSet)
-          case None => throw Compiler.CompileException(
-            s"$fn() is not available in $ctx terms — the scalar " +
-              "builtins only (window/time-series functions have no " +
-              "row-level meaning here)")
-        }
-      // searched CASE (row-level): conditions ride the same scoped
-      // compile as WHERE terms, branch values the operand grammar —
-      // `SET click = CASE WHEN click > 900.0 THEN 900.0 ELSE click END`
-      // is the clamping-correction shape
-      case OCase(branches, otherwise) =>
-        val compiled = branches.map { case (cond, v) =>
-          (longPredicate(cond, ctx, allowSrc), operand(v))
-        }
-        val (oc, os) = otherwise.map(operand)
-          .getOrElse((lit(null), Set.empty[String]))
-        val chained = compiled.tail.foldLeft(
-          when(compiled.head._1, compiled.head._2._1)) {
-          case (acc, (c, (v, _))) => acc.when(c, v)
-        }
-        (chained.otherwise(oc), compiled.flatMap(_._2._2).toSet ++ os)
-      case other => throw Compiler.CompileException(
-        s"$ctx terms support series/attribute/ts references, " +
-          "literals, arithmetic, intervals, CAST, CASE and the scalar " +
-          "builtins — not " +
-          other.getClass.getSimpleName.stripSuffix("$"))
     }
+    protected def reference(n: RawName): Column = resolved(n)._1
+
+    /** The series whose rows an expression reads. A CASE condition is
+      * a predicate scoped on its own, so its series do not count:
+      * `CASE WHEN mem > 5 THEN 0 ELSE cpu END` reads cpu rows only. */
+    def seriesOf(n: Node): Set[String] = Ast.collect(n) {
+      case ORef(nm) => resolved(nm)._2.toSeq
+      case OCase(bs, el) => (bs.map(_._2) ++ el).flatMap(seriesOf)
+    }.toSet
+
+    override protected def leaf(e: BExpr, c: Column): Column =
+      seriesOf(e).toSeq match {
+        case Seq() => c
+        case Seq(s) => col("series") === lit(s) && c
+        case many => throw Compiler.CompileException(
+          s"a $ctx term references series ${many.sorted.mkString(", ")} — " +
+            "one long row holds one series, so a single comparison cannot " +
+            "span two; split it with AND/OR")
+      }
+
+    protected def refuse(n: Node): Nothing = throw Compiler.CompileException(n match {
+      case OFn(fn, _) => s"$fn() is not available in $ctx terms — the " +
+        "scalar builtins only (window/time-series functions have no " +
+        "row-level meaning here)"
+      case _: InSubE | _: ExistsE | _: QuantE =>
+        s"$ctx predicates cannot contain subqueries — " +
+        "compute the key set first and spell it as IN (…)"
+      case other => s"$ctx terms support series/attribute/ts references, " +
+        "literals, arithmetic, intervals, CAST, CASE and the scalar " +
+        "builtins — not " + other.getClass.getSimpleName.stripSuffix("$")
+    })
   }
 
   /** `INSERT INTO domain.family <select>` against STREAMING family
@@ -1172,63 +1103,37 @@ object BoostQL {
       case AggOut(_, _, nm, _, _) => nm
       case ExprOut(nm, _) => nm
     }.toSet
-    def hRefuse(what: String): Nothing = throw Compiler.CompileException(
-      s"streaming aggregate expressions (HAVING and expression select " +
-        s"items) support literals, select-output names, arithmetic, " +
-        s"CAST, CASE, the scalar builtins and streaming-safe " +
-        s"aggregates only; $what is not supported")
-    def hOp(o: Operand): Column = o match {
-      case OLit(l)    => Compiler.litColumn(l)
-      case e: OAgg    => col(havingAggCol(e))
-      case e: OAggX   => col(havingAggCol(e))
-      case ORef(n) if n.parts.length == 1 && exprByName.contains(n.parts.head) =>
-        val nm = n.parts.head
-        if (!expanding.add(nm))
-          hRefuse(s"'$nm' (a cyclic expression-alias reference)")
-        try hOp(exprByName(nm)) finally expanding.remove(nm)
-      case ORef(n) if n.parts.length == 1 && outNames(n.parts.head) =>
-        col(n.parts.head)
-      case ORef(n) => hRefuse(
-        s"'${n.parts.mkString(".")}' (name a select output)")
-      case OArith(op, l, r) => Compiler.arithColumn(op, hOp(l), hOp(r))
-      case ONeg(x) => -hOp(x)
-      case OCast(x, t) => hOp(x).cast(Compiler.castType(t))
-      // the allowlisted scalar builtins and CASE — enough to carry the
-      // corr/covar/regr desugar trees (sqrt/coalesce + guards) and
-      // ordinary rounding/formatting of finalized aggregates
-      case OFn(fn, args) =>
-        Compiler.scalarFns.get(fn) match {
-          case Some((lo, hi, build)) =>
-            if (args.length < lo || args.length > hi)
-              hRefuse(s"$fn() with ${args.length} argument(s)")
-            build(args.map(hOp))
-          case None => hRefuse(s"function $fn()")
-        }
-      case OCase(bs, el) =>
-        val first = when(hB(bs.head._1), hOp(bs.head._2))
-        val folded = bs.tail.foldLeft(first)((c, b) =>
-          c.when(hB(b._1), hOp(b._2)))
-        el.fold(folded)(e => folded.otherwise(hOp(e)))
-      case _ => hRefuse("this expression form")
+    // the finalized rows' scope: names resolve to select outputs,
+    // aggregates to their (possibly hidden) watermarked state columns
+    val finalized = new Compiler.Scope {
+      private def refusal(what: String): Nothing = throw Compiler.CompileException(
+        s"streaming aggregate expressions (HAVING and expression select " +
+          s"items) support literals, select-output names, arithmetic, " +
+          s"CAST, CASE, the scalar builtins and streaming-safe " +
+          s"aggregates only; $what is not supported")
+      protected def reference(n: RawName): Column = n.parts match {
+        case Seq(nm) if exprByName.contains(nm) =>
+          if (!expanding.add(nm))
+            refusal(s"'$nm' (a cyclic expression-alias reference)")
+          try operand(exprByName(nm)) finally expanding.remove(nm)
+        case Seq(nm) if outNames(nm) => col(nm)
+        case _ => refusal(s"'${n.parts.mkString(".")}' (name a select output)")
+      }
+      override protected def nonScalar: PartialFunction[Operand, Column] = {
+        case e @ (_: OAgg | _: OAggX) => col(havingAggCol(e))
+      }
+      protected def refuse(n: Node): Nothing = n match {
+        case OFn(fn, _) => refusal(s"function $fn()")
+        case _: BExpr   => refusal("a subquery predicate")
+        case _          => refusal("this expression form")
+      }
     }
-    def hB(e: BExpr): Column = e match {
-      case Cmp(op, l, r) => Compiler.cmpColumn(op, hOp(l), hOp(r))
-      case AndE(l, r)    => hB(l) && hB(r)
-      case OrE(l, r)     => hB(l) || hB(r)
-      case NotE(x)       => !hB(x)
-      case IsNullE(o, n) => if (n) hOp(o).isNotNull else hOp(o).isNull
-      case BetweenE(o, lo, hi, n) =>
-        val c = hOp(o).between(hOp(lo), hOp(hi)); if (n) !c else c
-      case InE(o, xs, n) =>
-        val c = hOp(o).isin(xs.map(hOp): _*); if (n) !c else c
-      case _ => hRefuse("subquery/LIKE predicates")
-    }
-    val havingCond: Option[Column] = spec.having.map(hB)
-    // aggregate-expression select items: walking them through hOp here
+    val havingCond: Option[Column] = spec.having.map(finalized.predicate)
+    // aggregate-expression select items: walking them through the scope here
     // registers their contained aggregates as hidden columns (the same
     // registration HAVING uses), so allAggs below carries them
     val exprOutCols: Map[String, Column] = outs.collect {
-      case ExprOut(nm, e) => nm -> hOp(e).as(nm)
+      case ExprOut(nm, e) => nm -> finalized.operand(e).as(nm)
     }.toMap
     val allAggs = aggs ++ extraAggs.result()
     // layer 1: the stateless projection/filter through the ordinary

@@ -321,7 +321,7 @@ object Compiler {
     c.as(name)
   }
 
-  private[boostql] def litColumn(l: BLit): Column = l match {
+  private def litColumn(l: BLit): Column = l match {
     case BInt(v)   => lit(v)
     case BFloat(v) => lit(v)
     case BStr(v)   => lit(v)
@@ -334,7 +334,7 @@ object Compiler {
     * built-in — no UDFs — so function calls stay inside WholeStageCodegen
     * and never block predicate pushdown of sibling conjuncts.
     */
-  private[boostql] val scalarFns: Map[String, (Int, Int, Seq[Column] => Column)] = Map(
+  private val scalarFns: Map[String, (Int, Int, Seq[Column] => Column)] = Map(
     "upper"    -> ((1, 1, (a: Seq[Column]) => upper(a(0)))),
     "lower"    -> ((1, 1, (a: Seq[Column]) => lower(a(0)))),
     "length"   -> ((1, 1, (a: Seq[Column]) => length(a(0)).cast("long"))),
@@ -543,7 +543,7 @@ object Compiler {
     * side, so the comparison still pushes into the parquet scan as a
     * plain ts filter.
     */
-  private[boostql] def intervalShift(base: Column, op: String,
+  private def intervalShift(base: Column, op: String,
       text: String): Column = {
     if (op != "+" && op != "-") throw CompileException(
       s"INTERVAL supports only + and -, not $op")
@@ -570,7 +570,7 @@ object Compiler {
 
   /** A comparison operator over two columns (the parser has already
     * normalized `==` and `<>` to `=` and `!=`). */
-  private[boostql] def cmpColumn(op: String, a: Column, b: Column): Column =
+  private def cmpColumn(op: String, a: Column, b: Column): Column =
     op match {
       case "="  => a === b
       case "!=" => a =!= b
@@ -581,7 +581,7 @@ object Compiler {
     }
 
   /** An arithmetic operator over two columns. */
-  private[boostql] def arithColumn(op: String, a: Column, b: Column): Column =
+  private def arithColumn(op: String, a: Column, b: Column): Column =
     op match {
       case "+" => a + b
       case "-" => a - b
@@ -591,7 +591,7 @@ object Compiler {
 
   /** A CAST target → its Spark type: the dialect's int is 64-bit
     * (common.go:8), float is double. */
-  private[boostql] def castType(ty: String): String = ty match {
+  private def castType(ty: String): String = ty match {
     case "int"    => "long"
     case "float"  => "double"
     case "string" => "string"
@@ -649,24 +649,95 @@ object Compiler {
   // date_trunc; session()/WITHIN stay fixed-width only (a calendar
   // tolerance has no single duration).
 
-  private def fnColumn(fn: String, args: Seq[Ast.Operand], cols: Seq[Column]): Column =
-    // round's 2-arg form needs its scale as a constant (Spark's
-    // round(col, scale) takes an Int, not a Column) — special-cased so
-    // a non-literal scale is a CompileException, not a MatchError
-    if (fn == "round" && args.length == 2) args(1) match {
-      case OLit(BInt(d)) => round(cols(0), d.toInt)
-      case _ => throw CompileException("round scale must be an integer literal")
-    } else scalarFns.get(fn) match {
-      case None =>
-        throw CompileException(
-          s"unknown function $fn (supported: ${scalarFns.keys.toSeq.sorted.mkString(", ")})")
-      case Some((lo, hi, build)) =>
-        if (cols.length < lo || cols.length > hi) {
-          val want = if (hi == Int.MaxValue) s"$lo+" else if (lo == hi) s"$lo" else s"$lo..$hi"
-          throw CompileException(s"$fn expects $want argument(s), got ${cols.length}")
+  /** The one BoostQL expression evaluator: an [[Operand]] or a [[BExpr]]
+    * to a Spark Column. Every caller walks the same rules for literals,
+    * arithmetic, INTERVAL shifts, CAST, CASE, the scalar builtins and
+    * the predicates: the batch compiler, the mutate verbs over long
+    * rows, and the streaming aggregate over finalized window rows. A
+    * scope says only what differs between them:
+    *  - [[reference]]: how a name resolves;
+    *  - [[nonScalar]]: which aggregates, windows, `bucket()`, time-series
+    *    functions and subquery columns it compiles, and how;
+    *  - [[leaf]]: how a leaf predicate (comparison, IS NULL, IN, BETWEEN,
+    *    LIKE) is wrapped;
+    *  - [[refuse]]: the wording for a node outside the scope (a
+    *    non-scalar operand, a function outside the builtins, a subquery
+    *    predicate).
+    */
+  private[boostql] abstract class Scope {
+    protected def reference(n: RawName): Column
+    protected def nonScalar: PartialFunction[Operand, Column] =
+      PartialFunction.empty
+    protected def leaf(e: BExpr, c: Column): Column = c
+    protected def refuse(n: Node): Nothing
+    /** The scope of a CASE condition. */
+    protected def caseCondition: Scope = this
+
+    final def operand(o: Operand): Column = nonScalar.applyOrElse(o, scalar)
+
+    private def scalar(o: Operand): Column = o match {
+      case OLit(l) => litColumn(l)
+      case ORef(n) => reference(n)
+      case OArith(op, l, r: OInterval) => intervalShift(operand(l), op, r.text)
+      case OArith("+", l: OInterval, r) => operand(OArith("+", r, l))
+      case OArith("-", _: OInterval, _) => throw CompileException(
+        "INTERVAL - timestamp is not valid; write ts - INTERVAL '…'")
+      case OArith(op, l, r) => arithColumn(op, operand(l), operand(r))
+      case ONeg(x) => -operand(x)
+      case OInterval(t) => throw CompileException(
+        s"INTERVAL '$t' is only valid in + / - with a timestamp")
+      case OCast(x, ty) => operand(x).cast(castType(ty))
+      // round's 2-arg form needs its scale as a constant (Spark's
+      // round(col, scale) takes an Int, not a Column)
+      case OFn("round", Seq(x, scale)) => scale match {
+        case OLit(BInt(d)) => round(operand(x), d.toInt)
+        case _ => throw CompileException("round scale must be an integer literal")
+      }
+      case f @ OFn(fn, args) => scalarFns.get(fn) match {
+        case None => refuse(f)
+        case Some((lo, hi, build)) =>
+          if (args.length < lo || args.length > hi) {
+            val want = if (hi == Int.MaxValue) s"$lo+" else if (lo == hi) s"$lo" else s"$lo..$hi"
+            throw CompileException(s"$fn expects $want argument(s), got ${args.length}")
+          }
+          build(args.map(operand))
+      }
+      case OCase(bs, otherwise) =>
+        val cond = caseCondition
+        val first = when(cond.predicate(bs.head._1), operand(bs.head._2))
+        val chained = bs.tail.foldLeft(first) { case (acc, (c, v)) =>
+          acc.when(cond.predicate(c), operand(v))
         }
-        build(cols)
+        otherwise.fold(chained)(x => chained.otherwise(operand(x)))
+      case other => refuse(other)
     }
+
+    final def predicate(e: BExpr): Column = e match {
+      case AndE(l, r) => predicate(l) && predicate(r)
+      case OrE(l, r)  => predicate(l) || predicate(r)
+      case NotE(x)    => !predicate(x)
+      case IsNullE(o, neg) =>
+        val c = operand(o)
+        leaf(e, if (neg) c.isNotNull else c.isNull)
+      // IN folds to OR-of-equalities: arbitrary operand elements work and
+      // the ANSI three-valued NULL behavior (incl. the NOT IN + NULL
+      // trap) falls out of the fold — matches what Catalyst's In rewrites
+      // to, so codegen and pushdown are unaffected
+      case InE(o, xs, neg) =>
+        val c = operand(o)
+        val folded = xs.map(x => c === operand(x)).reduce(_ || _)
+        leaf(e, if (neg) !folded else folded)
+      case BetweenE(o, lo, hi, neg) =>
+        val c = operand(o)
+        val b = c >= operand(lo) && c <= operand(hi)
+        leaf(e, if (neg) !b else b)
+      case LikeE(o, p, neg) =>
+        val c = operand(o).like(p)
+        leaf(e, if (neg) !c else c)
+      case Cmp(op, l, r) => leaf(e, cmpColumn(op, operand(l), operand(r)))
+      case _: InSubE | _: ExistsE | _: QuantE => refuse(e)
+    }
+  }
 
   /** Apply an ORDER BY key's direction and NULLS placement. No explicit
     * NULLS clause keeps Spark's defaults (NULLS FIRST for ASC, LAST for
@@ -926,7 +997,7 @@ object Compiler {
     }
 
     /* applySubPred lives just above the WHERE section below — it needs
-     * operandColumn, which is defined after the reference-collection
+     * the expression scope, which is defined after the reference-collection
      * phase this block belongs to. */
 
     // for the fieldless-EXISTS check in applySubPred: an ExprItem
@@ -1108,53 +1179,6 @@ object Compiler {
     }
 
     // --- expression compilation ----------------------------------------
-    def operandColumn(o: Operand, aggOk: Boolean, winOk: Boolean = false): Column = o match {
-      case OLit(l) => litColumn(l)
-      case ORef(n) => col(ref(n).inName)
-      case OAgg(fn, arg) =>
-        if (!aggOk) throw CompileException("aggregate not allowed in WHERE")
-        col(aggColName(fn, arg.map(ref)))
-      case OAggX(fn, e, ps, a2) =>
-        if (!aggOk) throw CompileException("aggregate not allowed in WHERE")
-        col(aggXColName(fn, e, ps, a2))
-      case OScalarSub(s2) => col(scalarColName(s2))
-      case OGroupKey(nm)  => col(nm)
-      case OArith(op, l, r: OInterval) =>
-        intervalShift(operandColumn(l, aggOk, winOk), op, r.text)
-      case OArith("+", l: OInterval, r) =>
-        operandColumn(OArith("+", r, l), aggOk, winOk)
-      case OArith("-", _: OInterval, _) => throw CompileException(
-        "INTERVAL - timestamp is not valid; write ts - INTERVAL '…'")
-      case OArith(op, l, r) =>
-        arithColumn(op, operandColumn(l, aggOk, winOk), operandColumn(r, aggOk, winOk))
-      case ONeg(x) => -operandColumn(x, aggOk, winOk)
-      case OInterval(t) => throw CompileException(
-        s"INTERVAL '$t' is only valid in + / - with a timestamp")
-      // time-series functions: bucket() is a plain scalar (usable in
-      // WHERE / GROUP BY); rate/delta/locf carry an implicit window over
-      // the source's time axis, so they follow OWin's placement rules
-      case OFn("bucket", args) => bucketColumn(args)
-      case OFn(fn, args) if tsWinFns.contains(fn) || tsPartFns.contains(fn) =>
-        if (!winOk) throw CompileException(
-          s"$fn() is a time-series window function — allowed in SELECT " +
-            "items, QUALIFY and ORDER BY only")
-        tsWinColumn(fn, args, aggOk)
-      case OFn(fn, args) => fnColumn(fn, args, args.map(operandColumn(_, aggOk, winOk)))
-      case OCast(x, ty) => operandColumn(x, aggOk, winOk).cast(castType(ty))
-      case w: OWin =>
-        if (!winOk) throw CompileException(
-          "window functions are only allowed in SELECT items, QUALIFY " +
-            "and ORDER BY")
-        winColumn(w, aggOk)
-      case OCase(bs, o2) =>
-        val first = when(exprColumn(bs.head._1, aggOk),
-          operandColumn(bs.head._2, aggOk, winOk))
-        val chained = bs.tail.foldLeft(first) { case (acc, (c, v)) =>
-          acc.when(exprColumn(c, aggOk), operandColumn(v, aggOk, winOk))
-        }
-        o2.fold(chained)(x => chained.otherwise(operandColumn(x, aggOk, winOk)))
-    }
-
     /** Compile an analytic call over its window spec. Ranking and
       * lag/lead require a window ORDER BY (their result is undefined
       * without one — a CompileException here, not whatever Spark does).
@@ -1177,7 +1201,7 @@ object Compiler {
       def arg(i: Int): Column = {
         if (args.length <= i)
           throw CompileException(s"$fn needs ${i + 1} argument(s)")
-        operandColumn(args(i), aggOk)
+        new Q(aggOk, winOk = false).operand(args(i))
       }
       val needsOrder = Set("row_number", "rank", "dense_rank", "lag", "lead",
         "ntile", "first_value", "last_value", "percent_rank", "cume_dist",
@@ -1397,7 +1421,7 @@ object Compiler {
             s"$fn() argument must reference exactly one source in a " +
               "multi-source query")
         }
-      val c = operandColumn(args.head, aggOk)
+      val c = new Q(aggOk, winOk = false).operand(args.head)
       if (fn == "zscore") {
         // Whole-partition statistic: (x - mean) / sample-stddev, spelled
         // as explicit sums so an integral input keeps S = Σx and
@@ -1568,37 +1592,52 @@ object Compiler {
               UnspecifiedFrame)))
       }
     }
-    def exprColumn(e: BExpr, aggOk: Boolean, winOk: Boolean = false): Column = e match {
-      case AndE(l, r) => exprColumn(l, aggOk, winOk) && exprColumn(r, aggOk, winOk)
-      case OrE(l, r)  => exprColumn(l, aggOk, winOk) || exprColumn(r, aggOk, winOk)
-      case NotE(x)    => !exprColumn(x, aggOk, winOk)
-      case IsNullE(o, neg) =>
-        val c = operandColumn(o, aggOk, winOk)
-        if (neg) c.isNotNull else c.isNull
-      // IN folds to OR-of-equalities: arbitrary operand elements work and
-      // the ANSI three-valued NULL behavior (incl. the NOT IN + NULL
-      // trap) falls out of the fold — matches what Catalyst's In rewrites
-      // to, so codegen and pushdown are unaffected
-      case InE(o, xs, neg) =>
-        val c = operandColumn(o, aggOk, winOk)
-        val folded = xs.map(x => c === operandColumn(x, aggOk, winOk)).reduce(_ || _)
-        if (neg) !folded else folded
-      case BetweenE(o, lo, hi, neg) =>
-        val c = operandColumn(o, aggOk, winOk)
-        val b = c >= operandColumn(lo, aggOk, winOk) && c <= operandColumn(hi, aggOk, winOk)
-        if (neg) !b else b
-      case LikeE(o, p, neg) =>
-        val c = operandColumn(o, aggOk, winOk).like(p)
-        if (neg) !c else c
-      case Cmp(op, l, r) =>
-        cmpColumn(op, operandColumn(l, aggOk, winOk), operandColumn(r, aggOk, winOk))
-      // semi/anti joins are plan surgery, not a Column — reachable only
-      // as top-level WHERE conjuncts, which compile() strips out before
-      // calling here
-      case _: InSubE | _: ExistsE | _: QuantE => throw CompileException(
-        "subquery predicates are only supported as top-level WHERE " +
-          "conjuncts (optionally under NOT)")
+    /** The query's own [[Scope]]: a name resolves through [[ref]] to its
+      * compiled-frame column; aggregates read their aggregation output
+      * where `aggOk` (HAVING, grouped SELECT items); windows and the
+      * time-series functions compile where `winOk` (SELECT items,
+      * QUALIFY, ORDER BY), but never inside a CASE condition.
+      */
+    final class Q(aggOk: Boolean, winOk: Boolean) extends Scope {
+      protected def reference(n: RawName): Column = col(ref(n).inName)
+      override protected def nonScalar: PartialFunction[Operand, Column] = {
+        case OAgg(fn, arg) =>
+          if (!aggOk) throw CompileException("aggregate not allowed in WHERE")
+          col(aggColName(fn, arg.map(ref)))
+        case OAggX(fn, e, ps, a2) =>
+          if (!aggOk) throw CompileException("aggregate not allowed in WHERE")
+          col(aggXColName(fn, e, ps, a2))
+        case OScalarSub(s2) => col(scalarColName(s2))
+        case OGroupKey(nm)  => col(nm)
+        // time-series functions: bucket() is a plain scalar (usable in
+        // WHERE / GROUP BY); rate/delta/locf carry an implicit window
+        // over the source's time axis, so they follow OWin's placement
+        case OFn("bucket", args) => bucketColumn(args)
+        case OFn(fn, args) if tsWinFns.contains(fn) || tsPartFns.contains(fn) =>
+          if (!winOk) throw CompileException(
+            s"$fn() is a time-series window function — allowed in SELECT " +
+              "items, QUALIFY and ORDER BY only")
+          tsWinColumn(fn, args, aggOk)
+        case w: OWin =>
+          if (!winOk) throw CompileException(
+            "window functions are only allowed in SELECT items, QUALIFY " +
+              "and ORDER BY")
+          winColumn(w, aggOk)
+      }
+      override protected def caseCondition: Scope =
+        if (winOk) new Q(aggOk, winOk = false) else this
+      protected def refuse(n: Node): Nothing = throw CompileException(n match {
+        case OFn(fn, _) => s"unknown function $fn (supported: " +
+          s"${scalarFns.keys.toSeq.sorted.mkString(", ")})"
+        // semi/anti joins are plan surgery, not a Column — reachable
+        // only as top-level WHERE conjuncts, which compile() strips out
+        // before calling here
+        case _ => "subquery predicates are only supported as top-level " +
+          "WHERE conjuncts (optionally under NOT)"
+      })
     }
+    // WHERE, ON and aggregate arguments: no aggregates, no windows
+    val row = new Q(aggOk = false, winOk = false)
 
     // ASOF JOIN: the ON clause must be a conjunction of '=' comparisons
     // pairing the newly-joined source with an earlier one; time is
@@ -1683,7 +1722,7 @@ object Compiler {
             asofJoin(acc, right, cond, i, asofOpts.getOrElse(AsofOpts()))
           case ("asof", None) =>
             throw CompileException("ASOF JOIN requires an ON clause")
-          case (_, Some(cond)) => acc.join(right, exprColumn(cond, aggOk = false), joinType)
+          case (_, Some(cond)) => acc.join(right, row.predicate(cond), joinType)
           case (_, None)       => acc.crossJoin(right)
         }
     }
@@ -1698,12 +1737,14 @@ object Compiler {
     // join: one aggregate row per key group, NULL where the group is
     // empty (COUNT coalesces to 0 — the ANSI empty-group count).
     // scalarSubs flags each sub that sits inside an aggregate argument
-    // (a subquery predicate's left operand is THIS scope)
+    // (a subquery predicate's left operand is THIS scope). A sub inside
+    // window arguments is a plain SELECT sub: windows are refused beside
+    // aggregates, so its query is ungrouped and it attaches before the
+    // projection.
     def scalarSubs(n: Node, inAgg: Boolean = false): Seq[(QuerySpec, Boolean)] =
       collect(n) {
         case OScalarSub(s2) => Seq((s2, inAgg))
         case a: OAggX       => children(a).flatMap(scalarSubs(_, inAgg = true))
-        case _: OWin        => Nil
       }
     val whereScalarSubs: Seq[QuerySpec] =
       spec.where.toSeq.flatMap(scalarSubs(_)).map(_._1)
@@ -1846,7 +1887,7 @@ object Compiler {
           select = a.local.select ++ a.pairs.map(p => FieldItem(p._2)))
         val named = compile(spec2, families)
           .toDF(s"__sq${j}_v" +: a.pairs.indices.map(i => s"__sq${j}_k$i"): _*)
-        val xc = operandColumn(x, aggOk = false, winOk = false)
+        val xc = row.operand(x)
         val vc = col(s"__sq${j}_v")
         val keyCond = a.pairs.zipWithIndex.map { case ((of, _), i) =>
           col(of.inName) === col(s"__sq${j}_k$i")
@@ -1882,7 +1923,7 @@ object Compiler {
         val agg = listed.groupBy(keyNames.map(col): _*)
           .agg(extreme.as(s"__sq${j}_m"), count(vc).as(s"__sq${j}_nn"),
             count(lit(1)).as(s"__sq${j}_n"))
-        val xc = operandColumn(x, aggOk = false, winOk = false)
+        val xc = row.operand(x)
         val mc = col(s"__sq${j}_m")
         val cmp = op match {
           case ">"  => xc > mc
@@ -1937,7 +1978,7 @@ object Compiler {
     }
     val withScalars = attachScalarSubs(joined, preScalarSubs)
     val filtered0 = plainPreds.reduceOption(AndE)
-      .fold(withScalars)(w => withScalars.filter(exprColumn(w, aggOk = false)))
+      .fold(withScalars)(w => withScalars.filter(row.predicate(w)))
     val filtered = subPreds.zipWithIndex.foldLeft(filtered0) {
       case (df, (p, j)) => applySubPred(df, p, j)
     }
@@ -1952,7 +1993,7 @@ object Compiler {
           throw CompileException(s"nested aggregate inside $f(…)")
         Seq(Right((f, e, ps, a2)))
       // subquery predicates never nest aggregates into THIS query's agg
-      // list (exprColumn rejects them outside top-level WHERE anyway)
+      // list (the expression scope refuses them outside top-level WHERE anyway)
       case _: OWin | _: InSubE | _: QuantE => Nil
     }
     def itemAggs(i: SelectItem): Seq[AggSpec] = i match {
@@ -2241,7 +2282,7 @@ object Compiler {
         val p = ps.headOption.getOrElse(throw CompileException(
           "approx_percentile() requires a fraction argument"))
         sampleInterp(sampleSketchColumn("approx_percentile",
-          operandColumn(e, aggOk = false)), p)
+          row.operand(e)), p)
       }
       /** first(x) / last(x): the value at the earliest / latest point of
         * the group on the family's time axis — the TSDB first/last
@@ -2316,7 +2357,7 @@ object Compiler {
                 s"$f() bucket width must be a string literal like '1 day'")
             }
             (f, aggXColName(f, e, ps, a2),
-              operandColumn(e, aggOk = false), bucketUs)
+              row.operand(e), bucketUs)
         }
       if (segSpecs.nonEmpty) {
         val f = segSpecs.head._1
@@ -2348,14 +2389,14 @@ object Compiler {
         */
       val acfSpecs: Seq[(String, Column, Column, Int)] = aggSpecs.collect {
         case Right(("acf", e, ps, a2)) =>
-          val c = operandColumn(e, aggOk = false)
+          val c = row.operand(e)
           (aggXColName("acf", e, ps, a2), c, c, ps.head.toInt)
         // xcorr(x, y, k): the cross-series lead-lag probe — identical
         // machinery with y as the led side (acf(x,k) ≡ xcorr(x,x,k))
         case Right(("xcorr", e, ps, a2 @ Some(y))) =>
           (aggXColName("xcorr", e, ps, a2),
-            operandColumn(e, aggOk = false),
-            operandColumn(y, aggOk = false), ps.head.toInt)
+            row.operand(e),
+            row.operand(y), ps.head.toInt)
         case Left(("acf", _)) => throw CompileException(
           "acf() requires (field, lag) arguments")
         case Left(("xcorr", _)) => throw CompileException(
@@ -2391,7 +2432,7 @@ object Compiler {
             "mad(*) is not valid — mad() needs an argument"))
           (aggColName("mad", a), col(sf.inName))
         case Right(("mad", e, ps, a2)) =>
-          (aggXColName("mad", e, ps, a2), operandColumn(e, aggOk = false))
+          (aggXColName("mad", e, ps, a2), row.operand(e))
       }
       if (madSpecs.nonEmpty && spec.groupMode != "plain")
         throw CompileException(
@@ -2411,7 +2452,7 @@ object Compiler {
             if (df.columns.contains(nm)) throw CompileException(
               s"group key alias '$nm' collides with a source " +
                 "column of the same name — choose a different alias")
-            df.withColumn(nm, operandColumn(e, aggOk = false))
+            df.withColumn(nm, row.operand(e))
           case (df, _) => df
         }
         val partCols = groupEntries.map {
@@ -2546,7 +2587,7 @@ object Compiler {
         case Right(ExprItem(OFn("bucket", a), nm)) if a.length == 3 => col(nm)
         case Right(ExprItem(e, nm)) =>
           if (segSpecs.nonEmpty || madSpecs.nonEmpty) col(nm)
-          else operandColumn(e, aggOk = false).as(nm)
+          else row.operand(e).as(nm)
       }
       val aggCols = aggSpecs.map {
         case Left(("approx_percentile", _)) => throw CompileException(
@@ -2571,7 +2612,7 @@ object Compiler {
             .as(aggColName("approx_percentile_sketch", a))
         case Right(("approx_percentile_sketch", e, ps, a2)) =>
           sampleSketchColumn("approx_percentile_sketch",
-            operandColumn(e, aggOk = false))
+            row.operand(e))
             .as(aggXColName("approx_percentile_sketch", e, ps, a2))
         case Left((f @ ("first" | "last"), a)) =>
           val sf = a.getOrElse(throw CompileException(
@@ -2582,15 +2623,15 @@ object Compiler {
           approxPercentileColumn(e, ps)
             .as(aggXColName("approx_percentile", e, ps, a2))
         case Right((f @ ("first" | "last"), e, ps, a2)) =>
-          timeOrderedColumn(f, operandColumn(e, aggOk = false))
+          timeOrderedColumn(f, row.operand(e))
             .as(aggXColName(f, e, ps, a2))
         /* arg_max/arg_min: ONE pass, no join-back — the pair rides a
          * struct ordered by (key, value), so ties on the key break
          * deterministically toward the max (resp. min) value; rows where
          * either argument is NULL drop (the struct is NULL). */
         case Right((f @ ("arg_max" | "arg_min"), e, ps, a2 @ Some(y))) =>
-          val vx = operandColumn(e, aggOk = false)
-          val vy = operandColumn(y, aggOk = false)
+          val vx = row.operand(e)
+          val vy = row.operand(y)
           val pair = when(vx.isNotNull && vy.isNotNull,
             struct(vy.as("k"), vx.as("v")))
           val red = if (f == "arg_max") max(pair) else min(pair)
@@ -2598,11 +2639,11 @@ object Compiler {
         // string_agg: values rendered as strings, sorted ASC, joined —
         // the value-sort (not input order) is the determinism contract
         case Right(("string_agg", e, ps, a2 @ Some(OLit(BStr(sep))))) =>
-          val vx = operandColumn(e, aggOk = false)
+          val vx = row.operand(e)
           array_join(array_sort(collect_list(vx.cast("string"))), sep)
             .as(aggXColName("string_agg", e, ps, a2))
         case Right((f, e, ps, a2)) =>
-          val c = operandColumn(e, aggOk = false)
+          val c = row.operand(e)
           aggFnColumn(f, c, ps).as(aggXColName(f, e, ps, a2))
       }
       // ROLLUP/CUBE/GROUPING SETS plan through Spark's native Expand
@@ -2616,7 +2657,7 @@ object Compiler {
           // stable attribute the set lists can name by column
           val pre = groupEntries.foldLeft(filtered) {
             case (df, Right(ExprItem(e, nm))) =>
-              df.withColumn(nm, operandColumn(e, aggOk = false))
+              df.withColumn(nm, row.operand(e))
             case (df, _) => df
           }
           def keyCol(n: RawName): Column =
@@ -2629,7 +2670,7 @@ object Compiler {
         case _ => preAgg.groupBy(groupCols: _*)
       }
       val agged = grouped.agg(aggCols.head, aggCols.tail: _*)
-      val havd = having2.fold(agged)(h => agged.filter(exprColumn(h, aggOk = true)))
+      val havd = having2.fold(agged)(h => agged.filter(new Q(aggOk = true, winOk = false).predicate(h)))
       /** `FILL(mode)`: densify the bucket axis AFTER the aggregation —
         * the InfluxQL `GROUP BY time(...) fill(...)` / TimescaleDB
         * time_bucket_gapfill idiom. Per dimension group (the non-bucket
@@ -2821,7 +2862,7 @@ object Compiler {
       }
       val stitched = escGrouped.foldLeft(filtered) {
         case (df, group @ ((nm, arg, part, escOpt) +: _)) =>
-          val c = operandColumn(arg, aggOk = false)
+          val c = row.operand(arg)
           val keyNames = part.map(p => ref(p).inName)
           escOpt match {
             case Some(("ewma", alpha, _, _, _, widthUs)) =>
@@ -2897,12 +2938,13 @@ object Compiler {
         // series named like the alias) would otherwise be clobbered
         // mid-fold and later window expressions would read the window
         // value instead of the series
+        val win = new Q(aggOk = false, winOk = true)
         val withWins = spec.select.foldLeft(stitched) {
           case (df, ExprItem(e, nm)) if hasWinOp(e) =>
-            df.withColumn(s"__q_$nm", operandColumn(e, aggOk = false, winOk = true))
+            df.withColumn(s"__q_$nm", win.operand(e))
           case (df, _) => df
         }
-        withWins.withColumn("__qualify", exprColumn(q, aggOk = false, winOk = true))
+        withWins.withColumn("__qualify", win.predicate(q))
           .filter(col("__qualify")).drop("__qualify")
       }
     }
@@ -2915,6 +2957,7 @@ object Compiler {
           "no bucket axis to densify here")
 
     // --- ORDER BY / DISTINCT / LIMIT / final projection ------------------
+    val item = new Q(aggOk = hasAgg, winOk = true)
     def itemColName(i: SelectItem): String = i match {
       case FieldItem(n)    => ref(n).inName
       case AggItem(f, a)   => aggColName(f, a.map(ref))
@@ -2938,7 +2981,7 @@ object Compiler {
       // escaped/auto-stitched smoothing items were materialized as
       // frame transforms — read the computed column back
       case ExprItem(_, nm) if escapedNames(nm) => col(s"__esc_$nm").as(nm)
-      case ExprItem(e, nm) => operandColumn(e, aggOk = hasAgg, winOk = true).as(nm)
+      case ExprItem(e, nm) => item.operand(e).as(nm)
     }
     // a computed ORDER BY key sorts on its compiled expression (an
     // arbitrary-expression sort, beyond select-shaped keys)
@@ -2948,7 +2991,7 @@ object Compiler {
     def orderCol(i: SelectItem): Column = i match {
       case ExprItem(_, nm) if hasAgg && groupedExprNames.contains(nm) => col(nm)
       case ExprItem(_, nm) if escapedNames(nm) => col(s"__esc_$nm")
-      case ExprItem(e, _) => operandColumn(e, aggOk = hasAgg, winOk = true)
+      case ExprItem(e, _) => item.operand(e)
       case other          => col(itemColName(other))
     }
 

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, T
 
 import graft.boostql.BoostQL
 import graft.sources.TimeSeriesTable
+import graft.util.ParquetStats
 
 /** Structured-Streaming slice: the declarative upgrade of the
   * reference's pull-based micro-batch loop (executor.go:184-274 —
@@ -104,12 +105,12 @@ object StreamingOps {
     })
 
   /** The staged events corpus as a file stream (file streams need an
-    * explicit schema; it comes from the batch reader), with the event
+    * explicit schema; it comes from the corpus' parquet footer), with the event
     * timestamp normalized exactly as the batch [[graft.tables.Tables]]
     * reader does.
     */
   private def eventsStream(spark: SparkSession, sfDir: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(s"$sfDir/events.parquet").schema)
+    spark.readStream.schema(ParquetStats.schema(spark, s"$sfDir/events.parquet"))
       .parquet(stageDir(sfDir))
       .transform(graft.tables.Tables.normalizeEventsTs)
 
@@ -253,7 +254,7 @@ object StreamingOps {
     // (exact column max, same unit dispatch as normalizeEventsTs —
     // a driver-side metadata read instead of a scan+aggregate job per
     // replay; guide §6). Stats-less corpora fall back to the scan.
-    val maxTs = graft.util.ParquetStats.eventsMaxTsMicros(spark, sfDir)
+    val maxTs = ParquetStats.eventsMaxTsMicros(spark, sfDir)
       .map { us =>
         val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
         t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
@@ -979,8 +980,8 @@ object StreamingOps {
     */
   def streamingCurationReplay(spark: SparkSession, sfDir: String,
       weights: Array[Double], bias: Double): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
+    val docs = spark.readStream
+      .schema(ParquetStats.schema(spark, s"$sfDir/documents.parquet"))
       .parquet(stageDir(sfDir, "documents"))
     val scored = graft.operators.TextAnalysisOps
       .classifierScore(docs, "doc_id", "text", weights, bias)
@@ -1044,8 +1045,7 @@ object StreamingOps {
     */
   def streamingShingleRollups(spark: SparkSession, docsDir: String,
       maxFilesPerTrigger: Int = 0): Seq[(Long, Long, Long, Long)] = {
-    val schema = spark.read.parquet(docsDir).schema
-    val reader = spark.readStream.schema(schema)
+    val reader = spark.readStream.schema(ParquetStats.schema(spark, docsDir))
     if (maxFilesPerTrigger > 0)
       reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     val docs = reader.parquet(docsDir)

@@ -6,10 +6,14 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import scala.util.control.NonFatal
 
-/** Metadata-only column statistics over a parquet file or directory.
+/** Metadata-only reads over a parquet file or directory: column
+  * statistics and the schema.
   *
   * The streaming flush seeds need ONE number from the events corpus —
   * `max(ts)`, to place the far-future watermark-flush markers — and
@@ -23,6 +27,44 @@ import scala.util.control.NonFatal
   * the scan-computed ones.
   */
 object ParquetStats {
+
+  /** The Spark schema of a parquet file or directory, read from one
+    * footer on the driver. It is what `spark.read.parquet(path).schema`
+    * infers, without the Spark job that inference runs: with schema
+    * merging off (the default), inference also reads only the first
+    * data file's footer in path order. Like Spark's footer reader, it
+    * takes the Spark schema a Spark writer stored in the footer, else
+    * converts the parquet schema with Spark's converter under the
+    * session's conf (so `spark.sql.legacy.parquet.nanosAsLong` applies
+    * the same way); like a file relation, every field is nullable. File
+    * streams need an explicit schema; this is where they take it.
+    */
+  def schema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val files = root.getFileSystem(conf).listFiles(root, true)
+    val first = Iterator.continually(files).takeWhile(_.hasNext)
+      .map(_.next().getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .minByOption(_.toString).getOrElse(throw new IllegalArgumentException(
+        s"no parquet data file under $path"))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(first, conf))
+    val meta = try r.getFooter.getFileMetaData finally r.close()
+    val stored = Option(meta.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata"))
+    nullable(stored.fold[DataType](
+      new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))(
+      DataType.fromJson)).asInstanceOf[StructType]
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** Exact max of the events `ts` column as epoch MICROS, served from
     * footer statistics, with the same physical-unit dispatch as

@@ -25,99 +25,103 @@ class PlanShapeSpec extends SparkSpec {
     // the graft-written layout carries physical series + timestamp ts
     // columns (the testdata adapter's NANOS-derived ts blocks stats
     // pushdown by construction, pinned in BoostQLSpec)
-    val root = java.nio.file.Files.createTempDirectory("graft-planshape").toString
-    TimeSeriesTable.append(
-      TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
-    val stored = TimeSeriesTable.open(spark, root, "dom", "events")
-    val df = Compiler.compile(Parser.parse(
-      "SELECT click, ts FROM dom.events " +
-        "WHERE click > 50.0 AND ts >= '2024-01-10 00:00:00'"), stored)
-    val plan = planOf(df)
-    assert(plan.contains("PushedFilters:"), s"no pushed filters in:\n$plan")
-    assert(plan.contains("EqualTo(series,click)"),
-      s"series = 'click' must push into the scan:\n$plan")
-    assert(plan.contains("GreaterThanOrEqual(ts"),
-      s"ts bound must push into the scan:\n$plan")
-    assert(plan.contains("GreaterThan(value,50.0)"),
-      s"value predicate must push into the scan:\n$plan")
-    // INTERVAL arithmetic on a literal bound constant-folds, so the
-    // shifted comparison pushes exactly like the explicit one
-    val shifted = Compiler.compile(Parser.parse(
-      "SELECT click, ts FROM dom.events " +
-        "WHERE ts >= '2024-01-11 00:00:00' - INTERVAL '1 day'"), stored)
-    val shiftedPlan = planOf(shifted)
-    assert(shiftedPlan.contains("GreaterThanOrEqual(ts"),
-      s"interval-shifted ts bound must still push into the scan:\n$shiftedPlan")
-    // calendar-unit arithmetic on a literal bound constant-folds too —
-    // ANSI year-month addition over a literal is still foldable
-    val monthShifted = Compiler.compile(Parser.parse(
-      "SELECT click, ts FROM dom.events " +
-        "WHERE ts >= '2024-02-11 00:00:00' - INTERVAL '1 month'"), stored)
-    val monthPlan = planOf(monthShifted)
-    assert(monthPlan.contains("GreaterThanOrEqual(ts"),
-      s"calendar-shifted ts bound must still push into the scan:\n$monthPlan")
+    withTempRoot("graft-planshape") { root =>
+      TimeSeriesTable.append(
+        TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
+      val stored = TimeSeriesTable.open(spark, root, "dom", "events")
+      val df = Compiler.compile(Parser.parse(
+        "SELECT click, ts FROM dom.events " +
+          "WHERE click > 50.0 AND ts >= '2024-01-10 00:00:00'"), stored)
+      val plan = planOf(df)
+      assert(plan.contains("PushedFilters:"), s"no pushed filters in:\n$plan")
+      assert(plan.contains("EqualTo(series,click)"),
+        s"series = 'click' must push into the scan:\n$plan")
+      assert(plan.contains("GreaterThanOrEqual(ts"),
+        s"ts bound must push into the scan:\n$plan")
+      assert(plan.contains("GreaterThan(value,50.0)"),
+        s"value predicate must push into the scan:\n$plan")
+      // INTERVAL arithmetic on a literal bound constant-folds, so the
+      // shifted comparison pushes exactly like the explicit one
+      val shifted = Compiler.compile(Parser.parse(
+        "SELECT click, ts FROM dom.events " +
+          "WHERE ts >= '2024-01-11 00:00:00' - INTERVAL '1 day'"), stored)
+      val shiftedPlan = planOf(shifted)
+      assert(shiftedPlan.contains("GreaterThanOrEqual(ts"),
+        s"interval-shifted ts bound must still push into the scan:\n$shiftedPlan")
+      // calendar-unit arithmetic on a literal bound constant-folds too —
+      // ANSI year-month addition over a literal is still foldable
+      val monthShifted = Compiler.compile(Parser.parse(
+        "SELECT click, ts FROM dom.events " +
+          "WHERE ts >= '2024-02-11 00:00:00' - INTERVAL '1 month'"), stored)
+      val monthPlan = planOf(monthShifted)
+      assert(monthPlan.contains("GreaterThanOrEqual(ts"),
+        s"calendar-shifted ts bound must still push into the scan:\n$monthPlan")
+    }
   }
 
   test("stream-join tier: per-side series filters push to the scans; " +
       "native interval term, no micros round-trip") {
-    val root = java.nio.file.Files.createTempDirectory("graft-planshape").toString
-    TimeSeriesTable.append(
-      TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
-    // batch frames compile through the same sqlStream join path
-    // (withWatermark is a no-op on batch), so the physical plan is
-    // inspectable end to end
-    val df = BoostQL.sqlStream(
-      "SELECT a.click.event_id AS cid, b.purchase.event_id AS pid " +
-        "FROM dom.events AS a JOIN dom.events AS b " +
-        "ON a.click.user = b.purchase.user " +
-        "AND b.ts BETWEEN a.ts AND a.ts + INTERVAL '1 hour'",
-      _ => TimeSeriesTable.open(spark, root, "dom", "events"), "1 day")
-    val plan = planOf(df)
-    assert(plan.contains("EqualTo(series,click)") &&
-      plan.contains("EqualTo(series,purchase)"),
-      s"both sides' series filters must push into their scans:\n$plan")
-    assert(!plan.contains("CartesianProduct"),
-      s"the equi key must drive the join:\n$plan")
-    // the time bound must stay NATIVE ts +- interval arithmetic — the
-    // shape the streaming state-eviction analysis recognizes; a
-    // unix_micros round-trip in the condition would silence eviction
-    assert(!plan.contains("unix_micros"),
-      s"interval arithmetic must not round-trip through micros:\n$plan")
+    withTempRoot("graft-planshape") { root =>
+      TimeSeriesTable.append(
+        TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
+      // batch frames compile through the same sqlStream join path
+      // (withWatermark is a no-op on batch), so the physical plan is
+      // inspectable end to end
+      val df = BoostQL.sqlStream(
+        "SELECT a.click.event_id AS cid, b.purchase.event_id AS pid " +
+          "FROM dom.events AS a JOIN dom.events AS b " +
+          "ON a.click.user = b.purchase.user " +
+          "AND b.ts BETWEEN a.ts AND a.ts + INTERVAL '1 hour'",
+        _ => TimeSeriesTable.open(spark, root, "dom", "events"), "1 day")
+      val plan = planOf(df)
+      assert(plan.contains("EqualTo(series,click)") &&
+        plan.contains("EqualTo(series,purchase)"),
+        s"both sides' series filters must push into their scans:\n$plan")
+      assert(!plan.contains("CartesianProduct"),
+        s"the equi key must drive the join:\n$plan")
+      // the time bound must stay NATIVE ts +- interval arithmetic — the
+      // shape the streaming state-eviction analysis recognizes; a
+      // unix_micros round-trip in the condition would silence eviction
+      assert(!plan.contains("unix_micros"),
+        s"interval arithmetic must not round-trip through micros:\n$plan")
+    }
   }
 
   test("OUTLIERS statement: series filter pushed, broadcast medians, " +
       "no row shuffle on the key") {
-    val root = java.nio.file.Files.createTempDirectory("graft-planshape").toString
-    TimeSeriesTable.append(
-      TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
-    val df = BoostQL.sql("OUTLIERS purchase K 3.0 FROM dom.events",
-      _ => TimeSeriesTable.open(spark, root, "dom", "events"))
-    val plan = planOf(df)
-    assert(plan.contains("EqualTo(series,purchase)"),
-      s"the series filter must push into the scan:\n$plan")
-    assert(plan.contains("BroadcastHashJoin") &&
-      plan.contains("partial_percentile"),
-      s"medians must partial-aggregate and pin back by broadcast:\n$plan")
-    assert(!plan.contains("Window") && !plan.contains("SortMergeJoin"),
-      s"data rows must never shuffle or sort on the key:\n$plan")
+    withTempRoot("graft-planshape") { root =>
+      TimeSeriesTable.append(
+        TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
+      val df = BoostQL.sql("OUTLIERS purchase K 3.0 FROM dom.events",
+        _ => TimeSeriesTable.open(spark, root, "dom", "events"))
+      val plan = planOf(df)
+      assert(plan.contains("EqualTo(series,purchase)"),
+        s"the series filter must push into the scan:\n$plan")
+      assert(plan.contains("BroadcastHashJoin") &&
+        plan.contains("partial_percentile"),
+        s"medians must partial-aggregate and pin back by broadcast:\n$plan")
+      assert(!plan.contains("Window") && !plan.contains("SortMergeJoin"),
+        s"data rows must never shuffle or sort on the key:\n$plan")
+    }
   }
 
   test("EXPLAIN through the dialect front door shows the pushed series predicate") {
     // same claim as the test above, but checked the way a dialect USER
     // would: `EXPLAIN SELECT …` returns the formatted plan as a one-row
     // frame, and the series/value predicates must appear as PushedFilters
-    val root = java.nio.file.Files.createTempDirectory("graft-explain").toString
-    TimeSeriesTable.append(
-      TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
-    val stored = TimeSeriesTable.open(spark, root, "dom", "events")
-    val planText = BoostQL.sql(
-      "EXPLAIN SELECT click, ts FROM dom.events WHERE click > 50.0",
-      _ => stored).collect()(0).getString(0)
-    assert(planText.contains("PushedFilters:"), s"no pushed filters in:\n$planText")
-    assert(planText.contains("EqualTo(series,click)"),
-      s"series = 'click' must push into the scan:\n$planText")
-    assert(planText.contains("GreaterThan(value,50.0)"),
-      s"value predicate must push into the scan:\n$planText")
+    withTempRoot("graft-explain") { root =>
+      TimeSeriesTable.append(
+        TimeSeriesTable.fromEvents(Tables.events(spark, sfDir)), root, "dom", "events")
+      val stored = TimeSeriesTable.open(spark, root, "dom", "events")
+      val planText = BoostQL.sql(
+        "EXPLAIN SELECT click, ts FROM dom.events WHERE click > 50.0",
+        _ => stored).collect()(0).getString(0)
+      assert(planText.contains("PushedFilters:"), s"no pushed filters in:\n$planText")
+      assert(planText.contains("EqualTo(series,click)"),
+        s"series = 'click' must push into the scan:\n$planText")
+      assert(planText.contains("GreaterThan(value,50.0)"),
+        s"value predicate must push into the scan:\n$planText")
+    }
   }
 
   test("BROADCAST hint forces the build side with auto-broadcast disabled") {

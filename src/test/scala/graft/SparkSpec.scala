@@ -19,6 +19,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Run `body` on a fresh temp directory named `<prefix>…`, then delete
+    * the directory and everything under it, whether `body` passed or
+    * threw. */
+  def withTempRoot[T](prefix: String)(body: String => T): T = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(root.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(root)
+  }
+
   override def afterAll(): Unit = {
     // SparkSession is shared across suites in one JVM (sbt forks one
     // test JVM); don't stop it here or later suites fail.

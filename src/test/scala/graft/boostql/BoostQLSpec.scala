@@ -97,159 +97,170 @@ class BoostQLSpec extends SparkSpec {
 
   test("DELETE: partition-granular retention; whole-family shape refuses") {
     import org.apache.spark.sql.functions.{col => c}
-    val root = java.nio.file.Files.createTempDirectory("graft-sqldel").toString
-    TimeSeriesTable.append(fam, root, "dom", "events")
-    val before = TimeSeriesTable.open(spark, root, "dom", "events").count()
-    val dropped = BoostQL.sqlDelete(
-      "DELETE FROM dom.events WHERE ts < DATE '2024-01-10'", spark, root)
-    assert(dropped.nonEmpty && dropped.forall(_.startsWith("dt=")))
-    val after = TimeSeriesTable.open(spark, root, "dom", "events")
-    assert(after.count() < before)
-    // the cut is exact at the date boundary: nothing before survives,
-    // the boundary date itself stays
-    assert(after.filter(c("ts") <
-      java.sql.Timestamp.valueOf("2024-01-10 00:00:00")).count() == 0)
-    assert(after.filter(c("ts") <
-      java.sql.Timestamp.valueOf("2024-01-11 00:00:00")).count() > 0)
-    // idempotent: nothing left to drop
-    assert(BoostQL.sqlDelete(
-      "DELETE FROM dom.events WHERE ts < DATE '2024-01-10'", spark, root).isEmpty)
-    // the whole-family shape refuses (an operational drop, not a query)
-    val e = intercept[Compiler.CompileException](
-      BoostQL.sqlDelete("DELETE FROM dom.events", spark, root))
-    assert(e.getMessage.contains("WHERE"), e.getMessage)
-    intercept[Compiler.CompileException](
-      BoostQL.sqlDelete("SELECT click FROM dom.events", spark, root))
+    withTempRoot("graft-sqldel") { root =>
+      TimeSeriesTable.append(fam, root, "dom", "events")
+      val before = TimeSeriesTable.open(spark, root, "dom", "events").count()
+      val dropped = BoostQL.sqlDelete(
+        "DELETE FROM dom.events WHERE ts < DATE '2024-01-10'", spark, root)
+      assert(dropped.nonEmpty && dropped.forall(_.startsWith("dt=")))
+      val after = TimeSeriesTable.open(spark, root, "dom", "events")
+      assert(after.count() < before)
+      // the cut is exact at the date boundary: nothing before survives,
+      // the boundary date itself stays
+      assert(after.filter(c("ts") <
+        java.sql.Timestamp.valueOf("2024-01-10 00:00:00")).count() == 0)
+      assert(after.filter(c("ts") <
+        java.sql.Timestamp.valueOf("2024-01-11 00:00:00")).count() > 0)
+      // idempotent: nothing left to drop
+      assert(BoostQL.sqlDelete(
+        "DELETE FROM dom.events WHERE ts < DATE '2024-01-10'", spark, root).isEmpty)
+      // the whole-family shape refuses (an operational drop, not a query)
+      val e = intercept[Compiler.CompileException](
+        BoostQL.sqlDelete("DELETE FROM dom.events", spark, root))
+      assert(e.getMessage.contains("WHERE"), e.getMessage)
+      intercept[Compiler.CompileException](
+        BoostQL.sqlDelete("SELECT click FROM dom.events", spark, root))
+    }
   }
 
   test("MERGE: clause order is first-true-wins, src attribute refs " +
       "resolve, malformed shapes refuse with the reason") {
     import org.apache.spark.sql.functions.{col => c, element_at}
-    val root = java.nio.file.Files.createTempDirectory("graft-sqlmerge").toString
-    BoostQL.sqlInsert("INSERT INTO dom.d SELECT ts, max(click) AS m " +
-      "FROM dom.events GROUP BY ts", _ => fam, root)
-    val seedCount = TimeSeriesTable.open(spark, root, "dom", "d").count()
-    // batch carries a status attribute; tombstones delete FIRST, the
-    // rest update only when they RAISE the stored value (always here:
-    // the batch doubles) — clause order decides the tombstones' fate
-    val (upd, del, ins) = BoostQL.sqlMerge(
-      "MERGE INTO dom.d USING (SELECT ts, max(click) * 2.0 AS m, " +
-        "CASE WHEN max(click) > 200.0 THEN 'tombstone' ELSE 'ok' END AS status " +
-        "FROM dom.events GROUP BY ts) " +
-        "WHEN MATCHED AND src.status = 'tombstone' THEN DELETE " +
-        "WHEN MATCHED AND m < src.value THEN UPDATE " +
-        "WHEN NOT MATCHED THEN INSERT", _ => fam, root)
-    assert(del > 0 && upd > 0, s"expected deletes and updates ($upd, $del)")
-    assert(ins == 0L, "every batch key matches the seed")
-    val after = TimeSeriesTable.open(spark, root, "dom", "d")
-    assert(after.count() == seedCount - del)
-    // updated rows carry the batch's status attribute (source row
-    // replaces the target row wholesale); no tombstone survives
-    assert(after.filter(c("series") === "m" &&
-      element_at(c("attributes"), "status") === "ok").count() == upd)
-    assert(after.filter(
-      element_at(c("attributes"), "status") === "tombstone").count() == 0)
-    // refusals name the malformed piece
-    def bad(stmt: String, needle: String) = {
-      val e = intercept[Compiler.CompileException](
-        BoostQL.sqlMerge(stmt, _ => fam, root))
-      assert(e.getMessage.toLowerCase.contains(needle), e.getMessage)
+    withTempRoot("graft-sqlmerge") { root =>
+      BoostQL.sqlInsert("INSERT INTO dom.d SELECT ts, max(click) AS m " +
+        "FROM dom.events GROUP BY ts", _ => fam, root)
+      val seedCount = TimeSeriesTable.open(spark, root, "dom", "d").count()
+      // batch carries a status attribute; tombstones delete FIRST, the
+      // rest update only when they RAISE the stored value (always here:
+      // the batch doubles) — clause order decides the tombstones' fate
+      val (upd, del, ins) = BoostQL.sqlMerge(
+        "MERGE INTO dom.d USING (SELECT ts, max(click) * 2.0 AS m, " +
+          "CASE WHEN max(click) > 200.0 THEN 'tombstone' ELSE 'ok' END AS status " +
+          "FROM dom.events GROUP BY ts) " +
+          "WHEN MATCHED AND src.status = 'tombstone' THEN DELETE " +
+          "WHEN MATCHED AND m < src.value THEN UPDATE " +
+          "WHEN NOT MATCHED THEN INSERT", _ => fam, root)
+      assert(del > 0 && upd > 0, s"expected deletes and updates ($upd, $del)")
+      assert(ins == 0L, "every batch key matches the seed")
+      val after = TimeSeriesTable.open(spark, root, "dom", "d")
+      assert(after.count() == seedCount - del)
+      // updated rows carry the batch's status attribute (source row
+      // replaces the target row wholesale); no tombstone survives
+      assert(after.filter(c("series") === "m" &&
+        element_at(c("attributes"), "status") === "ok").count() == upd)
+      assert(after.filter(
+        element_at(c("attributes"), "status") === "tombstone").count() == 0)
+      // refusals name the malformed piece
+      def bad(stmt: String, needle: String) = {
+        val e = intercept[Compiler.CompileException](
+          BoostQL.sqlMerge(stmt, _ => fam, root))
+        assert(e.getMessage.toLowerCase.contains(needle), e.getMessage)
+      }
+      bad("MERGE INTO dom.d USING (SELECT ts, max(click) AS m FROM " +
+        "dom.events GROUP BY ts)", "when clause")
+      bad("MERGE INTO dom.d USING (SELECT 1) WHEN NOT MATCHED THEN INSERT " +
+        "WHEN NOT MATCHED THEN INSERT", "one when not matched")
+      bad("MERGE INTO dom.d USING (SELECT 1) WHEN MATCHED THEN UPDATE " +
+        "WHEN MATCHED AND m > 0.0 THEN DELETE", "unreachable")
+      bad("MERGE INTO dom.d USING (SELECT 1) WHEN MATCHED THEN MERGE",
+        "malformed merge clause")
+      bad("MERGE INTO dom.d USING (SELECT 1", "closing parenthesis")
+      // NOT MATCHED BY SOURCE: delete or update-with-SET only,
+      // target-side conditions AND set expressions only, unreachable
+      // ordering applies within the clause family
+      bad("MERGE INTO dom.d USING (SELECT 1) " +
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE", "needs set")
+      bad("MERGE INTO dom.d USING (SELECT 1) " +
+        "WHEN NOT MATCHED BY SOURCE THEN INSERT", "contradictory")
+      bad("MERGE INTO dom.d USING (SELECT 1) " +
+        "WHEN NOT MATCHED BY SOURCE AND src.value > 1.0 THEN DELETE",
+        "target")
+      bad("MERGE INTO dom.d USING (SELECT 1) " +
+        "WHEN NOT MATCHED BY SOURCE THEN DELETE " +
+        "WHEN NOT MATCHED BY SOURCE AND m > 0.0 THEN DELETE", "unreachable")
+      // by-source UPDATE SET: src. refuses in the RHS (no source row for
+      // an absent key), ts/series are not assignable, foreign-series RHS
+      // refuses, aggregates refuse
+      bad("MERGE INTO dom.d USING (SELECT 1) " +
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET m = src.value",
+        "target")
+      bad("MERGE INTO dom.d USING (SELECT 1) " +
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET ts = ts", "assign")
+      bad("MERGE INTO dom.d USING (SELECT 1) " +
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET m = max(m)",
+        "by-source set")
+      bad("MERGE INTO dom.d USING (SELECT 1) " +
+        "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET m = m, m = m * 2.0",
+        "duplicate")
+      // a CASE condition inside a by-source condition or SET sees the
+      // same target-only row: src. refuses there too
+      bad("MERGE INTO dom.d USING (SELECT 1) WHEN NOT MATCHED BY SOURCE " +
+        "AND CASE WHEN src.value > 1.0 THEN 1.0 ELSE 0.0 END > 0.0 " +
+        "THEN DELETE", "sees only the target row")
+      bad("MERGE INTO dom.d USING (SELECT 1) WHEN NOT MATCHED BY SOURCE " +
+        "THEN UPDATE SET m = CASE WHEN src.k = 'x' THEN 0.0 ELSE m END",
+        "sees only the target row")
+      // mirror-sync end to end through the SQL face: keys absent from
+      // the batch and below the guard are dropped, everything else keeps
+      val before2 = TimeSeriesTable.open(spark, root, "dom", "d").count()
+      val (u3, d3, i3) = BoostQL.sqlMerge(
+        "MERGE INTO dom.d USING (SELECT ts, max(click) AS m " +
+          "FROM dom.events WHERE click > 100.0 GROUP BY ts) " +
+          "WHEN NOT MATCHED BY SOURCE AND m < 50.0 THEN DELETE",
+        _ => fam, root)
+      assert(u3 == 0L && i3 == 0L && d3 > 0L, s"got ($u3, $d3, $i3)")
+      assert(TimeSeriesTable.open(spark, root, "dom", "d").count() ==
+        before2 - d3)
     }
-    bad("MERGE INTO dom.d USING (SELECT ts, max(click) AS m FROM " +
-      "dom.events GROUP BY ts)", "when clause")
-    bad("MERGE INTO dom.d USING (SELECT 1) WHEN NOT MATCHED THEN INSERT " +
-      "WHEN NOT MATCHED THEN INSERT", "one when not matched")
-    bad("MERGE INTO dom.d USING (SELECT 1) WHEN MATCHED THEN UPDATE " +
-      "WHEN MATCHED AND m > 0.0 THEN DELETE", "unreachable")
-    bad("MERGE INTO dom.d USING (SELECT 1) WHEN MATCHED THEN MERGE",
-      "malformed merge clause")
-    bad("MERGE INTO dom.d USING (SELECT 1", "closing parenthesis")
-    // NOT MATCHED BY SOURCE: delete or update-with-SET only,
-    // target-side conditions AND set expressions only, unreachable
-    // ordering applies within the clause family
-    bad("MERGE INTO dom.d USING (SELECT 1) " +
-      "WHEN NOT MATCHED BY SOURCE THEN UPDATE", "needs set")
-    bad("MERGE INTO dom.d USING (SELECT 1) " +
-      "WHEN NOT MATCHED BY SOURCE THEN INSERT", "contradictory")
-    bad("MERGE INTO dom.d USING (SELECT 1) " +
-      "WHEN NOT MATCHED BY SOURCE AND src.value > 1.0 THEN DELETE",
-      "target")
-    bad("MERGE INTO dom.d USING (SELECT 1) " +
-      "WHEN NOT MATCHED BY SOURCE THEN DELETE " +
-      "WHEN NOT MATCHED BY SOURCE AND m > 0.0 THEN DELETE", "unreachable")
-    // by-source UPDATE SET: src. refuses in the RHS (no source row for
-    // an absent key), ts/series are not assignable, foreign-series RHS
-    // refuses, aggregates refuse
-    bad("MERGE INTO dom.d USING (SELECT 1) " +
-      "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET m = src.value",
-      "target")
-    bad("MERGE INTO dom.d USING (SELECT 1) " +
-      "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET ts = ts", "assign")
-    bad("MERGE INTO dom.d USING (SELECT 1) " +
-      "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET m = max(m)",
-      "by-source set")
-    bad("MERGE INTO dom.d USING (SELECT 1) " +
-      "WHEN NOT MATCHED BY SOURCE THEN UPDATE SET m = m, m = m * 2.0",
-      "duplicate")
-    // mirror-sync end to end through the SQL face: keys absent from
-    // the batch and below the guard are dropped, everything else keeps
-    val before2 = TimeSeriesTable.open(spark, root, "dom", "d").count()
-    val (u3, d3, i3) = BoostQL.sqlMerge(
-      "MERGE INTO dom.d USING (SELECT ts, max(click) AS m " +
-        "FROM dom.events WHERE click > 100.0 GROUP BY ts) " +
-        "WHEN NOT MATCHED BY SOURCE AND m < 50.0 THEN DELETE",
-      _ => fam, root)
-    assert(u3 == 0L && i3 == 0L && d3 > 0L, s"got ($u3, $d3, $i3)")
-    assert(TimeSeriesTable.open(spark, root, "dom", "d").count() ==
-      before2 - d3)
   }
 
   test("CREATE/DROP FAMILY: CTAS refuses over an existing family, " +
       "OR REPLACE swap is staged and crash-recoverable, DROP grammar") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ctas").toString
-    val n = BoostQL.sqlCreateFamily("CREATE FAMILY dom.x AS " +
-      "SELECT ts, max(click) AS c FROM dom.events GROUP BY ts",
-      _ => fam, root)
-    assert(n > 0)
-    intercept[Compiler.CompileException](BoostQL.sqlCreateFamily(
-      "CREATE FAMILY dom.x AS SELECT ts, max(click) AS c " +
-        "FROM dom.events GROUP BY ts", _ => fam, root))
-    // a failing OR REPLACE select leaves the old family untouched
-    intercept[Exception](BoostQL.sqlCreateFamily(
-      "CREATE OR REPLACE FAMILY dom.x AS SELECT nosuch FROM dom.events",
-      _ => fam, root))
-    assert(TimeSeriesTable.open(spark, root, "dom", "x").count() == n)
-    // crash between the swap renames: live dir gone, aside present —
-    // recover() restores the previous family
-    val live = new java.io.File(s"$root/dom/x")
-    val aside = new java.io.File(s"$root/dom/.x__ctas_old")
-    assert(live.renameTo(aside))
-    val acts = TimeSeriesTable.recover(spark, root, "dom", "x")
-    assert(acts.exists(_.contains("ctas aside")), acts.toString)
-    assert(TimeSeriesTable.open(spark, root, "dom", "x").count() == n)
-    // DROP: missing refuses, IF EXISTS is idempotent
-    intercept[Compiler.CompileException](
-      BoostQL.sqlDropFamily("DROP FAMILY dom.nosuch", spark, root))
-    assert(BoostQL.sqlDropFamily("DROP FAMILY dom.x", spark, root))
-    assert(!BoostQL.sqlDropFamily(
-      "DROP FAMILY IF EXISTS dom.x", spark, root))
-    intercept[Compiler.CompileException](
-      BoostQL.sqlDropFamily("DROP FAMILY x", spark, root))
-    // REFRESH ROLLUP grammar: calendar and non-day-divisible widths
-    // refuse with the per-date-swap reason; the read front points at
-    // the entry point
-    assert(intercept[Compiler.CompileException](BoostQL.sqlRefreshRollup(
-        "REFRESH ROLLUP dom.events BUCKET '1 month' AS m1", spark, root))
-      .getMessage.contains("fixed width"))
-    assert(intercept[Compiler.CompileException](BoostQL.sqlRefreshRollup(
-        "REFRESH ROLLUP dom.events BUCKET '7 hours' AS h7", spark, root))
-      .getMessage.contains("divide one day"))
-    assert(intercept[Compiler.CompileException](BoostQL.sql(
-        "REFRESH ROLLUP dom.events BUCKET '1 hour' AS h1", _ => fam))
-      .getMessage.contains("sqlRefreshRollup"))
-    assert(intercept[Compiler.CompileException](BoostQL.sql(
-        "MERGE INTO dom.x USING (SELECT 1) WHEN MATCHED THEN DELETE",
-        _ => fam)).getMessage.contains("sqlMerge"))
+    withTempRoot("graft-ctas") { root =>
+      val n = BoostQL.sqlCreateFamily("CREATE FAMILY dom.x AS " +
+        "SELECT ts, max(click) AS c FROM dom.events GROUP BY ts",
+        _ => fam, root)
+      assert(n > 0)
+      intercept[Compiler.CompileException](BoostQL.sqlCreateFamily(
+        "CREATE FAMILY dom.x AS SELECT ts, max(click) AS c " +
+          "FROM dom.events GROUP BY ts", _ => fam, root))
+      // a failing OR REPLACE select leaves the old family untouched
+      intercept[Exception](BoostQL.sqlCreateFamily(
+        "CREATE OR REPLACE FAMILY dom.x AS SELECT nosuch FROM dom.events",
+        _ => fam, root))
+      assert(TimeSeriesTable.open(spark, root, "dom", "x").count() == n)
+      // crash between the swap renames: live dir gone, aside present —
+      // recover() restores the previous family
+      val live = new java.io.File(s"$root/dom/x")
+      val aside = new java.io.File(s"$root/dom/.x__ctas_old")
+      assert(live.renameTo(aside))
+      val acts = TimeSeriesTable.recover(spark, root, "dom", "x")
+      assert(acts.exists(_.contains("ctas aside")), acts.toString)
+      assert(TimeSeriesTable.open(spark, root, "dom", "x").count() == n)
+      // DROP: missing refuses, IF EXISTS is idempotent
+      intercept[Compiler.CompileException](
+        BoostQL.sqlDropFamily("DROP FAMILY dom.nosuch", spark, root))
+      assert(BoostQL.sqlDropFamily("DROP FAMILY dom.x", spark, root))
+      assert(!BoostQL.sqlDropFamily(
+        "DROP FAMILY IF EXISTS dom.x", spark, root))
+      intercept[Compiler.CompileException](
+        BoostQL.sqlDropFamily("DROP FAMILY x", spark, root))
+      // REFRESH ROLLUP grammar: calendar and non-day-divisible widths
+      // refuse with the per-date-swap reason; the read front points at
+      // the entry point
+      assert(intercept[Compiler.CompileException](BoostQL.sqlRefreshRollup(
+          "REFRESH ROLLUP dom.events BUCKET '1 month' AS m1", spark, root))
+        .getMessage.contains("fixed width"))
+      assert(intercept[Compiler.CompileException](BoostQL.sqlRefreshRollup(
+          "REFRESH ROLLUP dom.events BUCKET '7 hours' AS h7", spark, root))
+        .getMessage.contains("divide one day"))
+      assert(intercept[Compiler.CompileException](BoostQL.sql(
+          "REFRESH ROLLUP dom.events BUCKET '1 hour' AS h1", _ => fam))
+        .getMessage.contains("sqlRefreshRollup"))
+      assert(intercept[Compiler.CompileException](BoostQL.sql(
+          "MERGE INTO dom.x USING (SELECT 1) WHEN MATCHED THEN DELETE",
+          _ => fam)).getMessage.contains("sqlMerge"))
+    }
   }
 
   test("DATE/TIMESTAMP literals: typed bounds equal string bounds; " +
@@ -274,255 +285,300 @@ class BoostQLSpec extends SparkSpec {
   }
 
   test("DELETE: row-level predicates rewrite only the matching rows") {
-    import org.apache.spark.sql.functions.{col => c, element_at => ea}
-    def freshFam(): String = {
-      val root = java.nio.file.Files.createTempDirectory("graft-rowdel-ql").toString
-      TimeSeriesTable.append(fam, root, "dom", "events")
-      root
-    }
-    // value takedown on one series: matching purchases go, every other
-    // row (other series AND non-matching purchases) survives
-    locally {
+    withTempRoot("graft-rowdel-ql") { tmp =>
+      import org.apache.spark.sql.functions.{col => c, element_at => ea}
+      def freshFam(): String = {
+        val root = java.nio.file.Files.createTempDirectory(
+          java.nio.file.Paths.get(tmp), "fam").toString
+        TimeSeriesTable.append(fam, root, "dom", "events")
+        root
+      }
+      // value takedown on one series: matching purchases go, every other
+      // row (other series AND non-matching purchases) survives
+      locally {
+        val root = freshFam()
+        val affected = BoostQL.sqlDelete(
+          "DELETE FROM dom.events WHERE purchase > 250.0", spark, root)
+        assert(affected.nonEmpty && affected.forall(_.startsWith("dt=")))
+        val after = TimeSeriesTable.open(spark, root, "dom", "events")
+        assert(after.filter(c("series") === "purchase" && c("value") > 250.0)
+          .count() == 0)
+        val src = fam
+        assert(after.count() ==
+          src.filter(!(c("series") === "purchase" && c("value") > 250.0)).count())
+        // idempotent: a second pass matches nothing and touches nothing
+        assert(BoostQL.sqlDelete(
+          "DELETE FROM dom.events WHERE purchase > 250.0", spark, root).isEmpty)
+      }
+      // user purge across an attribute (takedown/PII shape), plus the
+      // reserved physical names: series + a mid-day ts bound — the shapes
+      // the retention face refuses are exactly what this face is for
+      locally {
+        val root = freshFam()
+        BoostQL.sqlDelete("DELETE FROM dom.events WHERE click.user = '3'",
+          spark, root)
+        BoostQL.sqlDelete("DELETE FROM dom.events WHERE series = 'view' " +
+          "AND ts < TIMESTAMP '2024-01-15 12:00:00'", spark, root)
+        val after = TimeSeriesTable.open(spark, root, "dom", "events")
+        assert(after.filter(c("series") === "click" &&
+          ea(c("attributes"), "user") === "3").count() == 0)
+        assert(after.filter(c("series") === "view" && c("ts") <
+          java.sql.Timestamp.valueOf("2024-01-15 12:00:00")).count() == 0)
+        assert(after.filter(c("series") === "view").count() > 0)
+        assert(after.filter(c("series") === "click").count() > 0)
+      }
+      // attribute resolution shadows series tags like SELECT's decode:
+      // purchase's env TAG is 'test' (fromEvents), so the predicate
+      // deletes every purchase row
+      locally {
+        val root = freshFam()
+        BoostQL.sqlDelete("DELETE FROM dom.events WHERE purchase.env = 'test'",
+          spark, root)
+        val after = TimeSeriesTable.open(spark, root, "dom", "events")
+        assert(after.filter(c("series") === "purchase").count() == 0)
+        assert(after.filter(c("series") === "click").count() > 0)
+      }
+      // NOT is row-level over the long rows: a series-scoped term is
+      // FALSE on other series' rows, so NOT(click > 100) deletes every
+      // non-click row too — survivors are exactly clicks above 100
+      locally {
+        val root = freshFam()
+        BoostQL.sqlDelete("DELETE FROM dom.events WHERE NOT (click > 100.0)",
+          spark, root)
+        val after = TimeSeriesTable.open(spark, root, "dom", "events")
+        assert(after.filter(c("series") =!= "click").count() == 0)
+        assert(after.count() ==
+          fam.filter(c("series") === "click" && c("value") > 100.0).count())
+      }
+      // refusal matrix for the row-level face
       val root = freshFam()
-      val affected = BoostQL.sqlDelete(
-        "DELETE FROM dom.events WHERE purchase > 250.0", spark, root)
-      assert(affected.nonEmpty && affected.forall(_.startsWith("dt=")))
-      val after = TimeSeriesTable.open(spark, root, "dom", "events")
-      assert(after.filter(c("series") === "purchase" && c("value") > 250.0)
-        .count() == 0)
-      val src = fam
-      assert(after.count() ==
-        src.filter(!(c("series") === "purchase" && c("value") > 250.0)).count())
-      // idempotent: a second pass matches nothing and touches nothing
-      assert(BoostQL.sqlDelete(
-        "DELETE FROM dom.events WHERE purchase > 250.0", spark, root).isEmpty)
+      def refusal(stmt: String): String =
+        intercept[Compiler.CompileException](
+          BoostQL.sqlDelete(stmt, spark, root)).getMessage
+      assert(refusal("DELETE FROM dom.events WHERE click > purchase")
+        .contains("one long row holds one series"))
+      assert(refusal("DELETE FROM dom.events WHERE click.user IN " +
+        "(SELECT purchase.user FROM dom.events)").contains("subqueries"))
+      assert(refusal("DELETE FROM dom.events WHERE click > 5.0 ORDER BY click")
+        .contains("no joins, grouping, ordering or paging"))
     }
-    // user purge across an attribute (takedown/PII shape), plus the
-    // reserved physical names: series + a mid-day ts bound — the shapes
-    // the retention face refuses are exactly what this face is for
-    locally {
-      val root = freshFam()
-      BoostQL.sqlDelete("DELETE FROM dom.events WHERE click.user = '3'",
-        spark, root)
-      BoostQL.sqlDelete("DELETE FROM dom.events WHERE series = 'view' " +
-        "AND ts < TIMESTAMP '2024-01-15 12:00:00'", spark, root)
-      val after = TimeSeriesTable.open(spark, root, "dom", "events")
-      assert(after.filter(c("series") === "click" &&
-        ea(c("attributes"), "user") === "3").count() == 0)
-      assert(after.filter(c("series") === "view" && c("ts") <
-        java.sql.Timestamp.valueOf("2024-01-15 12:00:00")).count() == 0)
-      assert(after.filter(c("series") === "view").count() > 0)
-      assert(after.filter(c("series") === "click").count() > 0)
-    }
-    // attribute resolution shadows series tags like SELECT's decode:
-    // purchase's env TAG is 'test' (fromEvents), so the predicate
-    // deletes every purchase row
-    locally {
-      val root = freshFam()
-      BoostQL.sqlDelete("DELETE FROM dom.events WHERE purchase.env = 'test'",
-        spark, root)
-      val after = TimeSeriesTable.open(spark, root, "dom", "events")
-      assert(after.filter(c("series") === "purchase").count() == 0)
-      assert(after.filter(c("series") === "click").count() > 0)
-    }
-    // NOT is row-level over the long rows: a series-scoped term is
-    // FALSE on other series' rows, so NOT(click > 100) deletes every
-    // non-click row too — survivors are exactly clicks above 100
-    locally {
-      val root = freshFam()
-      BoostQL.sqlDelete("DELETE FROM dom.events WHERE NOT (click > 100.0)",
-        spark, root)
-      val after = TimeSeriesTable.open(spark, root, "dom", "events")
-      assert(after.filter(c("series") =!= "click").count() == 0)
-      assert(after.count() ==
-        fam.filter(c("series") === "click" && c("value") > 100.0).count())
-    }
-    // refusal matrix for the row-level face
-    val root = freshFam()
-    def refusal(stmt: String): String =
-      intercept[Compiler.CompileException](
-        BoostQL.sqlDelete(stmt, spark, root)).getMessage
-    assert(refusal("DELETE FROM dom.events WHERE click > purchase")
-      .contains("one long row holds one series"))
-    assert(refusal("DELETE FROM dom.events WHERE click.user IN " +
-      "(SELECT purchase.user FROM dom.events)").contains("subqueries"))
-    assert(refusal("DELETE FROM dom.events WHERE click > 5.0 ORDER BY click")
-      .contains("no joins, grouping, ordering or paging"))
   }
 
   test("UPDATE: row-level masking, removal, CASE clamps and the " +
       "refusal matrix") {
-    import org.apache.spark.sql.functions.{col => c, element_at => ea}
-    def freshFam(): String = {
-      val root = java.nio.file.Files.createTempDirectory("graft-rowupd-ql").toString
-      TimeSeriesTable.append(fam, root, "dom", "events")
-      root
-    }
-    // PII mask: attribute + value in one statement; row counts hold;
-    // the predicate sees pre-update state, so a second pass is a no-op
-    locally {
+    withTempRoot("graft-rowupd-ql") { tmp =>
+      import org.apache.spark.sql.functions.{col => c, element_at => ea}
+      def freshFam(): String = {
+        val root = java.nio.file.Files.createTempDirectory(
+          java.nio.file.Paths.get(tmp), "fam").toString
+        TimeSeriesTable.append(fam, root, "dom", "events")
+        root
+      }
+      // PII mask: attribute + value in one statement; row counts hold;
+      // the predicate sees pre-update state, so a second pass is a no-op
+      locally {
+        val root = freshFam()
+        val stmt = "UPDATE dom.events SET click.user = 'REDACTED', " +
+          "click = 0.0 WHERE click.user = '3'"
+        val wasMasked = fam.filter(c("series") === "click" &&
+          ea(c("attributes"), "user") === "3").count()
+        assert(wasMasked > 0)
+        val affected = BoostQL.sqlUpdate(stmt, spark, root)
+        assert(affected.nonEmpty && affected.forall(_.startsWith("dt=")))
+        val after = TimeSeriesTable.open(spark, root, "dom", "events")
+        assert(after.count() == fam.count())
+        assert(after.filter(c("series") === "click" &&
+          ea(c("attributes"), "user") === "3").count() == 0)
+        val masked = after.filter(ea(c("attributes"), "user") === "REDACTED")
+        assert(masked.count() == wasMasked)
+        assert(masked.filter(c("value") =!= 0.0).count() == 0)
+        // idempotent: the masked rows no longer match
+        assert(BoostQL.sqlUpdate(stmt, spark, root).isEmpty)
+      }
+      // attribute REMOVAL via NULL rhs + a CASE clamp, both scoped to one
+      // series; other series keep the removed key
+      locally {
+        val root = freshFam()
+        BoostQL.sqlUpdate("UPDATE dom.events SET purchase.event_id = NULL, " +
+          "purchase = CASE WHEN purchase > 100.0 THEN 100.0 ELSE purchase END " +
+          "WHERE purchase >= 0.0", spark, root)
+        val after = TimeSeriesTable.open(spark, root, "dom", "events")
+        assert(after.filter(c("series") === "purchase" &&
+          ea(c("attributes"), "event_id").isNotNull).count() == 0)
+        assert(after.filter(c("series") === "purchase" &&
+          c("value") > 100.0).count() == 0)
+        assert(after.filter(c("series") === "click" &&
+          ea(c("attributes"), "event_id").isNotNull).count() > 0)
+        // sub-threshold values pass through the ELSE branch unchanged
+        assert(after.filter(c("series") === "purchase" &&
+            c("value") < 100.0).count() ==
+          fam.filter(c("series") === "purchase" && c("value") < 100.0).count())
+      }
+      // round(x, d) takes its scale in SET as it does in SELECT
+      locally {
+        val root = freshFam()
+        BoostQL.sqlUpdate("UPDATE dom.events SET click = round(click / 3.0, 1) " +
+          "WHERE click > 100.0", spark, root)
+        def clicks(df: org.apache.spark.sql.DataFrame) = df
+          .filter(c("series") === "click").select(c("ts"), c("value"))
+          .collect().map(r => (r.getTimestamp(0).getTime, r.getDouble(1))).sorted.toSeq
+        val want = fam.filter(c("series") === "click").select(c("ts"),
+          org.apache.spark.sql.functions.when(c("value") > 100.0,
+            org.apache.spark.sql.functions.round(c("value") / 3.0, 1))
+            .otherwise(c("value")).as("value"))
+        assert(clicks(TimeSeriesTable.open(spark, root, "dom", "events")) ==
+          clicks(want))
+      }
+      // a CASE condition is a predicate scoped on its own: `purchase > 5.0`
+      // is never true on a click row, so the SET reads click rows only and
+      // compiles; only the click > 100.0 branch changes values
+      locally {
+        val root = freshFam()
+        BoostQL.sqlUpdate("UPDATE dom.events SET click = CASE WHEN " +
+          "purchase > 5.0 OR click > 100.0 THEN 0.0 ELSE click END " +
+          "WHERE click >= 0.0", spark, root)
+        val after = TimeSeriesTable.open(spark, root, "dom", "events")
+        val clickRows = fam.filter(c("series") === "click")
+        assert(after.filter(c("series") === "click").count() == clickRows.count())
+        assert(after.filter(c("series") === "click" && c("value") > 100.0)
+          .count() == 0)
+        assert(after.filter(c("series") === "click" && c("value") === 0.0)
+          .count() == clickRows.filter(c("value") > 100.0).count())
+        assert(after.filter(c("series") === "purchase").count() ==
+          fam.filter(c("series") === "purchase").count())
+      }
+      // refusal matrix for the row-level face
       val root = freshFam()
-      val stmt = "UPDATE dom.events SET click.user = 'REDACTED', " +
-        "click = 0.0 WHERE click.user = '3'"
-      val wasMasked = fam.filter(c("series") === "click" &&
-        ea(c("attributes"), "user") === "3").count()
-      assert(wasMasked > 0)
-      val affected = BoostQL.sqlUpdate(stmt, spark, root)
-      assert(affected.nonEmpty && affected.forall(_.startsWith("dt=")))
-      val after = TimeSeriesTable.open(spark, root, "dom", "events")
-      assert(after.count() == fam.count())
-      assert(after.filter(c("series") === "click" &&
-        ea(c("attributes"), "user") === "3").count() == 0)
-      val masked = after.filter(ea(c("attributes"), "user") === "REDACTED")
-      assert(masked.count() == wasMasked)
-      assert(masked.filter(c("value") =!= 0.0).count() == 0)
-      // idempotent: the masked rows no longer match
-      assert(BoostQL.sqlUpdate(stmt, spark, root).isEmpty)
+      def refusal(stmt: String): String =
+        intercept[Compiler.CompileException](
+          BoostQL.sqlUpdate(stmt, spark, root)).getMessage
+      assert(refusal("UPDATE dom.events SET ts = " +
+        "TIMESTAMP '2024-01-01 00:00:00' WHERE click > 0.0")
+        .contains("cannot assign"))
+      assert(refusal("UPDATE dom.events SET series = 'x' WHERE click > 0.0")
+        .contains("cannot assign"))
+      assert(refusal("UPDATE dom.events SET click = purchase WHERE click > 0.0")
+        .contains("one long row holds one series"))
+      locally {
+        val m = refusal("UPDATE dom.events SET click = count(click) " +
+          "WHERE click > 0.0")
+        assert(m.contains("row-level") || m.contains("UPDATE terms support"), m)
+      }
+      assert(refusal("UPDATE dom.events SET click = 1.0, click = 2.0 " +
+        "WHERE click > 0.0").contains("duplicate"))
+      assert(refusal("UPDATE dom.events SET click = 1.0 WHERE click.user IN " +
+        "(SELECT view.user FROM dom.events)").contains("subqueries"))
+      assert(refusal("UPDATE dom.events SET click WHERE click > 0.0")
+        .contains("expected <target> = <expression>"))
+      // no WHERE at all: the shape refusal names the full grammar
+      assert(refusal("UPDATE dom.events SET click = 1.0")
+        .contains("takes exactly"))
+      assert(refusal("UPDATE dom.events SET click = 1.0 " +
+        "WHERE click > 5.0 ORDER BY click")
+        .contains("no joins, grouping, ordering or paging"))
+      // the read front points write statements at their entry points
+      assert(intercept[Compiler.CompileException](BoostQL.sql(
+          "UPDATE dom.events SET click = 1.0 WHERE click > 0.0", _ => fam))
+        .getMessage.contains("sqlUpdate"))
+      assert(intercept[Compiler.CompileException](BoostQL.sql(
+          "DELETE FROM dom.events WHERE click > 0.0", _ => fam))
+        .getMessage.contains("sqlDelete"))
     }
-    // attribute REMOVAL via NULL rhs + a CASE clamp, both scoped to one
-    // series; other series keep the removed key
-    locally {
-      val root = freshFam()
-      BoostQL.sqlUpdate("UPDATE dom.events SET purchase.event_id = NULL, " +
-        "purchase = CASE WHEN purchase > 100.0 THEN 100.0 ELSE purchase END " +
-        "WHERE purchase >= 0.0", spark, root)
-      val after = TimeSeriesTable.open(spark, root, "dom", "events")
-      assert(after.filter(c("series") === "purchase" &&
-        ea(c("attributes"), "event_id").isNotNull).count() == 0)
-      assert(after.filter(c("series") === "purchase" &&
-        c("value") > 100.0).count() == 0)
-      assert(after.filter(c("series") === "click" &&
-        ea(c("attributes"), "event_id").isNotNull).count() > 0)
-      // sub-threshold values pass through the ELSE branch unchanged
-      assert(after.filter(c("series") === "purchase" &&
-          c("value") < 100.0).count() ==
-        fam.filter(c("series") === "purchase" && c("value") < 100.0).count())
-    }
-    // refusal matrix for the row-level face
-    val root = freshFam()
-    def refusal(stmt: String): String =
-      intercept[Compiler.CompileException](
-        BoostQL.sqlUpdate(stmt, spark, root)).getMessage
-    assert(refusal("UPDATE dom.events SET ts = " +
-      "TIMESTAMP '2024-01-01 00:00:00' WHERE click > 0.0")
-      .contains("cannot assign"))
-    assert(refusal("UPDATE dom.events SET series = 'x' WHERE click > 0.0")
-      .contains("cannot assign"))
-    assert(refusal("UPDATE dom.events SET click = purchase WHERE click > 0.0")
-      .contains("one long row holds one series"))
-    locally {
-      val m = refusal("UPDATE dom.events SET click = count(click) " +
-        "WHERE click > 0.0")
-      assert(m.contains("row-level") || m.contains("UPDATE terms support"), m)
-    }
-    assert(refusal("UPDATE dom.events SET click = 1.0, click = 2.0 " +
-      "WHERE click > 0.0").contains("duplicate"))
-    assert(refusal("UPDATE dom.events SET click = 1.0 WHERE click.user IN " +
-      "(SELECT view.user FROM dom.events)").contains("subqueries"))
-    assert(refusal("UPDATE dom.events SET click WHERE click > 0.0")
-      .contains("expected <target> = <expression>"))
-    // no WHERE at all: the shape refusal names the full grammar
-    assert(refusal("UPDATE dom.events SET click = 1.0")
-      .contains("takes exactly"))
-    assert(refusal("UPDATE dom.events SET click = 1.0 " +
-      "WHERE click > 5.0 ORDER BY click")
-      .contains("no joins, grouping, ordering or paging"))
-    // the read front points write statements at their entry points
-    assert(intercept[Compiler.CompileException](BoostQL.sql(
-        "UPDATE dom.events SET click = 1.0 WHERE click > 0.0", _ => fam))
-      .getMessage.contains("sqlUpdate"))
-    assert(intercept[Compiler.CompileException](BoostQL.sql(
-        "DELETE FROM dom.events WHERE click > 0.0", _ => fam))
-      .getMessage.contains("sqlDelete"))
   }
 
   test("UPDATE: ' where ' inside a WHERE string literal stays in the " +
       "literal") {
     import org.apache.spark.sql.functions.{col => c, element_at => ea}
-    val root = java.nio.file.Files.createTempDirectory("graft-updlit").toString
-    TimeSeriesTable.append(fam, root, "dom", "events")
-    def users(u: String) = TimeSeriesTable.open(spark, root, "dom", "events")
-      .filter(c("series") === "click" && ea(c("attributes"), "user") === u)
-      .count()
-    val threes = users("3")
-    assert(threes > 0)
-    BoostQL.sqlUpdate("UPDATE dom.events SET click.user = 'a where b' " +
-      "WHERE click.user = '3'", spark, root)
-    assert(users("a where b") == threes)
-    val affected = BoostQL.sqlUpdate("UPDATE dom.events SET click.user = " +
-      "'x' WHERE click.user = 'a where b'", spark, root)
-    assert(affected.nonEmpty)
-    assert(users("x") == threes && users("a where b") == 0L)
+    withTempRoot("graft-updlit") { root =>
+      TimeSeriesTable.append(fam, root, "dom", "events")
+      def users(u: String) = TimeSeriesTable.open(spark, root, "dom", "events")
+        .filter(c("series") === "click" && ea(c("attributes"), "user") === u)
+        .count()
+      val threes = users("3")
+      assert(threes > 0)
+      BoostQL.sqlUpdate("UPDATE dom.events SET click.user = 'a where b' " +
+        "WHERE click.user = '3'", spark, root)
+      assert(users("a where b") == threes)
+      val affected = BoostQL.sqlUpdate("UPDATE dom.events SET click.user = " +
+        "'x' WHERE click.user = 'a where b'", spark, root)
+      assert(affected.nonEmpty)
+      assert(users("x") == threes && users("a where b") == 0L)
+    }
   }
 
   test("backtick-quoted names in statement heads and SET targets act " +
       "like their unquoted twins") {
-    def contents(root: String) =
-      TimeSeriesTable.open(spark, root, "dom", "events")
-        .selectExpr("series", "ts", "value", "attributes['user'] AS u")
+    withTempRoot("graft-quoted") { tmp =>
+      def contents(root: String) =
+        TimeSeriesTable.open(spark, root, "dom", "events")
+          .selectExpr("series", "ts", "value", "attributes['user'] AS u")
+          .collect().map(_.toString).sorted.toSeq
+      // each twin runs on its own fresh copy of the family
+      def run(stmt: String, verb: (String, String) => Seq[String]) = {
+        val root = java.nio.file.Files.createTempDirectory(
+          java.nio.file.Paths.get(tmp), "fam").toString
+        TimeSeriesTable.append(fam, root, "dom", "events")
+        val affected = verb(stmt, root)
+        (affected, contents(root))
+      }
+      def twins(quoted: String, plain: String,
+          verb: (String, String) => Seq[String]): Unit = {
+        val (qa, qc) = run(quoted, verb)
+        val (pa, pc) = run(plain, verb)
+        assert(qa.nonEmpty && qa == pa, s"$quoted: $qa vs $pa")
+        assert(qc == pc, quoted)
+      }
+      val update = (s: String, r: String) => BoostQL.sqlUpdate(s, spark, r)
+      val delete = (s: String, r: String) => BoostQL.sqlDelete(s, spark, r)
+      twins("UPDATE dom.events SET click.`user` = 'x' WHERE click.user = '3'",
+        "UPDATE dom.events SET click.user = 'x' WHERE click.user = '3'", update)
+      twins("UPDATE `dom`.`events` SET `click` = 0.0 WHERE click > 100.0",
+        "UPDATE dom.events SET click = 0.0 WHERE click > 100.0", update)
+      twins("DELETE FROM `dom`.events WHERE click > 100.0",
+        "DELETE FROM dom.events WHERE click > 100.0", delete)
+      twins("DELETE FROM dom.`events` WHERE `ts` < DATE '2024-01-10'",
+        "DELETE FROM dom.events WHERE ts < DATE '2024-01-10'", delete)
+      // the read statements resolve the same family and series
+      def rows(q: String) = BoostQL.sql(q, (_: (String, String)) => fam)
         .collect().map(_.toString).sorted.toSeq
-    // each twin runs on its own fresh copy of the family
-    def run(stmt: String, verb: (String, String) => Seq[String]) = {
-      val root = java.nio.file.Files.createTempDirectory("graft-quoted").toString
-      TimeSeriesTable.append(fam, root, "dom", "events")
-      val affected = verb(stmt, root)
-      (affected, contents(root))
+      assert(rows("DESCRIBE `dom`.`events`") == rows("DESCRIBE dom.events"))
+      assert(rows("OUTLIERS `purchase` K 3.0 FROM `dom`.events") ==
+        rows("OUTLIERS purchase K 3.0 FROM dom.events"))
     }
-    def twins(quoted: String, plain: String,
-        verb: (String, String) => Seq[String]): Unit = {
-      val (qa, qc) = run(quoted, verb)
-      val (pa, pc) = run(plain, verb)
-      assert(qa.nonEmpty && qa == pa, s"$quoted: $qa vs $pa")
-      assert(qc == pc, quoted)
-    }
-    val update = (s: String, r: String) => BoostQL.sqlUpdate(s, spark, r)
-    val delete = (s: String, r: String) => BoostQL.sqlDelete(s, spark, r)
-    twins("UPDATE dom.events SET click.`user` = 'x' WHERE click.user = '3'",
-      "UPDATE dom.events SET click.user = 'x' WHERE click.user = '3'", update)
-    twins("UPDATE `dom`.`events` SET `click` = 0.0 WHERE click > 100.0",
-      "UPDATE dom.events SET click = 0.0 WHERE click > 100.0", update)
-    twins("DELETE FROM `dom`.events WHERE click > 100.0",
-      "DELETE FROM dom.events WHERE click > 100.0", delete)
-    twins("DELETE FROM dom.`events` WHERE `ts` < DATE '2024-01-10'",
-      "DELETE FROM dom.events WHERE ts < DATE '2024-01-10'", delete)
-    // the read statements resolve the same family and series
-    def rows(q: String) = BoostQL.sql(q, (_: (String, String)) => fam)
-      .collect().map(_.toString).sorted.toSeq
-    assert(rows("DESCRIBE `dom`.`events`") == rows("DESCRIBE dom.events"))
-    assert(rows("OUTLIERS `purchase` K 3.0 FROM `dom`.events") ==
-      rows("OUTLIERS purchase K 3.0 FROM dom.events"))
   }
 
   test("domain and family names that are not plain directory names " +
       "refuse and touch nothing") {
-    val base = java.nio.file.Files.createTempDirectory("graft-names")
-    val root = base.resolve("wh").toString
-    TimeSeriesTable.append(fam, root, "dom", "events")
-    // a directory beside the warehouse that `..` would reach
-    val victim = java.nio.file.Files.createDirectories(
-      base.resolve("victim").resolve("events"))
-    java.nio.file.Files.write(victim.resolve("keep.txt"), Array[Byte](1))
-    def snapshot() = {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(base)
-      try walk.iterator().asScala.map(p => (base.relativize(p).toString,
-        java.nio.file.Files.getLastModifiedTime(p).toMillis)).toSeq.sorted
-      finally walk.close()
+    withTempRoot("graft-names") { dir =>
+      val base = java.nio.file.Paths.get(dir)
+      val root = base.resolve("wh").toString
+      TimeSeriesTable.append(fam, root, "dom", "events")
+      // a directory beside the warehouse that `..` would reach
+      val victim = java.nio.file.Files.createDirectories(
+        base.resolve("victim").resolve("events"))
+      java.nio.file.Files.write(victim.resolve("keep.txt"), Array[Byte](1))
+      def snapshot() = {
+        import scala.jdk.CollectionConverters._
+        val walk = java.nio.file.Files.walk(base)
+        try walk.iterator().asScala.map(p => (base.relativize(p).toString,
+          java.nio.file.Files.getLastModifiedTime(p).toMillis)).toSeq.sorted
+        finally walk.close()
+      }
+      val before = snapshot()
+      val families = (_: (String, String)) => fam
+      val q = "SELECT ts, max(click) AS m FROM dom.events GROUP BY ts"
+      // every path these would name stays inside `base`
+      for (name <- Seq("`..`.`victim`", "dom.`..`", "dom.`a/b`", "dom.`.x`",
+          "`.x`.events")) {
+        intercept[Compiler.CompileException](BoostQL.sqlDropFamily(
+          s"DROP FAMILY IF EXISTS $name", spark, root))
+        intercept[Compiler.CompileException](BoostQL.sqlCreateFamily(
+          s"CREATE OR REPLACE FAMILY $name AS $q", families, root))
+        intercept[Compiler.CompileException](BoostQL.sqlInsert(
+          s"INSERT INTO $name $q", families, root))
+      }
+      assert(snapshot() == before)
     }
-    val before = snapshot()
-    val families = (_: (String, String)) => fam
-    val q = "SELECT ts, max(click) AS m FROM dom.events GROUP BY ts"
-    // every path these would name stays inside `base`
-    for (name <- Seq("`..`.`victim`", "dom.`..`", "dom.`a/b`", "dom.`.x`",
-        "`.x`.events")) {
-      intercept[Compiler.CompileException](BoostQL.sqlDropFamily(
-        s"DROP FAMILY IF EXISTS $name", spark, root))
-      intercept[Compiler.CompileException](BoostQL.sqlCreateFamily(
-        s"CREATE OR REPLACE FAMILY $name AS $q", families, root))
-      intercept[Compiler.CompileException](BoostQL.sqlInsert(
-        s"INSERT INTO $name $q", families, root))
-    }
-    assert(snapshot() == before)
   }
 
   test("DELETE: only the retention form takes the metadata-only expire " +
@@ -541,79 +597,81 @@ class BoostQLSpec extends SparkSpec {
 
   test("INSERT INTO: SQL ingest round-trips; shape mismatches refuse") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-insert-spec").toString
-    // ingest a filtered single-series family, reopen, query back
-    BoostQL.sqlInsert(
-      "INSERT INTO dom.hot SELECT ts, click AS hot FROM dom.events " +
-        "WHERE click > 200.0",
-      _ => fam, root)
-    val reread = TimeSeriesTable.open(spark, root, "dom", "hot")
-    val got = BoostQL.sql("SELECT hot, ts FROM dom.hot", _ => reread)
-      .collect().map(_.getDouble(0)).sorted.toSeq
-    val expected = fam.filter(col("series") === "click" && col("value") > 200.0)
-      .select("value").collect().map(_.getDouble(0)).sorted.toSeq
-    assert(got == expected && got.nonEmpty)
-    // the written layout is the real family layout: date-partitioned
-    assert(reread.columns.contains("dt"))
-    // DIMENSION columns: a string column becomes a per-point attribute
-    // on every unpivoted series row — the grouped-rollup shape
-    BoostQL.sqlInsert(
-      "INSERT INTO dom.peruser SELECT bucket(ts, '1 day') AS ts, " +
-        "click.user AS u, count(*) AS n FROM dom.events " +
-        "GROUP BY bucket(ts, '1 day'), click.user",
-      _ => fam, root)
-    val perUser = TimeSeriesTable.open(spark, root, "dom", "peruser")
-    val gotDim = BoostQL.sql(
-      "SELECT ts, n.u AS u, n FROM dom.peruser", _ => perUser)
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2)))
-      .sortBy(t => (t._1.getTime, t._2)).toSeq
-    val expDim = fam.filter(col("series") === "click")
-      .groupBy(date_trunc("day", col("ts")).as("d"),
-        element_at(col("attributes"), "user").as("u"))
-      .count()
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2).toDouble))
-      .sortBy(t => (t._1.getTime, t._2)).toSeq
-    assert(gotDim == expDim && gotDim.nonEmpty)
-    def bad(stmt: String): Unit =
-      intercept[Compiler.CompileException](BoostQL.sqlInsert(stmt, _ => fam, root))
-    // no ts column → no time axis to write
-    bad("INSERT INTO dom.x SELECT click AS c FROM dom.events")
-    // dimension-only select: no numeric series column to write
-    bad("INSERT INTO dom.x SELECT ts, click.user AS u FROM dom.events")
-    // reserved layout names
-    bad("INSERT INTO dom.x SELECT ts, click AS value FROM dom.events")
-    bad("INSERT INTO dom.x SELECT ts, click AS series FROM dom.events")
-    // duplicate series names
-    bad("INSERT INTO dom.x SELECT ts, click AS c, view AS c FROM dom.events")
-    // not an INSERT shape at all
-    bad("INSERT dom.x SELECT ts, click AS c FROM dom.events")
+    withTempRoot("graft-insert-spec") { root =>
+      // ingest a filtered single-series family, reopen, query back
+      BoostQL.sqlInsert(
+        "INSERT INTO dom.hot SELECT ts, click AS hot FROM dom.events " +
+          "WHERE click > 200.0",
+        _ => fam, root)
+      val reread = TimeSeriesTable.open(spark, root, "dom", "hot")
+      val got = BoostQL.sql("SELECT hot, ts FROM dom.hot", _ => reread)
+        .collect().map(_.getDouble(0)).sorted.toSeq
+      val expected = fam.filter(col("series") === "click" && col("value") > 200.0)
+        .select("value").collect().map(_.getDouble(0)).sorted.toSeq
+      assert(got == expected && got.nonEmpty)
+      // the written layout is the real family layout: date-partitioned
+      assert(reread.columns.contains("dt"))
+      // DIMENSION columns: a string column becomes a per-point attribute
+      // on every unpivoted series row — the grouped-rollup shape
+      BoostQL.sqlInsert(
+        "INSERT INTO dom.peruser SELECT bucket(ts, '1 day') AS ts, " +
+          "click.user AS u, count(*) AS n FROM dom.events " +
+          "GROUP BY bucket(ts, '1 day'), click.user",
+        _ => fam, root)
+      val perUser = TimeSeriesTable.open(spark, root, "dom", "peruser")
+      val gotDim = BoostQL.sql(
+        "SELECT ts, n.u AS u, n FROM dom.peruser", _ => perUser)
+        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2)))
+        .sortBy(t => (t._1.getTime, t._2)).toSeq
+      val expDim = fam.filter(col("series") === "click")
+        .groupBy(date_trunc("day", col("ts")).as("d"),
+          element_at(col("attributes"), "user").as("u"))
+        .count()
+        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2).toDouble))
+        .sortBy(t => (t._1.getTime, t._2)).toSeq
+      assert(gotDim == expDim && gotDim.nonEmpty)
+      def bad(stmt: String): Unit =
+        intercept[Compiler.CompileException](BoostQL.sqlInsert(stmt, _ => fam, root))
+      // no ts column → no time axis to write
+      bad("INSERT INTO dom.x SELECT click AS c FROM dom.events")
+      // dimension-only select: no numeric series column to write
+      bad("INSERT INTO dom.x SELECT ts, click.user AS u FROM dom.events")
+      // reserved layout names
+      bad("INSERT INTO dom.x SELECT ts, click AS value FROM dom.events")
+      bad("INSERT INTO dom.x SELECT ts, click AS series FROM dom.events")
+      // duplicate series names
+      bad("INSERT INTO dom.x SELECT ts, click AS c, view AS c FROM dom.events")
+      // not an INSERT shape at all
+      bad("INSERT dom.x SELECT ts, click AS c FROM dom.events")
+    }
   }
 
   test("UPSERT INTO: idempotent SQL ingest — re-delivery replaces " +
       "instead of duplicating; shape refusals; read-front dispatch") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-upsert-spec").toString
-    val stmt = "UPSERT INTO dom.hot SELECT ts, click AS hot " +
-      "FROM dom.events WHERE click > 200.0"
-    val (r1, w1) = BoostQL.sqlUpsert(stmt, _ => fam, root)
-    assert(r1 == 0L && w1 > 0L, "first delivery inserts everything")
-    val snapshot = TimeSeriesTable.open(spark, root, "dom", "hot")
-      .select("value").collect().map(_.getDouble(0)).sorted.toSeq
-    // the INSERT verb would double the family here; UPSERT replaces
-    val (r2, w2) = BoostQL.sqlUpsert(stmt, _ => fam, root)
-    assert(r2 == w1 && w2 == w1, "re-delivery replaces its own rows")
-    val after = TimeSeriesTable.open(spark, root, "dom", "hot")
-      .select("value").collect().map(_.getDouble(0)).sorted.toSeq
-    assert(after == snapshot, "re-delivered content is unchanged")
-    // the unpivot contract is shared with INSERT — same shape refusals
-    def bad(s: String): Unit =
-      intercept[Compiler.CompileException](BoostQL.sqlUpsert(s, _ => fam, root))
-    bad("UPSERT INTO dom.x SELECT click AS c FROM dom.events")
-    bad("UPSERT dom.x SELECT ts, click AS c FROM dom.events")
-    // the read front points UPSERT at its entry point
-    assert(intercept[Compiler.CompileException](BoostQL.sql(
-        "UPSERT INTO dom.x SELECT ts, click AS c FROM dom.events", _ => fam))
-      .getMessage.contains("sqlUpsert"))
+    withTempRoot("graft-upsert-spec") { root =>
+      val stmt = "UPSERT INTO dom.hot SELECT ts, click AS hot " +
+        "FROM dom.events WHERE click > 200.0"
+      val (r1, w1) = BoostQL.sqlUpsert(stmt, _ => fam, root)
+      assert(r1 == 0L && w1 > 0L, "first delivery inserts everything")
+      val snapshot = TimeSeriesTable.open(spark, root, "dom", "hot")
+        .select("value").collect().map(_.getDouble(0)).sorted.toSeq
+      // the INSERT verb would double the family here; UPSERT replaces
+      val (r2, w2) = BoostQL.sqlUpsert(stmt, _ => fam, root)
+      assert(r2 == w1 && w2 == w1, "re-delivery replaces its own rows")
+      val after = TimeSeriesTable.open(spark, root, "dom", "hot")
+        .select("value").collect().map(_.getDouble(0)).sorted.toSeq
+      assert(after == snapshot, "re-delivered content is unchanged")
+      // the unpivot contract is shared with INSERT — same shape refusals
+      def bad(s: String): Unit =
+        intercept[Compiler.CompileException](BoostQL.sqlUpsert(s, _ => fam, root))
+      bad("UPSERT INTO dom.x SELECT click AS c FROM dom.events")
+      bad("UPSERT dom.x SELECT ts, click AS c FROM dom.events")
+      // the read front points UPSERT at its entry point
+      assert(intercept[Compiler.CompileException](BoostQL.sql(
+          "UPSERT INTO dom.x SELECT ts, click AS c FROM dom.events", _ => fam))
+        .getMessage.contains("sqlUpsert"))
+    }
   }
 
   test("approx_percentile: exact below k, HAVING reuse, refusals") {
@@ -935,6 +993,24 @@ class BoostQLSpec extends SparkSpec {
     assert(got.exists(!_.endsWith("|null")), "some purchases should match")
   }
 
+  test("a scalar subquery inside window arguments attaches before the " +
+      "projection") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col => c, max, sum}
+    val got = BoostQL.sql("SELECT click, sum(click + (SELECT max(purchase) " +
+      "FROM dom.events)) OVER (ORDER BY ts) AS w FROM dom.events", _ => fam)
+    val top = fam.filter(c("series") === "purchase").agg(max("value")).head().getDouble(0)
+    val want = fam.filter(c("series") === "click").select(c("value"),
+      sum(c("value") + top).over(Window.orderBy("ts")))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getDouble(1), r.getDouble(0))).sorted.toSeq
+    val (g, w) = (rows(got), rows(want))
+    assert(g.nonEmpty && g.length == w.length)
+    g.zip(w).foreach { case ((gw, gc), (ww, wc)) =>
+      assert(gc == wc && math.abs(gw - ww) <= 1e-9 * math.abs(ww), (gw, ww))
+    }
+  }
+
   test("parser rejects malformed input") {
     intercept[Parser.ParseException](Parser.parse("SELECT FROM dom.fam"))
     intercept[Parser.ParseException](Parser.parse("SELECT cpu FROM fam"))
@@ -1012,16 +1088,17 @@ class BoostQLSpec extends SparkSpec {
     // stats pushdown by construction — families written by our own
     // layout carry a native timestamp, where the bound must push down
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-tsq").toString
-    TimeSeriesTable.append(fam, root, "dom", "events")
-    val stored = TimeSeriesTable.open(spark, "" + root, "dom", "events")
-    val df = Compiler.compile(Parser.parse(
-      "SELECT click, ts FROM dom.events " +
-        "WHERE ts >= '2024-01-10 00:00:00' AND ts < '2024-01-12 00:00:00'"), stored)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("GreaterThanOrEqual(ts"),
-      s"ts bound should reach parquet as a pushed filter:\n$plan")
-    assert(df.count() > 0)
+    withTempRoot("graft-tsq") { root =>
+      TimeSeriesTable.append(fam, root, "dom", "events")
+      val stored = TimeSeriesTable.open(spark, "" + root, "dom", "events")
+      val df = Compiler.compile(Parser.parse(
+        "SELECT click, ts FROM dom.events " +
+          "WHERE ts >= '2024-01-10 00:00:00' AND ts < '2024-01-12 00:00:00'"), stored)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("GreaterThanOrEqual(ts"),
+        s"ts bound should reach parquet as a pushed filter:\n$plan")
+      assert(df.count() > 0)
+    }
   }
 
   test("compiler: attribute miss falls back to series tag") {
@@ -2553,28 +2630,29 @@ class BoostQLSpec extends SparkSpec {
   test("SHOW PARTITIONS: metadata inventory matches the written layout; " +
       "read front and malformed shapes refuse") {
     import org.apache.spark.sql.functions.{col => c, to_date}
-    val root = java.nio.file.Files.createTempDirectory("graft-showp").toString
-    TimeSeriesTable.append(fam, root, "dom", "events")
-    val inv = BoostQL.sqlShowPartitions("SHOW PARTITIONS dom.events", spark, root)
-    val got = inv.collect().map(r =>
-      (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    assert(got.nonEmpty && got.forall(_._1.startsWith("dt=")))
-    // footer row totals equal the data's per-date counts
-    val expect = fam.groupBy(to_date(c("ts")).cast("string").as("d")).count()
-      .collect().map(r => ("dt=" + r.getString(0)) -> r.getLong(1)).toMap
-    assert(got.map(t => t._1 -> t._4).toMap == expect)
-    // bytes and file counts are positive on every partition
-    assert(got.forall(t => t._2 > 0 && t._3 > 0))
-    // a family that does not exist lists as empty, not an error
-    assert(BoostQL.sqlShowPartitions(
-      "SHOW PARTITIONS dom.nothing", spark, root).isEmpty)
-    // the read front points at the warehouse entry point
-    assert(intercept[Compiler.CompileException](BoostQL.sql(
-        "SHOW PARTITIONS dom.events", _ => fam))
-      .getMessage.contains("sqlShowPartitions"))
-    // malformed shape refuses
-    intercept[Compiler.CompileException](BoostQL.sqlShowPartitions(
-      "SHOW PARTITIONS events", spark, root))
+    withTempRoot("graft-showp") { root =>
+      TimeSeriesTable.append(fam, root, "dom", "events")
+      val inv = BoostQL.sqlShowPartitions("SHOW PARTITIONS dom.events", spark, root)
+      val got = inv.collect().map(r =>
+        (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      assert(got.nonEmpty && got.forall(_._1.startsWith("dt=")))
+      // footer row totals equal the data's per-date counts
+      val expect = fam.groupBy(to_date(c("ts")).cast("string").as("d")).count()
+        .collect().map(r => ("dt=" + r.getString(0)) -> r.getLong(1)).toMap
+      assert(got.map(t => t._1 -> t._4).toMap == expect)
+      // bytes and file counts are positive on every partition
+      assert(got.forall(t => t._2 > 0 && t._3 > 0))
+      // a family that does not exist lists as empty, not an error
+      assert(BoostQL.sqlShowPartitions(
+        "SHOW PARTITIONS dom.nothing", spark, root).isEmpty)
+      // the read front points at the warehouse entry point
+      assert(intercept[Compiler.CompileException](BoostQL.sql(
+          "SHOW PARTITIONS dom.events", _ => fam))
+        .getMessage.contains("sqlShowPartitions"))
+      // malformed shape refuses
+      intercept[Compiler.CompileException](BoostQL.sqlShowPartitions(
+        "SHOW PARTITIONS events", spark, root))
+    }
   }
 
   test("holt_winters: seasonal smoothing learns a planted cycle, " +

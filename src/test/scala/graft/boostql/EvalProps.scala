@@ -1,0 +1,159 @@
+package graft.boostql
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
+import org.scalacheck.{Gen, Properties, Test}
+import org.scalacheck.Prop.forAllNoShrink
+
+import graft.SparkSpec
+import graft.sources.TimeSeriesTable
+
+/** Answer checks for the expression evaluator's scopes. Each scope must
+  * mean what the batch compiler means:
+  *  - the mutate verbs' long-row scope: over a one-series family a row
+  *    predicate keeps exactly the rows SELECT … WHERE keeps;
+  *  - the streaming aggregate's output-name scope: a streaming HAVING
+  *    (and an expression item beside it) finalizes the rows batch
+  *    HAVING returns.
+  * The predicates span field, attribute and `ts` references, literals,
+  * arithmetic, INTERVAL, CAST, CASE, IN, BETWEEN, LIKE, IS [NOT] NULL
+  * and the scalar builtins, `round(x, d)` included. Values are exact
+  * binary fractions, so sums do not depend on the order Spark adds in.
+  * Each sample checks several predicates with one Spark job a side (one
+  * stream per sample), which keeps the suite under 20 s in a warm JVM.
+  */
+object EvalProps extends Properties("boostql.eval") {
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    p.withMinSuccessfulTests(4)
+
+  private lazy val spark = new SparkSpec {}.spark
+
+  /** One series `cpu`: 48 points 97 s apart from 2024-01-01, some null
+    * values, a `host` attribute on most points. */
+  private lazy val fam: DataFrame = {
+    import org.apache.spark.sql.functions._
+    val rows = (0 until 48).map { i =>
+      (new java.sql.Timestamp(1704067200000L + i * 97000L),
+        if (i % 11 == 5) None else Some((i * 7 % 23) * 0.5),
+        if (i % 7 == 3) None else Some(s"h${i % 3}"))
+    }
+    spark.createDataFrame(rows).toDF("ts", "value", "host")
+      .select(lit("cpu").as("series"), col("ts"), col("value"),
+        when(col("host").isNull, map().cast("map<string,string>"))
+          .otherwise(map(lit("host"), col("host"))).as("attributes"),
+        map().cast("map<string,string>").as("tags"))
+  }
+
+  private val num: Gen[String] = Gen.oneOf(
+    "cpu", "cpu * 2.0", "cpu + 1", "-cpu", "round(cpu * 1.37, 1)",
+    "round(cpu, 0)", "abs(cpu - 5.0)", "CAST(cpu AS int)", "floor(cpu)",
+    "coalesce(cpu, -1.0)", "length(cpu.host)", "greatest(cpu, 3.0)",
+    "CASE WHEN cpu > 5.0 THEN cpu ELSE 0.0 END",
+    "CASE WHEN cpu.host = 'h1' THEN 1 WHEN cpu IS NULL THEN 2 END",
+    "minute(ts)", "2.5", "7", "-1.0")
+  private val str: Gen[String] = Gen.oneOf(
+    "cpu.host", "upper(cpu.host)", "concat(cpu.host, 'x')",
+    "CAST(CAST(cpu AS int) AS string)", "'h1'")
+  private val time: Gen[String] = Gen.oneOf(
+    "ts", "ts + INTERVAL '10 minutes'", "ts - INTERVAL '1 hour'",
+    "TIMESTAMP '2024-01-01 00:30:00'")
+  private val op: Gen[String] = Gen.oneOf("=", "!=", "<", "<=", ">", ">=")
+
+  private val leaf: Gen[String] = Gen.oneOf(
+    for (a <- num; o <- op; b <- num) yield s"$a $o $b",
+    for (a <- str; o <- Gen.oneOf("=", "!=", "<"); b <- str) yield s"$a $o $b",
+    for (a <- time; o <- op; b <- time) yield s"$a $o $b",
+    for (a <- num; n <- Gen.oneOf("", "NOT ")) yield s"$a ${n}BETWEEN 2.0 AND 7.5",
+    for (a <- num; n <- Gen.oneOf("", "NOT ")) yield s"$a ${n}IN (1.5, 3.0, 4, 7.5)",
+    for (a <- str; n <- Gen.oneOf("", "NOT ")) yield s"$a ${n}IN ('h0', 'H2', '3')",
+    for (a <- str; n <- Gen.oneOf("", "NOT "); p <- Gen.oneOf("'h%'", "'%1'", "'_2%'"))
+      yield s"$a ${n}LIKE $p",
+    for (a <- Gen.oneOf(num, str); n <- Gen.oneOf("", "NOT ")) yield s"$a IS ${n}NULL")
+
+  private def pred(depth: Int): Gen[String] =
+    if (depth == 0) leaf
+    else Gen.frequency(
+      3 -> leaf,
+      1 -> (for (a <- pred(depth - 1); b <- pred(depth - 1)) yield s"($a AND $b)"),
+      1 -> (for (a <- pred(depth - 1); b <- pred(depth - 1)) yield s"($a OR $b)"),
+      1 -> pred(depth - 1).map(a => s"NOT ($a)"))
+
+  property("long-row scope keeps the rows SELECT … WHERE keeps") =
+    forAllNoShrink(Gen.listOfN(12, pred(2))) { ps =>
+      import org.apache.spark.sql.functions.{count, lit, sum, when}
+      val queries = ps.map(p => s"SELECT ts, cpu FROM dom.f WHERE $p")
+      val selected = queries
+        .map(q => BoostQL.sql(q, (_: (String, String)) => fam).agg(count(lit(1))))
+        .reduce(_ union _).collect().map(_.getLong(0)).toSeq
+      val long = fam.select(queries.map { q =>
+        val kept = new BoostQL.LongRow("DELETE").predicate(Parser.parse(q).where.get)
+        sum(when(kept, 1L).otherwise(0L))
+      }: _*).head().toSeq.map(_.asInstanceOf[Long])
+      ps.zip(selected.zip(long)).foreach { case (p, (a, b)) =>
+        if (a != b) println(s"EVALPROP $p: SELECT $a rows, long rows $b")
+      }
+      selected == long
+    }
+
+  // ---- the streaming aggregate's output-name scope ----
+
+  private lazy val root: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-evalprops")
+    TimeSeriesTable.append(fam, dir.toString, "dom", "f")
+    // scheduled after the write, so every file in the tree is covered
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(dir.toFile)
+    dir.toString
+  }
+
+  private val aggNum: Gen[String] = Gen.oneOf(
+    "n", "s", "d / 600", "sum(cpu)", "max(cpu)", "min(cpu)", "avg(cpu)",
+    "count(cpu)", "round(sum(cpu), 1)", "round(avg(cpu), 2)", "n * 2",
+    "s - n", "abs(s - 20.0)", "CASE WHEN n > 3 THEN s ELSE 0.0 END",
+    "coalesce(max(cpu), 0.0)", "e", "2.5", "10")
+  /** Aggregate operands for expression items, which (unlike HAVING)
+    * cannot name select outputs. */
+  private val aggOnly: Gen[String] = Gen.oneOf(
+    "sum(cpu)", "max(cpu)", "min(cpu)", "avg(cpu)", "count(cpu)",
+    "round(sum(cpu), 1)", "round(avg(cpu), 2)", "max(cpu) - min(cpu)",
+    "coalesce(min(cpu), 0.0)", "CASE WHEN count(cpu) > 3 THEN sum(cpu) ELSE 0.0 END",
+    "2.5", "10")
+  private def having(operand: Gen[String]): Gen[String] = {
+    val leafH = Gen.oneOf(
+      for (a <- operand; o <- op; b <- operand) yield s"$a $o $b",
+      for (a <- operand; n <- Gen.oneOf("", "NOT ")) yield s"$a ${n}BETWEEN 4 AND 30.5",
+      for (a <- operand; n <- Gen.oneOf("", "NOT ")) yield s"$a ${n}IN (5, 6, 7)",
+      for (a <- operand; n <- Gen.oneOf("", "NOT ")) yield s"$a IS ${n}NULL",
+      for (a <- operand; p <- Gen.oneOf("'1%'", "'%5'")) yield s"CAST($a AS string) LIKE $p")
+    Gen.frequency(
+      3 -> leafH,
+      1 -> (for (a <- leafH; b <- leafH) yield s"($a AND $b)"),
+      1 -> (for (a <- leafH; b <- leafH) yield s"($a OR NOT ($b))"))
+  }
+
+  /** An expression item over a predicate: it must hold an aggregate to
+    * stream, so the THEN branch is one. */
+  private val predItem: Gen[String] =
+    having(aggOnly).map(p => s"CASE WHEN $p THEN count(*) ELSE -1 END")
+
+  property("streaming HAVING finalizes the rows batch HAVING returns") =
+    forAllNoShrink(having(aggNum), Gen.listOfN(4, predItem)) { (h, items) =>
+      val q = "SELECT CAST(bucket(ts, '10 minutes') AS int) AS d, " +
+        "count(*) AS n, sum(cpu) AS s, round(sum(cpu), 1) + 0.5 AS e" +
+        items.zipWithIndex.map { case (it, i) => s", $it AS b$i" }.mkString +
+        s" FROM dom.f GROUP BY d HAVING $h"
+      val batch = BoostQL.sql(q,
+          (_: (String, String)) => TimeSeriesTable.open(spark, root, "dom", "f"))
+        .orderBy("d").collect().toSeq
+      val sink = "evalprops_" + java.util.UUID.randomUUID.toString.replace("-", "")
+      BoostQL.sqlStream(q,
+          _ => TimeSeriesTable.openStream(spark, root, "dom", "f"), "1 day")
+        .writeStream.format("memory").queryName(sink).outputMode("complete")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      val streamed = spark.table(sink).orderBy("d").collect().toSeq
+      spark.sql(s"DROP VIEW IF EXISTS $sink")
+      if (streamed != batch) println(s"EVALPROP $q: " +
+        s"stream ${streamed.length} rows, batch ${batch.length} rows")
+      streamed == batch
+    }
+}

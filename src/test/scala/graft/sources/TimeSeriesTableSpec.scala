@@ -317,95 +317,98 @@ class TimeSeriesTableSpec extends SparkSpec {
 
   test("deleteRows rewrites only matching partitions; untouched " +
       "partitions stay byte-identical") {
-    val root = Files.createTempDirectory("graft-rowdel").toString
-    val fam = TimeSeriesTable.fromEvents(Tables.events(spark, sfDir))
-    TimeSeriesTable.append(fam, root, "dom", "events")
-    val before = TimeSeriesTable.open(spark, root, "dom", "events")
-    val dts = before.select(to_date(col("ts")).as("d")).distinct()
-      .orderBy("d").collect().map(_.getDate(0).toString).toSeq
-    assert(dts.size >= 2, "need at least two date partitions")
-    // bound the delete to the FIRST date so every other partition is
-    // untouched — and snapshot those partitions' bytes before
-    val target = dts.head
-    val untouched = dts.tail
-    val digestsBefore = untouched.map(d =>
-      d -> partitionDigests(s"$root/dom/events/dt=$d")).toMap
-    val pred = col("series") === "purchase" &&
-      to_date(col("ts")) === lit(target)
-    val matchCnt = before.filter(pred).count()
-    assert(matchCnt > 0, s"no purchases on $target — pick another date")
-    val total = before.count()
-    def sig(df: org.apache.spark.sql.DataFrame) =
-      df.groupBy("series").agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).as("s"))
-        .orderBy("series").collect().toSeq
-    // survivors' expected signature, materialized BEFORE the swap (the
-    // `before` frame is pinned to the pre-delete file listing)
-    val expectSig = sig(before.filter(!coalesce(pred, lit(false))))
-    val (deleted, affected) =
-      TimeSeriesTable.deleteRows(spark, root, "dom", "events", pred)
-    assert(deleted == matchCnt)
-    assert(affected == Seq(s"dt=$target"))
-    // untouched partitions: same files, same bytes
-    untouched.foreach { d =>
-      assert(partitionDigests(s"$root/dom/events/dt=$d") ==
-        digestsBefore(d), s"dt=$d should be byte-identical")
+    withTempRoot("graft-rowdel") { root =>
+      val fam = TimeSeriesTable.fromEvents(Tables.events(spark, sfDir))
+      TimeSeriesTable.append(fam, root, "dom", "events")
+      val before = TimeSeriesTable.open(spark, root, "dom", "events")
+      val dts = before.select(to_date(col("ts")).as("d")).distinct()
+        .orderBy("d").collect().map(_.getDate(0).toString).toSeq
+      assert(dts.size >= 2, "need at least two date partitions")
+      // bound the delete to the FIRST date so every other partition is
+      // untouched — and snapshot those partitions' bytes before
+      val target = dts.head
+      val untouched = dts.tail
+      val digestsBefore = untouched.map(d =>
+        d -> partitionDigests(s"$root/dom/events/dt=$d")).toMap
+      val pred = col("series") === "purchase" &&
+        to_date(col("ts")) === lit(target)
+      val matchCnt = before.filter(pred).count()
+      assert(matchCnt > 0, s"no purchases on $target — pick another date")
+      val total = before.count()
+      def sig(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy("series").agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,2)")).as("s"))
+          .orderBy("series").collect().toSeq
+      // survivors' expected signature, materialized BEFORE the swap (the
+      // `before` frame is pinned to the pre-delete file listing)
+      val expectSig = sig(before.filter(!coalesce(pred, lit(false))))
+      val (deleted, affected) =
+        TimeSeriesTable.deleteRows(spark, root, "dom", "events", pred)
+      assert(deleted == matchCnt)
+      assert(affected == Seq(s"dt=$target"))
+      // untouched partitions: same files, same bytes
+      untouched.foreach { d =>
+        assert(partitionDigests(s"$root/dom/events/dt=$d") ==
+          digestsBefore(d), s"dt=$d should be byte-identical")
+      }
+      val after = TimeSeriesTable.open(spark, root, "dom", "events")
+      assert(after.count() == total - matchCnt)
+      assert(after.filter(pred).count() == 0, "matching rows must be gone")
+      // survivors intact: per-series signature of the reread family
+      // equals the source minus the matches
+      assert(sig(after) == expectSig)
+      assertNoScratch(root, "events")
     }
-    val after = TimeSeriesTable.open(spark, root, "dom", "events")
-    assert(after.count() == total - matchCnt)
-    assert(after.filter(pred).count() == 0, "matching rows must be gone")
-    // survivors intact: per-series signature of the reread family
-    // equals the source minus the matches
-    assert(sig(after) == expectSig)
-    assertNoScratch(root, "events")
   }
 
   test("deleteRows drops a partition whose every row matches, and " +
       "no-ops cleanly on zero matches") {
-    val root = Files.createTempDirectory("graft-rowdel2").toString
-    val fam = TimeSeriesTable.fromEvents(Tables.events(spark, sfDir))
-    TimeSeriesTable.append(fam, root, "dom", "events")
-    val before = TimeSeriesTable.open(spark, root, "dom", "events")
-    val target = before.select(to_date(col("ts")).as("d")).distinct()
-      .orderBy("d").collect().map(_.getDate(0).toString).head
-    // zero matches: nothing moves, nothing is written
-    val (zero, none) = TimeSeriesTable.deleteRows(spark, root, "dom",
-      "events", col("series") === "no_such_series")
-    assert(zero == 0L && none.isEmpty)
-    // whole-partition match: the dt dir disappears
-    val wholeDay = to_date(col("ts")) === lit(target)
-    val dayCnt = before.filter(wholeDay).count()
-    val (deleted, affected) =
-      TimeSeriesTable.deleteRows(spark, root, "dom", "events", wholeDay)
-    assert(deleted == dayCnt)
-    assert(affected == Seq(s"dt=$target"))
-    assert(!new java.io.File(s"$root/dom/events/dt=$target").exists(),
-      "fully-deleted partition should disappear")
-    val after = TimeSeriesTable.open(spark, root, "dom", "events")
-    assert(after.filter(to_date(col("ts")) === lit(target)).count() == 0)
+    withTempRoot("graft-rowdel2") { root =>
+      val fam = TimeSeriesTable.fromEvents(Tables.events(spark, sfDir))
+      TimeSeriesTable.append(fam, root, "dom", "events")
+      val before = TimeSeriesTable.open(spark, root, "dom", "events")
+      val target = before.select(to_date(col("ts")).as("d")).distinct()
+        .orderBy("d").collect().map(_.getDate(0).toString).head
+      // zero matches: nothing moves, nothing is written
+      val (zero, none) = TimeSeriesTable.deleteRows(spark, root, "dom",
+        "events", col("series") === "no_such_series")
+      assert(zero == 0L && none.isEmpty)
+      // whole-partition match: the dt dir disappears
+      val wholeDay = to_date(col("ts")) === lit(target)
+      val dayCnt = before.filter(wholeDay).count()
+      val (deleted, affected) =
+        TimeSeriesTable.deleteRows(spark, root, "dom", "events", wholeDay)
+      assert(deleted == dayCnt)
+      assert(affected == Seq(s"dt=$target"))
+      assert(!new java.io.File(s"$root/dom/events/dt=$target").exists(),
+        "fully-deleted partition should disappear")
+      val after = TimeSeriesTable.open(spark, root, "dom", "events")
+      assert(after.filter(to_date(col("ts")) === lit(target)).count() == 0)
+    }
   }
 
   test("deleteRows keeps rows where the predicate is NULL (ANSI DELETE)") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-rowdel3").toString
-    val rows = Seq(
-      ("cpu", Timestamp.valueOf("2024-01-01 01:00:00"), 10.0, Some("a")),
-      ("cpu", Timestamp.valueOf("2024-01-01 02:00:00"), 20.0, None),
-      ("cpu", Timestamp.valueOf("2024-01-01 03:00:00"), 30.0, Some("b"))
-    ).toDF("series", "ts", "value", "k")
-      .withColumn("tags", map().cast("map<string,string>"))
-      .withColumn("attributes",
-        when(col("k").isNotNull, map(lit("key"), col("k"))))
-      .drop("k")
-    TimeSeriesTable.append(rows, root, "dom", "m")
-    // attributes['key'] = 'a' is NULL on the attribute-less row — that
-    // row must SURVIVE (DELETE removes only predicate-TRUE rows)
-    val (deleted, _) = TimeSeriesTable.deleteRows(spark, root, "dom", "m",
-      element_at(col("attributes"), "key") === "a")
-    assert(deleted == 1L)
-    val vals = TimeSeriesTable.open(spark, root, "dom", "m")
-      .select("value").collect().map(_.getDouble(0)).toSeq.sorted
-    assert(vals == Seq(20.0, 30.0))
+    withTempRoot("graft-rowdel3") { root =>
+      val rows = Seq(
+        ("cpu", Timestamp.valueOf("2024-01-01 01:00:00"), 10.0, Some("a")),
+        ("cpu", Timestamp.valueOf("2024-01-01 02:00:00"), 20.0, None),
+        ("cpu", Timestamp.valueOf("2024-01-01 03:00:00"), 30.0, Some("b"))
+      ).toDF("series", "ts", "value", "k")
+        .withColumn("tags", map().cast("map<string,string>"))
+        .withColumn("attributes",
+          when(col("k").isNotNull, map(lit("key"), col("k"))))
+        .drop("k")
+      TimeSeriesTable.append(rows, root, "dom", "m")
+      // attributes['key'] = 'a' is NULL on the attribute-less row — that
+      // row must SURVIVE (DELETE removes only predicate-TRUE rows)
+      val (deleted, _) = TimeSeriesTable.deleteRows(spark, root, "dom", "m",
+        element_at(col("attributes"), "key") === "a")
+      assert(deleted == 1L)
+      val vals = TimeSeriesTable.open(spark, root, "dom", "m")
+        .select("value").collect().map(_.getDouble(0)).toSeq.sorted
+      assert(vals == Seq(20.0, 30.0))
+    }
   }
 
   test("updateRows rewrites values and attributes in place; untouched " +
@@ -1040,31 +1043,41 @@ class TimeSeriesTableSpec extends SparkSpec {
       "parquet scan") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    val root = Files.createTempDirectory("graft-mutate-push").toString
-    TimeSeriesTable.append(mkRows(smallFamily), root, "dom", "m")
-    // the PushedFilters list of every scan in the queries `call` ran
-    def pushed(call: => Any): Seq[String] = {
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val listener = new QueryExecutionListener {
-        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          plans.add(qe.executedPlan.toString)
-        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    withTempRoot("graft-mutate-push") { root =>
+      TimeSeriesTable.append(mkRows(smallFamily), root, "dom", "m")
+      // the PushedFilters list of every scan in the queries `call` ran
+      def pushed(call: => Any): Seq[String] = {
+        val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val listener = new QueryExecutionListener {
+          def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+            plans.add(qe.executedPlan.toString)
+          def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+        }
+        spark.listenerManager.register(listener)
+        try {
+          call
+          org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+        } finally spark.listenerManager.unregister(listener)
+        import scala.jdk.CollectionConverters._
+        plans.asScala.toSeq.flatMap(
+          "PushedFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(_).map(_.group(1)))
       }
-      spark.listenerManager.register(listener)
-      try {
-        call
-        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      } finally spark.listenerManager.unregister(listener)
-      import scala.jdk.CollectionConverters._
-      plans.asScala.toSeq.flatMap(
-        "PushedFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(_).map(_.group(1)))
+      val del = pushed(TimeSeriesTable.deleteRows(spark, root, "dom", "m",
+        col("series") === "cpu" && col("value") > 4.0))
+      assert(del.exists(_.contains("EqualTo(series,cpu)")), del)
+      val upd = pushed(TimeSeriesTable.updateRows(spark, root, "dom", "m",
+        col("series") === "mem" && col("value") > 4.0,
+        Seq(("mem", None, lit(0.0)))))
+      assert(upd.exists(_.contains("EqualTo(series,mem)")), upd)
+      // the statement forms: the mutate verbs' long-row scope compiles
+      // `cpu > …` to the same series-scoped Column, so the same filter
+      // reaches the scan
+      val sqlDel = pushed(graft.boostql.BoostQL.sqlDelete(
+        "DELETE FROM dom.m WHERE cpu > 0.5", spark, root))
+      assert(sqlDel.exists(_.contains("EqualTo(series,cpu)")), sqlDel)
+      val sqlUpd = pushed(graft.boostql.BoostQL.sqlUpdate(
+        "UPDATE dom.m SET mem = 1.0 WHERE mem > 1.5", spark, root))
+      assert(sqlUpd.exists(_.contains("EqualTo(series,mem)")), sqlUpd)
     }
-    val del = pushed(TimeSeriesTable.deleteRows(spark, root, "dom", "m",
-      col("series") === "cpu" && col("value") > 4.0))
-    assert(del.exists(_.contains("EqualTo(series,cpu)")), del)
-    val upd = pushed(TimeSeriesTable.updateRows(spark, root, "dom", "m",
-      col("series") === "mem" && col("value") > 4.0,
-      Seq(("mem", None, lit(0.0)))))
-    assert(upd.exists(_.contains("EqualTo(series,mem)")), upd)
   }
 }

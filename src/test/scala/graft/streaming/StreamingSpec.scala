@@ -247,6 +247,20 @@ class StreamingSpec extends SparkSpec {
     assert(streamedH == batchH && streamedH.nonEmpty)
     assert(spark.table(sink3).columns.toSeq == Seq("d", "n", "cents"),
       "hidden HAVING aggregates must not leak into the output schema")
+    // round(x, d) and LIKE in a streaming HAVING compile through the
+    // batch compiler's evaluator and finalize the rows batch returns
+    val qr = q + " HAVING round(sum(click), 1) > 300.0 AND " +
+      "CAST(n AS string) NOT LIKE '1'"
+    val sink4 = "graft_sqlwin_round_" + java.util.UUID.randomUUID.toString.replace("-", "")
+    graft.boostql.BoostQL.sqlStream(qr, _ => stream, "1 day")
+      .writeStream.format("memory").queryName(sink4)
+      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    val batchR = graft.boostql.BoostQL.sql(qr,
+        _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
+      .orderBy("d").collect().toSeq
+    assert(spark.table(sink4).orderBy("d").collect().toSeq == batchR &&
+      batchR.nonEmpty && batchR.length < batch.length)
 
     // refusal matrix: every clause and every non-streaming-safe shape
     // refuses at COMPILE time with the 3-arg overload too

@@ -119,6 +119,27 @@ class TablesContractSpec extends SparkSpec {
       .eventsMaxTsMicros(spark, tmp("statsempty")).isEmpty)
   }
 
+  test("ParquetStats.schema equals the inferred schema for the fixtures " +
+      "and every ts unit") {
+    def inferred(p: String) = spark.read.parquet(p).schema
+    for (t <- Seq("events", "documents")) {
+      val p = s"$sfDir/$t.parquet"
+      assert(graft.util.ParquetStats.schema(spark, p) == inferred(p), p)
+    }
+    // Spark-written directories: part files beside _SUCCESS and .crc
+    // files, with the Spark schema stored in each footer
+    withTempRoot("graft-contract-schema") { dir =>
+      Seq(("long", col("us") * lit(1000L), LongType),
+        ("ntz", timestamp_micros(col("us")).cast(TimestampNTZType), TimestampNTZType),
+        ("int96", timestamp_micros(col("us")), TimestampType)).foreach {
+        case (tag, ts, ty) =>
+          writeEvents(s"$dir/$tag", ts, ty)
+          val p = s"$dir/$tag/events.parquet"
+          assert(graft.util.ParquetStats.schema(spark, p) == inferred(p), tag)
+      }
+    }
+  }
+
   test("the session contract lives in GraftSession: pin restores it, and no other file builds a session") {
     import org.apache.spark.sql.internal.SQLConf
     val tz = SQLConf.SESSION_LOCAL_TIMEZONE.key

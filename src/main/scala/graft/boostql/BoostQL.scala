@@ -1,6 +1,7 @@
 package graft.boostql
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.functions.{coalesce, col, element_at, lit}
 
 import scala.reflect.ClassTag
@@ -548,9 +549,8 @@ object BoostQL {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.streaming.Trigger
     val Ast.Insert(t, q) = parseAs[Ast.Insert](stmt, "insert")
-    val df = watermark.fold(streamQuery(q, families))(d =>
-      streamAggregate(q, families, d))
-    val long = insertLong(df).withColumn("dt", to_date(col("ts")))
+    val long = insertLong(streamQuery(q, families, watermark))
+      .withColumn("dt", to_date(col("ts")))
     long.writeStream
       .format("parquet")
       .option("path", s"$root/${t.domain}/${t.family}")
@@ -710,158 +710,183 @@ object BoostQL {
 
   /** The SQL front over a STREAM: compile a dialect query against
     * streaming family frames ([[TimeSeriesTable.openStream]]) — the
-    * continuous-query face of the reference's north star. The supported
-    * subset is the STATELESS tier: projection, scalar expressions, and
-    * WHERE over a single series — exactly what runs incrementally with
-    * no state store and no output-mode caveats; everything stateful
-    * (aggregation, windows, multi-series alignment joins, ordering)
-    * refuses at compile time with a pointer to the watermarked
-    * StreamingOps tier, rather than failing at stream start.
-    * Validation is two-layer: clause shapes on the AST, then a logical-
-    * plan sweep (Join/Aggregate/Window/Sort) that also catches plans
-    * reached indirectly — the multi-series exact-ts align, subquery
-    * broadcasts.
+    * continuous-query face of the reference's north star. Every shape
+    * outside the ones below refuses at compile time, with its reason,
+    * instead of failing at stream start.
+    *
+    * Without a watermark, the STATELESS tier: projection, scalar
+    * expressions and WHERE over a single series — what runs
+    * incrementally with no state store and no output-mode caveats.
+    *
+    * With `watermarkDelay` (the overload below), three stateful shapes:
+    *  - the CONTINUOUS AGGREGATE: `SELECT [CAST(]bucket(ts, '<width>'[,
+    *    '<slide>'])[ AS int)] AS b[, key…], agg(x) AS a… FROM dom.f
+    *    [WHERE …] GROUP BY b[, key…] [HAVING …]`, or `session(ts,
+    *    '<gap>')` as the time key beside at least one plain key (the
+    *    engine cannot merge one global session). It compiles to
+    *    `withWatermark(ts) → groupBy(window(ts, …) | session_window(ts,
+    *    …), keys…) → agg`, the engine-recognized event-time window with
+    *    `bucket()`'s epoch alignment, NOT a groupBy over opaque
+    *    timestamp arithmetic: that is what lets the watermark evict
+    *    finalized windows and append mode emit them. Widths, slides and
+    *    gaps are fixed (calendar widths refuse; a slide divides the
+    *    width). Aggregates are aliased count/sum/avg/min/max,
+    *    approx_top_k and histogram — mergeable, bounded state — and
+    *    arithmetic over them (the corr/regr desugar); count(DISTINCT),
+    *    median, percentiles and sketches refuse. HAVING and aggregate
+    *    expressions apply statelessly to the finalized rows (aggregates
+    *    only they name are computed hidden and dropped);
+    *  - the STREAM-STREAM JOIN: exactly one INNER or LEFT/RIGHT/FULL
+    *    OUTER equi-join of two aliased family sources whose ON bounds
+    *    each side's time axis against the other's (`b.ts BETWEEN a.ts
+    *    AND a.ts + INTERVAL '1 hour'`, a `>=`/`<=` pair, or ts
+    *    equality). Each side gets the watermark at its source and the
+    *    ordinary compiler builds the batch plan, whose native interval
+    *    terms are the shape the engine's state-eviction analysis
+    *    recognizes. An unbounded or half-bounded ON would accrete state
+    *    forever and refuses, as do ASOF (latest-at-or-before orders
+    *    over the unbounded past), cross joins, derived-table sides and
+    *    multi-series sides (the exact-ts align is itself an unbounded
+    *    join). Outer rows emit null-extended once the other side's
+    *    watermark passes their match window (see
+    *    [[graft.streaming.StreamingOps.streamSqlLeftJoinReplay]]);
+    *  - the AGGREGATE OVER AN INNER JOIN: the continuous aggregate keyed
+    *    on `bucket(x.ts, '<width>')` for one side `x`, with dimensions
+    *    named by select alias and count/sum/avg/min/max items only — no
+    *    sliding or session key, no HAVING, no aggregate expression. Two
+    *    chained stateful operators in append mode: the join's time
+    *    column keeps its event-time watermark, so the window aggregate
+    *    needs no second `withWatermark`. When the ON decomposes, the
+    *    join compiles to the hot-key-proof bucketed probe
+    *    ([[tryBucketedJoinAgg]]).
+    *
+    * FILL, ORDER BY, LIMIT, OFFSET, DISTINCT, QUALIFY, ROLLUP/CUBE/
+    * GROUPING SETS, hints and set operations refuse in every form: on
+    * an unbounded stream they are sink-side concerns.
+    *
+    * Compilation is two layers. The SOURCE layer compiles a flat frame
+    * through the ordinary dialect compiler (the same pushed-filter
+    * scans as batch) and sweeps its analyzed plan ([[statefulNodes]]).
+    * The AGGREGATE layer, with GROUP BY only, classifies the time key,
+    * dimensions and aggregates, asks the source layer for just the
+    * columns it reads, and assembles the event-time aggregation.
     */
   def sqlStream(query: String,
       families: ((String, String)) => DataFrame): DataFrame =
-    streamQuery(Parser.parseStmt(query), families)
+    streamQuery(Parser.parseStmt(query), families, None)
 
-  private def streamQuery(stmt: Ast.QueryStmt,
-      families: ((String, String)) => DataFrame): DataFrame = {
-    val spec = stmt match {
-      case q: Ast.QuerySpec => q
-      case _ => throw Compiler.CompileException(
-        "streaming queries do not support set operations")
-    }
-    def refuse(cond: Boolean, what: String): Unit =
-      if (cond) throw Compiler.CompileException(
-        s"streaming queries support stateless projection + WHERE only; " +
-          s"$what is not supported (use sqlStream(query, families, " +
-          "watermark) for the bucket()-keyed aggregate form, or the " +
-          "watermarked StreamingOps tier for other stateful streams)")
-    refuse(spec.joins.nonEmpty, "JOIN")
-    refuse(spec.groupBy.nonEmpty || spec.having.nonEmpty, "GROUP BY/HAVING")
-    refuse(spec.fill.isDefined, "FILL")
-    refuse(spec.orderBy.nonEmpty, "ORDER BY")
-    refuse(spec.limit.isDefined, "LIMIT")
-    refuse(spec.distinct, "DISTINCT")
-    refuse(spec.qualify.isDefined, "QUALIFY")
-    val df = Compiler.compile(spec, families)
-    statelessSweep(df, refuse)
-    df
-  }
-
-  /** WHITELIST sweep over the ANALYZED plan (window expressions only
-    * become logical.Window nodes at analysis — pre-analysis they hide
-    * inside a Project): only Project/Filter over leaf relations (plus
-    * the aliasing wrappers analysis leaves in place) are stateless; a
-    * blacklist would miss shapes reachable through derived tables
-    * (inner DISTINCT → Deduplicate, inner LIMIT → GlobalLimit, inner
-    * set ops → Except/Intersect, …), which would then fail at stream
-    * start or silently grow unbounded state.
-    *
-    * Deliberate asymmetry: set-operation COMPOUNDS refuse up front at
-    * the parse match (a UNION body re-scans the source per branch —
-    * never stateless), while a WITH CTE whose substitution yields a
-    * pure projection/filter shape passes this sweep: the CTE is just
-    * naming, and the analyzed plan it produces is the same stateless
-    * Project/Filter chain a plain SELECT would compile to.
-    */
-  private def statelessSweep(df: DataFrame,
-      refuse: (Boolean, String) => Unit): Unit = {
-    import org.apache.spark.sql.catalyst.plans.logical
-    df.queryExecution.analyzed.foreach {
-      case _: logical.Project | _: logical.Filter |
-           _: logical.SubqueryAlias | _: logical.LeafNode => ()
-      case j: logical.Join =>
-        refuse(true, s"multi-series alignment (a stream-stream ${j.nodeName})")
-      case other => refuse(true, s"the ${other.nodeName} operator")
-    }
-  }
-
-  /** The STATEFUL streaming subset: a watermarked, bucket()-keyed
-    * continuous aggregate — `SELECT bucket(ts, '5 minutes') AS b[,
-    * key…], agg(x) AS a… FROM dom.family [WHERE …] GROUP BY b[, key…]`
-    * — the reference's north star (time-series functions on the SQL
-    * front, README.md:8) reaching live data. Everything else stateful
-    * keeps refusing with a pointer at the right tier.
-    *
-    * Compilation is two-layer, so the event-time machinery is REAL:
-    * the projection/filter half compiles through the ordinary dialect
-    * compiler (same pushed-filter scan as batch, stateless-swept), and
-    * the aggregation is assembled as `withWatermark(ts, delay) →
-    * groupBy(window(ts, width), keys…) → agg` — the engine-recognized
-    * tumbling event-time window (identical epoch alignment to
-    * `bucket()`), NOT a groupBy over opaque timestamp arithmetic. That
-    * distinction is what makes the watermark actually bound state: the
-    * state store evicts windows older than the watermark, and append
-    * output mode works (emit-on-finalize); opaque arithmetic keys
-    * would aggregate but never evict.
-    *
-    * Accepted shape — single family source; exactly one
-    * `bucket(ts, '<fixed width>')` group key (optionally wrapped
-    * `CAST(… AS int)` for epoch seconds), selected under an alias;
-    * further plain-field group keys allowed (bounded dimension keys);
-    * every aggregate aliased and one of count/sum/avg/min/max (the
-    * partial-mergeable streaming-safe set — count(DISTINCT)/median/
-    * percentile/sketches refuse). Calendar bucket widths refuse (the
-    * engine's tumbling window needs a fixed width). HAVING is
-    * supported as a STATELESS filter on the finalized aggregate rows
-    * (append mode emits a window once, then the filter applies exactly
-    * like batch HAVING — extra aggregates it names are computed hidden
-    * and dropped); ORDER BY/LIMIT/DISTINCT/QUALIFY refuse: on an
-    * unbounded stream they are sink-side concerns.
-    */
+  /** [[sqlStream]] with a watermark delay: the stateful shapes. */
   def sqlStream(query: String, families: ((String, String)) => DataFrame,
       watermarkDelay: String): DataFrame =
-    streamAggregate(Parser.parseStmt(query), families, watermarkDelay)
+    streamQuery(Parser.parseStmt(query), families, Some(watermarkDelay))
 
-  /** The aggregate column of a plain count/sum/avg/min/max item over
-    * `arg` (None = count(*)) — shared by the single-family and the
-    * joined-stream aggregate forms.
+  /** The analyzed-plan nodes outside the stateless whitelist
+    * (Project/Filter/SubqueryAlias/leaf relations/EventTimeWatermark),
+    * in pre-order. The ANALYZED plan, because window expressions only
+    * become Window nodes at analysis; a whitelist, because a blacklist
+    * would miss stateful shapes reached through derived tables (inner
+    * DISTINCT → Deduplicate, inner LIMIT → GlobalLimit, …). A WITH CTE
+    * whose substitution is a pure projection/filter passes: the CTE is
+    * only naming.
     */
-  private def plainStreamAgg(fn: String, arg: Option[Column]): Column = {
-    import org.apache.spark.sql.functions._
-    fn match {
-      case "count" => arg.map(count).getOrElse(count(lit(1)))
-      case "sum"   => sum(arg.get)
-      case "avg"   => avg(arg.get)
-      case "min"   => min(arg.get)
-      case "max"   => max(arg.get)
-    }
-  }
+  private def statefulNodes(df: DataFrame): Seq[logical.LogicalPlan] =
+    df.queryExecution.analyzed.collect {
+      case _: logical.Project | _: logical.Filter | _: logical.SubqueryAlias |
+           _: logical.LeafNode | _: logical.EventTimeWatermark => None
+      case n => Some(n)
+    }.flatten
 
-  private def streamAggregate(stmt: Ast.QueryStmt,
+  private def streamQuery(stmt: Ast.QueryStmt,
       families: ((String, String)) => DataFrame,
-      watermarkDelay: String): DataFrame = {
+      watermark: Option[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.boostql.Ast._
+    def fail(msg: String): Nothing = throw Compiler.CompileException(msg)
+    // 1. clause refusals
     val spec = stmt match {
       case q: QuerySpec => q
-      case _ => throw Compiler.CompileException(
-        "streaming queries do not support set operations")
+      case _ => fail("streaming queries do not support set operations")
     }
-    if (spec.joins.nonEmpty)
-      return sqlStreamJoin(spec, families, watermarkDelay)
-    def refuse(cond: Boolean, what: String): Unit =
-      if (cond) throw Compiler.CompileException(
-        "watermarked streaming aggregation supports a bucket(ts, …) " +
-          s"group key + count/sum/avg/min/max only; $what is not " +
-          "supported (use the watermarked StreamingOps tier)")
-    refuse(spec.fill.isDefined,
-      "FILL (densify at the sink — an unbounded stream has no final " +
-        "bucket extent to densify against)")
-    refuse(spec.orderBy.nonEmpty, "ORDER BY (sort at the sink)")
-    refuse(spec.limit.isDefined, "LIMIT")
-    refuse(spec.distinct, "DISTINCT")
-    refuse(spec.qualify.isDefined, "QUALIFY")
-    refuse(spec.groupMode != "plain", "ROLLUP/CUBE/GROUPING SETS")
-    refuse(spec.hints.nonEmpty, "an optimizer hint")
-    if (spec.groupBy.isEmpty) throw Compiler.CompileException(
+    Seq(spec.fill.isDefined -> ("FILL (densify at the sink — an unbounded " +
+        "stream has no final bucket extent to densify against)"),
+      spec.orderBy.nonEmpty -> "ORDER BY (sort at the sink)",
+      spec.limit.isDefined -> "LIMIT", spec.offset.isDefined -> "OFFSET",
+      spec.distinct -> "DISTINCT", spec.qualify.isDefined -> "QUALIFY",
+      (spec.groupMode != "plain") -> "ROLLUP/CUBE/GROUPING SETS",
+      spec.hints.nonEmpty -> "an optimizer hint"
+    ).collectFirst { case (true, what) => what }.foreach(what =>
+      fail(s"streaming queries do not support $what"))
+    val joined = spec.joins.nonEmpty
+    val grouped = spec.groupBy.nonEmpty || spec.having.isDefined
+    def stateless(what: String): Nothing = fail(
+      s"streaming queries support stateless projection + WHERE only; " +
+        s"$what is not supported (use sqlStream(query, families, " +
+        "watermark) for the bucket()-keyed aggregate and join forms, or " +
+        "the watermarked StreamingOps tier for other stateful streams)")
+    def aggregation(what: String): Nothing = fail(
+      "watermarked streaming aggregation supports a bucket(ts, …) " +
+        s"group key + count/sum/avg/min/max only; $what is not " +
+        "supported (use the watermarked StreamingOps tier)")
+    def joining(what: String): Nothing = fail(
+      "streaming joins support exactly one INNER or LEFT/RIGHT/FULL " +
+        "OUTER equi-join between two family sources with a two-sided " +
+        s"time bound in ON; $what is not supported")
+    // the restrictions of the aggregate over a join
+    def joinOnly(cond: Boolean, what: => String): Unit =
+      if (joined && cond) fail(
+        "streaming joined-stream aggregation supports one " +
+          "[CAST(]bucket(x.ts, '<width>')[ AS int)] key + dimension " +
+          "aliases + count/sum/avg/min/max only; " + what +
+          " is not supported (the single-family sqlStream form is wider)")
+    if (watermark.isEmpty) {
+      if (joined) stateless("JOIN")
+      if (grouped) stateless("GROUP BY/HAVING")
+    }
+
+    // 2. source layer: a join's checks and per-side watermark, then the
+    // flat frame of `select` through the ordinary compiler and one sweep
+    val aliases = if (joined) streamJoinAliases(spec, joining) else Seq.empty
+    val sources: ((String, String)) => DataFrame =
+      if (joined) key => families(key).withWatermark("ts", watermark.get)
+      else families
+    val refuseNode: String => Nothing =
+      if (joined) joining
+      else if (grouped) what => aggregation(s"$what inside the streamed source")
+      else stateless
+    def flat(select: Seq[SelectItem]): DataFrame = {
+      val df = Compiler.compile(
+        spec.copy(select = select, groupBy = Seq.empty, having = None), sources)
+      // a join source keeps its one join
+      var joins = if (joined) 1 else 0
+      statefulNodes(df).foreach {
+        case _: logical.Join if joins > 0 => joins -= 1
+        case j: logical.Join =>
+          refuseNode(if (joined) "a multi-series side (the exact-ts align " +
+            "is itself an unbounded stream-stream join) — reference one " +
+            "series per side"
+          else s"multi-series alignment (a stream-stream ${j.nodeName})")
+        case other => refuseNode(s"the ${other.nodeName} operator")
+      }
+      df
+    }
+    if (watermark.isDefined && !joined && spec.groupBy.isEmpty) fail(
       "no GROUP BY — use sqlStream(query, families) for the stateless tier")
+    if (!grouped) return flat(spec.select)
+
+    // 3. aggregate layer
+    joinOnly(spec.joins.exists(_.joinType != "inner"),
+      s"GROUP BY over a ${spec.joins.head.joinType.toUpperCase} OUTER " +
+        "joined stream (the null-extended rows only arrive at watermark " +
+        "finalize, a second layer of emission latency the aggregate would " +
+        "compound — aggregate the inner join, or the outer join at the sink)")
+    joinOnly(spec.having.isDefined,
+      "HAVING over a joined-stream aggregate (filter the finalized " +
+        "windows at the sink, or use the single-family form which " +
+        "supports HAVING)")
     val srcAlias = spec.source.alias
     val aliasOf: Map[String, Operand] =
       spec.select.collect { case ExprItem(e, nm) => nm -> e }.toMap
+    def isTs(n: RawName) = n.parts.last.equalsIgnoreCase("ts")
     // bucket(ts, 'w'[, 'slide']) or CAST(bucket(…) AS int) — the
     // event-time key; a third argument makes it a SLIDING window
     // (window(ts, w, slide): map-side Expand, w/slide live windows per
@@ -871,35 +896,38 @@ object BoostQL {
     // finalized when the watermark passes last-event + gap — the
     // continuous form of the batch dialect's session() window function
     // (there a per-key gaps-and-islands id; here the group key itself).
-    def bucketShape(e: Operand): Option[(String, Option[String], Boolean)] = e match {
-      case OFn("bucket", Seq(ORef(n), OLit(BStr(w))))
-        if n.parts.last.equalsIgnoreCase("ts") => Some((w, None, false))
-      case OFn("bucket", Seq(ORef(n), OLit(BStr(w)), OLit(BStr(sl))))
-        if n.parts.last.equalsIgnoreCase("ts") => Some((w, Some(sl), false))
-      case OCast(inner, ty) => bucketShape(inner).map { case (w, sl, _) =>
-        if (ty != "int") throw Compiler.CompileException(
+    def bucketShape(
+        e: Operand): Option[(RawName, String, Option[String], Boolean)] = e match {
+      case OFn("bucket", Seq(ORef(n), OLit(BStr(w)))) if isTs(n) =>
+        Some((n, w, None, false))
+      case OFn("bucket", Seq(ORef(n), OLit(BStr(w)), OLit(BStr(sl)))) if isTs(n) =>
+        Some((n, w, Some(sl), false))
+      case OCast(inner, ty) => bucketShape(inner).map { case (n, w, sl, _) =>
+        if (ty != "int") fail(
           s"streaming bucket key CAST must target int (epoch seconds), not $ty")
-        (w, sl, true)
+        (n, w, sl, true)
       }
       case _ => None
     }
     def sessionShape(e: Operand): Option[(String, Boolean)] = e match {
-      case OFn("session", Seq(ORef(n), OLit(BStr(g))))
-        if n.parts.last.equalsIgnoreCase("ts") => Some((g, false))
+      case OFn("session", Seq(ORef(n), OLit(BStr(g)))) if isTs(n) =>
+        Some((g, false))
       case OCast(inner, ty) => sessionShape(inner).map { case (g, _) =>
-        if (ty != "int") throw Compiler.CompileException(
+        if (ty != "int") fail(
           s"streaming session key CAST must target int (epoch seconds), not $ty")
         (g, true)
       }
       case _ => None
     }
     // classify group entries: ONE time key — bucket(ts, …) or
-    // session(ts, …), by select alias — + plain dimension fields
-    var bucket: Option[(String, String, Option[String], Boolean)] = None // (alias, width, slide, cast)
+    // session(ts, …), by select alias — + dimensions: plain fields, or
+    // in a join any scalar item, by alias
+    // (alias, ts, width, slide, cast)
+    var bucket: Option[(String, RawName, String, Option[String], Boolean)] = None
     var session: Option[(String, String, Boolean)] = None // (alias, gap, cast)
-    val dims = Seq.newBuilder[(RawName, String)]          // (field, outName)
+    val dims = Seq.newBuilder[(Operand, String)]          // (expression, outName)
     def oneTimeKey(): Unit =
-      if (bucket.isDefined || session.isDefined) throw Compiler.CompileException(
+      if (bucket.isDefined || session.isDefined) fail(
         "watermarked streaming aggregation takes exactly one " +
           "bucket(ts, …) or session(ts, …) group key")
     spec.groupBy.foreach { n =>
@@ -907,49 +935,57 @@ object BoostQL {
         case Seq(one) if aliasOf.contains(one) =>
           (bucketShape(aliasOf(one)), sessionShape(aliasOf(one)),
               aliasOf(one)) match {
-            case (Some((w, sl, c)), _, _) =>
-              oneTimeKey(); bucket = Some((one, w, sl, c))
+            case (Some((t, w, sl, c)), _, _) =>
+              oneTimeKey(); bucket = Some((one, t, w, sl, c))
             case (_, Some((g, c)), _) =>
               oneTimeKey(); session = Some((one, g, c))
-            case (None, None, ORef(f)) => dims += ((f, one))
-            case _ => throw Compiler.CompileException(
+            case (None, None, e) if e.isInstanceOf[ORef] ||
+                joined && !Compiler.containsAgg(e) => dims += ((e, one))
+            case _ => fail(
               s"streaming GROUP BY alias '$one' must name a " +
                 "bucket(ts, …) / session(ts, …) item or a plain field")
           }
         case _ =>
-          if (n.parts.last.equalsIgnoreCase("ts"))
-            throw Compiler.CompileException(
-              "GROUP BY ts groups every point alone — use bucket(ts, …)")
-          dims += ((n, Compiler.resolve(n, srcAlias).colName))
+          joinOnly(true, s"GROUP BY '${n.parts.mkString(".")}' (name a " +
+            "select alias)")
+          if (isTs(n)) fail(
+            "GROUP BY ts groups every point alone — use bucket(ts, …)")
+          dims += ((ORef(n), Compiler.resolve(n, srcAlias).colName))
       }
     }
-    if (bucket.isEmpty && session.isEmpty) throw Compiler.CompileException(
+    if (bucket.isEmpty && session.isEmpty) fail(
       "watermarked streaming aggregation needs a bucket(ts, '<width>') " +
         "or session(ts, '<gap>') group key selected under an alias")
-    val (bAlias, bCast) = bucket.map(b => (b._1, b._4))
+    joinOnly(session.isDefined, "a session key over a joined stream")
+    joinOnly(bucket.exists(_._4.isDefined),
+      "a sliding bucket over a joined stream (an Expand between two " +
+        "stateful operators)")
+    // the side whose time axis buckets a joined rollup
+    val bSide = bucket.map(_._2.parts).collect {
+      case Seq(al, _) if aliases.contains(al) => al
+    }
+    joinOnly(bSide.isEmpty, "a bucket key over no side's time axis (name " +
+      "one: bucket(x.ts, …))")
+    val (bAlias, bCast) = bucket.map(b => (b._1, b._5))
       .getOrElse((session.get._1, session.get._3))
     val widthSlideUs: Option[(Long, Option[Long])] = bucket.map {
-      case (_, bWidth, bSlide, _) =>
-        val widthUs = Compiler.parseIntervalMicros(bWidth).getOrElse(
-          throw Compiler.CompileException(
-            s"streaming bucket width '$bWidth' must be fixed-width " +
-              "(microsecond…day) — the engine's tumbling window cannot " +
-              "evict calendar-width state"))
-        if (widthUs <= 0)
-          throw Compiler.CompileException("bucket() width must be positive")
+      case (_, _, bWidth, bSlide, _) =>
+        val widthUs = Compiler.parseIntervalMicros(bWidth).getOrElse(fail(
+          s"streaming bucket width '$bWidth' must be fixed-width " +
+            "(microsecond…day) — the engine's tumbling window cannot " +
+            "evict calendar-width state"))
+        if (widthUs <= 0) fail("bucket() width must be positive")
         // sliding form: same divisibility contract as the batch
         // expansion (every event in exactly width/slide windows)
         val slideUs = bSlide.map { sl =>
-          val v = Compiler.parseIntervalMicros(sl).getOrElse(
-            throw Compiler.CompileException(
-              s"streaming bucket slide '$sl' must be fixed-width " +
-                "(microsecond…day)"))
-          if (v <= 0) throw Compiler.CompileException(
-            "bucket() slide must be positive")
-          if (v > widthUs) throw Compiler.CompileException(
+          val v = Compiler.parseIntervalMicros(sl).getOrElse(fail(
+            s"streaming bucket slide '$sl' must be fixed-width " +
+              "(microsecond…day)"))
+          if (v <= 0) fail("bucket() slide must be positive")
+          if (v > widthUs) fail(
             "bucket() slide must not exceed the width — a larger slide " +
               "leaves gaps (filter rows instead)")
-          if (widthUs % v != 0) throw Compiler.CompileException(
+          if (widthUs % v != 0) fail(
             "bucket() width must be a multiple of the slide so every " +
               "event is in exactly width/slide windows")
           v
@@ -957,13 +993,11 @@ object BoostQL {
         (widthUs, slideUs)
     }
     val sessionGapUs: Option[Long] = session.map { case (_, g, _) =>
-      val v = Compiler.parseIntervalMicros(g).getOrElse(
-        throw Compiler.CompileException(
-          s"streaming session gap '$g' must be fixed-width " +
-            "(microsecond…day) — open-session state cannot evict under " +
-            "a calendar-width gap"))
-      if (v <= 0) throw Compiler.CompileException(
-        "session() gap must be positive")
+      val v = Compiler.parseIntervalMicros(g).getOrElse(fail(
+        s"streaming session gap '$g' must be fixed-width " +
+          "(microsecond…day) — open-session state cannot evict under " +
+          "a calendar-width gap"))
+      if (v <= 0) fail("session() gap must be positive")
       v
     }
     // session state is OPEN sessions per (dims) key: the engine
@@ -971,20 +1005,21 @@ object BoostQL {
     // query (a global session merge is unsupported) — checked here,
     // before the sub-select compile, so the refusal names the real
     // reason instead of a downstream resolution error
-    if (session.isDefined && dims.result().isEmpty)
-      throw Compiler.CompileException(
-        "streaming session(ts, …) aggregation needs at least one plain " +
-          "grouping key besides the session — a global session merge is " +
-          "not supported by the engine (group by the series/user key " +
-          "whose activity defines the session)")
-    // classify select items; build the stateless sub-select (agg args +
-    // dimension fields + the time axis) and the final agg/projection
     val dimNames = dims.result()
+    if (session.isDefined && dimNames.isEmpty) fail(
+      "streaming session(ts, …) aggregation needs at least one plain " +
+        "grouping key besides the session — a global session merge is " +
+        "not supported by the engine (group by the series/user key " +
+        "whose activity defines the session)")
+    // classify select items; collect the columns the source layer must
+    // provide (agg args + dimensions) and the final agg/projection
     val subItems = scala.collection.mutable.LinkedHashMap.empty[String, SelectItem]
-    dimNames.foreach { case (f, out) =>
-      subItems.getOrElseUpdate(out,
-        if (out == Compiler.resolve(f, srcAlias).colName) FieldItem(f)
-        else ExprItem(ORef(f), out))
+    dimNames.foreach { case (e, out) =>
+      subItems.getOrElseUpdate(out, e match {
+        case ORef(f) if !joined && out == Compiler.resolve(f, srcAlias).colName =>
+          FieldItem(f)
+        case _ => ExprItem(e, out)
+      })
     }
     // count/sum/avg/min/max are the partial-mergeable built-ins;
     // approx_top_k rides along because its Misra-Gries summary IS
@@ -993,9 +1028,22 @@ object BoostQL {
     // continuous-distribution form (histogram_quantile reads
     // percentiles off the emitted windows downstream).
     // (count(DISTINCT)/median/percentile stay refused)
-    val streamingAggs = Set("count", "sum", "avg", "min", "max",
-      "approx_top_k", "histogram")
+    val plainAggs = Set("count", "sum", "avg", "min", "max")
+    val streamingAggs = plainAggs ++ Set("approx_top_k", "histogram")
     var helperIdx = 0
+    // an aggregate argument's source column: a plain field by name,
+    // anything else (and every joined argument, which the hot-key plan
+    // assigns to one side) as a helper item
+    def argCol(e: Operand): String = e match {
+      case ORef(f) if !joined =>
+        val cn = Compiler.resolve(f, srcAlias).colName
+        subItems.getOrElseUpdate(cn, FieldItem(f))
+        cn
+      case _ =>
+        val hn = s"__sa$helperIdx"; helperIdx += 1
+        subItems.getOrElseUpdate(hn, ExprItem(e, hn))
+        hn
+    }
     sealed trait Out
     case class BucketOut(nm: String) extends Out
     case class DimOut(nm: String) extends Out
@@ -1003,20 +1051,12 @@ object BoostQL {
         k: Option[Int] = None, hist: Option[Seq[Double]] = None) extends Out
     def aggOut(fn: String, arg: Option[Operand], nm: String,
         k: Option[Int] = None, hist: Option[Seq[Double]] = None): AggOut = {
-      if (!streamingAggs.contains(fn)) throw Compiler.CompileException(
+      if (!streamingAggs.contains(fn)) fail(
         s"$fn() is not streaming-safe — supported streaming aggregates: " +
           "count, sum, avg, min, max, approx_top_k, histogram")
-      arg match {
-        case None => AggOut(fn, None, nm, k, hist)
-        case Some(ORef(f)) =>
-          val cn = Compiler.resolve(f, srcAlias).colName
-          subItems.getOrElseUpdate(cn, FieldItem(f))
-          AggOut(fn, Some(cn), nm, k, hist)
-        case Some(e) =>
-          val hn = s"__sa$helperIdx"; helperIdx += 1
-          subItems.getOrElseUpdate(hn, ExprItem(e, hn))
-          AggOut(fn, Some(hn), nm, k, hist)
-      }
+      joinOnly(!plainAggs.contains(fn), s"$fn() (streaming-safe " +
+        "joined-stream aggregates: count, sum, avg, min, max)")
+      AggOut(fn, arg.map(argCol), nm, k, hist)
     }
     // structural aggregate-shape -> output column, so a HAVING that
     // names an already-selected aggregate reuses its column instead of
@@ -1034,7 +1074,7 @@ object BoostQL {
       case ExprItem(e, nm) if nm == bAlias &&
           (bucketShape(e).isDefined || sessionShape(e).isDefined) =>
         BucketOut(nm)
-      case ExprItem(ORef(_), nm) if dimNames.exists(_._2 == nm) => DimOut(nm)
+      case ExprItem(e, nm) if dimNames.contains((e, nm)) => DimOut(nm)
       case FieldItem(n)
         if dimNames.exists(_._2 == Compiler.resolve(n, srcAlias).colName) =>
         DimOut(Compiler.resolve(n, srcAlias).colName)
@@ -1047,22 +1087,23 @@ object BoostQL {
         val o = aggOut("histogram", Some(e), nm, hist = Some(ps))
         aggByShape(it.expr) = nm; o
       case it @ ExprItem(OAggX(fn, e, ps, a2), nm) =>
-        if (ps.nonEmpty || a2.nonEmpty) throw Compiler.CompileException(
+        if (ps.nonEmpty || a2.nonEmpty) fail(
           s"$fn() is not streaming-safe — supported streaming " +
             "aggregates: count, sum, avg, min, max, approx_top_k")
         val o = aggOut(fn, Some(e), nm); aggByShape(it.expr) = nm; o
-      case ExprItem(e, nm) if Compiler.containsAgg(e) => ExprOut(nm, e)
-      case _: AggItem => throw Compiler.CompileException(
+      case ExprItem(e, nm) if Compiler.containsAgg(e) =>
+        joinOnly(true, s"the aggregate expression '$nm'")
+        ExprOut(nm, e)
+      case _: AggItem => fail(
         "streaming aggregates must be aliased (agg(x) AS name)")
-      case other => throw Compiler.CompileException(
+      case _ => fail(
         "streaming select items must be the bucket key, a grouping " +
           "field, an aliased aggregate, or an expression over " +
           "streaming-safe aggregates")
     }
     val aggs = outs.collect { case a: AggOut => a }
-    if (aggs.isEmpty && !outs.exists(_.isInstanceOf[ExprOut]))
-      throw Compiler.CompileException(
-        "watermarked streaming aggregation needs at least one aggregate")
+    if (aggs.isEmpty && !outs.exists(_.isInstanceOf[ExprOut])) fail(
+      "watermarked streaming aggregation needs at least one aggregate")
     /* HAVING: a STATELESS filter on the FINALIZED aggregate rows —
      * append mode emits a window once (on watermark passage), the
      * filter then applies exactly like batch HAVING; no second
@@ -1080,12 +1121,11 @@ object BoostQL {
         case OAggX("approx_top_k", x, Seq(k), _) =>
           aggOut("approx_top_k", Some(x), nm, Some(k.toInt))
         case OAggX(fn, x, ps, a2) =>
-          if (ps.nonEmpty || a2.nonEmpty) throw Compiler.CompileException(
+          if (ps.nonEmpty || a2.nonEmpty) fail(
             s"$fn() is not streaming-safe — supported streaming " +
               "aggregates: count, sum, avg, min, max, approx_top_k")
           aggOut(fn, Some(x), nm)
-        case _ => throw Compiler.CompileException(
-          "unreachable: havingAggCol on a non-aggregate")
+        case _ => fail("unreachable: havingAggCol on a non-aggregate")
       }
       extraAggs += out; hidden += nm; aggByShape(e) = nm
       nm
@@ -1106,7 +1146,7 @@ object BoostQL {
     // the finalized rows' scope: names resolve to select outputs,
     // aggregates to their (possibly hidden) watermarked state columns
     val finalized = new Compiler.Scope {
-      private def refusal(what: String): Nothing = throw Compiler.CompileException(
+      private def refusal(what: String): Nothing = fail(
         s"streaming aggregate expressions (HAVING and expression select " +
           s"items) support literals, select-output names, arithmetic, " +
           s"CAST, CASE, the scalar builtins and streaming-safe " +
@@ -1136,26 +1176,27 @@ object BoostQL {
       case ExprOut(nm, e) => nm -> finalized.operand(e).as(nm)
     }.toMap
     val allAggs = aggs ++ extraAggs.result()
-    // layer 1: the stateless projection/filter through the ordinary
-    // compiler — same pushed-filter scan as batch, swept to stay
-    // stateless (a derived-table DISTINCT etc. refuses here)
-    val subSpec = QuerySpec(
-      select = subItems.values.toSeq :+ FieldItem(RawName(Seq("ts"))),
-      source = spec.source, joins = Seq.empty, where = spec.where,
-      groupBy = Seq.empty, having = None, orderBy = Seq.empty, limit = None)
-    val flat = Compiler.compile(subSpec, families)
-    def refuseFlat(cond: Boolean, what: String): Unit =
-      refuse(cond, s"$what inside the streamed source")
-    statelessSweep(flat, refuseFlat)
-    // layer 2: the engine-recognized event-time aggregation — a
-    // tumbling/sliding window() or a session_window() (the ≥1-dim
-    // session requirement was enforced at classification)
+    // the source layer, asked for exactly these columns plus the time
+    // axis. A join's bucketing side rides along as __jts: its event-time
+    // watermark survives the join + projection, which the window
+    // aggregate requires. HOT-KEY path first (see tryBucketedJoinAgg),
+    // the symmetric-hash join as the fallback.
+    val items = subItems.values.toSeq
+    val (ts, source) =
+      if (!joined) "ts" -> flat(items :+ FieldItem(RawName(Seq("ts"))))
+        .withWatermark("ts", watermark.get)
+      else "__jts" -> tryBucketedJoinAgg(spec, aliases, sources, items,
+        "__jts", bSide.get).getOrElse(
+        flat(items :+ ExprItem(ORef(RawName(Seq(bSide.get, "ts"))), "__jts")))
+    // the engine-recognized event-time aggregation — a tumbling/sliding
+    // window() or a session_window() (the ≥1-dim session requirement
+    // was enforced at classification)
     val win = sessionGapUs match {
-      case Some(gap) => session_window(col("ts"), s"$gap microseconds")
+      case Some(gap) => session_window(col(ts), s"$gap microseconds")
       case None =>
         val (widthUs, slideUs) = widthSlideUs.get
-        slideUs.fold(window(col("ts"), s"$widthUs microseconds"))(sl =>
-          window(col("ts"), s"$widthUs microseconds", s"$sl microseconds"))
+        slideUs.fold(window(col(ts), s"$widthUs microseconds"))(sl =>
+          window(col(ts), s"$widthUs microseconds", s"$sl microseconds"))
     }
     val keyCols = win +: dimNames.map(d => col(d._2))
     val aggCols = allAggs.map { a =>
@@ -1173,12 +1214,14 @@ object BoostQL {
           // the same expression (and the same count string) as batch
           val Seq(lo, hi, nb) = a.hist.get
           Compiler.histogramString(c.get, lo, hi, nb)
-        case fn => plainStreamAgg(fn, c)
+        case "count" => c.fold(count(lit(1)))(count)
+        case "sum"   => sum(c.get)
+        case "avg"   => avg(c.get)
+        case "min"   => min(c.get)
+        case "max"   => max(c.get)
       }).as(a.nm)
     }
-    val agged = flat.withWatermark("ts", watermarkDelay)
-      .groupBy(keyCols: _*)
-      .agg(aggCols.head, aggCols.tail: _*)
+    val agged = source.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
     val hiddenNames = hidden.result()
     // two-step projection: first materialize every OUTPUT NAME (bucket
     // alias included — `window.start` renames here), then evaluate the
@@ -1204,56 +1247,19 @@ object BoostQL {
     val projected = named.select((outCols ++ hiddenNames.map(col)): _*)
     // hidden aggregates serve HAVING and the expression outputs; both
     // paths drop them from the emitted rows
-    havingCond match {
-      case Some(c) => projected.filter(c).drop(hiddenNames: _*)
-      case None    => projected.drop(hiddenNames: _*)
-    }
+    havingCond.fold(projected)(projected.filter).drop(hiddenNames: _*)
   }
 
-  /** The STREAM-STREAM JOIN subset of the watermarked SQL front:
-    * exactly one equi-join — INNER, LEFT/RIGHT/FULL OUTER — between
-    * two family sources whose ON bounds the two time axes against each
-    * other — the attribution/funnel enrich shape (`ON a.click.user =
-    * b.purchase.user AND b.ts BETWEEN a.ts AND a.ts + INTERVAL
-    * '1 hour'`). Reached through `sqlStream(query, families,
-    * watermarkDelay)` when the statement has a JOIN; with a GROUP BY
-    * it chains into [[sqlStreamJoinAgg]] (windowed aggregation over
-    * the joined stream). Inner matches emit as soon as both rows
-    * arrive; an OUTER side's null-extended rows emit once the OTHER
-    * side's watermark passes their match window (so a replay must end
-    * with watermark-advancing rows to flush the tail — see
-    * [[graft.streaming.StreamingOps.streamSqlLeftJoinReplay]]).
-    *
-    * Compilation is deliberately thin: each side gets
-    * `withWatermark(ts, delay)` at the source, then the ORDINARY
-    * dialect compiler builds the same plan it builds in batch — the
-    * per-side series filters push to the scans, the equi conjuncts
-    * become the join keys, and the interval arithmetic compiles to
-    * native ts ± day-time-interval terms, the exact shape the engine's
-    * state-eviction analysis recognizes. So the join state is BOUNDED:
-    * a row older than the other side's watermark minus the bound can
-    * never match again and evicts. That is also why the ON MUST bound
-    * both time axes (refused otherwise): an unbounded or half-bounded
-    * stream join accretes one side's history forever.
-    *
-    * Refusals, each with the reason: ASOF (latest-at-or-before orders
-    * over the unbounded past — no watermark can evict that state;
-    * bound the window explicitly or run it batch), cross joins,
-    * derived-table sides, unaliased sides, half-bounded or
-    * same-direction-bounded ON clauses, and multi-series sides (the
-    * exact-ts align is itself an unbounded stream-stream join).
-    * Append output mode.
+  /** The stream-stream join's checks (see [[sqlStream]]); returns the
+    * two side aliases. The ON must bound each side's time axis against
+    * the other's — a row on a side whose axis is not upper-bounded in
+    * terms of the other side's can match forever, so that side's join
+    * state would never evict.
     */
-  private def sqlStreamJoin(spec: Ast.QuerySpec,
-      families: ((String, String)) => DataFrame,
-      watermarkDelay: String): DataFrame = {
+  private def streamJoinAliases(spec: Ast.QuerySpec,
+      refuse: String => Nothing): Seq[String] = {
     import graft.boostql.Ast._
-    def refuse(cond: Boolean, what: String): Unit =
-      if (cond) throw Compiler.CompileException(
-        "streaming joins support exactly one INNER or LEFT/RIGHT/FULL " +
-          "OUTER equi-join between two family sources with a two-sided " +
-          s"time bound in ON; $what is not supported")
-    refuse(spec.joins.length > 1, "more than one JOIN")
+    if (spec.joins.length > 1) refuse("more than one JOIN")
     val j = spec.joins.head
     if (j.joinType == "asof") throw Compiler.CompileException(
       "streaming ASOF is not supported: latest-at-or-before orders over " +
@@ -1270,16 +1276,10 @@ object BoostQL {
     // rows unless the input ends with rows advancing each side's
     // watermark past the real data — see
     // StreamingOps.streamSqlLeftJoinReplay's flush rows.)
-    refuse(!Seq("inner", "left", "right", "full").contains(j.joinType),
-      s"${j.joinType.toUpperCase} JOIN")
-    refuse(spec.fill.isDefined, "FILL")
-    refuse(spec.orderBy.nonEmpty, "ORDER BY (sort at the sink)")
-    refuse(spec.limit.isDefined, "LIMIT")
-    refuse(spec.distinct, "DISTINCT")
-    refuse(spec.qualify.isDefined, "QUALIFY")
-    refuse(spec.hints.nonEmpty, "an optimizer hint")
-    refuse(!spec.source.isInstanceOf[Source] ||
-      !j.source.isInstanceOf[Source], "a derived-table side")
+    if (!Seq("inner", "left", "right", "full").contains(j.joinType))
+      refuse(s"${j.joinType.toUpperCase} JOIN")
+    if (!spec.source.isInstanceOf[Source] || !j.source.isInstanceOf[Source])
+      refuse("a derived-table side")
     val cond = j.on.getOrElse(throw Compiler.CompileException(
       "streaming joins need an ON clause — a cross join would hold both " +
         "streams' full history as state"))
@@ -1353,193 +1353,7 @@ object BoostQL {
           s" (only ${aliases.filter(sidesBounded.contains).mkString(", ")} " +
             "is bounded here)"
         else ""))
-    // per-side watermark at the source, then the ordinary batch compile
-    val wmFam: ((String, String)) => DataFrame =
-      key => families(key).withWatermark("ts", watermarkDelay)
-    // sweep the analyzed plan: exactly one join over stateless sides
-    def sweepJoin(df: DataFrame): Unit = {
-      import org.apache.spark.sql.catalyst.plans.logical
-      var joins = 0
-      df.queryExecution.analyzed.foreach {
-        case _: logical.Project | _: logical.Filter |
-             _: logical.SubqueryAlias | _: logical.LeafNode |
-             _: logical.EventTimeWatermark => ()
-        case _: logical.Join => joins += 1
-        case other => refuse(true, s"the ${other.nodeName} operator")
-      }
-      refuse(joins > 1, "a multi-series side (the exact-ts align is " +
-        "itself an unbounded stream-stream join) — reference one series " +
-        "per side")
-    }
-    if (spec.groupBy.nonEmpty || spec.having.isDefined) {
-      refuse(j.joinType != "inner",
-        s"GROUP BY over a ${j.joinType.toUpperCase} OUTER joined stream " +
-          "(the null-extended rows only arrive at watermark finalize, a " +
-          "second layer of emission latency the aggregate would compound " +
-          "— aggregate the inner join, or the outer join at the sink)")
-      refuse(spec.having.isDefined,
-        "HAVING over a joined-stream aggregate (filter the finalized " +
-          "windows at the sink, or use the single-family form which " +
-          "supports HAVING)")
-      return sqlStreamJoinAgg(spec, aliases, wmFam, sweepJoin)
-    }
-    val df = Compiler.compile(spec, wmFam)
-    sweepJoin(df)
-    df
-  }
-
-  /** Windowed aggregation OVER the stream-stream join — the
-    * enrich-then-rollup pipeline (join the click stream to the purchase
-    * stream, then a per-bucket continuous rollup), compiled as CHAINED
-    * STATEFUL OPERATORS in append mode: per-side watermarks at the
-    * sources → the interval-bounded inner join (state evicted behind
-    * the watermarks + ON bound) → an event-time window aggregate over
-    * one side's time axis (state evicted as windows finalize). The
-    * engine supports this chaining natively (multiple stateful
-    * operators, append mode); the time column keeps its event-time
-    * watermark through the join's projection, which is what lets the
-    * downstream window aggregate finalize without a second
-    * `withWatermark`.
-    *
-    * Accepted shape, deliberately tight (each refusal names the wider
-    * tier): `SELECT [CAST(]bucket(x.ts, '<width>')[ AS int)] AS b[,
-    * dim AS d…], agg(expr) AS a… FROM dom.f AS x JOIN dom.g AS y ON
-    * <equi + two-sided time bound> GROUP BY b[, d…]` — x.ts names
-    * WHICH side's axis buckets the rollup; dims are any scalar select
-    * items named in GROUP BY by alias; aggregates are the
-    * partial-mergeable count/sum/avg/min/max over any scalar
-    * expression of the joined row. No sliding windows (an Expand
-    * between two stateful operators), no session keys, no HAVING, no
-    * aggregate expressions — those live in the single-family form.
-    */
-  private def sqlStreamJoinAgg(spec: Ast.QuerySpec, aliases: Seq[String],
-      wmFam: ((String, String)) => DataFrame,
-      sweepJoin: DataFrame => Unit): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.boostql.Ast._
-    def refuse(what: String): Nothing = throw Compiler.CompileException(
-      "streaming joined-stream aggregation supports one " +
-        "[CAST(]bucket(x.ts, '<width>')[ AS int)] key + plain dimension " +
-        "aliases + count/sum/avg/min/max only; " + what +
-        " is not supported (the single-family sqlStream form is wider)")
-    // bucket(x.ts, 'w') [CAST int] — x one of the two join aliases; no
-    // slide (an Expand between two stateful operators)
-    def bucketShape(e: Operand): Option[(String, String, Boolean)] = e match {
-      case OFn("bucket", Seq(ORef(RawName(Seq(al, t))), OLit(BStr(w))))
-        if t.equalsIgnoreCase("ts") && aliases.contains(al) =>
-        Some((al, w, false))
-      case OFn("bucket", args) if args.length == 3 =>
-        refuse("a sliding bucket over a joined stream")
-      case OCast(inner, ty) => bucketShape(inner).map { case (al, w, _) =>
-        if (ty != "int") refuse(
-          s"a bucket key CAST to $ty (epoch-seconds int only)")
-        (al, w, true)
-      }
-      case _ => None
-    }
-    val aliasOf: Map[String, Operand] =
-      spec.select.collect { case ExprItem(e, nm) => nm -> e }.toMap
-    // classify the GROUP BY: one bucket alias + dimension aliases (the
-    // joined form requires every group key selected under an alias —
-    // two-source raw-name resolution belongs to the batch compiler)
-    var bucket: Option[(String, String, String, Boolean)] = None // (alias, side, width, cast)
-    val dimAliases = Seq.newBuilder[String]
-    spec.groupBy.foreach { n =>
-      n.parts match {
-        case Seq(one) if aliasOf.contains(one) =>
-          bucketShape(aliasOf(one)) match {
-            case Some((al, w, c)) =>
-              if (bucket.isDefined) refuse("more than one bucket key")
-              bucket = Some((one, al, w, c))
-            case None => dimAliases += one
-          }
-        case _ => refuse(s"GROUP BY '${n.parts.mkString(".")}' (name a " +
-          "select alias)")
-      }
-    }
-    val (bAlias, bSide, bWidth, bCast) = bucket.getOrElse(refuse(
-      "GROUP BY without a bucket(x.ts, '<width>') key"))
-    val widthUs = Compiler.parseIntervalMicros(bWidth).getOrElse(refuse(
-      s"a calendar bucket width ('$bWidth' — the engine's tumbling " +
-        "window needs a fixed width)"))
-    if (widthUs <= 0) refuse("a non-positive bucket width")
-    val dimSet = dimAliases.result().toSet
-    // classify the SELECT; build the joined sub-select (dims + agg
-    // args + the bucketing time axis) and the aggregate list
-    val subItems = scala.collection.mutable.LinkedHashMap.empty[String, SelectItem]
-    sealed trait Out
-    case class BucketOut(nm: String) extends Out
-    case class DimOut(nm: String) extends Out
-    case class AggOut(fn: String, argCol: Option[String], nm: String) extends Out
-    val streamingAggs = Set("count", "sum", "avg", "min", "max")
-    var helperIdx = 0
-    def aggOut(fn: String, arg: Option[Operand], nm: String): AggOut = {
-      if (!streamingAggs.contains(fn)) refuse(s"$fn() (streaming-safe " +
-        "joined-stream aggregates: count, sum, avg, min, max)")
-      arg match {
-        case None => AggOut(fn, None, nm)
-        case Some(e) =>
-          val hn = s"__ja$helperIdx"; helperIdx += 1
-          subItems.getOrElseUpdate(hn, ExprItem(e, hn))
-          AggOut(fn, Some(hn), nm)
-      }
-    }
-    val outs: Seq[Out] = spec.select.map {
-      case ExprItem(e, nm) if nm == bAlias && bucketShape(e).isDefined =>
-        BucketOut(nm)
-      case ExprItem(OAgg(fn, arg), nm) => aggOut(fn, arg.map(ORef), nm)
-      case ExprItem(OAggX(fn, e, ps, a2), nm) =>
-        if (ps.nonEmpty || a2.nonEmpty) refuse(s"$fn() with parameters")
-        aggOut(fn, Some(e), nm)
-      case ExprItem(e, nm) if dimSet.contains(nm) =>
-        subItems.getOrElseUpdate(nm, ExprItem(e, nm)); DimOut(nm)
-      case _: AggItem => refuse("an unaliased aggregate (agg(x) AS name)")
-      case other => refuse(s"select item '$other' (the bucket key, a " +
-        "GROUP BY'd dimension alias, or an aliased aggregate)")
-    }
-    if (!outs.exists(_.isInstanceOf[AggOut]))
-      refuse("an aggregate-free select (nothing to roll up)")
-    val missingDims = dimSet -- outs.collect { case DimOut(nm) => nm }
-    if (missingDims.nonEmpty) refuse(
-      s"GROUP BY aliases not in the select: ${missingDims.mkString(", ")}")
-    // the bucketing side's time axis rides along; its event-time
-    // watermark metadata survives the join + projection, which the
-    // downstream window aggregate requires
-    val tsName = "__jts"
-    // HOT-KEY path first: when the ON decomposes into cross-side equi
-    // keys + a finite two-sided interval bound and every select helper
-    // sits on one side, the join compiles to the bucketed-probe
-    // topology (StreamingOps.bucketedIntervalJoin) — same output
-    // multiset, but a hot key's state probe stays bounded by one
-    // bound-width time bucket instead of scanning the key's full
-    // watermark horizon (measured 80× of uniform for the symmetric
-    // plan under one hot user; 1.04× bucketed). Falls back to the
-    // symmetric-hash plan when the shape doesn't decompose (mixed-side
-    // expressions, non-equi conjuncts, unqualified references).
-    val flat = tryBucketedJoinAgg(spec, aliases, wmFam,
-        subItems.values.toSeq, tsName, bSide).getOrElse {
-      subItems.getOrElseUpdate(tsName,
-        ExprItem(ORef(RawName(Seq(bSide, "ts"))), tsName))
-      val subSpec = spec.copy(select = subItems.values.toSeq,
-        groupBy = Seq.empty, having = None)
-      val f = Compiler.compile(subSpec, wmFam)
-      sweepJoin(f)
-      f
-    }
-    val keyCols = window(col(tsName), s"$widthUs microseconds") +:
-      dimSet.toSeq.sorted.map(col)
-    val aggCols = outs.collect { case AggOut(fn, arg, nm) =>
-      plainStreamAgg(fn, arg.map(col)).as(nm)
-    }
-    val agged = flat.groupBy(keyCols: _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-    agged.select(outs.map {
-      case BucketOut(nm) =>
-        if (bCast) col("window.start").cast("long").as(nm)
-        else col("window.start").as(nm)
-      case DimOut(nm)       => col(nm)
-      case AggOut(_, _, nm) => col(nm)
-    }: _*)
+    aliases
   }
 
   /** The HOT-KEY-PROOF compilation of the joined-stream aggregate:
@@ -1690,24 +1504,13 @@ object BoostQL {
       source = spec.joins.head.source, joins = Seq.empty,
       where = andAll(bWhere.result()), groupBy = Seq.empty, having = None,
       orderBy = Seq.empty, limit = None)
-    // a side that compiles to anything stateful (a multi-series align
-    // is itself a join) cannot ride the decomposition — fall back and
-    // let the symmetric path's sweep issue its richer refusal
-    def stateless(df: DataFrame): Boolean = {
-      import org.apache.spark.sql.catalyst.plans.logical
-      var ok = true
-      df.queryExecution.analyzed.foreach {
-        case _: logical.Project | _: logical.Filter |
-             _: logical.SubqueryAlias | _: logical.LeafNode |
-             _: logical.EventTimeWatermark => ()
-        case _ => ok = false
-      }
-      ok
-    }
     try {
       val aDf = Compiler.compile(aSpec, wmFam)
       val bDf = Compiler.compile(bSpec, wmFam)
-      if (!stateless(aDf) || !stateless(bDf)) return None
+      // a side that compiles to anything stateful (a multi-series align
+      // is itself a join) cannot ride the decomposition — fall back and
+      // let the symmetric path's sweep issue its richer refusal
+      if (statefulNodes(aDf).nonEmpty || statefulNodes(bDf).nonEmpty) return None
       Some(graft.streaming.StreamingOps.bucketedIntervalJoin(
         aDf, bDf,
         keyPairs.indices.map(i => s"__ek${i}_a" -> s"__ek${i}_b"),

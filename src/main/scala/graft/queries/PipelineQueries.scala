@@ -113,23 +113,27 @@ object PipelineQueries {
     * then the ten power iterations UNROLLED as chained CTEs (standard
     * SQL bars aggregation in a recursive term) — every op the identical
     * integer expression the Spark side compiles (`//` ≡ `div`; all
-    * values non-negative so trunc = floor), hence bit-identical.
+    * values non-negative so trunc = floor), hence bit-identical. The
+    * CTEs the iterations re-read are MATERIALIZED: DuckDB inlines a
+    * plain CTE at every reference, which would recompute the `pairs`
+    * self-join in every iteration (minutes at sf0.01, not seconds).
     */
   private val pageRankOracle: String = {
     val scale = 1000000000000L
     val head = s"""$shingleCte,
-       |pairs AS (
+       |pairs AS MATERIALIZED (
        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
        |  WHERE $jaccardExpr >= 0.5),
-       |edges AS (
+       |edges AS MATERIALIZED (
        |  SELECT id_a AS src, id_b AS dst FROM pairs
        |  UNION SELECT id_b, id_a FROM pairs),
-       |deg AS (SELECT src AS id, count(*) AS deg FROM edges GROUP BY src),
+       |deg AS MATERIALIZED (
+       |  SELECT src AS id, count(*) AS deg FROM edges GROUP BY src),
        |nn AS (SELECT count(*) AS n FROM deg),
        |r0 AS (SELECT id, $scale // n AS r FROM deg, nn)""".stripMargin
     val iters = (1 to 10).map { i =>
-      s"""r$i AS (
+      s"""r$i AS MATERIALIZED (
          |  SELECT d.id,
          |    (3 * $scale // 20 // nn.n)
          |      + (17 * coalesce(c.s, 0) // 20) AS r

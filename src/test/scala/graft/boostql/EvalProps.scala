@@ -14,13 +14,18 @@ import graft.sources.TimeSeriesTable
   *    predicate keeps exactly the rows SELECT … WHERE keeps;
   *  - the streaming aggregate's output-name scope: a streaming HAVING
   *    (and an expression item beside it) finalizes the rows batch
-  *    HAVING returns.
+  *    HAVING returns;
+  *  - the streaming compiler as a whole: over batch frames (where
+  *    `withWatermark` is a no-op) a single-family or self-joined
+  *    aggregate returns the rows the batch compiler returns, through
+  *    both joined topologies (the per-side hot-key plan for one-side
+  *    arguments, the symmetric join for mixed-side ones).
   * The predicates span field, attribute and `ts` references, literals,
   * arithmetic, INTERVAL, CAST, CASE, IN, BETWEEN, LIKE, IS [NOT] NULL
   * and the scalar builtins, `round(x, d)` included. Values are exact
   * binary fractions, so sums do not depend on the order Spark adds in.
-  * Each sample checks several predicates with one Spark job a side (one
-  * stream per sample), which keeps the suite under 20 s in a warm JVM.
+  * Each sample checks several predicates or queries at once, which keeps
+  * each property under 20 s in a warm JVM.
   */
 object EvalProps extends Properties("boostql.eval") {
 
@@ -155,5 +160,54 @@ object EvalProps extends Properties("boostql.eval") {
       if (streamed != batch) println(s"EVALPROP $q: " +
         s"stream ${streamed.length} rows, batch ${batch.length} rows")
       streamed == batch
+    }
+
+  // ---- the streaming compiler against the batch compiler ----
+
+  private val width: Gen[String] = Gen.oneOf("'10 minutes'", "'30 minutes'", "'1 hour'")
+
+  /** `SELECT <key> AS d[, <dim> AS h], <aggs> FROM <from> GROUP BY d[, h]`
+    * with the time key optionally cast to epoch seconds. */
+  private def aggQuery(tsRef: Gen[String], dim: Gen[String], arg: Gen[String],
+      from: Gen[String]): Gen[String] = for {
+    ts <- tsRef; w <- width; cast <- Gen.oneOf(true, false)
+    h <- Gen.option(dim); n <- Gen.choose(1, 3)
+    aggs <- Gen.listOfN(n, Gen.oneOf(Gen.const("count(*)"),
+      for (fn <- Gen.oneOf("count", "sum", "avg", "min", "max"); a <- arg)
+        yield s"$fn($a)"))
+    src <- from
+  } yield {
+    val key = if (cast) s"CAST(bucket($ts, $w) AS int)" else s"bucket($ts, $w)"
+    val items = (s"$key AS d" +: h.map(d => s"$d AS h").toSeq) ++
+      aggs.zipWithIndex.map { case (a, i) => s"$a AS x$i" }
+    s"SELECT ${items.mkString(", ")} FROM $src GROUP BY d" + h.fold("")(_ => ", h")
+  }
+
+  private val singleAgg: Gen[String] = aggQuery(Gen.const("ts"),
+    Gen.const("cpu.host"), Gen.oneOf("cpu", "cpu * 2.0", "cpu - 1.5"),
+    Gen.oneOf("dom.f", "dom.f WHERE cpu > 2.0", "dom.f WHERE cpu.host != 'h2'"))
+
+  /** A self-join on the host attribute within ten minutes. One-side
+    * arguments decompose to the hot-key plan; `a.cpu + b.cpu` does not. */
+  private val joinedAgg: Gen[String] = aggQuery(Gen.oneOf("a.ts", "b.ts"),
+    Gen.oneOf("a.cpu.host", "b.cpu.host"),
+    Gen.oneOf("a.cpu", "b.cpu", "b.cpu * 2.0", "a.cpu + b.cpu"),
+    for {
+      bound <- Gen.oneOf("b.ts BETWEEN a.ts AND a.ts + INTERVAL '10 minutes'",
+        "b.ts >= a.ts AND b.ts <= a.ts + INTERVAL '10 minutes'")
+      extra <- Gen.oneOf("", " AND b.cpu > 2.0", " WHERE a.cpu < 9.0")
+    } yield s"dom.f AS a JOIN dom.f AS b ON a.cpu.host = b.cpu.host AND $bound$extra")
+
+  property("sqlStream over batch frames returns the rows sql returns") =
+    forAllNoShrink(Gen.listOfN(3, singleAgg), Gen.listOfN(3, joinedAgg)) { (ss, js) =>
+      import org.apache.spark.sql.functions.col
+      def rows(df: DataFrame) = df.orderBy(df.columns.map(col): _*).collect().toSeq
+      (ss ++ js).forall { q =>
+        val batch = rows(BoostQL.sql(q, (_: (String, String)) => fam))
+        val streamed = rows(BoostQL.sqlStream(q, _ => fam, "1 day"))
+        if (streamed != batch) println(s"EVALPROP $q: " +
+          s"stream ${streamed.length} rows, batch ${batch.length} rows")
+        streamed == batch && batch.nonEmpty
+      }
     }
 }

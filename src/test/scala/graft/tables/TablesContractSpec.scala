@@ -25,12 +25,6 @@ class TablesContractSpec extends SparkSpec {
     1700000123456789L,
     1700086400000000L)
 
-  private def tmp(tag: String): String = {
-    val d = Files.createTempDirectory(s"graft-contract-$tag")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
-
   private def writeEvents(dir: String, tsCol: org.apache.spark.sql.Column,
       tsType: DataType): Unit = {
     val base = spark.createDataFrame(
@@ -57,17 +51,19 @@ class TablesContractSpec extends SparkSpec {
   private val expected = instantsUs.zipWithIndex.map { case (us, i) => (i.toLong, us) }
 
   test("events.ts contract: nanos-as-long, NTZ-micros, and adjusted TIMESTAMP all normalize identically") {
-    val asLong = tmp("long")
-    writeEvents(asLong, col("us") * lit(1000L), LongType) // raw nanos longs
-    val asNtz = tmp("ntz")
-    writeEvents(asNtz, timestamp_micros(col("us")).cast(TimestampNTZType), TimestampNTZType)
-    val asTs = tmp("ts")
-    writeEvents(asTs, timestamp_micros(col("us")), TimestampType)
+    withTempRoot("graft-contract") { root =>
+      val asLong = s"$root/long"
+      writeEvents(asLong, col("us") * lit(1000L), LongType) // raw nanos longs
+      val asNtz = s"$root/ntz"
+      writeEvents(asNtz, timestamp_micros(col("us")).cast(TimestampNTZType), TimestampNTZType)
+      val asTs = s"$root/ts"
+      writeEvents(asTs, timestamp_micros(col("us")), TimestampType)
 
-    for (dir <- Seq(asLong, asNtz, asTs)) {
-      val (dt, rows) = readBack(dir)
-      assert(dt == TimestampType, s"$dir: ts must normalize to TimestampType, got $dt")
-      assert(rows == expected, s"$dir: instants drifted through normalization")
+      for (dir <- Seq(asLong, asNtz, asTs)) {
+        val (dt, rows) = readBack(dir)
+        assert(dt == TimestampType, s"$dir: ts must normalize to TimestampType, got $dt")
+        assert(rows == expected, s"$dir: instants drifted through normalization")
+      }
     }
   }
 
@@ -93,30 +89,32 @@ class TablesContractSpec extends SparkSpec {
   }
 
   test("ParquetStats.eventsMaxTsMicros equals the scan max on every ts unit and the real fixture") {
-    val asLong = tmp("statslong")
-    writeEvents(asLong, col("us") * lit(1000L), LongType)
-    val asNtz = tmp("statsntz")
-    writeEvents(asNtz, timestamp_micros(col("us")).cast(TimestampNTZType), TimestampNTZType)
-    // adjusted TIMESTAMP as INT64 micros (Spark's default INT96 carries
-    // no usable stats — pinned as the degrade case below)
-    val asTs = tmp("statsts")
-    val oldOut = spark.conf.get("spark.sql.parquet.outputTimestampType")
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    try writeEvents(asTs, timestamp_micros(col("us")), TimestampType)
-    finally spark.conf.set("spark.sql.parquet.outputTimestampType", oldOut)
-    for (dir <- Seq(asLong, asNtz, asTs, sfDir)) {
-      val scanned = Tables.events(spark, dir)
-        .agg(max(unix_micros(col("ts")))).head.getLong(0)
-      assert(graft.util.ParquetStats.eventsMaxTsMicros(spark, dir)
-        .contains(scanned), s"$dir: footer max ts != scan max ts")
+    withTempRoot("graft-contract") { root =>
+      val asLong = s"$root/statslong"
+      writeEvents(asLong, col("us") * lit(1000L), LongType)
+      val asNtz = s"$root/statsntz"
+      writeEvents(asNtz, timestamp_micros(col("us")).cast(TimestampNTZType), TimestampNTZType)
+      // adjusted TIMESTAMP as INT64 micros (Spark's default INT96 carries
+      // no usable stats — pinned as the degrade case below)
+      val asTs = s"$root/statsts"
+      val oldOut = spark.conf.get("spark.sql.parquet.outputTimestampType")
+      spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      try writeEvents(asTs, timestamp_micros(col("us")), TimestampType)
+      finally spark.conf.set("spark.sql.parquet.outputTimestampType", oldOut)
+      for (dir <- Seq(asLong, asNtz, asTs, sfDir)) {
+        val scanned = Tables.events(spark, dir)
+          .agg(max(unix_micros(col("ts")))).head.getLong(0)
+        assert(graft.util.ParquetStats.eventsMaxTsMicros(spark, dir)
+          .contains(scanned), s"$dir: footer max ts != scan max ts")
+      }
+      // INT96 timestamps (stats-less) and a missing path degrade to None,
+      // never throw — callers fall back to the scan aggregate
+      val asInt96 = s"$root/statsint96"
+      writeEvents(asInt96, timestamp_micros(col("us")), TimestampType)
+      assert(graft.util.ParquetStats.eventsMaxTsMicros(spark, asInt96).isEmpty)
+      assert(graft.util.ParquetStats
+        .eventsMaxTsMicros(spark, s"$root/statsempty").isEmpty)
     }
-    // INT96 timestamps (stats-less) and a missing path degrade to None,
-    // never throw — callers fall back to the scan aggregate
-    val asInt96 = tmp("statsint96")
-    writeEvents(asInt96, timestamp_micros(col("us")), TimestampType)
-    assert(graft.util.ParquetStats.eventsMaxTsMicros(spark, asInt96).isEmpty)
-    assert(graft.util.ParquetStats
-      .eventsMaxTsMicros(spark, tmp("statsempty")).isEmpty)
   }
 
   test("ParquetStats.schema equals the inferred schema for the fixtures " +

@@ -1,6 +1,7 @@
 package graft.boostql
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
@@ -32,6 +33,13 @@ import Ast.exists
   *    joins (comma/CROSS JOIN). In multi-source queries every field
   *    reference must be alias-qualified (`al.series` / `al.series.attr`)
   *    and output columns are prefixed `alias_series[_attr]`.
+  *
+  * A query compiles in five phases (Catalyst's phase-wise structure,
+  * Armbrust et al., SIGMOD 2015), each taking the frame of the one
+  * before: (1) sources and joins; (2) WHERE and its subqueries; (3) the
+  * aggregate, or, without one, the stitched windows and QUALIFY; (4) the
+  * final projection; (5) ORDER BY and paging. They share one analysis of
+  * the query, [[Compilation]].
   */
 object Compiler {
 
@@ -756,11 +764,142 @@ object Compiler {
     case (false, Some(false)) => c.desc_nulls_last
   }
 
+  /** A smoothing constant of ewma/holt/holt_winters, baked into the
+    * kernel's update expressions: a numeric literal in (0, 1] — the only
+    * range where the recurrence is a convex smoothing — or in [0, 1]
+    * where `zeroOk` (a zero beta/gamma switches the trend/season off).
+    */
+  private def smoothParam(fn: String, o: Operand, what: String,
+      zeroOk: Boolean): Double = o match {
+    case OLit(BFloat(a))
+      if (a > 0.0 || (zeroOk && a == 0.0)) && a <= 1.0 => a
+    case OLit(BInt(1)) => 1.0
+    case OLit(BInt(0)) if zeroOk => 0.0
+    case _ => throw CompileException(
+      s"$fn() $what must be a numeric literal in " +
+        (if (zeroOk) "[0, 1]" else "(0, 1]"))
+  }
+
+  /** The bucket width of a bucket-then-stitch form (twa and the smoothing
+    * escapes): a positive fixed-width interval literal. */
+  private def bucketWidth(fn: String, o: Operand): Long = o match {
+    case OLit(BStr(w)) => parseIntervalMicros(w).filter(_ > 0)
+      .getOrElse(throw CompileException(
+        s"$fn() bucket width '$w' must be a positive " +
+          "fixed-width interval (microsecond…day)"))
+    case _ => throw CompileException(
+      s"$fn() bucket width must be a string literal like '1 day'")
+  }
+
+  private val calendarBucket = """\s*(\d+)\s*(week|month|quarter|year)s?\s*""".r
+  /** The unit of a calendar `bucket()` width ('1 week|month|quarter|year',
+    * a date_trunc bucket), or None for any other text. Calendar buckets
+    * are not fixed-width, so only a count of 1 is expressible. */
+  private def calendarUnit(w: String): Option[String] =
+    w.toLowerCase(java.util.Locale.ROOT) match {
+      case calendarBucket(n, unit) =>
+        if (n.toLong != 1L) throw CompileException(
+          s"bucket() calendar width must be exactly '1 $unit' — " +
+            s"multi-$unit buckets are not fixed-width")
+        Some(unit)
+      case _ => None
+    }
+
+  /** The bucket-stitched smoothing escapes: each kernel's argument
+    * signature, whose trailing bucket width selects the escape. The
+    * single-pass kernel takes the same arguments less the width. */
+  private val escapeArgs: Map[String, Seq[String]] = {
+    val holt = Seq("x", "alpha", "beta", "'<width>'")
+    val hw = Seq("x", "alpha", "beta", "gamma", "period", "'<width>'")
+    Map("ewma" -> Seq("x", "alpha", "'<width>'"), "holt" -> holt,
+      "holt_forecast" -> holt, "holt_winters" -> hw,
+      "holt_winters_forecast" -> hw)
+  }
+  private def isEscape(fn: String, arity: Int): Boolean =
+    escapeArgs.get(fn).exists(_.length == arity)
+
+  /** A bucket-stitched smoothing escape's literals; gamma and period are
+    * 0 for the non-seasonal kernels. */
+  private final case class Escape(fn: String, alpha: Double, beta: Double,
+      gamma: Double, period: Int, widthUs: Long)
+  /** A select item compiled as a frame transform and read back as
+    * `__esc_<name>`: a smoothing escape, or the zscore stitch (`esc`
+    * None). */
+  private final case class Stitched(name: String, arg: Operand,
+      part: Seq[RawName], esc: Option[Escape])
+
+  /** The OVER clause of a time-series function: PARTITION BY only. */
+  private def tsOver(fn: String, ord: Seq[(RawName, Boolean, Option[Boolean])],
+      frame: Option[WFrame]): Unit = {
+    if (ord.nonEmpty) throw CompileException(
+      s"$fn() orders by the time axis implicitly — OVER may only " +
+        "carry PARTITION BY")
+    if (frame.isDefined)
+      throw CompileException(s"$fn() does not take a window frame")
+  }
+
+  /** A GROUP BY entry's column name in the compiled frame. */
+  private def keyName(g: Either[SField, ExprItem]): String = g match {
+    case Left(sf)               => sf.inName
+    case Right(ExprItem(_, nm)) => nm
+  }
+
+  /** corr's exact-sums formula over acf/xcorr's materialized pair
+    * columns; zero variance on either side → NULL (never
+    * DIVIDE_BY_ZERO). */
+  private def acfColumn(nm: String): Column = {
+    val x = col(s"__acf_x_$nm")
+    val y = col(s"__acf_y_$nm")
+    val n = count(x).cast("double")
+    val sx = sum(x).cast("double")
+    val sy = sum(y).cast("double")
+    val sxx = sum(x * x).cast("double")
+    val syy = sum(y * y).cast("double")
+    val sxy = sum(x * y).cast("double")
+    val num = n * sxy - sx * sy
+    // guard BEFORE the sqrt: over exact integer sums the variance
+    // terms are exact doubles, and an engine whose NaN compares
+    // HIGH (DuckDB's total order) would pass a sqrt(negative)
+    // guard spelled on the sqrt value
+    val dxx = n * sxx - sx * sx
+    val dyy = n * syy - sy * sy
+    when(dxx > lit(0.0) && dyy > lit(0.0),
+      num / sqrt(dxx) / sqrt(dyy))
+  }
+
+  /** A segment aggregate over its materialized `__seg_` column. */
+  private def segColumn(f: String, nm: String): Column = f match {
+    case "twa" =>
+      val us = unix_micros(col("__ts_0"))
+      val span = (max(us) - min(us)).cast("double")
+      // zero span (all points at one timestamp) has no time axis to
+      // integrate over: NULL, never an ANSI divide-by-zero
+      when(span > lit(0.0),
+        sum(col(s"__seg_$nm")).cast("double") / 2.0 / span)
+    case _ => sum(col(s"__seg_$nm"))
+  }
+
   /** Compile a query; `families` resolves each (domain, family) source to
     * a series-family DataFrame (schema: series, ts, value, tags,
-    * attributes).
+    * attributes). Each phase is a method of one [[Compilation]] and takes
+    * the frame of the phase before it.
     */
   def compile(spec: QuerySpec, families: ((String, String)) => DataFrame): DataFrame = {
+    val c = new Compilation(spec, families)
+    val frame = c.aggregateOrWindow(c.where(c.sourcesAndJoins()))
+    if (c.sortsOutput) c.orderPage(c.project(frame))
+    else c.project(c.orderPage(frame))
+  }
+
+  /** One query's compilation. Its fields are the analysis every phase
+    * reads: the sources, the alias index, the derived tables' inner
+    * frames, field resolution ([[ref]]), the ORDER BY items, the GROUP BY
+    * entries, the alias-rewritten HAVING and QUALIFY, and the expression
+    * scopes ([[row]], [[item]]). Its public methods are the phases, in
+    * the order [[compile]] runs them.
+    */
+  private final class Compilation(spec: QuerySpec,
+      families: ((String, String)) => DataFrame) {
     val sources: Seq[FromRel] = spec.source +: spec.joins.map(_.source)
     val multi = sources.length > 1
     // a family source carries the reserved time axis and attribute map;
@@ -862,6 +1001,15 @@ object Compiler {
       df.columns.contains("ts") &&
         df.schema("ts").dataType ==
           org.apache.spark.sql.types.TimestampType)
+    /** Whether source `i` has a time axis: a series family always does,
+      * a derived table when its subquery outputs a timestamp `ts`. */
+    def hasAxis(i: Int): Boolean = isFam(i) || subHasTs(i)
+    /** The time-axis aggregates read source 0's axis, so they refuse a
+      * join and a derived table without one, each in its own words. */
+    def requireAxis(joinedWhy: String, derivedWhy: String): Unit = {
+      if (multi) throw CompileException(joinedWhy)
+      if (!hasAxis(0)) throw CompileException(derivedWhy)
+    }
 
     // Derived-table field resolution: `col` / `al.col` only — no
     // attribute access (flat columns). `ts` is the reserved axis when
@@ -899,7 +1047,7 @@ object Compiler {
       }
       else n.parts match {
         case Seq(al, t) if aliasIdx.contains(al) && t.equalsIgnoreCase("ts") &&
-            (isFam(aliasIdx(al)) || subHasTs(aliasIdx(al))) =>
+            hasAxis(aliasIdx(al)) =>
           SField(aliasIdx(al), Some(al), FieldRef("ts", None), isTs = true)
         case Seq(al, s) if aliasIdx.contains(al) =>
           SField(aliasIdx(al), Some(al), FieldRef(s, None))
@@ -938,7 +1086,16 @@ object Compiler {
     // AQE broadcasts the sub side when it is small). Correlation is
     // equality conjuncts in the sub's WHERE pairing a sub field with an
     // alias-qualified OUTER field; they become join keys.
-    case class SubAnalysis(local: QuerySpec, pairs: Seq[(SField, RawName)])
+    case class SubAnalysis(local: QuerySpec, pairs: Seq[(SField, RawName)]) {
+      /** The sub frame's key columns, `<prefix>_k<i>`, one per pair. */
+      def keyNames(prefix: String): Seq[String] =
+        pairs.indices.map(i => s"${prefix}_k$i")
+      /** Each outer key equal to its sub key column. */
+      def keyCond(prefix: String): Seq[Column] =
+        pairs.zip(keyNames(prefix)).map { case ((of, _), kn) =>
+          col(of.inName) === col(kn)
+        }
+    }
 
     def analyzeSub(sub: QuerySpec): SubAnalysis = {
       val subAl: Set[String] =
@@ -995,10 +1152,6 @@ object Compiler {
           orderBy = if (sub.limit.isDefined) sub.orderBy else Seq.empty),
         pairs)
     }
-
-    /* applySubPred lives just above the WHERE section below — it needs
-     * the expression scope, which is defined after the reference-collection
-     * phase this block belongs to. */
 
     // for the fieldless-EXISTS check in applySubPred: an ExprItem
     // select list "references a field" when any of its nodes does
@@ -1105,79 +1258,6 @@ object Compiler {
         orderItems.flatMap(o => itemRefs(o.item))).distinct
     if (allRefs.isEmpty) throw CompileException("query references no fields")
 
-    // --- per-source frame: per-series projection + exact-ts align ------
-    // Each series contributes its value column and any referenced
-    // attribute columns. Catalyst dedups the shared scan (the reference
-    // does this by vertex reuse, planner.go:265-290) and pushes
-    // `series = 'x'` into parquet.
-    def sourceFrame(srcIdx: Int): DataFrame = sources(srcIdx) match {
-      case _: SubSource | _: AttrSource =>
-        // Derived table (or the ATTRIBUTES unnest source, which behaves
-        // exactly like one): compile the inner statement to its own
-        // frame (full recursion — set-op compounds, nested derived
-        // tables, its own aggregation all included), then project the
-        // referenced output columns under this scope's internal names.
-        // Catalyst flattens the nesting into ONE plan, so
-        // pushdown/pruning cross the derived-table boundary (an outer
-        // WHERE on a sub column reaches the inner scan unless an
-        // agg/limit blocks it).
-        val subName = sources(srcIdx) match {
-          case s2: SubSource => s2.aliasName
-          case a2: AttrSource => a2.alias.getOrElse(
-            s"ATTRIBUTES(${a2.domain}.${a2.family}, ${a2.series})")
-          case _ => "?"
-        }
-        val inner = innerFrames(srcIdx)
-        val refs = allRefs.filter(_.src == srcIdx)
-        if (refs.isEmpty)
-          throw CompileException(
-            s"derived table $subName is never referenced")
-        val have = inner.columns.toSet
-        val missing = refs.map(_.f.colName).distinct.filterNot(have)
-        if (missing.nonEmpty)
-          throw CompileException(
-            s"derived table $subName has no column(s) " +
-              s"${missing.mkString(", ")} (outputs: ${inner.columns.mkString(", ")})")
-        val projected = refs.distinctBy(_.f.colName)
-          .map(r => col(r.f.colName).as(r.inName))
-        // a surviving axis rides along under its internal name even when
-        // no field spells `ts` — implicit-window functions (rate/locf/…)
-        // and ASOF time matching order by it without referencing it
-        val withAxis =
-          if (subHasTs(srcIdx) && !refs.exists(_.isTs))
-            projected :+ col("ts").as(s"__ts_$srcIdx")
-          else projected
-        inner.select(withAxis: _*)
-      case famSrc: Source => famSourceFrame(srcIdx, famSrc)
-    }
-
-    def famSourceFrame(srcIdx: Int, famSrc: Source): DataFrame = {
-      val family = families((famSrc.domain, famSrc.family))
-      val refs = allRefs.filter(r => r.src == srcIdx && !r.isTs)
-      val seriesNames = refs.map(_.f.series).distinct
-      if (seriesNames.isEmpty)
-        throw CompileException(
-          s"source ${famSrc.domain}.${famSrc.family} is never referenced")
-      def seriesDf(s: String): DataFrame = {
-        val valName = refs.find(r => r.f.series == s && r.f.attr.isEmpty)
-          .map(_.inName).getOrElse(
-            if (multi) s"${famSrc.alias.get}_$s" else s)
-        val attrs = refs.filter(r => r.f.series == s && r.f.attr.isDefined)
-        // `s.k` reads per-point attribute k, falling back to the series-
-        // level tag k (reference: tags are series metadata, seriesfamily
-        // .go:19-37; per-point attributes shadow them on name collision)
-        val cols = Seq(col("ts"), col("value").as(valName)) ++
-          attrs.map(r => coalesce(
-            element_at(col("attributes"), r.f.attr.get),
-            element_at(col("tags"), r.f.attr.get)).as(r.inName))
-        family.filter(col("series") === s).select(cols: _*)
-      }
-      val aligned = seriesNames.map(seriesDf).reduce((a, b) => a.join(b, Seq("ts"), "inner"))
-      // ts is per-source internal (not addressable in the dialect);
-      // rename so multi-source joins don't collide on it
-      aligned.withColumnRenamed("ts", s"__ts_$srcIdx")
-    }
-
     // --- expression compilation ----------------------------------------
     /** Compile an analytic call over its window spec. Ranking and
       * lag/lead require a window ORDER BY (their result is undefined
@@ -1191,11 +1271,7 @@ object Compiler {
       // their ORDER BY is the time axis by definition, and frames make
       // no sense over consecutive-point semantics
       if (tsWinFns.contains(fn) || tsPartFns.contains(fn)) {
-        if (ord.nonEmpty) throw CompileException(
-          s"$fn() orders by the time axis implicitly — OVER may only " +
-            "carry PARTITION BY")
-        if (frame.isDefined)
-          throw CompileException(s"$fn() does not take a window frame")
+        tsOver(fn, ord, frame)
         return tsWinColumn(fn, args, aggOk, part)
       }
       def arg(i: Int): Column = {
@@ -1311,29 +1387,44 @@ object Compiler {
         case _ => throw CompileException(
           "bucket() first argument must be the time axis ts")
       }
-      val calendarBucket = """\s*(\d+)\s*(week|month|quarter|year)s?\s*""".r
       args(1) match {
-        case OLit(BStr(w)) =>
-          w.toLowerCase(java.util.Locale.ROOT) match {
-            case calendarBucket(n, unit) =>
-              if (n.toLong != 1L) throw CompileException(
-                s"bucket() calendar width must be exactly '1 $unit' — " +
-                  s"multi-$unit buckets are not fixed-width")
-              date_trunc(unit, col(axis))
-            case _ =>
-              val widthUs = parseIntervalMicros(w).getOrElse(
-                throw CompileException(
-                  s"bucket() width '$w' must be '<n> <unit>' with unit " +
-                    "microsecond|millisecond|second|minute|hour|day, or " +
-                    "'1 week|month|quarter|year'"))
-              if (widthUs <= 0)
-                throw CompileException("bucket() width must be positive")
-              val us = unix_micros(col(axis))
-              timestamp_micros(us - pmod(us, lit(widthUs)))
-          }
+        case OLit(BStr(w)) => calendarUnit(w) match {
+          case Some(unit) => date_trunc(unit, col(axis))
+          case None =>
+            val widthUs = parseIntervalMicros(w).getOrElse(
+              throw CompileException(
+                s"bucket() width '$w' must be '<n> <unit>' with unit " +
+                  "microsecond|millisecond|second|minute|hour|day, or " +
+                  "'1 week|month|quarter|year'"))
+            if (widthUs <= 0)
+              throw CompileException("bucket() width must be positive")
+            val us = unix_micros(col(axis))
+            timestamp_micros(us - pmod(us, lit(widthUs)))
+        }
         case _ => throw CompileException(
           "bucket() width must be a string literal like '5 minutes'")
       }
+    }
+
+    /** A running-frame kernel (ewma, cusum, holt, holt_winters) over
+      * `c` in time-axis order: Spark's executor applies one declarative
+      * update per row (O(n) per series, no frame rescan). The
+      * WindowExpression is built directly (not via Column.over): the
+      * ColumnNode bridge rewraps any AggregateFunction in an
+      * AggregateExpression, which would strip the kernel's pinned
+      * running ROWS frame.
+      */
+    def runningKernel(kernel: Expression => Expression, c: Column,
+        part: Seq[RawName], axis: String): Column = {
+      import org.apache.spark.sql.catalyst.expressions.{
+        Ascending, SortOrder, UnspecifiedFrame, WindowExpression,
+        WindowSpecDefinition}
+      ColumnBridge.column(WindowExpression(
+        kernel(ColumnBridge.expression(c.cast("double"))),
+        WindowSpecDefinition(
+          part.map(p => ColumnBridge.expression(col(ref(p).inName))),
+          Seq(SortOrder(ColumnBridge.expression(col(axis)), Ascending)),
+          UnspecifiedFrame)))
     }
 
     /** rate/delta/locf — consecutive-point functions over the implicit
@@ -1347,32 +1438,19 @@ object Compiler {
     def tsWinColumn(fn: String, args: Seq[Operand], aggOk: Boolean,
         part: Seq[RawName] = Seq.empty): Column = {
       import org.apache.spark.sql.expressions.{Window => W}
-      val arity =
-        if (fn == "holt_winters" || fn == "holt_winters_forecast") 5
-        else if (fn == "holt" || fn == "holt_forecast" ||
-          fn == "cusum" || fn == "cusum_low") 3
-        else if (fn == "ewma" || fn == "session") 2 else 1
+      // a smoothing kernel's single-pass form takes its escape's
+      // arguments less the width
+      val arity = escapeArgs.get(fn).fold(
+        if (fn == "cusum" || fn == "cusum_low") 3
+        else if (fn == "session") 2 else 1)(_.length - 1)
       // the escaped bucket-stitched forms compile through a frame
       // transform (a join-back, not a window Column), which only a
       // TOP-LEVEL select item can carry — anywhere else (nested in an
       // expression, under QUALIFY, in ORDER BY) refuses with the shape
-      if (fn == "ewma" && args.length == 3) throw CompileException(
-        "the bucket-stitched ewma(x, alpha, '<width>') escape is a " +
-          "top-level select item only (not nested in an expression, " +
+      if (isEscape(fn, args.length)) throw CompileException(
+        s"the bucket-stitched $fn(${escapeArgs(fn).mkString(", ")}) escape " +
+          "is a top-level select item only (not nested in an expression, " +
           "not under QUALIFY) — alias it and reference the alias")
-      if ((fn == "holt" || fn == "holt_forecast") && args.length == 4)
-        throw CompileException(
-          s"the bucket-stitched $fn(x, alpha, beta, '<width>') escape " +
-            "is a top-level select item only (not nested in an " +
-            "expression, not under QUALIFY) — alias it and reference " +
-            "the alias")
-      if ((fn == "holt_winters" || fn == "holt_winters_forecast") &&
-          args.length == 6)
-        throw CompileException(
-          s"the bucket-stitched $fn(x, alpha, beta, gamma, period, " +
-            "'<width>') escape is a top-level select item only (not " +
-            "nested in an expression, not under QUALIFY) — alias it " +
-            "and reference the alias")
       if (args.length != arity)
         throw CompileException(s"$fn() expects exactly $arity argument(s)")
       if (fn == "session") {
@@ -1407,7 +1485,7 @@ object Compiler {
         return sum(brk).over(w.rowsBetween(W.unboundedPreceding, W.currentRow))
       }
       def tsAxis(s: Int): String = {
-        if (!isFam(s) && !subHasTs(s)) throw CompileException(
+        if (!hasAxis(s)) throw CompileException(
           s"$fn() needs a time axis — this derived table does not " +
             s"output a timestamp column named ts; propagate ts through " +
             s"the subquery or apply $fn inside it")
@@ -1468,31 +1546,9 @@ object Compiler {
           when(c.isNotNull, c.cast("double"))
             .otherwise(pv + (nv - pv) * (tsUs - pt) / (nt - pt))
         case "ewma" =>
-          // y_i = a*x_i + (1-a)*y_(i-1): a running-frame
-          // AggregateWindowFunction — Spark's executor applies one
-          // declarative update per row (O(n) per series, no frame
-          // rescan). Alpha must be a number the plan can pin at compile
-          // time; (0, 1] is the only range where the recurrence is a
-          // convex smoothing. The WindowExpression is built directly
-          // (not via Column.over): the ColumnNode bridge rewraps any
-          // AggregateFunction in an AggregateExpression, which would
-          // strip the function's pinned running ROWS frame.
-          val alpha = args(1) match {
-            case OLit(BFloat(a)) if a > 0.0 && a <= 1.0 => a
-            case OLit(BInt(1))                          => 1.0
-            case _ => throw CompileException(
-              "ewma() alpha must be a numeric literal in (0, 1]")
-          }
-          import org.apache.spark.sql.catalyst.expressions.{
-            Ascending, SortOrder, UnspecifiedFrame, WindowExpression,
-            WindowSpecDefinition}
-          ColumnBridge.column(WindowExpression(
-            graft.functions.Ewma(
-              ColumnBridge.expression(c.cast("double")), alpha),
-            WindowSpecDefinition(
-              part.map(p => ColumnBridge.expression(col(ref(p).inName))),
-              Seq(SortOrder(ColumnBridge.expression(col(axis)), Ascending)),
-              UnspecifiedFrame)))
+          // y_i = a*x_i + (1-a)*y_(i-1)
+          val alpha = smoothParam(fn, args(1), "alpha", zeroOk = false)
+          runningKernel(graft.functions.Ewma(_, alpha), c, part, axis)
         case "cusum" | "cusum_low" =>
           // one-sided tabular CUSUM — the changepoint statistic:
           // cusum(x, target, slack) accumulates deviations past
@@ -1510,67 +1566,25 @@ object Compiler {
           val slack = cusumParam(args(2), "slack")
           if (slack < 0.0) throw CompileException(
             s"$fn() slack must be >= 0")
-          import org.apache.spark.sql.catalyst.expressions.{
-            Ascending, SortOrder, UnspecifiedFrame, WindowExpression,
-            WindowSpecDefinition}
-          ColumnBridge.column(WindowExpression(
-            graft.functions.Cusum(
-              ColumnBridge.expression(c.cast("double")), target, slack,
-              low = fn == "cusum_low"),
-            WindowSpecDefinition(
-              part.map(p => ColumnBridge.expression(col(ref(p).inName))),
-              Seq(SortOrder(ColumnBridge.expression(col(axis)), Ascending)),
-              UnspecifiedFrame)))
+          runningKernel(graft.functions.Cusum(_, target, slack,
+            low = fn == "cusum_low"), c, part, axis)
         case "holt" | "holt_forecast" =>
           // Holt double-exponential smoothing — level + linear trend
           // (holt = smoothed level, holt_forecast = one-step-ahead
-          // l + b). Same running-frame kernel shape as ewma, two-slot
-          // state; alpha/beta must be compile-time numeric literals
-          // (they are baked into the update expressions).
-          def smoothParam(o: Operand, what: String, zeroOk: Boolean): Double =
-            o match {
-              case OLit(BFloat(a))
-                if (a > 0.0 || (zeroOk && a == 0.0)) && a <= 1.0 => a
-              case OLit(BInt(1)) => 1.0
-              case OLit(BInt(0)) if zeroOk => 0.0
-              case _ => throw CompileException(
-                s"$fn() $what must be a numeric literal in " +
-                  (if (zeroOk) "[0, 1]" else "(0, 1]"))
-            }
-          val alpha = smoothParam(args(1), "alpha", zeroOk = false)
-          val beta = smoothParam(args(2), "beta", zeroOk = true)
-          import org.apache.spark.sql.catalyst.expressions.{
-            Ascending, SortOrder, UnspecifiedFrame, WindowExpression,
-            WindowSpecDefinition}
-          ColumnBridge.column(WindowExpression(
-            graft.functions.Holt(
-              ColumnBridge.expression(c.cast("double")), alpha, beta,
-              forecast = fn == "holt_forecast"),
-            WindowSpecDefinition(
-              part.map(p => ColumnBridge.expression(col(ref(p).inName))),
-              Seq(SortOrder(ColumnBridge.expression(col(axis)), Ascending)),
-              UnspecifiedFrame)))
+          // l + b), two-slot state
+          val alpha = smoothParam(fn, args(1), "alpha", zeroOk = false)
+          val beta = smoothParam(fn, args(2), "beta", zeroOk = true)
+          runningKernel(graft.functions.Holt(_, alpha, beta,
+            forecast = fn == "holt_forecast"), c, part, axis)
         case "holt_winters" | "holt_winters_forecast" =>
           // Holt-Winters additive triple-exponential smoothing — level +
           // trend + period-slot seasonal cycle (holt_winters = the
           // seasonal fit l + s, holt_winters_forecast = one-step-ahead
-          // l + b + s_next). Same running-frame kernel shape; the
-          // smoothing constants AND the period are baked into the
-          // update expressions, so all four must be compile-time
-          // literals.
-          def hwParam(o: Operand, what: String, zeroOk: Boolean): Double =
-            o match {
-              case OLit(BFloat(a))
-                if (a > 0.0 || (zeroOk && a == 0.0)) && a <= 1.0 => a
-              case OLit(BInt(1)) => 1.0
-              case OLit(BInt(0)) if zeroOk => 0.0
-              case _ => throw CompileException(
-                s"$fn() $what must be a numeric literal in " +
-                  (if (zeroOk) "[0, 1]" else "(0, 1]"))
-            }
-          val alpha = hwParam(args(1), "alpha", zeroOk = false)
-          val beta = hwParam(args(2), "beta", zeroOk = true)
-          val gamma = hwParam(args(3), "gamma", zeroOk = true)
+          // l + b + s_next); the period is baked into the update
+          // expressions too, so it must be a literal
+          val alpha = smoothParam(fn, args(1), "alpha", zeroOk = false)
+          val beta = smoothParam(fn, args(2), "beta", zeroOk = true)
+          val gamma = smoothParam(fn, args(3), "gamma", zeroOk = true)
           val period = args(4) match {
             case OLit(BInt(p)) if p >= 2 && p <= 24 => p.toInt
             case _ => throw CompileException(
@@ -1578,18 +1592,8 @@ object Compiler {
                 "(the seasonal cycle length in observations: 7 for " +
                 "day-of-week, 12 for month, 24 for hour-of-day)")
           }
-          import org.apache.spark.sql.catalyst.expressions.{
-            Ascending, SortOrder, UnspecifiedFrame, WindowExpression,
-            WindowSpecDefinition}
-          ColumnBridge.column(WindowExpression(
-            graft.functions.HoltWinters(
-              ColumnBridge.expression(c.cast("double")), alpha, beta,
-              gamma, period,
-              forecast = fn == "holt_winters_forecast"),
-            WindowSpecDefinition(
-              part.map(p => ColumnBridge.expression(col(ref(p).inName))),
-              Seq(SortOrder(ColumnBridge.expression(col(axis)), Ascending)),
-              UnspecifiedFrame)))
+          runningKernel(graft.functions.HoltWinters(_, alpha, beta, gamma,
+            period, forecast = fn == "holt_winters_forecast"), c, part, axis)
       }
     }
     /** The query's own [[Scope]]: a name resolves through [[ref]] to its
@@ -1638,6 +1642,81 @@ object Compiler {
     }
     // WHERE, ON and aggregate arguments: no aggregates, no windows
     val row = new Q(aggOk = false, winOk = false)
+
+    // ==== phase 1: sources and joins ====================================
+
+    // --- per-source frame: per-series projection + exact-ts align ------
+    // Each series contributes its value column and any referenced
+    // attribute columns. Catalyst dedups the shared scan (the reference
+    // does this by vertex reuse, planner.go:265-290) and pushes
+    // `series = 'x'` into parquet.
+    def sourceFrame(srcIdx: Int): DataFrame = sources(srcIdx) match {
+      case _: SubSource | _: AttrSource =>
+        // Derived table (or the ATTRIBUTES unnest source, which behaves
+        // exactly like one): compile the inner statement to its own
+        // frame (full recursion — set-op compounds, nested derived
+        // tables, its own aggregation all included), then project the
+        // referenced output columns under this scope's internal names.
+        // Catalyst flattens the nesting into ONE plan, so
+        // pushdown/pruning cross the derived-table boundary (an outer
+        // WHERE on a sub column reaches the inner scan unless an
+        // agg/limit blocks it).
+        val subName = sources(srcIdx) match {
+          case s2: SubSource => s2.aliasName
+          case a2: AttrSource => a2.alias.getOrElse(
+            s"ATTRIBUTES(${a2.domain}.${a2.family}, ${a2.series})")
+          case _ => "?"
+        }
+        val inner = innerFrames(srcIdx)
+        val refs = allRefs.filter(_.src == srcIdx)
+        if (refs.isEmpty)
+          throw CompileException(
+            s"derived table $subName is never referenced")
+        val have = inner.columns.toSet
+        val missing = refs.map(_.f.colName).distinct.filterNot(have)
+        if (missing.nonEmpty)
+          throw CompileException(
+            s"derived table $subName has no column(s) " +
+              s"${missing.mkString(", ")} (outputs: ${inner.columns.mkString(", ")})")
+        val projected = refs.distinctBy(_.f.colName)
+          .map(r => col(r.f.colName).as(r.inName))
+        // a surviving axis rides along under its internal name even when
+        // no field spells `ts` — implicit-window functions (rate/locf/…)
+        // and ASOF time matching order by it without referencing it
+        val withAxis =
+          if (subHasTs(srcIdx) && !refs.exists(_.isTs))
+            projected :+ col("ts").as(s"__ts_$srcIdx")
+          else projected
+        inner.select(withAxis: _*)
+      case famSrc: Source => famSourceFrame(srcIdx, famSrc)
+    }
+
+    def famSourceFrame(srcIdx: Int, famSrc: Source): DataFrame = {
+      val family = families((famSrc.domain, famSrc.family))
+      val refs = allRefs.filter(r => r.src == srcIdx && !r.isTs)
+      val seriesNames = refs.map(_.f.series).distinct
+      if (seriesNames.isEmpty)
+        throw CompileException(
+          s"source ${famSrc.domain}.${famSrc.family} is never referenced")
+      def seriesDf(s: String): DataFrame = {
+        val valName = refs.find(r => r.f.series == s && r.f.attr.isEmpty)
+          .map(_.inName).getOrElse(
+            if (multi) s"${famSrc.alias.get}_$s" else s)
+        val attrs = refs.filter(r => r.f.series == s && r.f.attr.isDefined)
+        // `s.k` reads per-point attribute k, falling back to the series-
+        // level tag k (reference: tags are series metadata, seriesfamily
+        // .go:19-37; per-point attributes shadow them on name collision)
+        val cols = Seq(col("ts"), col("value").as(valName)) ++
+          attrs.map(r => coalesce(
+            element_at(col("attributes"), r.f.attr.get),
+            element_at(col("tags"), r.f.attr.get)).as(r.inName))
+        family.filter(col("series") === s).select(cols: _*)
+      }
+      val aligned = seriesNames.map(seriesDf).reduce((a, b) => a.join(b, Seq("ts"), "inner"))
+      // ts is per-source internal (not addressable in the dialect);
+      // rename so multi-source joins don't collide on it
+      aligned.withColumnRenamed("ts", s"__ts_$srcIdx")
+    }
 
     // ASOF JOIN: the ON clause must be a conjunction of '=' comparisons
     // pairing the newly-joined source with an earlier one; time is
@@ -1700,32 +1779,33 @@ object Compiler {
         .filter(col(rightTs).isNotNull)
     }
 
-    // --- fold sources through joins ------------------------------------
-    // joinType "left"/"right"/"full" null-extends the unmatched side(s),
-    // exactly Spark's outer-join semantics
-    def hinted(df: DataFrame, i: Int): DataFrame =
-      if (broadcastIdx(i)) broadcast(df) else df
-    val joined: DataFrame = spec.joins.zipWithIndex.foldLeft(hinted(sourceFrame(0), 0)) {
-      case (acc, (JoinClause(_, on, joinType, asofOpts), i)) =>
-        val right = hinted(sourceFrame(i + 1), i + 1)
-        (joinType, on) match {
-          case ("asof", Some(cond)) =>
-            // time matching is implicit on the time axes — the anchor
-            // (source 0) and the joined source each need one: a series
-            // family always has it; a derived table only when its
-            // subquery propagated a timestamp `ts` output column
-            if ((!isFam(0) && !subHasTs(0)) ||
-                (!isFam(i + 1) && !subHasTs(i + 1))) throw CompileException(
-              "ASOF JOIN requires a time axis on both sides (a series " +
-                "family, or a derived table whose subquery outputs a " +
-                "timestamp column named ts)")
-            asofJoin(acc, right, cond, i, asofOpts.getOrElse(AsofOpts()))
-          case ("asof", None) =>
-            throw CompileException("ASOF JOIN requires an ON clause")
-          case (_, Some(cond)) => acc.join(right, row.predicate(cond), joinType)
-          case (_, None)       => acc.crossJoin(right)
-        }
+    /** Phase 1: each source's frame, folded left through the joins.
+      * joinType "left"/"right"/"full" null-extends the unmatched
+      * side(s), exactly Spark's outer-join semantics. */
+    def sourcesAndJoins(): DataFrame = {
+      def hinted(df: DataFrame, i: Int): DataFrame =
+        if (broadcastIdx(i)) broadcast(df) else df
+      spec.joins.zipWithIndex.foldLeft(hinted(sourceFrame(0), 0)) {
+        case (acc, (JoinClause(_, on, joinType, asofOpts), i)) =>
+          val right = hinted(sourceFrame(i + 1), i + 1)
+          (joinType, on) match {
+            case ("asof", Some(cond)) =>
+              // time matching is implicit on the time axes — the anchor
+              // (source 0) and the joined source each need one
+              if (!hasAxis(0) || !hasAxis(i + 1)) throw CompileException(
+                "ASOF JOIN requires a time axis on both sides (a series " +
+                  "family, or a derived table whose subquery outputs a " +
+                  "timestamp column named ts)")
+              asofJoin(acc, right, cond, i, asofOpts.getOrElse(AsofOpts()))
+            case ("asof", None) =>
+              throw CompileException("ASOF JOIN requires an ON clause")
+            case (_, Some(cond)) => acc.join(right, row.predicate(cond), joinType)
+            case (_, None)       => acc.crossJoin(right)
+          }
+      }
     }
+
+    // ==== phase 2: WHERE and its subqueries =============================
 
     // --- scalar subqueries (WHERE + SELECT; correlated via equality) ----
     // `WHERE cpu > (SELECT avg(cpu) FROM …)`: each distinct uncorrelated
@@ -1746,14 +1826,16 @@ object Compiler {
         case OScalarSub(s2) => Seq((s2, inAgg))
         case a: OAggX       => children(a).flatMap(scalarSubs(_, inAgg = true))
       }
-    val whereScalarSubs: Seq[QuerySpec] =
-      spec.where.toSeq.flatMap(scalarSubs(_)).map(_._1)
-    val (aggArgScalarSubs, selectScalarSubs) = spec.select.flatMap {
-      case ExprItem(e, _) => scalarSubs(e); case _ => Seq.empty
-    }.partition(_._2) match {
-      case (in, out) => (in.map(_._1).distinct, out.map(_._1).distinct)
-    }
-    locally {
+    /** The scalar subqueries that attach before the aggregation (or
+      * the projection) and those that attach after it. */
+    lazy val (preScalarSubs, postScalarSubs) = {
+      val whereScalarSubs: Seq[QuerySpec] =
+        spec.where.toSeq.flatMap(scalarSubs(_)).map(_._1)
+      val (aggArgScalarSubs, selectScalarSubs) = spec.select.flatMap {
+        case ExprItem(e, _) => scalarSubs(e); case _ => Seq.empty
+      }.partition(_._2) match {
+        case (in, out) => (in.map(_._1).distinct, out.map(_._1).distinct)
+      }
       val elsewhere =
         spec.having.toSeq.flatMap(scalarSubs(_)) ++
         spec.joins.flatMap(_.on.toSeq.flatMap(scalarSubs(_))) ++
@@ -1761,38 +1843,37 @@ object Compiler {
           case ExprItem(e, _) => scalarSubs(e); case _ => Seq.empty })
       if (elsewhere.nonEmpty) throw CompileException(
         "scalar subqueries are only supported in WHERE and SELECT items")
-    }
-    // outer aggregation shape, needed before the aggregation section:
-    // SELECT-item subs attach post-agg there (their column must survive
-    // the groupBy), and correlated ones cannot (their join keys are
-    // pre-aggregation columns). A sub inside an aggregate argument is
-    // pre-aggregation scope: it attaches before the groupBy, as WHERE's
-    // do, and a correlated one joins on pre-aggregation keys.
-    val outerHasAgg = spec.groupBy.nonEmpty || spec.having.nonEmpty ||
-      spec.select.exists {
-        case _: AggItem     => true
-        case ExprItem(e, _) => containsAgg(e)
-        case _              => false
+      // outer aggregation shape: SELECT-item subs attach post-agg (their
+      // column must survive the groupBy), and correlated ones cannot
+      // (their join keys are pre-aggregation columns). A sub inside an
+      // aggregate argument is pre-aggregation scope: it attaches before
+      // the groupBy, as WHERE's do, and a correlated one joins on
+      // pre-aggregation keys.
+      val outerHasAgg = spec.groupBy.nonEmpty || spec.having.nonEmpty ||
+        spec.select.exists {
+          case _: AggItem     => true
+          case ExprItem(e, _) => containsAgg(e)
+          case _              => false
+        }
+      // A correlated SELECT sub in a GROUPED outer query is legal when it
+      // correlates on grouping keys only (ANSI: any outer column the sub
+      // reads must be single-valued per group). The grouping output column
+      // keeps its pre-agg inName, so the same keyed left join attaches
+      // post-aggregation — still one aggregate pass per sub, never a
+      // per-group rescan.
+      if (outerHasAgg) {
+        val groupKeyInNames: Set[String] =
+          groupEntries.collect { case Left(sf) => sf.inName }.toSet
+        for (s <- selectScalarSubs; of <- outerKeys(s))
+          if (!groupKeyInNames.contains(of.inName))
+            throw CompileException(
+              "correlated scalar subquery in the SELECT of a grouped query " +
+                s"must correlate on grouping keys (${of.outName} is not one)")
       }
-    // A correlated SELECT sub in a GROUPED outer query is legal when it
-    // correlates on grouping keys only (ANSI: any outer column the sub
-    // reads must be single-valued per group). The grouping output column
-    // keeps its pre-agg inName, so the same keyed left join attaches
-    // post-aggregation — still one aggregate pass per sub, never a
-    // per-group rescan.
-    if (outerHasAgg) {
-      val groupKeyInNames: Set[String] =
-        groupEntries.collect { case Left(sf) => sf.inName }.toSet
-      for (s <- selectScalarSubs; of <- outerKeys(s))
-        if (!groupKeyInNames.contains(of.inName))
-          throw CompileException(
-            "correlated scalar subquery in the SELECT of a grouped query " +
-              s"must correlate on grouping keys (${of.outName} is not one)")
+      ((whereScalarSubs ++ aggArgScalarSubs ++
+        (if (outerHasAgg) Seq.empty else selectScalarSubs)).distinct,
+        if (outerHasAgg) selectScalarSubs else Seq.empty)
     }
-    val preScalarSubs = (whereScalarSubs ++ aggArgScalarSubs ++
-      (if (outerHasAgg) Seq.empty else selectScalarSubs)).distinct
-    val postScalarSubs =
-      if (outerHasAgg) selectScalarSubs else Seq.empty
     def attachScalarSubs(df: DataFrame, subs: Seq[QuerySpec]): DataFrame =
       subs.foldLeft(df) { (acc, s2) =>
         if (s2.select.length != 1)
@@ -1827,16 +1908,14 @@ object Compiler {
           // analyzeSub rejected GROUP BY/HAVING/DISTINCT/LIMIT already;
           // grouping by the correlation keys makes it one row per key —
           // the single-row proof per outer row
-          val keyCols = a.pairs.indices.map(i => s"${scalarColName(s2)}_k$i")
+          val keyCols = a.keyNames(scalarColName(s2))
           val spec2 = a.local.copy(
             select = a.local.select ++ a.pairs.map(p => FieldItem(p._2)),
             groupBy = a.pairs.map(_._2))
           val named = compile(spec2, families)
             .toDF(scalarColName(s2) +: keyCols: _*)
-          val cond = a.pairs.zip(keyCols).map { case ((of, _), kn) =>
-            col(of.inName) === col(kn)
-          }.reduce(_ && _)
-          val joined2 = acc.join(named, cond, "left").drop(keyCols: _*)
+          val joined2 = acc.join(named,
+            a.keyCond(scalarColName(s2)).reduce(_ && _), "left").drop(keyCols: _*)
           if (isCount)
             joined2.withColumn(scalarColName(s2),
               coalesce(col(scalarColName(s2)), lit(0L)))
@@ -1873,11 +1952,8 @@ object Compiler {
           val spec2 = a.local.copy(select = a.pairs.map(p => FieldItem(p._2)),
             limit = None, offset = None, distinct = false)
           val named = compile(spec2, families)
-            .toDF(a.pairs.indices.map(i => s"__sq${j}_k$i"): _*)
-          val cond = a.pairs.zipWithIndex.map { case ((of, _), i) =>
-            col(of.inName) === col(s"__sq${j}_k$i")
-          }.reduce(_ && _)
-          df.join(named, cond, jt)
+            .toDF(a.keyNames(s"__sq$j"): _*)
+          df.join(named, a.keyCond(s"__sq$j").reduce(_ && _), jt)
         }
       case InSubE(x, sub, neg) =>
         val a = analyzeSub(sub)
@@ -1886,12 +1962,10 @@ object Compiler {
         val spec2 = a.local.copy(
           select = a.local.select ++ a.pairs.map(p => FieldItem(p._2)))
         val named = compile(spec2, families)
-          .toDF(s"__sq${j}_v" +: a.pairs.indices.map(i => s"__sq${j}_k$i"): _*)
+          .toDF(s"__sq${j}_v" +: a.keyNames(s"__sq$j"): _*)
         val xc = row.operand(x)
         val vc = col(s"__sq${j}_v")
-        val keyCond = a.pairs.zipWithIndex.map { case ((of, _), i) =>
-          col(of.inName) === col(s"__sq${j}_k$i")
-        }
+        val keyCond = a.keyCond(s"__sq$j")
         if (!neg)
           df.join(named, (keyCond :+ (xc === vc)).reduce(_ && _), "left_semi")
         else {
@@ -1910,7 +1984,7 @@ object Compiler {
             "ANY/ALL subquery must select exactly one item")
         val spec2 = a.local.copy(
           select = a.local.select ++ a.pairs.map(p => FieldItem(p._2)))
-        val keyNames = a.pairs.indices.map(i => s"__sq${j}_k$i")
+        val keyNames = a.keyNames(s"__sq$j")
         val listed = compile(spec2, families)
           .toDF(s"__sq${j}_v" +: keyNames: _*)
         // reduce the (per-correlation-key) list to ONE aggregate row:
@@ -1932,9 +2006,7 @@ object Compiler {
           case "<=" => xc <= mc
           case o    => throw CompileException(s"ANY/ALL does not take $o")
         }
-        val keyCond = a.pairs.zipWithIndex.map { case ((of, _), i) =>
-          col(of.inName) === col(s"__sq${j}_k$i")
-        }
+        val keyCond = a.keyCond(s"__sq$j")
         if (!neg)
           // x op ANY: true iff some non-null v satisfies — iff x beats
           // the extreme (null-propagating, so empty/all-null key lists
@@ -1953,37 +2025,40 @@ object Compiler {
       case other => throw CompileException(s"not a subquery predicate: $other")
     }
 
-    // --- WHERE ----------------------------------------------------------
-    // split into top-level conjuncts: subquery predicates peel off into
-    // semi/anti joins (NOT folds into the predicate's negated flag, so
-    // `NOT EXISTS` / double negation normalize away); everything else
-    // folds back into one codegen'd filter
-    def normalizeConjunct(e: BExpr): BExpr = e match {
-      case NotE(x) => normalizeConjunct(x) match {
-        case InSubE(o, s, n) => InSubE(o, s, !n)
-        case QuantE(o2, x, s, n) => QuantE(o2, x, s, !n)
-        case ExistsE(s, n)   => ExistsE(s, !n)
-        case nx              => NotE(nx)
+    /** Phase 2: attach the pre-aggregation scalar subqueries, then filter
+      * on WHERE. Its top-level conjuncts split: subquery predicates peel
+      * off into semi/anti joins (NOT folds into the predicate's negated
+      * flag, so `NOT EXISTS` / double negation normalize away); the rest
+      * fold back into one codegen'd filter. */
+    def where(joined: DataFrame): DataFrame = {
+      def normalizeConjunct(e: BExpr): BExpr = e match {
+        case NotE(x) => normalizeConjunct(x) match {
+          case InSubE(o, s, n) => InSubE(o, s, !n)
+          case QuantE(o2, x, s, n) => QuantE(o2, x, s, !n)
+          case ExistsE(s, n)   => ExistsE(s, !n)
+          case nx              => NotE(nx)
+        }
+        case x => x
       }
-      case x => x
-    }
-    def whereConjuncts(e: BExpr): Seq[BExpr] = e match {
-      case AndE(l, r) => whereConjuncts(l) ++ whereConjuncts(r)
-      case x          => Seq(normalizeConjunct(x))
-    }
-    val conjs = spec.where.toSeq.flatMap(whereConjuncts)
-    val (subPreds, plainPreds) = conjs.partition {
-      case _: InSubE | _: ExistsE | _: QuantE => true
-      case _ => false
-    }
-    val withScalars = attachScalarSubs(joined, preScalarSubs)
-    val filtered0 = plainPreds.reduceOption(AndE)
-      .fold(withScalars)(w => withScalars.filter(row.predicate(w)))
-    val filtered = subPreds.zipWithIndex.foldLeft(filtered0) {
-      case (df, (p, j)) => applySubPred(df, p, j)
+      def whereConjuncts(e: BExpr): Seq[BExpr] = e match {
+        case AndE(l, r) => whereConjuncts(l) ++ whereConjuncts(r)
+        case x          => Seq(normalizeConjunct(x))
+      }
+      val withScalars = attachScalarSubs(joined, preScalarSubs)
+      val (subPreds, plainPreds) = spec.where.toSeq.flatMap(whereConjuncts)
+        .partition {
+          case _: InSubE | _: ExistsE | _: QuantE => true
+          case _ => false
+        }
+      val filtered0 = plainPreds.reduceOption(AndE)
+        .fold(withScalars)(w => withScalars.filter(row.predicate(w)))
+      subPreds.zipWithIndex.foldLeft(filtered0) {
+        case (df, (p, j)) => applySubPred(df, p, j)
+      }
     }
 
-    // --- aggregation / projection ---------------------------------------
+    // ==== phase 3: aggregate, or windows =================================
+
     // the aggregate calls of an operand or a boolean tree (HAVING
     // conditions, CASE WHEN conditions)
     def aggs(n: Node): Seq[AggSpec] = collect(n) {
@@ -2001,7 +2076,7 @@ object Compiler {
       case ExprItem(e, _) => aggs(e)
       case _              => Seq.empty
     }
-    val hasAgg = spec.select.exists(itemAggs(_).nonEmpty) ||
+    lazy val hasAgg: Boolean = spec.select.exists(itemAggs(_).nonEmpty) ||
       spec.groupBy.nonEmpty || spec.having.nonEmpty
 
     // windows + grouping in one query is DataFrame-tier territory —
@@ -2014,63 +2089,20 @@ object Compiler {
       case OFn(f, _) if tsWinFns.contains(f) || tsPartFns.contains(f) => true
       case _: OAggX | _: InSubE | _: QuantE => false
     }
-    val hasWin = (spec.select ++ orderItems.map(_.item)).exists {
+    lazy val hasWin: Boolean = (spec.select ++ orderItems.map(_.item)).exists {
       case ExprItem(e, _) => hasWinOp(e)
       case _              => false
     }
-    if (hasWin && hasAgg)
-      throw CompileException(
-        "window functions cannot be combined with GROUP BY/HAVING/aggregates")
-    // under QUALIFY a window value must come from the pre-filter
-    // partitions; only SELECTED window expressions are materialized
-    // there, so an ORDER BY window with no structurally-equal select
-    // item would silently re-rank the filtered rows — refuse instead
-    // (matching by EXPRESSION, not item: an unaliased ORDER BY copy of
-    // a selected window is the same pre-filter value and is fine)
-    def selectedWinExpr(e: Operand): Option[String] =
-      spec.select.collectFirst { case ExprItem(e2, nm2) if e2 == e => nm2 }
-    if (qualify2.isDefined)
-      orderItems.map(_.item).foreach {
-        case ExprItem(e, _) if hasWinOp(e) && selectedWinExpr(e).isEmpty =>
-          throw CompileException(
-            "under QUALIFY, ORDER BY may use window expressions only " +
-              "through selected items (their pre-filter values)")
-        case _ => ()
-      }
 
-    /** Escaped/auto-stitched smoothing detection (hoisted so the final
-      * projection can read the materialized `__esc_<alias>` columns
-      * back): top-level zscore items (auto), three-argument ewma items,
-      * four-argument holt/holt_forecast items and six-argument
-      * holt_winters[_forecast] items (opt-in width) — each compiled in
-      * the non-aggregate branch below as a frame transform instead of a
-      * per-key window Column. The Option carries
-      * (fn, alpha, beta, gamma, period, widthUs) — gamma/period are 0
-      * for the non-seasonal kernels; None = the zscore stitch.
+    /** Escaped/auto-stitched smoothing detection (the final projection
+      * reads the materialized `__esc_<alias>` columns back): top-level
+      * zscore items (auto) and the smoothing kernels' bucket-width forms
+      * (opt-in, [[escapeArgs]]) — each compiled by [[windows]] as a frame
+      * transform instead of a per-key window Column.
       */
-    val escapable: Seq[(String, Operand, Seq[RawName],
-        Option[(String, Double, Double, Double, Int, Long)])] =
-      if (qualify2.isDefined || hasAgg) Seq.empty
-      else if (multi || (!isFam(0) && !subHasTs(0))) Seq.empty
+    lazy val escapable: Seq[Stitched] =
+      if (qualify2.isDefined || hasAgg || multi || !hasAxis(0)) Seq.empty
       else {
-        def smoothLit(fn: String, o: Operand, what: String,
-            zeroOk: Boolean): Double = o match {
-          case OLit(BFloat(a))
-            if (a > 0.0 || (zeroOk && a == 0.0)) && a <= 1.0 => a
-          case OLit(BInt(1)) => 1.0
-          case OLit(BInt(0)) if zeroOk => 0.0
-          case _ => throw CompileException(
-            s"$fn() $what must be a numeric literal in " +
-              (if (zeroOk) "[0, 1]" else "(0, 1]"))
-        }
-        def widthLit(fn: String, o: Operand): Long = o match {
-          case OLit(BStr(w)) => parseIntervalMicros(w).filter(_ > 0)
-            .getOrElse(throw CompileException(
-              s"$fn() bucket width '$w' must be a positive " +
-                "fixed-width interval (microsecond…day)"))
-          case _ => throw CompileException(
-            s"$fn() bucket width must be a string literal like '1 day'")
-        }
         def periodLit(fn: String, o: Operand): Int = o match {
           case OLit(BInt(p)) if p >= 2 && p <= 8 => p.toInt
           case _ => throw CompileException(
@@ -2078,55 +2110,124 @@ object Compiler {
               "[2, 8] — the (2+p)² matrix-power buffer is " +
               "codegen-bounded; longer cycles use the single-pass form")
         }
-        def escOf(fn: String, args: Seq[Operand])
-            : (Operand, (String, Double, Double, Double, Int, Long)) =
+        def escOf(fn: String, args: Seq[Operand]): Escape = {
+          def smooth(i: Int, what: String): Double =
+            smoothParam(fn, args(i), what, zeroOk = i > 1)
           fn match {
             case "ewma" =>
-              (args.head, (fn, smoothLit(fn, args(1), "alpha",
-                zeroOk = false), 0.0, 0.0, 0, widthLit(fn, args(2))))
+              Escape(fn, smooth(1, "alpha"), 0.0, 0.0, 0, bucketWidth(fn, args(2)))
             case "holt" | "holt_forecast" =>
-              (args.head, (fn, smoothLit(fn, args(1), "alpha",
-                zeroOk = false), smoothLit(fn, args(2), "beta",
-                zeroOk = true), 0.0, 0, widthLit(fn, args(3))))
+              Escape(fn, smooth(1, "alpha"), smooth(2, "beta"), 0.0, 0,
+                bucketWidth(fn, args(3)))
             case _ => // holt_winters | holt_winters_forecast
-              (args.head, (fn, smoothLit(fn, args(1), "alpha",
-                zeroOk = false), smoothLit(fn, args(2), "beta",
-                zeroOk = true), smoothLit(fn, args(3), "gamma",
-                zeroOk = true), periodLit(fn, args(4)),
-                widthLit(fn, args(5))))
+              Escape(fn, smooth(1, "alpha"), smooth(2, "beta"),
+                smooth(3, "gamma"), periodLit(fn, args(4)), bucketWidth(fn, args(5)))
           }
-        def escaped(fn: String, n: Int): Boolean =
-          (fn == "ewma" && n == 3) ||
-            ((fn == "holt" || fn == "holt_forecast") && n == 4) ||
-            ((fn == "holt_winters" || fn == "holt_winters_forecast") &&
-              n == 6)
-        def winShape(part: Seq[RawName],
-            ord: Seq[(RawName, Boolean, Option[Boolean])],
-            frame: Option[WFrame], fn: String): Seq[RawName] = {
-          if (ord.nonEmpty) throw CompileException(
-            s"$fn() orders by the time axis implicitly — OVER may " +
-              "only carry PARTITION BY")
-          if (frame.isDefined)
-            throw CompileException(s"$fn() does not take a window frame")
-          part
         }
         spec.select.collect {
           case ExprItem(OFn("zscore", Seq(arg)), nm) =>
-            (nm, arg, Seq.empty[RawName], None)
+            Stitched(nm, arg, Seq.empty, None)
           case ExprItem(OWin("zscore", Seq(arg), part, ord, frame), nm) =>
-            (nm, arg, winShape(part, ord, frame, "zscore"), None)
-          case ExprItem(OFn(fn, args), nm) if escaped(fn, args.length) =>
-            val (arg, e) = escOf(fn, args)
-            (nm, arg, Seq.empty[RawName], Some(e))
+            tsOver("zscore", ord, frame)
+            Stitched(nm, arg, part, None)
+          case ExprItem(OFn(fn, args), nm) if isEscape(fn, args.length) =>
+            Stitched(nm, args.head, Seq.empty, Some(escOf(fn, args)))
           case ExprItem(OWin(fn, args, part, ord, frame), nm)
-            if escaped(fn, args.length) =>
-            val (arg, e) = escOf(fn, args)
-            (nm, arg, winShape(part, ord, frame, fn), Some(e))
+            if isEscape(fn, args.length) =>
+            val e = escOf(fn, args)
+            tsOver(fn, ord, frame)
+            Stitched(nm, args.head, part, Some(e))
         }
       }
-    val escapedNames: Set[String] = escapable.map(_._1).toSet
+    lazy val escapedNames: Set[String] = escapable.map(_.name).toSet
 
-    val projected: DataFrame = if (hasAgg) {
+    /** Phase 3: the aggregate of the filtered frame, or, with no
+      * aggregate, its windows (stitched escapes, then QUALIFY). */
+    def aggregateOrWindow(filtered: DataFrame): DataFrame = {
+      if (hasAgg && hasWin)
+        throw CompileException(
+          "window functions cannot be combined with GROUP BY/HAVING/aggregates")
+      // under QUALIFY a window value must come from the pre-filter
+      // partitions; only SELECTED window expressions are materialized
+      // there, so an ORDER BY window with no structurally-equal select
+      // item would silently re-rank the filtered rows — refuse instead
+      // (matching by EXPRESSION, not item: an unaliased ORDER BY copy of
+      // a selected window is the same pre-filter value and is fine)
+      if (qualify2.isDefined)
+        orderItems.map(_.item).foreach {
+          case ExprItem(e, _) if hasWinOp(e) &&
+              !spec.select.exists { case ExprItem(e2, _) => e2 == e; case _ => false } =>
+            throw CompileException(
+              "under QUALIFY, ORDER BY may use window expressions only " +
+                "through selected items (their pre-filter values)")
+          case _ => ()
+        }
+      val out = if (hasAgg) aggregate(filtered) else windows(filtered)
+      if (hasAgg && spec.qualify.isDefined)
+        throw CompileException(
+          "QUALIFY requires a window-function query; aggregates filter with HAVING")
+      if (!hasAgg && spec.fill.isDefined)
+        throw CompileException(
+          "FILL requires a GROUP BY bucket(…) aggregate query — there is " +
+            "no bucket axis to densify here")
+      out
+    }
+
+    /** approx_percentile(x, p): interpolated percentile of a
+      * k-bounded deterministic uniform row sample
+      * ([[graft.functions.KmvSampleAgg]], k = 256) keyed on the md5
+      * of the source's epoch-micros time axis — the engine's unique
+      * row key — so the estimate is partitioning-invariant and
+      * engine-replayable (rank by md5, keep k, interpolate: a full
+      * DuckDB oracle, unlike engine-native GK/t-digest sketches).
+      * Groups below k hold every row, making the estimate exact.
+      * Needs compile context (the axis), so it lives here rather
+      * than in aggFnColumn. Single-source only: a joined frame can
+      * repeat the sampling axis, which the distinct-hash buffer
+      * would silently dedup.
+      */
+    def sampleSketchColumn(fnName: String, v: Column): Column = {
+      requireAxis(
+        s"$fnName() is single-source only — joined frames " +
+          "can repeat the sampling time axis",
+        s"$fnName() samples on the time axis — this derived " +
+          "table does not output a timestamp column named ts")
+      val key = graft.operators.SketchOps
+        .portableHash60(unix_micros(col("__ts_0")))
+      graft.functions.GraftFunctions.kmvSample(
+        key, v.cast("double"), SampleK)
+    }
+    /** first(x) / last(x): the value at the earliest / latest point of
+      * the group on the family's time axis — the TSDB first/last
+      * aggregate (InfluxQL FIRST/LAST, TimescaleDB first/last), with
+      * the axis IMPLIED by the source the way bucket()/rate() imply
+      * it. Compiles to one lexicographic struct extreme —
+      * `min/max(struct(ts, x)).x` over rows where x is non-null — a
+      * single codegen'd hash-aggregate expression with constant
+      * per-group state (no sort, no window): partial extremes combine
+      * map-side, so the shape holds at any group size. The (ts, x)
+      * composite makes equal-timestamp ties deterministic (smallest /
+      * largest value wins), which is what lets a DuckDB
+      * `first(x ORDER BY ts, x)` ordered aggregate replay it exactly.
+      * Needs compile context (the axis), so it lives here like
+      * approx_percentile; single-source only — a joined frame has no
+      * unambiguous time axis.
+      */
+    def timeOrderedColumn(fn: String, v: Column): Column = {
+      requireAxis(
+        s"$fn() is single-source only — joined frames have no " +
+          "unambiguous time axis",
+        s"$fn() takes the value at the group's time-axis extreme — " +
+          "this derived table does not output a timestamp column named ts")
+      val key = when(v.isNotNull, struct(col("__ts_0").as("t"), v.as("v")))
+      (if (fn == "first") min(key) else max(key)).getField("v")
+    }
+
+    /** The aggregate path of phase 3: the optional sliding-bucket
+      * expansion and window pre-pass, the grouping (plain, ROLLUP, CUBE
+      * or GROUPING SETS), HAVING, FILL, and the SELECT-item scalar
+      * subqueries that attach after the aggregation. */
+    def aggregate(filtered: DataFrame): DataFrame = {
       /** SLIDING buckets: `GROUP BY bucket(ts, '<width>', '<slide>')`
         * (by select alias) expands each row MAP-SIDE into its
         * width/slide overlapping windows — explode over an epoch-aligned
@@ -2191,10 +2292,6 @@ object Compiler {
           filtered.withColumn(nm,
             explode(transform(starts, s => timestamp_micros(s))))
       }
-      // (groupCols is defined after the twa pre-pass below: when twa()
-      // materializes the expression keys as columns, the aggregate must
-      // group on THOSE attributes so the lead-window's exchange is the
-      // aggregate's exchange)
       // every bare (non-aggregated) select field must be a grouping key —
       // inside ExprItems too (OAgg args are not bare: they aggregate);
       // an ExprItem that IS a grouping entry is exempt (it's the key)
@@ -2253,63 +2350,6 @@ object Compiler {
           throw CompileException("grouping() takes a single grouping-key field")
         case _ => ()
       }
-      /** approx_percentile(x, p): interpolated percentile of a
-        * k-bounded deterministic uniform row sample
-        * ([[graft.functions.KmvSampleAgg]], k = 256) keyed on the md5
-        * of the source's epoch-micros time axis — the engine's unique
-        * row key — so the estimate is partitioning-invariant and
-        * engine-replayable (rank by md5, keep k, interpolate: a full
-        * DuckDB oracle, unlike engine-native GK/t-digest sketches).
-        * Groups below k hold every row, making the estimate exact.
-        * Needs compile context (the axis), so it lives here rather
-        * than in aggFnColumn. Single-source only: a joined frame can
-        * repeat the sampling axis, which the distinct-hash buffer
-        * would silently dedup.
-        */
-      def sampleSketchColumn(fnName: String, v: Column): Column = {
-        if (multi) throw CompileException(
-          s"$fnName() is single-source only — joined frames " +
-            "can repeat the sampling time axis")
-        if (!isFam(0) && !subHasTs(0)) throw CompileException(
-          s"$fnName() samples on the time axis — this derived " +
-            "table does not output a timestamp column named ts")
-        val key = graft.operators.SketchOps
-          .portableHash60(unix_micros(col("__ts_0")))
-        graft.functions.GraftFunctions.kmvSample(
-          key, v.cast("double"), SampleK)
-      }
-      def approxPercentileColumn(e: Ast.Operand, ps: Seq[Double]): Column = {
-        val p = ps.headOption.getOrElse(throw CompileException(
-          "approx_percentile() requires a fraction argument"))
-        sampleInterp(sampleSketchColumn("approx_percentile",
-          row.operand(e)), p)
-      }
-      /** first(x) / last(x): the value at the earliest / latest point of
-        * the group on the family's time axis — the TSDB first/last
-        * aggregate (InfluxQL FIRST/LAST, TimescaleDB first/last), with
-        * the axis IMPLIED by the source the way bucket()/rate() imply
-        * it. Compiles to one lexicographic struct extreme —
-        * `min/max(struct(ts, x)).x` over rows where x is non-null — a
-        * single codegen'd hash-aggregate expression with constant
-        * per-group state (no sort, no window): partial extremes combine
-        * map-side, so the shape holds at any group size. The (ts, x)
-        * composite makes equal-timestamp ties deterministic (smallest /
-        * largest value wins), which is what lets a DuckDB
-        * `first(x ORDER BY ts, x)` ordered aggregate replay it exactly.
-        * Needs compile context (the axis), so it lives here like
-        * approx_percentile; single-source only — a joined frame has no
-        * unambiguous time axis.
-        */
-      def timeOrderedColumn(fn: String, v: Column): Column = {
-        if (multi) throw CompileException(
-          s"$fn() is single-source only — joined frames have no " +
-            "unambiguous time axis")
-        if (!isFam(0) && !subHasTs(0)) throw CompileException(
-          s"$fn() takes the value at the group's time-axis extreme — " +
-            "this derived table does not output a timestamp column named ts")
-        val key = when(v.isNotNull, struct(col("__ts_0").as("t"), v.as("v")))
-        (if (fn == "first") min(key) else max(key)).getField("v")
-      }
       /** Consecutive-point ("segment") aggregates — the counter/gauge
         * math that needs each point's SUCCESSOR, not just the bag of
         * values:
@@ -2348,23 +2388,14 @@ object Compiler {
             // twa's optional bucket width (arg2, parser-shaped): the
             // hot-key escape routing the segment pre-pass through the
             // bucket-then-stitch decomposition below
-            val bucketUs = a2.map {
-              case OLit(BStr(w)) => parseIntervalMicros(w).filter(_ > 0)
-                .getOrElse(throw CompileException(
-                  s"$f() bucket width '$w' must be a positive " +
-                    "fixed-width interval (microsecond…day)"))
-              case _ => throw CompileException(
-                s"$f() bucket width must be a string literal like '1 day'")
-            }
-            (f, aggXColName(f, e, ps, a2),
-              row.operand(e), bucketUs)
+            val bucketUs = a2.map(bucketWidth(f, _))
+            (f, aggXColName(f, e, ps, a2), row.operand(e), bucketUs)
         }
       if (segSpecs.nonEmpty) {
         val f = segSpecs.head._1
-        if (multi) throw CompileException(
+        requireAxis(
           s"$f() is single-source only — joined frames have no " +
-            "unambiguous time axis")
-        if (!isFam(0) && !subHasTs(0)) throw CompileException(
+            "unambiguous time axis",
           s"$f() walks consecutive points on the time axis — this " +
             "derived table does not output a timestamp column named ts")
         if (spec.groupMode != "plain") throw CompileException(
@@ -2403,10 +2434,9 @@ object Compiler {
           "xcorr() requires (x, y, lag) arguments")
       }
       if (acfSpecs.nonEmpty) {
-        if (multi) throw CompileException(
+        requireAxis(
           "acf()/xcorr() are single-source only — joined frames have " +
-            "no unambiguous time axis")
-        if (!isFam(0) && !subHasTs(0)) throw CompileException(
+            "no unambiguous time axis",
           "acf()/xcorr() pair points k apart on the time axis — this " +
             "derived table does not output a timestamp column named ts")
         if (spec.groupMode != "plain") throw CompileException(
@@ -2455,16 +2485,10 @@ object Compiler {
             df.withColumn(nm, row.operand(e))
           case (df, _) => df
         }
-        val partCols = groupEntries.map {
-          case Left(sf)               => col(sf.inName)
-          case Right(ExprItem(_, nm)) => col(nm)
-        }
+        val partNames = groupEntries.map(keyName)
+        val partCols = partNames.map(col)
         val w = W.partitionBy(partCols: _*).orderBy(col("__ts_0"))
         val us = unix_micros(col("__ts_0"))
-        val partNames = groupEntries.map {
-          case Left(sf)               => sf.inName
-          case Right(ExprItem(_, nm)) => nm
-        }
         /** twa's bucket-then-stitch segment pre-pass — the hot-key
           * escape (`twa(x, '<width>')`): the single-pass lead() window
           * partitions by the group keys alone, so one hot key
@@ -2551,37 +2575,9 @@ object Compiler {
             abs(v - percentile(v, lit(0.5)).over(wAll)))
         }
       }
-      /** corr's exact-sums formula over the materialized pair columns;
-        * zero variance on either side → NULL (never DIVIDE_BY_ZERO). */
-      def acfColumn(nm: String): Column = {
-        val x = col(s"__acf_x_$nm")
-        val y = col(s"__acf_y_$nm")
-        val n = count(x).cast("double")
-        val sx = sum(x).cast("double")
-        val sy = sum(y).cast("double")
-        val sxx = sum(x * x).cast("double")
-        val syy = sum(y * y).cast("double")
-        val sxy = sum(x * y).cast("double")
-        val num = n * sxy - sx * sy
-        // guard BEFORE the sqrt: over exact integer sums the variance
-        // terms are exact doubles, and an engine whose NaN compares
-        // HIGH (DuckDB's total order) would pass a sqrt(negative)
-        // guard spelled on the sqrt value
-        val dxx = n * sxx - sx * sx
-        val dyy = n * syy - sy * sy
-        when(dxx > lit(0.0) && dyy > lit(0.0),
-          num / sqrt(dxx) / sqrt(dyy))
-      }
-      def segColumn(f: String, nm: String): Column = f match {
-        case "twa" =>
-          val us = unix_micros(col("__ts_0"))
-          val span = (max(us) - min(us)).cast("double")
-          // zero span (all points at one timestamp) has no time axis to
-          // integrate over: NULL, never an ANSI divide-by-zero
-          when(span > lit(0.0),
-            sum(col(s"__seg_$nm")).cast("double") / 2.0 / span)
-        case _ => sum(col(s"__seg_$nm"))
-      }
+      // groupCols follows the pre-pass: when it materializes the
+      // expression keys as columns, the aggregate groups on THOSE
+      // attributes, so the lead-window's exchange is the aggregate's
       val groupCols = groupEntries.map {
         case Left(sf)               => col(sf.inName)
         case Right(ExprItem(OFn("bucket", a), nm)) if a.length == 3 => col(nm)
@@ -2620,7 +2616,10 @@ object Compiler {
           timeOrderedColumn(f, col(sf.inName)).as(aggColName(f, a))
         case Left((f, a)) => aggColumn(f, a)
         case Right(("approx_percentile", e, ps, a2)) =>
-          approxPercentileColumn(e, ps)
+          val p = ps.headOption.getOrElse(throw CompileException(
+            "approx_percentile() requires a fraction argument"))
+          sampleInterp(sampleSketchColumn("approx_percentile",
+            row.operand(e)), p)
             .as(aggXColName("approx_percentile", e, ps, a2))
         case Right((f @ ("first" | "last"), e, ps, a2)) =>
           timeOrderedColumn(f, row.operand(e))
@@ -2661,199 +2660,189 @@ object Compiler {
             case (df, _) => df
           }
           def keyCol(n: RawName): Column =
-            groupEntries(spec.groupBy.indexOf(n)) match {
-              case Left(sf)               => col(sf.inName)
-              case Right(ExprItem(_, nm)) => col(nm)
-            }
+            col(keyName(groupEntries(spec.groupBy.indexOf(n))))
           pre.groupingSets(
             spec.groupSets.map(_.map(keyCol)), spec.groupBy.map(keyCol): _*)
         case _ => preAgg.groupBy(groupCols: _*)
       }
       val agged = grouped.agg(aggCols.head, aggCols.tail: _*)
       val havd = having2.fold(agged)(h => agged.filter(new Q(aggOk = true, winOk = false).predicate(h)))
-      /** `FILL(mode)`: densify the bucket axis AFTER the aggregation —
-        * the InfluxQL `GROUP BY time(...) fill(...)` / TimescaleDB
-        * time_bucket_gapfill idiom. Per dimension group (the non-bucket
-        * keys), every bucket between the group's first and last
-        * OBSERVED bucket materializes (epoch-aligned integer sequence —
-        * the exact complement of the bucket() floor), missing
-        * aggregates then fill per mode: null / constant / previous
-        * (LOCF) / linear (interpolation on the bucket axis, no
-        * extrapolation past the observed ends).
-        *
-        * Scale shape: everything here runs on the AGGREGATED frame
-        * (|groups| × |observed buckets| rows, orders of magnitude below
-        * the scan), adding one min/max pass reusing the dimension-key
-        * partitioning, a left join on (keys, bucket), and — for
-        * previous/linear — per-dimension-key window passes whose
-        * partitions are each one group's bucket count. The dense output
-        * is the user's explicit ask; a '1 second' fill over a year is
-        * 31M rows per group by CONTRACT, not by accident.
-        */
-      def fillStep(in: DataFrame): DataFrame = spec.fill match {
-        case None => in
-        case Some(Ast.FillSpec(mode, fv)) =>
-          if (spec.groupMode != "plain") throw CompileException(
-            "FILL is not valid with ROLLUP/CUBE/GROUPING SETS — " +
-              "super-aggregate rows have no dense bucket axis")
-          if (spec.having.isDefined) throw CompileException(
-            "FILL with HAVING is not supported — filtering after " +
-              "densifying would re-open the gaps the fill just closed")
-          val bucketEntries = groupEntries.zipWithIndex.collect {
-            case (Right(ExprItem(OFn("bucket", bargs), nm)), i) => (nm, bargs, i)
-          }
-          if (bucketEntries.length != 1) throw CompileException(
-            "FILL needs exactly one bucket(ts, '<width>') grouping key, " +
-              "selected bare under an alias (no CAST wrapper) and " +
-              "grouped by that alias — it is the axis being densified")
-          val (dName, bargs, dIdx) = bucketEntries.head
-          // the spine step mirrors bucket()'s two width families:
-          // fixed widths densify by an epoch-micros integer sequence,
-          // calendar widths ('1 week|month|quarter|year', the
-          // date_trunc buckets) by a calendar-interval sequence from
-          // the observed (already truncation-aligned) min — month
-          // lengths vary, and the linear mode interpolates on actual
-          // micros, so irregular steps are handled by construction
-          val calendarBucket = """\s*(\d+)\s*(week|month|quarter|year)s?\s*""".r
-          val step: Either[String, Long] = bargs(1) match {
-            case OLit(BStr(w)) =>
-              w.toLowerCase(java.util.Locale.ROOT) match {
-                case calendarBucket(n, unit) =>
-                  if (n.toLong != 1L) throw CompileException(
-                    s"bucket() calendar width must be exactly '1 $unit' — " +
-                      s"multi-$unit buckets are not fixed-width")
-                  Left(unit)
-                case _ => Right(parseIntervalMicros(w).getOrElse(
-                  throw CompileException(
-                    s"FILL requires a bucket with a densifiable step — " +
-                      s"'$w' is neither a fixed width nor a calendar unit")))
-              }
-            case _ => throw CompileException(
-              "bucket() width must be a string literal like '5 minutes'")
-          }
-          val partKeys = groupEntries.zipWithIndex.collect {
-            case (Left(sf), _)                           => sf.inName
-            case (Right(ExprItem(_, nm)), i) if i != dIdx => nm
-          }
-          val keyCols = partKeys :+ dName
-          val valCols = in.columns.filterNot(keyCols.contains).toSeq
-          import org.apache.spark.sql.expressions.{Window => W}
-          val spineTs: Column = step match {
-            case Right(widthUs) => transform(sequence(
-              unix_micros(col("__lo")), unix_micros(col("__hi")),
-              lit(widthUs)), us => timestamp_micros(us))
-            // quarter is not a Spark interval unit — 3 months is
-            case Left("quarter") =>
-              expr("sequence(__lo, __hi, interval 3 month)")
-            case Left(unit) =>
-              expr(s"sequence(__lo, __hi, interval 1 $unit)")
-          }
-          val spine = in.groupBy(partKeys.map(col): _*)
-            .agg(min(col(dName)).as("__lo"), max(col(dName)).as("__hi"))
-            .select(partKeys.map(col) :+ explode(spineTs).as("__t0"): _*)
-            .select(partKeys.map(c => col(c).as(s"__sp_$c")) :+
-              col("__t0").as(s"__sp_$dName"): _*)
-          // Dimension keys join NULL-SAFELY (<=>): a tag/attribute
-          // dimension group whose key IS null must still match its own
-          // spine rows (groupBy made it a group; a plain equi-join would
-          // drop every observed row of that group and report the whole
-          // group as gaps). The bucket axis joins by plain equality —
-          // spine buckets are never null. Spine-only rows are the GAP
-          // rows; `__gap` tags them so fill modes touch ONLY materialized
-          // gaps, never an observed bucket whose aggregate is genuinely
-          // null (e.g. sum over an all-null bucket) — the
-          // InfluxQL/TimescaleDB gap-fill contract.
-          val cond = partKeys.map(k => col(s"__sp_$k") <=> col(k))
-            .foldLeft(col(s"__sp_$dName") === col(dName))(_ && _)
-          val joined = spine
-            .join(in.withColumn("__gap", lit(false)), cond, "left")
-            .select(keyCols.map(c => col(s"__sp_$c").as(c)) ++
-              valCols.map(col) :+
-              coalesce(col("__gap"), lit(true)).as("__gap"): _*)
-          val gap = col("__gap")
-          def perCol(f: Column => Column): DataFrame =
-            valCols.foldLeft(joined)((df, c) => df.withColumn(c, f(col(c))))
-          val filled = mode match {
-            case "null"  => joined
-            case "value" => perCol(c => when(gap, lit(fv.get)).otherwise(c))
-            case "previous" =>
-              // carry the last OBSERVED row's value into gap rows — even
-              // when that value is itself null (struct-wrapping makes an
-              // observed null a non-null carrier, so it is not skipped
-              // back over); observed rows pass through untouched
-              val w = W.partitionBy(partKeys.map(col): _*)
-                .orderBy(col(dName))
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-              perCol(c => when(!gap, c).otherwise(
-                last(when(!gap, struct(c.as("v"))), ignoreNulls = true)
-                  .over(w)("v")))
-            case "linear" =>
-              // the interp() formula on the bucket axis: four bounded-
-              // frame lookups + one fixed IEEE expression per gap row;
-              // anchors are observed non-null points only
-              val tsUs = unix_micros(col(dName)).cast("double")
-              val w0 = W.partitionBy(partKeys.map(col): _*)
-                .orderBy(col(dName))
-              val runF = w0.rowsBetween(W.unboundedPreceding, W.currentRow)
-              val futF = w0.rowsBetween(W.currentRow, W.unboundedFollowing)
-              perCol { c =>
-                val anchor = when(!gap && c.isNotNull, c.cast("double"))
-                val anchorT = when(!gap && c.isNotNull, tsUs)
-                val pv = last(anchor, ignoreNulls = true).over(runF)
-                val pt = last(anchorT, ignoreNulls = true).over(runF)
-                val nv = first(anchor, ignoreNulls = true).over(futF)
-                val nt = first(anchorT, ignoreNulls = true).over(futF)
-                when(!gap, c.cast("double"))
-                  .otherwise(pv + (nv - pv) * (tsUs - pt) / (nt - pt))
-              }
-          }
-          filled.drop("__gap")
-      }
       // SELECT-item scalar subs attach AFTER the aggregation (one
       // broadcast row onto the grouped output; pre-agg they'd be
       // swallowed by the groupBy) — and after the fill, so filled rows
       // carry the subquery value too
-      attachScalarSubs(fillStep(havd), postScalarSubs)
-    } else {
-      // --- escaped/auto-stitched smoothing forms ----------------------
-      // Two per-key window shapes get join-back compilations here, so a
-      // hot key stops serializing one task (the skew artifact's failure
-      // mode), both reading back through outputCol as `__esc_<alias>`:
-      //  - zscore(x) [OVER (PARTITION BY k)] AUTO-stitches: the
-      //    whole-partition S/Q/n sums come from a groupBy (map-side
-      //    partial aggregation — parallel however hot the key) and
-      //    join back null-safely. For INTEGRAL inputs the sums are the
-      //    SAME exact order-independent longs and the double tail the
-      //    same fixed IEEE sequence, so the rewrite is BIT-EQUAL to the
-      //    window form (the boost_ts_zscore oracle pins it end to end
-      //    on a CAST-AS-int column); for double inputs the partial-
-      //    aggregation merge order can differ from the window's single-
-      //    pass order in the last ulp — same contract as
-      //    varianceColumn. Engages for top-level select items without
-      //    QUALIFY; anything else keeps the window form.
-      //  - ewma(x, alpha, '<width>') is the OPT-IN bucket-stitched
-      //    escape ([[graft.operators.TimeSeriesOps.ewmaStitched]]):
-      //    per-(key, bucket) kernel + affine bucket chaining — ~1e-9
-      //    reassociation, so it is a new spelling, never a silent
-      //    rewrite of ewma(x, alpha).
-      // FIT+FORECAST faces of the same holt/holt_winters escape (same
-      // argument, PARTITION BY keys, and smoothing parameters) share
-      // ONE stitch pipeline: phases 0–2 are face-independent and only
-      // the per-row finish differs, so the paired-face query shape
-      // (boost_ts_holt_escape / boost_ts_hw_escape) runs the kernel
-      // once instead of once per select item. Grouping preserves
-      // first-occurrence order; non-pairable items group alone.
-      val escGrouped: Seq[Seq[(String, Operand, Seq[RawName],
-          Option[(String, Double, Double, Double, Int, Long)])]] = {
+      attachScalarSubs(fill(havd), postScalarSubs)
+    }
+
+    /** `FILL(mode)`: densify the bucket axis AFTER the aggregation —
+      * the InfluxQL `GROUP BY time(...) fill(...)` / TimescaleDB
+      * time_bucket_gapfill idiom. Per dimension group (the non-bucket
+      * keys), every bucket between the group's first and last
+      * OBSERVED bucket materializes (epoch-aligned integer sequence —
+      * the exact complement of the bucket() floor), missing
+      * aggregates then fill per mode: null / constant / previous
+      * (LOCF) / linear (interpolation on the bucket axis, no
+      * extrapolation past the observed ends).
+      *
+      * Scale shape: everything here runs on the AGGREGATED frame
+      * (|groups| × |observed buckets| rows, orders of magnitude below
+      * the scan), adding one min/max pass reusing the dimension-key
+      * partitioning, a left join on (keys, bucket), and — for
+      * previous/linear — per-dimension-key window passes whose
+      * partitions are each one group's bucket count. The dense output
+      * is the user's explicit ask; a '1 second' fill over a year is
+      * 31M rows per group by CONTRACT, not by accident.
+      */
+    def fill(in: DataFrame): DataFrame = spec.fill match {
+      case None => in
+      case Some(Ast.FillSpec(mode, fv)) =>
+        if (spec.groupMode != "plain") throw CompileException(
+          "FILL is not valid with ROLLUP/CUBE/GROUPING SETS — " +
+            "super-aggregate rows have no dense bucket axis")
+        if (spec.having.isDefined) throw CompileException(
+          "FILL with HAVING is not supported — filtering after " +
+            "densifying would re-open the gaps the fill just closed")
+        val bucketEntries = groupEntries.zipWithIndex.collect {
+          case (Right(ExprItem(OFn("bucket", bargs), nm)), i) => (nm, bargs, i)
+        }
+        if (bucketEntries.length != 1) throw CompileException(
+          "FILL needs exactly one bucket(ts, '<width>') grouping key, " +
+            "selected bare under an alias (no CAST wrapper) and " +
+            "grouped by that alias — it is the axis being densified")
+        val (dName, bargs, dIdx) = bucketEntries.head
+        // the spine step mirrors bucket()'s two width families:
+        // fixed widths densify by an epoch-micros integer sequence,
+        // calendar widths ('1 week|month|quarter|year', the
+        // date_trunc buckets) by a calendar-interval sequence from
+        // the observed (already truncation-aligned) min — month
+        // lengths vary, and the linear mode interpolates on actual
+        // micros, so irregular steps are handled by construction
+        val step: Either[String, Long] = bargs(1) match {
+          case OLit(BStr(w)) => calendarUnit(w).toLeft(
+            parseIntervalMicros(w).getOrElse(throw CompileException(
+              s"FILL requires a bucket with a densifiable step — " +
+                s"'$w' is neither a fixed width nor a calendar unit")))
+          case _ => throw CompileException(
+            "bucket() width must be a string literal like '5 minutes'")
+        }
+        val partKeys = groupEntries.zipWithIndex.collect {
+          case (g, i) if i != dIdx => keyName(g)
+        }
+        val keyCols = partKeys :+ dName
+        val valCols = in.columns.filterNot(keyCols.contains).toSeq
+        import org.apache.spark.sql.expressions.{Window => W}
+        val spineTs: Column = step match {
+          case Right(widthUs) => transform(sequence(
+            unix_micros(col("__lo")), unix_micros(col("__hi")),
+            lit(widthUs)), us => timestamp_micros(us))
+          // quarter is not a Spark interval unit — 3 months is
+          case Left("quarter") =>
+            expr("sequence(__lo, __hi, interval 3 month)")
+          case Left(unit) =>
+            expr(s"sequence(__lo, __hi, interval 1 $unit)")
+        }
+        val spine = in.groupBy(partKeys.map(col): _*)
+          .agg(min(col(dName)).as("__lo"), max(col(dName)).as("__hi"))
+          .select(partKeys.map(col) :+ explode(spineTs).as("__t0"): _*)
+          .select(partKeys.map(c => col(c).as(s"__sp_$c")) :+
+            col("__t0").as(s"__sp_$dName"): _*)
+        // Dimension keys join NULL-SAFELY (<=>): a tag/attribute
+        // dimension group whose key IS null must still match its own
+        // spine rows (groupBy made it a group; a plain equi-join would
+        // drop every observed row of that group and report the whole
+        // group as gaps). The bucket axis joins by plain equality —
+        // spine buckets are never null. Spine-only rows are the GAP
+        // rows; `__gap` tags them so fill modes touch ONLY materialized
+        // gaps, never an observed bucket whose aggregate is genuinely
+        // null (e.g. sum over an all-null bucket) — the
+        // InfluxQL/TimescaleDB gap-fill contract.
+        val cond = partKeys.map(k => col(s"__sp_$k") <=> col(k))
+          .foldLeft(col(s"__sp_$dName") === col(dName))(_ && _)
+        val joined = spine
+          .join(in.withColumn("__gap", lit(false)), cond, "left")
+          .select(keyCols.map(c => col(s"__sp_$c").as(c)) ++
+            valCols.map(col) :+
+            coalesce(col("__gap"), lit(true)).as("__gap"): _*)
+        val gap = col("__gap")
+        def perCol(f: Column => Column): DataFrame =
+          valCols.foldLeft(joined)((df, c) => df.withColumn(c, f(col(c))))
+        val filled = mode match {
+          case "null"  => joined
+          case "value" => perCol(c => when(gap, lit(fv.get)).otherwise(c))
+          case "previous" =>
+            // carry the last OBSERVED row's value into gap rows — even
+            // when that value is itself null (struct-wrapping makes an
+            // observed null a non-null carrier, so it is not skipped
+            // back over); observed rows pass through untouched
+            val w = W.partitionBy(partKeys.map(col): _*)
+              .orderBy(col(dName))
+              .rowsBetween(W.unboundedPreceding, W.currentRow)
+            perCol(c => when(!gap, c).otherwise(
+              last(when(!gap, struct(c.as("v"))), ignoreNulls = true)
+                .over(w)("v")))
+          case "linear" =>
+            // the interp() formula on the bucket axis: four bounded-
+            // frame lookups + one fixed IEEE expression per gap row;
+            // anchors are observed non-null points only
+            val tsUs = unix_micros(col(dName)).cast("double")
+            val w0 = W.partitionBy(partKeys.map(col): _*)
+              .orderBy(col(dName))
+            val runF = w0.rowsBetween(W.unboundedPreceding, W.currentRow)
+            val futF = w0.rowsBetween(W.currentRow, W.unboundedFollowing)
+            perCol { c =>
+              val anchor = when(!gap && c.isNotNull, c.cast("double"))
+              val anchorT = when(!gap && c.isNotNull, tsUs)
+              val pv = last(anchor, ignoreNulls = true).over(runF)
+              val pt = last(anchorT, ignoreNulls = true).over(runF)
+              val nv = first(anchor, ignoreNulls = true).over(futF)
+              val nt = first(anchorT, ignoreNulls = true).over(futF)
+              when(!gap, c.cast("double"))
+                .otherwise(pv + (nv - pv) * (tsUs - pt) / (nt - pt))
+            }
+        }
+        filled.drop("__gap")
+    }
+
+    /** The window path of phase 3 (no aggregate): the escaped and
+      * auto-stitched smoothing items as frame transforms, then QUALIFY.
+      *
+      * Two per-key window shapes get join-back compilations here, so a
+      * hot key stops serializing one task (the skew artifact's failure
+      * mode), both reading back through outputCol as `__esc_<alias>`:
+      *  - zscore(x) [OVER (PARTITION BY k)] AUTO-stitches: the
+      *    whole-partition S/Q/n sums come from a groupBy (map-side
+      *    partial aggregation — parallel however hot the key) and
+      *    join back null-safely. For INTEGRAL inputs the sums are the
+      *    SAME exact order-independent longs and the double tail the
+      *    same fixed IEEE sequence, so the rewrite is BIT-EQUAL to the
+      *    window form (the boost_ts_zscore oracle pins it end to end
+      *    on a CAST-AS-int column); for double inputs the partial-
+      *    aggregation merge order can differ from the window's single-
+      *    pass order in the last ulp — same contract as
+      *    varianceColumn. Engages for top-level select items without
+      *    QUALIFY; anything else keeps the window form.
+      *  - ewma(x, alpha, '<width>') is the OPT-IN bucket-stitched
+      *    escape ([[graft.operators.TimeSeriesOps.ewmaStitched]]):
+      *    per-(key, bucket) kernel + affine bucket chaining — ~1e-9
+      *    reassociation, so it is a new spelling, never a silent
+      *    rewrite of ewma(x, alpha).
+      * FIT+FORECAST faces of the same holt/holt_winters escape (same
+      * argument, PARTITION BY keys, and smoothing parameters) share
+      * ONE stitch pipeline: its stages 0–2 are face-independent and only
+      * the per-row finish differs, so the paired-face query shape
+      * (boost_ts_holt_escape / boost_ts_hw_escape) runs the kernel
+      * once instead of once per select item. Grouping preserves
+      * first-occurrence order; non-pairable items group alone.
+      */
+    def windows(filtered: DataFrame): DataFrame = {
+      val escGrouped: Seq[Seq[Stitched]] = {
         val buf = scala.collection.mutable.LinkedHashMap[Any,
-          scala.collection.mutable.ArrayBuffer[(String, Operand,
-            Seq[RawName], Option[(String, Double, Double, Double, Int,
-            Long)])]]()
+          scala.collection.mutable.ArrayBuffer[Stitched]]()
         escapable.foreach { it =>
-          val key: Any = it._4 match {
-            case Some((fn, a, b, g, p, w)) if fn.startsWith("holt") =>
-              (fn.stripSuffix("_forecast"), it._2, it._3, a, b, g, p, w)
-            case _ => ("solo", it._1)
+          val key: Any = it.esc match {
+            case Some(e) if e.fn.startsWith("holt") =>
+              (e.copy(fn = e.fn.stripSuffix("_forecast")), it.arg, it.part)
+            case _ => ("solo", it.name)
           }
           buf.getOrElseUpdate(key,
             scala.collection.mutable.ArrayBuffer.empty) += it
@@ -2861,33 +2850,31 @@ object Compiler {
         buf.values.map(_.toSeq).toSeq
       }
       val stitched = escGrouped.foldLeft(filtered) {
-        case (df, group @ ((nm, arg, part, escOpt) +: _)) =>
+        case (df, group @ (Stitched(nm, arg, part, escOpt) +: _)) =>
           val c = row.operand(arg)
           val keyNames = part.map(p => ref(p).inName)
+          val in = s"__esc_in_$nm"
+          // each face of a fit+forecast group: its output column, and
+          // whether it is the forecast
+          def faces(forecast: String): Seq[(String, Boolean)] =
+            group.map(s => (s"__esc_${s.name}", s.esc.exists(_.fn == forecast)))
           escOpt match {
-            case Some(("ewma", alpha, _, _, _, widthUs)) =>
-              val in = s"__esc_in_$nm"
+            case Some(Escape("ewma", alpha, _, _, _, widthUs)) =>
               graft.operators.TimeSeriesOps.ewmaStitched(
                 df.withColumn(in, c), keyNames, "__ts_0", in,
                 Seq.empty, alpha, widthUs, out = s"__esc_$nm").drop(in)
-            case Some((fn, alpha, beta, _, _, widthUs))
+            case Some(Escape(fn, alpha, beta, _, _, widthUs))
                 if fn == "holt" || fn == "holt_forecast" =>
-              val in = s"__esc_in_$nm"
-              val outs = group.map { case (n, _, _, Some((f, _, _, _, _, _))) =>
-                (s"__esc_$n", f == "holt_forecast") }
               graft.operators.TimeSeriesOps.holtStitchedMulti(
                 df.withColumn(in, c), keyNames, "__ts_0", in,
-                Seq.empty, alpha, beta, widthUs, outs).drop(in)
-            case Some((fn, alpha, beta, gamma, period, widthUs)) =>
+                Seq.empty, alpha, beta, widthUs, faces("holt_forecast")).drop(in)
+            case Some(Escape(_, alpha, beta, gamma, period, widthUs)) =>
               // holt_winters | holt_winters_forecast: the (2+p)-state
               // bucket-then-stitch (TimeSeriesOps.holtWintersStitched)
-              val in = s"__esc_in_$nm"
-              val outs = group.map { case (n, _, _, Some((f, _, _, _, _, _))) =>
-                (s"__esc_$n", f == "holt_winters_forecast") }
               graft.operators.TimeSeriesOps.holtWintersStitchedMulti(
                 df.withColumn(in, c), keyNames, "__ts_0", in,
-                Seq.empty, alpha, beta, gamma, period, widthUs, outs)
-                .drop(in)
+                Seq.empty, alpha, beta, gamma, period, widthUs,
+                faces("holt_winters_forecast")).drop(in)
             case None =>
               // zscore: exact S/Q/n sums per key via groupBy (the
               // original column type keeps integral sums exact), then
@@ -2948,16 +2935,12 @@ object Compiler {
           .filter(col("__qualify")).drop("__qualify")
       }
     }
-    if (hasAgg && spec.qualify.isDefined)
-      throw CompileException(
-        "QUALIFY requires a window-function query; aggregates filter with HAVING")
-    if (!hasAgg && spec.fill.isDefined)
-      throw CompileException(
-        "FILL requires a GROUP BY bucket(…) aggregate query — there is " +
-          "no bucket axis to densify here")
 
-    // --- ORDER BY / DISTINCT / LIMIT / final projection ------------------
-    val item = new Q(aggOk = hasAgg, winOk = true)
+    // ==== phases 4 and 5: project, order/page ============================
+
+    // SELECT items and ORDER BY keys: aggregates where the query
+    // groups, and windows
+    lazy val item = new Q(aggOk = hasAgg, winOk = true)
     def itemColName(i: SelectItem): String = i match {
       case FieldItem(n)    => ref(n).inName
       case AggItem(f, a)   => aggColName(f, a.map(ref))
@@ -2986,7 +2969,7 @@ object Compiler {
     // a computed ORDER BY key sorts on its compiled expression (an
     // arbitrary-expression sort, beyond select-shaped keys)
     // (an ORDER BY window under QUALIFY never reaches here: it makes
-    // hasWin true, and that branch sorts on selected OUTPUT columns —
+    // hasWin true, and that path sorts on selected OUTPUT columns —
     // the already-materialized pre-filter values)
     def orderCol(i: SelectItem): Column = i match {
       case ExprItem(_, nm) if hasAgg && groupedExprNames.contains(nm) => col(nm)
@@ -2994,105 +2977,81 @@ object Compiler {
       case ExprItem(e, _) => item.operand(e)
       case other          => col(itemColName(other))
     }
-
-    if (spec.distinct) {
-      // SQL DISTINCT semantics: dedup the projected rows, THEN order and
-      // limit — so every ORDER BY key must name a selected output column
-      // (a computed key must match a selected expression); anything else
-      // is a compile error, not a runtime unresolved-column surprise
-      val projectedOut = projected.select(spec.select.map(outputCol): _*)
-      val selectedNames = spec.select.map(itemOutName).toSet
-      def distinctOrderCol(i: SelectItem): Column = i match {
+    /** An ORDER BY key over the projected output, where every key must
+      * name a selected output column (a computed key must match a
+      * selected expression). */
+    def outputOrderCol(i: SelectItem): Column = {
+      val clause = if (spec.distinct) "under DISTINCT" else "with window functions"
+      i match {
         case ExprItem(e, _) =>
           spec.select.collectFirst {
             case ExprItem(e2, nm) if e2 == e => col(nm)
           }.getOrElse(throw CompileException(
-            "ORDER BY under DISTINCT must be a selected item"))
+            s"ORDER BY $clause must be a selected item"))
         case other =>
           val nm = itemOutName(other)
-          if (!selectedNames.contains(nm))
+          if (!spec.select.map(itemOutName).contains(nm))
             throw CompileException(
-              s"ORDER BY under DISTINCT must be a selected item ($nm is not)")
+              s"ORDER BY $clause must be a selected item ($nm is not)")
           col(nm)
       }
+    }
+
+    /** Whether ORDER BY sorts the projected output, not the frame.
+      * DISTINCT dedups the projected rows, THEN orders and pages. Window
+      * functions compute BEFORE the final ORDER BY: left to the
+      * post-sort projection, their own partition exchange would destroy
+      * the requested row order. Either way ORDER BY may only name
+      * selected output columns; any other query sorts its frame (an
+      * arbitrary-expression sort) and projects last. */
+    def sortsOutput: Boolean = spec.distinct || hasWin
+
+    /** Phase 4: the final projection, deduplicated under DISTINCT. */
+    def project(frame: DataFrame): DataFrame = {
+      val out = frame.select(spec.select.map(outputCol): _*)
+      if (!spec.distinct) out
       // DISTINCT ON (keys): one row per key combination — the FIRST per
       // the query ORDER BY (Postgres/DuckDB; the latest-per-series
       // workhorse). Compiles to a row_number window on the keys ordered
       // by the (resolved, selected-column) ORDER BY, filtered to 1 —
       // one exchange on the keys; the outer sort then reorders the
       // survivors. Plain DISTINCT stays dropDuplicates over all columns.
-      val out =
-        if (spec.distinctOn.isEmpty) projectedOut.distinct()
-        else {
-          if (orderItems.isEmpty) throw CompileException(
-            "DISTINCT ON requires an ORDER BY to pick each key's row " +
-              "deterministically")
-          val keyCols = spec.distinctOn.map { n =>
-            val nm = n.parts match {
-              case Seq(one) if selectedNames.contains(one) => one
-              case _ =>
-                val r = ref(n)
-                if (!selectedNames.contains(r.outName))
-                  throw CompileException(
-                    s"DISTINCT ON key ${n.text} must be a selected " +
-                      "output column")
-                r.outName
-            }
-            col(nm)
+      else if (spec.distinctOn.isEmpty) out.distinct()
+      else {
+        if (orderItems.isEmpty) throw CompileException(
+          "DISTINCT ON requires an ORDER BY to pick each key's row " +
+            "deterministically")
+        val selectedNames = spec.select.map(itemOutName).toSet
+        val keyCols = spec.distinctOn.map { n =>
+          val nm = n.parts match {
+            case Seq(one) if selectedNames.contains(one) => one
+            case _ =>
+              val r = ref(n)
+              if (!selectedNames.contains(r.outName))
+                throw CompileException(
+                  s"DISTINCT ON key ${n.text} must be a selected " +
+                    "output column")
+              r.outName
           }
-          import org.apache.spark.sql.expressions.{Window => W}
-          val w = W.partitionBy(keyCols: _*).orderBy(
-            orderItems.map(o => sortKey(distinctOrderCol(o.item), o)): _*)
-          projectedOut.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn")
-        }
-      val ordered =
-        if (orderItems.isEmpty) out
-        else out.orderBy(orderItems.map { o =>
-          sortKey(distinctOrderCol(o.item), o)
-        }: _*)
-      // OFFSET skips before LIMIT counts (ANSI paging order)
-      val paged = spec.offset.fold(ordered)(ordered.offset)
-      spec.limit.fold(paged)(paged.limit)
-    } else if (hasWin) {
-      // SQL computes window functions BEFORE the final ORDER BY; if the
-      // windows were left to the post-sort projection, their own
-      // partition exchange would destroy the requested row order. So:
-      // project first (windows included), then sort the OUTPUT — which
-      // restricts ORDER BY keys to selected output columns, same rule
-      // as DISTINCT
-      val out = projected.select(spec.select.map(outputCol): _*)
-      val selectedNames = spec.select.map(itemOutName).toSet
-      def winOrderCol(i: SelectItem): Column = i match {
-        case ExprItem(e, _) =>
-          spec.select.collectFirst {
-            case ExprItem(e2, nm) if e2 == e => col(nm)
-          }.getOrElse(throw CompileException(
-            "ORDER BY with window functions must be a selected item"))
-        case other =>
-          val nm = itemOutName(other)
-          if (!selectedNames.contains(nm))
-            throw CompileException(
-              s"ORDER BY with window functions must be a selected item ($nm is not)")
           col(nm)
+        }
+        import org.apache.spark.sql.expressions.{Window => W}
+        val w = W.partitionBy(keyCols: _*).orderBy(
+          orderItems.map(o => sortKey(outputOrderCol(o.item), o)): _*)
+        out.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
       }
+    }
+
+    /** Phase 5: ORDER BY, then OFFSET (it skips before LIMIT counts, the
+      * ANSI paging order), then LIMIT. */
+    def orderPage(frame: DataFrame): DataFrame = {
+      val key: SelectItem => Column = if (sortsOutput) outputOrderCol else orderCol
       val ordered =
-        if (orderItems.isEmpty) out
-        else out.orderBy(orderItems.map { o =>
-          sortKey(winOrderCol(o.item), o)
-        }: _*)
+        if (orderItems.isEmpty) frame
+        else frame.orderBy(orderItems.map(o => sortKey(key(o.item), o)): _*)
       val paged = spec.offset.fold(ordered)(ordered.offset)
       spec.limit.fold(paged)(paged.limit)
-    } else {
-      val ordered =
-        if (orderItems.isEmpty) projected
-        else projected.orderBy(orderItems.map { o =>
-          sortKey(orderCol(o.item), o)
-        }: _*)
-      // OFFSET skips before LIMIT counts (ANSI paging order)
-      val paged = spec.offset.fold(ordered)(ordered.offset)
-      val limited = spec.limit.fold(paged)(paged.limit)
-      limited.select(spec.select.map(outputCol): _*)
     }
   }
 

@@ -28,6 +28,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally org.apache.commons.io.FileUtils.deleteDirectory(root)
   }
 
+  /** Run `body` on fresh memory-sink names, `<prefix><uuid>` for each
+    * prefix, then drop the sinks' temp views, whether `body` passed or
+    * threw. */
+  def withSinks[T](prefixes: String*)(body: Seq[String] => T): T = {
+    val sinks = prefixes.map(_ + java.util.UUID.randomUUID.toString.replace("-", ""))
+    try body(sinks)
+    finally sinks.foreach(s => spark.sql(s"DROP VIEW IF EXISTS $s"))
+  }
+
   override def afterAll(): Unit = {
     // SparkSession is shared across suites in one JVM (sbt forks one
     // test JVM); don't stop it here or later suites fail.

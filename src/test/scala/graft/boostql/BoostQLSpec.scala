@@ -4472,4 +4472,110 @@ class BoostQLSpec extends SparkSpec {
       .filter(col("cnt") > 2).orderBy("u")
     assert(df.collect().map(_.toSeq).toSeq == exp.collect().map(_.toSeq).toSeq)
   }
+
+  test("refusal texts of the literal parsers, escapes and time-axis checks") {
+    val joined = "FROM dom.events AS a JOIN dom.events AS b ON a.click = b.click"
+    val derived = "FROM (SELECT click FROM dom.events) AS d"
+    val escape = " escape is a top-level select item only (not nested in " +
+      "an expression, not under QUALIFY) — alias it and reference the alias"
+    val noTs = "this derived table does not output a timestamp column named ts"
+    val cases = Seq(
+      // smoothing literals: the single-pass forms, then the escapes
+      "SELECT ewma(click, 1.5) AS x FROM dom.events" ->
+        "ewma() alpha must be a numeric literal in (0, 1]",
+      "SELECT holt(click, 0.0, 0.5) AS x FROM dom.events" ->
+        "holt() alpha must be a numeric literal in (0, 1]",
+      "SELECT holt_forecast(click, 0.5, 1.5) AS x FROM dom.events" ->
+        "holt_forecast() beta must be a numeric literal in [0, 1]",
+      "SELECT holt_winters(click, 2, 0.5, 0.5, 7) AS x FROM dom.events" ->
+        "holt_winters() alpha must be a numeric literal in (0, 1]",
+      "SELECT holt_winters(click, 0.5, 1.5, 0.5, 7) AS x FROM dom.events" ->
+        "holt_winters() beta must be a numeric literal in [0, 1]",
+      "SELECT holt_winters(click, 0.5, 0.5, 2.0, 7) AS x FROM dom.events" ->
+        "holt_winters() gamma must be a numeric literal in [0, 1]",
+      "SELECT ewma(click, 0.0, '1 day') AS x FROM dom.events" ->
+        "ewma() alpha must be a numeric literal in (0, 1]",
+      "SELECT holt(click, 0.5, -1.0, '1 day') AS x FROM dom.events" ->
+        "holt() beta must be a numeric literal in [0, 1]",
+      "SELECT holt_winters_forecast(click, 0.5, 0.5, 1.5, 7, '1 day') AS x " +
+        "FROM dom.events" ->
+        "holt_winters_forecast() gamma must be a numeric literal in [0, 1]",
+      // the escapes nested in an expression
+      "SELECT ewma(click, 0.5, '1 day') + 1 AS x FROM dom.events" ->
+        ("the bucket-stitched ewma(x, alpha, '<width>')" + escape),
+      "SELECT holt_forecast(click, 0.5, 0.5, '1 day') * 2 AS x FROM dom.events" ->
+        ("the bucket-stitched holt_forecast(x, alpha, beta, '<width>')" + escape),
+      "SELECT -holt_winters(click, 0.5, 0.5, 0.5, 7, '1 day') AS x " +
+        "FROM dom.events" -> ("the bucket-stitched holt_winters(x, alpha, " +
+        "beta, gamma, period, '<width>')" + escape),
+      // the seasonal period of the stitched and the single-pass forms
+      "SELECT holt_winters(click, 0.5, 0.5, 0.5, 12, '1 day') AS x " +
+        "FROM dom.events" -> ("the stitched holt_winters() period must be " +
+        "an integer literal in [2, 8] — the (2+p)² matrix-power buffer is " +
+        "codegen-bounded; longer cycles use the single-pass form"),
+      "SELECT holt_winters(click, 0.5, 0.5, 0.5, 30) AS x FROM dom.events" ->
+        ("holt_winters() period must be an integer literal in [2, 24] (the " +
+          "seasonal cycle length in observations: 7 for day-of-week, 12 " +
+          "for month, 24 for hour-of-day)"),
+      // bucket widths
+      "SELECT ewma(click, 0.5, 5) AS x FROM dom.events" ->
+        "ewma() bucket width must be a string literal like '1 day'",
+      "SELECT holt(click, 0.5, 0.5, '1 month') AS x FROM dom.events" ->
+        ("holt() bucket width '1 month' must be a positive fixed-width " +
+          "interval (microsecond…day)"),
+      "SELECT twa(click, '1 month') AS x FROM dom.events" ->
+        ("twa() bucket width '1 month' must be a positive fixed-width " +
+          "interval (microsecond…day)"),
+      // the time-axis aggregates over a join and over a derived table
+      // without ts
+      s"SELECT approx_percentile(a.click, 0.5) AS x $joined" ->
+        ("approx_percentile() is single-source only — joined frames can " +
+          "repeat the sampling time axis"),
+      s"SELECT first(a.click) AS x $joined" ->
+        "first() is single-source only — joined frames have no unambiguous time axis",
+      s"SELECT twa(a.click) AS x $joined" ->
+        "twa() is single-source only — joined frames have no unambiguous time axis",
+      s"SELECT acf(a.click, 1) AS x $joined" ->
+        ("acf()/xcorr() are single-source only — joined frames have no " +
+          "unambiguous time axis"),
+      s"SELECT approx_percentile(click, 0.5) AS x $derived" ->
+        s"approx_percentile() samples on the time axis — $noTs",
+      s"SELECT last(click) AS x $derived" ->
+        s"last() takes the value at the group's time-axis extreme — $noTs",
+      s"SELECT increase(click) AS x $derived" ->
+        s"increase() walks consecutive points on the time axis — $noTs",
+      s"SELECT acf(click, 1) AS x $derived" ->
+        s"acf()/xcorr() pair points k apart on the time axis — $noTs",
+      // OVER on the time-series functions, and their arities
+      "SELECT rate(click) OVER (ORDER BY ts) AS x FROM dom.events" ->
+        "rate() orders by the time axis implicitly — OVER may only carry PARTITION BY",
+      "SELECT zscore(click) OVER (ORDER BY ts) AS x FROM dom.events" ->
+        "zscore() orders by the time axis implicitly — OVER may only carry PARTITION BY",
+      "SELECT ewma(click, 0.5, '1 day') OVER (ORDER BY ts) AS x FROM dom.events" ->
+        "ewma() orders by the time axis implicitly — OVER may only carry PARTITION BY",
+      "SELECT rate(click) OVER (PARTITION BY click.user ROWS BETWEEN 1 " +
+        "PRECEDING AND CURRENT ROW) AS x FROM dom.events" ->
+        "rate() does not take a window frame",
+      "SELECT zscore(click) OVER (PARTITION BY click.user ROWS BETWEEN 1 " +
+        "PRECEDING AND CURRENT ROW) AS x FROM dom.events" ->
+        "zscore() does not take a window frame",
+      "SELECT rate(click, 2) AS x FROM dom.events" ->
+        "rate() expects exactly 1 argument(s)",
+      "SELECT ewma(click) AS x FROM dom.events" ->
+        "ewma() expects exactly 2 argument(s)",
+      "SELECT holt(click, 0.5) AS x FROM dom.events" ->
+        "holt() expects exactly 3 argument(s)",
+      "SELECT cusum(click, 1.0) AS x FROM dom.events" ->
+        "cusum() expects exactly 3 argument(s)",
+      "SELECT holt_winters(click, 0.5, 0.5, 0.5) AS x FROM dom.events" ->
+        "holt_winters() expects exactly 5 argument(s)")
+    val wrong = cases.flatMap { case (q, want) =>
+      val got = try {
+        Compiler.compile(Parser.parse(q), (_: (String, String)) => fam)
+        "no refusal"
+      } catch { case e: Compiler.CompileException => e.getMessage }
+      if (got == want) None else Some(s"$q\n  want: $want\n  got:  $got")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
 }

@@ -1,6 +1,6 @@
 package graft.boostql
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAllNoShrink
@@ -15,6 +15,8 @@ import graft.sources.TimeSeriesTable
   *  - the streaming aggregate's output-name scope: a streaming HAVING
   *    (and an expression item beside it) finalizes the rows batch
   *    HAVING returns;
+  *  - the stateless stream tier: a projection + WHERE tailed from a
+  *    written family returns the rows the batch read returns;
   *  - the streaming compiler as a whole: over batch frames (where
   *    `withWatermark` is a no-op) a single-family or self-joined
   *    aggregate returns the rows the batch compiler returns, through
@@ -162,6 +164,37 @@ object EvalProps extends Properties("boostql.eval") {
       streamed == batch
     }
 
+  // ---- the stateless stream tier against the batch compiler ----
+
+  /** `SELECT ts, cpu, <3 expression items> FROM dom.f WHERE <predicate>`. */
+  private val projectWhere: Gen[String] = for {
+    items <- Gen.listOfN(3, Gen.oneOf(num, num, str, time))
+    p <- pred(2)
+  } yield s"SELECT ts, cpu, " +
+    items.zipWithIndex.map { case (e, i) => s"$e AS e$i" }.mkString(", ") +
+    s" FROM dom.f WHERE $p"
+
+  property("stateless sqlStream tails the rows sql returns") =
+    forAllNoShrink(Gen.listOfN(2, projectWhere)) { qs =>
+      import org.apache.spark.sql.functions.col
+      def rows(df: DataFrame) = df.orderBy(df.columns.map(col): _*).collect().toSeq
+      qs.forall { q =>
+        val batch = rows(BoostQL.sql(q,
+          (_: (String, String)) => TimeSeriesTable.open(spark, root, "dom", "f")))
+        val sink = "evalprops_" + java.util.UUID.randomUUID.toString.replace("-", "")
+        val streamed =
+          try {
+            BoostQL.sqlStream(q, _ => TimeSeriesTable.openStream(spark, root, "dom", "f"))
+              .writeStream.format("memory").queryName(sink).outputMode("append")
+              .trigger(Trigger.AvailableNow()).start().awaitTermination()
+            rows(spark.table(sink))
+          } finally spark.sql(s"DROP VIEW IF EXISTS $sink")
+        if (streamed != batch) println(s"EVALPROP $q: " +
+          s"stream ${streamed.length} rows, batch ${batch.length} rows")
+        streamed == batch
+      }
+    }
+
   // ---- the streaming compiler against the batch compiler ----
 
   private val width: Gen[String] = Gen.oneOf("'10 minutes'", "'30 minutes'", "'1 hour'")
@@ -202,12 +235,18 @@ object EvalProps extends Properties("boostql.eval") {
     forAllNoShrink(Gen.listOfN(3, singleAgg), Gen.listOfN(3, joinedAgg)) { (ss, js) =>
       import org.apache.spark.sql.functions.col
       def rows(df: DataFrame) = df.orderBy(df.columns.map(col): _*).collect().toSeq
+      def outcome(df: => DataFrame): Either[String, Seq[Row]] =
+        try Right(rows(df)) catch { case e: Compiler.CompileException => Left(e.getMessage) }
       (ss ++ js).forall { q =>
-        val batch = rows(BoostQL.sql(q, (_: (String, String)) => fam))
-        val streamed = rows(BoostQL.sqlStream(q, _ => fam, "1 day"))
+        val batch = outcome(BoostQL.sql(q, (_: (String, String)) => fam))
+        val streamed = outcome(BoostQL.sqlStream(q, _ => fam, "1 day"))
         if (streamed != batch) println(s"EVALPROP $q: " +
-          s"stream ${streamed.length} rows, batch ${batch.length} rows")
-        streamed == batch && batch.nonEmpty
+          s"stream ${streamed.map(_.length)} rows, batch ${batch.map(_.length)} rows")
+        // a query whose only field is the time axis (all count(*), no
+        // dimension, no WHERE) reads no series: both tiers must refuse it
+        // with the same text
+        streamed == batch &&
+          batch.fold(_ == "source dom.f is never referenced", _.nonEmpty)
       }
     }
 }

@@ -56,27 +56,28 @@ class StreamingSpec extends SparkSpec {
         "count(click) AS n FROM dom.events GROUP BY d"
       val out = graft.boostql.BoostQL.sqlStream(q, _ => stream, "1 day")
       assert(out.isStreaming)
-      val sink = "graft_slide_spec_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val sq = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      sq.awaitTermination()
-      val streamed = spark.table(sink).orderBy("d").collect().toSeq
-      // batch twin: the dialect's own sliding expansion over the same data
-      val batch = graft.boostql.BoostQL.sql(
-        "SELECT CAST(t.d AS int) AS d, t.n AS n FROM " +
-          "(SELECT bucket(ts, '1 day', '12 hours') AS d, count(click) AS n " +
-          "FROM dom.events GROUP BY d) AS t ORDER BY d",
-        _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
-        .collect().toSeq
-      assert(streamed == batch && streamed.nonEmpty)
-      // slide contract refusals carry to the streaming front
-      def refuses(sql: String): Unit =
-        intercept[graft.boostql.Compiler.CompileException](
-          graft.boostql.BoostQL.sqlStream(sql, _ => stream, "1 day"))
-      refuses("SELECT CAST(bucket(ts, '1 hour', '2 hours') AS int) AS d, " +
-        "count(click) AS n FROM dom.events GROUP BY d")
-      refuses("SELECT CAST(bucket(ts, '1 day', '7 hours') AS int) AS d, " +
-        "count(click) AS n FROM dom.events GROUP BY d")
+      withSinks("graft_slide_spec_") { case Seq(sink) =>
+        val sq = out.writeStream.format("memory").queryName(sink)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        sq.awaitTermination()
+        val streamed = spark.table(sink).orderBy("d").collect().toSeq
+        // batch twin: the dialect's own sliding expansion over the same data
+        val batch = graft.boostql.BoostQL.sql(
+          "SELECT CAST(t.d AS int) AS d, t.n AS n FROM " +
+            "(SELECT bucket(ts, '1 day', '12 hours') AS d, count(click) AS n " +
+            "FROM dom.events GROUP BY d) AS t ORDER BY d",
+          _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
+          .collect().toSeq
+        assert(streamed == batch && streamed.nonEmpty)
+        // slide contract refusals carry to the streaming front
+        def refuses(sql: String): Unit =
+          intercept[graft.boostql.Compiler.CompileException](
+            graft.boostql.BoostQL.sqlStream(sql, _ => stream, "1 day"))
+        refuses("SELECT CAST(bucket(ts, '1 hour', '2 hours') AS int) AS d, " +
+          "count(click) AS n FROM dom.events GROUP BY d")
+        refuses("SELECT CAST(bucket(ts, '1 day', '7 hours') AS int) AS d, " +
+          "count(click) AS n FROM dom.events GROUP BY d")
+      }
     }
   }
 
@@ -141,18 +142,19 @@ class StreamingSpec extends SparkSpec {
       val counts = graft.sources.TimeSeriesTable
         .openStream(spark, root, "dom", "events")
         .groupBy("series").agg(count(lit(1)).as("n"))
-      val sink = "graft_openstream_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val q = counts.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val streamed = spark.table(sink).orderBy("series").collect().toSeq
-      val batch = graft.sources.TimeSeriesTable.open(spark, root, "dom", "events")
-        .groupBy("series").agg(count(lit(1)).as("n"))
-        .orderBy("series").collect().toSeq
-      assert(streamed == batch && streamed.nonEmpty)
-      // the partition column streams too (pruning-relevant at scale)
-      assert(graft.sources.TimeSeriesTable.openStream(spark, root, "dom", "events")
-        .schema.fieldNames.contains("dt"))
+      withSinks("graft_openstream_") { case Seq(sink) =>
+        val q = counts.writeStream.format("memory").queryName(sink)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        val streamed = spark.table(sink).orderBy("series").collect().toSeq
+        val batch = graft.sources.TimeSeriesTable.open(spark, root, "dom", "events")
+          .groupBy("series").agg(count(lit(1)).as("n"))
+          .orderBy("series").collect().toSeq
+        assert(streamed == batch && streamed.nonEmpty)
+        // the partition column streams too (pruning-relevant at scale)
+        assert(graft.sources.TimeSeriesTable.openStream(spark, root, "dom", "events")
+          .schema.fieldNames.contains("dt"))
+      }
     }
   }
 
@@ -166,36 +168,37 @@ class StreamingSpec extends SparkSpec {
       val q = "SELECT click.event_id, click FROM dom.events WHERE click > 100.0"
       val out = graft.boostql.BoostQL.sqlStream(q, _ => stream)
       assert(out.isStreaming)
-      val sink = "graft_sqlstream_spec_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val sq = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      sq.awaitTermination()
-      val streamed = spark.table(sink).orderBy("click_event_id").collect().toSeq
-      val batch = graft.boostql.BoostQL.sql(q,
-          _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
-        .orderBy("click_event_id").collect().toSeq
-      assert(streamed == batch && streamed.nonEmpty)
-      // every stateful shape refuses at COMPILE time, before stream start
-      def refuses(sql: String): Unit =
-        intercept[graft.boostql.Compiler.CompileException](
-          graft.boostql.BoostQL.sqlStream(sql, _ => stream))
-      refuses("SELECT click.user, count(*) FROM dom.events GROUP BY click.user")
-      refuses("SELECT bucket(ts, '1 day') AS d, count(*) AS n " +
-        "FROM dom.events GROUP BY d FILL(null)")
-      refuses("SELECT click FROM dom.events ORDER BY click")
-      refuses("SELECT click FROM dom.events LIMIT 5")
-      refuses("SELECT DISTINCT click FROM dom.events")
-      // multi-series alignment is a stream-stream join — caught by the
-      // logical-plan sweep, not the clause checks
-      refuses("SELECT click, view FROM dom.events")
-      refuses("SELECT a.click FROM dom.events AS a JOIN dom.events AS b " +
-        "ON a.click.user = b.view.user")
-      refuses("SELECT click, row_number() OVER (PARTITION BY click.user " +
-        "ORDER BY click) AS rk FROM dom.events")
-      // stateful shapes INSIDE derived tables are caught by the plan
-      // whitelist (a blacklist would miss Deduplicate/GlobalLimit nodes)
-      refuses("SELECT x FROM (SELECT DISTINCT click AS x FROM dom.events) AS t")
-      refuses("SELECT x FROM (SELECT click AS x FROM dom.events LIMIT 5) AS t")
+      withSinks("graft_sqlstream_spec_") { case Seq(sink) =>
+        val sq = out.writeStream.format("memory").queryName(sink)
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        sq.awaitTermination()
+        val streamed = spark.table(sink).orderBy("click_event_id").collect().toSeq
+        val batch = graft.boostql.BoostQL.sql(q,
+            _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
+          .orderBy("click_event_id").collect().toSeq
+        assert(streamed == batch && streamed.nonEmpty)
+        // every stateful shape refuses at COMPILE time, before stream start
+        def refuses(sql: String): Unit =
+          intercept[graft.boostql.Compiler.CompileException](
+            graft.boostql.BoostQL.sqlStream(sql, _ => stream))
+        refuses("SELECT click.user, count(*) FROM dom.events GROUP BY click.user")
+        refuses("SELECT bucket(ts, '1 day') AS d, count(*) AS n " +
+          "FROM dom.events GROUP BY d FILL(null)")
+        refuses("SELECT click FROM dom.events ORDER BY click")
+        refuses("SELECT click FROM dom.events LIMIT 5")
+        refuses("SELECT DISTINCT click FROM dom.events")
+        // multi-series alignment is a stream-stream join — caught by the
+        // logical-plan sweep, not the clause checks
+        refuses("SELECT click, view FROM dom.events")
+        refuses("SELECT a.click FROM dom.events AS a JOIN dom.events AS b " +
+          "ON a.click.user = b.view.user")
+        refuses("SELECT click, row_number() OVER (PARTITION BY click.user " +
+          "ORDER BY click) AS rk FROM dom.events")
+        // stateful shapes INSIDE derived tables are caught by the plan
+        // whitelist (a blacklist would miss Deduplicate/GlobalLimit nodes)
+        refuses("SELECT x FROM (SELECT DISTINCT click AS x FROM dom.events) AS t")
+        refuses("SELECT x FROM (SELECT click AS x FROM dom.events LIMIT 5) AS t")
+      }
     }
   }
 
@@ -213,173 +216,172 @@ class StreamingSpec extends SparkSpec {
       // bucket()'s epoch alignment
       val out = graft.boostql.BoostQL.sqlStream(q, _ => stream, "1 day")
       assert(out.isStreaming)
-      val sink = "graft_sqlwin_spec_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val sq = out.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      sq.awaitTermination()
-      val streamed = spark.table(sink).orderBy("d").collect().toSeq
-      val batch = graft.boostql.BoostQL.sql(q,
-          _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
-        .orderBy("d").collect().toSeq
-      assert(streamed == batch && streamed.nonEmpty)
-      // APPEND mode must START: the group key is an engine-recognized
-      // event-time window over the watermarked axis (emit-on-finalize +
-      // state eviction), not opaque timestamp arithmetic — an
-      // unrecognized key would throw at start. Finalized windows are a
-      // subset of the batch rows (the watermark withholds the tail).
-      val sink2 = "graft_sqlwin_app_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val sq2 = graft.boostql.BoostQL.sqlStream(q, _ => stream, "1 day")
-        .writeStream.format("memory").queryName(sink2)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      sq2.awaitTermination()
-      val appended = spark.table(sink2).collect().toSeq
-      assert(appended.toSet.subsetOf(batch.toSet),
-        "append-mode windows must agree with batch where finalized")
-      // HAVING: a stateless filter on the finalized aggregate rows —
-      // complete-mode replay equals the BATCH run of the same text,
-      // including a HIDDEN aggregate (min(click) named only in HAVING:
-      // computed, filtered on, dropped from the output schema)
-      val qh = q + " HAVING count(*) > 3 AND min(click) > 50.0"
-      val sink3 = "graft_sqlwin_hav_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val sq3 = graft.boostql.BoostQL.sqlStream(qh, _ => stream, "1 day")
-        .writeStream.format("memory").queryName(sink3)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      sq3.awaitTermination()
-      val streamedH = spark.table(sink3).orderBy("d").collect().toSeq
-      val batchH = graft.boostql.BoostQL.sql(qh,
-          _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
-        .orderBy("d").collect().toSeq
-      assert(streamedH == batchH && streamedH.nonEmpty)
-      assert(spark.table(sink3).columns.toSeq == Seq("d", "n", "cents"),
-        "hidden HAVING aggregates must not leak into the output schema")
-      // round(x, d) and LIKE in a streaming HAVING compile through the
-      // batch compiler's evaluator and finalize the rows batch returns
-      val qr = q + " HAVING round(sum(click), 1) > 300.0 AND " +
-        "CAST(n AS string) NOT LIKE '1'"
-      val sink4 = "graft_sqlwin_round_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      graft.boostql.BoostQL.sqlStream(qr, _ => stream, "1 day")
-        .writeStream.format("memory").queryName(sink4)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        .awaitTermination()
-      val batchR = graft.boostql.BoostQL.sql(qr,
-          _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
-        .orderBy("d").collect().toSeq
-      assert(spark.table(sink4).orderBy("d").collect().toSeq == batchR &&
-        batchR.nonEmpty && batchR.length < batch.length)
+      withSinks("graft_sqlwin_spec_", "graft_sqlwin_app_", "graft_sqlwin_hav_",
+          "graft_sqlwin_round_", "graft_sqlwin_ba_") {
+          case Seq(sink, sink2, sink3, sink4, sinkB) =>
+        val sq = out.writeStream.format("memory").queryName(sink)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        sq.awaitTermination()
+        val streamed = spark.table(sink).orderBy("d").collect().toSeq
+        val batch = graft.boostql.BoostQL.sql(q,
+            _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
+          .orderBy("d").collect().toSeq
+        assert(streamed == batch && streamed.nonEmpty)
+        // APPEND mode must START: the group key is an engine-recognized
+        // event-time window over the watermarked axis (emit-on-finalize +
+        // state eviction), not opaque timestamp arithmetic — an
+        // unrecognized key would throw at start. Finalized windows are a
+        // subset of the batch rows (the watermark withholds the tail).
+        val sq2 = graft.boostql.BoostQL.sqlStream(q, _ => stream, "1 day")
+          .writeStream.format("memory").queryName(sink2)
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        sq2.awaitTermination()
+        val appended = spark.table(sink2).collect().toSeq
+        assert(appended.toSet.subsetOf(batch.toSet),
+          "append-mode windows must agree with batch where finalized")
+        // HAVING: a stateless filter on the finalized aggregate rows —
+        // complete-mode replay equals the BATCH run of the same text,
+        // including a HIDDEN aggregate (min(click) named only in HAVING:
+        // computed, filtered on, dropped from the output schema)
+        val qh = q + " HAVING count(*) > 3 AND min(click) > 50.0"
+        val sq3 = graft.boostql.BoostQL.sqlStream(qh, _ => stream, "1 day")
+          .writeStream.format("memory").queryName(sink3)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        sq3.awaitTermination()
+        val streamedH = spark.table(sink3).orderBy("d").collect().toSeq
+        val batchH = graft.boostql.BoostQL.sql(qh,
+            _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
+          .orderBy("d").collect().toSeq
+        assert(streamedH == batchH && streamedH.nonEmpty)
+        assert(spark.table(sink3).columns.toSeq == Seq("d", "n", "cents"),
+          "hidden HAVING aggregates must not leak into the output schema")
+        // round(x, d) and LIKE in a streaming HAVING compile through the
+        // batch compiler's evaluator and finalize the rows batch returns
+        val qr = q + " HAVING round(sum(click), 1) > 300.0 AND " +
+          "CAST(n AS string) NOT LIKE '1'"
+        graft.boostql.BoostQL.sqlStream(qr, _ => stream, "1 day")
+          .writeStream.format("memory").queryName(sink4)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+          .awaitTermination()
+        val batchR = graft.boostql.BoostQL.sql(qr,
+            _ => graft.sources.TimeSeriesTable.open(spark, root, "dom", "events"))
+          .orderBy("d").collect().toSeq
+        assert(spark.table(sink4).orderBy("d").collect().toSeq == batchR &&
+          batchR.nonEmpty && batchR.length < batch.length)
 
-      // refusal matrix: every clause and every non-streaming-safe shape
-      // refuses at COMPILE time with the 3-arg overload too
-      def refuses(sql: String): Unit =
+        // refusal matrix: every clause and every non-streaming-safe shape
+        // refuses at COMPILE time with the 3-arg overload too
+        def refuses(sql: String): Unit =
+          intercept[graft.boostql.Compiler.CompileException](
+            graft.boostql.BoostQL.sqlStream(sql, _ => stream, "1 day"))
+        val G = " FROM dom.events GROUP BY d"
+        val B = "SELECT CAST(bucket(ts, '1 day') AS int) AS d, count(*) AS n"
+        refuses(B + G + " FILL(previous)")                            // FILL
+        refuses(B + G + " ORDER BY d")                                // ORDER BY
+        refuses(B + G + " LIMIT 5")                                   // LIMIT
+        refuses("SELECT DISTINCT CAST(bucket(ts, '1 day') AS int) AS d, " +
+          "count(*) AS n" + G)                                        // DISTINCT
+        refuses(B + ", rank() OVER (ORDER BY n) AS rk" + G)           // window fn
+        refuses(B + " FROM dom.events GROUP BY ROLLUP (d)")           // rollup
+        refuses("SELECT a.d, count(*) AS n FROM dom.events AS a " +
+          "JOIN dom.events AS b ON a.click.user = b.view.user " +
+          "GROUP BY a.d")                                             // JOIN
+        refuses(B + G + " UNION ALL " + B + G)                        // set op
+        refuses("SELECT click FROM dom.events")                       // no GROUP BY
+        refuses("SELECT click.user AS u, count(*) AS n " +
+          "FROM dom.events GROUP BY u")                               // no bucket key
+        refuses("SELECT CAST(bucket(ts, '1 day') AS int) AS d, " +
+          "CAST(bucket(ts, '1 hour') AS int) AS h, count(*) AS n " +
+          "FROM dom.events GROUP BY d, h")                            // two buckets
+        refuses("SELECT bucket(ts, '1 month') AS d, count(*) AS n" + G) // calendar width
+        refuses("SELECT ts, count(*) AS n FROM dom.events GROUP BY ts") // raw ts key
+        refuses(B + ", count(DISTINCT click.user) AS cd" + G)         // distinct agg
+        refuses(B + ", median(click) AS md" + G)                      // sort-based agg
+        refuses(B + ", percentile(click, 0.5) AS p" + G)              // percentile
+        refuses(B + ", approx_percentile(click, 0.5) AS p" + G)       // sketch agg
+        refuses(B + ", approx_distinct(click.user) AS ad" + G)        // sketch agg
+        // session(ts, gap) is a valid time key (compiles to session_window)
+        // when a plain grouping key rides along…
+        graft.boostql.BoostQL.sqlStream(
+          "SELECT session(ts, '6 hours') AS w, click.user AS u, " +
+            "count(*) AS n FROM dom.events GROUP BY w, u",
+          _ => stream, "1 day")
+        // …but a GLOBAL session merge refuses (engine limitation, caught at
+        // compile instead of stream start), as do session+bucket together,
+        // calendar gaps, and non-positive gaps
+        assert(intercept[graft.boostql.Compiler.CompileException](
+          graft.boostql.BoostQL.sqlStream(
+            "SELECT session(ts, '6 hours') AS w, count(*) AS n " +
+              "FROM dom.events GROUP BY w", _ => stream, "1 day"))
+          .getMessage.contains("grouping key"))
+        refuses("SELECT session(ts, '6 hours') AS w, " +
+          "CAST(bucket(ts, '1 day') AS int) AS d, count(*) AS n " +
+          "FROM dom.events GROUP BY w, d")                  // two time keys
+        refuses("SELECT session(ts, '1 month') AS w, click.user AS u, " +
+          "count(*) AS n FROM dom.events GROUP BY w, u")    // calendar gap
+        refuses("SELECT session(ts, '0 seconds') AS w, click.user AS u, " +
+          "count(*) AS n FROM dom.events GROUP BY w, u")    // zero gap
+        // approx_top_k IS streaming-safe (capacity-bounded MG state) — it
+        // must compile through the watermarked form…
+        graft.boostql.BoostQL.sqlStream(
+          B + ", approx_top_k(click.k, 8) AS top" + G, _ => stream, "1 day")
+        // …and keep refusing in the STATELESS overload (it aggregates)
         intercept[graft.boostql.Compiler.CompileException](
-          graft.boostql.BoostQL.sqlStream(sql, _ => stream, "1 day"))
-      val G = " FROM dom.events GROUP BY d"
-      val B = "SELECT CAST(bucket(ts, '1 day') AS int) AS d, count(*) AS n"
-      refuses(B + G + " FILL(previous)")                            // FILL
-      refuses(B + G + " ORDER BY d")                                // ORDER BY
-      refuses(B + G + " LIMIT 5")                                   // LIMIT
-      refuses("SELECT DISTINCT CAST(bucket(ts, '1 day') AS int) AS d, " +
-        "count(*) AS n" + G)                                        // DISTINCT
-      refuses(B + ", rank() OVER (ORDER BY n) AS rk" + G)           // window fn
-      refuses(B + " FROM dom.events GROUP BY ROLLUP (d)")           // rollup
-      refuses("SELECT a.d, count(*) AS n FROM dom.events AS a " +
-        "JOIN dom.events AS b ON a.click.user = b.view.user " +
-        "GROUP BY a.d")                                             // JOIN
-      refuses(B + G + " UNION ALL " + B + G)                        // set op
-      refuses("SELECT click FROM dom.events")                       // no GROUP BY
-      refuses("SELECT click.user AS u, count(*) AS n " +
-        "FROM dom.events GROUP BY u")                               // no bucket key
-      refuses("SELECT CAST(bucket(ts, '1 day') AS int) AS d, " +
-        "CAST(bucket(ts, '1 hour') AS int) AS h, count(*) AS n " +
-        "FROM dom.events GROUP BY d, h")                            // two buckets
-      refuses("SELECT bucket(ts, '1 month') AS d, count(*) AS n" + G) // calendar width
-      refuses("SELECT ts, count(*) AS n FROM dom.events GROUP BY ts") // raw ts key
-      refuses(B + ", count(DISTINCT click.user) AS cd" + G)         // distinct agg
-      refuses(B + ", median(click) AS md" + G)                      // sort-based agg
-      refuses(B + ", percentile(click, 0.5) AS p" + G)              // percentile
-      refuses(B + ", approx_percentile(click, 0.5) AS p" + G)       // sketch agg
-      refuses(B + ", approx_distinct(click.user) AS ad" + G)        // sketch agg
-      // session(ts, gap) is a valid time key (compiles to session_window)
-      // when a plain grouping key rides along…
-      graft.boostql.BoostQL.sqlStream(
-        "SELECT session(ts, '6 hours') AS w, click.user AS u, " +
-          "count(*) AS n FROM dom.events GROUP BY w, u",
-        _ => stream, "1 day")
-      // …but a GLOBAL session merge refuses (engine limitation, caught at
-      // compile instead of stream start), as do session+bucket together,
-      // calendar gaps, and non-positive gaps
-      assert(intercept[graft.boostql.Compiler.CompileException](
+          graft.boostql.BoostQL.sqlStream(
+            "SELECT approx_top_k(click.k, 8) AS top FROM dom.events",
+            _ => stream))
+        // histogram IS streaming-safe too (nbins plain sums — constant
+        // state per window entry); same stateless-overload refusal
         graft.boostql.BoostQL.sqlStream(
-          "SELECT session(ts, '6 hours') AS w, count(*) AS n " +
-            "FROM dom.events GROUP BY w", _ => stream, "1 day"))
-        .getMessage.contains("grouping key"))
-      refuses("SELECT session(ts, '6 hours') AS w, " +
-        "CAST(bucket(ts, '1 day') AS int) AS d, count(*) AS n " +
-        "FROM dom.events GROUP BY w, d")                  // two time keys
-      refuses("SELECT session(ts, '1 month') AS w, click.user AS u, " +
-        "count(*) AS n FROM dom.events GROUP BY w, u")    // calendar gap
-      refuses("SELECT session(ts, '0 seconds') AS w, click.user AS u, " +
-        "count(*) AS n FROM dom.events GROUP BY w, u")    // zero gap
-      // approx_top_k IS streaming-safe (capacity-bounded MG state) — it
-      // must compile through the watermarked form…
-      graft.boostql.BoostQL.sqlStream(
-        B + ", approx_top_k(click.k, 8) AS top" + G, _ => stream, "1 day")
-      // …and keep refusing in the STATELESS overload (it aggregates)
-      intercept[graft.boostql.Compiler.CompileException](
+          B + ", histogram(click, 0, 500, 4) AS h" + G, _ => stream, "1 day")
+        intercept[graft.boostql.Compiler.CompileException](
+          graft.boostql.BoostQL.sqlStream(
+            "SELECT histogram(click, 0, 500, 4) AS h FROM dom.events",
+            _ => stream))
+        // …but histogram in HAVING refuses (a count string is not a
+        // comparable aggregate)
+        refuses(B + G + " HAVING histogram(click, 0, 500, 4) != ''")
+        // aggregate EXPRESSIONS (the corr/regr desugar shape) compile —
+        // hidden pair sums + a stateless tail on finalized windows…
         graft.boostql.BoostQL.sqlStream(
-          "SELECT approx_top_k(click.k, 8) AS top FROM dom.events",
-          _ => stream))
-      // histogram IS streaming-safe too (nbins plain sums — constant
-      // state per window entry); same stateless-overload refusal
-      graft.boostql.BoostQL.sqlStream(
-        B + ", histogram(click, 0, 500, 4) AS h" + G, _ => stream, "1 day")
-      intercept[graft.boostql.Compiler.CompileException](
+          B + ", corr(click, CAST(click.k AS float)) AS r" + G,
+          _ => stream, "1 day")
         graft.boostql.BoostQL.sqlStream(
-          "SELECT histogram(click, 0, 500, 4) AS h FROM dom.events",
-          _ => stream))
-      // …but histogram in HAVING refuses (a count string is not a
-      // comparable aggregate)
-      refuses(B + G + " HAVING histogram(click, 0, 500, 4) != ''")
-      // aggregate EXPRESSIONS (the corr/regr desugar shape) compile —
-      // hidden pair sums + a stateless tail on finalized windows…
-      graft.boostql.BoostQL.sqlStream(
-        B + ", corr(click, CAST(click.k AS float)) AS r" + G,
-        _ => stream, "1 day")
-      graft.boostql.BoostQL.sqlStream(
-        B + ", regr_slope(click, CAST(click.k AS float)) AS sl" + G,
-        _ => stream, "1 day")
-      graft.boostql.BoostQL.sqlStream(
-        B + ", sum(click) / count(click) AS ratio" + G, _ => stream, "1 day")
-      // …and an aggregate expression referencing the BUCKET ALIAS
-      // resolves to the post-rename (post-CAST) bucket value instead of
-      // failing against the pre-rename frame where only `window` exists
-      val qb = "SELECT CAST(bucket(ts, '1 day') AS int) AS d, " +
-        "count(click) AS n, count(click) + d / 86400 AS nd" + G
-      val sinkB = "graft_sqlwin_ba_" + java.util.UUID.randomUUID.toString.replace("-", "")
-      val sqB = graft.boostql.BoostQL.sqlStream(qb, _ => stream, "1 day")
-        .writeStream.format("memory").queryName(sinkB)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      sqB.awaitTermination()
-      val gotB = spark.table(sinkB).orderBy("d").collect().toSeq
-      assert(gotB.nonEmpty && gotB.forall(r =>
-        r.getLong(1) + r.getLong(0) / 86400.0 == r.getDouble(2)))
-      // a cyclic expression-alias reference refuses instead of looping
-      refuses(B + ", sum(click) + x AS x" + G)
-      refuses(B + ", sum(click) + y AS x, sum(click) + x AS y" + G)
-      // …while expressions containing non-streaming-safe aggregates, and
-      // expressions over raw (non-output) fields, keep refusing
-      refuses(B + ", median(click) + 1.0 AS m" + G)
-      refuses(B + ", percentile(click, 0.5) * 2.0 AS p" + G)
-      refuses(B + ", sum(click) + click AS broken" + G)
-      refuses(B + ", count(click)" + G)                             // unaliased agg
-      refuses(B + ", upper(click.user) AS uu" + G)                  // bare scalar item
-      refuses("SELECT CAST(bucket(ts, '1 day') AS int) AS d, count(*) AS n " +
-        "FROM (SELECT DISTINCT click AS x, ts FROM dom.events) AS t " +
-        "GROUP BY d")                          // stateful derived table (sweep)
-      // HAVING refusal edges: window fns, unknown names, and
-      // non-streaming-safe aggregates inside the condition
-      refuses(B + G + " HAVING rank() OVER (ORDER BY ts) > 1")
-      refuses(B + G + " HAVING nope > 1")
-      refuses(B + G + " HAVING median(click) > 1.0")
+          B + ", regr_slope(click, CAST(click.k AS float)) AS sl" + G,
+          _ => stream, "1 day")
+        graft.boostql.BoostQL.sqlStream(
+          B + ", sum(click) / count(click) AS ratio" + G, _ => stream, "1 day")
+        // …and an aggregate expression referencing the BUCKET ALIAS
+        // resolves to the post-rename (post-CAST) bucket value instead of
+        // failing against the pre-rename frame where only `window` exists
+        val qb = "SELECT CAST(bucket(ts, '1 day') AS int) AS d, " +
+          "count(click) AS n, count(click) + d / 86400 AS nd" + G
+        val sqB = graft.boostql.BoostQL.sqlStream(qb, _ => stream, "1 day")
+          .writeStream.format("memory").queryName(sinkB)
+          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+        sqB.awaitTermination()
+        val gotB = spark.table(sinkB).orderBy("d").collect().toSeq
+        assert(gotB.nonEmpty && gotB.forall(r =>
+          r.getLong(1) + r.getLong(0) / 86400.0 == r.getDouble(2)))
+        // a cyclic expression-alias reference refuses instead of looping
+        refuses(B + ", sum(click) + x AS x" + G)
+        refuses(B + ", sum(click) + y AS x, sum(click) + x AS y" + G)
+        // …while expressions containing non-streaming-safe aggregates, and
+        // expressions over raw (non-output) fields, keep refusing
+        refuses(B + ", median(click) + 1.0 AS m" + G)
+        refuses(B + ", percentile(click, 0.5) * 2.0 AS p" + G)
+        refuses(B + ", sum(click) + click AS broken" + G)
+        refuses(B + ", count(click)" + G)                             // unaliased agg
+        refuses(B + ", upper(click.user) AS uu" + G)                  // bare scalar item
+        refuses("SELECT CAST(bucket(ts, '1 day') AS int) AS d, count(*) AS n " +
+          "FROM (SELECT DISTINCT click AS x, ts FROM dom.events) AS t " +
+          "GROUP BY d")                          // stateful derived table (sweep)
+        // HAVING refusal edges: window fns, unknown names, and
+        // non-streaming-safe aggregates inside the condition
+        refuses(B + G + " HAVING rank() OVER (ORDER BY ts) > 1")
+        refuses(B + G + " HAVING nope > 1")
+        refuses(B + G + " HAVING median(click) > 1.0")
+      }
     }
   }
 

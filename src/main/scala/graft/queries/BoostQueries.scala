@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.boostql.{BoostQL, Compiler}
 import graft.sources.TimeSeriesTable
+import graft.streaming.StreamingOps
 import graft.tables.Tables
 
 /** Queries exercised through the BoostQL dialect front end — the
@@ -294,7 +295,7 @@ object BoostQueries {
     // matching it proves the footer totals agree with the data the
     // write path actually committed, partition by partition
     "boost_show_partitions" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_showp").toString
+      val root = StreamingOps.tempRoot("graft_showp")
       TimeSeriesTable.append(
         TimeSeriesTable.fromEventsFanned(Tables.events(s, d)), root, "dom", "events")
       BoostQL.sqlShowPartitions("SHOW PARTITIONS dom.events", s, root)
@@ -507,7 +508,7 @@ object BoostQueries {
     // is exact, so the cache-served catalog hash-matches the same
     // oracle the frame-based DESCRIBE uses
     "boost_describe_cached" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_descc").toString
+      val root = StreamingOps.tempRoot("graft_descc")
       val fam = TimeSeriesTable.fromEventsFanned(Tables.events(s, d))
       TimeSeriesTable.append(fam, root, "dom", "events")
       BoostQL.sqlDescribe("DESCRIBE dom.events", s, root).count()
@@ -1085,7 +1086,7 @@ object BoostQueries {
     // and query the REREAD copy through the dialect. Matching the
     // direct-events oracle proves the write→read cycle lossless.
     "boost_roundtrip" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_roundtrip").toString
+      val root = StreamingOps.tempRoot("graft_roundtrip")
       TimeSeriesTable.append(
         TimeSeriesTable.fromEventsFanned(Tables.events(s, d)), root, "dom", "events")
       val reread = TimeSeriesTable.open(s, root, "dom", "events")
@@ -1100,7 +1101,7 @@ object BoostQueries {
     // query over the compacted copy must still match the direct-events
     // oracle bit for bit (compaction moves bytes, never rows)
     "boost_compact_roundtrip" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_compact").toString
+      val root = StreamingOps.tempRoot("graft_compact")
       val fam = TimeSeriesTable.fromEventsFanned(Tables.events(s, d))
       import org.apache.spark.sql.functions.{col, element_at, lit, pmod}
       val id = element_at(col("attributes"), "event_id").cast("long")
@@ -1117,7 +1118,7 @@ object BoostQueries {
     // (metadata-only retention); the surviving rows are exactly the
     // oracle's CAST(ts AS DATE) >= cutoff slice
     "boost_expire_roundtrip" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_expire").toString
+      val root = StreamingOps.tempRoot("graft_expire")
       TimeSeriesTable.append(
         TimeSeriesTable.fromEventsFanned(Tables.events(s, d)), root, "dom", "events")
       TimeSeriesTable.expire(s, root, "dom", "events",
@@ -1134,7 +1135,7 @@ object BoostQueries {
     // dialect queries the survivors — matching the oracle's date slice
     // proves the partition-granular cut exact
     "boost_delete_roundtrip" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_sqldel").toString
+      val root = StreamingOps.tempRoot("graft_sqldel")
       TimeSeriesTable.append(
         TimeSeriesTable.fromEventsFanned(Tables.events(s, d)), root, "dom", "events")
       val dropped = BoostQL.sqlDelete(
@@ -1156,7 +1157,7 @@ object BoostQueries {
     // (byte-identity of untouched partitions is pinned in
     // TimeSeriesTableSpec)
     "boost_delete_rows" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_rowdel").toString
+      val root = StreamingOps.tempRoot("graft_rowdel")
       TimeSeriesTable.append(
         TimeSeriesTable.fromEventsFanned(Tables.events(s, d)), root, "dom", "events")
       val affected = BoostQL.sqlDelete(
@@ -1188,7 +1189,7 @@ object BoostQueries {
     // survive intact (byte-identity of untouched partitions is pinned
     // in TimeSeriesTableSpec)
     "boost_update_rows" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_rowupd").toString
+      val root = StreamingOps.tempRoot("graft_rowupd")
       TimeSeriesTable.append(
         TimeSeriesTable.fromEventsFanned(Tables.events(s, d)), root, "dom", "events")
       val a1 = BoostQL.sqlUpdate(
@@ -1221,7 +1222,7 @@ object BoostQueries {
     // reconstructs them pairwise. Matching the direct-events oracle
     // proves SQL write → reopen → query lossless.
     "boost_insert_roundtrip" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_insert").toString
+      val root = StreamingOps.tempRoot("graft_insert")
       val fam = TimeSeriesTable.fromEvents(Tables.events(s, d))
       BoostQL.sqlInsert(
         "INSERT INTO dom.derived SELECT ts, purchase AS p, " +
@@ -1243,7 +1244,7 @@ object BoostQueries {
     // partitions. The dialect reads both series from the reread family;
     // the oracle replays the merge as seed LEFT JOIN corrections.
     "boost_upsert_rows" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+      val root = StreamingOps.tempRoot("graft_upsert")
       val fam = TimeSeriesTable.fromEvents(Tables.events(s, d))
       BoostQL.sqlInsert(
         "INSERT INTO dom.derived SELECT ts, max(purchase) AS p " +
@@ -1279,8 +1280,7 @@ object BoostQueries {
     // from-scratch replay — recording rules as one idempotent statement
     "boost_refresh_rollup" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, lit, to_date, unix_micros}
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlrefresh").toString
+      val root = StreamingOps.tempRoot("graft_sqlrefresh")
       val fam = TimeSeriesTable.fromEventsFanned(Tables.events(s, d))
       val cut = java.sql.Timestamp.valueOf("2024-01-20 00:00:00")
       TimeSeriesTable.append(fam.filter(col("ts") < lit(cut)),
@@ -1314,7 +1314,7 @@ object BoostQueries {
     // whole-family drop the row-level DELETE refuses by design, and
     // IF EXISTS makes it idempotent. The read proves the REPLACE won.
     "boost_create_family" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_ctas").toString
+      val root = StreamingOps.tempRoot("graft_ctas")
       val fam = TimeSeriesTable.fromEvents(Tables.events(s, d))
       val n1 = BoostQL.sqlCreateFamily(
         "CREATE FAMILY dom.derived AS SELECT ts, max(view) AS v " +
@@ -1350,7 +1350,7 @@ object BoostQueries {
     // reread family; the oracle replays clause order via LEFT JOIN +
     // CASE with the same guards.
     "boost_merge_rows" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_merge").toString
+      val root = StreamingOps.tempRoot("graft_merge")
       val fam = TimeSeriesTable.fromEvents(Tables.events(s, d))
       BoostQL.sqlInsert(
         "INSERT INTO dom.derived SELECT ts, max(purchase) AS p " +
@@ -1380,7 +1380,7 @@ object BoostQueries {
     // family in lockstep with its source. The oracle replays the full
     // outer join with the same clause guards.
     "boost_merge_sync" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_msync").toString
+      val root = StreamingOps.tempRoot("graft_msync")
       val fam = TimeSeriesTable.fromEvents(Tables.events(s, d))
       BoostQL.sqlInsert(
         "INSERT INTO dom.derived SELECT ts, max(purchase) AS p " +
@@ -1412,7 +1412,7 @@ object BoostQueries {
     // oracle's full-outer replay checks both the CASE-rewritten values
     // and the flag column.
     "boost_merge_sync_update" -> ((s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_msyncu").toString
+      val root = StreamingOps.tempRoot("graft_msyncu")
       val fam = TimeSeriesTable.fromEvents(Tables.events(s, d))
       BoostQL.sqlInsert(
         "INSERT INTO dom.derived SELECT ts, max(purchase) AS p " +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.TimeSeriesOps
 import graft.sources.TimeSeriesTable
+import graft.streaming.StreamingOps
 import graft.tables.Tables
 
 /** Time-series operator tier over the events family: time-range scans
@@ -243,8 +244,7 @@ object TimeSeriesQueries {
     // read path and compare against DuckDB aggregating the raw events —
     // proves the materialize→write→reread cycle end to end
     "ts_rollup" -> ((s, d) => {
-      val root =
-        java.nio.file.Files.createTempDirectory("graft_rollup").toString
+      val root = StreamingOps.tempRoot("graft_rollup")
       TimeSeriesTable.append(
         TimeSeriesTable.fromEventsFanned(Tables.events(s, d)), root, "dom", "events")
       val fam = TimeSeriesTable.downsample(s, root, "dom", "events",
@@ -262,8 +262,7 @@ object TimeSeriesQueries {
     // oracle. The refresh verb is what keeps dashboard rollups current
     // under daily ingest without rescanning history.
     "ts_refresh_rollup" -> ((s, d) => {
-      val root =
-        java.nio.file.Files.createTempDirectory("graft_refresh").toString
+      val root = StreamingOps.tempRoot("graft_refresh")
       val fam = TimeSeriesTable.fromEventsFanned(Tables.events(s, d))
       val cut = java.sql.Timestamp.valueOf("2024-01-20 00:00:00")
       TimeSeriesTable.append(fam.filter(col("ts") < lit(cut)),
@@ -303,8 +302,7 @@ object TimeSeriesQueries {
     // SURVIVING rows from scratch, so the healed rollup hash-matching
     // it proves the incremental repair equals a full rebuild.
     "ts_refresh_after_delete" -> ((s, d) => {
-      val root =
-        java.nio.file.Files.createTempDirectory("graft_refreshdel").toString
+      val root = StreamingOps.tempRoot("graft_refreshdel")
       val fam = TimeSeriesTable.fromEventsFanned(Tables.events(s, d))
       TimeSeriesTable.append(fam, root, "dom", "events")
       val day = 86400L * 1000000L

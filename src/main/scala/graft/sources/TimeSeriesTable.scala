@@ -3,8 +3,17 @@ package graft.sources
 import java.io.IOException
 import java.sql.Timestamp
 
+import java.util.concurrent.{Callable, ConcurrentHashMap, LinkedBlockingQueue,
+  ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat,
+  FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -92,10 +101,24 @@ object TimeSeriesTable {
     * Format is parquet by default; orc/json/csv are supported for
     * interchange (the explicit schema keeps text formats lossless for
     * the scalar columns; maps require parquet/orc).
+    *
+    * The frame is the one a directory read gives — the same files (by
+    * Spark's hidden-name rule), schema and `dt` partition column — but
+    * its file index is built from the driver's own parallel listing
+    * ([[relation]]), so opening a family of thousands of dates runs no
+    * Spark job. Two cases keep Spark's directory read: a family that
+    * holds a streaming sink's `_spark_metadata` log, whose reader
+    * honours only the files that log committed, and a missing family,
+    * which fails as a directory read does.
     */
   def open(spark: SparkSession, root: String, domain: String, family: String,
-      format: String = "parquet"): DataFrame =
-    spark.read.schema(schema).format(format).load(s"$root/$domain/$family")
+      format: String = "parquet"): DataFrame = {
+    val dir = new Path(s"$root/$domain/$family")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir) && !fs.exists(new Path(dir, "_spark_metadata")))
+      relation(spark, dir, listDataStatus(fs, dir), schema, format)
+    else spark.read.schema(schema).format(format).load(s"$root/$domain/$family")
+  }
 
   /** Open a family as a STREAMING source — the read half of the ingest
     * topology whose write half is
@@ -117,17 +140,32 @@ object TimeSeriesTable {
 
   /** Append rows (any DataFrame with the family schema), partitioned by
     * event date — the write path analogue of SeriesFamily.WriteTagged
-    * (m3dbseriesfamily.go:147-185). `sortWithinPartitions` gives parquet
-    * row groups clustered by series so series predicates prune via
-    * min/max stats.
+    * (m3dbseriesfamily.go:147-185). Each date lands as one file whose
+    * rows are (series, ts)-sorted, so parquet row groups cluster by
+    * series and series predicates prune via min/max stats; the dates
+    * spread over the session's shuffle tasks ([[writeByDate]]), so a
+    * many-date load writes its files in parallel.
     */
   def append(df: DataFrame, root: String, domain: String, family: String,
       format: String = "parquet"): Unit =
-    df.withColumn("dt", to_date(col("ts")))
-      .repartition(col("dt"))
+    writeByDate(df.withColumn("dt", to_date(col("ts"))), "append", format,
+      s"$root/$domain/$family")
+
+  /** THE FAMILY WRITE of [[append]], [[compact]] and
+    * [[refreshDownsample]] (CREATE OR REPLACE FAMILY goes through
+    * [[append]]): `rows` (family columns + `dt`) hash on `dt` into
+    * exactly `spark.sql.shuffle.partitions` tasks, each (series,
+    * ts)-sorted, written `partitionBy("dt")` — one file per date. The
+    * count is explicit because adaptive execution merges a small
+    * shuffle with an implicit count into ONE task, which then writes
+    * every date's file in series (a 60-date load ran as 1 task).
+    */
+  private def writeByDate(rows: DataFrame, mode: String, format: String,
+      path: String): Unit =
+    rows.repartition(rows.sparkSession.sessionState.conf.numShufflePartitions,
+        col("dt"))
       .sortWithinPartitions("series", "ts")
-      .write.partitionBy("dt").mode("append")
-      .format(format).save(s"$root/$domain/$family")
+      .write.partitionBy("dt").mode(mode).format(format).save(path)
 
   /** RETENTION: drop whole date partitions older than the cutoff —
     * metadata-only directory removal, never a rewrite, which is the
@@ -278,8 +316,8 @@ object TimeSeriesTable {
     val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tgtPath = new Path(s"$root/$domain/$target")
     val statuses = listDataStatus(fs, srcPath)
-    requireLayout(statuses.map(_.getPath.toString), "refreshDownsample",
-      srcDir)
+    requireParquet(statuses, "refreshDownsample", srcDir)
+    requireLayout(statuses, "refreshDownsample", srcDir)
     val byDt = statuses.groupBy(st => dtOf(st.getPath.toString))
     val sig: Map[String, String] =
       byDt.collect { case (Some(d), sts) => d -> signature(sts) }
@@ -295,14 +333,10 @@ object TimeSeriesTable {
     val tmp = scratch(root, domain, target, Verb.Refresh.temp)
     if (fs.exists(tmp)) fs.delete(tmp, true)
     if (changed.nonEmpty) {
-      val rebuildFiles = filesOn(statuses.map(_.getPath.toString), changed)
-      val rows = rollupRows(
-        spark.read.schema(schema).parquet(rebuildFiles: _*),
+      val rows = rollupRows(readFiles(spark, srcDir, filesOn(statuses, changed)),
         bucketMicros, label)
-      rows.withColumn("dt", to_date(col("ts")))
-        .repartition(col("dt"))
-        .sortWithinPartitions("series", "ts")
-        .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
+      writeByDate(rows.withColumn("dt", to_date(col("ts"))), "overwrite",
+        "parquet", tmp.toString)
     }
     // a removed date has no rewrite output, and neither has a source
     // date whose every value is NULL: the swap leaves both empty
@@ -316,76 +350,145 @@ object TimeSeriesTable {
 
   /** Sum of the files' parquet-footer record counts — the authoritative
     * per-file row count (what the writer committed), read from metadata
-    * only. Footers are fetched on a bounded thread pool: compaction
+    * only. Footers are fetched on the [[driverPool]]: compaction
     * targets are exactly the many-small-files directories, and a
     * thousand sequential ~ms footer reads would add driver seconds for
     * no reason (object stores amplify per-request latency further).
+    * The listing's status is reused, so a footer read costs no extra
+    * stat.
     */
-  private def footerRowCount(spark: SparkSession, files: Seq[String]): Long = {
-    if (files.isEmpty) return 0L
+  private def footerRowCount(spark: SparkSession, files: Seq[FileStatus]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, files.length))
-    try {
-      import scala.jdk.CollectionConverters._
-      val tasks: java.util.List[java.util.concurrent.Callable[Long]] =
-        files.map[java.util.concurrent.Callable[Long]] { f => () =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.asJava
-      pool.invokeAll(tasks).asScala.map(_.get()).sum
-    } finally pool.shutdown()
+    onDriverPool(files) { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
+  /** The driver's pool for metadata I/O — [[listDataStatus]]'s
+    * per-directory listings and [[footerRowCount]]'s footer reads. One
+    * bounded pool for the process (16 daemon threads, released after a
+    * minute idle) rather than one built and shut down per call: [[open]]
+    * lists on every call. */
+  private lazy val driverPool: ThreadPoolExecutor = {
+    val n = new AtomicInteger
+    val pool = new ThreadPoolExecutor(16, 16, 60L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"graft-driver-io-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+
+  /** `work` over `items` on the [[driverPool]], results in item order;
+    * a failed item rethrows (wrapped) once all have run. */
+  private def onDriverPool[A, B](items: Seq[A])(work: A => B): Seq[B] =
+    if (items.isEmpty) Seq.empty
+    else driverPool.invokeAll(
+      items.map[Callable[B]](a => () => work(a)).asJava).asScala.map(_.get()).toSeq
+
+  /** Spark's hidden-name rule for file sources: a name starting with `_`
+    * (other than a `k=v` partition directory) or `.`, or an in-flight
+    * `._COPYING_` upload, holds no data — `_SUCCESS`, a streaming
+    * sink's `_spark_metadata`, `_temporary`, checksum and sidecar
+    * dot-files. */
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
   /** Recursive data-file listing, parallelized PER DIRECTORY: one
-    * listStatus per directory on a bounded pool, level by level. The
-    * sequential `fs.listFiles(path, true)` walk this replaces paid one
-    * round-trip per directory in series — ~30 s at 3,000 date
+    * listStatus per directory on the [[driverPool]], level by level.
+    * The sequential `fs.listFiles(path, true)` walk this replaces paid
+    * one round-trip per directory in series — ~30 s at 3,000 date
     * partitions (CompactProbe), and worse against an object store
     * where each LIST is a network call. Parallel per-prefix listing is
     * the standard S3 idiom; on a local fs it just collapses the walk
-    * to near-zero. Skips the streaming-sink log (`_spark_metadata`)
-    * and counts only data files; a missing root lists as empty.
+    * to near-zero. It lists exactly what a Spark directory read would
+    * ([[hidden]] names are skipped, whatever the format), with
+    * qualified paths; a missing root lists as empty.
     */
-  private def listDataFiles(fs: FileSystem, root: Path): Seq[String] =
-    listDataStatus(fs, root).map(_.getPath.toString)
-
   private def listDataStatus(fs: FileSystem, root: Path): Seq[FileStatus] = {
     if (!fs.exists(root)) return Seq.empty
-    import scala.jdk.CollectionConverters._
     val out = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
-    var dirs = Seq(root)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-    try {
-      while (dirs.nonEmpty) {
-        val tasks: java.util.List[java.util.concurrent.Callable[
-            Array[FileStatus]]] =
-          dirs.map[java.util.concurrent.Callable[Array[FileStatus]]] {
-            d => () => fs.listStatus(d)
-          }.asJava
-        val level = pool.invokeAll(tasks).asScala.flatMap(_.get())
-        dirs = level.collect {
-          case st if st.isDirectory &&
-            st.getPath.getName != "_spark_metadata" => st.getPath
-        }.toSeq
-        out ++= level.collect {
-          case st if !st.isDirectory &&
-            st.getPath.getName.endsWith(".parquet") => st
-        }
-      }
-      out.toSeq
-    } finally pool.shutdown()
+    var dirs = Seq(fs.makeQualified(root))
+    while (dirs.nonEmpty) {
+      val level = onDriverPool(dirs)(fs.listStatus(_).toSeq).flatten
+        .filterNot(st => hidden(st.getPath.getName))
+      dirs = level.filter(_.isDirectory).map(_.getPath)
+      out ++= level.filterNot(_.isDirectory)
+    }
+    out.toSeq
   }
 
-  /** Read data files by EXPLICIT list ([[compact]]'s rationale) with
-    * the path-derived `dt` (`basePath` keeps it derivable). Spark then
-    * reads only files inside a `dt=` directory and skips the rest
-    * without an error — [[requireLayout]] refuses such a family first. */
+  /** A private [[FileStatusCache]] seeded with one root's data files: an
+    * index over it lists nothing. It forgets on invalidation, so a
+    * refresh of the index lists the root as Spark would. */
+  private final class SeededCache(root: Path, files: Seq[FileStatus])
+      extends FileStatusCache {
+    private val leaves = new ConcurrentHashMap[Path, Array[FileStatus]]()
+    leaves.put(root, files.toArray)
+    override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+      Option(leaves.get(path))
+    override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit =
+      leaves.put(path, files)
+    override def invalidateAll(): Unit = leaves.clear()
+  }
+
+  /** THE FAMILY READ: a frame over `files`, data files the driver has
+    * listed under the directory `dir`. It is Spark's own file
+    * relation — an `InMemoryFileIndex` rooted at `dir`, with the
+    * partition columns its path parsing infers (typed by `userSchema`
+    * where it names them) and `userSchema`'s other columns, nullable,
+    * as the data schema — built the way a `spark.read.schema(…)` read
+    * of `dir` builds it, except that the index's cache is seeded with
+    * `files` ([[SeededCache]]). So it runs no listing job (Spark lists
+    * more than 32 paths with one) and, the schema given, no schema job,
+    * and it reads only `files` — the explicit file list [[compact]]'s
+    * safety contract needs.
+    *
+    * The relation's identity is its file set, not just `dir`: Spark's
+    * cache matches plans by relation equality, and an
+    * `InMemoryFileIndex` equals any other index over the same root. So
+    * the files' [[signature]] (by full path) rides in the relation's
+    * options under [[FileSetKey]], and a cached [[open]] never serves
+    * a subset read of the same family, nor a read after a verb has
+    * changed the family's files. */
+  private def relation(spark: SparkSession, dir: Path, files: Seq[FileStatus],
+      userSchema: StructType, format: String = "parquet"): DataFrame = {
+    val conf = spark.sessionState.conf
+    val root = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(dir)
+    val fileFormat = DataSource.lookupDataSource(format, conf)
+      .getConstructor().newInstance() match {
+        case v2: FileDataSourceV2 =>
+          v2.fallbackFileFormat.getConstructor().newInstance()
+        case v1: FileFormat => v1
+        case other => throw new IllegalArgumentException(
+          s"$format is not a file format (${other.getClass.getName})")
+      }
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty,
+      Some(userSchema), new SeededCache(root, files))
+    val partition = index.partitionSchema
+    val data = StructType(userSchema
+      .filterNot(f => partition.exists(p => conf.resolver(p.name, f.name)))
+      .map(_.copy(nullable = true)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partition, data,
+      None, fileFormat, Map(FileSetKey -> signature(files, _.toString)))(spark))
+  }
+
+  /** The [[relation]] option naming its file set; no reader knows it. */
+  private val FileSetKey = "graft.fileSet"
+
+  /** Read family data files by EXPLICIT list ([[compact]]'s rationale)
+    * with the path-derived `dt`. Only files inside a `dt=` directory
+    * may be passed — [[requireLayout]] refuses a family holding others
+    * and [[compact]] reads those on their own. */
   private def readFiles(spark: SparkSession, dir: String,
-      files: Seq[String]): DataFrame =
-    spark.read.schema(withDt).option("basePath", dir).parquet(files: _*)
+      files: Seq[FileStatus]): DataFrame =
+    relation(spark, new Path(dir), files, withDt)
 
   /** The date of a `…/dt=YYYY-MM-DD/…` path; None outside the layout. */
   private def dtOf(path: String): Option[String] =
@@ -394,24 +497,44 @@ object TimeSeriesTable {
     }
 
   /** The files that sit in one of the `dates` partitions. */
-  private def filesOn(files: Seq[String], dates: Set[String]): Seq[String] =
-    files.filter(f => dtOf(f).exists(dates.contains))
+  private def filesOn(files: Seq[FileStatus],
+      dates: Set[String]): Seq[FileStatus] =
+    files.filter(f => dtOf(f.getPath.toString).exists(dates.contains))
 
   /** Refuse `what` on a family holding data files OUTSIDE the dt=
-    * layout: a [[readFiles]] read skips them and a per-partition swap
-    * cannot place them. A check on the listing; it runs no Spark job. */
-  private def requireLayout(files: Seq[String], what: String,
+    * layout: a [[readFiles]] read cannot give them a date and a
+    * per-partition swap cannot place them. A check on the listing; it
+    * runs no Spark job. */
+  private def requireLayout(files: Seq[FileStatus], what: String,
       dir: String): Unit =
-    if (files.exists(dtOf(_).isEmpty)) throw new IOException(
-      s"$what on $dir: data files exist OUTSIDE the dt= partition " +
-        "layout — compact() the family first")
+    if (files.exists(st => dtOf(st.getPath.toString).isEmpty))
+      throw new IOException(
+        s"$what on $dir: data files exist OUTSIDE the dt= partition " +
+          "layout — compact() the family first")
+
+  /** Refuse `what` on a family listing a data file that is not
+    * parquet: the verbs that read footers or rewrite through parquet
+    * ([[compact]], [[partitions]], [[describeCached]], the mutate
+    * verbs, [[refreshDownsample]]) serve parquet families only, and a
+    * parquet reader would fail on that file part-way. [[open]] reads
+    * every format. A check on the listing; it runs no Spark job. */
+  private def requireParquet(files: Seq[FileStatus], what: String,
+      dir: String): Unit =
+    files.find(!_.getPath.getName.endsWith(".parquet")).foreach { st =>
+      throw new IOException(
+        s"$what on $dir: ${st.getPath.getName} is not a parquet file — " +
+          s"$what serves parquet families only")
+    }
 
   /** A file set's signature, the sidecar manifests' invalidation key:
     * MD5 of the sorted name:length:mtime list. mtime catches a
     * non-Spark writer that rewrites a file IN PLACE with the same name
-    * and byte length. */
-  private def signature(sts: Seq[FileStatus]): String = {
-    val rendered = sts.map(st => s"${st.getPath.getName}:${st.getLen}:" +
+    * and byte length. `name` is the file's name by default, which is
+    * unique within one partition; a set that spans partitions, whose
+    * files may share a name, is signed by full path. */
+  private def signature(sts: Seq[FileStatus],
+      name: Path => String = _.getName): String = {
+    val rendered = sts.map(st => s"${name(st.getPath)}:${st.getLen}:" +
       st.getModificationTime).sorted.mkString("\n")
     java.security.MessageDigest.getInstance("MD5")
       .digest(rendered.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -493,10 +616,9 @@ object TimeSeriesTable {
       suffix: String): Path =
     new Path(s"$root/$domain/.${family}__$suffix")
 
-  /** Stage the [[mutate]] kernel's incoming batch: an
-    * arbitrary plan is not re-read-stable, so the batch is written once
-    * to the verb's staging temp and read back by explicit file list (no
-    * hidden-path filter on the dot-prefixed temp). ONE pass then gives
+  /** Stage the [[mutate]] kernel's incoming batch: an arbitrary plan
+    * is not re-read-stable, so the batch is written once to the verb's
+    * staging temp and read back from its listing. ONE pass then gives
     * per-date counts and key stats; Σ per-date distinct == global
     * distinct because duplicate keys share to_date(ts). Refuses NULL
     * keys (a NULL ts lands in the null dt group) and duplicate keys
@@ -513,8 +635,7 @@ object TimeSeriesTable {
         col("tags").cast(MapType(StringType, StringType)),
         col("attributes").cast(MapType(StringType, StringType)))
       .write.parquet(staging.toString)
-    val inc = spark.read.schema(schema)
-      .parquet(listDataFiles(fs, staging): _*)
+    val inc = relation(spark, staging, listDataStatus(fs, staging), schema)
     val dtStats = inc.groupBy(to_date(col("ts")).as("dt"))
       .agg(count(lit(1)).as("n"),
         count(when(col("series").isNull, 1)).as("nulls"),
@@ -533,16 +654,19 @@ object TimeSeriesTable {
 
   /** Rewrite parallelism of the [[mutate]] kernel, which every
     * copy-on-write mutate verb (DELETE, UPDATE, UPSERT, MERGE) runs
-    * through: hash each date's rows into
-    * `shufflePartitions / |affected partitions|` series slices, so a
-    * takedown touching three dates of a TB-per-day family does NOT
-    * serialize each date into one task (a bare `repartition(dt)`
-    * would). Series-hash slicing keeps every series' rows CLUSTERED
-    * within one file per date — row-group series pruning survives the
-    * rewrite — and unlike `repartitionByRange` it needs no sampling
-    * pass over the input. With many affected dates the quotient hits 1
-    * and the shape degrades gracefully to the one-file-per-date
-    * [[append]] layout.
+    * through: the rewrite hashes each date's rows on (dt, series slice)
+    * with `shufflePartitions / |affected partitions|` slices per date.
+    * Series-hash slicing keeps every series' rows CLUSTERED within one
+    * file — row-group series pruning survives the rewrite — and unlike
+    * `repartitionByRange` it needs no sampling pass over the input.
+    * The shuffle's partition count is left implicit, so adaptive
+    * execution decides what runs: a rewrite below its coalescing target
+    * (by default about `coalescePartitions.minPartitionSize`, 1 MB, per
+    * core) merges into ONE task, which writes one file per date, and
+    * only a rewrite large enough to keep several partitions — a
+    * TB-per-day takedown — writes a date as several series-sliced files
+    * from parallel tasks. With many affected dates the quotient hits 1
+    * and every size takes the one-file-per-date [[append]] layout.
     */
   private def rewriteSlices(spark: SparkSession, affectedParts: Int): Int =
     math.max(1, spark.sessionState.conf.numShufflePartitions /
@@ -561,7 +685,7 @@ object TimeSeriesTable {
         pmod(hash(col("series")), lit(rewriteSlices(spark, dates.size))))
       .sortWithinPartitions("series", "ts")
       .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
-    val n = footerRowCount(spark, listDataFiles(fs, tmp))
+    val n = footerRowCount(spark, listDataStatus(fs, tmp))
     if (n != expected) {
       fs.delete(tmp, true)
       throw new IOException(
@@ -686,7 +810,7 @@ object TimeSeriesTable {
     *    files that log committed — files landed by the batch path
     *    ([[append]] / SQL `INSERT`, which target the same layout) would
     *    be invisible to the rewrite and then destroyed with the swap.
-    *    The explicit list sees every parquet file regardless of
+    *    The explicit list sees every data file regardless of
     *    provenance; the sink log itself is retired by the swap (the
     *    compacted directory is batch-owned), so roll any live ingest
     *    stream to a new root first — its checkpoint's file log does not
@@ -707,8 +831,9 @@ object TimeSeriesTable {
     val dir = s"$root/$domain/$family"
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = listDataFiles(fs, p)
+    val files = listDataStatus(fs, p)
     if (files.isEmpty) return (0, 0)
+    requireParquet(files, Verb.Compact.label, dir)
     // row counts on both sides come from the parquet FOOTERS (summed
     // row-group record counts — authoritative commit metadata, no data
     // scan), so the rewrite write is the compaction's ONLY
@@ -718,18 +843,15 @@ object TimeSeriesTable {
     val tmp = scratch(root, domain, family, Verb.Compact.temp)
     // files outside the dt= layout, which a basePath read skips, are
     // read on their own and fold into the partitions of their rows' dates
-    val (inLayout, outside) = files.partition(dtOf(_).isDefined)
-    (Option.when(inLayout.nonEmpty)(readFiles(spark, dir, inLayout)) ++
+    val (inLayout, outside) =
+      files.partition(st => dtOf(st.getPath.toString).isDefined)
+    writeByDate((Option.when(inLayout.nonEmpty)(readFiles(spark, dir, inLayout)) ++
       Option.when(outside.nonEmpty)(spark.read.schema(schema)
-        .parquet(outside: _*).withColumn("dt", to_date(col("ts")))))
-      .reduce(_ unionByName _).repartition(col("dt"))
-      .sortWithinPartitions("series", "ts")
-      .write.partitionBy("dt").mode("overwrite").parquet(tmp.toString)
-    // verify via the explicit file list as well: the temp dir is
-    // dot-prefixed (hidden from sibling listings by design), and a
-    // directory listing of a hidden root would be filtered — the
-    // recursive file list is immune
-    val tmpFiles = listDataFiles(fs, tmp)
+        .parquet(outside.map(_.getPath.toString): _*)
+        .withColumn("dt", to_date(col("ts")))))
+      .reduce(_ unionByName _), "overwrite", "parquet", tmp.toString)
+    // verify by the footers of the temp's own listing
+    val tmpFiles = listDataStatus(fs, tmp)
     val rewritten = footerRowCount(spark, tmpFiles)
     if (rewritten != expected) {
       fs.delete(tmp, true)
@@ -773,6 +895,7 @@ object TimeSeriesTable {
     val statuses = listDataStatus(fs, p)
     if (statuses.isEmpty) return Seq.empty[(String, Long, Long, Long)]
       .toDF("part", "n_files", "n_bytes", "n_rows")
+    requireParquet(statuses, "partitions", p.toString)
     val byPart = byPartition(statuses)
     val manifestPath = new Path(p, ".graft_partitions_manifest")
     // part → (sig, n_files, n_bytes, n_rows)
@@ -790,7 +913,7 @@ object TimeSeriesTable {
         case _ =>
           footerReads = true
           (part, sig, sts.size.toLong, sts.map(_.getLen).sum,
-            footerRowCount(spark, sts.map(_.getPath.toString)))
+            footerRowCount(spark, sts))
       }
     }.sortBy(_._1)
     // rewrite the manifest only when something changed (incl. dropped
@@ -836,6 +959,7 @@ object TimeSeriesTable {
     if (statuses.isEmpty) return Seq.empty[(String, Long, Option[Long],
       Option[Long], String, String)].toDF("series", "n_points", "first_us",
       "last_us", "attr_keys", "tag_keys")
+    requireParquet(statuses, "describeCached", p.toString)
     val byPart = byPartition(statuses)
     // one cached stat row: (series, n, firstUs, lastUs, attrKeys, tagKeys)
     type Stat = (Option[String], Long, Option[Long], Option[Long],
@@ -1204,7 +1328,8 @@ object TimeSeriesTable {
     }
     val dir = s"$root/$domain/$family"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = listDataFiles(fs, new Path(dir))
+    val files = listDataStatus(fs, new Path(dir))
+    requireParquet(files, verb.label, dir)
     requireLayout(files, verb.label, dir)
     try {
       val staged = batch.map { case (incoming, dupReason) =>
@@ -1302,7 +1427,7 @@ object TimeSeriesTable {
           val ins = scratch(root, domain, family, verb.staged(1))
           onDates(rows, appendDates).write.mode("overwrite")
             .parquet(ins.toString)
-          spark.read.schema(schema).parquet(listDataFiles(fs, ins): _*)
+          relation(spark, ins, listDataStatus(fs, ins), schema)
         }
       }
       if (rewriteDates.nonEmpty) {

@@ -42,7 +42,8 @@ import graft.util.ParquetStats
 object StreamingOps {
 
   /** Temp roots for the replay topologies (family stores, checkpoints
-    * and the staged link dirs). The JVM's delete-on-exit cannot remove
+    * and the staged link dirs) and for the declared queries that write a
+    * family. The JVM's delete-on-exit cannot remove
     * non-empty trees, so every bench/verify invocation would otherwise leak a
     * family copy per stateful replay (measured: gigabytes per full
     * sweep on a long-lived host). Deletion happens at JVM exit, not per
@@ -67,7 +68,7 @@ object StreamingOps {
     * follow links (no `FOLLOW_LINKS`), so for a staged dir it removes
     * the symlinks and never the corpus files they point to.
     */
-  private def tempRoot(prefix: String): String = {
+  private[graft] def tempRoot(prefix: String): String = {
     val dir = Files.createTempDirectory(prefix)
     tempRoots.add(dir)
     dir.toString

@@ -1103,4 +1103,169 @@ class TimeSeriesTableSpec extends SparkSpec {
       assert(sqlUpd.exists(_.contains("EqualTo(series,mem)")), sqlUpd)
     }
   }
+
+  /** The Spark jobs `body` runs (through [[graft.Probe.capture]]), each
+    * as (call site, job description, tasks of its stages that wrote
+    * output rows — 0 for a job that writes none). */
+  private def jobsOf(body: => Any): Seq[(String, String, Int)] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Seq[Int])]()
+    val writers = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(e.jobId, (Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""),
+          e.stageIds))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val st = e.stageInfo
+        if (st.taskMetrics != null && st.taskMetrics.outputMetrics.recordsWritten > 0)
+          writers.put(st.stageId, st.numTasks)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val c = graft.Probe.capture(spark, s"tst-jobs-${java.util.UUID.randomUUID}")(body)
+      c.jobs.map { j =>
+        val (desc, stages) = jobs.get(j.id)
+        (j.callSite, desc, stages.map(writers.getOrDefault(_, 0)).sum)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Spark's distributed file listing, which a read of more than 32
+    * paths runs unless its file index is handed the listing. */
+  private def isListing(job: (String, String, Int)): Boolean =
+    job._2.startsWith("Listing leaf files")
+
+  /** `days` dates from 2024-01-01, two series, two rows per series a day. */
+  private def manyDates(days: Int) = mkRows(for {
+    d <- 0 until days
+    s <- Seq("cpu", "mem")
+    h <- Seq(1, 13)
+  } yield (s, java.time.LocalDate.of(2024, 1, 1).plusDays(d.toLong) +
+    f" $h%02d:00:00", d * 10.0 + h + (if (s == "cpu") 0.5 else 0.0)))
+
+  test("a 40-date append writes one file per date from the session's " +
+      "shuffle tasks; open runs no Spark job, and compact and a row " +
+      "DELETE run no listing job") {
+    withTempRoot("graft-manydates") { root =>
+      val rows = manyDates(40)
+      val appendJobs = jobsOf(TimeSeriesTable.append(rows, root, "dom", "m"))
+      val dirs = new java.io.File(s"$root/dom/m").listFiles()
+        .filter(_.getName.startsWith("dt="))
+      assert(dirs.length == 40)
+      dirs.foreach(d => assert(
+        d.listFiles().count(_.getName.endsWith(".parquet")) == 1, d.getName))
+      val shuffleTasks = spark.sessionState.conf.numShufflePartitions
+      // one write, one task per shuffle partition
+      assert(appendJobs.map(_._3).filter(_ > 0) == Seq(shuffleTasks), appendJobs)
+      // open: the driver's listing seeds the index; no job at all
+      val opened = jobsOf(TimeSeriesTable.open(spark, root, "dom", "m"))
+      assert(opened.isEmpty, opened)
+      val fam = TimeSeriesTable.open(spark, root, "dom", "m")
+      assert(fam.queryExecution.executedPlan.toString
+        .contains("InMemoryFileIndex"))
+      assert(fam.count() == rows.count())
+      val deleted = jobsOf(TimeSeriesTable.deleteRows(spark, root, "dom", "m",
+        col("series") === "cpu" && col("value") > 395.0))
+      assert(deleted.nonEmpty && !deleted.exists(isListing), deleted)
+      // one append more gives every date a second file to fold
+      TimeSeriesTable.append(rows, root, "dom", "m")
+      var files = (0, 0)
+      val compacted = jobsOf { files = TimeSeriesTable.compact(spark, root, "dom", "m") }
+      assert(compacted.nonEmpty && !compacted.exists(isListing), compacted)
+      assert(files == ((80, 40)))
+      assert(TimeSeriesTable.open(spark, root, "dom", "m").count() ==
+        2 * rows.count() - 1)
+    }
+  }
+
+  test("open gives a directory read's schema, rows and sums for " +
+      "parquet, orc and json") {
+    val rows = manyDates(40)
+    for (fmt <- Seq("parquet", "orc", "json")) {
+      withTempRoot(s"graft-open-$fmt") { root =>
+        TimeSeriesTable.append(rows, root, "dom", "m", fmt)
+        val opened = TimeSeriesTable.open(spark, root, "dom", "m", fmt)
+        val read = spark.read.schema(TimeSeriesTable.schema).format(fmt)
+          .load(s"$root/dom/m")
+        assert(opened.schema == read.schema, fmt)
+        def sig(df: org.apache.spark.sql.DataFrame) =
+          df.groupBy("series").agg(count(lit(1)).as("n"),
+              sum(col("value").cast("decimal(18,2)")).as("s"),
+              countDistinct(col("dt")).as("days"))
+            .orderBy("series").collect().toSeq
+        assert(opened.count() == read.count() && opened.count() == 160, fmt)
+        assert(sig(opened) == sig(read), fmt)
+      }
+    }
+  }
+
+  test("open of a missing family fails as a directory read does") {
+    withTempRoot("graft-missing") { root =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        TimeSeriesTable.open(spark, root, "dom", "nothere"))
+      assert(e.getMessage.startsWith("[PATH_NOT_FOUND] Path does not exist:"),
+        e.getMessage)
+    }
+  }
+
+  test("a cached open serves neither a verb's subset read nor a read " +
+      "after the verb changed the family") {
+    withTempRoot("graft-cached-open") { root =>
+      val day = 86400L * 1000000L
+      val rows = manyDates(3)
+      TimeSeriesTable.append(rows, root, "dom", "m")
+      TimeSeriesTable.refreshDownsample(spark, root, "dom", "m", day, "1d")
+      val cached = TimeSeriesTable.open(spark, root, "dom", "m").cache()
+      try {
+        assert(cached.count() == 12)
+        val onDay2 = to_date(col("ts")) === lit(java.sql.Date.valueOf("2024-01-02"))
+        // the kernel reads only day 2's file; served the whole cached
+        // family, its rewrite would hold every date and fail its check
+        val (deleted, parts) = TimeSeriesTable.deleteRows(spark, root, "dom",
+          "m", onDay2 && col("series") === "cpu")
+        assert(deleted == 2 && parts == Seq("dt=2024-01-02"))
+        assert(TimeSeriesTable.open(spark, root, "dom", "m").count() == 10)
+        val (updated, _) = TimeSeriesTable.updateRows(spark, root, "dom", "m",
+          onDay2, Seq(("mem", None, lit(-1.0))))
+        assert(updated == 2)
+        val (rebuilt, _) = TimeSeriesTable.refreshDownsample(
+          spark, root, "dom", "m", day, "1d")
+        assert(rebuilt == Seq("dt=2024-01-02"))
+        TimeSeriesTable.downsample(spark, root, "dom", "m", day, "1d",
+          Some("fresh"))
+        def rollup(f: String) = TimeSeriesTable.open(spark, root, "dom", f)
+          .select("series", "ts", "value").collect()
+          .map(r => (r.getString(0), r.getTimestamp(1), r.getDouble(2)))
+          .toSeq.sortBy(_.toString)
+        assert(rollup("m_1d") == rollup("fresh"))
+        assertNoScratch(root, "m")
+      } finally cached.unpersist(blocking = true)
+    }
+  }
+
+  test("the parquet-only verbs refuse a family holding another format") {
+    withTempRoot("graft-orc-verbs") { root =>
+      TimeSeriesTable.append(manyDates(2), root, "dom", "m", "orc")
+      def refusal(what: String)(verb: => Any): Unit = {
+        val e = intercept[java.io.IOException](verb)
+        assert(e.getMessage.startsWith(s"$what on ") &&
+          e.getMessage.contains(".orc is not a parquet file — " +
+            s"$what serves parquet families only"), e.getMessage)
+      }
+      refusal("compaction")(TimeSeriesTable.compact(spark, root, "dom", "m"))
+      refusal("partitions")(TimeSeriesTable.partitions(spark, root, "dom", "m"))
+      refusal("describeCached")(
+        TimeSeriesTable.describeCached(spark, root, "dom", "m"))
+      refusal("row-level DELETE")(TimeSeriesTable.deleteRows(spark, root,
+        "dom", "m", col("series") === "cpu"))
+      refusal("refreshDownsample")(TimeSeriesTable.refreshDownsample(
+        spark, root, "dom", "m", 86400L * 1000000L, "1d"))
+      // refused before any write: the family reads as it was
+      assert(TimeSeriesTable.open(spark, root, "dom", "m", "orc").count() == 8)
+      assertNoScratch(root, "m")
+    }
+  }
 }

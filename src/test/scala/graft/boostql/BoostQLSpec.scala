@@ -4578,4 +4578,101 @@ class BoostQLSpec extends SparkSpec {
     }
     assert(wrong.isEmpty, wrong.mkString("\n"))
   }
+
+  test("refusal texts of the stream aggregate") {
+    val G = " FROM dom.events GROUP BY d"
+    val J = "FROM dom.events AS a JOIN dom.events AS b ON a.click.user = " +
+      "b.purchase.user AND b.ts >= a.ts AND b.ts <= a.ts + INTERVAL '1 hour'"
+    val joinOnly = "streaming joined-stream aggregation supports one " +
+      "[CAST(]bucket(x.ts, '<width>')[ AS int)] key + dimension aliases + " +
+      "count/sum/avg/min/max only; "
+    val wider = " is not supported (the single-family sqlStream form is wider)"
+    // (query, whether it compiles as a stream, the exact text)
+    val cases = Seq(
+      // the aggregates and their aliases
+      ("SELECT bucket(ts, '1 hour') AS d, median(click) AS m" + G, true,
+        "median() is not streaming-safe — supported streaming aggregates: " +
+          "count, sum, avg, min, max, approx_top_k, histogram"),
+      ("SELECT bucket(ts, '1 hour') AS d, percentile(click, 0.5) AS p" + G, true,
+        "percentile() is not streaming-safe — supported streaming " +
+          "aggregates: count, sum, avg, min, max, approx_top_k"),
+      ("SELECT bucket(ts, '1 hour') AS d, count(click)" + G, true,
+        "streaming aggregates must be aliased (agg(x) AS name)"),
+      ("SELECT bucket(ts, '1 hour') AS d, click.user AS u FROM dom.events " +
+        "GROUP BY d, u", true,
+        "watermarked streaming aggregation needs at least one aggregate"),
+      // the time key
+      ("SELECT click.user AS u, count(click) AS n FROM dom.events GROUP BY u",
+        true, "watermarked streaming aggregation needs a bucket(ts, " +
+          "'<width>') or session(ts, '<gap>') group key selected under an alias"),
+      ("SELECT bucket(ts, '1 hour') AS d, bucket(ts, '1 day') AS e, " +
+        "count(click) AS n FROM dom.events GROUP BY d, e", true,
+        "watermarked streaming aggregation takes exactly one bucket(ts, …) " +
+          "or session(ts, …) group key"),
+      ("SELECT bucket(ts, '1 hour') AS d, count(click) AS n FROM dom.events " +
+        "GROUP BY d, ts", true,
+        "GROUP BY ts groups every point alone — use bucket(ts, …)"),
+      ("SELECT bucket(ts, '1 hour') AS d, click * 2.0 AS k, count(click) AS n " +
+        "FROM dom.events GROUP BY d, k", true,
+        "streaming GROUP BY alias 'k' must name a bucket(ts, …) / " +
+          "session(ts, …) item or a plain field"),
+      ("SELECT bucket(ts, '1 month') AS d, count(click) AS n" + G, true,
+        "streaming bucket width '1 month' must be fixed-width " +
+          "(microsecond…day) — the engine's tumbling window cannot evict " +
+          "calendar-width state"),
+      ("SELECT bucket(ts, '1 hour', '2 hours') AS d, count(click) AS n" + G,
+        true, "bucket() slide must not exceed the width — a larger slide " +
+          "leaves gaps (filter rows instead)"),
+      ("SELECT bucket(ts, '1 day', '7 hours') AS d, count(click) AS n" + G,
+        true, "bucket() width must be a multiple of the slide so every " +
+          "event is in exactly width/slide windows"),
+      ("SELECT CAST(bucket(ts, '1 hour') AS float) AS d, count(click) AS n" + G,
+        true, "streaming bucket key CAST must target int (epoch seconds), " +
+          "not float"),
+      ("SELECT session(ts, '1 hour') AS w, count(click) AS n " +
+        "FROM dom.events GROUP BY w", true,
+        "streaming session(ts, …) aggregation needs at least one plain " +
+          "grouping key besides the session — a global session merge is not " +
+          "supported by the engine (group by the series/user key whose " +
+          "activity defines the session)"),
+      // over a join
+      (s"SELECT session(a.ts, '1 hour') AS w, a.click.user AS u, " +
+        s"count(*) AS n $J GROUP BY w, u", true,
+        joinOnly + "a session key over a joined stream" + wider),
+      (s"SELECT bucket(a.ts, '1 day', '12 hours') AS d, count(*) AS n $J " +
+        "GROUP BY d", true, joinOnly + "a sliding bucket over a joined " +
+          "stream (an Expand between two stateful operators)" + wider),
+      (s"SELECT bucket(a.ts, '1 day') AS d, count(*) AS n $J GROUP BY d " +
+        "HAVING count(*) > 2", true, joinOnly + "HAVING over a joined-stream " +
+          "aggregate (filter the finalized windows at the sink, or use the " +
+          "single-family form which supports HAVING)" + wider),
+      (s"SELECT bucket(a.ts, '1 day') AS d, count(*) * 2 AS n $J GROUP BY d",
+        true, joinOnly + "the aggregate expression 'n'" + wider),
+      (s"SELECT bucket(a.ts, '1 day') AS d, approx_top_k(a.click.user, 3) " +
+        s"AS t $J GROUP BY d", true, joinOnly + "approx_top_k() (streaming-" +
+          "safe joined-stream aggregates: count, sum, avg, min, max)" + wider),
+      (s"SELECT bucket(a.ts, '1 day') AS d, count(*) AS n " +
+        J.replace("JOIN", "LEFT JOIN") + " GROUP BY d", true,
+        joinOnly + "GROUP BY over a LEFT OUTER joined stream (the " +
+          "null-extended rows only arrive at watermark finalize, a second " +
+          "layer of emission latency the aggregate would compound — " +
+          "aggregate the inner join, or the outer join at the sink)" + wider),
+      // a source named only through its time axis, in both tiers, and a
+      // source never named at all
+      ("SELECT bucket(ts, '1 hour') AS d, count(*) AS n" + G, true,
+        "source dom.events is never referenced"),
+      ("SELECT bucket(ts, '1 hour') AS d, count(*) AS n" + G, false,
+        "source dom.events is never referenced"),
+      ("SELECT a.click AS c FROM dom.events AS a CROSS JOIN dom.events AS b",
+        false, "source dom.events is never referenced"))
+    val wrong = cases.flatMap { case (q, stream, want) =>
+      val got = try {
+        if (stream) BoostQL.sqlStream(q, _ => fam, "1 day")
+        else BoostQL.sql(q, _ => fam)
+        "no refusal"
+      } catch { case e: Compiler.CompileException => e.getMessage }
+      if (got == want) None else Some(s"$q\n  want: $want\n  got:  $got")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
 }

@@ -19,9 +19,10 @@ import graft.sources.TimeSeriesTable
   *    written family returns the rows the batch read returns;
   *  - the streaming compiler as a whole: over batch frames (where
   *    `withWatermark` is a no-op) a single-family or self-joined
-  *    aggregate returns the rows the batch compiler returns, through
-  *    both joined topologies (the per-side hot-key plan for one-side
-  *    arguments, the symmetric join for mixed-side ones).
+  *    aggregate returns the rows the batch compiler returns: tumbling
+  *    and sliding keys, the plain aggregates, approx_top_k and
+  *    histogram, and both joined topologies (the per-side hot-key plan
+  *    for one-side arguments, the symmetric join for mixed-side ones).
   * The predicates span field, attribute and `ts` references, literals,
   * arithmetic, INTERVAL, CAST, CASE, IN, BETWEEN, LIKE, IS [NOT] NULL
   * and the scalar builtins, `round(x, d)` included. Values are exact
@@ -199,32 +200,48 @@ object EvalProps extends Properties("boostql.eval") {
 
   private val width: Gen[String] = Gen.oneOf("'10 minutes'", "'30 minutes'", "'1 hour'")
 
-  /** `SELECT <key> AS d[, <dim> AS h], <aggs> FROM <from> GROUP BY d[, h]`
-    * with the time key optionally cast to epoch seconds. */
-  private def aggQuery(tsRef: Gen[String], dim: Gen[String], arg: Gen[String],
+  /** `SELECT <key> AS d[, <dim> AS h], <aggs> FROM <from> GROUP BY d[, h]`. */
+  private def aggQuery(key: Gen[String], dim: Gen[String], agg: Gen[String],
       from: Gen[String]): Gen[String] = for {
-    ts <- tsRef; w <- width; cast <- Gen.oneOf(true, false)
-    h <- Gen.option(dim); n <- Gen.choose(1, 3)
-    aggs <- Gen.listOfN(n, Gen.oneOf(Gen.const("count(*)"),
-      for (fn <- Gen.oneOf("count", "sum", "avg", "min", "max"); a <- arg)
-        yield s"$fn($a)"))
-    src <- from
+    k <- key; h <- Gen.option(dim); n <- Gen.choose(1, 3)
+    aggs <- Gen.listOfN(n, agg); src <- from
   } yield {
-    val key = if (cast) s"CAST(bucket($ts, $w) AS int)" else s"bucket($ts, $w)"
-    val items = (s"$key AS d" +: h.map(d => s"$d AS h").toSeq) ++
+    val items = (s"$k AS d" +: h.map(d => s"$d AS h").toSeq) ++
       aggs.zipWithIndex.map { case (a, i) => s"$a AS x$i" }
     s"SELECT ${items.mkString(", ")} FROM $src GROUP BY d" + h.fold("")(_ => ", h")
   }
 
-  private val singleAgg: Gen[String] = aggQuery(Gen.const("ts"),
-    Gen.const("cpu.host"), Gen.oneOf("cpu", "cpu * 2.0", "cpu - 1.5"),
+  /** A tumbling bucket of `ts`, optionally cast to epoch seconds. */
+  private def tumbling(ts: Gen[String]): Gen[String] = for {
+    t <- ts; w <- width; cast <- Gen.oneOf(true, false)
+  } yield if (cast) s"CAST(bucket($t, $w) AS int)" else s"bucket($t, $w)"
+
+  /** A sliding bucket whose slide divides its width (batch takes the
+    * sliding key bare only, so it is never cast). */
+  private val sliding: Gen[String] = Gen.oneOf(
+    "'10 minutes', '5 minutes'", "'30 minutes', '10 minutes'",
+    "'1 hour', '20 minutes'", "'1 hour', '1 hour'").map(ws => s"bucket(ts, $ws)")
+
+  /** count(*) or one of the plain aggregates over `arg`. */
+  private def plainAgg(arg: Gen[String]): Gen[String] = Gen.oneOf(
+    Gen.const("count(*)"),
+    for (fn <- Gen.oneOf("count", "sum", "avg", "min", "max"); a <- arg)
+      yield s"$fn($a)")
+
+  private val singleArg: Gen[String] = Gen.oneOf("cpu", "cpu * 2.0", "cpu - 1.5")
+
+  private val singleAgg: Gen[String] = aggQuery(
+    Gen.oneOf(tumbling(Gen.const("ts")), sliding), Gen.const("cpu.host"),
+    Gen.frequency(3 -> plainAgg(singleArg),
+      1 -> (for (a <- singleArg; k <- Gen.choose(1, 4)) yield s"approx_top_k($a, $k)"),
+      1 -> (for (a <- singleArg; n <- Gen.choose(2, 6)) yield s"histogram($a, 0, 12, $n)")),
     Gen.oneOf("dom.f", "dom.f WHERE cpu > 2.0", "dom.f WHERE cpu.host != 'h2'"))
 
   /** A self-join on the host attribute within ten minutes. One-side
     * arguments decompose to the hot-key plan; `a.cpu + b.cpu` does not. */
-  private val joinedAgg: Gen[String] = aggQuery(Gen.oneOf("a.ts", "b.ts"),
+  private val joinedAgg: Gen[String] = aggQuery(tumbling(Gen.oneOf("a.ts", "b.ts")),
     Gen.oneOf("a.cpu.host", "b.cpu.host"),
-    Gen.oneOf("a.cpu", "b.cpu", "b.cpu * 2.0", "a.cpu + b.cpu"),
+    plainAgg(Gen.oneOf("a.cpu", "b.cpu", "b.cpu * 2.0", "a.cpu + b.cpu")),
     for {
       bound <- Gen.oneOf("b.ts BETWEEN a.ts AND a.ts + INTERVAL '10 minutes'",
         "b.ts >= a.ts AND b.ts <= a.ts + INTERVAL '10 minutes'")

@@ -723,19 +723,13 @@ object BoostQL {
     *    '<slide>'])[ AS int)] AS b[, key…], agg(x) AS a… FROM dom.f
     *    [WHERE …] GROUP BY b[, key…] [HAVING …]`, or `session(ts,
     *    '<gap>')` as the time key beside at least one plain key (the
-    *    engine cannot merge one global session). It compiles to
-    *    `withWatermark(ts) → groupBy(window(ts, …) | session_window(ts,
-    *    …), keys…) → agg`, the engine-recognized event-time window with
-    *    `bucket()`'s epoch alignment, NOT a groupBy over opaque
-    *    timestamp arithmetic: that is what lets the watermark evict
-    *    finalized windows and append mode emit them. Widths, slides and
+    *    engine cannot merge one global session). Widths, slides and
     *    gaps are fixed (calendar widths refuse; a slide divides the
     *    width). Aggregates are aliased count/sum/avg/min/max,
     *    approx_top_k and histogram — mergeable, bounded state — and
     *    arithmetic over them (the corr/regr desugar); count(DISTINCT),
     *    median, percentiles and sketches refuse. HAVING and aggregate
-    *    expressions apply statelessly to the finalized rows (aggregates
-    *    only they name are computed hidden and dropped);
+    *    expressions apply statelessly to the finalized rows;
     *  - the STREAM-STREAM JOIN: exactly one INNER or LEFT/RIGHT/FULL
     *    OUTER equi-join of two aliased family sources whose ON bounds
     *    each side's time axis against the other's (`b.ts BETWEEN a.ts
@@ -757,19 +751,23 @@ object BoostQL {
     *    chained stateful operators in append mode: the join's time
     *    column keeps its event-time watermark, so the window aggregate
     *    needs no second `withWatermark`. When the ON decomposes, the
-    *    join compiles to the hot-key-proof bucketed probe
-    *    ([[tryBucketedJoinAgg]]).
+    *    join takes the hot-key-proof bucketed plan
+    *    ([[graft.streaming.StreamingOps.bucketedIntervalJoin]]).
     *
     * FILL, ORDER BY, LIMIT, OFFSET, DISTINCT, QUALIFY, ROLLUP/CUBE/
     * GROUPING SETS, hints and set operations refuse in every form: on
     * an unbounded stream they are sink-side concerns.
     *
-    * Compilation is two layers. The SOURCE layer compiles a flat frame
-    * through the ordinary dialect compiler (the same pushed-filter
-    * scans as batch) and sweeps its analyzed plan ([[statefulNodes]]).
-    * The AGGREGATE layer, with GROUP BY only, classifies the time key,
-    * dimensions and aggregates, asks the source layer for just the
-    * columns it reads, and assembles the event-time aggregation.
+    * One compiler builds every form: the ordinary dialect compiler (the
+    * same pushed-filter scans as batch), whose aggregate phase runs in
+    * stream mode under GROUP BY ([[Compiler.compileStream]]). There the
+    * time key groups on the engine's event-time window over the
+    * watermarked axis — `window(ts, w[, slide])` or `session_window(ts,
+    * gap)`, not opaque timestamp arithmetic, which is what lets the
+    * watermark evict finalized windows and append mode emit them — and
+    * reads back the window's start. One analyzed-plan sweep
+    * ([[statefulNodes]]) refuses a stateful operator in the frame the
+    * aggregate reads, or anywhere in a stateless query.
     */
   def sqlStream(query: String,
       families: ((String, String)) => DataFrame): DataFrame =
@@ -799,12 +797,10 @@ object BoostQL {
   private def streamQuery(stmt: Ast.QueryStmt,
       families: ((String, String)) => DataFrame,
       watermark: Option[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.boostql.Ast._
     def fail(msg: String): Nothing = throw Compiler.CompileException(msg)
     // 1. clause refusals
     val spec = stmt match {
-      case q: QuerySpec => q
+      case q: Ast.QuerySpec => q
       case _ => fail("streaming queries do not support set operations")
     }
     Seq(spec.fill.isDefined -> ("FILL (densify at the sink — an unbounded " +
@@ -831,21 +827,16 @@ object BoostQL {
       "streaming joins support exactly one INNER or LEFT/RIGHT/FULL " +
         "OUTER equi-join between two family sources with a two-sided " +
         s"time bound in ON; $what is not supported")
-    // the restrictions of the aggregate over a join
-    def joinOnly(cond: Boolean, what: => String): Unit =
-      if (joined && cond) fail(
-        "streaming joined-stream aggregation supports one " +
-          "[CAST(]bucket(x.ts, '<width>')[ AS int)] key + dimension " +
-          "aliases + count/sum/avg/min/max only; " + what +
-          " is not supported (the single-family sqlStream form is wider)")
     if (watermark.isEmpty) {
       if (joined) stateless("JOIN")
       if (grouped) stateless("GROUP BY/HAVING")
     }
+    if (watermark.isDefined && !joined && spec.groupBy.isEmpty) fail(
+      "no GROUP BY — use sqlStream(query, families) for the stateless tier")
 
-    // 2. source layer: a join's checks and per-side watermark, then the
-    // flat frame of `select` through the ordinary compiler and one sweep
-    val aliases = if (joined) streamJoinAliases(spec, joining) else Seq.empty
+    // 2. a join's checks and per-side watermark, and the one sweep of the
+    // frame the aggregate reads, or of the whole stateless query
+    if (joined) streamJoinChecks(spec, joining)
     val sources: ((String, String)) => DataFrame =
       if (joined) key => families(key).withWatermark("ts", watermark.get)
       else families
@@ -853,13 +844,13 @@ object BoostQL {
       if (joined) joining
       else if (grouped) what => aggregation(s"$what inside the streamed source")
       else stateless
-    def flat(select: Seq[SelectItem]): DataFrame = {
-      val df = Compiler.compile(
-        spec.copy(select = select, groupBy = Seq.empty, having = None), sources)
-      // a join source keeps its one join
+    def sweep(df: DataFrame): Unit = {
+      // a join source keeps its one join (and the hot-key plan's explode)
       var joins = if (joined) 1 else 0
       statefulNodes(df).foreach {
         case _: logical.Join if joins > 0 => joins -= 1
+        case g: logical.Generate
+          if joined && g.generatorOutput.exists(_.name == "__gbkt") => ()
         case j: logical.Join =>
           refuseNode(if (joined) "a multi-series side (the exact-ts align " +
             "is itself an unbounded stream-stream join) — reference one " +
@@ -867,397 +858,24 @@ object BoostQL {
           else s"multi-series alignment (a stream-stream ${j.nodeName})")
         case other => refuseNode(s"the ${other.nodeName} operator")
       }
+    }
+    // 3. GROUP BY: the compiler's aggregate phase in stream mode
+    if (grouped) Compiler.compileStream(spec, sources,
+      Compiler.StreamMode(watermark.get, sweep))
+    else {
+      val df = Compiler.compile(spec, sources)
+      sweep(df)
       df
     }
-    if (watermark.isDefined && !joined && spec.groupBy.isEmpty) fail(
-      "no GROUP BY — use sqlStream(query, families) for the stateless tier")
-    if (!grouped) return flat(spec.select)
-
-    // 3. aggregate layer
-    joinOnly(spec.joins.exists(_.joinType != "inner"),
-      s"GROUP BY over a ${spec.joins.head.joinType.toUpperCase} OUTER " +
-        "joined stream (the null-extended rows only arrive at watermark " +
-        "finalize, a second layer of emission latency the aggregate would " +
-        "compound — aggregate the inner join, or the outer join at the sink)")
-    joinOnly(spec.having.isDefined,
-      "HAVING over a joined-stream aggregate (filter the finalized " +
-        "windows at the sink, or use the single-family form which " +
-        "supports HAVING)")
-    val srcAlias = spec.source.alias
-    val aliasOf: Map[String, Operand] =
-      spec.select.collect { case ExprItem(e, nm) => nm -> e }.toMap
-    def isTs(n: RawName) = n.parts.last.equalsIgnoreCase("ts")
-    // bucket(ts, 'w'[, 'slide']) or CAST(bucket(…) AS int) — the
-    // event-time key; a third argument makes it a SLIDING window
-    // (window(ts, w, slide): map-side Expand, w/slide live windows per
-    // event in the state store). session(ts, '<gap>') is the GAP-keyed
-    // event-time key: the engine's session_window, whose state-store
-    // entries are OPEN sessions merged/extended as events arrive and
-    // finalized when the watermark passes last-event + gap — the
-    // continuous form of the batch dialect's session() window function
-    // (there a per-key gaps-and-islands id; here the group key itself).
-    def bucketShape(
-        e: Operand): Option[(RawName, String, Option[String], Boolean)] = e match {
-      case OFn("bucket", Seq(ORef(n), OLit(BStr(w)))) if isTs(n) =>
-        Some((n, w, None, false))
-      case OFn("bucket", Seq(ORef(n), OLit(BStr(w)), OLit(BStr(sl)))) if isTs(n) =>
-        Some((n, w, Some(sl), false))
-      case OCast(inner, ty) => bucketShape(inner).map { case (n, w, sl, _) =>
-        if (ty != "int") fail(
-          s"streaming bucket key CAST must target int (epoch seconds), not $ty")
-        (n, w, sl, true)
-      }
-      case _ => None
-    }
-    def sessionShape(e: Operand): Option[(String, Boolean)] = e match {
-      case OFn("session", Seq(ORef(n), OLit(BStr(g)))) if isTs(n) =>
-        Some((g, false))
-      case OCast(inner, ty) => sessionShape(inner).map { case (g, _) =>
-        if (ty != "int") fail(
-          s"streaming session key CAST must target int (epoch seconds), not $ty")
-        (g, true)
-      }
-      case _ => None
-    }
-    // classify group entries: ONE time key — bucket(ts, …) or
-    // session(ts, …), by select alias — + dimensions: plain fields, or
-    // in a join any scalar item, by alias
-    // (alias, ts, width, slide, cast)
-    var bucket: Option[(String, RawName, String, Option[String], Boolean)] = None
-    var session: Option[(String, String, Boolean)] = None // (alias, gap, cast)
-    val dims = Seq.newBuilder[(Operand, String)]          // (expression, outName)
-    def oneTimeKey(): Unit =
-      if (bucket.isDefined || session.isDefined) fail(
-        "watermarked streaming aggregation takes exactly one " +
-          "bucket(ts, …) or session(ts, …) group key")
-    spec.groupBy.foreach { n =>
-      n.parts match {
-        case Seq(one) if aliasOf.contains(one) =>
-          (bucketShape(aliasOf(one)), sessionShape(aliasOf(one)),
-              aliasOf(one)) match {
-            case (Some((t, w, sl, c)), _, _) =>
-              oneTimeKey(); bucket = Some((one, t, w, sl, c))
-            case (_, Some((g, c)), _) =>
-              oneTimeKey(); session = Some((one, g, c))
-            case (None, None, e) if e.isInstanceOf[ORef] ||
-                joined && !Compiler.containsAgg(e) => dims += ((e, one))
-            case _ => fail(
-              s"streaming GROUP BY alias '$one' must name a " +
-                "bucket(ts, …) / session(ts, …) item or a plain field")
-          }
-        case _ =>
-          joinOnly(true, s"GROUP BY '${n.parts.mkString(".")}' (name a " +
-            "select alias)")
-          if (isTs(n)) fail(
-            "GROUP BY ts groups every point alone — use bucket(ts, …)")
-          dims += ((ORef(n), Compiler.resolve(n, srcAlias).colName))
-      }
-    }
-    if (bucket.isEmpty && session.isEmpty) fail(
-      "watermarked streaming aggregation needs a bucket(ts, '<width>') " +
-        "or session(ts, '<gap>') group key selected under an alias")
-    joinOnly(session.isDefined, "a session key over a joined stream")
-    joinOnly(bucket.exists(_._4.isDefined),
-      "a sliding bucket over a joined stream (an Expand between two " +
-        "stateful operators)")
-    // the side whose time axis buckets a joined rollup
-    val bSide = bucket.map(_._2.parts).collect {
-      case Seq(al, _) if aliases.contains(al) => al
-    }
-    joinOnly(bSide.isEmpty, "a bucket key over no side's time axis (name " +
-      "one: bucket(x.ts, …))")
-    val (bAlias, bCast) = bucket.map(b => (b._1, b._5))
-      .getOrElse((session.get._1, session.get._3))
-    val widthSlideUs: Option[(Long, Option[Long])] = bucket.map {
-      case (_, _, bWidth, bSlide, _) =>
-        val widthUs = Compiler.parseIntervalMicros(bWidth).getOrElse(fail(
-          s"streaming bucket width '$bWidth' must be fixed-width " +
-            "(microsecond…day) — the engine's tumbling window cannot " +
-            "evict calendar-width state"))
-        if (widthUs <= 0) fail("bucket() width must be positive")
-        // sliding form: same divisibility contract as the batch
-        // expansion (every event in exactly width/slide windows)
-        val slideUs = bSlide.map { sl =>
-          val v = Compiler.parseIntervalMicros(sl).getOrElse(fail(
-            s"streaming bucket slide '$sl' must be fixed-width " +
-              "(microsecond…day)"))
-          if (v <= 0) fail("bucket() slide must be positive")
-          if (v > widthUs) fail(
-            "bucket() slide must not exceed the width — a larger slide " +
-              "leaves gaps (filter rows instead)")
-          if (widthUs % v != 0) fail(
-            "bucket() width must be a multiple of the slide so every " +
-              "event is in exactly width/slide windows")
-          v
-        }
-        (widthUs, slideUs)
-    }
-    val sessionGapUs: Option[Long] = session.map { case (_, g, _) =>
-      val v = Compiler.parseIntervalMicros(g).getOrElse(fail(
-        s"streaming session gap '$g' must be fixed-width " +
-          "(microsecond…day) — open-session state cannot evict under " +
-          "a calendar-width gap"))
-      if (v <= 0) fail("session() gap must be positive")
-      v
-    }
-    // session state is OPEN sessions per (dims) key: the engine
-    // requires at least one non-window grouping key in a streaming
-    // query (a global session merge is unsupported) — checked here,
-    // before the sub-select compile, so the refusal names the real
-    // reason instead of a downstream resolution error
-    val dimNames = dims.result()
-    if (session.isDefined && dimNames.isEmpty) fail(
-      "streaming session(ts, …) aggregation needs at least one plain " +
-        "grouping key besides the session — a global session merge is " +
-        "not supported by the engine (group by the series/user key " +
-        "whose activity defines the session)")
-    // classify select items; collect the columns the source layer must
-    // provide (agg args + dimensions) and the final agg/projection
-    val subItems = scala.collection.mutable.LinkedHashMap.empty[String, SelectItem]
-    dimNames.foreach { case (e, out) =>
-      subItems.getOrElseUpdate(out, e match {
-        case ORef(f) if !joined && out == Compiler.resolve(f, srcAlias).colName =>
-          FieldItem(f)
-        case _ => ExprItem(e, out)
-      })
-    }
-    // count/sum/avg/min/max are the partial-mergeable built-ins;
-    // approx_top_k rides along because its Misra-Gries summary IS
-    // bounded mergeable state — the continuous heavy-hitters form —
-    // and histogram because its fixed bin counts are plain sums: the
-    // continuous-distribution form (histogram_quantile reads
-    // percentiles off the emitted windows downstream).
-    // (count(DISTINCT)/median/percentile stay refused)
-    val plainAggs = Set("count", "sum", "avg", "min", "max")
-    val streamingAggs = plainAggs ++ Set("approx_top_k", "histogram")
-    var helperIdx = 0
-    // an aggregate argument's source column: a plain field by name,
-    // anything else (and every joined argument, which the hot-key plan
-    // assigns to one side) as a helper item
-    def argCol(e: Operand): String = e match {
-      case ORef(f) if !joined =>
-        val cn = Compiler.resolve(f, srcAlias).colName
-        subItems.getOrElseUpdate(cn, FieldItem(f))
-        cn
-      case _ =>
-        val hn = s"__sa$helperIdx"; helperIdx += 1
-        subItems.getOrElseUpdate(hn, ExprItem(e, hn))
-        hn
-    }
-    sealed trait Out
-    case class BucketOut(nm: String) extends Out
-    case class DimOut(nm: String) extends Out
-    case class AggOut(fn: String, argCol: Option[String], nm: String,
-        k: Option[Int] = None, hist: Option[Seq[Double]] = None) extends Out
-    def aggOut(fn: String, arg: Option[Operand], nm: String,
-        k: Option[Int] = None, hist: Option[Seq[Double]] = None): AggOut = {
-      if (!streamingAggs.contains(fn)) fail(
-        s"$fn() is not streaming-safe — supported streaming aggregates: " +
-          "count, sum, avg, min, max, approx_top_k, histogram")
-      joinOnly(!plainAggs.contains(fn), s"$fn() (streaming-safe " +
-        "joined-stream aggregates: count, sum, avg, min, max)")
-      AggOut(fn, arg.map(argCol), nm, k, hist)
-    }
-    // structural aggregate-shape -> output column, so a HAVING that
-    // names an already-selected aggregate reuses its column instead of
-    // aggregating twice
-    val aggByShape = scala.collection.mutable.Map.empty[Operand, String]
-    // an aggregate EXPRESSION (arithmetic/CAST/CASE/allowlisted scalar
-    // functions over streaming-safe aggregates — the shape the
-    // corr/covar/regr parse-time desugar produces): every contained
-    // aggregate becomes hidden watermarked state, the surrounding
-    // arithmetic applies STATELESSLY to the finalized window rows —
-    // continuous correlation / OLS drift detection through the SQL
-    // front, no new state kinds
-    case class ExprOut(nm: String, e: Operand) extends Out
-    val outs: Seq[Out] = spec.select.map {
-      case ExprItem(e, nm) if nm == bAlias &&
-          (bucketShape(e).isDefined || sessionShape(e).isDefined) =>
-        BucketOut(nm)
-      case ExprItem(e, nm) if dimNames.contains((e, nm)) => DimOut(nm)
-      case FieldItem(n)
-        if dimNames.exists(_._2 == Compiler.resolve(n, srcAlias).colName) =>
-        DimOut(Compiler.resolve(n, srcAlias).colName)
-      case it @ ExprItem(OAgg(fn, arg), nm) =>
-        val o = aggOut(fn, arg.map(ORef), nm); aggByShape(it.expr) = nm; o
-      case it @ ExprItem(OAggX("approx_top_k", e, Seq(k), _), nm) =>
-        val o = aggOut("approx_top_k", Some(e), nm, Some(k.toInt))
-        aggByShape(it.expr) = nm; o
-      case it @ ExprItem(OAggX("histogram", e, ps @ Seq(_, _, _), _), nm) =>
-        val o = aggOut("histogram", Some(e), nm, hist = Some(ps))
-        aggByShape(it.expr) = nm; o
-      case it @ ExprItem(OAggX(fn, e, ps, a2), nm) =>
-        if (ps.nonEmpty || a2.nonEmpty) fail(
-          s"$fn() is not streaming-safe — supported streaming " +
-            "aggregates: count, sum, avg, min, max, approx_top_k")
-        val o = aggOut(fn, Some(e), nm); aggByShape(it.expr) = nm; o
-      case ExprItem(e, nm) if Compiler.containsAgg(e) =>
-        joinOnly(true, s"the aggregate expression '$nm'")
-        ExprOut(nm, e)
-      case _: AggItem => fail(
-        "streaming aggregates must be aliased (agg(x) AS name)")
-      case _ => fail(
-        "streaming select items must be the bucket key, a grouping " +
-          "field, an aliased aggregate, or an expression over " +
-          "streaming-safe aggregates")
-    }
-    val aggs = outs.collect { case a: AggOut => a }
-    if (aggs.isEmpty && !outs.exists(_.isInstanceOf[ExprOut])) fail(
-      "watermarked streaming aggregation needs at least one aggregate")
-    /* HAVING: a STATELESS filter on the FINALIZED aggregate rows —
-     * append mode emits a window once (on watermark passage), the
-     * filter then applies exactly like batch HAVING; no second
-     * aggregation, no new state. Aggregates in the condition join the
-     * aggregate list (hidden columns when not selected, dropped after
-     * the filter); operands are literals, select aliases, and
-     * streaming-safe aggregates — anything else refuses. */
-    val extraAggs = Seq.newBuilder[AggOut]
-    val hidden = Seq.newBuilder[String]
-    var haIdx = 0
-    def havingAggCol(e: Operand): String = aggByShape.getOrElse(e, {
-      val nm = s"__ha$haIdx"; haIdx += 1
-      val out = e match {
-        case OAgg(fn, arg) => aggOut(fn, arg.map(ORef), nm)
-        case OAggX("approx_top_k", x, Seq(k), _) =>
-          aggOut("approx_top_k", Some(x), nm, Some(k.toInt))
-        case OAggX(fn, x, ps, a2) =>
-          if (ps.nonEmpty || a2.nonEmpty) fail(
-            s"$fn() is not streaming-safe — supported streaming " +
-              "aggregates: count, sum, avg, min, max, approx_top_k")
-          aggOut(fn, Some(x), nm)
-        case _ => fail("unreachable: havingAggCol on a non-aggregate")
-      }
-      extraAggs += out; hidden += nm; aggByShape(e) = nm
-      nm
-    })
-    // expression-item names materialize in the same projection step, so
-    // a reference to one (from HAVING or another expression) inlines its
-    // OPERAND instead of naming a column that may not exist yet; a
-    // cyclic reference refuses instead of looping
-    val exprByName: Map[String, Operand] =
-      outs.collect { case ExprOut(nm, e) => nm -> e }.toMap
-    val expanding = scala.collection.mutable.Set.empty[String]
-    val outNames: Set[String] = outs.map {
-      case BucketOut(nm) => nm
-      case DimOut(nm) => nm
-      case AggOut(_, _, nm, _, _) => nm
-      case ExprOut(nm, _) => nm
-    }.toSet
-    // the finalized rows' scope: names resolve to select outputs,
-    // aggregates to their (possibly hidden) watermarked state columns
-    val finalized = new Compiler.Scope {
-      private def refusal(what: String): Nothing = fail(
-        s"streaming aggregate expressions (HAVING and expression select " +
-          s"items) support literals, select-output names, arithmetic, " +
-          s"CAST, CASE, the scalar builtins and streaming-safe " +
-          s"aggregates only; $what is not supported")
-      protected def reference(n: RawName): Column = n.parts match {
-        case Seq(nm) if exprByName.contains(nm) =>
-          if (!expanding.add(nm))
-            refusal(s"'$nm' (a cyclic expression-alias reference)")
-          try operand(exprByName(nm)) finally expanding.remove(nm)
-        case Seq(nm) if outNames(nm) => col(nm)
-        case _ => refusal(s"'${n.parts.mkString(".")}' (name a select output)")
-      }
-      override protected def nonScalar: PartialFunction[Operand, Column] = {
-        case e @ (_: OAgg | _: OAggX) => col(havingAggCol(e))
-      }
-      protected def refuse(n: Node): Nothing = n match {
-        case OFn(fn, _) => refusal(s"function $fn()")
-        case _: BExpr   => refusal("a subquery predicate")
-        case _          => refusal("this expression form")
-      }
-    }
-    val havingCond: Option[Column] = spec.having.map(finalized.predicate)
-    // aggregate-expression select items: walking them through the scope here
-    // registers their contained aggregates as hidden columns (the same
-    // registration HAVING uses), so allAggs below carries them
-    val exprOutCols: Map[String, Column] = outs.collect {
-      case ExprOut(nm, e) => nm -> finalized.operand(e).as(nm)
-    }.toMap
-    val allAggs = aggs ++ extraAggs.result()
-    // the source layer, asked for exactly these columns plus the time
-    // axis. A join's bucketing side rides along as __jts: its event-time
-    // watermark survives the join + projection, which the window
-    // aggregate requires. HOT-KEY path first (see tryBucketedJoinAgg),
-    // the symmetric-hash join as the fallback.
-    val items = subItems.values.toSeq
-    val (ts, source) =
-      if (!joined) "ts" -> flat(items :+ FieldItem(RawName(Seq("ts"))))
-        .withWatermark("ts", watermark.get)
-      else "__jts" -> tryBucketedJoinAgg(spec, aliases, sources, items,
-        "__jts", bSide.get).getOrElse(
-        flat(items :+ ExprItem(ORef(RawName(Seq(bSide.get, "ts"))), "__jts")))
-    // the engine-recognized event-time aggregation — a tumbling/sliding
-    // window() or a session_window() (the ≥1-dim session requirement
-    // was enforced at classification)
-    val win = sessionGapUs match {
-      case Some(gap) => session_window(col(ts), s"$gap microseconds")
-      case None =>
-        val (widthUs, slideUs) = widthSlideUs.get
-        slideUs.fold(window(col(ts), s"$widthUs microseconds"))(sl =>
-          window(col(ts), s"$widthUs microseconds", s"$sl microseconds"))
-    }
-    val keyCols = win +: dimNames.map(d => col(d._2))
-    val aggCols = allAggs.map { a =>
-      val c = a.argCol.map(col)
-      (a.fn match {
-        case "approx_top_k" =>
-          // the MG summary as streaming-aggregation state (capacity-
-          // bounded per (window, dims) entry), rendered to the same
-          // portable "item:n,…" string as the batch dialect
-          val k = a.k.get
-          Compiler.freqTopString(graft.functions.GraftFunctions
-            .freqSketch(c.get.cast("string"), Compiler.topkCap(k)), k)
-        case "histogram" =>
-          // nbins plain sums per (window, dims) entry — constant state,
-          // the same expression (and the same count string) as batch
-          val Seq(lo, hi, nb) = a.hist.get
-          Compiler.histogramString(c.get, lo, hi, nb)
-        case "count" => c.fold(count(lit(1)))(count)
-        case "sum"   => sum(c.get)
-        case "avg"   => avg(c.get)
-        case "min"   => min(c.get)
-        case "max"   => max(c.get)
-      }).as(a.nm)
-    }
-    val agged = source.groupBy(keyCols: _*).agg(aggCols.head, aggCols.tail: _*)
-    val hiddenNames = hidden.result()
-    // two-step projection: first materialize every OUTPUT NAME (bucket
-    // alias included — `window.start` renames here), then evaluate the
-    // expression items against those names. An aggregate expression
-    // referencing the bucket alias (`d / 86400`) thereby resolves to
-    // the post-rename (post-CAST) bucket value instead of failing
-    // against the pre-rename frame where only `window` exists.
-    val winCol = if (session.isDefined) "session_window" else "window"
-    val named = agged.select((outs.collect {
-      case BucketOut(nm) =>
-        if (bCast) col(s"$winCol.start").cast("long").as(nm)
-        else col(s"$winCol.start").as(nm)
-      case DimOut(nm)             => col(nm)
-      case AggOut(_, _, nm, _, _) => col(nm)
-    } ++ hiddenNames.map(col)): _*)
-    val outCols = outs.map {
-      case BucketOut(nm)          => col(nm)
-      case DimOut(nm)             => col(nm)
-      case AggOut(_, _, nm, _, _) => col(nm)
-      // stateless arithmetic over the finalized hidden aggregates
-      case ExprOut(nm, _)         => exprOutCols(nm)
-    }
-    val projected = named.select((outCols ++ hiddenNames.map(col)): _*)
-    // hidden aggregates serve HAVING and the expression outputs; both
-    // paths drop them from the emitted rows
-    havingCond.fold(projected)(projected.filter).drop(hiddenNames: _*)
   }
 
-  /** The stream-stream join's checks (see [[sqlStream]]); returns the
-    * two side aliases. The ON must bound each side's time axis against
+  /** The stream-stream join's checks (see [[sqlStream]]). The ON must bound each side's time axis against
     * the other's — a row on a side whose axis is not upper-bounded in
     * terms of the other side's can match forever, so that side's join
     * state would never evict.
     */
-  private def streamJoinAliases(spec: Ast.QuerySpec,
-      refuse: String => Nothing): Seq[String] = {
+  private def streamJoinChecks(spec: Ast.QuerySpec,
+      refuse: String => Nothing): Unit = {
     import graft.boostql.Ast._
     if (spec.joins.length > 1) refuse("more than one JOIN")
     val j = spec.joins.head
@@ -1289,13 +907,6 @@ object BoostQL {
     if (aliases.size < 2) throw Compiler.CompileException(
       "streaming joins need BOTH sides aliased (FROM dom.f AS a JOIN " +
         "dom.g AS b) so the ON can bound each side's time axis")
-    def tsAliasOf(o: Operand): Option[String] = o match {
-      case ORef(RawName(Seq(al, t)))
-        if t.equalsIgnoreCase("ts") && aliases.contains(al) => Some(al)
-      case OArith("+" | "-", x, _: OInterval) => tsAliasOf(x)
-      case OArith("+", _: OInterval, x)       => tsAliasOf(x)
-      case _ => None
-    }
     // DIRECTION-tracked bound analysis: a stored row on side Y evicts
     // only when the ON upper-bounds the OTHER side's time axis in
     // terms of Y's (x.ts <= y.ts + δ ⟹ a stored y row at s matches
@@ -1305,43 +916,21 @@ object BoostQL {
     // same-direction inequalities (b.ts >= a.ts AND b.ts > a.ts −
     // INTERVAL '1 minute') make only B's state evictable and would
     // leave A's state accreting forever. `x < y` evicts y; `x > y`
-    // evicts x (normalize by swapping); equality and a two-sided
-    // cross-axis BETWEEN evict both.
-    def upperBounded(e: BExpr): Set[String] = e match {
-      case AndE(l, r) => upperBounded(l) ++ upperBounded(r)
-      case Cmp("<" | "<=", l, r) =>
-        (tsAliasOf(l), tsAliasOf(r)) match {
-          case (Some(a), Some(b)) if a != b => Set(b)
-          case _ => Set.empty
+    // evicts x; equality evicts both (a BETWEEN is its two comparisons).
+    def tsAliasOf(o: Operand): Option[String] =
+      Compiler.tsOff(o, aliases).map(_._1)
+    val sidesBounded = Compiler.conjuncts(cond).flatMap {
+      case Cmp(op, l, r) => (tsAliasOf(l), tsAliasOf(r)) match {
+        case (Some(x), Some(y)) if x != y => op match {
+          case "<" | "<=" => Seq(y)
+          case ">" | ">=" => Seq(x)
+          case "=" | "==" => Seq(x, y)
+          case _          => Nil
         }
-      case Cmp(">" | ">=", l, r) =>
-        (tsAliasOf(l), tsAliasOf(r)) match {
-          case (Some(a), Some(b)) if a != b => Set(a)
-          case _ => Set.empty
-        }
-      case Cmp("=" | "==", l, r) =>
-        (tsAliasOf(l), tsAliasOf(r)) match {
-          case (Some(a), Some(b)) if a != b => Set(a, b)
-          case _ => Set.empty
-        }
-      case BetweenE(o, lo, hi, false) =>
-        // lo <= o <= hi: `o <= hi` lets HI's side evict (a stored hi
-        // row becomes unmatchable once o's watermark passes it);
-        // `lo <= o` lets O's side evict (a stored o row becomes
-        // unmatchable once lo's watermark passes it)
-        val oA = tsAliasOf(o)
-        val fromHi = (oA, tsAliasOf(hi)) match {
-          case (Some(a), Some(c)) if a != c => Set(c)
-          case _ => Set.empty[String]
-        }
-        val fromLo = (tsAliasOf(lo), oA) match {
-          case (Some(b), Some(a)) if a != b => Set(a)
-          case _ => Set.empty[String]
-        }
-        fromHi ++ fromLo
-      case _ => Set.empty
-    }
-    val sidesBounded = upperBounded(cond)
+        case _ => Nil
+      }
+      case _ => Nil
+    }.toSet
     if (!aliases.forall(sidesBounded.contains)) throw Compiler.CompileException(
       "streaming joins need the ON to bound the two time axes against " +
         "each other from BOTH sides (e.g. b.ts BETWEEN a.ts AND a.ts + " +
@@ -1353,173 +942,6 @@ object BoostQL {
           s" (only ${aliases.filter(sidesBounded.contains).mkString(", ")} " +
             "is bounded here)"
         else ""))
-    aliases
-  }
-
-  /** The HOT-KEY-PROOF compilation of the joined-stream aggregate:
-    * split the joined sub-select per side, compile each side through
-    * the ordinary dialect compiler (same pushed-filter scans, same
-    * per-source watermark), and join via
-    * [[graft.streaming.StreamingOps.bucketedIntervalJoin]] — the
-    * time-bucket equi-key decomposition whose state probe is bounded
-    * by one bound-width bucket per key however hot one key runs.
-    *
-    * Engages automatically when the shape decomposes:
-    *   - every ON conjunct is a cross-side equality (→ a join key), a
-    *     cross-side time-axis comparison (`b.ts <= a.ts + INTERVAL` /
-    *     BETWEEN / ts equality → the interval bound), or a single-side
-    *     predicate (→ pushed into that side's WHERE — inner-join-safe);
-    *   - the accumulated bound is FINITE on both ends (the caller
-    *     already refuses half-bounded joins, but e.g. a bound written
-    *     against a non-ts axis lands here as non-decomposable);
-    *   - at least one non-time equi key exists (the bucket key
-    *     composes WITH the key — a pure time join has no hot key to
-    *     protect and keeps the symmetric plan);
-    *   - every select helper (dim, aggregate argument) and every WHERE
-    *     conjunct references exactly one side, alias-qualified.
-    *
-    * Returns None — symmetric-hash fallback, behavior unchanged — for
-    * anything else: mixed-side expressions (`sum(a.x + b.y)`),
-    * unqualified references (side-ambiguous in a self-join), non-equi
-    * cross-side conjuncts, OR across sides, strict bounds that
-    * under/overflow, or a side that compiles to something stateful.
-    * Exactness: each left row explodes into its ≤2 covering buckets
-    * (array_distinct), the exact time bounds still apply, so every
-    * true pair matches exactly once — pinned by the
-    * bucketedIntervalJoin batch spec and the shared DuckDB oracle
-    * (both topologies hash-match it).
-    */
-  private def tryBucketedJoinAgg(spec: Ast.QuerySpec, aliases: Seq[String],
-      wmFam: ((String, String)) => DataFrame,
-      items: Seq[Ast.SelectItem], tsName: String,
-      bSide: String): Option[DataFrame] = {
-    import graft.boostql.Ast._
-    val (aAl, bAl) = (aliases.head, aliases(1))
-    // which sides does an expression reference? None = undecidable
-    // (a 1/2-part name without an alias head is side-ambiguous here —
-    // the two-source resolution belongs to the batch compiler)
-    def sidesOf(n: Node): Option[Set[String]] = n match {
-      case ORef(RawName(parts)) =>
-        if (parts.length >= 2 && aliases.contains(parts.head))
-          Some(Set(parts.head))
-        else None
-      case _: OAgg | _: OAggX | _: OWin | _: OScalarSub | _: OGroupKey |
-           _: InSubE | _: QuantE | _: ExistsE => None
-      case _ => children(n).foldLeft(Option(Set.empty[String])) {
-        (acc, c) => for { a <- acc; b <- sidesOf(c) } yield a ++ b
-      }
-    }
-    // ts-axis operand with a constant micros offset: a.ts [± INTERVAL]
-    def tsOff(o: Operand): Option[(String, Long)] = o match {
-      case ORef(RawName(Seq(al, t)))
-        if t.equalsIgnoreCase("ts") && aliases.contains(al) => Some((al, 0L))
-      case OArith("+", x, OInterval(s)) => for {
-        ao <- tsOff(x); us <- Compiler.parseIntervalMicros(s)
-      } yield (ao._1, ao._2 + us)
-      case OArith("-", x, OInterval(s)) => for {
-        ao <- tsOff(x); us <- Compiler.parseIntervalMicros(s)
-      } yield (ao._1, ao._2 - us)
-      case OArith("+", i @ OInterval(_), x) => tsOff(OArith("+", x, i))
-      case _ => None
-    }
-    def flip(op: String): String = op match {
-      case "<" => ">"; case "<=" => ">="; case ">" => "<"; case ">=" => "<="
-      case other => other
-    }
-    def conjuncts(e: BExpr): Seq[BExpr] = e match {
-      case AndE(l, r) => conjuncts(l) ++ conjuncts(r)
-      case BetweenE(o, lo, hi, false) =>
-        Seq(Cmp(">=", o, lo), Cmp("<=", o, hi))
-      case other => Seq(other)
-    }
-    var lo = Long.MinValue; var hi = Long.MaxValue
-    val keys = Vector.newBuilder[(Operand, Operand)] // (A-side, B-side)
-    val aWhere = Vector.newBuilder[BExpr]
-    val bWhere = Vector.newBuilder[BExpr]
-    // a single-side conjunct pushes into that side's WHERE (inner join:
-    // filtering before or after the join is the same multiset)
-    def pushSide(c: BExpr): Boolean = sidesOf(c) match {
-      case Some(s) if s.subsetOf(Set(aAl)) => aWhere += c; true
-      case Some(s) if s == Set(bAl)        => bWhere += c; true
-      case _ => false
-    }
-    val cond = spec.joins.head.on.getOrElse(return None)
-    for (c <- conjuncts(cond)) c match {
-      case Cmp(op, l, r) if tsOff(l).isDefined && tsOff(r).isDefined &&
-          tsOff(l).get._1 != tsOff(r).get._1 =>
-        // normalize to δ = ts_B − ts_A: ts_al + ol OP ts_ar + orr
-        val (al, ol) = tsOff(l).get
-        val (_, orr) = tsOff(r).get
-        val (effOp, k) =
-          if (al == bAl) (op, orr - ol) else (flip(op), ol - orr)
-        effOp match {
-          case "<="       => hi = math.min(hi, k)
-          case "<"        => if (k == Long.MinValue) return None
-                             else hi = math.min(hi, k - 1)
-          case ">="       => lo = math.max(lo, k)
-          case ">"        => if (k == Long.MaxValue) return None
-                             else lo = math.max(lo, k + 1)
-          case "=" | "==" => lo = math.max(lo, k); hi = math.min(hi, k)
-          case _          => return None
-        }
-      case c @ Cmp("=" | "==", l, r) =>
-        (sidesOf(l), sidesOf(r)) match {
-          case (Some(sl), Some(sr))
-            if sl.size == 1 && sr.size == 1 && sl != sr =>
-            keys += (if (sl.head == aAl) (l, r) else (r, l))
-          case _ => if (!pushSide(c)) return None
-        }
-      case other => if (!pushSide(other)) return None
-    }
-    val keyPairs = keys.result()
-    if (keyPairs.isEmpty) return None
-    if (lo == Long.MinValue || hi == Long.MaxValue || hi < lo) return None
-    // split the WHERE the same way
-    spec.where.foreach(w =>
-      for (c <- conjuncts(w)) if (!pushSide(c)) return None)
-    // assign each select helper to its side (side-free → A)
-    val aItems = Vector.newBuilder[SelectItem]
-    val bItems = Vector.newBuilder[SelectItem]
-    items.foreach {
-      case it @ ExprItem(e, _) => sidesOf(e) match {
-        case Some(s) if s.subsetOf(Set(aAl)) => aItems += it
-        case Some(s) if s == Set(bAl)        => bItems += it
-        case _                               => return None
-      }
-      case _ => return None
-    }
-    keyPairs.zipWithIndex.foreach { case ((ae, be), i) =>
-      aItems += ExprItem(ae, s"__ek${i}_a")
-      bItems += ExprItem(be, s"__ek${i}_b")
-    }
-    val aTs = if (bSide == aAl) tsName else "__jts_o"
-    val bTs = if (bSide == bAl) tsName else "__jts_o"
-    aItems += ExprItem(ORef(RawName(Seq(aAl, "ts"))), aTs)
-    bItems += ExprItem(ORef(RawName(Seq(bAl, "ts"))), bTs)
-    def andAll(cs: Seq[BExpr]): Option[BExpr] = cs.reduceOption(AndE.apply)
-    val aSpec = QuerySpec(select = aItems.result(), source = spec.source,
-      joins = Seq.empty, where = andAll(aWhere.result()),
-      groupBy = Seq.empty, having = None, orderBy = Seq.empty, limit = None)
-    val bSpec = QuerySpec(select = bItems.result(),
-      source = spec.joins.head.source, joins = Seq.empty,
-      where = andAll(bWhere.result()), groupBy = Seq.empty, having = None,
-      orderBy = Seq.empty, limit = None)
-    try {
-      val aDf = Compiler.compile(aSpec, wmFam)
-      val bDf = Compiler.compile(bSpec, wmFam)
-      // a side that compiles to anything stateful (a multi-series align
-      // is itself a join) cannot ride the decomposition — fall back and
-      // let the symmetric path's sweep issue its richer refusal
-      if (statefulNodes(aDf).nonEmpty || statefulNodes(bDf).nonEmpty) return None
-      Some(graft.streaming.StreamingOps.bucketedIntervalJoin(
-        aDf, bDf,
-        keyPairs.indices.map(i => s"__ek${i}_a" -> s"__ek${i}_b"),
-        lo, hi, leftTs = aTs, rightTs = bTs))
-    } catch {
-      // a per-side compile refusal (an expression form the split spec
-      // can't carry) — the joint symmetric compile may still accept it
-      case _: Compiler.CompileException => None
-    }
   }
 
   /** Time-scoped execution — the dialect face of the reference's

@@ -780,15 +780,37 @@ object Compiler {
         (if (zeroOk) "[0, 1]" else "(0, 1]"))
   }
 
-  /** The bucket width of a bucket-then-stitch form (twa and the smoothing
-    * escapes): a positive fixed-width interval literal. */
-  private def bucketWidth(fn: String, o: Operand): Long = o match {
+  /** A positive fixed-width interval literal, in microseconds: the bucket
+    * width of a bucket-then-stitch form (twa and the smoothing escapes),
+    * a sliding or streamed bucket()'s width or slide, a session()'s gap. */
+  private def bucketWidth(fn: String, o: Operand,
+      what: String = "bucket width"): Long = o match {
     case OLit(BStr(w)) => parseIntervalMicros(w).filter(_ > 0)
       .getOrElse(throw CompileException(
-        s"$fn() bucket width '$w' must be a positive " +
+        s"$fn() $what '$w' must be a positive " +
           "fixed-width interval (microsecond…day)"))
     case _ => throw CompileException(
-      s"$fn() bucket width must be a string literal like '1 day'")
+      s"$fn() $what must be a string literal like '1 day'")
+  }
+
+  /** A join side's time axis plus a constant offset: `x.ts [± INTERVAL
+    * '…']` for an alias `x` among `aliases` → (x, offset in µs). */
+  private[boostql] def tsOff(o: Operand,
+      aliases: Seq[String]): Option[(String, Long)] = o match {
+    case ORef(RawName(Seq(al, t)))
+      if t.equalsIgnoreCase("ts") && aliases.contains(al) => Some((al, 0L))
+    case OArith(op @ ("+" | "-"), x, OInterval(iv)) => for {
+      (al, off) <- tsOff(x, aliases); us <- parseIntervalMicros(iv)
+    } yield (al, if (op == "+") off + us else off - us)
+    case OArith("+", iv: OInterval, x) => tsOff(OArith("+", x, iv), aliases)
+    case _ => None
+  }
+
+  /** A join condition's conjuncts, each BETWEEN as its two comparisons. */
+  private[boostql] def conjuncts(e: BExpr): Seq[BExpr] = e match {
+    case AndE(l, r) => conjuncts(l) ++ conjuncts(r)
+    case BetweenE(o, lo, hi, false) => Seq(Cmp(">=", o, lo), Cmp("<=", o, hi))
+    case other => Seq(other)
   }
 
   private val calendarBucket = """\s*(\d+)\s*(week|month|quarter|year)s?\s*""".r
@@ -884,8 +906,35 @@ object Compiler {
     * attributes). Each phase is a method of one [[Compilation]] and takes
     * the frame of the phase before it.
     */
-  def compile(spec: QuerySpec, families: ((String, String)) => DataFrame): DataFrame = {
-    val c = new Compilation(spec, families)
+  def compile(spec: QuerySpec, families: ((String, String)) => DataFrame): DataFrame =
+    run(new Compilation(spec, families, None))
+
+  /** A compilation's stream mode (see [[BoostQL.sqlStream]]): the
+    * watermark delay, and the sweep that refuses a stateful node in the
+    * frame the aggregate reads. */
+  private[boostql] final case class StreamMode(delay: String,
+      sweep: DataFrame => Unit)
+
+  /** Compile a GROUP BY query over stream frames: [[compile]] with the
+    * aggregate phase in stream mode. An aggregate expression item reads
+    * the other select outputs by alias, as HAVING does: a grouped key as
+    * its grouping column, an aggregate alias as its expression. */
+  private[boostql] def compileStream(spec: QuerySpec,
+      families: ((String, String)) => DataFrame, mode: StreamMode): DataFrame = {
+    val named = spec.select.collect { case it: ExprItem => it.name -> it.expr }.toMap
+    val keys = spec.groupBy.collect { case RawName(Seq(n)) if named.contains(n) => n }
+    val select = spec.select.map {
+      case ExprItem(e, nm) if containsAgg(e) => ExprItem(rewrite(e) {
+        case ORef(RawName(Seq(n))) if keys.contains(n) => OGroupKey(n)
+        case ORef(RawName(Seq(n))) if n != nm && named.contains(n) => named(n)
+        case kept @ (_: OAggX | _: OWin | _: InSubE | _: QuantE) => kept
+      }, nm)
+      case other => other
+    }
+    run(new Compilation(spec.copy(select = select), families, Some(mode)))
+  }
+
+  private def run(c: Compilation): DataFrame = {
     val frame = c.aggregateOrWindow(c.where(c.sourcesAndJoins()))
     if (c.sortsOutput) c.orderPage(c.project(frame))
     else c.project(c.orderPage(frame))
@@ -899,7 +948,7 @@ object Compiler {
     * the order [[compile]] runs them.
     */
   private final class Compilation(spec: QuerySpec,
-      families: ((String, String)) => DataFrame) {
+      families: ((String, String)) => DataFrame, stream: Option[StreamMode]) {
     val sources: Seq[FromRel] = spec.source +: spec.joins.map(_.source)
     val multi = sources.length > 1
     // a family source carries the reserved time axis and attribute map;
@@ -1463,15 +1512,7 @@ object Compiler {
           case _ => throw CompileException(
             "session() first argument must be the time axis ts")
         }
-        val gapUs = args(1) match {
-          case OLit(BStr(g)) => parseIntervalMicros(g).getOrElse(
-            throw CompileException(
-              s"session() gap '$g' must be '<n> <unit>' with unit " +
-                "microsecond|millisecond|second|minute|hour|day"))
-          case _ => throw CompileException(
-            "session() gap must be a string literal like '30 minutes'")
-        }
-        if (gapUs <= 0) throw CompileException("session() gap must be positive")
+        val gapUs = bucketWidth("session", args(1), "gap")
         val axis0 = if (!multi) "__ts_0" else args.head match {
           case ORef(n) => s"__ts_${ref(n).src}"
           case _       => "__ts_0"
@@ -1695,9 +1736,12 @@ object Compiler {
       val family = families((famSrc.domain, famSrc.family))
       val refs = allRefs.filter(r => r.src == srcIdx && !r.isTs)
       val seriesNames = refs.map(_.f.series).distinct
-      if (seriesNames.isEmpty)
-        throw CompileException(
-          s"source ${famSrc.domain}.${famSrc.family} is never referenced")
+      if (seriesNames.isEmpty) throw CompileException(
+        s"source ${famSrc.domain}.${famSrc.family} is " + (
+          if (allRefs.exists(r => r.src == srcIdx && r.isTs))
+            "referenced only through its time axis ts — name one of its " +
+              "series, e.g. count(cpu) for a series cpu"
+          else "never referenced"))
       def seriesDf(s: String): DataFrame = {
         val valName = refs.find(r => r.f.series == s && r.f.attr.isEmpty)
           .map(_.inName).getOrElse(
@@ -1781,8 +1825,10 @@ object Compiler {
 
     /** Phase 1: each source's frame, folded left through the joins.
       * joinType "left"/"right"/"full" null-extends the unmatched
-      * side(s), exactly Spark's outer-join semantics. */
+      * side(s), exactly Spark's outer-join semantics. A stream checks
+      * its aggregate's shape ([[timeKey]]) before any of it. */
     def sourcesAndJoins(): DataFrame = {
+      timeKey
       def hinted(df: DataFrame, i: Int): DataFrame =
         if (broadcastIdx(i)) broadcast(df) else df
       spec.joins.zipWithIndex.foldLeft(hinted(sourceFrame(0), 0)) {
@@ -1799,10 +1845,69 @@ object Compiler {
               asofJoin(acc, right, cond, i, asofOpts.getOrElse(AsofOpts()))
             case ("asof", None) =>
               throw CompileException("ASOF JOIN requires an ON clause")
-            case (_, Some(cond)) => acc.join(right, row.predicate(cond), joinType)
+            case (_, Some(cond)) => hotKeyJoin(acc, right).getOrElse(
+              acc.join(right, row.predicate(cond), joinType))
             case (_, None)       => acc.crossJoin(right)
           }
       }
+    }
+
+    /** Stream mode's inner join of two family streams: the hot-key-proof
+      * plan, [[graft.streaming.StreamingOps.bucketedIntervalJoin]], whose
+      * state probe stays within one bound-width time bucket per key
+      * however hot one key runs. The ON comes apart into cross-side
+      * equalities (the join keys), cross-side time-axis comparisons (the
+      * bound on `b.ts − a.ts`) and one-side conjuncts (each filters its
+      * side, which an inner join allows). Each left row explodes into
+      * its ≤ 2 covering buckets and the exact bound still applies, so
+      * every true pair matches once. None — the symmetric join — for any
+      * other conjunct, no key, a bound open at either end, or a select
+      * item or WHERE conjunct that reads both sides (`sum(a.x + b.y)`).
+      */
+    def hotKeyJoin(a: DataFrame, b: DataFrame): Option[DataFrame] = {
+      if (stream.isEmpty || spec.joins.head.joinType != "inner") return None
+      val aliases = sources.map(_.alias.get)
+      def sides(n: Node): Seq[Int] = refs(n).map(_.src).distinct
+      // two different sides' time axes, each with its offset
+      def axes(l: Operand, r: Operand) = for {
+        x <- tsOff(l, aliases); y <- tsOff(r, aliases) if x._1 != y._1
+      } yield (x, y)
+      val flip = Map("<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+      var lo = Long.MinValue; var hi = Long.MaxValue
+      val keys = Vector.newBuilder[(Operand, Operand)]
+      val local = Vector.newBuilder[(Int, BExpr)]
+      conjuncts(spec.joins.head.on.get).foreach {
+        case Cmp(op, l, r) if axes(l, r).isDefined =>
+          // ts_x + ox OP ts_y + oy, as a bound on δ = ts_b − ts_a
+          val ((x, ox), (_, oy)) = axes(l, r).get
+          val (o, k) = if (x == aliases(1)) (op, oy - ox)
+            else (flip.getOrElse(op, op), ox - oy)
+          o match {
+            case "<=" => hi = math.min(hi, k)
+            case "<" if k != Long.MinValue => hi = math.min(hi, k - 1)
+            case ">=" => lo = math.max(lo, k)
+            case ">" if k != Long.MaxValue => lo = math.max(lo, k + 1)
+            case "=" | "==" => lo = math.max(lo, k); hi = math.min(hi, k)
+            case _ => return None
+          }
+        case Cmp("=" | "==", l, r) if sides(l).length == 1 &&
+            sides(r).length == 1 && sides(l) != sides(r) =>
+          keys += (if (sides(l) == Seq(0)) (l, r) else (r, l))
+        case c if sides(c).length <= 1 => local += (sides(c).headOption.getOrElse(0) -> c)
+        case _ => return None
+      }
+      val keyPairs = keys.result()
+      if (keyPairs.isEmpty || lo == Long.MinValue || hi == Long.MaxValue || hi < lo ||
+          (spec.select.map(itemRefs) ++ spec.where.toSeq.flatMap(conjuncts).map(refs))
+            .exists(_.map(_.src).distinct.length > 1)) return None
+      def side(df: DataFrame, i: Int): DataFrame = keyPairs.zipWithIndex.foldLeft(
+          local.result().collect { case (`i`, c) => c }.reduceOption(AndE)
+            .fold(df)(c => df.filter(row.predicate(c)))) { case (d, (k, j)) =>
+        d.withColumn(s"__ek${j}_$i", row.operand(if (i == 0) k._1 else k._2))
+      }
+      val ek = keyPairs.indices.map(j => s"__ek${j}_0" -> s"__ek${j}_1")
+      Some(graft.streaming.StreamingOps.bucketedIntervalJoin(side(a, 0), side(b, 1),
+        ek, lo, hi, "__ts_0", "__ts_1").drop(ek.flatMap(p => Seq(p._1, p._2)): _*))
     }
 
     // ==== phase 2: WHERE and its subqueries =============================
@@ -2089,10 +2194,12 @@ object Compiler {
       case OFn(f, _) if tsWinFns.contains(f) || tsPartFns.contains(f) => true
       case _: OAggX | _: InSubE | _: QuantE => false
     }
-    lazy val hasWin: Boolean = (spec.select ++ orderItems.map(_.item)).exists {
-      case ExprItem(e, _) => hasWinOp(e)
-      case _              => false
-    }
+    // (a stream's aggregate refuses windows itself: its session() key is one)
+    lazy val hasWin: Boolean = stream.isEmpty &&
+      (spec.select ++ orderItems.map(_.item)).exists {
+        case ExprItem(e, _) => hasWinOp(e)
+        case _              => false
+      }
 
     /** Escaped/auto-stitched smoothing detection (the final projection
       * reads the materialized `__esc_<alias>` columns back): top-level
@@ -2223,24 +2330,171 @@ object Compiler {
       (if (fn == "first") min(key) else max(key)).getField("v")
     }
 
+    /** A bucket(ts, '<width>'[, '<slide>']) key's width and slide in
+      * microseconds; a tumbling key slides by its width. The slide divides
+      * the width, so every row is in exactly width/slide windows, and never
+      * exceeds it: a larger slide leaves gaps, a filter, not a window. */
+    def widthSlideUs(args: Seq[Operand]): (Long, Long) = {
+      val w = bucketWidth("bucket", args(1), "width")
+      val sl = args.lift(2).fold(w)(bucketWidth("bucket", _, "slide"))
+      if (sl > w) throw CompileException(
+        "bucket() slide must not exceed the width — a larger slide " +
+          "leaves gaps (filter rows instead)")
+      if (w % sl != 0) throw CompileException(
+        "bucket() width must be a multiple of the slide so every row " +
+          "is in exactly width/slide windows")
+      (w, sl)
+    }
+
+    // ---- stream mode: the aggregate as event-time state ----------------
+
+    /** A stream's time key: bucket(ts, …) or session(ts, …) over the time
+      * axis, under any CASTs. */
+    def isTimeKey(e: Operand): Boolean = e match {
+      case OCast(x, _) => isTimeKey(x)
+      case OFn("bucket", ORef(t) +: a) if a.length == 1 || a.length == 2 => ref(t).isTs
+      case OFn("session", Seq(ORef(t), _)) => ref(t).isTs
+      case _ => false
+    }
+
+    /** Stream mode's refusals, ahead of the batch aggregate's: the shapes
+      * whose state the engine cannot key on event time, merge or evict,
+      * and, over a join, everything beyond one tumbling key, dimension
+      * aliases and the plain aggregates. Returns the time key's alias and
+      * operand. */
+    def streamShape(): (String, Operand) = {
+      def joinOnly(cond: Boolean, what: => String): Unit = if (multi && cond)
+        throw CompileException("streaming joined-stream aggregation supports " +
+          "one [CAST(]bucket(x.ts, '<width>')[ AS int)] key + dimension " +
+          s"aliases + count/sum/avg/min/max only; $what is not supported " +
+          "(the single-family sqlStream form is wider)")
+      joinOnly(spec.joins.exists(_.joinType != "inner"),
+        s"GROUP BY over a ${spec.joins.head.joinType.toUpperCase} OUTER " +
+          "joined stream (the null-extended rows only arrive at watermark " +
+          "finalize, a second layer of emission latency the aggregate would " +
+          "compound — aggregate the inner join, or the outer join at the sink)")
+      joinOnly(spec.having.isDefined,
+        "HAVING over a joined-stream aggregate (filter the finalized " +
+          "windows at the sink, or use the single-family form which " +
+          "supports HAVING)")
+      val keys = spec.groupBy.zip(groupEntries).flatMap {
+        case (_, Right(ExprItem(e, nm))) if isTimeKey(e) => Some(nm -> e)
+        case (_, Right(ExprItem(e, nm))) =>
+          if (!e.isInstanceOf[ORef] && (!multi || containsAgg(e)))
+            throw CompileException(s"streaming GROUP BY alias '$nm' must " +
+              "name a bucket(ts, …) / session(ts, …) item or a plain field")
+          None
+        case (n, Left(sf)) =>
+          joinOnly(true, s"GROUP BY '${n.text}' (name a select alias)")
+          if (sf.isTs) throw CompileException(
+            "GROUP BY ts groups every point alone — use bucket(ts, …)")
+          None
+      }
+      if (keys.length > 1) throw CompileException(
+        "watermarked streaming aggregation takes exactly one bucket(ts, …) " +
+          "or session(ts, …) group key")
+      val (name, key) = keys.headOption.getOrElse(throw CompileException(
+        "watermarked streaming aggregation needs a bucket(ts, '<width>') or " +
+          "session(ts, '<gap>') group key selected under an alias"))
+      def uncast(e: Operand): Operand = e match { case OCast(x, _) => uncast(x); case x => x }
+      val OFn(fn, args) = uncast(key)
+      joinOnly(fn == "session", "a session key over a joined stream")
+      joinOnly(args.length == 3, "a sliding bucket over a joined stream (an " +
+        "Expand between two stateful operators)")
+      // the engine merges sessions per key: a global session is unsupported
+      if (fn == "session" && groupEntries.length == 1) throw CompileException(
+        "streaming session(ts, …) aggregation needs at least one plain " +
+          "grouping key besides the session — a global session merge is " +
+          "not supported by the engine (group by the series/user key whose " +
+          "activity defines the session)")
+      // mergeable, bounded state; HAVING and aggregate expressions compare
+      // and combine values, which histogram's bin string is not
+      val plain = Seq("count", "sum", "avg", "min", "max")
+      def safe(n: Node, bare: Boolean): Unit = aggs(n).map(_.fold(_._1, _._1)).foreach { f =>
+        val ok = plain ++ Seq("approx_top_k") ++ (if (bare) Seq("histogram") else Nil)
+        if (!ok.contains(f)) throw CompileException(s"$f() is not streaming-safe " +
+          s"— supported streaming aggregates: ${ok.mkString(", ")}")
+        joinOnly(!plain.contains(f), s"$f() (streaming-safe joined-stream " +
+          "aggregates: count, sum, avg, min, max)")
+      }
+      spec.select.foreach {
+        case ExprItem(_, nm) if groupedExprNames(nm) => ()
+        case FieldItem(n) if groupEntries.contains(Left(ref(n))) => ()
+        case ExprItem(e @ (_: OAgg | _: OAggX), _) => safe(e, bare = true)
+        case ExprItem(e, nm) if containsAgg(e) && !hasWinOp(e) &&
+            !exists(e) { case _: OScalarSub => true } =>
+          joinOnly(true, s"the aggregate expression '$nm'")
+        case _: AggItem => throw CompileException(
+          "streaming aggregates must be aliased (agg(x) AS name)")
+        case _ => throw CompileException("streaming select items must be the " +
+          "bucket key, a grouping field, an aliased aggregate, or an " +
+          "expression over streaming-safe aggregates")
+      }
+      if (!spec.select.exists { case ExprItem(e, _) => containsAgg(e); case _ => false })
+        throw CompileException(
+          "watermarked streaming aggregation needs at least one aggregate")
+      spec.select.foreach {
+        case ExprItem(_: OAgg | _: OAggX, _) => ()
+        case ExprItem(e, _) => safe(e, bare = false)
+        case _ => ()
+      }
+      having2.foreach(safe(_, bare = false))
+      name -> key
+    }
+
+    /** Stream mode: a time key's event-time window over the watermarked
+      * axis — bucket(ts, w[, slide]) → window(ts, w[, slide]), session(ts,
+      * gap) → session_window(ts, gap) — and how the key reads the window
+      * after the aggregate: its start, in epoch seconds under CAST(… AS
+      * int). The engine recognizes these keys, so the watermark evicts
+      * finalized windows and append mode emits them. */
+    def eventWindow(key: Operand): (Column, Column => Column) = key match {
+      case OCast(x, ty) =>
+        if (ty != "int") throw CompileException(s"streaming ${x match {
+          case OFn(f, _) => f; case _ => "time" }} key CAST must target " +
+          s"int (epoch seconds), not $ty")
+        val (w, start) = eventWindow(x)
+        (w, c => start(c).cast(castType(ty)))
+      case OFn(fn, args @ (ORef(t) +: _)) =>
+        val axis = col(ref(t).inName)
+        val w = if (fn == "session")
+          session_window(axis, s"${bucketWidth(fn, args(1), "gap")} microseconds")
+        else {
+          val (wUs, sUs) = widthSlideUs(args)
+          window(axis, s"$wUs microseconds", s"$sUs microseconds")
+        }
+        (w, _.getField("start"))
+    }
+
+    /** Stream mode: the time key's alias and window, forced before any
+      * frame is built, so a stream refuses its shape first. */
+    lazy val timeKey: Option[(String, (Column, Column => Column))] =
+      stream.map { _ =>
+        val (nm, key) = streamShape()
+        nm -> eventWindow(key)
+      }
+
     /** The aggregate path of phase 3: the optional sliding-bucket
       * expansion and window pre-pass, the grouping (plain, ROLLUP, CUBE
       * or GROUPING SETS), HAVING, FILL, and the SELECT-item scalar
-      * subqueries that attach after the aggregation. */
-    def aggregate(filtered: DataFrame): DataFrame = {
+      * subqueries that attach after the aggregation. In stream mode the
+      * time key groups on its event-time window instead. */
+    def aggregate(in: DataFrame): DataFrame = {
+      stream.foreach(_.sweep(in))
+      // a single family's axis takes the watermark here; a join's sides
+      // carry theirs from their sources
+      val filtered = stream.filter(_ => !multi)
+        .fold(in)(m => in.withWatermark("__ts_0", m.delay))
       /** SLIDING buckets: `GROUP BY bucket(ts, '<width>', '<slide>')`
         * (by select alias) expands each row MAP-SIDE into its
         * width/slide overlapping windows — explode over an epoch-aligned
         * start sequence, the batch twin of the engine's streaming
-        * `window(ts, w, s)` Expand — then groups normally. Width must be
-        * a multiple of slide (every row is in EXACTLY width/slide
-        * windows; a remainder would make membership row-dependent) and
-        * slide ≤ width (a larger slide leaves gaps, which is a filter,
-        * not a window). Row multiplicity changes, so the sliding key is
-        * only valid as a plain grouping key: scalar use, ROLLUP/CUBE/
+        * `window(ts, w, s)` Expand — then groups normally
+        * ([[widthSlideUs]]). Row multiplicity changes, so the sliding key
+        * is only valid as a plain grouping key: scalar use, ROLLUP/CUBE/
         * GROUPING SETS (Expand-on-Expand) and FILL refuse.
         */
-      val slidingEntries = groupEntries.collect {
+      val slidingEntries = if (timeKey.isDefined) Nil else groupEntries.collect {
         case Right(it @ ExprItem(OFn("bucket", a), nm)) if a.length == 3 =>
           (nm, a, it)
       }
@@ -2267,24 +2521,7 @@ object Compiler {
             case _ => throw CompileException(
               "bucket() first argument must be the time axis ts")
           }
-          def us(arg: Operand, what: String): Long = arg match {
-            case OLit(BStr(w)) => parseIntervalMicros(w).getOrElse(
-              throw CompileException(
-                s"sliding bucket $what '$w' must be fixed-width " +
-                  "(microsecond…day)"))
-            case _ => throw CompileException(
-              s"bucket() $what must be a string literal like '5 minutes'")
-          }
-          val widthUs = us(a(1), "width")
-          val slideUs = us(a(2), "slide")
-          if (widthUs <= 0 || slideUs <= 0)
-            throw CompileException("bucket() width and slide must be positive")
-          if (slideUs > widthUs) throw CompileException(
-            "bucket() slide must not exceed the width — a larger slide " +
-              "leaves gaps (filter rows instead)")
-          if (widthUs % slideUs != 0) throw CompileException(
-            "bucket() width must be a multiple of the slide so every row " +
-              "is in exactly width/slide windows")
+          val (widthUs, slideUs) = widthSlideUs(a)
           val tsUs = unix_micros(col(axis))
           val base = tsUs - pmod(tsUs, lit(slideUs))
           val starts = sequence(
@@ -2309,6 +2546,10 @@ object Compiler {
             throw CompileException(s"$nm: ${r.outName} must appear in GROUP BY"))
         case _ => ()
       }
+      // and HAVING, whose select aliases are already rewritten
+      having2.toSeq.flatMap(bareRefs).find(r => !groupNames.contains(r.inName))
+        .foreach(r => throw CompileException(
+          s"HAVING: ${r.outName} must appear in GROUP BY or be an aggregate"))
       // the same rule governs ORDER BY: post-aggregation only grouping
       // keys and aggregates exist, so a bare non-grouped sort key must
       // refuse HERE — not leak Spark's unresolved-column error at
@@ -2580,6 +2821,8 @@ object Compiler {
       // attributes, so the lead-window's exchange is the aggregate's
       val groupCols = groupEntries.map {
         case Left(sf)               => col(sf.inName)
+        case Right(ExprItem(_, nm)) if timeKey.exists(_._1 == nm) =>
+          timeKey.get._2._1.as(nm)
         case Right(ExprItem(OFn("bucket", a), nm)) if a.length == 3 => col(nm)
         case Right(ExprItem(e, nm)) =>
           if (segSpecs.nonEmpty || madSpecs.nonEmpty) col(nm)
@@ -2665,7 +2908,9 @@ object Compiler {
             spec.groupSets.map(_.map(keyCol)), spec.groupBy.map(keyCol): _*)
         case _ => preAgg.groupBy(groupCols: _*)
       }
-      val agged = grouped.agg(aggCols.head, aggCols.tail: _*)
+      val agged = timeKey.foldLeft(grouped.agg(aggCols.head, aggCols.tail: _*)) {
+        case (df, (nm, (_, start))) => df.withColumn(nm, start(col(nm)))
+      }
       val havd = having2.fold(agged)(h => agged.filter(new Q(aggOk = true, winOk = false).predicate(h)))
       // SELECT-item scalar subs attach AFTER the aggregation (one
       // broadcast row onto the grouped output; pre-agg they'd be

@@ -262,8 +262,9 @@ object EvalProps extends Properties("boostql.eval") {
         // a query whose only field is the time axis (all count(*), no
         // dimension, no WHERE) reads no series: both tiers must refuse it
         // with the same text
-        streamed == batch &&
-          batch.fold(_ == "source dom.f is never referenced", _.nonEmpty)
+        streamed == batch && batch.fold(_ == "source dom.f is referenced " +
+          "only through its time axis ts — name one of its series, e.g. " +
+          "count(cpu) for a series cpu", _.nonEmpty)
       }
     }
 }

@@ -869,10 +869,10 @@ object BoostQL {
     }
   }
 
-  /** The stream-stream join's checks (see [[sqlStream]]). The ON must bound each side's time axis against
-    * the other's — a row on a side whose axis is not upper-bounded in
-    * terms of the other side's can match forever, so that side's join
-    * state would never evict.
+  /** The stream-stream join's checks (see [[sqlStream]]). The ON must
+    * bound each side's time axis against the other's — a row on a side
+    * whose axis is not upper-bounded in terms of the other side's can
+    * match forever, so that side's join state would never evict.
     */
   private def streamJoinChecks(spec: Ast.QuerySpec,
       refuse: String => Nothing): Unit = {

@@ -149,11 +149,10 @@ object Compiler {
     * count string (engine-portable scalar output). Bin index is the one
     * IEEE expression floor((x − lo) / (hi−lo) · n), least-clamped so a
     * float landing ulp-exactly on hi-1's edge stays in the last bin;
-    * values outside [lo, hi) and nulls are excluded. Shared by the
-    * batch aggregate tier and the streaming SQL aggregate (the sums are
-    * partial-mergeable, so the same expression is watermarked-
-    * aggregation state). */
-  private[boostql] def histogramString(c: Column, lo: Double, hi: Double,
+    * values outside [lo, hi) and nulls are excluded. The sums are
+    * partial-mergeable, so a stream's aggregate holds the same expression
+    * as watermarked state. */
+  private def histogramString(c: Column, lo: Double, hi: Double,
       nb: Double): Column = {
     val n = nb.toInt
     val cd = c.cast("double")
@@ -165,8 +164,8 @@ object Compiler {
       coalesce(sum(when(inRange && bin === i, 1L)), lit(0L)).cast("string"))
     array_join(array(counts: _*), ",")
   }
-  private[boostql] def topkCap(k: Int): Int = math.max(64, 8 * k)
-  private[boostql] def freqTopString(sketch: Column, k: Int): Column =
+  private def topkCap(k: Int): Int = math.max(64, 8 * k)
+  private def freqTopString(sketch: Column, k: Int): Column =
     array_join(transform(slice(sketch, 1, k),
       e => concat(e.getField("item"), lit(":"),
         e.getField("n").cast("string"))), ",")
@@ -267,7 +266,7 @@ object Compiler {
       val kk = topkK(params, "approx_top_k_merge")
       freqTopString(graft.functions.GraftFunctions.freqMerge(
         c, topkCap(kk)), kk)
-    // see [[histogramString]] — shared with the streaming SQL aggregate
+    // see [[histogramString]]
     case "histogram" =>
       val Seq(lo, hi, nb) = params
       histogramString(c, lo, hi, nb)
@@ -612,7 +611,7 @@ object Compiler {
     * included. Window arguments and subquery predicates are not this
     * query's aggregation.
     */
-  private[boostql] def containsAgg(n: Node): Boolean = exists(n) {
+  private def containsAgg(n: Node): Boolean = exists(n) {
     case _: OAgg | _: OAggX              => true
     case _: OWin | _: InSubE | _: QuantE => false
   }
@@ -660,9 +659,8 @@ object Compiler {
   /** The one BoostQL expression evaluator: an [[Operand]] or a [[BExpr]]
     * to a Spark Column. Every caller walks the same rules for literals,
     * arithmetic, INTERVAL shifts, CAST, CASE, the scalar builtins and
-    * the predicates: the batch compiler, the mutate verbs over long
-    * rows, and the streaming aggregate over finalized window rows. A
-    * scope says only what differs between them:
+    * the predicates: the compiler (batch and stream) and the mutate
+    * verbs over long rows. A scope says only what differs between them:
     *  - [[reference]]: how a name resolves;
     *  - [[nonScalar]]: which aggregates, windows, `bucket()`, time-series
     *    functions and subquery columns it compiles, and how;
